@@ -33,7 +33,9 @@ def main() -> int:
     ap.add_argument("--distributed", action="store_true")
     ap.add_argument("--distributed-wand", action="store_true",
                     help="distributed block-max WAND (one task per query)")
-    ap.add_argument("--no-wand", action="store_true")
+    ap.add_argument("--no-wand", action="store_true",
+                    help="score the cached decoded postings "
+                         "(method='vectorized') instead of block-max WAND")
     ap.add_argument("--approx", type=float, default=1.0,
                     help="WAND threshold factor F (>1 = bounded-error early "
                          "termination; misses provably score < F * kth)")
@@ -419,7 +421,7 @@ def main() -> int:
     elif args.query is not None:
         t0 = time.time()
         hits = eng.topk(args.query, args.k,
-                        method="bruteforce" if args.no_wand else "wand",
+                        method="vectorized" if args.no_wand else "wand",
                         approx=args.approx)
         ms = (time.time() - t0) * 1e3
         print(json.dumps({"query": args.query, "latency_ms": round(ms, 2),

@@ -176,15 +176,21 @@ def salt_for_doc_id(doc_id: int, salt_count: int = SALT_COUNT) -> int:
 
 
 def idf(n_docs: int, df: int) -> float:
-    """BM25+ IDF: ln((N - df + 0.5)/(df + 0.5) + 1); always positive."""
+    """BM25+ IDF: ln((N - df + 0.5)/(df + 0.5) + 1); always positive.
+    The one logarithm of every scorer: the distributed plans get it
+    computed here, as a column, because Spark's ``log`` and NumPy's
+    ``np.log`` differ from ``math.log`` in the last ulp for some
+    arguments."""
     return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
 
 def bm25_term_score(tf: int, dl: int, avgdl: float, n_docs: int, df: int,
                     k1: float = K1, b: float = B) -> float:
-    """Single-term BM25 contribution. The Spark column expression in
-    query/scoring.py mirrors this operation order exactly so floats
-    match bit-for-bit."""
+    """Single-term BM25 contribution, the scalar reference (the oracle
+    scores with it). The NumPy kernel ``query/wand.bm25_contrib`` and
+    the Catalyst ``query/scoring.contribution_expr`` use the same
+    operation order and the same :func:`idf`, so all three agree bit
+    for bit (tests/test_analysis.py)."""
     return idf(n_docs, df) * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
 
 

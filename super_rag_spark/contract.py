@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from . import analysis, ann, textops
 from .index.build import tokens_expr
-from .query.scoring import contribution_expr
+from .query.scoring import collected_idf, contribution_expr
 
 # ---------------------------------------------------------------- helpers
 
@@ -98,9 +98,9 @@ def _bm25_score_qterms(spark: SparkSession, sf_dir: str, qterms: DataFrame,
 
     contribs = (
         tf.join(F.broadcast(qterms), "term")
-        .join(dfreq, "term")
+        .join(F.broadcast(collected_idf(dfreq, qterms, n_docs)), "term")
         .join(dl, "doc_id")
-        .withColumn("contrib", contribution_expr(n_docs, avgdl, analysis.K1, analysis.B))
+        .withColumn("contrib", contribution_expr(avgdl, analysis.K1, analysis.B))
     )
     scored = (
         contribs.groupBy("query_id", "doc_id")

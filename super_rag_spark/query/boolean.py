@@ -143,7 +143,7 @@ def _accepted_docs_impl(spark: SparkSession, store,
     from ..analysis import term_id_for
     from .scoring import (DECODED_SCHEMA, contribution_expr,
                           decode_postings_map_in_pandas, lookup_term_dfs,
-                          pruned_postings)
+                          pruned_postings, with_df_idf)
 
     manifest = store.read_manifest()
     n_docs, avgdl = int(manifest["n_docs"]), float(manifest["avgdl"])
@@ -172,10 +172,9 @@ def _accepted_docs_impl(spark: SparkSession, store,
     dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
     # OOV terms drop out: their membership bit just never sets, which is
     # exactly the empty-set semantics of the set algebra
-    qpdf = qpdf[qpdf["term_id"].isin(dfs)].copy()
+    qpdf = with_df_idf(qpdf, dfs, n_docs)
     if qpdf.empty:
         return spark.createDataFrame([], _ACCEPTED_SCHEMA)
-    qpdf["df"] = qpdf["term_id"].map(dfs).astype("int64")
     qterms = spark.createDataFrame(qpdf)
     term_ids = sorted(qpdf["term_id"].unique().tolist())
 
@@ -188,7 +187,7 @@ def _accepted_docs_impl(spark: SparkSession, store,
     joined = (
         decoded.join(F.broadcast(qterms), "term_id")
         .withColumn("contrib", F.when(
-            F.col("positive"), contribution_expr(n_docs, avgdl, k1, b)))
+            F.col("positive"), contribution_expr(avgdl, k1, b)))
     )
     agg = (
         joined.groupBy("query_id", "doc_id")
@@ -269,15 +268,15 @@ def boolean_topk(docs_df: DataFrame, queries: list[tuple[int, str]],
     qterms = docs_df.sparkSession.createDataFrame(
         qrows, "query_id int, term string")
 
-    from .scoring import contribution_expr
+    from .scoring import collected_idf, contribution_expr
 
     contribs = (
         tf.join(F.broadcast(qterms), "term")
         .join(all_cand, ["query_id", "doc_id"])
-        .join(dfreq, "term")
+        .join(F.broadcast(collected_idf(dfreq, qterms, n_docs)), "term")
         .join(dl, "doc_id")
         .withColumn("contrib",
-                    contribution_expr(n_docs, avgdl, analysis.K1, analysis.B))
+                    contribution_expr(avgdl, analysis.K1, analysis.B))
     )
     scored = (
         contribs.groupBy("query_id", "doc_id")

@@ -27,70 +27,19 @@ from ..analysis import term_id_for, tokenize
 from ..index.build import build_index, doc_id_expr
 from ..index.storage import IndexStorage, bucket_of_term_id
 from .scoring import score_query_batch, score_query_batch_wand
-from .wand import bruteforce_topk, vectorized_topk, wand_topk
+from .wand import vectorized_topk_arrays, wand_topk
 
+# topk methods -> scorers. _driver_topk resolves the vectorized one
+# through the wand module on each call, so a rebound function (a tracer)
+# takes effect there as it does here for "wand".
 _TOPK_METHODS = {
-    "vectorized": vectorized_topk,  # NumPy batch scoring (lowest latency)
-    "wand": wand_topk,              # block-max skipping (the at-scale path)
-    "bruteforce": bruteforce_topk,  # per-posting reference
+    "vectorized": vectorized_topk_arrays,  # cached decoded arrays (lowest latency)
+    "wand": wand_topk,  # encoded blocks with block-max skipping
 }
 
 _BLOCK_COLS = ["term_id", "salt", "seg", "block_id", "n", "first_doc_id",
                "last_doc_id", "docs_enc", "tfs_enc", "dls_enc",
                "block_max_tf", "block_min_dl"]
-
-
-def _keep_only(blocks: list[dict], allowed) -> list[dict]:
-    """Inverse of tombstone filtering: keep only allowed doc_ids (exact
-    metadata-filter candidate restriction on the driver path).
-    ``allowed``: sorted int64 np.ndarray (hoisted once per query)."""
-    import numpy as np
-
-    from ..codec import decode_block, encode_block
-
-    out = []
-    for blk in blocks:
-        docs, tfs, dls = decode_block(blk["docs_enc"], blk["tfs_enc"],
-                                      blk["dls_enc"], blk["n"])
-        keep = np.isin(docs, allowed, assume_unique=False)
-        if not keep.any():
-            continue
-        docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-        d_enc, t_enc, l_enc = encode_block(docs, tfs, dls)
-        nb = dict(blk)
-        nb.update(n=int(len(docs)), first_doc_id=int(docs[0]),
-                  last_doc_id=int(docs[-1]), docs_enc=d_enc,
-                  tfs_enc=t_enc, dls_enc=l_enc)
-        out.append(nb)
-    return out
-
-
-def _filter_tombstones(blocks: list[dict], tombs) -> list[dict]:
-    """Drop tombstoned doc_ids from decoded blocks (lazy delete: the
-    on-disk index is untouched until the next merge compacts it).
-    ``tombs``: sorted int64 np.ndarray (hoisted once per query)."""
-    import numpy as np
-
-    from ..codec import decode_block, encode_block
-
-    out = []
-    for blk in blocks:
-        docs, tfs, dls = decode_block(blk["docs_enc"], blk["tfs_enc"],
-                                      blk["dls_enc"], blk["n"])
-        keep = ~np.isin(docs, tombs)
-        if keep.all():
-            out.append(blk)
-            continue
-        if not keep.any():
-            continue
-        docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-        d_enc, t_enc, l_enc = encode_block(docs, tfs, dls)
-        nb = dict(blk)
-        nb.update(n=int(len(docs)), first_doc_id=int(docs[0]),
-                  last_doc_id=int(docs[-1]), docs_enc=d_enc,
-                  tfs_enc=t_enc, dls_enc=l_enc)
-        out.append(nb)
-    return out
 
 
 class BM25Engine:
@@ -110,11 +59,11 @@ class BM25Engine:
         # across real query streams, so an LRU pays for itself fast.
         self._term_cache: "dict[tuple[int, str], tuple[int, list[dict]]]" = {}
         self._term_cache_max = 4096
-        # (epoch, term) -> (df, docs, tfs, dls) DECODED postings, LRU by
-        # total postings held: head-term queries are decode-bound
-        # (~300 k varint postings per hot conjunction), so a hit skips
-        # straight to the ~5 flops/posting scoring. Only valid while no
-        # tombstones are pending (block-level masking would invalidate).
+        # (epoch, term) -> (df, docs, tfs, dls) DECODED postings sorted by
+        # doc_id, LRU by total postings held: head-term queries are
+        # decode-bound (~300 k varint postings per hot conjunction), so a
+        # hit skips straight to the ~5 flops/posting scoring. Entries are
+        # never masked: pending tombstones apply per query.
         self._dec_cache: "dict[tuple[int, str], tuple]" = {}
         self._dec_used = 0
         self._dec_budget = 16_000_000  # postings (~256 MB of int64/int32)
@@ -282,12 +231,12 @@ class BM25Engine:
         missing = []
         for t in terms:
             hit = self._term_cache.get((epoch, t))
-            if hit is not None:
-                out[t] = hit
-            else:
+            if hit is None:
                 missing.append(t)
+            elif hit[1]:  # a cached OOV term holds no blocks
+                out[t] = hit
         if not missing:
-            return self._apply_tombstones(out)
+            return out
         ids = {term_id_for(t): t for t in missing}
         buckets = sorted({bucket_of_term_id(i, n_buckets) for i in ids})
         rows: list[dict] = []
@@ -318,16 +267,16 @@ class BM25Engine:
             if len(self._term_cache) >= self._term_cache_max:
                 self._term_cache.pop(next(iter(self._term_cache)))
             self._term_cache[(epoch, term)] = loaded.get(term, (0, []))
-        out.update({t: v for t, v in loaded.items()})
-        return self._apply_tombstones(out)
+        out.update(loaded)
+        return out
 
-    def _load_term_arrays(self, terms: list[str]) -> dict | None:
-        """Decoded per-term postings {term: (df, docs, tfs, dls)} through
-        the postings-budget LRU. Returns None when tombstones are
-        pending (caller falls back to the block path, which masks
-        them)."""
-        if self._tombstone_set().size:
-            return None
+    def _load_term_arrays(self, terms: list[str]) -> dict:
+        """Decoded per-term postings {term: (df, docs, tfs, dls)}, docs
+        sorted ascending, through the postings-budget LRU; OOV terms are
+        absent. The arrays are unmasked: scorers take pending tombstones
+        as ``deleted`` (see _score_kw), so deletes keep the cache."""
+        import numpy as np
+
         from ..codec import decode_blocks_batch
 
         epoch = int(self.manifest["epoch"])
@@ -343,6 +292,10 @@ class BM25Engine:
         if missing:
             for t, (df_t, bl) in self._load_term_blocks(missing).items():
                 docs, tfs, dls, _ = decode_blocks_batch(bl)
+                if (docs[1:] < docs[:-1]).any():
+                    # segment runs of one term interleave in doc_id
+                    order = np.argsort(docs, kind="stable")
+                    docs, tfs, dls = docs[order], tfs[order], dls[order]
                 entry = (df_t, docs, tfs, dls)
                 out[t] = entry
                 self._dec_cache[(epoch, t)] = entry
@@ -410,15 +363,6 @@ class BM25Engine:
             return 0
         return sum(self._term_dfs(missing).values())
 
-    def _apply_tombstones(self, out: dict) -> dict:
-        out = {t: v for t, v in out.items() if v[1]}
-        tombs = self._tombstone_set()
-        if tombs.size:
-            out = {t: (df_t, _filter_tombstones(blocks, tombs))
-                   for t, (df_t, blocks) in out.items()}
-            out = {t: v for t, v in out.items() if v[1]}
-        return out
-
     def warm(self) -> int:
         """Touch every postings + term_stats file sequentially so the
         index sits in the OS page cache (production BM25 serving keeps
@@ -458,19 +402,49 @@ class BM25Engine:
         self._tomb_cache = (sig, arr)
         return arr
 
+    def _score_kw(self) -> dict:
+        """Corpus statistics and pending tombstones, the keyword
+        arguments every driver scorer in query/wand.py takes."""
+        m = self.manifest
+        return {"n_docs": int(m["n_docs"]), "avgdl": float(m["avgdl"]),
+                "k1": float(m["k1"]), "b": float(m["b"]),
+                "deleted": self._tombstone_set()}
+
+    def _driver_topk(self, terms: list[str], k: int, method: str,
+                     approx: float = 1.0, allowed=None) -> list[tuple[int, float]]:
+        """Driver top-k of an OR-bag: ``vectorized`` scores the cached
+        decoded arrays, ``wand`` the encoded blocks with block-max
+        skipping. ``allowed``: optional sorted doc_id array, the only
+        docs ranked (search's selective filter)."""
+        if method == "wand":
+            blocks = self._load_term_blocks(terms)
+            return _TOPK_METHODS["wand"](
+                blocks, k=k, allowed=allowed, approx=approx,
+                **self._score_kw()) if blocks else []
+        from .wand import vectorized_topk_arrays
+
+        arrays = self._load_term_arrays(terms)
+        return vectorized_topk_arrays(
+            arrays, k=k, candidates=allowed,
+            **self._score_kw()) if arrays else []
+
     def topk(self, query: str, k: int = 10, use_wand: bool | None = None,
              method: str = "vectorized",
              approx: float = 1.0) -> list[tuple[int, float]]:
         """Single-query top-k on the driver (low-latency path).
         Routes 'summarize ...' queries to the summary index when present.
-        All three methods return identical rankings (asserted in tests).
+        ``method="vectorized"`` scores the cached decoded postings,
+        ``"wand"`` skips blocks on the encoded ones; both return the
+        same ranking and scores (asserted in tests). ``use_wand`` is the
+        older switch: True means "wand", False "vectorized". Pending
+        deletes are masked per query on either path.
         ``approx`` > 1.0 (wand only) enables bounded-error early
         termination: skipped docs provably score < approx * the
         returned k-th score. Queries whose terms exceed the driver df
         budget run the EXACT distributed plan instead — ``approx`` is
         ignored there (early termination is a driver-path device)."""
         if use_wand is not None:  # back-compat boolean switch
-            method = "wand" if use_wand else "bruteforce"
+            method = "wand" if use_wand else "vectorized"
         # argument validation BEFORE the budget fallback (ADVICE r4):
         # an invalid combination must raise identically whether or not
         # the query happens to exceed the driver budget
@@ -482,7 +456,6 @@ class BM25Engine:
         terms = sorted(set(tokenize(qtext)))
         if not terms:
             return []
-        m = engine.manifest
         if engine._uncached_df_total(terms) > engine.driver_df_budget:
             # the query's head terms exceed what the driver may decode:
             # route to the distributed WAND plan (rank-identical; the
@@ -492,28 +465,7 @@ class BM25Engine:
                                           k=k)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
-        if approx != 1.0:
-            blocks = engine._load_term_blocks(terms)
-            if not blocks:
-                return []
-            return wand_topk(blocks, int(m["n_docs"]), float(m["avgdl"]), k,
-                             k1=float(m["k1"]), b=float(m["b"]), approx=approx)
-        if method == "vectorized":
-            arrays = engine._load_term_arrays(terms)
-            if arrays is not None:  # no pending tombstones
-                if not arrays:
-                    return []
-                from .wand import vectorized_topk_arrays
-
-                return vectorized_topk_arrays(
-                    arrays, int(m["n_docs"]), float(m["avgdl"]), k,
-                    k1=float(m["k1"]), b=float(m["b"]))
-        blocks = engine._load_term_blocks(terms)
-        if not blocks:
-            return []
-        return _TOPK_METHODS[method](
-            blocks, int(m["n_docs"]), float(m["avgdl"]), k,
-            k1=float(m["k1"]), b=float(m["b"]))
+        return engine._driver_topk(terms, k, method, approx)
 
     def weighted_topk(self, query: str, k: int = 10, *,
                       boosts: dict[str, float] | None = None,
@@ -542,7 +494,6 @@ class BM25Engine:
         terms = sorted(weights)
         if not terms:
             return []
-        m = engine.manifest
         if engine._uncached_df_total(terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             res = score_query_batch(
@@ -552,20 +503,12 @@ class BM25Engine:
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
         arrays = engine._load_term_arrays(terms)
-        if arrays is None:  # pending tombstones -> masked block path
-            from ..codec import decode_blocks_batch
-
-            arrays = {}
-            for t, (df_t, bl) in engine._load_term_blocks(terms).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                arrays[t] = (df_t, docs, tfs, dls)
         if not arrays:
             return []
-        from .wand import weighted_topk_arrays
+        from .wand import vectorized_topk_arrays
 
-        return weighted_topk_arrays(
-            arrays, int(m["n_docs"]), float(m["avgdl"]), k,
-            weights=weights, msm=msm, k1=float(m["k1"]), b=float(m["b"]))
+        return vectorized_topk_arrays(arrays, k=k, weights=weights, msm=msm,
+                                      **engine._score_kw())
 
     def topk_after(self, query: str, k: int = 10, *,
                    after: tuple[int, float] | None = None
@@ -587,7 +530,6 @@ class BM25Engine:
         terms = sorted(set(tokenize(qtext)))
         if not terms:
             return []
-        m = engine.manifest
         if engine._uncached_df_total(terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             res = score_query_batch(self.spark, engine.store,
@@ -595,36 +537,14 @@ class BM25Engine:
                                     k=k, after=after)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
-        arrays = engine._load_term_arrays(terms)
-        if arrays is None:  # pending tombstones -> masked block path
-            from ..codec import decode_blocks_batch
+        from .wand import accumulate_scores, rank_topk
 
-            arrays = {}
-            for t, (df_t, bl) in engine._load_term_blocks(terms).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                arrays[t] = (df_t, docs, tfs, dls)
-        if not arrays:
-            return []
-        from .wand import accumulate_scores
-
-        uniq, scores = accumulate_scores(
-            arrays, int(m["n_docs"]), float(m["avgdl"]),
-            k1=float(m["k1"]), b=float(m["b"]))
-        if not len(uniq):
-            return []
+        uniq, scores = accumulate_scores(engine._load_term_arrays(terms),
+                                         **engine._score_kw())
         key = np.round(scores, 9)
         a9 = round(float(after[1]), 9)
         keep = (key < a9) | ((key == a9) & (uniq > int(after[0])))
-        uniq, scores = uniq[keep], scores[keep]
-        if not len(uniq):
-            return []
-        kk = min(k, len(uniq))
-        kth = np.partition(scores, len(scores) - kk)[len(scores) - kk]
-        cand = np.flatnonzero(scores >= kth - 1e-9)
-        order = sorted(cand.tolist(),
-                       key=lambda i: (-round(float(scores[i]), 9),
-                                      int(uniq[i])))
-        return [(int(uniq[i]), float(scores[i])) for i in order[:kk]]
+        return rank_topk(uniq[keep], scores[keep], k)
 
     def more_like_this(self, docs_df: DataFrame | None = None, *,
                        url: str | None = None, text: str | None = None,
@@ -739,6 +659,8 @@ class BM25Engine:
         """
         import numpy as np
 
+        if method not in _TOPK_METHODS:
+            raise ValueError(f"unknown topk method: {method!r}")
         cand_df: DataFrame | None = None
         allowed = None  # small-set fast path: sorted int64 array
         if where is not None:
@@ -785,15 +707,7 @@ class BM25Engine:
             # unfiltered: same path as topk() (incl. the decoded LRU)
             hits = engine.topk(qtext, k, method=method)
         elif terms:
-            blocks = engine._load_term_blocks(terms)
-            blocks = {t: (df_t, _keep_only(bl, allowed))
-                      for t, (df_t, bl) in blocks.items()}
-            blocks = {t: v for t, v in blocks.items() if v[1]}
-            if blocks:
-                m = engine.manifest
-                hits = _TOPK_METHODS[method](
-                    blocks, int(m["n_docs"]), float(m["avgdl"]), k,
-                    k1=float(m["k1"]), b=float(m["b"]))
+            hits = engine._driver_topk(terms, k, method, allowed=allowed)
         out = self.spark.createDataFrame(
             [(i + 1, d, float(s)) for i, (d, s) in enumerate(hits)],
             "rank int, doc_id long, score double")
@@ -876,13 +790,6 @@ class BM25Engine:
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
         arrays = self._load_term_arrays(uterms)
-        if arrays is None:  # pending tombstones -> masked block path
-            from ..codec import decode_blocks_batch
-
-            arrays = {}
-            for t, (df_t, bl) in self._load_term_blocks(uterms).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                arrays[t] = (df_t, docs, tfs, dls)
         if len(arrays) < len(uterms):
             return []  # some phrase term has no postings at all
         by_rarity = sorted(uterms, key=lambda t: len(arrays[t][1]))
@@ -904,10 +811,8 @@ class BM25Engine:
             # the batching bounds the chain_match work, not the I/O
             from .wand import accumulate_scores
 
-            m = self.manifest
-            uniqc, sc = accumulate_scores(
-                arrays, int(m["n_docs"]), float(m["avgdl"]),
-                k1=float(m["k1"]), b=float(m["b"]), candidates=cand)
+            uniqc, sc = accumulate_scores(arrays, candidates=cand,
+                                          **self._score_kw())
             order = np.lexsort((uniqc, -np.round(sc, 9)))
             rd, rs = uniqc[order], sc[order]
             out: list[tuple[int, float]] = []
@@ -948,10 +853,8 @@ class BM25Engine:
                 dtype=np.int64))
         if not len(verified):
             return []
-        m = self.manifest
-        return vectorized_topk_arrays(
-            arrays, int(m["n_docs"]), float(m["avgdl"]), k,
-            k1=float(m["k1"]), b=float(m["b"]), candidates=verified)
+        return vectorized_topk_arrays(arrays, k=k, candidates=verified,
+                                      **self._score_kw())
 
     def _load_positions_term(self, term: str):
         """Decoded position run of one term through the positions LRU:
@@ -1086,13 +989,6 @@ class BM25Engine:
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
         arrays = self._load_term_arrays(all_terms)
-        if arrays is None:  # pending tombstones -> masked block path
-            from ..codec import decode_blocks_batch
-
-            arrays = {}
-            for t, (df_t, bl) in self._load_term_blocks(all_terms).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                arrays[t] = (df_t, docs, tfs, dls)
 
         empty = np.empty(0, dtype=np.int64)
 
@@ -1111,10 +1007,8 @@ class BM25Engine:
             return []
         positive = {t: arrays[t]
                     for op, t in steps if op != "NOT" and t in arrays}
-        m = self.manifest
-        return vectorized_topk_arrays(
-            positive, int(m["n_docs"]), float(m["avgdl"]), k,
-            k1=float(m["k1"]), b=float(m["b"]), candidates=cand)
+        return vectorized_topk_arrays(positive, k=k, candidates=cand,
+                                      **self._score_kw())
 
     # -------------------------------------------------------------- fuzzy
     def _correct_term(self, term: str, max_dist: int = 1) -> str | None:
@@ -1338,7 +1232,7 @@ class BM25Engine:
         import numpy as np
 
         from . import qstring
-        from .wand import weighted_topk_arrays
+        from .wand import vectorized_topk_arrays
 
         node = qstring.parse_query_string(qtext)
         node = qstring.expand_leaves(self, node, max_expansions)
@@ -1351,7 +1245,6 @@ class BM25Engine:
         if not bag:
             return [], bag
         allt = sorted(qstring.referenced_terms(node))
-        m = self.manifest
         if allowed is not None and not len(allowed):
             return [], bag  # selective filter matched nothing
         if (cand_df is not None
@@ -1376,23 +1269,15 @@ class BM25Engine:
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()], bag
         arrays = self._load_term_arrays(allt)
-        if arrays is None:  # pending tombstones -> masked block path
-            from ..codec import decode_blocks_batch
-
-            arrays = {}
-            for t, (df_t, bl) in self._load_term_blocks(allt).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                arrays[t] = (df_t, docs, tfs, dls)
         cand = self._eval_qstring_driver(node, arrays, docs_df)
         if allowed is not None and len(cand):
             cand = np.intersect1d(cand, allowed, assume_unique=True)
         if not len(cand):
             return [], bag
         bag_arrays = {t: arrays[t] for t in bag if t in arrays}
-        return weighted_topk_arrays(
-            bag_arrays, int(m["n_docs"]), float(m["avgdl"]), k,
-            weights=bag, candidates=cand,
-            k1=float(m["k1"]), b=float(m["b"])), bag
+        return vectorized_topk_arrays(bag_arrays, k=k, weights=bag,
+                                      candidates=cand,
+                                      **self._score_kw()), bag
 
     def _eval_qstring_driver(self, node, arrays, docs_df):
         """Candidate doc-id set of an (expanded) qstring tree on the
@@ -1689,15 +1574,9 @@ class BM25Engine:
                 dfs[term] = int(df_t)
                 cells.setdefault(term, {})[int(doc)] = (int(tf), int(dl))
         else:
-            arrays = engine._load_term_arrays(terms)
-            if arrays is None:  # pending tombstones -> masked blocks
-                from ..codec import decode_blocks_batch
-
-                arrays = {}
-                for t, (df_t, bl) in engine._load_term_blocks(terms).items():
-                    docs, tfs, dls, _ = decode_blocks_batch(bl)
-                    arrays[t] = (df_t, docs, tfs, dls)
             import numpy as np
+
+            arrays = engine._load_term_arrays(terms)
 
             for t, (df_t, docs, tfs, dls) in arrays.items():
                 dfs[t] = int(df_t)
@@ -1933,7 +1812,6 @@ class BM25Engine:
         import numpy as np
 
         from ..index.positions import span_match
-        from .wand import vectorized_topk_arrays
 
         if slop < 0:
             raise ValueError("slop must be >= 0")
@@ -1947,7 +1825,6 @@ class BM25Engine:
         terms = sorted(set(tokenize(qtext)))
         if len(terms) < 2:
             raise ValueError("span_near_topk needs >= 2 distinct terms")
-        m = engine.manifest
         if engine._uncached_df_total(terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             from .phrase import score_phrase_batch
@@ -1959,13 +1836,6 @@ class BM25Engine:
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
         arrays = engine._load_term_arrays(terms)
-        if arrays is None:  # pending tombstones -> masked block path
-            from ..codec import decode_blocks_batch
-
-            arrays = {}
-            for t, (df_t, bl) in engine._load_term_blocks(terms).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                arrays[t] = (df_t, docs, tfs, dls)
         if len(arrays) < len(terms):
             return []  # some term has no postings at all
         by_rarity = sorted(terms, key=lambda t: len(arrays[t][1]))
@@ -1982,9 +1852,8 @@ class BM25Engine:
         # verifying them all made the bench leg 1.5 s/query.
         from .wand import accumulate_scores
 
-        uniqc, sc = accumulate_scores(
-            arrays, int(m["n_docs"]), float(m["avgdl"]),
-            k1=float(m["k1"]), b=float(m["b"]), candidates=cand)
+        uniqc, sc = accumulate_scores(arrays, candidates=cand,
+                                      **engine._score_kw())
         order = np.lexsort((uniqc, -np.round(sc, 9)))
         rd, rs = uniqc[order], sc[order]
         runs = {t: engine._load_positions_term(t) for t in terms}
@@ -2036,7 +1905,6 @@ class BM25Engine:
         all_terms = sorted({t for ms in groups.values() for t in ms})
         if not all_terms:
             return []
-        m = engine.manifest
         if engine._uncached_df_total(all_terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             res = score_synonym_batch(
@@ -2045,13 +1913,6 @@ class BM25Engine:
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
         arrays = engine._load_term_arrays(all_terms)
-        if arrays is None:  # pending tombstones -> masked block path
-            from ..codec import decode_blocks_batch
-
-            arrays = {}
-            for t, (df_t, bl) in engine._load_term_blocks(all_terms).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                arrays[t] = (df_t, docs, tfs, dls)
         blended: dict[str, tuple] = {}
         for gkey, members in groups.items():
             present = [t for t in members if t in arrays and len(arrays[t][1])]
@@ -2072,9 +1933,7 @@ class BM25Engine:
             blended[gkey] = (df_g, docs, tfs, dls)
         if not blended:
             return []
-        return vectorized_topk_arrays(
-            blended, int(m["n_docs"]), float(m["avgdl"]), k,
-            k1=float(m["k1"]), b=float(m["b"]))
+        return vectorized_topk_arrays(blended, k=k, **engine._score_kw())
 
     # ------------------------------------------------------------- delete
     def delete_urls(self, urls: list[str]) -> int:

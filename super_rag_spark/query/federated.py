@@ -30,7 +30,7 @@ from ..analysis import tokenize
 from .engine import BM25Engine
 from .scoring import (DECODED_SCHEMA, contribution_expr,
                       decode_postings_map_in_pandas, lookup_term_dfs,
-                      pruned_postings)
+                      pruned_postings, with_df_idf)
 
 #: manifest keys that must agree across shards for global scoring to
 #: be meaningful (analyzer and scoring constants)
@@ -77,7 +77,6 @@ class FederatedEngine:
         distributed plan."""
         import numpy as np
 
-        from ..codec import decode_blocks_batch
         from .wand import vectorized_topk_arrays
 
         terms = sorted(set(tokenize(query)))
@@ -92,13 +91,7 @@ class FederatedEngine:
                     for r in res.orderBy("rank").collect()]
         merged: dict[str, list] = {}
         for s in self.shards:
-            arrays = s._load_term_arrays(terms)
-            if arrays is None:  # pending tombstones -> masked blocks
-                arrays = {}
-                for t, (df_t, bl) in s._load_term_blocks(terms).items():
-                    docs, tfs, dls, _ = decode_blocks_batch(bl)
-                    arrays[t] = (df_t, docs, tfs, dls)
-            for t, (df_t, docs, tfs, dls) in arrays.items():
+            for t, (df_t, docs, tfs, dls) in s._load_term_arrays(terms).items():
                 merged.setdefault(t, [0, [], [], []])
                 merged[t][0] += int(df_t)
                 merged[t][1].append(docs)
@@ -112,9 +105,12 @@ class FederatedEngine:
             for t, (df_t, d, tf, dl) in merged.items()}
         n_docs, avgdl = self.global_stats()
         m = self.shards[0].manifest
+        # shards partition the doc space: their pending deletes union
+        deleted = np.unique(np.concatenate(
+            [s._tombstone_set() for s in self.shards]))
         return vectorized_topk_arrays(
             term_arrays, n_docs, avgdl, k,
-            k1=float(m["k1"]), b=float(m["b"]))
+            k1=float(m["k1"]), b=float(m["b"]), deleted=deleted)
 
 
 def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
@@ -123,8 +119,6 @@ def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
     decode -> broadcast qterms join -> per-(query, doc) aggregate ->
     per-query top-k — the score_query_batch plan with the shard
     fan-out in the scan layer and GLOBAL df on the broadcast side."""
-    import pandas as pd
-
     from .scoring import analyze_queries
 
     head = shards[0].manifest
@@ -148,10 +142,9 @@ def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
                 s.store, term_ids, int(m["n_buckets"]),
                 int(m["epoch"])).items():
             gdf[tid] = gdf.get(tid, 0) + int(d)
-    qterms_pdf = qterms_pdf[qterms_pdf["term_id"].isin(gdf)].copy()
+    qterms_pdf = with_df_idf(qterms_pdf, gdf, n_docs)
     if qterms_pdf.empty:
         return spark.createDataFrame([], out_schema)
-    qterms_pdf["df"] = qterms_pdf["term_id"].map(gdf).astype("int64")
     qterms = spark.createDataFrame(qterms_pdf)
     term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
 
@@ -169,8 +162,7 @@ def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
     contribs = (
         decoded.join(F.broadcast(qterms), "term_id")
         .withColumn("contrib",
-                    contribution_expr(n_docs, avgdl, k1, b)
-                    * F.col("weight"))
+                    contribution_expr(avgdl, k1, b) * F.col("weight"))
     )
     scored = (
         contribs.groupBy("query_id", "doc_id")

@@ -115,7 +115,7 @@ def score_phrase_batch(spark, store, docs_df: DataFrame | None,
     from ..index.build import doc_id_expr
     from .scoring import (DECODED_SCHEMA, contribution_expr,
                           decode_postings_map_in_pandas, lookup_term_dfs,
-                          pruned_postings)
+                          pruned_postings, with_df_idf)
 
     out_schema = "query_id int, rank int, doc_id long, score double"
     manifest = store.read_manifest()
@@ -140,10 +140,9 @@ def score_phrase_batch(spark, store, docs_df: DataFrame | None,
     dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
     # an OOV phrase term can never satisfy n_hit == n_terms; dropping its
     # row keeps the conjunctive gate correct with no special case
-    qpdf = qpdf[qpdf["term_id"].isin(dfs)].copy()
+    qpdf = with_df_idf(qpdf, dfs, n_docs)
     if qpdf.empty:
         return spark.createDataFrame([], out_schema)
-    qpdf["df"] = qpdf["term_id"].map(dfs).astype("int64")
     qterms = spark.createDataFrame(qpdf)
     pats = spark.createDataFrame(prows, "query_id int, pat string, n_terms int")
     term_ids = sorted(qpdf["term_id"].unique().tolist())
@@ -156,7 +155,7 @@ def score_phrase_batch(spark, store, docs_df: DataFrame | None,
 
     cand = (
         decoded.join(F.broadcast(qterms), "term_id")
-        .withColumn("contrib", contribution_expr(n_docs, avgdl, k1, b))
+        .withColumn("contrib", contribution_expr(avgdl, k1, b))
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("n_hit"),
              F.sort_array(F.collect_list(
@@ -344,15 +343,15 @@ def phrase_topk(docs_df: DataFrame, phrases: list[tuple[int, str]],
     )
 
     # 3. BM25 over the phrase terms, verified docs only, global stats
-    from .scoring import contribution_expr
+    from .scoring import collected_idf, contribution_expr
 
     contribs = (
         tf.join(F.broadcast(qterms), "term")
         .join(verified, ["query_id", "doc_id"])
-        .join(dfreq, "term")
+        .join(F.broadcast(collected_idf(dfreq, qterms, n_docs)), "term")
         .join(dl, "doc_id")
         .withColumn("contrib",
-                    contribution_expr(n_docs, avgdl, analysis.K1, analysis.B))
+                    contribution_expr(avgdl, analysis.K1, analysis.B))
     )
     scored = (
         contribs.groupBy("query_id", "doc_id")

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..analysis import term_id_for, tokenize
+from ..analysis import idf, term_id_for, tokenize
 from ..codec import decode_blocks_batch
 from ..index.storage import IndexStorage, bucket_of_term_id
 
@@ -95,14 +95,39 @@ def lookup_term_dfs(store: IndexStorage, term_ids: list[int],
     return out
 
 
-def contribution_expr(n_docs: int, avgdl: float, k1: float, b: float):
-    """Catalyst mirror of analysis.bm25_term_score (same operation order
-    for bit-identical floats)."""
-    idf = F.log((F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5)) + F.lit(1.0))
+def with_df_idf(qterms_pdf: pd.DataFrame, dfs: dict[int, int],
+                n_docs: int) -> pd.DataFrame:
+    """The in-vocabulary rows of a query-term frame, with their ``df``
+    and the ``idf`` that contribution_expr reads, computed on the driver
+    by analysis.idf (Spark's ``log`` differs from ``math.log`` in the
+    last ulp for some arguments)."""
+    pdf = qterms_pdf[qterms_pdf["term_id"].isin(dfs)].copy()
+    pdf["df"] = pdf["term_id"].map(dfs).astype("int64")
+    pdf["idf"] = [idf(n_docs, d) for d in pdf["df"].tolist()]
+    return pdf
+
+
+def collected_idf(dfreq: DataFrame, qterms: DataFrame,
+                  n_docs: int) -> DataFrame:
+    """(term, idf) for the query terms of a corpus-scan plan, whose df
+    Spark computes (``dfreq``: term, df): only the query terms' df rows
+    are collected, and idf is computed on the driver as in with_df_idf."""
+    rows = dfreq.join(qterms.select("term").distinct(), "term",
+                      "left_semi").collect()
+    return dfreq.sparkSession.createDataFrame(
+        [(r["term"], idf(n_docs, int(r["df"]))) for r in rows],
+        "term string, idf double")
+
+
+def contribution_expr(avgdl: float, k1: float, b: float):
+    """Catalyst mirror of the NumPy kernel (wand.bm25_contrib) and of
+    analysis.bm25_term_score over the ``idf``, ``tf`` and ``dl``
+    columns: same operation order and the same driver-computed idf, so
+    the floats are bit-identical (tests/test_analysis.py)."""
     tf = F.col("tf").cast("double")
     dl = F.col("dl").cast("double")
     denom = tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.lit(avgdl))
-    return idf * (tf * F.lit(k1 + 1.0)) / denom
+    return F.col("idf") * (tf * F.lit(k1 + 1.0)) / denom
 
 
 def pruned_postings(spark: SparkSession, store: IndexStorage, term_ids: list[int],
@@ -142,10 +167,9 @@ def scored_matches(spark: SparkSession, store: IndexStorage,
         return spark.createDataFrame([], "query_id int, doc_id long, score double")
     term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
     dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
-    qterms_pdf = qterms_pdf[qterms_pdf["term_id"].isin(dfs)].copy()
+    qterms_pdf = with_df_idf(qterms_pdf, dfs, n_docs)
     if qterms_pdf.empty:  # every term OOV
         return spark.createDataFrame([], "query_id int, doc_id long, score double")
-    qterms_pdf["df"] = qterms_pdf["term_id"].map(dfs).astype("int64")
     qterms = spark.createDataFrame(qterms_pdf)
     term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
 
@@ -164,7 +188,7 @@ def scored_matches(spark: SparkSession, store: IndexStorage,
     contribs = (
         decoded.join(F.broadcast(qterms), "term_id")
         .withColumn("contrib",
-                    contribution_expr(n_docs, avgdl, k1, b) * F.col("weight"))
+                    contribution_expr(avgdl, k1, b) * F.col("weight"))
     )
 
     scored = (
@@ -269,10 +293,9 @@ def score_query_batch_wand(spark: SparkSession, store: IndexStorage,
         return spark.createDataFrame([], out_schema)
     term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
     dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
-    qterms_pdf = qterms_pdf[qterms_pdf["term_id"].isin(dfs)].copy()
+    qterms_pdf = with_df_idf(qterms_pdf, dfs, n_docs)
     if qterms_pdf.empty:
         return spark.createDataFrame([], out_schema)
-    qterms_pdf["df"] = qterms_pdf["term_id"].map(dfs).astype("int64")
     term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
 
     if store.tombstones(spark) is not None:
@@ -555,9 +578,9 @@ def score_synonym_batch(spark: SparkSession, store: IndexStorage,
         key = (qid, gkey)
         df_g[key] = max(df_g.get(key, 0), dfs[tid])
     qg = spark.createDataFrame(
-        [(qid, gkey, tid, df_g[(qid, gkey)])
+        [(qid, gkey, tid, idf(n_docs, df_g[(qid, gkey)]))
          for qid, gkey, _, tid in rows],
-        "query_id int, gkey string, term_id long, df long")
+        "query_id int, gkey string, term_id long, idf double")
     term_ids = sorted({r[3] for r in rows})
 
     decoded = pruned_postings(spark, store, term_ids, n_buckets).mapInPandas(
@@ -570,8 +593,8 @@ def score_synonym_batch(spark: SparkSession, store: IndexStorage,
         decoded.join(F.broadcast(qg), "term_id")
         .groupBy("query_id", "gkey", "doc_id")
         .agg(F.sum("tf").alias("tf"), F.max("dl").alias("dl"),
-             F.max("df").alias("df"))
-        .withColumn("contrib", contribution_expr(n_docs, avgdl, k1, b))
+             F.max("idf").alias("idf"))
+        .withColumn("contrib", contribution_expr(avgdl, k1, b))
     )
     scored = (
         blended.groupBy("query_id", "doc_id")

@@ -1,28 +1,25 @@
-"""Block-max WAND top-k scorer (NumPy, over compressed blocks).
+"""Driver-side BM25 scoring: one NumPy kernel, one accumulate-and-rank
+path over decoded arrays, and the block-max WAND top-k.
 
-This is the index-side analog of the reference's "limit pushdown into
-the vector DB" (SURVEY.md §4.1 row 1, /root/reference/vectordbs/qdrant.py:81):
-instead of scoring every posting, WAND maintains a running threshold
-(theta = k-th best score) and skips whole blocks whose block_max_score
-upper bound cannot beat it. Results are EXACT — asserted equal to
-brute-force scoring in tests/test_wand.py.
-
-Used two ways:
-- driver fast path for single-query p50 latency (postings for <=5 query
-  terms are read via pyarrow with bucket+term pruning, no Spark job) —
-  the cached fast path SURVEY.md §3.2 explicitly allows;
-- inside applyInPandas per contiguous doc_id range for distributed
-  candidate generation (the salt ranges partition the doc space, so each
-  range holds a consistent slice of every term's posting list).
-
-Two implementations, asserted rank-identical in tests/test_wand.py:
-- wand_topk — range-vectorized (r4): elementary doc-ranges from block
-  boundaries carry the block-max bound; a theta-seeding pass over the
-  top-bound ranges plus one coalesced NumPy sweep over the survivors.
-  No per-posting Python; worst case degrades to the exhaustive
-  vectorized plan, best case decodes a single block.
-- wand_topk_cursor — the per-posting pivot/seek WAND kept as the
-  reference implementation (clearer invariants, used to cross-check).
+- :func:`bm25_contrib` is the BM25 kernel. Every driver contribution and
+  every WAND block bound goes through it, with idf from
+  ``analysis.idf`` (``math.log``) as the only logarithm, so its floats
+  equal ``analysis.bm25_term_score`` and the Catalyst mirror
+  ``scoring.contribution_expr`` bit for bit (tests/test_analysis.py).
+- :func:`accumulate_scores` sums the kernel over decoded per-term
+  arrays ``{term: (df, docs, tfs, dls)}`` in term-ascending (oracle)
+  order, with optional per-term ``weights``, ``msm``, ``candidates`` and
+  the ``deleted`` (pending tombstones) mask; :func:`vectorized_topk_arrays`
+  ranks its output with :func:`rank_topk`. This is the engine's default
+  ``method="vectorized"`` and the scorer of every other driver query.
+- :func:`wand_topk` is the range-vectorized block-max WAND over ENCODED
+  blocks (``method="wand"``): instead of scoring every posting it keeps a
+  running threshold (theta = k-th best score) and never decodes the
+  blocks whose upper bound cannot beat it. It runs on the driver and
+  inside the distributed per-salt-range plan (query/scoring.py).
+- :func:`wand_topk_cursor` (per-posting pivot/seek WAND) and
+  :func:`bruteforce_topk` are kept as the references tests/test_wand.py
+  compares against.
 
 Safety margin: blocks are skipped only when the upper bound is below
 theta - 1e-9; exact score ties (which the rank order breaks by doc_id
@@ -42,17 +39,16 @@ _EPS = 1e-9
 _INF = np.iinfo(np.int64).max
 
 
-def block_upper_bound(block_max_tf: int, block_min_dl: int, idf_val: float,
-                      avgdl: float, k1: float, b: float) -> float:
-    """Query-time WAND bound from the stats-free block metadata (v3).
-
-    BM25's tf-part is increasing in tf and decreasing in dl, so the
-    (block_max_tf, block_min_dl) corner dominates every posting in the
-    block. Marginally looser than the exact stored max of round 1, but
-    it makes blocks independent of (N, avgdl, df) — the enabler for
-    O(delta) index appends (index/merge.py)."""
-    tf = float(block_max_tf)
-    return idf_val * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * block_min_dl / avgdl))
+def bm25_contrib(idf_val: float, tfs, dls, avgdl: float, k1: float = K1,
+                 b: float = B) -> np.ndarray:
+    """The BM25 kernel: per-posting contributions for one term. Same
+    operation order as ``analysis.bm25_term_score``, so equal floats for
+    the same ``idf_val``. With (block_max_tf, block_min_dl) it is the
+    block's WAND upper bound: the tf-part grows with tf and shrinks with
+    dl, so that corner dominates every posting in the block."""
+    tfs = np.asarray(tfs, dtype=np.float64)
+    dls = np.asarray(dls, dtype=np.float64)
+    return idf_val * (tfs * (k1 + 1.0)) / (tfs + k1 * ((1.0 - b) + b * dls / avgdl))
 
 
 class TermCursor:
@@ -66,7 +62,7 @@ class TermCursor:
     """
 
     __slots__ = ("term", "df", "blocks", "bi", "pos", "docs", "tfs", "dls",
-                 "term_max", "_ubs", "_lo", "_hi", "_allowed")
+                 "term_max", "_idf", "_ubs", "_lo", "_hi", "_allowed")
 
     def __init__(self, term: str, df: int, blocks: list[dict], n_docs: int,
                  avgdl: float, k1: float, b: float,
@@ -80,10 +76,10 @@ class TermCursor:
             blocks = [blk for blk in blocks
                       if blk["last_doc_id"] >= self._lo and blk["first_doc_id"] < self._hi]
         self.blocks = blocks
-        idf_val = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-        self._ubs = [block_upper_bound(blk["block_max_tf"], blk["block_min_dl"],
-                                       idf_val, avgdl, k1, b)
-                     for blk in blocks]
+        self._idf = idf(n_docs, df)
+        self._ubs = bm25_contrib(
+            self._idf, [blk["block_max_tf"] for blk in blocks],
+            [blk["block_min_dl"] for blk in blocks], avgdl, k1, b).tolist()
         self.bi = 0
         self.pos = 0
         self.docs = self.tfs = self.dls = None
@@ -127,9 +123,9 @@ class TermCursor:
     def block_last(self) -> int:
         return self.blocks[self.bi]["last_doc_id"]
 
-    def contribution(self, n_docs: int, avgdl: float, k1: float, b: float) -> float:
-        return bm25_term_score(int(self.tfs[self.pos]), int(self.dls[self.pos]),
-                               avgdl, n_docs, self.df, k1, b)
+    def contribution(self, avgdl: float, k1: float, b: float) -> float:
+        return float(bm25_contrib(self._idf, self.tfs[self.pos],
+                                  self.dls[self.pos], avgdl, k1, b))
 
     def advance(self):
         self.pos += 1
@@ -163,7 +159,8 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
               avgdl: float, k: int, k1: float = K1, b: float = B,
               doc_range: tuple[int, int] | None = None,
               allowed: np.ndarray | None = None,
-              approx: float = 1.0) -> list[tuple[int, float]]:
+              approx: float = 1.0,
+              deleted: np.ndarray | None = None) -> list[tuple[int, float]]:
     """Exact block-max top-k, RANGE-VECTORIZED (r4).
 
     Same contract as :func:`wand_topk_cursor` (the per-posting WAND it
@@ -183,6 +180,9 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
     decodes one block. ``doc_range``/``allowed``/``approx`` behave as
     documented below; skipped docs under ``approx`` F satisfy the same
     < F * k-th-score bound (range bounds dominate per-doc bounds).
+    ``deleted``: optional sorted doc_ids (pending tombstones), masked at
+    the same point as ``allowed``; df and every block bound are those
+    of the unmasked blocks.
     """
     lo_w, hi_w = doc_range if doc_range is not None else (None, None)
 
@@ -193,9 +193,6 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
         by_seg: dict[int, list[dict]] = {}
         for blk in blks:
             by_seg.setdefault(int(blk.get("seg", 0)), []).append(blk)
-        # math.log (analysis.idf), NOT np.log: the two differ in the
-        # last ulp for some arguments, and the driver paths assert
-        # bit-identical scores vs bm25_term_score-based bruteforce
         idf_val = idf(n_docs, df)
         for seg in sorted(by_seg):
             run = sorted(by_seg[seg], key=lambda r: r["first_doc_id"])
@@ -211,9 +208,9 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
             if lo_w is not None:
                 firsts = np.maximum(firsts, lo_w)
                 lasts = np.minimum(lasts, hi_w - 1)
-            ubs = np.array([
-                block_upper_bound(blk["block_max_tf"], blk["block_min_dl"],
-                                  idf_val, avgdl, k1, b) for blk in run])
+            ubs = bm25_contrib(idf_val, [blk["block_max_tf"] for blk in run],
+                               [blk["block_min_dl"] for blk in run],
+                               avgdl, k1, b)
             runs.append({"term": t, "df": df, "idf": idf_val, "blocks": run,
                          "firsts": firsts, "lasts": lasts, "ubs": ubs})
             bounds.append(firsts)
@@ -262,13 +259,7 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
         nonlocal theta, best
         if not per_term:
             return
-        all_docs = np.concatenate([d for d, _ in per_term])
-        uniq, inv = np.unique(all_docs, return_inverse=True)
-        scores = np.zeros(len(uniq), dtype=np.float64)
-        off = 0
-        for docs, contrib in per_term:  # term-ascending accumulation
-            np.add.at(scores, inv[off:off + len(docs)], contrib)
-            off += len(docs)
+        uniq, scores, _ = _sum_per_doc(per_term)
         out_docs.append(uniq)
         out_scores.append(scores)
         best = np.concatenate([best, scores])
@@ -278,19 +269,12 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
             theta = float(best.min())
 
     def _contrib_of(term: str, parts) -> tuple[np.ndarray, np.ndarray] | None:
-        docs = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts]).astype(np.float64)
-        dls = np.concatenate([p[2] for p in parts]).astype(np.float64)
-        if allowed is not None and len(docs):
-            keep = np.flatnonzero(np.isin(docs, allowed,
-                                          assume_unique=False))
-            if not len(keep):
-                return None
-            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
-        idf = term_runs[term][0]["idf"]
-        contrib = idf * (tfs * (k1 + 1.0)) / (
-            tfs + k1 * ((1.0 - b) + b * dls / avgdl))
-        return docs, contrib
+        docs, contrib = _term_contrib(
+            term_runs[term][0]["idf"], np.concatenate([p[0] for p in parts]),
+            np.concatenate([p[1] for p in parts]),
+            np.concatenate([p[2] for p in parts]), avgdl, k1, b,
+            allowed, deleted)
+        return (docs, contrib) if len(docs) else None
 
     def _gather(term: str, los_a: np.ndarray, his_a: np.ndarray) -> list:
         """Slices of this term's postings inside each [los[j], his[j])
@@ -347,15 +331,8 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
 
     if not out_docs:
         return []
-    docs_all = np.concatenate(out_docs)  # ranges are disjoint -> unique
-    scores_all = np.concatenate(out_scores)
-    kk = min(k, len(docs_all))
-    kth = np.partition(scores_all, len(scores_all) - kk)[len(scores_all) - kk]
-    cand = np.flatnonzero(scores_all >= kth - _EPS)
-    ranked = sorted(cand.tolist(),
-                    key=lambda i: (-round(float(scores_all[i]), 9),
-                                   int(docs_all[i])))
-    return [(int(docs_all[i]), float(scores_all[i])) for i in ranked[:kk]]
+    # ranges are disjoint -> the concatenated docs are unique
+    return rank_topk(np.concatenate(out_docs), np.concatenate(out_scores), k)
 
 
 def wand_topk_cursor(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
@@ -432,7 +409,7 @@ def wand_topk_cursor(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int
                 group.sort(key=lambda c: c.term)  # oracle sum order
                 score = 0.0
                 for c in group:
-                    score += c.contribution(n_docs, avgdl, k1, b)
+                    score += c.contribution(avgdl, k1, b)
                 for c in group:
                     c.advance()
                 evaluated.append((pivot_doc, score))
@@ -457,146 +434,105 @@ def wand_topk_cursor(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int
     return evaluated[:k]
 
 
-def vectorized_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
-                    avgdl: float, k: int, k1: float = K1, b: float = B) -> list[tuple[int, float]]:
-    """Exact top-k, fully NumPy-vectorized (the low-latency driver path).
+def _in_sorted(ids: np.ndarray, docs: np.ndarray) -> np.ndarray:
+    """Which of ``docs`` occur in the sorted array ``ids``."""
+    if not len(ids):
+        return np.zeros(len(docs), dtype=bool)
+    return ids[np.minimum(np.searchsorted(ids, docs), len(ids) - 1)] == docs
 
-    Per term (ascending, the oracle's sum order): decode all blocks at
-    once, compute the BM25 contribution vector, accumulate into a
-    doc->score map via np.unique + bincount. ~50x faster than the
-    per-posting Python loop of WAND for the posting sizes a single
-    query touches; WAND remains the scale story (block skipping) and
-    the two are asserted identical in tests.
-    """
-    arrays = {}
-    for term, (df, blocks) in term_blocks.items():
-        if not blocks:
-            continue
-        docs, tfs, dls, _ = decode_blocks_batch(blocks)  # one pass, all blocks
-        arrays[term] = (df, docs, tfs, dls)
-    return vectorized_topk_arrays(arrays, n_docs, avgdl, k, k1=k1, b=b)
+
+def _term_contrib(idf_val: float, docs, tfs, dls, avgdl: float, k1: float,
+                  b: float, allowed=None, deleted=None):
+    """One term's postings a query may see, and their kernel
+    contributions: doc in the sorted ``allowed`` set (when given) and
+    not in the sorted ``deleted`` set. Masking only removes postings, so
+    block bounds computed over the unmasked blocks stay valid."""
+    keep = None if allowed is None else _in_sorted(allowed, docs)
+    if deleted is not None and len(deleted):
+        live = ~_in_sorted(deleted, docs)
+        keep = live if keep is None else keep & live
+    if keep is not None and not keep.all():
+        docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+    return docs, bm25_contrib(idf_val, tfs, dls, avgdl, k1, b)
+
+
+def _sum_per_doc(per_term: list[tuple[np.ndarray, np.ndarray]]):
+    """Per-doc sums of per-term (docs, contrib) pairs, added in list
+    (term-ascending) order: the oracle's float addition order, since a
+    doc gets at most one contribution per term. Returns (sorted unique
+    docs, scores, each posting's index into them)."""
+    uniq, inv = np.unique(np.concatenate([d for d, _ in per_term]),
+                          return_inverse=True)
+    scores = np.zeros(len(uniq), dtype=np.float64)
+    off = 0
+    for docs, contrib in per_term:
+        np.add.at(scores, inv[off:off + len(docs)], contrib)
+        off += len(docs)
+    return uniq, scores, inv
 
 
 def accumulate_scores(term_arrays: dict[str, tuple], n_docs: int,
                       avgdl: float, k1: float = K1, b: float = B,
-                      candidates: np.ndarray | None = None
+                      candidates: np.ndarray | None = None, *,
+                      weights: dict[str, float] | None = None, msm: int = 1,
+                      deleted: np.ndarray | None = None
                       ) -> tuple[np.ndarray, np.ndarray]:
-    """The scoring core of vectorized_topk_arrays WITHOUT the final
-    ranking: returns (uniq_doc_ids, scores) as arrays (r4 — callers
-    that rank lazily, e.g. the score-ordered phrase verify, avoid the
-    per-tuple Python sort). Accumulation order matches the oracle
-    (term-ascending, one contribution per (term, doc))."""
+    """Score decoded per-term arrays ``{term: (df, docs, tfs, dls)}``
+    without ranking -> (sorted unique doc_ids, scores).
+
+    score(doc) = sum over terms, ascending, of w_t * bm25_t(doc), with
+    idf from the UNMASKED df and GLOBAL corpus stats (filtered-search
+    semantics). ``weights``: per-term boosts (Lucene clause boost; absent
+    terms weigh 1.0, and a zero-weight term still counts as a match).
+    ``msm``: drop docs matching fewer distinct terms. ``candidates``:
+    sorted doc_ids, the only docs scored. ``deleted``: sorted doc_ids of
+    pending tombstones, never scored."""
     per_term: list[tuple[np.ndarray, np.ndarray]] = []
     for term in sorted(term_arrays):
         df, docs, tfs, dls = term_arrays[term]
-        if candidates is not None and len(docs):
-            keep = np.flatnonzero(
-                np.isin(docs, candidates, assume_unique=True))
-            docs, tfs, dls = docs[keep], tfs[keep], dls[keep]
+        docs, contrib = _term_contrib(idf(n_docs, df), docs, tfs, dls,
+                                      avgdl, k1, b, candidates, deleted)
         if not len(docs):
             continue
-        tfs = tfs.astype(np.float64)
-        dls = dls.astype(np.float64)
-        idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-        contrib = idf * (tfs * (k1 + 1.0)) / (tfs + k1 * ((1.0 - b) + b * dls / avgdl))
-        per_term.append((docs, contrib))
+        w = 1.0 if weights is None else float(weights.get(term, 1.0))
+        per_term.append((docs, contrib if w == 1.0 else contrib * w))
     if not per_term:
-        z = np.empty(0, dtype=np.int64)
-        return z, np.empty(0, dtype=np.float64)
-    all_docs = np.concatenate([d for d, _ in per_term])
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    scores = np.zeros(len(uniq), dtype=np.float64)
-    off = 0
-    for docs, contrib in per_term:  # term-ascending accumulation order
-        np.add.at(scores, inv[off:off + len(docs)], contrib)
-        off += len(docs)
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    uniq, scores, inv = _sum_per_doc(per_term)
+    if msm > 1:
+        keep = np.bincount(inv, minlength=len(uniq)) >= msm
+        uniq, scores = uniq[keep], scores[keep]
     return uniq, scores
 
 
-def weighted_topk_arrays(term_arrays: dict[str, tuple], n_docs: int,
-                         avgdl: float, k: int, *,
-                         weights: dict[str, float] | None = None,
-                         msm: int = 1, k1: float = K1, b: float = B,
-                         candidates: np.ndarray | None = None
-                         ) -> list[tuple[int, float]]:
-    """Boosted / minimum-should-match top-k over pre-decoded arrays
-    (Lucene BooleanQuery analog: per-clause boost + minimumShouldMatch).
-    score(doc) = sum_t w_t * bm25_t(doc), accumulated term-ascending
-    like accumulate_scores; docs matching fewer than ``msm`` distinct
-    query terms are dropped BEFORE ranking (a zero-weight term still
-    counts as a match, exactly like a boost-0 Lucene clause). With
-    ``weights=None`` and ``msm=1`` this ranks identically to
-    vectorized_topk_arrays (asserted in tests). ``candidates``:
-    optional sorted unique doc_id array — only these docs survive to
-    ranking (filtered-search semantics; stats stay GLOBAL), the same
-    contract as vectorized_topk_arrays' parameter."""
-    per_term: list[tuple[np.ndarray, np.ndarray]] = []
-    for term in sorted(term_arrays):
-        df, docs, tfs, dls = term_arrays[term]
-        if not len(docs):
-            continue
-        tfs = tfs.astype(np.float64)
-        dls = dls.astype(np.float64)
-        idf = float(np.log((n_docs - df + 0.5) / (df + 0.5) + 1.0))
-        contrib = idf * (tfs * (k1 + 1.0)) / (tfs + k1 * ((1.0 - b) + b * dls / avgdl))
-        w = 1.0 if weights is None else float(weights.get(term, 1.0))
-        if w != 1.0:
-            contrib = contrib * w
-        per_term.append((docs, contrib))
-    if not per_term:
+def rank_topk(docs: np.ndarray, scores: np.ndarray,
+              k: int) -> list[tuple[int, float]]:
+    """The top ``k`` of unique (doc, score) arrays, ranked by
+    (round(score, 9) desc, doc_id asc)."""
+    kk = min(k, len(docs))
+    if kk <= 0:
         return []
-    all_docs = np.concatenate([d for d, _ in per_term])
-    uniq, inv = np.unique(all_docs, return_inverse=True)
-    scores = np.zeros(len(uniq), dtype=np.float64)
-    nmatch = np.zeros(len(uniq), dtype=np.int64)
-    off = 0
-    for docs, contrib in per_term:  # term-ascending accumulation order
-        np.add.at(scores, inv[off:off + len(docs)], contrib)
-        np.add.at(nmatch, inv[off:off + len(docs)], 1)
-        off += len(docs)
-    if msm > 1:
-        keep = nmatch >= msm
-        uniq, scores = uniq[keep], scores[keep]
-    if candidates is not None and len(uniq):
-        keep = np.isin(uniq, candidates, assume_unique=True)
-        uniq, scores = uniq[keep], scores[keep]
-    if not len(uniq):
-        return []
-    kk = min(k, len(uniq))
+    # threshold preselect: keep EVERY doc whose score could reach rank k
+    # after 9-dp rounding (ties broken by doc_id must see all tied docs)
     kth = np.partition(scores, len(scores) - kk)[len(scores) - kk]
-    cand = np.flatnonzero(scores >= kth - 1e-9)
+    cand = np.flatnonzero(scores >= kth - _EPS)
     order = sorted(cand.tolist(),
-                   key=lambda i: (-round(float(scores[i]), 9), int(uniq[i])))
-    return [(int(uniq[i]), float(scores[i])) for i in order[:kk]]
+                   key=lambda i: (-round(float(scores[i]), 9), int(docs[i])))
+    return [(int(docs[i]), float(scores[i])) for i in order[:kk]]
 
 
 def vectorized_topk_arrays(term_arrays: dict[str, tuple], n_docs: int,
                            avgdl: float, k: int, k1: float = K1,
                            b: float = B,
-                           candidates: np.ndarray | None = None
+                           candidates: np.ndarray | None = None, *,
+                           weights: dict[str, float] | None = None,
+                           msm: int = 1, deleted: np.ndarray | None = None
                            ) -> list[tuple[int, float]]:
-    """vectorized_topk over PRE-DECODED per-term arrays
-    {term: (df, docs, tfs, dls)} — the decoded-postings-cache fast path
-    (engine._load_term_arrays): head-term queries are decode-bound, so
-    a cache hit skips straight to the ~5 flops/posting scoring. Math and
-    accumulation order are identical to vectorized_topk (a doc gets one
-    contribution per term; terms accumulate in ascending order).
-    ``candidates``: optional sorted unique doc_id array — only these
-    docs are scored (P7 filtered-search / phrase-verify semantics; df
-    and corpus stats stay GLOBAL)."""
-    uniq, scores = accumulate_scores(term_arrays, n_docs, avgdl, k1, b,
-                                     candidates)
-    if not len(uniq):
-        return []
-    kk = min(k, len(uniq))
-    if kk == 0:
-        return []
-    # threshold preselect: keep EVERY doc whose score could reach rank k
-    # after 9-dp rounding (ties broken by doc_id must see all tied docs)
-    kth = np.partition(scores, len(scores) - kk)[len(scores) - kk]
-    cand = np.flatnonzero(scores >= kth - 1e-9)
-    order = sorted(cand.tolist(), key=lambda i: (-round(float(scores[i]), 9), int(uniq[i])))
-    return [(int(uniq[i]), float(scores[i])) for i in order[:kk]]
+    """Exact top-k over decoded per-term arrays: :func:`rank_topk` of
+    :func:`accumulate_scores`, whose parameters these are."""
+    return rank_topk(*accumulate_scores(
+        term_arrays, n_docs, avgdl, k1, b, candidates, weights=weights,
+        msm=msm, deleted=deleted), k)
 
 
 def bruteforce_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,

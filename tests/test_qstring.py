@@ -282,10 +282,9 @@ def test_query_string_needs_positions_or_corpus(spark, tmp_path_factory):
 
 
 def test_weighted_arrays_candidates_contract():
-    """weighted_topk_arrays(candidates=) restricts exactly like
-    vectorized_topk_arrays(candidates=)."""
-    from super_rag_spark.query.wand import (vectorized_topk_arrays,
-                                            weighted_topk_arrays)
+    """With weights, vectorized_topk_arrays(candidates=) restricts
+    exactly as it does without them."""
+    from super_rag_spark.query.wand import vectorized_topk_arrays
 
     rng = np.random.default_rng(7)
     arrays = {}
@@ -296,7 +295,8 @@ def test_weighted_arrays_candidates_contract():
         arrays[t] = (len(docs), docs, tfs, dls)
     cand = np.arange(0, 60, 3, dtype=np.int64)
     a = vectorized_topk_arrays(arrays, 100, 40.0, 10, candidates=cand)
-    w = weighted_topk_arrays(arrays, 100, 40.0, 10, candidates=cand)
+    w = vectorized_topk_arrays(arrays, 100, 40.0, 10, candidates=cand,
+                               weights={t: 1.0 for t in arrays})
     assert a == w
     allowed = set(cand.tolist())
     assert all(d in allowed for d, _ in w)

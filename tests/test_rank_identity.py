@@ -45,6 +45,8 @@ def test_driver_wand_rank_identity_all_queries(built_index, oracle_index, querie
 
 
 def test_driver_bruteforce_equals_wand(built_index, queries100):
+    """use_wand=False selects method="vectorized": the cached-array
+    scorer and block-max WAND agree exactly, scores included."""
     for q in queries100[:40]:
         w = built_index.topk(q["text"], q["k"], use_wand=True)
         b = built_index.topk(q["text"], q["k"], use_wand=False)

@@ -109,7 +109,7 @@ def test_segment_upsert_delete_scores_exact(spark, corpus, tmp_path):
     assert _term_stats(eng, spark) == _term_stats(want, spark)
     for q in QUERIES + ["replacement body"]:
         assert _r9(eng.topk(q, 10, method="wand")) == _r9(want.topk(q, 10, method="wand"))
-        assert _r9(eng.topk(q, 10, method="bruteforce")) == _r9(want.topk(q, 10))
+        assert _r9(eng.topk(q, 10, method="vectorized")) == _r9(want.topk(q, 10))
 
 
 def test_distributed_paths_see_segments(spark, corpus, tmp_path):
@@ -222,6 +222,90 @@ def test_pending_tombstones_over_segments(spark, corpus, tmp_path):
             ids = {r["doc_id"] for r in res.collect()}
             assert not (ids & dead)
         assert set(got_ids) <= set(want_ids) | dead  # no resurrected docs
+
+
+def _segmented(spark, corpus, path):
+    """200 docs plus a 100-doc segment: each term's segment runs
+    interleave in doc_id."""
+    rows, mk = corpus
+    eng = BM25Engine(spark, path).build(mk(rows[:200]), **CFG)
+    merge_append(spark, eng.store.root, mk(rows[200:300]), mode="segment")
+    return BM25Engine(spark, eng.store.root)
+
+
+def test_explain_sums_to_score_on_segments(spark, corpus, tmp_path):
+    """explain_topk over a segmented index: for every hit, the
+    contributions summed in term order give exactly the topk score."""
+    eng = _segmented(spark, corpus, str(tmp_path / "ex"))
+    n_hits = 0
+    for q in QUERIES:
+        rows = eng.explain_topk(q, 50)
+        for d, score in eng.topk(q, 50):
+            total = 0.0
+            for r in sorted((r for r in rows if r["doc_id"] == d),
+                            key=lambda r: r["term"]):
+                total += r["contrib"]
+            assert total == score, (q, d)
+            n_hits += 1
+    assert n_hits > 50
+
+
+def test_pending_delete_keeps_decoded_cache(spark, corpus, tmp_path,
+                                            monkeypatch):
+    """After delete_urls the deleted docs leave every driver path, every
+    other hit keeps its exact score (df, n_docs and avgdl are those of
+    the unmasked index), and a repeated query decodes nothing."""
+    from pyspark.sql import functions as F
+
+    from super_rag_spark import codec
+    from super_rag_spark.analysis import doc_id_for_url, tokenize
+    from super_rag_spark.query import wand
+
+    rows, mk = corpus
+    eng = _segmented(spark, corpus, str(tmp_path / "pd"))
+    docs = mk(rows[:300])
+    phrase = " ".join(tokenize(rows[10]["text"])[:2])
+    wide = 400  # wider than any match set: no hit drops out of the window
+    calls = {
+        "topk": lambda: eng.topk("semudo muro fuboname", wide),
+        "weighted": lambda: eng.weighted_topk("semudo^2 muro gaku", wide),
+        "boolean": lambda: eng.boolean_topk("semudo OR fuboname NOT muro",
+                                            wide),
+        "phrase": lambda: eng.phrase_topk(phrase, docs, k=wide),
+        "search": lambda: [
+            (r["doc_id"], r["score"]) for r in eng.search(
+                "zibapevi gaku semudo", wide,
+                where=F.col("dl") > 0).collect()],
+    }
+    wand_calls = {
+        "wand": lambda: eng.topk("semudo muro fuboname", wide,
+                                 method="wand"),
+        "approx": lambda: eng.topk("semudo muro fuboname", wide,
+                                   method="wand", approx=1.5),
+        "search_wand": lambda: [
+            (r["doc_id"], r["score"]) for r in eng.search(
+                "zibapevi gaku semudo", wide, method="wand",
+                where=F.col("dl") > 0).collect()],
+    }
+    before = {name: fn() for name, fn in {**calls, **wand_calls}.items()}
+    url_of = {doc_id_for_url(r["url"]): r["url"] for r in rows[:300]}
+    dead = {hits[0][0] for hits in before.values()}
+    eng.delete_urls([url_of[d] for d in dead])
+
+    decodes = []
+    for mod in (codec, wand):
+        orig = mod.decode_blocks_batch
+        monkeypatch.setattr(
+            mod, "decode_blocks_batch",
+            lambda blocks, _orig=orig: decodes.append(1) or _orig(blocks))
+    for rep in range(2):
+        decodes.clear()
+        for name, fn in calls.items():
+            got = fn()
+            assert got == [h for h in before[name] if h[0] not in dead], name
+        assert not decodes  # the decoded cache serves every array path
+    for name, fn in wand_calls.items():
+        assert fn() == [h for h in before[name] if h[0] not in dead], name
 
 
 def test_long_lived_engine_follows_epoch_swap(spark, corpus, tmp_path):

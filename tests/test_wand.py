@@ -1,14 +1,16 @@
 """WAND == brute force == vectorized on randomized corpora
-(FIXTURES.md invariant 4), without Spark — pure codec + scorer."""
+(FIXTURES.md invariant 4), without Spark — pure codec + scorer. The
+cursor WAND and the brute-force scorer are the references."""
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from super_rag_spark.analysis import BLOCK_SIZE
-from super_rag_spark.codec import encode_block
-from super_rag_spark.query.wand import (bruteforce_topk, vectorized_topk,
-                                        wand_topk, wand_topk_cursor)
+from super_rag_spark.codec import decode_blocks_batch, encode_block
+from super_rag_spark.query.wand import (bruteforce_topk,
+                                        vectorized_topk_arrays, wand_topk,
+                                        wand_topk_cursor)
 
 
 def _blocks_for(doc_ids, tfs, dls, n_docs, avgdl, block_size=BLOCK_SIZE):
@@ -57,7 +59,9 @@ def test_wand_equals_bruteforce_random(data):
     w = wand_topk(term_blocks, n_docs, avgdl, k)
     c = wand_topk_cursor(term_blocks, n_docs, avgdl, k)
     b = bruteforce_topk(term_blocks, n_docs, avgdl, k)
-    v = vectorized_topk(term_blocks, n_docs, avgdl, k)
+    arrays = {t: (df, *decode_blocks_batch(bl)[:3])
+              for t, (df, bl) in term_blocks.items()}
+    v = vectorized_topk_arrays(arrays, n_docs, avgdl, k)
     assert [(d, round(s, 9)) for d, s in w] == [(d, round(s, 9)) for d, s in b]
     assert [(d, round(s, 9)) for d, s in c] == [(d, round(s, 9)) for d, s in b]
     assert [(d, round(s, 9)) for d, s in v] == [(d, round(s, 9)) for d, s in b]
