@@ -141,10 +141,9 @@ def _build_blocks_arrays(terms, salts, doc_ids, tfs, dls,
     instead of a corpus-dependent block_max_score, and no df. A block
     therefore depends ONLY on its own group's postings, which is what
     makes O(delta) merges possible: appends never invalidate untouched
-    groups just because N/avgdl/df moved. The WAND bound
-    idf(df)*(k1+1)*tf_max/(tf_max + k1*(1-b+b*dl_min/avgdl)) is computed
-    at query time (score is increasing in tf, decreasing in dl, so the
-    (tf_max, dl_min) corner is a valid upper bound)."""
+    groups just because N/avgdl/df moved. The WAND bound is
+    query/wand.py's bm25_contrib at the block's (block_max_tf,
+    block_min_dl) corner, computed at query time."""
     import pyarrow as pa
 
     n = len(terms)

@@ -22,8 +22,8 @@ POSITIONS — mirrors the postings segment device exactly:
   Position blocks carry no seg column: "segments" are just extra
   parquet files whose doc ranges may overlap other files of the same
   term. The distributed verify path is unordered (collect_list), and
-  the driver path sorts the decoded run on load
-  (engine._load_positions_term), so overlap is read-safe.
+  the driver path sorts the decoded run on load, before caching it
+  (BM25Engine._load_positions_term), so overlap is read-safe.
 
 VOCAB — an associative (term, df) fold, never a corpus scan:
   df_new = df_old + df_staging - df_removed, where df_staging comes

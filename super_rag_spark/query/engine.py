@@ -18,7 +18,10 @@ API endpoints: ingest / query / delete, /root/reference/router.py:8-10).
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+from typing import NamedTuple
 
+import numpy as np
 import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,54 +44,102 @@ _BLOCK_COLS = ["term_id", "salt", "seg", "block_id", "n", "first_doc_id",
                "last_doc_id", "docs_enc", "tfs_enc", "dls_enc",
                "block_max_tf", "block_min_dl"]
 
+# bytes charged to every cache entry on top of its payload: the key
+# tuple, the term string and the value tuple
+_ENTRY_BYTES = 200
+
+
+class Snapshot(NamedTuple):
+    """One query's view of the index, taken once at its start: the
+    manifest's epoch, BM25 statistics and bucket count, and the epoch's
+    pending tombstones (``deleted``, sorted int64). Every loader and
+    scorer of the query reads these, never the live manifest, so a merge
+    that lands mid-query cannot mix two epochs."""
+
+    epoch: int
+    n_docs: int
+    avgdl: float
+    k1: float
+    b: float
+    n_buckets: int
+    manifest: dict
+    deleted: np.ndarray
+
+    @property
+    def bm25(self) -> dict:
+        """Keyword arguments every driver scorer in query/wand.py takes."""
+        return {"n_docs": self.n_docs, "avgdl": self.avgdl, "k1": self.k1,
+                "b": self.b, "deleted": self.deleted}
+
+
+class _Cache:
+    """LRU over ``(epoch, kind, key)`` bounded by one byte budget. An
+    insert evicts least-recently-used entries of any kind until the
+    total fits, but never the entry being inserted."""
+
+    def __init__(self, budget: int):
+        self.budget = budget
+        self.used = 0
+        self._entries: OrderedDict = OrderedDict()  # key -> (value, bytes)
+
+    def __contains__(self, key) -> bool:
+        return key in self._entries
+
+    def __iter__(self):
+        return iter(self._entries)
+
+    def get(self, key):
+        """The cached value (marked most recently used), else None."""
+        hit = self._entries.get(key)
+        if hit is None:
+            return None
+        self._entries.move_to_end(key)
+        return hit[0]
+
+    def put(self, key, value, nbytes: int = 0) -> None:
+        old = self._entries.pop(key, None)
+        if old is not None:
+            self.used -= old[1]
+        nbytes += _ENTRY_BYTES
+        self._entries[key] = (value, nbytes)
+        self.used += nbytes
+        while self.used > self.budget and len(self._entries) > 1:
+            self.used -= self._entries.popitem(last=False)[1][1]
+
+    def keep_epoch(self, epoch: int) -> None:
+        """Drop every entry of another epoch."""
+        for key in [k for k in self._entries if k[0] != epoch]:
+            self.used -= self._entries.pop(key)[1]
+
+    def clear(self) -> None:
+        self._entries.clear()
+        self.used = 0
+
 
 class BM25Engine:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.store = IndexStorage(index_dir)
         self._manifest: dict | None = None
-        self._manifest_mtime: int | None = None
-        # (epoch, bucket) -> pyarrow dataset; epoch-keyed so a long-lived
-        # engine spanning an out-of-band merge_append never reads a
-        # GC'd postings_e<N> directory through a stale dataset handle
-        self._ds_cache: dict[tuple[int, int], "ds.Dataset"] = {}
-        # (epoch, term) -> (df, [block rows]); hot-term cache for the
-        # driver latency path (the reference's cache analog, SURVEY.md
-        # §4.1 "Caching/session reuse"). Cold postings reads on this box
-        # run at disk speed (~2 MB/s first touch); head terms repeat
-        # across real query streams, so an LRU pays for itself fast.
-        self._term_cache: "dict[tuple[int, str], tuple[int, list[dict]]]" = {}
-        self._term_cache_max = 4096
-        # (epoch, term) -> (df, docs, tfs, dls) DECODED postings sorted by
-        # doc_id, LRU by total postings held: head-term queries are
-        # decode-bound (~300 k varint postings per hot conjunction), so a
-        # hit skips straight to the ~5 flops/posting scoring. Entries are
-        # never masked: pending tombstones apply per query.
-        self._dec_cache: "dict[tuple[int, str], tuple]" = {}
-        self._dec_used = 0
-        self._dec_budget = 16_000_000  # postings (~256 MB of int64/int32)
+        self._manifest_sig: tuple | None = None
+        self._summary: BM25Engine | None = None  # see _route
+        # Everything the driver path caches lives in one LRU keyed by
+        # epoch: decoded postings (term -> (df, docs, tfs, dls) sorted by
+        # doc_id, never masked), encoded blocks, df, decoded positions,
+        # pyarrow dataset handles, vocab depth and tombstones. Head terms
+        # repeat across real query streams, and a decoded hit skips
+        # straight to scoring. Epoch keys mean a long-lived engine never
+        # reads a GC'd epoch through a stale entry. The 512 MiB budget is
+        # the old decoded-postings (16 M x 16 B) and positions
+        # (32 M x 8 B) ceilings together.
+        self._cache = _Cache(512 << 20)
         # driver-path guard (r4): a single query whose UNCACHED terms'
         # Σdf exceeds this never decodes postings onto the driver — it
         # falls back to the distributed plan instead. At 10^12 docs a
-        # head term has ~10^11 postings; the LRU budget above bounds
+        # head term has ~10^11 postings; the cache budget above bounds
         # RETENTION, this bounds a single LOAD.
         self.driver_df_budget = 8_000_000
         self.driver_fallbacks = 0  # observability + test hook
-        # decoded POSITIONS LRU (r4, index-only phrase path): first
-        # touch of a term pays the sidecar read + varint decode,
-        # repeats verify in-memory — same budget device as _dec_cache
-        self._pos_cache: "dict[tuple[int, str], tuple]" = {}
-        self._pos_used = 0
-        self._pos_budget = 32_000_000  # positions (~256 MB of int64)
-        # (epoch, term) -> df from term_stats (r5): the budget probe
-        # (_uncached_df_total) runs on EVERY topk before the caches
-        # warm, and the r4 form re-opened a pyarrow dataset per bucket
-        # per cold query — it nearly doubled the cold-stream p50
-        # (BENCH r4 58 ms vs r3 32 ms). df values are a few bytes, so
-        # this cache is effectively free; datasets reuse _ds_cache
-        # under ("ts", epoch, bucket) keys.
-        self._df_cache: "dict[tuple[int, str], int]" = {}
-        self._df_cache_max = 65536
 
     # ------------------------------------------------------------- build
     def build(self, docs_df: DataFrame, positions: bool = False,
@@ -118,62 +169,56 @@ class BM25Engine:
                 extract_mode=kwargs.get("extract_mode", "html"),
                 depth=int(vocab))
         self._manifest = None
-        self._ds_cache.clear()
-        self._term_cache.clear()
-        self._dec_cache.clear()
-        self._dec_used = 0
-        self._pos_cache.clear()
-        self._pos_used = 0
-        self._df_cache.clear()
+        self._cache.clear()
         return self
 
     @property
     def manifest(self) -> dict:
-        """Manifest with staleness detection: an out-of-band
-        merge_append/compact_index replaces manifest.json atomically and
-        GC's the old epoch's directories, so a long-lived engine that
-        kept serving its cached epoch would read deleted files. A ~1 us
-        stat of the manifest's mtime per query keeps the engine pinned
-        to the LIVE epoch (caches are epoch-keyed, so they just miss
-        over to the new directories)."""
+        """The live manifest. An out-of-band merge_append/compact_index
+        replaces manifest.json atomically and GC's the old epoch's
+        directories, so each access stats the file (~1 us) and re-reads
+        it when it changed; on an epoch change _warm_new_epoch moves the
+        cache to the new epoch. Queries read it once, through
+        _snapshot."""
         try:
-            mtime = os.stat(self.store.manifest_path).st_mtime_ns
+            st = os.stat(self.store.manifest_path)
+            sig = (st.st_ino, st.st_mtime_ns)
         except FileNotFoundError:
-            mtime = None
-        if self._manifest is None or mtime != self._manifest_mtime:
+            sig = None
+        if self._manifest is None or sig != self._manifest_sig:
             old = self._manifest
             self._manifest = self.store.read_manifest()
-            self._manifest_mtime = mtime
+            self._manifest_sig = sig
             if old is not None and int(old.get("epoch", -1)) != int(
                     self._manifest["epoch"]):
                 self._warm_new_epoch(int(old["epoch"]))
         return self._manifest
 
+    def _snapshot(self) -> Snapshot:
+        """Snapshot of the live epoch: one stat of manifest.json, plus
+        one listing of the tombstones directory when it exists."""
+        m = self.manifest
+        epoch = int(m["epoch"])
+        return Snapshot(epoch, int(m["n_docs"]), float(m["avgdl"]),
+                        float(m["k1"]), float(m["b"]), int(m["n_buckets"]),
+                        m, self._tombstones(epoch))
+
     def _warm_new_epoch(self, old_epoch: int) -> None:
         """Epoch switch (out-of-band merge/compact): the old epoch's
-        dirs are GC'd, so stale cache entries are dropped — and the
-        terms that were HOT in the decoded LRU are re-decoded from the
-        new epoch eagerly. Without this, the first post-append query
-        stream runs cold (~40x the steady-state p50) until the LRU
+        dirs are GC'd, so every entry of another epoch is dropped — and
+        the terms that were HOT in the decoded cache are re-decoded from
+        the new epoch eagerly. Without this, the first post-append query
+        stream runs cold (~40x the steady-state p50) until the cache
         refills; head terms stay head terms across epochs, so the old
         working set is the right prefetch list."""
-        hot = [t for (e, t) in self._dec_cache if e == old_epoch]
-        self._ds_cache = {k: v for k, v in self._ds_cache.items()
-                          if (k[1] if k[0] in ("pos", "voc", "ts",
-                                               "vdepth")
-                              else k[0]) != old_epoch}
-        for key in [k for k in self._term_cache if k[0] == old_epoch]:
-            del self._term_cache[key]
-        for key in [k for k in self._df_cache if k[0] == old_epoch]:
-            del self._df_cache[key]
-        for key in [k for k in self._dec_cache if k[0] == old_epoch]:
-            self._dec_used -= len(self._dec_cache.pop(key)[1])
-        for key in [k for k in self._pos_cache if k[0] == old_epoch]:
-            self._pos_used -= len(self._pos_cache.pop(key)[2])
+        hot = [key for e, kind, key in self._cache
+               if e == old_epoch and kind == "dec"]
+        snap = self._snapshot()
+        self._cache.keep_epoch(snap.epoch)
         if hot:
             try:
-                self._load_term_arrays(hot)  # refill under the new epoch
-            except Exception:
+                self._load_term_arrays(snap, hot)  # refill under the new epoch
+            except OSError:
                 pass  # warm-up is best-effort; queries reload lazily
 
     # ------------------------------------------------------------- query
@@ -219,18 +264,39 @@ class BM25Engine:
         return score_phrase_batch(self.spark, self.store, docs_df,
                                   phrases, k=k, slop=slop)
 
-    def _load_term_blocks(self, terms: list[str]) -> dict[str, tuple[int, list[dict]]]:
+    def _dataset(self, snap: Snapshot, table: str, bucket: int):
+        """pyarrow dataset of one bucket of an epoch-scoped table
+        (``postings``, ``term_stats``, ``positions`` or ``vocab``), opened
+        once per epoch through the cache. None when the bucket directory
+        does not exist at the live epoch. A directory missing because a
+        merge replaced the snapshot's epoch mid-query raises instead of
+        reading as an empty bucket."""
+        key = (snap.epoch, table, bucket)
+        dataset = self._cache.get(key)
+        if dataset is None:
+            base = getattr(self.store, f"{table}_dir_for")(snap.epoch)
+            p = os.path.join(base, f"bucket={bucket}")
+            if not os.path.isdir(p):
+                live = self.store.epoch()
+                if live != snap.epoch:
+                    raise FileNotFoundError(
+                        f"{p}: the query's snapshot is epoch {snap.epoch},"
+                        f" but the index has moved to epoch {live}")
+                return None
+            dataset = ds.dataset(p, format="parquet")
+            self._cache.put(key, dataset)
+        return dataset
+
+    def _load_term_blocks(self, snap: Snapshot, terms: list[str]
+                          ) -> dict[str, tuple[int, list[dict]]]:
         """Driver-side pruned postings read: only the parquet partitions
-        (bucket=<b> dirs) owning the query terms are touched, and the
-        term_id filter hits parquet row-group stats (files sorted by
-        term_id). Returned dict is keyed by the term STRING so scorers
+        (bucket=<b> dirs) owning the query terms are touched, filtered
+        on term_id. Returned dict is keyed by the term STRING so scorers
         sum contributions in term-ascending (oracle) order."""
-        n_buckets = int(self.manifest["n_buckets"])
-        epoch = int(self.manifest["epoch"])
         out: dict[str, tuple[int, list[dict]]] = {}
         missing = []
         for t in terms:
-            hit = self._term_cache.get((epoch, t))
+            hit = self._cache.get((snap.epoch, "blk", t))
             if hit is None:
                 missing.append(t)
             elif hit[1]:  # a cached OOV term holds no blocks
@@ -238,17 +304,12 @@ class BM25Engine:
         if not missing:
             return out
         ids = {term_id_for(t): t for t in missing}
-        buckets = sorted({bucket_of_term_id(i, n_buckets) for i in ids})
+        buckets = sorted({bucket_of_term_id(i, snap.n_buckets) for i in ids})
         rows: list[dict] = []
         for b in buckets:
-            dataset = self._ds_cache.get((epoch, b))
+            dataset = self._dataset(snap, "postings", b)
             if dataset is None:
-                p = os.path.join(
-                    self.store.postings_dir_for(epoch), f"bucket={b}")
-                if not os.path.isdir(p):
-                    continue
-                dataset = ds.dataset(p, format="parquet")
-                self._ds_cache[(epoch, b)] = dataset
+                continue
             tbl = dataset.to_table(filter=ds.field("term_id").isin(list(ids)),
                                    columns=_BLOCK_COLS)
             rows.extend(tbl.to_pylist())
@@ -264,33 +325,30 @@ class BM25Engine:
             blocks.sort(key=lambda r: r["first_doc_id"])
             loaded[term] = (sum(blk["n"] for blk in blocks), blocks)
         for term in missing:  # cache misses too (empty = OOV term)
-            if len(self._term_cache) >= self._term_cache_max:
-                self._term_cache.pop(next(iter(self._term_cache)))
-            self._term_cache[(epoch, term)] = loaded.get(term, (0, []))
+            entry = loaded.get(term, (0, []))
+            self._cache.put((snap.epoch, "blk", term), entry, sum(
+                len(r["docs_enc"]) + len(r["tfs_enc"]) + len(r["dls_enc"])
+                for r in entry[1]))
         out.update(loaded)
         return out
 
-    def _load_term_arrays(self, terms: list[str]) -> dict:
+    def _load_term_arrays(self, snap: Snapshot, terms: list[str]) -> dict:
         """Decoded per-term postings {term: (df, docs, tfs, dls)}, docs
-        sorted ascending, through the postings-budget LRU; OOV terms are
-        absent. The arrays are unmasked: scorers take pending tombstones
-        as ``deleted`` (see _score_kw), so deletes keep the cache."""
-        import numpy as np
-
+        sorted ascending, through the cache; OOV terms are absent. The
+        arrays are unmasked: scorers take pending tombstones as
+        ``deleted`` (see Snapshot.bm25), so deletes keep the cache."""
         from ..codec import decode_blocks_batch
 
-        epoch = int(self.manifest["epoch"])
         out: dict = {}
         missing = []
         for t in terms:
-            hit = self._dec_cache.pop((epoch, t), None)
+            hit = self._cache.get((snap.epoch, "dec", t))
             if hit is not None:
-                self._dec_cache[(epoch, t)] = hit  # LRU re-insert
                 out[t] = hit
             else:
                 missing.append(t)
         if missing:
-            for t, (df_t, bl) in self._load_term_blocks(missing).items():
+            for t, (df_t, bl) in self._load_term_blocks(snap, missing).items():
                 docs, tfs, dls, _ = decode_blocks_batch(bl)
                 if (docs[1:] < docs[:-1]).any():
                     # segment runs of one term interleave in doc_id
@@ -298,45 +356,33 @@ class BM25Engine:
                     docs, tfs, dls = docs[order], tfs[order], dls[order]
                 entry = (df_t, docs, tfs, dls)
                 out[t] = entry
-                self._dec_cache[(epoch, t)] = entry
-                self._dec_used += len(docs)
-            while self._dec_used > self._dec_budget and len(self._dec_cache) > len(terms):
-                old_key = next(iter(self._dec_cache))
-                self._dec_used -= len(self._dec_cache.pop(old_key)[1])
+                self._cache.put((snap.epoch, "dec", t), entry,
+                                docs.nbytes + tfs.nbytes + dls.nbytes)
         return out
 
-    def _term_dfs(self, terms: list[str]) -> dict[str, int]:
-        """df per term from the term_stats table, through the driver df
-        cache (OOV terms cache as 0). Cache misses read via pyarrow with
-        dataset handles held in _ds_cache — O(query terms), never a
-        Spark job, and a repeat term never re-opens a dataset."""
-        epoch = int(self.manifest["epoch"])
+    def _term_dfs(self, snap: Snapshot, terms: list[str]) -> dict[str, int]:
+        """df per term from the term_stats table, through the cache (OOV
+        terms cache as 0). Misses read via pyarrow — O(query terms),
+        never a Spark job, and a repeat term never re-opens a dataset."""
         out: dict[str, int] = {}
         missing = []
         for t in terms:
-            v = self._df_cache.get((epoch, t))
+            v = self._cache.get((snap.epoch, "df", t))
             if v is not None:
                 out[t] = v
             else:
                 missing.append(t)
         if not missing:
             return out
-        n_buckets = int(self.manifest["n_buckets"])
         ids = {term_id_for(t): t for t in missing}
         by_bucket: dict[int, list[int]] = {}
         for tid in ids:
             by_bucket.setdefault(
-                bucket_of_term_id(tid, n_buckets), []).append(tid)
+                bucket_of_term_id(tid, snap.n_buckets), []).append(tid)
         for b, tids in by_bucket.items():
-            key = ("ts", epoch, b)
-            dataset = self._ds_cache.get(key)
+            dataset = self._dataset(snap, "term_stats", b)
             if dataset is None:
-                p = os.path.join(
-                    self.store.term_stats_dir_for(epoch), f"bucket={b}")
-                if not os.path.isdir(p):
-                    continue
-                dataset = ds.dataset(p, format="parquet")
-                self._ds_cache[key] = dataset
+                continue
             tbl = dataset.to_table(
                 filter=ds.field("term_id").isin(tids),
                 columns=["term_id", "df"])
@@ -345,23 +391,20 @@ class BM25Engine:
                 out[ids[tid]] = int(dfv)
         for t in missing:
             out.setdefault(t, 0)
-            if len(self._df_cache) >= self._df_cache_max:
-                self._df_cache.pop(next(iter(self._df_cache)))
-            self._df_cache[(epoch, t)] = out[t]
+            self._cache.put((snap.epoch, "df", t), out[t])
         return out
 
-    def _uncached_df_total(self, terms: list[str]) -> int:
-        """Σdf of the terms NOT already held by a driver cache — the
-        postings volume a driver-side load would actually pull. Served
-        from the df cache; a miss is one pyarrow term_stats row-group
-        read (O(query terms)), never a Spark job."""
-        epoch = int(self.manifest["epoch"])
+    def _uncached_df_total(self, snap: Snapshot, terms: list[str]) -> int:
+        """Σdf of the terms NOT already held by the cache — the postings
+        volume a driver-side load would actually pull. Served from the
+        cached df; a miss is one pyarrow term_stats read (O(query
+        terms)), never a Spark job."""
         missing = [t for t in terms
-                   if (epoch, t) not in self._dec_cache
-                   and (epoch, t) not in self._term_cache]
+                   if (snap.epoch, "dec", t) not in self._cache
+                   and (snap.epoch, "blk", t) not in self._cache]
         if not missing:
             return 0
-        return sum(self._term_dfs(missing).values())
+        return sum(self._term_dfs(snap, missing).values())
 
     def warm(self) -> int:
         """Touch every postings + term_stats file sequentially so the
@@ -381,52 +424,60 @@ class BM25Engine:
                                 total += len(chunk)
         return total
 
-    def _tombstone_set(self):
-        """Pending tombstones as a sorted int64 array (np.isin-ready).
-        Cached per (epoch, dir listing): delete_urls appends a new file,
-        so the listing signature is a cheap staleness check — queries
-        between deletes never re-read the parquet."""
-        import numpy as np
-
-        d = self.store.tombstones_dir_for(int(self.manifest["epoch"]))
-        if not os.path.isdir(d):
+    def _tombstones(self, epoch: int) -> np.ndarray:
+        """Pending tombstones of ``epoch`` as a sorted int64 array
+        (np.isin-ready). delete_urls appends a new file, so the cached
+        array is keyed by the directory listing — queries between
+        deletes never re-read the parquet."""
+        d = self.store.tombstones_dir_for(epoch)
+        try:
+            names = sorted(os.listdir(d))
+        except FileNotFoundError:
             return np.empty(0, dtype=np.int64)
-        sig = (d, tuple(sorted(os.listdir(d))))
-        cached = getattr(self, "_tomb_cache", None)
-        if cached is not None and cached[0] == sig:
-            return cached[1]
-        dataset = ds.dataset(d, format="parquet")
-        arr = dataset.to_table(columns=["doc_id"])["doc_id"].to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        arr = np.unique(arr)
-        self._tomb_cache = (sig, arr)
+        hit = self._cache.get((epoch, "tomb", None))
+        if hit is not None and hit[0] == names:
+            return hit[1]
+        arr = np.unique(ds.dataset(d, format="parquet").to_table(
+            columns=["doc_id"])["doc_id"].to_numpy(
+            zero_copy_only=False).astype(np.int64))
+        self._cache.put((epoch, "tomb", None), (names, arr), arr.nbytes)
         return arr
 
-    def _score_kw(self) -> dict:
-        """Corpus statistics and pending tombstones, the keyword
-        arguments every driver scorer in query/wand.py takes."""
-        m = self.manifest
-        return {"n_docs": int(m["n_docs"]), "avgdl": float(m["avgdl"]),
-                "k1": float(m["k1"]), "b": float(m["b"]),
-                "deleted": self._tombstone_set()}
-
-    def _driver_topk(self, terms: list[str], k: int, method: str,
-                     approx: float = 1.0, allowed=None) -> list[tuple[int, float]]:
+    def _driver_topk(self, snap: Snapshot, terms: list[str], k: int,
+                     method: str, approx: float = 1.0,
+                     allowed=None) -> list[tuple[int, float]]:
         """Driver top-k of an OR-bag: ``vectorized`` scores the cached
         decoded arrays, ``wand`` the encoded blocks with block-max
         skipping. ``allowed``: optional sorted doc_id array, the only
         docs ranked (search's selective filter)."""
         if method == "wand":
-            blocks = self._load_term_blocks(terms)
+            blocks = self._load_term_blocks(snap, terms)
             return _TOPK_METHODS["wand"](
                 blocks, k=k, allowed=allowed, approx=approx,
-                **self._score_kw()) if blocks else []
+                **snap.bm25) if blocks else []
         from .wand import vectorized_topk_arrays
 
-        arrays = self._load_term_arrays(terms)
+        arrays = self._load_term_arrays(snap, terms)
         return vectorized_topk_arrays(
-            arrays, k=k, candidates=allowed,
-            **self._score_kw()) if arrays else []
+            arrays, k=k, candidates=allowed, **snap.bm25) if arrays else []
+
+    def _topk(self, snap: Snapshot, terms: list[str], k: int, method: str,
+              approx: float = 1.0) -> list[tuple[int, float]]:
+        """topk's body for sorted unique ``terms`` under ``snap``:
+        queries whose uncached terms exceed the driver df budget run the
+        distributed WAND plan (rank-identical; the per-salt-range tasks
+        decode only their own stripes)."""
+        if method not in _TOPK_METHODS:
+            raise ValueError(f"unknown topk method: {method!r}")
+        if not terms:
+            return []
+        if self._uncached_df_total(snap, terms) > self.driver_df_budget:
+            self.driver_fallbacks += 1
+            res = self.query_batch_wand(
+                [{"query_id": 0, "text": " ".join(terms)}], k=k)
+            return [(int(r["doc_id"]), float(r["score"]))
+                    for r in res.orderBy("rank").collect()]
+        return self._driver_topk(snap, terms, k, method, approx)
 
     def topk(self, query: str, k: int = 10, use_wand: bool | None = None,
              method: str = "vectorized",
@@ -450,22 +501,9 @@ class BM25Engine:
         # the query happens to exceed the driver budget
         if approx != 1.0 and method != "wand":
             raise ValueError("approx= requires method='wand'")
-        if method not in _TOPK_METHODS:
-            raise ValueError(f"unknown topk method: {method!r}")
         engine, qtext = self._route(query)
-        terms = sorted(set(tokenize(qtext)))
-        if not terms:
-            return []
-        if engine._uncached_df_total(terms) > engine.driver_df_budget:
-            # the query's head terms exceed what the driver may decode:
-            # route to the distributed WAND plan (rank-identical; the
-            # per-salt-range tasks decode only their own stripes)
-            engine.driver_fallbacks += 1
-            res = engine.query_batch_wand([{"query_id": 0, "text": qtext}],
-                                          k=k)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
-        return engine._driver_topk(terms, k, method, approx)
+        return engine._topk(engine._snapshot(), sorted(set(tokenize(qtext))),
+                            k, method, approx)
 
     def weighted_topk(self, query: str, k: int = 10, *,
                       boosts: dict[str, float] | None = None,
@@ -494,7 +532,8 @@ class BM25Engine:
         terms = sorted(weights)
         if not terms:
             return []
-        if engine._uncached_df_total(terms) > engine.driver_df_budget:
+        snap = engine._snapshot()
+        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             res = score_query_batch(
                 self.spark, engine.store,
@@ -502,13 +541,13 @@ class BM25Engine:
                   "boosts": weights, "msm": msm}], k=k)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
-        arrays = engine._load_term_arrays(terms)
+        arrays = engine._load_term_arrays(snap, terms)
         if not arrays:
             return []
         from .wand import vectorized_topk_arrays
 
         return vectorized_topk_arrays(arrays, k=k, weights=weights, msm=msm,
-                                      **engine._score_kw())
+                                      **snap.bm25)
 
     def topk_after(self, query: str, k: int = 10, *,
                    after: tuple[int, float] | None = None
@@ -522,15 +561,14 @@ class BM25Engine:
         costs the same as page 1 (no top-(N*k) window). ``after=None``
         is page 1 (== topk). Budget-gated like topk(); the distributed
         fallback pushes the cursor predicate below the top-k window."""
-        import numpy as np
-
         if after is None:
             return self.topk(query, k)
         engine, qtext = self._route(query)
         terms = sorted(set(tokenize(qtext)))
         if not terms:
             return []
-        if engine._uncached_df_total(terms) > engine.driver_df_budget:
+        snap = engine._snapshot()
+        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             res = score_query_batch(self.spark, engine.store,
                                     [{"query_id": 0, "text": qtext}],
@@ -539,8 +577,8 @@ class BM25Engine:
                     for r in res.orderBy("rank").collect()]
         from .wand import accumulate_scores, rank_topk
 
-        uniq, scores = accumulate_scores(engine._load_term_arrays(terms),
-                                         **engine._score_kw())
+        uniq, scores = accumulate_scores(engine._load_term_arrays(snap, terms),
+                                         **snap.bm25)
         key = np.round(scores, 9)
         a9 = round(float(after[1]), 9)
         keep = (key < a9) | ((key == a9) & (uniq > int(after[0])))
@@ -579,18 +617,17 @@ class BM25Engine:
         tf = Counter(tokenize(text))
         if not tf:
             return []
-        dfs = self._term_dfs(sorted(tf))
-        n_docs = int(self.manifest["n_docs"])
+        snap = self._snapshot()
+        dfs = self._term_dfs(snap, sorted(tf))
         scored_terms = sorted(
-            ((t, tf[t] * idf(n_docs, dfs[t]))
+            ((t, tf[t] * idf(snap.n_docs, dfs[t]))
              for t in tf if dfs.get(t, 0) > 0),
             key=lambda x: (-x[1], x[0]))
         sel = [t for t, _ in scored_terms[:max_terms]]
         if not sel:
             return []
         src_id = doc_id_for_url(url) if url is not None else None
-        hits = self.topk(" ".join(sel), k=k + (src_id is not None),
-                         method=method)
+        hits = self._topk(snap, sorted(sel), k + (src_id is not None), method)
         if src_id is not None:
             hits = [(d, s) for d, s in hits if d != src_id]
         return hits[:k]
@@ -603,7 +640,10 @@ class BM25Engine:
         if toks and toks[0].lower().startswith("summar"):
             summary_dir = self.store.root + "summary"
             if os.path.exists(os.path.join(summary_dir, "manifest.json")):
-                return BM25Engine(self.spark, summary_dir), " ".join(toks[1:])
+                # one long-lived engine, so its cache serves repeats
+                if self._summary is None:
+                    self._summary = BM25Engine(self.spark, summary_dir)
+                return self._summary, " ".join(toks[1:])
             return self, " ".join(toks[1:])
         return self, query
 
@@ -657,8 +697,6 @@ class BM25Engine:
         Returns a DataFrame (rank, doc_id, score, url, *meta
         [, n_matches, snippet]).
         """
-        import numpy as np
-
         if method not in _TOPK_METHODS:
             raise ValueError(f"unknown topk method: {method!r}")
         cand_df: DataFrame | None = None
@@ -684,7 +722,8 @@ class BM25Engine:
             # ('summary AND report' -> 'AND report', a parse error)
             engine, qtext = self, query
             hits, qs_bag = engine._query_string_hits(
-                qtext, k, qs_max_expansions, cand_df, allowed)
+                engine._snapshot(), qtext, k, qs_max_expansions, cand_df,
+                allowed)
             terms = []
         else:
             engine, qtext = self._route(query)
@@ -704,10 +743,11 @@ class BM25Engine:
             hits = [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
         elif terms and allowed is None:
-            # unfiltered: same path as topk() (incl. the decoded LRU)
-            hits = engine.topk(qtext, k, method=method)
+            # unfiltered: same path as topk() (incl. the decoded cache)
+            hits = engine._topk(engine._snapshot(), terms, k, method)
         elif terms:
-            hits = engine._driver_topk(terms, k, method, allowed=allowed)
+            hits = engine._driver_topk(engine._snapshot(), terms, k, method,
+                                       allowed=allowed)
         out = self.spark.createDataFrame(
             [(i + 1, d, float(s)) for i, (d, s) in enumerate(hits)],
             "rank int, doc_id long, score double")
@@ -765,21 +805,20 @@ class BM25Engine:
         Survivors are BM25-ranked over the phrase's terms with GLOBAL
         corpus stats, exactly like query/phrase.phrase_topk's DataFrame
         path (equality asserted in tests)."""
-        import numpy as np
-
         from .phrase import joined_tokens_expr, phrase_pattern, plan_barrier
         from .wand import vectorized_topk_arrays
 
         terms = tokenize(phrase)
         if not terms:
             return []
-        if docs_df is None and not self.store.has_positions():
+        snap = self._snapshot()
+        if docs_df is None and not self.store.has_positions(snap.epoch):
             raise ValueError(
                 "phrase_topk without docs_df needs the positional sidecar"
                 " — build with positions=True / run build_positions, or"
                 " pass the source corpus for match-then-verify")
         uterms = sorted(set(terms))
-        if self._uncached_df_total(uterms) > self.driver_df_budget:
+        if self._uncached_df_total(snap, uterms) > self.driver_df_budget:
             # a stop-word in the phrase would decode O(df) postings on
             # the driver; run the index-backed distributed plan instead
             self.driver_fallbacks += 1
@@ -789,7 +828,7 @@ class BM25Engine:
                                      [(0, phrase)], k=k, slop=slop)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
-        arrays = self._load_term_arrays(uterms)
+        arrays = self._load_term_arrays(snap, uterms)
         if len(arrays) < len(uterms):
             return []  # some phrase term has no postings at all
         by_rarity = sorted(uterms, key=lambda t: len(arrays[t][1]))
@@ -805,14 +844,14 @@ class BM25Engine:
             # candidates by BM25 first (scores need no verify), then
             # chain-verify in descending-score batches and stop as soon
             # as k survive. Position runs load per TERM through the
-            # decoded-positions LRU (doc ids are content hashes, so
-            # batches have no block locality — the first touch of a
-            # term pays its full sidecar read, repeats are in-memory);
-            # the batching bounds the chain_match work, not the I/O
+            # cache (doc ids are content hashes, so batches have no
+            # block locality — the first touch of a term pays its full
+            # sidecar read, repeats are in-memory); the batching bounds
+            # the chain_match work, not the I/O
             from .wand import accumulate_scores
 
             uniqc, sc = accumulate_scores(arrays, candidates=cand,
-                                          **self._score_kw())
+                                          **snap.bm25)
             order = np.lexsort((uniqc, -np.round(sc, 9)))
             rd, rs = uniqc[order], sc[order]
             out: list[tuple[int, float]] = []
@@ -820,7 +859,7 @@ class BM25Engine:
             for i in range(0, len(rd), step):
                 batch = np.sort(rd[i:i + step])
                 ver = set(self._verify_positions_driver(
-                    terms, batch, slop).tolist())
+                    snap, terms, batch, slop).tolist())
                 out.extend((int(d), float(s))
                            for d, s in zip(rd[i:i + step].tolist(),
                                            rs[i:i + step].tolist())
@@ -854,38 +893,28 @@ class BM25Engine:
         if not len(verified):
             return []
         return vectorized_topk_arrays(arrays, k=k, candidates=verified,
-                                      **self._score_kw())
+                                      **snap.bm25)
 
-    def _load_positions_term(self, term: str):
-        """Decoded position run of one term through the positions LRU:
+    def _load_positions_term(self, snap: Snapshot, term: str):
+        """Decoded position run of one term through the cache:
         (docs sorted array, off, flat) with doc i's positions =
         flat[off[i]:off[i+1]], or None for a term with no positions.
-        Like the decoded-postings LRU, the first touch of a term pays
+        Like decoded postings, the first touch of a term pays
         the parquet read + varint decode; repeats are in-memory (phrase
         streams repeat their vocabulary just like BM25 streams do —
         doc ids are content hashes, so block ranges carry no candidate
         locality and partial reads don't pay off)."""
-        import numpy as np
-
         from ..codec import decode_positions_block
 
-        epoch = int(self.manifest["epoch"])
-        key = (epoch, term)
-        hit = self._pos_cache.pop(key, None)
+        key = (snap.epoch, "pos", term)
+        hit = self._cache.get(key)
         if hit is not None:
-            self._pos_cache[key] = hit  # LRU re-insert
             return hit
-        n_buckets = int(self.manifest["n_buckets"])
         tid = term_id_for(term)
-        bkt = bucket_of_term_id(tid, n_buckets)
-        p = os.path.join(self.store.positions_dir_for(epoch),
-                         f"bucket={bkt}")
-        if not os.path.isdir(p):
-            return None
-        dataset = self._ds_cache.get(("pos", epoch, bkt))
+        dataset = self._dataset(snap, "positions",
+                                bucket_of_term_id(tid, snap.n_buckets))
         if dataset is None:
-            dataset = ds.dataset(p, format="parquet")
-            self._ds_cache[("pos", epoch, bkt)] = dataset
+            return None
         tbl = dataset.to_table(
             filter=ds.field("term_id") == tid,
             columns=["block_id", "n", "first_doc_id",
@@ -921,29 +950,20 @@ class BM25Engine:
             counts = counts[order]
         off = np.concatenate(([0], np.cumsum(counts)))
         entry = (docs, off, flat)
-        self._pos_cache[key] = entry
-        self._pos_used += len(flat)
-        while (self._pos_used > self._pos_budget
-               and len(self._pos_cache) > 1):
-            old = next(iter(self._pos_cache))
-            if old == key:
-                break
-            self._pos_used -= len(self._pos_cache.pop(old)[2])
+        self._cache.put(key, entry, docs.nbytes + off.nbytes + flat.nbytes)
         return entry
 
-    def _verify_positions_driver(self, terms: list[str], cand,
-                                 slop: int):
+    def _verify_positions_driver(self, snap: Snapshot, terms: list[str],
+                                 cand, slop: int):
         """Chain-verify the phrase against the positional sidecar for
         the candidate docs (sorted unique int64 array); position runs
-        come from the decoded-positions LRU (no Spark job). Returns the
-        verified sorted-unique doc_id array."""
-        import numpy as np
-
+        come from the cache (no Spark job). Returns the verified
+        sorted-unique doc_id array."""
         from ..index.positions import chain_match
 
         per: dict[str, tuple] = {}
         for t in set(terms):
-            ent = self._load_positions_term(t)
+            ent = self._load_positions_term(snap, t)
             if ent is None:
                 return np.empty(0, dtype=np.int64)
             per[t] = ent
@@ -974,21 +994,20 @@ class BM25Engine:
         set algebra over decoded postings (query/boolean.py grammar),
         BM25-ranked over the positive terms with global stats. NOT terms
         subtract, never score. Needs no corpus access — pure index."""
-        import numpy as np
-
         from .boolean import parse_boolean
         from .wand import vectorized_topk_arrays
 
         steps = parse_boolean(expr)
         all_terms = sorted({t for _, t in steps})
-        if self._uncached_df_total(all_terms) > self.driver_df_budget:
+        snap = self._snapshot()
+        if self._uncached_df_total(snap, all_terms) > self.driver_df_budget:
             # 'OR the' loads O(df) postings driver-side; run the
             # index-backed distributed set algebra instead
             self.driver_fallbacks += 1
             res = self.boolean_batch([(0, expr)], k=k)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
-        arrays = self._load_term_arrays(all_terms)
+        arrays = self._load_term_arrays(snap, all_terms)
 
         empty = np.empty(0, dtype=np.int64)
 
@@ -1008,16 +1027,16 @@ class BM25Engine:
         positive = {t: arrays[t]
                     for op, t in steps if op != "NOT" and t in arrays}
         return vectorized_topk_arrays(positive, k=k, candidates=cand,
-                                      **self._score_kw())
+                                      **snap.bm25)
 
     # -------------------------------------------------------------- fuzzy
-    def _correct_term(self, term: str, max_dist: int = 1) -> str | None:
-        """Driver-side SymSpell lookup against the vocabulary sidecar:
-        read the rows whose variant matches one of the term's deletion
-        variants (bucket-dir + variant row-group pruned, pyarrow — no
-        Spark job), levenshtein-verify, pick (distance, df DESC, term)
-        best. Returns None when nothing is within ``max_dist``. An
-        in-vocab term returns itself (distance 0 always wins).
+    def _vocab_matches(self, snap: Snapshot, term: str,
+                       max_dist: int) -> dict[str, tuple[int, int]]:
+        """``{vocab term: (edit distance, df)}`` for every vocabulary
+        term within ``max_dist`` edits of ``term``: a SymSpell lookup
+        reading the sidecar rows whose variant is one of the term's
+        deletion variants (bucket-dir + variant pruned, pyarrow — no
+        Spark job), levenshtein-verified.
 
         ``max_dist`` must not exceed the sidecar's deletion-
         neighborhood depth (1 unless built with vocab=2 /
@@ -1028,64 +1047,58 @@ class BM25Engine:
         from ..index.vocab import (deletion_neighborhood, levenshtein,
                                    vocab_depth)
 
-        epoch = int(self.manifest["epoch"])
-        depth = self._ds_cache.get(("vdepth", epoch))
+        depth = self._cache.get((snap.epoch, "vdepth", None))
         if depth is None:  # marker file read once per epoch
-            depth = vocab_depth(self.store, epoch)
-            self._ds_cache[("vdepth", epoch)] = depth
+            depth = vocab_depth(self.store, snap.epoch)
+            self._cache.put((snap.epoch, "vdepth", None), depth)
         if max_dist > depth:
             raise ValueError(
                 f"max_dist={max_dist} exceeds the vocabulary sidecar's "
                 f"deletion-neighborhood depth {depth} — rebuild with "
                 f"vocab={max_dist} / build_vocab(depth={max_dist})")
-        n_buckets = int(self.manifest["n_buckets"])
-        base = self.store.vocab_dir_for(epoch)
-        variants = deletion_neighborhood(term, max(max_dist, 1))
         by_bucket: dict[int, list[str]] = {}
-        for v in variants:
-            b = bucket_of_term_id(term_id_for(v), n_buckets)
+        for v in deletion_neighborhood(term, max(max_dist, 1)):
+            b = bucket_of_term_id(term_id_for(v), snap.n_buckets)
             by_bucket.setdefault(b, []).append(v)
-        best: tuple | None = None
+        found: dict[str, tuple[int, int]] = {}
         for bkt, vs in by_bucket.items():
-            p = os.path.join(base, f"bucket={bkt}")
-            if not os.path.isdir(p):
-                continue
-            dataset = self._ds_cache.get(("voc", epoch, bkt))
+            dataset = self._dataset(snap, "vocab", bkt)
             if dataset is None:
-                dataset = ds.dataset(p, format="parquet")
-                self._ds_cache[("voc", epoch, bkt)] = dataset
+                continue
             tbl = dataset.to_table(filter=ds.field("variant").isin(vs),
                                    columns=["term", "df"])
             for cand, df_c in zip(tbl["term"].to_pylist(),
                                   tbl["df"].to_pylist()):
-                dist = levenshtein(term, cand)
-                if dist > max_dist:
-                    continue
-                key = (dist, -int(df_c), cand)
-                if best is None or key < best:
-                    best = key
-        return best[2] if best is not None else None
+                if cand not in found:
+                    dist = levenshtein(term, cand)
+                    if dist <= max_dist:
+                        found[cand] = (dist, int(df_c))
+        return found
+
+    def _correct_term(self, snap: Snapshot, term: str,
+                      max_dist: int = 1) -> str | None:
+        """Did-you-mean: the (distance, df DESC, term) best vocabulary
+        term within ``max_dist`` edits (see _vocab_matches), or None.
+        An in-vocab term returns itself (distance 0 always wins)."""
+        found = self._vocab_matches(snap, term, max_dist)
+        if not found:
+            return None
+        return min(found, key=lambda t: (found[t][0], -found[t][1], t))
 
     def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
         """Prefix autocomplete on the driver: top-k vocabulary terms
         starting with ``prefix``, by (df DESC, term) — pyarrow scan of
         the sidecar's identity rows, no Spark job. Needs vocab=True."""
-        if not self.store.has_vocab():
+        snap = self._snapshot()
+        if not self.store.has_vocab(snap.epoch):
             raise ValueError(
                 "suggest needs the vocabulary sidecar — build with"
                 " vocab=True / run build_vocab")
-        epoch = int(self.manifest["epoch"])
-        base = self.store.vocab_dir_for(epoch)
         matches: list[tuple[str, int]] = []
-        for name in sorted(os.listdir(base)):
+        for name in sorted(os.listdir(self.store.vocab_dir_for(snap.epoch))):
             if not name.startswith("bucket="):
                 continue
-            key = ("voc", epoch, int(name.split("=")[1]))
-            dataset = self._ds_cache.get(key)
-            if dataset is None:
-                dataset = ds.dataset(os.path.join(base, name),
-                                     format="parquet")
-                self._ds_cache[key] = dataset
+            dataset = self._dataset(snap, "vocab", int(name.split("=")[1]))
             tbl = dataset.to_table(
                 filter=((ds.field("variant") == ds.field("term"))
                         & (ds.field("term") >= prefix)
@@ -1107,17 +1120,16 @@ class BM25Engine:
         corrected terms run the normal BM25 path. Needs an index built
         with ``vocab=True``. ``max_dist`` is capped at the sidecar's
         deletion-neighborhood depth (1 for vocab=True, 2 for vocab=2 —
-        _correct_term raises above it)."""
-        if not self.store.has_vocab():
+        _vocab_matches raises above it)."""
+        snap = self._snapshot()
+        if not self.store.has_vocab(snap.epoch):
             raise ValueError(
                 "fuzzy_topk needs the vocabulary sidecar — build with"
                 " vocab=True / run build_vocab")
         terms = sorted(set(tokenize(query)))
         corrected = sorted({c for t in terms
-                            if (c := self._correct_term(t, max_dist))})
-        if not corrected:
-            return []
-        return self.topk(" ".join(corrected), k, method=method)
+                            if (c := self._correct_term(snap, t, max_dist))})
+        return self._topk(snap, corrected, k, method)
 
     def prefix_topk(self, prefix: str, k: int = 10,
                     max_expansions: int = 50,
@@ -1148,47 +1160,10 @@ class BM25Engine:
         (the Lucene FuzzyQuery expansion set — _correct_term keeps only
         the best ONE for did-you-mean), deterministic (df DESC, term)
         and capped at ``max_expansions`` like every MultiTermQuery
-        rewrite here. Same SymSpell deletion-variant join against the
-        vocab sidecar, driver-side pyarrow, no Spark job; ``max_dist``
-        is bounded by the sidecar's neighborhood depth exactly as in
-        _correct_term."""
-        from ..index.vocab import (deletion_neighborhood, levenshtein,
-                                   vocab_depth)
-
-        epoch = int(self.manifest["epoch"])
-        depth = self._ds_cache.get(("vdepth", epoch))
-        if depth is None:
-            depth = vocab_depth(self.store, epoch)
-            self._ds_cache[("vdepth", epoch)] = depth
-        if max_dist > depth:
-            raise ValueError(
-                f"max_dist={max_dist} exceeds the vocabulary sidecar's "
-                f"deletion-neighborhood depth {depth} — rebuild with "
-                f"vocab={max_dist} / build_vocab(depth={max_dist})")
-        n_buckets = int(self.manifest["n_buckets"])
-        base = self.store.vocab_dir_for(epoch)
-        variants = deletion_neighborhood(term, max(max_dist, 1))
-        by_bucket: dict[int, list[str]] = {}
-        for v in variants:
-            b = bucket_of_term_id(term_id_for(v), n_buckets)
-            by_bucket.setdefault(b, []).append(v)
-        found: dict[str, int] = {}
-        for bkt, vs in by_bucket.items():
-            p = os.path.join(base, f"bucket={bkt}")
-            if not os.path.isdir(p):
-                continue
-            dataset = self._ds_cache.get(("voc", epoch, bkt))
-            if dataset is None:
-                dataset = ds.dataset(p, format="parquet")
-                self._ds_cache[("voc", epoch, bkt)] = dataset
-            tbl = dataset.to_table(filter=ds.field("variant").isin(vs),
-                                   columns=["term", "df"])
-            for cand, df_c in zip(tbl["term"].to_pylist(),
-                                  tbl["df"].to_pylist()):
-                if cand not in found and levenshtein(term, cand) <= max_dist:
-                    found[cand] = int(df_c)
-        ordered = sorted(found.items(), key=lambda x: (-x[1], x[0]))
-        return [t for t, _ in ordered[:max_expansions]]
+        rewrite here. Same lookup as _correct_term (_vocab_matches),
+        bounded by the sidecar's neighborhood depth the same way."""
+        found = self._vocab_matches(self._snapshot(), term, max_dist)
+        return sorted(found, key=lambda t: (-found[t][1], t))[:max_expansions]
 
     # ------------------------------------------------- query string DSL
     def query_string_topk(self, query: str, k: int = 10, *,
@@ -1212,13 +1187,14 @@ class BM25Engine:
         score_query_batch, rank-identically (tests assert). The body
         is _query_string_hits — search(qs=True) runs the same code
         under the metadata-filter lifecycle."""
-        hits, _ = self._query_string_hits(query, k, max_expansions,
-                                          None, None, docs_df=docs_df)
+        hits, _ = self._query_string_hits(self._snapshot(), query, k,
+                                          max_expansions, None, None,
+                                          docs_df=docs_df)
         return hits
 
-    def _query_string_hits(self, qtext: str, k: int, max_expansions: int,
-                           cand_df: DataFrame | None, allowed,
-                           docs_df: DataFrame | None = None):
+    def _query_string_hits(self, snap: Snapshot, qtext: str, k: int,
+                           max_expansions: int, cand_df: DataFrame | None,
+                           allowed, docs_df: DataFrame | None = None):
         """query-string retrieval — the shared body of
         query_string_topk AND search(qs=True), under an OPTIONAL
         metadata-filter candidate restriction. ``cand_df`` (broad
@@ -1229,15 +1205,13 @@ class BM25Engine:
         source corpus for phrase match-then-verify (None = positional
         sidecar). Returns (hits, scoring_bag) — the bag feeds snippet
         highlighting."""
-        import numpy as np
-
         from . import qstring
         from .wand import vectorized_topk_arrays
 
         node = qstring.parse_query_string(qtext)
         node = qstring.expand_leaves(self, node, max_expansions)
         if (qstring.phrase_leaves(node) and docs_df is None
-                and not self.store.has_positions()):
+                and not self.store.has_positions(snap.epoch)):
             raise ValueError(
                 "phrase clauses need docs_df or the positional sidecar"
                 " — build with positions=True / run build_positions")
@@ -1248,7 +1222,7 @@ class BM25Engine:
         if allowed is not None and not len(allowed):
             return [], bag  # selective filter matched nothing
         if (cand_df is not None
-                or self._uncached_df_total(allt) > self.driver_df_budget):
+                or self._uncached_df_total(snap, allt) > self.driver_df_budget):
             self.driver_fallbacks += 1
             cands = qstring.accepted_docs_df(self.spark, self.store, node,
                                              docs_df)
@@ -1268,24 +1242,21 @@ class BM25Engine:
                   "boosts": bag}], k=k, candidates=cands)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()], bag
-        arrays = self._load_term_arrays(allt)
-        cand = self._eval_qstring_driver(node, arrays, docs_df)
+        arrays = self._load_term_arrays(snap, allt)
+        cand = self._eval_qstring_driver(snap, node, arrays, docs_df)
         if allowed is not None and len(cand):
             cand = np.intersect1d(cand, allowed, assume_unique=True)
         if not len(cand):
             return [], bag
         bag_arrays = {t: arrays[t] for t in bag if t in arrays}
         return vectorized_topk_arrays(bag_arrays, k=k, weights=bag,
-                                      candidates=cand,
-                                      **self._score_kw()), bag
+                                      candidates=cand, **snap.bm25), bag
 
-    def _eval_qstring_driver(self, node, arrays, docs_df):
+    def _eval_qstring_driver(self, snap: Snapshot, node, arrays, docs_df):
         """Candidate doc-id set of an (expanded) qstring tree on the
         driver: numpy set algebra over decoded postings, phrase leaves
         verified in full (positions sidecar or candidate-semi-joined
         corpus scan). Returns a sorted unique int64 array."""
-        import numpy as np
-
         from . import qstring
 
         empty = np.empty(0, dtype=np.int64)
@@ -1315,7 +1286,7 @@ class BM25Engine:
                     if not len(cand):
                         return empty
                 return self._phrase_verified_driver(
-                    n.terms, cand, n.slop, docs_df)
+                    snap, n.terms, cand, n.slop, docs_df)
             if isinstance(n, qstring.And):
                 pos = [c for c in n.children
                        if not isinstance(c, qstring.Not)]
@@ -1337,21 +1308,20 @@ class BM25Engine:
 
         return ev(node)
 
-    def _phrase_verified_driver(self, terms, cand, slop, docs_df):
+    def _phrase_verified_driver(self, snap: Snapshot, terms, cand, slop,
+                                docs_df):
         """FULL phrase verify of a conjunctive candidate array (set
         composition needs every survivor, unlike phrase_topk's lazy
         score-ordered verify): positions sidecar when ``docs_df`` is
         None, else the candidate-semi-joined corpus scan with the
         plan_barrier (phrase.py's r5 join-order rule). Returns a sorted
         unique int64 array."""
-        import numpy as np
-
-        from ..index.build import doc_id_expr
         from .phrase import (joined_tokens_expr, phrase_pattern,
                              plan_barrier)
 
         if docs_df is None:
-            ver = self._verify_positions_driver(terms, np.sort(cand), slop)
+            ver = self._verify_positions_driver(snap, terms, np.sort(cand),
+                                                slop)
             return np.unique(np.asarray(ver, dtype=np.int64))
         src = docs_df
         if "doc_id" not in src.columns:
@@ -1555,30 +1525,26 @@ class BM25Engine:
         from ..analysis import bm25_term_score, idf
 
         engine, qtext = self._route(query)
-        hits = self.topk(query, k)
+        terms = sorted(set(tokenize(qtext)))
+        snap = engine._snapshot()
+        hits = engine._topk(snap, terms, k, "vectorized")
         if not hits:
             return []
-        terms = sorted(set(tokenize(qtext)))
-        m = engine.manifest
-        n_docs, avgdl = int(m["n_docs"]), float(m["avgdl"])
-        k1, b = float(m["k1"]), float(m["b"])
 
         # (term -> doc -> (tf, dl)) for the hit docs only
         cells: dict[str, dict[int, tuple[int, int]]] = {}
         dfs: dict[str, int] = {}
         hit_ids = {int(d) for d, _ in hits}
-        if engine._uncached_df_total(terms) > engine.driver_df_budget:
+        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
-            rows = self._explain_cells_distributed(engine, terms, hit_ids)
+            rows = self._explain_cells_distributed(engine, snap, terms,
+                                                   hit_ids)
             for term, df_t, doc, tf, dl in rows:
                 dfs[term] = int(df_t)
                 cells.setdefault(term, {})[int(doc)] = (int(tf), int(dl))
         else:
-            import numpy as np
-
-            arrays = engine._load_term_arrays(terms)
-
-            for t, (df_t, docs, tfs, dls) in arrays.items():
+            for t, (df_t, docs, tfs, dls) in engine._load_term_arrays(
+                    snap, terms).items():
                 dfs[t] = int(df_t)
                 per = {}
                 for d in hit_ids:
@@ -1597,27 +1563,26 @@ class BM25Engine:
                 out.append({
                     "rank": rank, "doc_id": int(doc), "term": t,
                     "tf": tf, "dl": dl, "df": dfs[t],
-                    "idf": idf(n_docs, dfs[t]),
+                    "idf": idf(snap.n_docs, dfs[t]),
                     "contrib": bm25_term_score(
-                        tf, dl, avgdl, n_docs, dfs[t], k1, b),
+                        tf, dl, snap.avgdl, snap.n_docs, dfs[t], snap.k1,
+                        snap.b),
                     "score": float(score),
                 })
         return out
 
-    def _explain_cells_distributed(self, engine, terms, hit_ids):
+    def _explain_cells_distributed(self, engine, snap: Snapshot, terms,
+                                   hit_ids):
         """(term, df, doc_id, tf, dl) for hit docs via the pruned
         distributed decode — the budget-safe explain path."""
-        from ..analysis import term_id_for
         from .scoring import (decode_postings_map_in_pandas,
                               lookup_term_dfs, pruned_postings)
 
-        m = engine.manifest
-        n_buckets = int(m["n_buckets"])
         tid = {term_id_for(t): t for t in terms}
-        dfs = lookup_term_dfs(engine.store, sorted(tid), n_buckets,
-                              int(m["epoch"]))
+        dfs = lookup_term_dfs(engine.store, sorted(tid), snap.n_buckets,
+                              snap.epoch)
         dec = pruned_postings(self.spark, engine.store, sorted(dfs),
-                              n_buckets).mapInPandas(
+                              snap.n_buckets).mapInPandas(
             decode_postings_map_in_pandas,
             schema="term_id long, doc_id long, tf int, dl int")
         ids_df = self.spark.createDataFrame(
@@ -1663,11 +1628,11 @@ class BM25Engine:
         job over the bucketed vocab sidecar's identity rows (a full
         vocab scan is inherent: arbitrary regexes have no sort-order
         handle)."""
-        if not self.store.has_vocab():
+        epoch = int(self.manifest["epoch"])
+        if not self.store.has_vocab(epoch):
             raise ValueError(
                 f"{caller} needs the vocabulary sidecar — build "
                 "with vocab=True / run build_vocab")
-        epoch = int(self.manifest["epoch"])
         vdf = self.spark.read.parquet(self.store.vocab_dir_for(epoch))
         top = (vdf.where(F.col("variant") == F.col("term"))
                .where(F.col("term").rlike(regex))
@@ -1738,24 +1703,21 @@ class BM25Engine:
 
         Returns (doc_id, final) ordered by (round(final, 9) DESC,
         doc_id)."""
-        import numpy as np
-
         from ..index.positions import min_cover_span
 
         if window < k:
             raise ValueError("window must be >= k")
-        if not self.store.has_positions():
+        engine, qtext = self._route(query)
+        snap = engine._snapshot()
+        if not engine.store.has_positions(snap.epoch):
             raise ValueError(
                 "rescore_topk needs the positional sidecar — build "
                 "with positions=True / run build_positions")
-        engine, qtext = self._route(query)
         terms = sorted(set(tokenize(qtext)))
-        if not terms:
-            return []
-        base = self.topk(query, window)
+        base = engine._topk(snap, terms, window, "vectorized")
         if not base:
             return []
-        runs = {t: engine._load_positions_term(t) for t in terms}
+        runs = {t: engine._load_positions_term(snap, t) for t in terms}
         out = []
         for doc, score in base:
             pls = []
@@ -1809,13 +1771,12 @@ class BM25Engine:
         score_phrase_batch with positions.span_match as the verify,
         one pruned postings pass + the positional verify, no corpus
         access at all."""
-        import numpy as np
-
         from ..index.positions import span_match
 
         if slop < 0:
             raise ValueError("slop must be >= 0")
-        if not self.store.has_positions():
+        snap = self._snapshot()
+        if not self.store.has_positions(snap.epoch):
             raise ValueError(
                 "span_near_topk needs the positional sidecar — build"
                 " with positions=True / run build_positions")
@@ -1825,7 +1786,7 @@ class BM25Engine:
         terms = sorted(set(tokenize(qtext)))
         if len(terms) < 2:
             raise ValueError("span_near_topk needs >= 2 distinct terms")
-        if engine._uncached_df_total(terms) > engine.driver_df_budget:
+        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             from .phrase import score_phrase_batch
 
@@ -1835,7 +1796,7 @@ class BM25Engine:
                 match_fn=span_match)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
-        arrays = engine._load_term_arrays(terms)
+        arrays = engine._load_term_arrays(snap, terms)
         if len(arrays) < len(terms):
             return []  # some term has no postings at all
         by_rarity = sorted(terms, key=lambda t: len(arrays[t][1]))
@@ -1852,11 +1813,10 @@ class BM25Engine:
         # verifying them all made the bench leg 1.5 s/query.
         from .wand import accumulate_scores
 
-        uniqc, sc = accumulate_scores(arrays, candidates=cand,
-                                      **engine._score_kw())
+        uniqc, sc = accumulate_scores(arrays, candidates=cand, **snap.bm25)
         order = np.lexsort((uniqc, -np.round(sc, 9)))
         rd, rs = uniqc[order], sc[order]
-        runs = {t: engine._load_positions_term(t) for t in terms}
+        runs = {t: engine._load_positions_term(snap, t) for t in terms}
         if any(runs.get(t) is None for t in terms):
             return []
         out: list[tuple[int, float]] = []
@@ -1890,8 +1850,6 @@ class BM25Engine:
         Budget-gated like topk(): over-budget queries run the
         distributed score_synonym_batch plan with identical ranking
         (scores equal to 1e-9; doc order exact)."""
-        import numpy as np
-
         from .scoring import score_synonym_batch
         from .wand import vectorized_topk_arrays
 
@@ -1905,14 +1863,15 @@ class BM25Engine:
         all_terms = sorted({t for ms in groups.values() for t in ms})
         if not all_terms:
             return []
-        if engine._uncached_df_total(all_terms) > engine.driver_df_budget:
+        snap = engine._snapshot()
+        if engine._uncached_df_total(snap, all_terms) > engine.driver_df_budget:
             engine.driver_fallbacks += 1
             res = score_synonym_batch(
                 self.spark, engine.store,
                 [{"query_id": 0, "groups": groups}], k=k)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
-        arrays = engine._load_term_arrays(all_terms)
+        arrays = engine._load_term_arrays(snap, all_terms)
         blended: dict[str, tuple] = {}
         for gkey, members in groups.items():
             present = [t for t in members if t in arrays and len(arrays[t][1])]
@@ -1933,7 +1892,7 @@ class BM25Engine:
             blended[gkey] = (df_g, docs, tfs, dls)
         if not blended:
             return []
-        return vectorized_topk_arrays(blended, k=k, **engine._score_kw())
+        return vectorized_topk_arrays(blended, k=k, **snap.bm25)
 
     # ------------------------------------------------------------- delete
     def delete_urls(self, urls: list[str]) -> int:

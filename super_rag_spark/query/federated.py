@@ -12,8 +12,9 @@ union (asserted in tests). Shards must partition the doc space
 (disjoint urls): a doc indexed in two shards would sum its own
 contributions twice.
 
-Driver path: per-shard decoded postings (each shard's LRU caches work
-unchanged) concatenated per term, scored once with the global stats.
+Driver path: one snapshot per shard, per-shard decoded postings (each
+shard's cache works unchanged) concatenated per term, scored once with
+the global stats.
 Distributed path (score_federated_batch): per-shard pruned postings
 scans UNION into one decode -> broadcast-join -> aggregate plan — the
 same ONE-shuffle shape as scoring.score_query_batch, with the shard
@@ -60,18 +61,14 @@ class FederatedEngine:
     def global_stats(self) -> tuple[int, float]:
         """(n_docs, avgdl) over all shards: counts sum; avgdl is the
         token-weighted mean (sum of dl sums / sum of doc counts)."""
-        n = tot = 0
-        for s in self.shards:
-            m = s.manifest
-            n += int(m["n_docs"])
-            tot += int(round(float(m["avgdl"]) * int(m["n_docs"])))
-        return n, (tot / n if n else 0.0)
+        return _global_stats([s.manifest for s in self.shards])
 
     # ---------------------------------------------------------- driver
     def topk(self, query: str, k: int = 10) -> list[tuple[int, float]]:
         """Driver fast path: per-shard decoded arrays merged per term,
-        scored ONCE with global (n_docs, avgdl, summed df). Each
-        shard's own decode LRU serves repeats. Budget: the per-shard
+        scored ONCE with global (n_docs, avgdl, summed df), all from one
+        snapshot per shard. Each shard's own cache serves repeats.
+        Budget: the per-shard
         uncached-df gate applies per shard — if ANY shard's terms
         exceed its driver budget, the whole query routes to the
         distributed plan."""
@@ -82,16 +79,18 @@ class FederatedEngine:
         terms = sorted(set(tokenize(query)))
         if not terms:
             return []
-        if any(s._uncached_df_total(terms) > s.driver_df_budget
-               for s in self.shards):
+        snaps = [s._snapshot() for s in self.shards]
+        if any(s._uncached_df_total(snap, terms) > s.driver_df_budget
+               for s, snap in zip(self.shards, snaps)):
             res = score_federated_batch(
                 self.spark, self.shards, [{"query_id": 0, "text": query}],
                 k=k)
             return [(int(r["doc_id"]), float(r["score"]))
                     for r in res.orderBy("rank").collect()]
         merged: dict[str, list] = {}
-        for s in self.shards:
-            for t, (df_t, docs, tfs, dls) in s._load_term_arrays(terms).items():
+        for s, snap in zip(self.shards, snaps):
+            for t, (df_t, docs, tfs, dls) in s._load_term_arrays(
+                    snap, terms).items():
                 merged.setdefault(t, [0, [], [], []])
                 merged[t][0] += int(df_t)
                 merged[t][1].append(docs)
@@ -103,14 +102,21 @@ class FederatedEngine:
             t: (df_t, np.concatenate(d), np.concatenate(tf),
                 np.concatenate(dl))
             for t, (df_t, d, tf, dl) in merged.items()}
-        n_docs, avgdl = self.global_stats()
-        m = self.shards[0].manifest
+        n_docs, avgdl = _global_stats([snap.manifest for snap in snaps])
         # shards partition the doc space: their pending deletes union
-        deleted = np.unique(np.concatenate(
-            [s._tombstone_set() for s in self.shards]))
+        deleted = np.unique(np.concatenate([snap.deleted for snap in snaps]))
         return vectorized_topk_arrays(
             term_arrays, n_docs, avgdl, k,
-            k1=float(m["k1"]), b=float(m["b"]), deleted=deleted)
+            k1=snaps[0].k1, b=snaps[0].b, deleted=deleted)
+
+
+def _global_stats(manifests: list[dict]) -> tuple[int, float]:
+    """(n_docs, avgdl) over the shards' manifests (see global_stats)."""
+    n = tot = 0
+    for m in manifests:
+        n += int(m["n_docs"])
+        tot += int(round(float(m["avgdl"]) * int(m["n_docs"])))
+    return n, (tot / n if n else 0.0)
 
 
 def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
@@ -121,12 +127,9 @@ def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
     fan-out in the scan layer and GLOBAL df on the broadcast side."""
     from .scoring import analyze_queries
 
-    head = shards[0].manifest
-    k1, b = float(head["k1"]), float(head["b"])
-    n_docs = sum(int(s.manifest["n_docs"]) for s in shards)
-    tot = sum(int(round(float(s.manifest["avgdl"])
-                        * int(s.manifest["n_docs"]))) for s in shards)
-    avgdl = tot / n_docs if n_docs else 0.0
+    manifests = [s.manifest for s in shards]
+    k1, b = float(manifests[0]["k1"]), float(manifests[0]["b"])
+    n_docs, avgdl = _global_stats(manifests)
 
     out_schema = "query_id int, rank int, doc_id long, score double"
     qterms_pdf = analyze_queries(queries)
@@ -136,8 +139,7 @@ def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
 
     # global df: per-shard term_stats metadata reads, summed
     gdf: dict[int, int] = {}
-    for s in shards:
-        m = s.manifest
+    for s, m in zip(shards, manifests):
         for tid, d in lookup_term_dfs(
                 s.store, term_ids, int(m["n_buckets"]),
                 int(m["epoch"])).items():
@@ -149,10 +151,10 @@ def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
     term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
 
     decoded = None
-    for s in shards:
+    for s, m in zip(shards, manifests):
         part = pruned_postings(
             spark, s.store, term_ids,
-            int(s.manifest["n_buckets"])).mapInPandas(
+            int(m["n_buckets"])).mapInPandas(
                 decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
         tomb = s.store.tombstones(spark)
         if tomb is not None:

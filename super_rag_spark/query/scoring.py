@@ -497,9 +497,10 @@ _BLK_COLS = ["term_id", "seg", "n", "first_doc_id", "last_doc_id",
 def _read_blocks_by_tid(pdir: str, n_buckets: int,
                         term_ids: list[int]) -> dict[int, list[dict]]:
     """Pruned pyarrow read of the given terms' block rows, grouped by
-    term_id — the same bucket-dir + row-group pruning the driver path
-    uses (engine._load_term_blocks), shared by the direct-read WAND
-    batch plan (driver-broadcast and per-partition variants)."""
+    term_id — the bucket-dir pruning and term_id filter of the driver
+    path (BM25Engine._load_term_blocks) without its per-epoch cache,
+    shared by the direct-read WAND batch plan (driver-broadcast and
+    per-partition variants)."""
     import os
 
     import pyarrow.dataset as pads

@@ -140,9 +140,7 @@ def test_explain_distributed_equals_driver(rich_engine):
     rich_engine.driver_df_budget = 0
     # LRU-cached terms cost 0 against the budget by design — clear so
     # the fallback actually triggers (memory: lesson 34)
-    rich_engine._dec_cache.clear()
-    rich_engine._term_cache.clear()
-    rich_engine._dec_used = 0
+    rich_engine._cache.clear()
     try:
         dist = rich_engine.explain_topk("common storm", k=5)
     finally:

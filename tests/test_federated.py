@@ -66,9 +66,7 @@ def test_federated_budget_fallback_matches(spark, sharded):
     want = fed.topk(q, k=10)
     for s in fed.shards:
         s.driver_df_budget = 0
-        s._dec_cache.clear()
-        s._term_cache.clear()
-        s._dec_used = 0
+        s._cache.clear()
     got = fed.topk(q, k=10)
     assert [d for d, _ in got] == [d for d, _ in want]
 

@@ -70,18 +70,19 @@ def fuzzy_engine(spark, tmp_path_factory):
 
 def test_fuzzy_correction_semantics(spark, fuzzy_engine):
     eng = fuzzy_engine
+    snap = eng._snapshot()
     # in-vocab term passes through (distance 0 wins)
-    assert eng._correct_term("alpha") == "alpha"
+    assert eng._correct_term(snap, "alpha") == "alpha"
     # one-edit typos correct: substitution, deletion, insertion
-    assert eng._correct_term("alpja") == "alpha"
-    assert eng._correct_term("alph") == "alpha"
-    assert eng._correct_term("alphaa") == "alpha"
+    assert eng._correct_term(snap, "alpja") == "alpha"
+    assert eng._correct_term(snap, "alph") == "alpha"
+    assert eng._correct_term(snap, "alphaa") == "alpha"
     # hopeless strings return None
-    assert eng._correct_term("zzzzzzz") is None
+    assert eng._correct_term(snap, "zzzzzzz") is None
     # tie-break: higher-df term wins at equal distance ('common' occurs
     # in every doc; craft a typo equidistant to two vocab terms)
     # 'gamm' -> gamma (dist 1); 'bet' vs 'beta'... use explicit check:
-    assert eng._correct_term("gamm") == "gamma"
+    assert eng._correct_term(snap, "gamm") == "gamma"
 
     # fuzzy_topk == exact topk on the corrected text
     exact = eng.topk("alpha beta", k=10)
@@ -97,8 +98,9 @@ def test_fuzzy_driver_equals_distributed(spark, fuzzy_engine):
     terms = ["alpha", "alpja", "gamm", "commn", "zzzzzzz", "padd1"]
     dist = {r["qterm"]: r["term"] for r in
             correct_terms_batch(spark, fuzzy_engine.store, terms).collect()}
+    snap = fuzzy_engine._snapshot()
     for t in terms:
-        assert dist.get(t) == fuzzy_engine._correct_term(t), t
+        assert dist.get(t) == fuzzy_engine._correct_term(snap, t), t
 
 
 def test_fuzzy_requires_vocab_sidecar(spark, tmp_path):
@@ -185,12 +187,14 @@ def test_fuzzy2_corrects_distance2(spark, fuzzy2_engine):
     from super_rag_spark.index.vocab import vocab_depth
 
     assert vocab_depth(fuzzy2_engine.store, 0) == 2
+    snap = fuzzy2_engine._snapshot()
     # two substitutions / two deletions / two insertions
-    assert fuzzy2_engine._correct_term("olphq", max_dist=2) == "alpha"
-    assert fuzzy2_engine._correct_term("gam", max_dist=2) == "gamma"
-    assert fuzzy2_engine._correct_term("commonxy", max_dist=2) == "common"
+    assert fuzzy2_engine._correct_term(snap, "olphq", max_dist=2) == "alpha"
+    assert fuzzy2_engine._correct_term(snap, "gam", max_dist=2) == "gamma"
+    assert fuzzy2_engine._correct_term(snap, "commonxy",
+                                       max_dist=2) == "common"
     # distance-3 stays out of reach
-    assert fuzzy2_engine._correct_term("xxxxha", max_dist=2) is None
+    assert fuzzy2_engine._correct_term(snap, "xxxxha", max_dist=2) is None
     # d2 typo query retrieves like the corrected query
     assert fuzzy2_engine.fuzzy_topk("olphq commn", k=5, max_dist=2) == \
         fuzzy2_engine.topk("alpha common", k=5)
@@ -198,7 +202,8 @@ def test_fuzzy2_corrects_distance2(spark, fuzzy2_engine):
 
 def test_fuzzy_depth1_rejects_max_dist2(fuzzy_engine):
     with pytest.raises(ValueError):
-        fuzzy_engine._correct_term("olphq", max_dist=2)
+        fuzzy_engine._correct_term(fuzzy_engine._snapshot(), "olphq",
+                                   max_dist=2)
     with pytest.raises(ValueError):
         fuzzy_engine.fuzzy_topk("alpha", max_dist=2)
 
@@ -210,8 +215,10 @@ def test_fuzzy2_distributed_equals_driver(spark, fuzzy2_engine):
     dist = {r["qterm"]: r["term"] for r in
             correct_terms_batch(spark, fuzzy2_engine.store, terms,
                                 max_dist=2).collect()}
+    snap = fuzzy2_engine._snapshot()
     for t in terms:
-        assert dist.get(t) == fuzzy2_engine._correct_term(t, max_dist=2), t
+        assert dist.get(t) == fuzzy2_engine._correct_term(
+            snap, t, max_dist=2), t
 
 
 def test_fuzzy2_depth_survives_merge(spark, fuzzy2_engine):
@@ -224,5 +231,5 @@ def test_fuzzy2_depth_survives_merge(spark, fuzzy2_engine):
     merge_append(spark, fuzzy2_engine.store.root, delta, mode="segment")
     epoch = fuzzy2_engine.store.epoch()
     assert vocab_depth(fuzzy2_engine.store, epoch) == 2
-    fuzzy2_engine._manifest = None  # re-read the bumped epoch
-    assert fuzzy2_engine._correct_term("omga", max_dist=2) == "omega"
+    assert fuzzy2_engine._correct_term(
+        fuzzy2_engine._snapshot(), "omga", max_dist=2) == "omega"

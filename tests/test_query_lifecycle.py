@@ -100,7 +100,9 @@ def test_filter_dsl_shapes(spark):
     assert got == {1, 2}
 
 
-def test_summary_index_routing(spark, webtext_sf0001_path, tmp_path):
+def test_summary_index_routing(spark, webtext_sf0001_path, tmp_path,
+                               monkeypatch):
+    from super_rag_spark import codec
     from super_rag_spark.query.engine import BM25Engine
     from super_rag_spark.summary import build_summary_index
 
@@ -115,6 +117,13 @@ def test_summary_index_routing(spark, webtext_sf0001_path, tmp_path):
     assert sum_hits  # routed to the summary index and found docs
     # summary corpus has different stats -> scores must differ from main
     assert sum_hits != main_hits
+    # the summary engine is kept, so a repeat is served from its cache
+    decodes = []
+    decode = codec.decode_blocks_batch
+    monkeypatch.setattr(codec, "decode_blocks_batch",
+                        lambda blocks: decodes.append(1) or decode(blocks))
+    assert eng.topk("summarize " + q, 10) == sum_hits
+    assert not decodes
 
     # without a summary index the keyword is stripped and main serves it
     eng2 = BM25Engine(spark, str(tmp_path / "nosum")).build(docs, n_buckets=8)

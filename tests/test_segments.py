@@ -409,12 +409,13 @@ def test_epoch_switch_cache_warmup(spark, corpus, tmp_path):
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "wu")).build(mk(rows[:200]), **CFG)
     eng.topk("semudo muro", 10)  # hot terms at epoch 0
-    assert any(e == 0 for e, _ in eng._dec_cache)
+    assert any(e == 0 and kind == "dec" for e, kind, _ in eng._cache)
 
     merge_append(spark, eng.store.root, mk(rows[200:260]), mode="segment")
     assert eng.manifest["epoch"] == 1  # staleness detection + warm-up
-    assert eng._dec_cache and all(e == 1 for e, _ in eng._dec_cache)
-    assert {"semudo", "muro"} <= {t for _, t in eng._dec_cache}
+    assert list(eng._cache) and all(e == 1 for e, _, _ in eng._cache)
+    assert {"semudo", "muro"} <= {t for _, kind, t in eng._cache
+                                  if kind == "dec"}
 
     fresh = BM25Engine(spark, eng.store.root)
     assert _r9(eng.topk("semudo muro", 10)) == _r9(fresh.topk("semudo muro", 10))

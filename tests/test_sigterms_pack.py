@@ -194,9 +194,7 @@ def test_synonym_topk_distributed_equals_driver(st_engine):
     n0 = eng.driver_fallbacks
     old = eng.driver_df_budget
     eng.driver_df_budget = 0
-    eng._dec_cache.clear()
-    eng._term_cache.clear()
-    eng._dec_used = 0
+    eng._cache.clear()
     try:
         dist = eng.synonym_topk("common companion", syn, k=10)
     finally:

@@ -96,9 +96,7 @@ def test_weighted_budget_fallback(built_index):
         built_index.driver_df_budget = 0
         # cached terms are free on the driver (by design the budget
         # only counts UNCACHED df) — clear to force the fallback
-        built_index._dec_cache.clear()
-        built_index._term_cache.clear()
-        built_index._dec_used = 0
+        built_index._cache.clear()
         fb0 = built_index.driver_fallbacks
         low = built_index.weighted_topk("semudo^2 muro^0.5", k=10, msm=2)
         assert built_index.driver_fallbacks == fb0 + 1
@@ -134,7 +132,7 @@ def test_mlt_excludes_source_and_selects_by_tfidf(spark, built_index,
     assert src_id not in {d for d, _ in hits}
     # selection rule is transparent: top-10 terms by (tf*idf DESC, term)
     tf = Counter(tokenize(src["text"]))
-    dfs = built_index._term_dfs(sorted(tf))
+    dfs = built_index._term_dfs(built_index._snapshot(), sorted(tf))
     n = int(built_index.manifest["n_docs"])
     sel = [t for t, _ in sorted(
         ((t, tf[t] * idf(n, dfs[t])) for t in tf if dfs.get(t, 0) > 0),
@@ -189,9 +187,7 @@ def test_search_after_distributed_fallback(built_index):
     old = built_index.driver_df_budget
     try:
         built_index.driver_df_budget = 0
-        built_index._dec_cache.clear()
-        built_index._term_cache.clear()
-        built_index._dec_used = 0
+        built_index._cache.clear()
         got = built_index.topk_after(q, k=10, after=cursor)
     finally:
         built_index.driver_df_budget = old
