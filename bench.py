@@ -283,7 +283,7 @@ def main() -> int:
                          "text"))
         n_delta = delta.count()
         t0 = time.time()
-        merge_append(spark, idx_dir, delta, mode="segment")
+        merge_append(spark, idx_dir, delta)
         comp["append_delta"] = round(time.time() - t0, 3)
         extra["append_n_docs"] = n_delta
         extra["append_frac_of_build"] = round(comp["append_delta"] / comp["build_sf"], 3)
@@ -295,7 +295,7 @@ def main() -> int:
                           "text"))
         delta4.count()
         t0 = time.time()
-        merge_append(spark, idx_dir, delta4, mode="segment")
+        merge_append(spark, idx_dir, delta4)
         comp["append_delta_4x"] = round(time.time() - t0, 3)
 
         # SAME engine across the epoch switch: staleness detection drops
@@ -328,7 +328,7 @@ def main() -> int:
                            "text"))
         delta_s.count()
         t0 = time.time()
-        merge_append(spark, idx_dir, delta_s, mode="segment")
+        merge_append(spark, idx_dir, delta_s)
         comp["append_delta_sidecars"] = round(time.time() - t0, 3)
         extra["sidecars_survive_append"] = bool(
             eng.store.has_positions() and eng.store.has_vocab())

@@ -5,10 +5,8 @@ The reference exposes ingest / delete as HTTP endpoints
 (/root/reference/api/ingest.py:15-62, /root/reference/api/delete.py:11-31);
 this CLI is the batch-job analog over the same index:
 
-  # append / upsert a delta (Lucene-style segment: O(delta), default)
+  # append / upsert a delta (a Lucene-style segment: O(delta))
   spark-submit scripts/ingest.py append --index IDX --input delta.parquet
-  # same, rebuilding every touched term group (bit-identical layout)
-  spark-submit scripts/ingest.py append --index IDX --input delta.parquet --mode rebuild
   # tombstone documents by url (postings cleaned at the next merge/compact)
   spark-submit scripts/ingest.py delete --index IDX --url https://a --url https://b
   # fold all segments back to seg=0 + GC tombstones (compaction cadence)
@@ -126,7 +124,6 @@ def main() -> int:
     p_app.add_argument("--input", required=True, help="delta parquet (url, text|html)")
     p_app.add_argument("--from-html", action="store_true")
     p_app.add_argument("--extract-mode", choices=["html", "any"], default="html")
-    p_app.add_argument("--mode", choices=["segment", "rebuild"], default="segment")
     p_app.add_argument("--master", default=None)
 
     p_del = sub.add_parser("delete", help="tombstone documents by url")
@@ -204,9 +201,9 @@ def main() -> int:
             store = merge_append(
                 spark, args.index, delta.select(*cols),
                 text_is_extracted=not args.from_html,
-                extract_mode=args.extract_mode, mode=args.mode)
+                extract_mode=args.extract_mode)
             m = store.read_manifest()
-            print(json.dumps({"event": "appended", "mode": args.mode,
+            print(json.dumps({"event": "appended",
                               "epoch": m["epoch"], "n_docs": m["n_docs"],
                               "elapsed_sec": round(time.time() - t0, 3)}))
         elif args.cmd == "delete":

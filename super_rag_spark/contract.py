@@ -2014,8 +2014,7 @@ def index_segment_topk(spark, sf_dir):
         eng = BM25Engine(spark, idx_dir)
         eng.build(docs.where(F.col("tid") % 10 < 9).drop("tid"),
                   n_buckets=8, salt_df_threshold=200)
-        merge_append(spark, idx_dir, docs.where(F.col("tid") % 10 == 9).drop("tid"),
-                     mode="segment")
+        merge_append(spark, idx_dir, docs.where(F.col("tid") % 10 == 9).drop("tid"))
         eng = BM25Engine(spark, idx_dir)
         _INDEX_CACHE[ckey] = eng
     qid, qtext = BM25_QUERIES[3]
@@ -2220,10 +2219,8 @@ def index_tiered_topk(spark, sf_dir):
         eng = BM25Engine(spark, idx_dir)
         eng.build(docs.where(F.col("tid") % 10 < 8).drop("tid"),
                   n_buckets=8, salt_df_threshold=200)
-        merge_append(spark, idx_dir, docs.where(F.col("tid") % 10 == 8).drop("tid"),
-                     mode="segment")
-        merge_append(spark, idx_dir, docs.where(F.col("tid") % 10 == 9).drop("tid"),
-                     mode="segment")
+        merge_append(spark, idx_dir, docs.where(F.col("tid") % 10 == 8).drop("tid"))
+        merge_append(spark, idx_dir, docs.where(F.col("tid") % 10 == 9).drop("tid"))
         compact_tail(spark, idx_dir)
         eng = BM25Engine(spark, idx_dir)
         assert int(eng.manifest["n_segments"]) == 2

@@ -742,6 +742,11 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
         if not staging:
             write_term_stats_and_lineage(spark, store, phase="build",
                                          epoch=0)
+    # every bucket gets a dir, empty ones too: merges and compactions
+    # read a missing bucket dir as lost data and refuse to go on
+    for d in [postings_dir] + ([] if staging else [store.term_stats_dir_for(0)]):
+        for bkt in range(n_buckets):
+            os.makedirs(os.path.join(d, f"bucket={bkt}"), exist_ok=True)
 
     store.write_manifest({
         "engine": "super_rag_spark", "version": 5,  # 4 = +seg column; 5 = xxhash64 term ids

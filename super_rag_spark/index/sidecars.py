@@ -78,6 +78,21 @@ def _link_files(src_dir: str, dst_dir: str, prefix: str = "") -> None:
             shutil.copy2(os.path.join(src_dir, fn), target)
 
 
+def _hardlink_tree(src: str, dst: str) -> None:
+    """Mirror a directory via hardlinks (fall back to copy across
+    filesystems). Idempotent: an existing dst is kept as-is."""
+    if os.path.exists(dst):
+        return
+    tmp = dst + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        shutil.copytree(src, tmp, copy_function=os.link)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.copytree(src, tmp)
+    os.replace(tmp, dst)
+
+
 def build_staging_sidecars(spark: SparkSession, store: IndexStorage,
                            sstore: IndexStorage,
                            new_docs_df: DataFrame | None, *,
@@ -120,7 +135,7 @@ def carry_sidecars_merge(spark: SparkSession, store: IndexStorage,
     _carry_positions(spark, store, sstore, old_epoch, epoch,
                      removed_small, bulk_removal)
     _carry_vocab(spark, store, sstore, old_epoch, epoch,
-                 removed_small, bulk_removal, removal_hits_df)
+                 removed_small, removal_hits_df)
 
 
 def _carry_positions(spark: SparkSession, store: IndexStorage,
@@ -131,13 +146,7 @@ def _carry_positions(spark: SparkSession, store: IndexStorage,
         return
     if not sstore.has_positions(0):
         return  # degradation contract (module docstring)
-    from .positions import (DECODED_POSITIONS_SCHEMA,
-                            _make_positions_builder,
-                            decode_positions_map_in_pandas)
-
-    manifest = store.read_manifest()
-    n_buckets = int(manifest["n_buckets"])
-    block_size = int(manifest["block_size"])
+    n_buckets = int(store.read_manifest()["n_buckets"])
     old_dir = store.positions_dir_for(old_epoch)
     new_dir = store.positions_dir_for(epoch)
     os.makedirs(new_dir, exist_ok=True)
@@ -165,29 +174,14 @@ def _carry_positions(spark: SparkSession, store: IndexStorage,
     if hit_buckets:
         old_pos = (spark.read.schema(POSITIONS_SCHEMA).parquet(old_dir)
                    .where(F.col("bucket").isin(sorted(hit_buckets))))
-        if bulk_removal:
-            keep = None
-            dec = old_pos.drop("bucket").mapInPandas(
-                decode_positions_map_in_pandas,
-                schema=DECODED_POSITIONS_SCHEMA)
-        else:
+        keep = None
+        if hits is not None:
             ht = hits.select("term_id").distinct()
             keep = old_pos.join(ht, "term_id", "left_anti")
-            dec = (old_pos.join(ht, "term_id", "left_semi")
-                   .drop("bucket")
-                   .mapInPandas(decode_positions_map_in_pandas,
-                                schema=DECODED_POSITIONS_SCHEMA))
-        if removed_small is not None:
-            dec = dec.join(removed_small, "doc_id", "left_anti")
-        rebuilt = (
-            dec.withColumn("bucket_p", F.pmod(
-                F.col("term_id"), F.lit(n_buckets)).cast("int"))
-            .repartition(n_buckets, "bucket_p")
-            .sortWithinPartitions("term_id", "doc_id")
-            .select("term_id", "doc_id", "positions")
-            .mapInPandas(_make_positions_builder(block_size, n_buckets),
-                         schema=POSITIONS_SCHEMA))
-        out = rebuilt if keep is None else keep.unionByName(rebuilt)
+            old_pos = old_pos.join(ht, "term_id", "left_semi")
+        out = _rebuild_positions(store, old_pos, removed_small)
+        if keep is not None:
+            out = keep.unionByName(out)
         (out.repartition("bucket")
          .sortWithinPartitions("term_id", "block_id")
          .write.mode("overwrite")
@@ -213,53 +207,90 @@ def _carry_positions(spark: SparkSession, store: IndexStorage,
         hits.unpersist()
 
 
+def _rebuild_positions(store: IndexStorage, blocks: DataFrame,
+                       removed: DataFrame | None) -> DataFrame:
+    """Decode position ``blocks``, drop ``removed`` doc_ids and re-block
+    the rest canonically (the build's bucketing, sort and blocking)."""
+    from .positions import (DECODED_POSITIONS_SCHEMA, _make_positions_builder,
+                            decode_positions_map_in_pandas)
+
+    manifest = store.read_manifest()
+    n_buckets = int(manifest["n_buckets"])
+    dec = (blocks.drop("bucket")
+           .mapInPandas(decode_positions_map_in_pandas,
+                        schema=DECODED_POSITIONS_SCHEMA))
+    if removed is not None:
+        dec = dec.join(removed, "doc_id", "left_anti")
+    return (dec.withColumn("bucket_p", F.pmod(
+                F.col("term_id"), F.lit(n_buckets)).cast("int"))
+            .repartition(n_buckets, "bucket_p")
+            .sortWithinPartitions("term_id", "doc_id")
+            .select("term_id", "doc_id", "positions")
+            .mapInPandas(_make_positions_builder(int(manifest["block_size"]),
+                                                 n_buckets),
+                         schema=POSITIONS_SCHEMA))
+
+
 def _carry_vocab(spark: SparkSession, store: IndexStorage,
                  sstore: IndexStorage, old_epoch: int, epoch: int,
-                 removed_small: DataFrame | None, bulk_removal: bool,
+                 removed_small: DataFrame | None,
                  removal_hits_df: DataFrame | None) -> None:
     if not store.has_vocab(old_epoch):
         return
     if not sstore.has_vocab(0):
         return  # degradation contract (module docstring)
+    blocks = None
+    if removed_small is not None:
+        # the removed docs' postings: ONLY the removal-hit groups (all
+        # of them under a bulk delete, whose change is O(index) anyway)
+        blocks = store.postings(spark, old_epoch)
+        if removal_hits_df is not None:
+            blocks = blocks.join(removal_hits_df, ["bucket", "term_id"],
+                                 "left_semi")
+    _fold_vocab(spark, store, old_epoch, epoch,
+                gains_dir=sstore.vocab_dir_for(0),
+                removed=removed_small, removed_blocks=blocks)
+
+
+def _fold_vocab(spark: SparkSession, store: IndexStorage, old_epoch: int,
+                epoch: int, *, gains_dir: str | None,
+                removed: DataFrame | None,
+                removed_blocks: DataFrame | None) -> None:
+    """df_new = df_old + df_gains - df_lost over the vocab identity rows,
+    then regenerate the variant table. df_lost counts each ``removed``
+    doc once per term by decoding ``removed_blocks`` (postings blocks
+    that may hold a removed doc); ``gains_dir``: a staging vocab whose
+    identity rows add their df."""
     from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_pandas
     from .build import term_id_expr
-    from .vocab import VOCAB_SCHEMA, write_vocab_table
+    from .vocab import VOCAB_SCHEMA, vocab_depth, write_vocab_table
 
-    n_buckets = int(store.read_manifest()["n_buckets"])
-    old_id = (spark.read.schema(VOCAB_SCHEMA)
-              .parquet(store.vocab_dir_for(old_epoch))
-              .where(F.col("variant") == F.col("term"))
-              .select("term", "df"))
-    gains = (spark.read.schema(VOCAB_SCHEMA)
-             .parquet(sstore.vocab_dir_for(0))
-             .where(F.col("variant") == F.col("term"))
-             .select("term", "df"))
-    parts = old_id.unionByName(gains)
-    if removed_small is not None:
-        # df loss per term: decode ONLY the removal-hit postings groups
-        # (or everything under a bulk delete, whose logical change is
-        # O(index) anyway) and count each removed doc once per term
-        blocks = store.postings(spark, old_epoch)
-        if not bulk_removal and removal_hits_df is not None:
-            blocks = blocks.join(removal_hits_df,
-                                 ["bucket", "term_id"], "left_semi")
-        dec = (blocks.drop("bucket")
-               .mapInPandas(decode_postings_map_in_pandas,
-                            schema=DECODED_SCHEMA))
-        loss = (dec.join(removed_small, "doc_id", "left_semi")
+    def identity_rows(vocab_dir: str) -> DataFrame:
+        return (spark.read.schema(VOCAB_SCHEMA).parquet(vocab_dir)
+                .where(F.col("variant") == F.col("term"))
+                .select("term", "df"))
+
+    old_id = identity_rows(store.vocab_dir_for(old_epoch))
+    parts = old_id
+    if gains_dir is not None:
+        parts = parts.unionByName(identity_rows(gains_dir))
+    if removed is not None:
+        loss = (removed_blocks.drop("bucket")
+                .mapInPandas(decode_postings_map_in_pandas,
+                             schema=DECODED_SCHEMA)
+                .join(removed, "doc_id", "left_semi")
                 .groupBy("term_id")
                 .agg(F.count(F.lit(1)).alias("n_lost")))
         # term_id is a hash — recover the string through the old vocab's
         # identity rows (every indexed term has one)
-        loss_terms = (old_id.withColumn("term_id", term_id_expr("term"))
-                      .join(loss, "term_id")
-                      .select("term", (-F.col("n_lost")).alias("df")))
-        parts = parts.unionByName(loss_terms)
+        parts = parts.unionByName(
+            old_id.withColumn("term_id", term_id_expr("term"))
+            .join(loss, "term_id")
+            .select("term", (-F.col("n_lost")).alias("df")))
     merged = (parts.groupBy("term").agg(F.sum("df").alias("df"))
               .where(F.col("df") > 0))
-    from .vocab import vocab_depth
-
-    write_vocab_table(merged, store, epoch, n_buckets,
+    write_vocab_table(merged, store, epoch,
+                      int(store.read_manifest()["n_buckets"]),
                       depth=vocab_depth(store, old_epoch))
 
 
@@ -272,82 +303,36 @@ def carry_sidecars_compact(spark: SparkSession, store: IndexStorage, *,
     with compact's O(index) contract. Vocab hardlinks through when no
     tombstones are pending, else folds the df losses exactly like the
     merge path."""
-    from .merge import _hardlink_tree
-
     if store.has_positions(old_epoch):
-        from .positions import (DECODED_POSITIONS_SCHEMA,
-                                _make_positions_builder,
-                                decode_positions_map_in_pandas)
+        old_pos = (spark.read.schema(POSITIONS_SCHEMA)
+                   .parquet(store.positions_dir_for(old_epoch)))
+        (_rebuild_positions(store, old_pos, tomb)
+         .write.mode("overwrite").partitionBy("bucket")
+         .parquet(store.positions_dir_for(epoch)))
 
-        manifest = store.read_manifest()
-        n_buckets = int(manifest["n_buckets"])
-        block_size = int(manifest["block_size"])
-        dec = (spark.read.schema(POSITIONS_SCHEMA)
-               .parquet(store.positions_dir_for(old_epoch))
-               .drop("bucket")
-               .mapInPandas(decode_positions_map_in_pandas,
-                            schema=DECODED_POSITIONS_SCHEMA))
-        if tomb is not None:
-            dec = dec.join(tomb, "doc_id", "left_anti")
-        rebuilt = (
-            dec.withColumn("bucket_p", F.pmod(
-                F.col("term_id"), F.lit(n_buckets)).cast("int"))
-            .repartition(n_buckets, "bucket_p")
-            .sortWithinPartitions("term_id", "doc_id")
-            .select("term_id", "doc_id", "positions")
-            .mapInPandas(_make_positions_builder(block_size, n_buckets),
-                         schema=POSITIONS_SCHEMA))
-        rebuilt.write.mode("overwrite").partitionBy("bucket").parquet(
-            store.positions_dir_for(epoch))
+    if not store.has_vocab(old_epoch):
+        return
+    if tomb is None:
+        _hardlink_tree(store.vocab_dir_for(old_epoch),
+                       store.vocab_dir_for(epoch))
+        return
+    from .merge import REMOVED_DRIVER_MAX
 
-    if store.has_vocab(old_epoch):
-        if tomb is None:
-            _hardlink_tree(store.vocab_dir_for(old_epoch),
-                           store.vocab_dir_for(epoch))
-        else:
-            from ..query.scoring import (DECODED_SCHEMA,
-                                         decode_postings_map_in_pandas)
-            from .build import term_id_expr
-            from .vocab import VOCAB_SCHEMA, write_vocab_table
-
-            n_buckets = int(store.read_manifest()["n_buckets"])
-            old_id = (spark.read.schema(VOCAB_SCHEMA)
-                      .parquet(store.vocab_dir_for(old_epoch))
-                      .where(F.col("variant") == F.col("term"))
-                      .select("term", "df"))
-            # conservative hit probe over postings metadata bounds the
-            # decode. The range join only makes sense broadcast — a
-            # BULK tombstone set (rare at compact time) skips the probe
-            # and decodes everything, matching compact's O(index) cost
-            meta = store.postings(spark, old_epoch)
-            if tomb.limit(2_000_001).count() <= 2_000_000:
-                hit = (meta.select("bucket", "term_id",
-                                   "first_doc_id", "last_doc_id")
-                       .join(F.broadcast(tomb),
-                             (F.col("first_doc_id") <= F.col("doc_id"))
-                             & (F.col("last_doc_id") >= F.col("doc_id")))
-                       .select("bucket", "term_id").distinct())
-                blocks = meta.join(hit, ["bucket", "term_id"],
-                                   "left_semi")
-            else:
-                blocks = meta
-            dec = (blocks.drop("bucket")
-                   .mapInPandas(decode_postings_map_in_pandas,
-                                schema=DECODED_SCHEMA))
-            loss = (dec.join(tomb, "doc_id", "left_semi")
-                    .groupBy("term_id")
-                    .agg(F.count(F.lit(1)).alias("n_lost")))
-            loss_terms = (old_id
-                          .withColumn("term_id", term_id_expr("term"))
-                          .join(loss, "term_id")
-                          .select("term", (-F.col("n_lost")).alias("df")))
-            merged = (old_id.unionByName(loss_terms)
-                      .groupBy("term").agg(F.sum("df").alias("df"))
-                      .where(F.col("df") > 0))
-            from .vocab import vocab_depth
-
-            write_vocab_table(merged, store, epoch, n_buckets,
-                              depth=vocab_depth(store, old_epoch))
+    # conservative hit probe over postings metadata bounds the decode.
+    # The range join only makes sense broadcast — a BULK tombstone set
+    # (rare at compact time) skips the probe and decodes everything,
+    # matching compact's O(index) cost
+    blocks = store.postings(spark, old_epoch)
+    if tomb.limit(REMOVED_DRIVER_MAX + 1).count() <= REMOVED_DRIVER_MAX:
+        hit = (blocks.select("bucket", "term_id",
+                             "first_doc_id", "last_doc_id")
+               .join(F.broadcast(tomb),
+                     (F.col("first_doc_id") <= F.col("doc_id"))
+                     & (F.col("last_doc_id") >= F.col("doc_id")))
+               .select("bucket", "term_id").distinct())
+        blocks = blocks.join(hit, ["bucket", "term_id"], "left_semi")
+    _fold_vocab(spark, store, old_epoch, epoch, gains_dir=None,
+                removed=tomb, removed_blocks=blocks)
 
 
 def hardlink_sidecars(store: IndexStorage, old_epoch: int,
@@ -355,8 +340,6 @@ def hardlink_sidecars(store: IndexStorage, old_epoch: int,
     """compact_tail counterpart: a tail fold changes neither the live
     doc set nor df(term), and positions files are untouched — both
     sidecars hardlink through verbatim."""
-    from .merge import _hardlink_tree
-
     for src, dst in ((store.positions_dir_for(old_epoch),
                       store.positions_dir_for(epoch)),
                      (store.vocab_dir_for(old_epoch),

@@ -42,9 +42,10 @@ from pyspark.sql import DataFrame, SparkSession
 # seg: Lucene-style segment id. A (term, salt, seg) run is doc-sorted
 # and non-overlapping; different segs of the same term MAY overlap in
 # doc range (WAND opens one cursor per run). seg=0 is the compacted
-# base; merge_append(mode="segment") appends delta blocks as seg=<epoch>
-# WITHOUT decoding old groups, and compact_index() folds everything
-# back to seg=0 (bit-identical to a from-scratch build).
+# base; merge_append() appends delta blocks as seg=<epoch> WITHOUT
+# decoding old groups, compact_tail() folds the tail segments into one
+# seg=<epoch>, and compact_index() folds everything back to seg=0
+# (bit-identical to a from-scratch build).
 POSTINGS_SCHEMA = (
     "term_id long, salt int, seg int, block_id int, n int, "
     "first_doc_id long, last_doc_id long, "
@@ -97,11 +98,21 @@ class IndexStorage:
 
     # ---- manifest -------------------------------------------------------
     def write_manifest(self, cfg: dict) -> None:
+        """Atomic and durable: the new manifest's bytes reach disk before
+        the rename, and the rename before this returns — an epoch switch
+        survives a power loss once the call is done."""
         os.makedirs(self.root, exist_ok=True)
         tmp = self.manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(cfg, f, indent=2, sort_keys=True)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self.manifest_path)
+        fd = os.open(self.root, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
     def read_manifest(self) -> dict:
         with open(self.manifest_path) as f:
@@ -190,11 +201,14 @@ class IndexStorage:
         d = self.tombstones_dir_for(self.epoch() if epoch is None else epoch)
         if not self.catalog.exists(spark, d):
             return None
-        try:
-            df = self.catalog.read(spark, d)
-            return df if len(df.columns) else None
-        except Exception:
+        # a directory without data files has no schema to infer; any
+        # other read error (a corrupt file) must surface — merges would
+        # otherwise consume the tombstones and resurrect deleted docs
+        if os.path.isdir(d) and all(n.startswith(("_", "."))
+                                    for n in os.listdir(d)):
             return None
+        df = self.catalog.read(spark, d)
+        return df if len(df.columns) else None
 
     def append_tombstones(self, doc_ids_df: DataFrame) -> None:
         self.catalog.append(doc_ids_df.select("doc_id"),

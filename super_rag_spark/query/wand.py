@@ -344,7 +344,7 @@ def wand_topk_cursor(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int
 
     term_blocks: {term: (df, [block rows])}. Blocks may span several
     SEGMENTS (seg column, Lucene-style append segments — index/merge.py
-    mode="segment"): each (term, seg) run is doc-sorted and
+    merge_append): each (term, seg) run is doc-sorted and
     non-overlapping, but runs of different segs may overlap in doc
     range, so ONE CURSOR PER (term, seg) RUN is opened. A doc lives in
     exactly one segment per term (upserts physically remove the old

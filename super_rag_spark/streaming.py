@@ -66,17 +66,16 @@ def stream_event_windows(spark: SparkSession, input_dir: str,
 def stream_ingest(spark: SparkSession, input_dir: str, index_dir: str,
                   checkpoint_dir: str | None = None,
                   available_now: bool = True,
-                  mode: str = "segment",
                   compact_every: int | None = None,
                   compact_max_segments: int | None = None,
                   compact_tiered: bool = False,
                   max_files_per_trigger: int = 8):
     """Fold every new parquet file in ``input_dir`` into the index.
 
-    ``mode="segment"`` (default): each micro-batch lands as a new
-    Lucene-style segment — O(delta) per batch, no old group re-encoded
-    (index/merge.py). Compaction cadence, pick one (or neither and
-    schedule compact_index() out-of-band):
+    Each micro-batch lands as a new Lucene-style segment — O(delta) per
+    batch, no old group re-encoded (index/merge.py merge_append).
+    Compaction cadence, pick one (or neither and schedule
+    compact_index() out-of-band):
     - ``compact_every=N``: fold when N segments have accumulated since
       the last compaction (each non-empty batch adds one segment, so
       this is the every-N-batches cadence — but counted via the
@@ -110,7 +109,7 @@ def stream_ingest(spark: SparkSession, input_dir: str, index_dir: str,
         # offsets, the replayed batch carries the same batch_id and
         # merge_append returns without touching the index.
         merge_append(spark, index_dir, batch_df.select("url", "text"),
-                     stream_batch_id=batch_id, mode=mode)
+                     stream_batch_id=batch_id)
         # cadence state = manifest n_segments (durable across restarts;
         # an in-memory batch counter resets with the process and could
         # defer compaction forever under repeated restarts — ADVICE r2)

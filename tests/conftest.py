@@ -54,6 +54,33 @@ def oracle_index(webtext_rows):
     return build_oracle((r["url"], r["text"]) for r in webtext_rows)
 
 
+@pytest.fixture
+def assert_same_index(spark):
+    """Check an index written by merge_append against a fresh build of
+    the same live corpus: the layout-free facts right after the segment
+    append (n_docs, avgdl, term_stats, exact top-k scores), then
+    block-for-block identity once compact_index has folded the segments
+    back to seg=0."""
+    from super_rag_spark.index.merge import compact_index
+    from super_rag_spark.query.engine import BM25Engine
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def check(got, want, queries):
+        got = BM25Engine(spark, got.store.root)  # fresh manifest cache
+        assert got.manifest["n_docs"] == want.manifest["n_docs"]
+        assert got.manifest["avgdl"] == pytest.approx(want.manifest["avgdl"],
+                                                      rel=1e-12)
+        assert rows(got.store.term_stats(spark)) == rows(want.store.term_stats(spark))
+        for q in queries:
+            assert got.topk(q, 10) == want.topk(q, 10), q
+        compact_index(spark, got.store.root)
+        assert rows(got.store.postings(spark)) == rows(want.store.postings(spark))
+
+    return check
+
+
 @pytest.fixture(scope="session")
 def built_index(spark, webtext_sf0001_path, tmp_path_factory):
     """Index over sf0.001 built from the html column (full pipeline),

@@ -1,0 +1,99 @@
+"""Failure semantics of the epoch commit (index/merge.py): lost or
+corrupt files stop a merge before its manifest switch, and the switch
+itself is durable."""
+
+import os
+import stat
+
+import pytest
+
+from super_rag_spark.index.merge import compact_index, merge_append
+from super_rag_spark.index.storage import IndexStorage
+from super_rag_spark.query.engine import BM25Engine
+
+CFG = dict(n_buckets=8, salt_df_threshold=150)
+
+
+@pytest.fixture(scope="module")
+def rows(spark, webtext_sf0001_path):
+    return [(r["url"], r["text"]) for r in
+            spark.read.parquet(webtext_sf0001_path).select("url", "text")
+            .limit(120).collect()]
+
+
+def _docs(spark, rs):
+    return spark.createDataFrame(rs, "url string, text string")
+
+
+def test_build_writes_every_bucket_dir(spark, tmp_path):
+    """Two docs cannot fill 8 buckets: the empty ones still get dirs, so
+    a missing dir always means lost data."""
+    eng = BM25Engine(spark, str(tmp_path / "tiny")).build(
+        _docs(spark, [("https://t/1", "one"), ("https://t/2", "two")]), **CFG)
+    for d in (eng.store.postings_dir_for(0), eng.store.term_stats_dir_for(0)):
+        assert {n for n in os.listdir(d) if n.startswith("bucket=")} == {
+            f"bucket={b}" for b in range(8)}
+
+
+def test_missing_bucket_dir_fails_loudly(spark, rows, tmp_path):
+    """A bucket dir gone from the live epoch must stop both an append
+    and a compaction: carrying it forward as empty would drop its
+    postings for good."""
+    import shutil
+
+    eng = BM25Engine(spark, str(tmp_path / "mb")).build(
+        _docs(spark, rows[:100]), **CFG)
+    shutil.rmtree(os.path.join(eng.store.postings_dir_for(0), "bucket=3"))
+
+    with pytest.raises(FileNotFoundError, match="bucket 3 of epoch 0"):
+        merge_append(spark, eng.store.root, _docs(spark, rows[100:120]))
+    assert eng.store.epoch() == 0
+    with pytest.raises(FileNotFoundError, match="bucket 3 of epoch 0"):
+        compact_index(spark, eng.store.root)
+    assert eng.store.epoch() == 0
+
+
+def test_corrupt_tombstones_stop_the_merge(spark, rows, tmp_path):
+    """An unreadable tombstones file must not read as 'nothing deleted':
+    the merge would consume it and resurrect the deleted docs."""
+    eng = BM25Engine(spark, str(tmp_path / "ct")).build(
+        _docs(spark, rows[:100]), **CFG)
+    eng.delete_urls([rows[4][0]])
+    tdir = eng.store.tombstones_dir_for(0)
+    parts = [n for n in os.listdir(tdir) if n.endswith(".parquet")]
+    assert parts
+    for n in os.listdir(tdir):
+        if n.endswith(".crc"):
+            os.remove(os.path.join(tdir, n))
+    with open(os.path.join(tdir, parts[0]), "wb") as f:
+        f.write(b"not a parquet file" * 8)
+
+    with pytest.raises(Exception):
+        merge_append(spark, eng.store.root, _docs(spark, rows[100:120]))
+    assert eng.store.epoch() == 0
+    assert os.path.isdir(tdir)
+
+
+def test_empty_tombstones_dir_reads_as_none(spark, tmp_path):
+    store = IndexStorage(str(tmp_path / "et"))
+    store.write_manifest({"epoch": 0})
+    os.makedirs(store.tombstones_dir_for(0))
+    open(os.path.join(store.tombstones_dir_for(0), "_SUCCESS"), "w").close()
+    assert store.tombstones(spark, 0) is None
+
+
+def test_manifest_switch_is_fsynced(tmp_path, monkeypatch):
+    """The new manifest's bytes are synced before the rename and the
+    index directory after it."""
+    synced = []
+    real_fsync = os.fsync
+
+    def fsync(fd):
+        synced.append("dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "file")
+        real_fsync(fd)
+
+    store = IndexStorage(str(tmp_path / "m"))
+    monkeypatch.setattr(os, "fsync", fsync)
+    store.write_manifest({"epoch": 1})
+    assert synced == ["file", "dir"]
+    assert store.epoch() == 1

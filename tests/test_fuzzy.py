@@ -228,7 +228,7 @@ def test_fuzzy2_depth_survives_merge(spark, fuzzy2_engine):
     delta = spark.createDataFrame(
         [(f"https://f2.example/d{i}", f"omega common fresh{i}")
          for i in range(4)], "url string, text string")
-    merge_append(spark, fuzzy2_engine.store.root, delta, mode="segment")
+    merge_append(spark, fuzzy2_engine.store.root, delta)
     epoch = fuzzy2_engine.store.epoch()
     assert vocab_depth(fuzzy2_engine.store, epoch) == 2
     assert fuzzy2_engine._correct_term(

@@ -1,11 +1,10 @@
 """v3 merge semantics: upserts, delete+re-add, exactly-once stream
-batches, and O(delta) evidence (untouched buckets are hardlinked, not
-rewritten)."""
-
-import os
+batches and the bulk-removal path. (O(delta) evidence — untouched
+files hardlinked, not rewritten — lives in test_segments.py.)"""
 
 import pytest
 
+from super_rag_spark.index import merge
 from super_rag_spark.index.merge import merge_append
 from super_rag_spark.query.engine import BM25Engine
 
@@ -26,7 +25,8 @@ def base_rows(spark, webtext_sf0001_path):
             .select("url", "text").limit(120).collect())
 
 
-def test_upsert_replaces_old_postings(spark, base_rows, tmp_path):
+def test_upsert_replaces_old_postings(spark, base_rows, tmp_path,
+                                     assert_same_index):
     """Re-ingesting an existing url must replace its postings (reference
     upsert-by-id semantics), never double-count df/n_docs."""
     mk = lambda rs: spark.createDataFrame(rs, "url string, text string")
@@ -39,17 +39,12 @@ def test_upsert_replaces_old_postings(spark, base_rows, tmp_path):
     want = BM25Engine(spark, str(tmp_path / "w")).build(mk(updated_corpus), **CFG)
     got = BM25Engine(spark, str(tmp_path / "g")).build(mk(old), **CFG)
     merge_append(spark, got.store.root, mk(list(changed) + [(r["url"], r["text"]) for r in added]))
-    got = BM25Engine(spark, got.store.root)
-
-    assert got.manifest["n_docs"] == want.manifest["n_docs"] == 110
-    assert got.manifest["avgdl"] == pytest.approx(want.manifest["avgdl"], rel=1e-12)
-    assert _rows(want, spark) == _rows(got, spark)
-    ts_w = sorted(tuple(r) for r in want.store.term_stats(spark).collect())
-    ts_g = sorted(tuple(r) for r in got.store.term_stats(spark).collect())
-    assert ts_w == ts_g
+    assert want.manifest["n_docs"] == 110
+    assert_same_index(got, want, ["totally new replacement", "semudo muro"])
 
 
-def test_delete_then_readd_same_cycle(spark, base_rows, tmp_path):
+def test_delete_then_readd_same_cycle(spark, base_rows, tmp_path,
+                                     assert_same_index):
     """delete(url) + re-ingest(url) in ONE merge cycle: the new version
     must survive (tombstones apply to old-epoch rows only)."""
     mk = lambda rs: spark.createDataFrame(rs, "url string, text string")
@@ -60,13 +55,12 @@ def test_delete_then_readd_same_cycle(spark, base_rows, tmp_path):
     eng = BM25Engine(spark, str(tmp_path / "e")).build(mk(old), **CFG)
     eng.delete_urls([victim])
     merge_append(spark, eng.store.root, mk([(victim, new_body)]))
-    eng = BM25Engine(spark, eng.store.root)
 
     want_corpus = old[:3] + old[4:] + [type(old[3])(url=victim, text=new_body)]
     want = BM25Engine(spark, str(tmp_path / "w2")).build(mk(want_corpus), **CFG)
-    assert eng.manifest["n_docs"] == want.manifest["n_docs"] == 80
-    assert _rows(want, spark) == _rows(eng, spark)
-    assert eng.topk("resurrected fresh", 5) == want.topk("resurrected fresh", 5)
+    assert want.manifest["n_docs"] == 80
+    assert want.topk("resurrected fresh", 5)
+    assert_same_index(eng, want, ["resurrected fresh", "semudo muro"])
 
 
 def test_stream_batch_id_exactly_once(spark, base_rows, tmp_path):
@@ -94,10 +88,11 @@ def test_stream_batch_id_exactly_once(spark, base_rows, tmp_path):
     assert m3["n_docs"] == 90 and m3["stream_batch_id"] == 8
 
 
-def test_bulk_removal_path_bit_identical(spark, base_rows, tmp_path):
-    """removed_driver_max=0 forces the BULK-removal branch (removed set
+def test_bulk_removal_path_bit_identical(spark, base_rows, tmp_path,
+                                        monkeypatch, assert_same_index):
+    """REMOVED_DRIVER_MAX=0 forces the BULK-removal branch (removed set
     stays distributed, no probe, every bucket rebuilds): the result must
-    still be bit-identical to a fresh build over the logical corpus."""
+    still match a fresh build over the logical corpus."""
     mk = lambda rs: spark.createDataFrame(rs, "url string, text string")
     old = base_rows[:100]
     victims = [old[2]["url"], old[9]["url"]]
@@ -105,53 +100,10 @@ def test_bulk_removal_path_bit_identical(spark, base_rows, tmp_path):
 
     eng = BM25Engine(spark, str(tmp_path / "blk")).build(mk(old), **CFG)
     eng.delete_urls(victims)
-    merge_append(spark, eng.store.root, mk(added), removed_driver_max=0)
-    eng = BM25Engine(spark, eng.store.root)
+    monkeypatch.setattr(merge, "REMOVED_DRIVER_MAX", 0)
+    merge_append(spark, eng.store.root, mk(added))
 
     want_corpus = ([r for r in old if r["url"] not in victims]
                    + [type(old[0])(url=u, text=t) for u, t in added])
     want = BM25Engine(spark, str(tmp_path / "blkw")).build(mk(want_corpus), **CFG)
-    assert eng.manifest["n_docs"] == want.manifest["n_docs"]
-    assert _rows(want, spark) == _rows(eng, spark)
-
-
-def test_merge_hardlinks_untouched_buckets(spark, tmp_path):
-    """O(delta): a one-term delta must rewrite only that term's bucket;
-    every other bucket's files carry over as HARDLINKS of the old
-    epoch's files (same inode), i.e. append cost is proportional to the
-    delta, not the index."""
-    from super_rag_spark.analysis import term_id_for
-
-    n_buckets = 8
-    docs = [(f"https://x/{i}", " ".join(f"w{i}k{j}" for j in range(30)))
-            for i in range(200)]
-    eng = BM25Engine(spark, str(tmp_path / "h")).build(
-        spark.createDataFrame(docs, "url string, text string"),
-        n_buckets=n_buckets)
-
-    old_inodes = {}  # bucket -> {filename: inode}
-    pdir = eng.store.postings_dir_for(0)
-    for b in os.listdir(pdir):
-        if b.startswith("bucket="):
-            d = os.path.join(pdir, b)
-            old_inodes[b] = {f: os.stat(os.path.join(d, f)).st_ino
-                             for f in os.listdir(d) if f.endswith(".parquet")}
-
-    delta_term = "zzzuniqueterm"
-    delta_bucket = f"bucket={term_id_for(delta_term) % n_buckets}"
-    merge_append(spark, eng.store.root, spark.createDataFrame(
-        [("https://x/new", delta_term)], "url string, text string"))
-
-    new_pdir = BM25Engine(spark, eng.store.root).store.postings_dir_for(1)
-    linked = rewritten = 0
-    for b, files in old_inodes.items():
-        d = os.path.join(new_pdir, b)
-        new_inodes = {f: os.stat(os.path.join(d, f)).st_ino
-                      for f in os.listdir(d) if f.endswith(".parquet")}
-        if b == delta_bucket:
-            assert new_inodes != files  # rewritten
-            rewritten += 1
-        elif new_inodes == files:
-            linked += 1
-    assert rewritten == 1
-    assert linked == len(old_inodes) - 1  # every other bucket hardlinked
+    assert_same_index(eng, want, ["semudo muro", "fuboname"])

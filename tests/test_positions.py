@@ -124,7 +124,7 @@ def test_positions_absent_raises_and_merge_degrades(spark, tmp_path):
     base = eng2.phrase_topk("alpha beta", k=30)
     delta = docs.limit(3).select(
         F.concat(F.lit("new://"), F.col("url")).alias("url"), "text")
-    merge_append(spark, idx2, delta, mode="segment")
+    merge_append(spark, idx2, delta)
     # r5 (index/sidecars.py): the sidecar is CARRIED through the merge —
     # index-only phrase keeps working over the merged epoch
     assert eng2.store.has_positions()

@@ -61,7 +61,7 @@ def test_pure_segment_append_rewrites_nothing(spark, corpus, tmp_path):
             old_inodes[b] = {f: os.stat(os.path.join(d, f)).st_ino
                              for f in os.listdir(d) if f.endswith(".parquet")}
 
-    merge_append(spark, eng.store.root, mk(rows[200:300]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[200:300]))
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["epoch"] == 1
 
@@ -96,7 +96,7 @@ def test_segment_upsert_delete_scores_exact(spark, corpus, tmp_path):
 
     eng = BM25Engine(spark, str(tmp_path / "u")).build(mk(old), **CFG)
     eng.delete_urls([victim])
-    merge_append(spark, eng.store.root, mk([changed] + added), mode="segment")
+    merge_append(spark, eng.store.root, mk([changed] + added))
     eng = BM25Engine(spark, eng.store.root)
 
     want_corpus = ([r for r in old if r["url"] not in (victim, changed[0])]
@@ -117,7 +117,7 @@ def test_distributed_paths_see_segments(spark, corpus, tmp_path):
     driver path and a fresh build."""
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "d")).build(mk(rows[:200]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[200:260]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[200:260]))
     eng = BM25Engine(spark, eng.store.root)
 
     batch = [{"query_id": i, "text": q} for i, q in enumerate(QUERIES)]
@@ -138,8 +138,8 @@ def test_compact_restores_bit_identity(spark, corpus, tmp_path):
     block for block."""
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "c")).build(mk(rows[:150]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[150:220]), mode="segment")
-    merge_append(spark, eng.store.root, mk(rows[220:300]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:220]))
+    merge_append(spark, eng.store.root, mk(rows[220:300]))
     compact_index(spark, eng.store.root)
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["epoch"] == 3
@@ -157,10 +157,9 @@ def test_segment_resume_after_crash(spark, corpus, tmp_path):
     eng = BM25Engine(spark, str(tmp_path / "r")).build(mk(rows[:150]), **CFG)
     eng.delete_urls([rows[2]["url"]])  # force a rebuild bucket too
     with pytest.raises(SimulatedMergeFailure):
-        merge_append(spark, eng.store.root, mk(rows[150:200]),
-                     mode="segment", fail_after_bucket=2)
+        merge_append(spark, eng.store.root, mk(rows[150:200]), fail_after_bucket=2)
     assert BM25Engine(spark, eng.store.root).manifest["epoch"] == 0
-    merge_append(spark, eng.store.root, None, mode="segment")
+    merge_append(spark, eng.store.root, None)
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["epoch"] == 1
 
@@ -172,18 +171,20 @@ def test_segment_resume_after_crash(spark, corpus, tmp_path):
 
 
 def test_mode_mismatch_resume_restarts_epoch(spark, corpus, tmp_path):
-    """A merge crashed in one mode and resumed with new_docs_df in the
-    other must wipe the stale staging/partial epoch and still land
-    score-exact; resuming WITHOUT the delta raises instead."""
+    """A staging index stamped seg=0 (what a crashed merge of the
+    removed whole-group rebuild layout leaves on disk) is not this
+    epoch's segment: resuming WITHOUT the delta raises, and a
+    re-supplied delta wipes it and still lands score-exact."""
+    from super_rag_spark.index.build import build_index
+
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "mm")).build(mk(rows[:150]), **CFG)
     delta = mk(rows[150:200])
-    with pytest.raises(SimulatedMergeFailure):
-        merge_append(spark, eng.store.root, delta,
-                     mode="rebuild", fail_after_bucket=1)
+    build_index(spark, delta, os.path.join(eng.store.root, "staging_e1"),
+                staging=True, seg=0, **CFG)
     with pytest.raises(ValueError):
-        merge_append(spark, eng.store.root, None, mode="segment")
-    merge_append(spark, eng.store.root, delta, mode="segment")
+        merge_append(spark, eng.store.root, None)
+    merge_append(spark, eng.store.root, delta)
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["epoch"] == 1 and eng.manifest["n_docs"] == 200
 
@@ -198,7 +199,7 @@ def test_pending_tombstones_over_segments(spark, corpus, tmp_path):
     the driver path and both distributed paths."""
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "pt")).build(mk(rows[:150]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[150:220]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:220]))
     eng = BM25Engine(spark, eng.store.root)
     victims = [rows[5]["url"], rows[160]["url"]]  # one per segment
     eng.delete_urls(victims)
@@ -229,7 +230,7 @@ def _segmented(spark, corpus, path):
     interleave in doc_id."""
     rows, mk = corpus
     eng = BM25Engine(spark, path).build(mk(rows[:200]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[200:300]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[200:300]))
     return BM25Engine(spark, eng.store.root)
 
 
@@ -317,7 +318,7 @@ def test_long_lived_engine_follows_epoch_swap(spark, corpus, tmp_path):
     before = eng.topk("semudo muro", 5)
     assert before  # warm the caches on epoch 0
 
-    merge_append(spark, eng.store.root, mk(rows[150:250]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:250]))
     # SAME engine object: must notice the manifest swap, serve epoch 1
     assert int(eng.manifest["epoch"]) == 1
     assert eng.manifest["n_docs"] == 250
@@ -334,8 +335,8 @@ def test_segment_counter_and_maybe_compact(spark, corpus, tmp_path):
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "sc")).build(mk(rows[:100]), **CFG)
     assert eng.manifest.get("n_segments") == 1
-    merge_append(spark, eng.store.root, mk(rows[100:140]), mode="segment")
-    merge_append(spark, eng.store.root, mk(rows[140:180]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[100:140]))
+    merge_append(spark, eng.store.root, mk(rows[140:180]))
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["n_segments"] == 3
 
@@ -356,7 +357,7 @@ def test_compact_resume_after_crash(spark, corpus, tmp_path):
     compaction must never be one unresumable O(index) job)."""
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "cr")).build(mk(rows[:150]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[150:250]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:250]))
     eng.delete_urls([rows[5]["url"]])  # compaction must consume this
 
     with pytest.raises(SimulatedMergeFailure):
@@ -383,11 +384,11 @@ def test_merge_after_crashed_compact_starts_clean(spark, corpus, tmp_path):
     wipe the partial compact output instead of hardlinking over it."""
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "mc")).build(mk(rows[:150]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[150:200]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:200]))
     with pytest.raises(SimulatedMergeFailure):
         compact_index(spark, eng.store.root, fail_after_bucket=1)
 
-    merge_append(spark, eng.store.root, mk(rows[200:260]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[200:260]))
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["epoch"] == 2
     assert not eng.store.committed_buckets("compact", 2)  # wiped
@@ -411,7 +412,7 @@ def test_epoch_switch_cache_warmup(spark, corpus, tmp_path):
     eng.topk("semudo muro", 10)  # hot terms at epoch 0
     assert any(e == 0 and kind == "dec" for e, kind, _ in eng._cache)
 
-    merge_append(spark, eng.store.root, mk(rows[200:260]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[200:260]))
     assert eng.manifest["epoch"] == 1  # staleness detection + warm-up
     assert list(eng._cache) and all(e == 1 for e, _, _ in eng._cache)
     assert {"semudo", "muro"} <= {t for _, kind, t in eng._cache
@@ -429,9 +430,9 @@ def test_tiered_compact_tail(spark, corpus, tmp_path):
 
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "tt")).build(mk(rows[:150]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[150:200]), mode="segment")
-    merge_append(spark, eng.store.root, mk(rows[200:240]), mode="segment")
-    merge_append(spark, eng.store.root, mk(rows[240:300]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:200]))
+    merge_append(spark, eng.store.root, mk(rows[200:240]))
+    merge_append(spark, eng.store.root, mk(rows[240:300]))
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["n_segments"] == 4
 
@@ -459,7 +460,7 @@ def test_tiered_compact_tail(spark, corpus, tmp_path):
 
     # a second fold absorbs the previous fold + the new delta -> still 2
     delta = mk([(r["url"] + "?v2", r["text"]) for r in rows[:40]])
-    merge_append(spark, eng.store.root, delta, mode="segment")
+    merge_append(spark, eng.store.root, delta)
     compact_tail(spark, eng.store.root)
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["n_segments"] == 2
@@ -472,7 +473,7 @@ def test_tiered_compact_preserves_pending_tombstones(spark, corpus, tmp_path):
 
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "tp")).build(mk(rows[:150]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[150:200]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:200]))
     eng = BM25Engine(spark, eng.store.root)
     eng.delete_urls([rows[3]["url"]])
     compact_tail(spark, eng.store.root)
@@ -492,11 +493,11 @@ def test_merge_after_crashed_tail_fold_starts_clean(spark, corpus, tmp_path):
 
     rows, mk = corpus
     eng = BM25Engine(spark, str(tmp_path / "mt")).build(mk(rows[:150]), **CFG)
-    merge_append(spark, eng.store.root, mk(rows[150:200]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[150:200]))
     with pytest.raises(SimulatedMergeFailure):
         compact_tail(spark, eng.store.root, fail_after_bucket=1)
 
-    merge_append(spark, eng.store.root, mk(rows[200:260]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[200:260]))
     eng = BM25Engine(spark, eng.store.root)
     assert eng.manifest["epoch"] == 2
     assert not eng.store.committed_buckets("compact_tail", 2)  # wiped
@@ -515,12 +516,12 @@ def test_compaction_plan_auto(spark, corpus, tmp_path):
     eng = BM25Engine(spark, str(tmp_path / "cp")).build(mk(rows[:200]), **CFG)
     assert compaction_plan(spark, eng.store.root, max_segments=1) == "none"
 
-    merge_append(spark, eng.store.root, mk(rows[200:210]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[200:210]))
     assert compaction_plan(spark, eng.store.root, max_segments=1) == "tiered"
     # a delta comparable to the base flips the decision to full
-    merge_append(spark, eng.store.root, mk(rows[210:300]), mode="segment")
+    merge_append(spark, eng.store.root, mk(rows[210:300]))
     big = mk([(r["url"] + "?x", r["text"]) for r in rows[:150]])
-    merge_append(spark, eng.store.root, big, mode="segment")
+    merge_append(spark, eng.store.root, big)
     assert compaction_plan(spark, eng.store.root, max_segments=1) == "full"
 
     assert maybe_compact(spark, eng.store.root, max_segments=1,

@@ -72,7 +72,7 @@ def merged_setup(spark, tmp_path_factory):
     upserts = [(base[i][0], _text(i, bump=1)) for i in (2, 9, 23)]
     new = [(f"https://sc.example/n{i}", _text(100 + i)) for i in range(10)]
     delta = spark.createDataFrame(upserts + new, "url string, text string")
-    merge_append(spark, idx, delta, mode="segment")
+    merge_append(spark, idx, delta)
 
     survivors = [r for r in base
                  if r[0] not in deleted
@@ -149,11 +149,9 @@ def test_sidecars_through_compact_and_tail(spark, merged_setup, tmp_path):
     extra = [(f"https://sc.example/t{i}", _text(200 + i))
              for i in range(4)]
     merge_append(spark, idx,
-                 spark.createDataFrame(extra[:2], "url string, text string"),
-                 mode="segment")
+                 spark.createDataFrame(extra[:2], "url string, text string"))
     merge_append(spark, idx,
-                 spark.createDataFrame(extra[2:], "url string, text string"),
-                 mode="segment")
+                 spark.createDataFrame(extra[2:], "url string, text string"))
     compact_tail(spark, idx)
     assert eng.store.has_positions() and eng.store.has_vocab()
     ref2 = _fresh_reference(spark, live_rows + extra, tmp_path, "ref_tail")
@@ -164,27 +162,6 @@ def test_sidecars_through_compact_and_tail(spark, merged_setup, tmp_path):
     for phrase in ["alpha beta", "kappa sigma"]:
         assert (eng.phrase_topk(phrase, None, k=20)
                 == ref2.phrase_topk(phrase, None, k=20)), phrase
-
-
-def test_rebuild_mode_merge_carries_sidecars(spark, tmp_path):
-    """mode='rebuild' merges carry the sidecars identically."""
-    base = _base_rows()[:12]
-    docs = spark.createDataFrame(base, "url string, text string")
-    idx = str(tmp_path / "rbidx")
-    eng = BM25Engine(spark, idx).build(
-        docs, text_is_extracted=True, positions=True, vocab=True,
-        n_buckets=8)
-    delta = [(base[3][0], _text(3, bump=2)),
-             ("https://sc.example/r1", _text(301))]
-    merge_append(spark, idx,
-                 spark.createDataFrame(delta, "url string, text string"),
-                 mode="rebuild")
-    merged_rows = [r for r in base if r[0] != base[3][0]] + delta
-    ref = _fresh_reference(spark, merged_rows, tmp_path, "ref_rb")
-    assert (_vocab_rows(spark, eng.store, eng.store.epoch())
-            == _vocab_rows(spark, ref.store, 0))
-    assert (_decoded_positions(spark, eng.store, eng.store.epoch())
-            == _decoded_positions(spark, ref.store, 0))
 
 
 def test_index_without_sidecars_merges_clean(spark, tmp_path):
@@ -199,7 +176,7 @@ def test_index_without_sidecars_merges_clean(spark, tmp_path):
                                        n_buckets=8)
     delta = spark.createDataFrame(
         [("https://sc.example/x", _text(400))], "url string, text string")
-    merge_append(spark, idx, delta, mode="segment")
+    merge_append(spark, idx, delta)
     ep = eng.store.epoch()
     assert ep == 1
     assert not eng.store.has_positions()

@@ -65,7 +65,7 @@ def test_query_keeps_its_snapshot_across_an_epoch_switch(
         out = load(self, *args)
         if not seen:
             seen.append(args)
-            merge_append(spark, eng.store.root, mk(delta), mode="segment")
+            merge_append(spark, eng.store.root, mk(delta))
         return out
 
     monkeypatch.setattr(BM25Engine, "_load_term_arrays", load_then_append)

@@ -95,8 +95,7 @@ def test_stream_with_compaction_cadence_bit_identical(spark, webtext_sf0001_path
     for i in range(2):
         pq.write_table(tbl.slice(100 + 50 * i, 50), str(in_dir / f"d{i}.parquet"))
     # one file per micro-batch so two batches fold before the compaction
-    q = stream_ingest(spark, str(in_dir), idx_dir, available_now=True,
-                      mode="segment", compact_every=2,
+    q = stream_ingest(spark, str(in_dir), idx_dir, available_now=True, compact_every=2,
                       max_files_per_trigger=1)
     q.awaitTermination(300)
 
