@@ -768,7 +768,9 @@ def write_term_stats_and_lineage(spark: SparkSession, store: IndexStorage, *,
     from posting-block METADATA alone: df(term) = sum of block n over
     the term's blocks (each live doc appears exactly once per term), so
     no decode pass is needed. ``buckets``: restrict to these buckets
-    (merge touches a subset; untouched buckets hardlink their stats)."""
+    (merge touches a subset; untouched buckets hardlink their stats),
+    each of which gets a dir, empty or not (queries read a missing
+    term_stats bucket dir as lost data)."""
     pdir = store.postings_dir_for(epoch)
     meta = spark.read.schema(POSTINGS_SCHEMA).parquet(pdir).select(
         "bucket", "term_id", "n")
@@ -800,3 +802,6 @@ def write_term_stats_and_lineage(spark: SparkSession, store: IndexStorage, *,
         ])
     finally:
         meta.unpersist()
+    for b in buckets or ():
+        os.makedirs(os.path.join(store.term_stats_dir_for(epoch),
+                                 f"bucket={b}"), exist_ok=True)

@@ -494,7 +494,8 @@ def compact_index(spark: SparkSession, index_dir: str, *,
         ds = ds.join(tomb, "doc_id", "left_anti")
     n_docs, avgdl = _write_doc_stats(spark, store, ep.new, ds)
     write_term_stats_and_lineage(spark, store, phase="compact_stats",
-                                 epoch=ep.new)
+                                 epoch=ep.new,
+                                 buckets=list(range(ep.cfg["n_buckets"])))
 
     # positions fold to canonical blocking (consuming tombstones);
     # vocab hardlinks or folds losses (index/sidecars.py, r5)

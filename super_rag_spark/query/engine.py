@@ -1,18 +1,22 @@
-"""BM25Engine — the user-facing facade (replaces the reference's three
-API endpoints: ingest / query / delete, /root/reference/router.py:8-10).
+"""BM25Engine — the user-facing facade over one index directory.
 
-- build()        <- POST /api/v1/ingest  (/root/reference/api/ingest.py:15-62)
-- query_batch()  <- POST /api/v1/query   (/root/reference/api/query.py:9-17),
-                    distributed Spark plan for query batches
-- topk()         <- same, driver fast path: pyarrow bucket+term-pruned
-                    postings read + NumPy block-max WAND (p50 latency path,
-                    SURVEY.md §3.2 allows this as long as ranks are identical)
-- delete_urls()  <- DELETE /api/v1/delete (/root/reference/api/delete.py:11-31):
-                    tombstone append; postings cleaned lazily at next merge
-                    (anti-join at query time), mirroring SURVEY.md §2.7
-- summary routing analog: queries starting with "summarize" are routed to
-  the "<name>summary" index when present (/root/reference/service/router.py:81-87,
-  /root/reference/utils/summarise.py:6) after stripping the routing keyword.
+- build()        builds the index (the reference's ingest endpoint)
+- query_batch()  distributed Spark plan for query batches (its query
+                 endpoint)
+- topk()         the same query on the driver: a pyarrow read of the
+                 buckets and term_ids the query touches, then NumPy
+                 scoring over the cached decoded postings or block-max
+                 WAND over the encoded blocks (rank-identical)
+- delete_urls()  tombstone append (its delete endpoint); postings are
+                 cleaned at the next merge and masked at query time
+- summary routing: topk-style queries starting with "summarize" run on
+  the "<name>summary" index when present, after stripping the keyword.
+
+Every public driver query takes one Snapshot and reads only it. Every
+budget-gated driver query asks one gate, ``_over_budget``: when the
+uncached terms' Σdf exceeds ``driver_df_budget`` it counts one
+``driver_fallbacks`` and the query runs its rank-identical distributed
+plan instead of decoding O(df) postings on the driver.
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ from ..index.storage import IndexStorage, bucket_of_term_id
 from .scoring import score_query_batch, score_query_batch_wand
 from .wand import vectorized_topk_arrays, wand_topk
 
-# topk methods -> scorers. _driver_topk resolves the vectorized one
+# topk methods -> scorers. _topk resolves the vectorized one
 # through the wand module on each call, so a rebound function (a tracer)
 # takes effect there as it does here for "wand".
 _TOPK_METHODS = {
@@ -47,6 +51,64 @@ _BLOCK_COLS = ["term_id", "salt", "seg", "block_id", "n", "first_doc_id",
 # bytes charged to every cache entry on top of its payload: the key
 # tuple, the term string and the value tuple
 _ENTRY_BYTES = 200
+
+
+def _ranked_hits(res: DataFrame) -> list[tuple[int, float]]:
+    """(doc_id, score) rows of a distributed plan's result, in rank
+    order."""
+    return [(int(r["doc_id"]), float(r["score"]))
+            for r in res.orderBy("rank").collect()]
+
+
+def _conjunction(arrays: dict, terms) -> np.ndarray:
+    """Sorted doc_ids holding every one of ``terms``: their decoded doc
+    arrays intersected rarest first. Empty when a term has no
+    postings."""
+    if any(t not in arrays for t in terms):
+        return np.empty(0, dtype=np.int64)
+    by_rarity = sorted(terms, key=lambda t: len(arrays[t][1]))
+    cand = arrays[by_rarity[0]][1]
+    for t in by_rarity[1:]:
+        if not len(cand):
+            break
+        cand = cand[np.isin(cand, arrays[t][1], assume_unique=True)]
+    return cand
+
+
+def _lazy_verified(snap: Snapshot, arrays: dict, cand: np.ndarray, k: int,
+                   verify) -> list[tuple[int, float]]:
+    """Top-k of the candidates that pass ``verify``, without verifying
+    them all: every candidate is BM25-ranked first (scores need no
+    verify), then ``verify`` (sorted doc batch -> the docs that pass)
+    runs on descending-score batches until k survive. Cost tracks k,
+    not the candidate count: two common terms can have 10^5
+    conjunctive candidates."""
+    from .wand import accumulate_scores
+
+    uniq, scores = accumulate_scores(arrays, candidates=cand, **snap.bm25)
+    order = np.lexsort((uniq, -np.round(scores, 9)))
+    docs, scores = uniq[order], scores[order]
+    out: list[tuple[int, float]] = []
+    step = max(4 * k, 64)
+    for i in range(0, len(docs), step):
+        ok = set(verify(np.sort(docs[i:i + step])).tolist())
+        out.extend((d, s) for d, s in zip(docs[i:i + step].tolist(),
+                                          scores[i:i + step].tolist())
+                   if d in ok)
+        if len(out) >= k:
+            break
+    return out[:k]
+
+
+def _match_expr(query: str, boolean: bool, caller: str) -> str:
+    """The AND/OR/NOT chain a match-set query runs: ``query`` itself
+    when ``boolean``, else the OR-bag of its terms."""
+    if boolean:
+        return query
+    terms = sorted(set(tokenize(query)))
+    if not terms:
+        raise ValueError(f"{caller} needs at least one term")
+    return " OR ".join(terms)
 
 
 class Snapshot(NamedTuple):
@@ -218,8 +280,8 @@ class BM25Engine:
         if hot:
             try:
                 self._load_term_arrays(snap, hot)  # refill under the new epoch
-            except OSError:
-                pass  # warm-up is best-effort; queries reload lazily
+            except FileNotFoundError:
+                pass  # the epoch moved on again mid-warm; queries reload
 
     # ------------------------------------------------------------- query
     def query_batch(self, queries: list[dict], k: int = 10,
@@ -267,10 +329,12 @@ class BM25Engine:
     def _dataset(self, snap: Snapshot, table: str, bucket: int):
         """pyarrow dataset of one bucket of an epoch-scoped table
         (``postings``, ``term_stats``, ``positions`` or ``vocab``), opened
-        once per epoch through the cache. None when the bucket directory
-        does not exist at the live epoch. A directory missing because a
-        merge replaced the snapshot's epoch mid-query raises instead of
-        reading as an empty bucket."""
+        once per epoch through the cache. A missing bucket directory
+        raises FileNotFoundError when a merge replaced the snapshot's
+        epoch mid-query, and for ``postings`` and ``term_stats``, whose
+        every bucket dir build, merge and compaction write (a missing
+        one is lost data). The sidecars write only the buckets that
+        hold terms, so theirs read as None: an empty bucket."""
         key = (snap.epoch, table, bucket)
         dataset = self._cache.get(key)
         if dataset is None:
@@ -282,6 +346,10 @@ class BM25Engine:
                     raise FileNotFoundError(
                         f"{p}: the query's snapshot is epoch {snap.epoch},"
                         f" but the index has moved to epoch {live}")
+                if table in ("postings", "term_stats"):
+                    raise FileNotFoundError(
+                        f"{table} bucket {bucket} of epoch {snap.epoch} is"
+                        f" missing: {p}")
                 return None
             dataset = ds.dataset(p, format="parquet")
             self._cache.put(key, dataset)
@@ -307,11 +375,9 @@ class BM25Engine:
         buckets = sorted({bucket_of_term_id(i, snap.n_buckets) for i in ids})
         rows: list[dict] = []
         for b in buckets:
-            dataset = self._dataset(snap, "postings", b)
-            if dataset is None:
-                continue
-            tbl = dataset.to_table(filter=ds.field("term_id").isin(list(ids)),
-                                   columns=_BLOCK_COLS)
+            tbl = self._dataset(snap, "postings", b).to_table(
+                filter=ds.field("term_id").isin(list(ids)),
+                columns=_BLOCK_COLS)
             rows.extend(tbl.to_pylist())
         grouped: dict[str, list[dict]] = {}
         for row in rows:
@@ -380,10 +446,7 @@ class BM25Engine:
             by_bucket.setdefault(
                 bucket_of_term_id(tid, snap.n_buckets), []).append(tid)
         for b, tids in by_bucket.items():
-            dataset = self._dataset(snap, "term_stats", b)
-            if dataset is None:
-                continue
-            tbl = dataset.to_table(
+            tbl = self._dataset(snap, "term_stats", b).to_table(
                 filter=ds.field("term_id").isin(tids),
                 columns=["term_id", "df"])
             for tid, dfv in zip(tbl["term_id"].to_pylist(),
@@ -443,13 +506,39 @@ class BM25Engine:
         self._cache.put((epoch, "tomb", None), (names, arr), arr.nbytes)
         return arr
 
-    def _driver_topk(self, snap: Snapshot, terms: list[str], k: int,
-                     method: str, approx: float = 1.0,
-                     allowed=None) -> list[tuple[int, float]]:
-        """Driver top-k of an OR-bag: ``vectorized`` scores the cached
-        decoded arrays, ``wand`` the encoded blocks with block-max
-        skipping. ``allowed``: optional sorted doc_id array, the only
-        docs ranked (search's selective filter)."""
+    def _over_budget(self, snap: Snapshot, terms) -> bool:
+        """The driver df budget gate, asked once per query: True, and
+        one more ``driver_fallbacks``, when decoding the uncached terms
+        would pull more than ``driver_df_budget`` postings onto the
+        driver. The caller then runs its distributed plan."""
+        if self._uncached_df_total(snap, terms) <= self.driver_df_budget:
+            return False
+        self.driver_fallbacks += 1
+        return True
+
+    def _doc_frame(self, ids) -> DataFrame:
+        """A broadcast (doc_id) frame of a small doc_id array."""
+        return F.broadcast(self.spark.createDataFrame(
+            [(int(d),) for d in ids], "doc_id long"))
+
+    def _topk(self, snap: Snapshot, terms: list[str], k: int, method: str,
+              approx: float = 1.0, allowed=None) -> list[tuple[int, float]]:
+        """Top-k of the OR-bag of sorted unique ``terms`` under ``snap``:
+        ``vectorized`` scores the cached decoded arrays, ``wand`` the
+        encoded blocks with block-max skipping. ``allowed``: optional
+        sorted doc_id array, the only docs ranked (search's selective
+        filter). Over budget, the distributed WAND plan runs instead
+        (rank-identical; its per-salt-range tasks decode only their own
+        stripes), with ``allowed`` as its candidates."""
+        if method not in _TOPK_METHODS:
+            raise ValueError(f"unknown topk method: {method!r}")
+        if not terms or (allowed is not None and not len(allowed)):
+            return []
+        if self._over_budget(snap, terms):
+            return _ranked_hits(self.query_batch_wand(
+                [{"query_id": 0, "text": " ".join(terms)}], k=k,
+                candidates=(None if allowed is None
+                            else self._doc_frame(allowed))))
         if method == "wand":
             blocks = self._load_term_blocks(snap, terms)
             return _TOPK_METHODS["wand"](
@@ -461,29 +550,12 @@ class BM25Engine:
         return vectorized_topk_arrays(
             arrays, k=k, candidates=allowed, **snap.bm25) if arrays else []
 
-    def _topk(self, snap: Snapshot, terms: list[str], k: int, method: str,
-              approx: float = 1.0) -> list[tuple[int, float]]:
-        """topk's body for sorted unique ``terms`` under ``snap``:
-        queries whose uncached terms exceed the driver df budget run the
-        distributed WAND plan (rank-identical; the per-salt-range tasks
-        decode only their own stripes)."""
-        if method not in _TOPK_METHODS:
-            raise ValueError(f"unknown topk method: {method!r}")
-        if not terms:
-            return []
-        if self._uncached_df_total(snap, terms) > self.driver_df_budget:
-            self.driver_fallbacks += 1
-            res = self.query_batch_wand(
-                [{"query_id": 0, "text": " ".join(terms)}], k=k)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
-        return self._driver_topk(snap, terms, k, method, approx)
-
     def topk(self, query: str, k: int = 10, use_wand: bool | None = None,
              method: str = "vectorized",
              approx: float = 1.0) -> list[tuple[int, float]]:
         """Single-query top-k on the driver (low-latency path).
-        Routes 'summarize ...' queries to the summary index when present.
+        A query whose first token starts with "summar" drops that token
+        and runs on the summary index when one exists (see _route).
         ``method="vectorized"`` scores the cached decoded postings,
         ``"wand"`` skips blocks on the encoded ones; both return the
         same ranking and scores (asserted in tests). ``use_wand`` is the
@@ -491,9 +563,10 @@ class BM25Engine:
         deletes are masked per query on either path.
         ``approx`` > 1.0 (wand only) enables bounded-error early
         termination: skipped docs provably score < approx * the
-        returned k-th score. Queries whose terms exceed the driver df
-        budget run the EXACT distributed plan instead — ``approx`` is
-        ignored there (early termination is a driver-path device)."""
+        returned k-th score. A query over the driver df budget
+        (_over_budget) runs the EXACT distributed WAND plan instead —
+        ``approx`` is ignored there (early termination is a driver-path
+        device)."""
         if use_wand is not None:  # back-compat boolean switch
             method = "wand" if use_wand else "vectorized"
         # argument validation BEFORE the budget fallback (ADVICE r4):
@@ -533,20 +606,15 @@ class BM25Engine:
         if not terms:
             return []
         snap = engine._snapshot()
-        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
-            engine.driver_fallbacks += 1
-            res = score_query_batch(
+        if engine._over_budget(snap, terms):
+            return _ranked_hits(score_query_batch(
                 self.spark, engine.store,
                 [{"query_id": 0, "text": " ".join(terms),
-                  "boosts": weights, "msm": msm}], k=k)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
-        arrays = engine._load_term_arrays(snap, terms)
-        if not arrays:
-            return []
+                  "boosts": weights, "msm": msm}], k=k))
         from .wand import vectorized_topk_arrays
 
-        return vectorized_topk_arrays(arrays, k=k, weights=weights, msm=msm,
+        return vectorized_topk_arrays(engine._load_term_arrays(snap, terms),
+                                      k=k, weights=weights, msm=msm,
                                       **snap.bm25)
 
     def topk_after(self, query: str, k: int = 10, *,
@@ -568,13 +636,10 @@ class BM25Engine:
         if not terms:
             return []
         snap = engine._snapshot()
-        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
-            engine.driver_fallbacks += 1
-            res = score_query_batch(self.spark, engine.store,
-                                    [{"query_id": 0, "text": qtext}],
-                                    k=k, after=after)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
+        if engine._over_budget(snap, terms):
+            return _ranked_hits(score_query_batch(
+                self.spark, engine.store, [{"query_id": 0, "text": qtext}],
+                k=k, after=after))
         from .wand import accumulate_scores, rank_topk
 
         uniq, scores = accumulate_scores(engine._load_term_arrays(snap, terms),
@@ -670,7 +735,9 @@ class BM25Engine:
           ``meta_cols=('warc_ts', 'lang')`` filters on those columns
           with no caller-side corpus table at all (r5).
         - Selective filters (<= ``driver_filter_max`` candidates) ride
-          the low-latency driver path; broad filters go through the
+          topk's driver path with the candidates as a mask, and its df
+          budget gate: over budget, the small candidate set broadcasts
+          into the distributed WAND plan. Broad filters go through the
           distributed semi-join plan (score_query_batch(candidates=)),
           so the driver NEVER materializes an unbounded doc_id set —
           a 100x corpus with ``lang='en'`` stays a Spark-side join.
@@ -737,17 +804,12 @@ class BM25Engine:
             # (per-salt-range candidate cogroup, scoring.py)
             scorer = (score_query_batch_wand if method == "wand"
                       else score_query_batch)
-            res = scorer(self.spark, engine.store,
-                         [{"query_id": 0, "text": qtext}], k=k,
-                         candidates=cand_df)
-            hits = [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
-        elif terms and allowed is None:
-            # unfiltered: same path as topk() (incl. the decoded cache)
-            hits = engine._topk(engine._snapshot(), terms, k, method)
+            hits = _ranked_hits(scorer(self.spark, engine.store,
+                                       [{"query_id": 0, "text": qtext}],
+                                       k=k, candidates=cand_df))
         elif terms:
-            hits = engine._driver_topk(engine._snapshot(), terms, k, method,
-                                       allowed=allowed)
+            hits = engine._topk(engine._snapshot(), terms, k, method,
+                                allowed=allowed)
         out = self.spark.createDataFrame(
             [(i + 1, d, float(s)) for i, (d, s) in enumerate(hits)],
             "rank int, doc_id long, score double")
@@ -805,7 +867,6 @@ class BM25Engine:
         Survivors are BM25-ranked over the phrase's terms with GLOBAL
         corpus stats, exactly like query/phrase.phrase_topk's DataFrame
         path (equality asserted in tests)."""
-        from .phrase import joined_tokens_expr, phrase_pattern, plan_barrier
         from .wand import vectorized_topk_arrays
 
         terms = tokenize(phrase)
@@ -818,88 +879,33 @@ class BM25Engine:
                 " — build with positions=True / run build_positions, or"
                 " pass the source corpus for match-then-verify")
         uterms = sorted(set(terms))
-        if self._uncached_df_total(snap, uterms) > self.driver_df_budget:
-            # a stop-word in the phrase would decode O(df) postings on
-            # the driver; run the index-backed distributed plan instead
-            self.driver_fallbacks += 1
+        if self._over_budget(snap, uterms):
             from .phrase import score_phrase_batch
 
-            res = score_phrase_batch(self.spark, self.store, docs_df,
-                                     [(0, phrase)], k=k, slop=slop)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
+            return _ranked_hits(score_phrase_batch(
+                self.spark, self.store, docs_df, [(0, phrase)], k=k,
+                slop=slop))
         arrays = self._load_term_arrays(snap, uterms)
-        if len(arrays) < len(uterms):
-            return []  # some phrase term has no postings at all
-        by_rarity = sorted(uterms, key=lambda t: len(arrays[t][1]))
-        cand = arrays[by_rarity[0]][1]
-        for t in by_rarity[1:]:
-            cand = cand[np.isin(cand, arrays[t][1], assume_unique=True)]
-            if not len(cand):
-                return []
-
-        if docs_df is None:
-            # index-only verify against the positional sidecar: no
-            # Spark job, no corpus. LAZY, score-ordered: rank ALL
-            # candidates by BM25 first (scores need no verify), then
-            # chain-verify in descending-score batches and stop as soon
-            # as k survive. Position runs load per TERM through the
-            # cache (doc ids are content hashes, so batches have no
-            # block locality — the first touch of a term pays its full
-            # sidecar read, repeats are in-memory); the batching bounds
-            # the chain_match work, not the I/O
-            from .wand import accumulate_scores
-
-            uniqc, sc = accumulate_scores(arrays, candidates=cand,
-                                          **snap.bm25)
-            order = np.lexsort((uniqc, -np.round(sc, 9)))
-            rd, rs = uniqc[order], sc[order]
-            out: list[tuple[int, float]] = []
-            step = max(4 * k, 64)
-            for i in range(0, len(rd), step):
-                batch = np.sort(rd[i:i + step])
-                ver = set(self._verify_positions_driver(
-                    snap, terms, batch, slop).tolist())
-                out.extend((int(d), float(s))
-                           for d, s in zip(rd[i:i + step].tolist(),
-                                           rs[i:i + step].tolist())
-                           if int(d) in ver)
-                if len(out) >= k:
-                    break
-            return out[:k]
-        else:
-            src = docs_df
-            if "doc_id" not in src.columns:
-                src = src.withColumn("doc_id", doc_id_expr("url"))
-            cdf = self.spark.createDataFrame(
-                [(int(d),) for d in cand.tolist()], "doc_id long")
-            # plan_barrier: without it Catalyst substitutes jt into the
-            # contains/rlike filter and pushes it BELOW the broadcast
-            # join — re-tokenizing the whole corpus (see phrase.py)
-            jt = (src.join(F.broadcast(cdf), "doc_id")
-                  .select("doc_id",
-                          plan_barrier(joined_tokens_expr("text"))
-                          .alias("jt")))
-            pat = phrase_pattern(terms, slop)
-            matcher = (F.col("jt").contains(pat) if slop == 0
-                       else F.col("jt").rlike(pat))
-            # np.unique, not sorted(): duplicate doc_id rows in docs_df
-            # (a url ingested twice) must not break the sorted-UNIQUE
-            # contract of vectorized_topk_arrays' assume_unique isin
-            verified = np.unique(np.array(
-                [r["doc_id"] for r in
-                 jt.where(matcher).select("doc_id").collect()],
-                dtype=np.int64))
-        if not len(verified):
+        cand = _conjunction(arrays, uterms)
+        if not len(cand):
             return []
+        if docs_df is None:
+            # position runs load per TERM through the cache (doc ids are
+            # content hashes, so batches have no block locality); the
+            # batching bounds the chain_match work, not the I/O
+            return _lazy_verified(
+                snap, arrays, cand, k, lambda batch:
+                self._phrase_verified_driver(snap, terms, batch, slop, None))
+        verified = self._phrase_verified_driver(snap, terms, cand, slop,
+                                                docs_df)
         return vectorized_topk_arrays(arrays, k=k, candidates=verified,
                                       **snap.bm25)
 
     def _load_positions_term(self, snap: Snapshot, term: str):
         """Decoded position run of one term through the cache:
         (docs sorted array, off, flat) with doc i's positions =
-        flat[off[i]:off[i+1]], or None for a term with no positions.
-        Like decoded postings, the first touch of a term pays
+        flat[off[i]:off[i+1]]; empty arrays for a term with no
+        positions. Like decoded postings, the first touch of a term pays
         the parquet read + varint decode; repeats are in-memory (phrase
         streams repeat their vocabulary just like BM25 streams do —
         doc ids are content hashes, so block ranges carry no candidate
@@ -913,16 +919,13 @@ class BM25Engine:
         tid = term_id_for(term)
         dataset = self._dataset(snap, "positions",
                                 bucket_of_term_id(tid, snap.n_buckets))
-        if dataset is None:
-            return None
-        tbl = dataset.to_table(
+        rows = [] if dataset is None else sorted(dataset.to_table(
             filter=ds.field("term_id") == tid,
             columns=["block_id", "n", "first_doc_id",
-                     "docs_enc", "cnt_enc", "pos_enc"])
-        if not tbl.num_rows:
-            return None
-        rows = sorted(tbl.to_pylist(), key=lambda r: r["first_doc_id"])
-        dchunks, cchunks, fchunks = [], [], []
+                     "docs_enc", "cnt_enc", "pos_enc"]).to_pylist(),
+            key=lambda r: r["first_doc_id"])
+        empty = np.empty(0, dtype=np.int64)
+        dchunks, cchunks, fchunks = [empty], [empty], [empty]
         for row in rows:
             docs, counts, flat = decode_positions_block(
                 row["docs_enc"], row["cnt_enc"], row["pos_enc"],
@@ -953,40 +956,28 @@ class BM25Engine:
         self._cache.put(key, entry, docs.nbytes + off.nbytes + flat.nbytes)
         return entry
 
-    def _verify_positions_driver(self, snap: Snapshot, terms: list[str],
-                                 cand, slop: int):
-        """Chain-verify the phrase against the positional sidecar for
-        the candidate docs (sorted unique int64 array); position runs
-        come from the cache (no Spark job). Returns the verified
-        sorted-unique doc_id array."""
-        from ..index.positions import chain_match
-
-        per: dict[str, tuple] = {}
-        for t in set(terms):
-            ent = self._load_positions_term(snap, t)
-            if ent is None:
-                return np.empty(0, dtype=np.int64)
-            per[t] = ent
+    def _positions_of(self, snap: Snapshot, terms: list[str], cand):
+        """Yield (doc, [positions of each of ``terms``, in order]) for
+        every doc of ``cand`` (int64 array) that holds all the terms,
+        from the cached position runs (no Spark job)."""
+        runs = {t: self._load_positions_term(snap, t) for t in set(terms)}
         # per term: locate every candidate in the term's doc run once
         # (vectorized searchsorted); a miss anywhere kills the doc
         locs: dict[str, np.ndarray] = {}
         alive = np.ones(len(cand), dtype=bool)
-        for t, (docs, off, flat) in per.items():
+        for t, (docs, _, _) in runs.items():
             i = np.searchsorted(docs, cand)
-            ok = (i < len(docs))
+            ok = i < len(docs)
             ok[ok] = docs[i[ok]] == cand[ok]
             alive &= ok
             locs[t] = i
-        out = []
         for j in np.flatnonzero(alive).tolist():
-            pos_lists = []
+            lists = []
             for t in terms:
-                docs, off, flat = per[t]
+                _, off, flat = runs[t]
                 i = int(locs[t][j])
-                pos_lists.append(flat[off[i]:off[i + 1]])
-            if chain_match(pos_lists, slop):
-                out.append(int(cand[j]))
-        return np.array(out, dtype=np.int64)
+                lists.append(flat[off[i]:off[i + 1]])
+            yield int(cand[j]), lists
 
     # ------------------------------------------------------------ boolean
     def boolean_topk(self, expr: str, k: int = 10) -> list[tuple[int, float]]:
@@ -1000,13 +991,8 @@ class BM25Engine:
         steps = parse_boolean(expr)
         all_terms = sorted({t for _, t in steps})
         snap = self._snapshot()
-        if self._uncached_df_total(snap, all_terms) > self.driver_df_budget:
-            # 'OR the' loads O(df) postings driver-side; run the
-            # index-backed distributed set algebra instead
-            self.driver_fallbacks += 1
-            res = self.boolean_batch([(0, expr)], k=k)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
+        if self._over_budget(snap, all_terms):
+            return _ranked_hits(self.boolean_batch([(0, expr)], k=k))
         arrays = self._load_term_arrays(snap, all_terms)
 
         empty = np.empty(0, dtype=np.int64)
@@ -1085,15 +1071,21 @@ class BM25Engine:
             return None
         return min(found, key=lambda t: (found[t][0], -found[t][1], t))
 
+    def _require_vocab(self, snap: Snapshot, caller: str) -> None:
+        if not self.store.has_vocab(snap.epoch):
+            raise ValueError(
+                f"{caller} needs the vocabulary sidecar — build with"
+                " vocab=True / run build_vocab")
+
     def suggest(self, prefix: str, k: int = 10) -> list[tuple[str, int]]:
         """Prefix autocomplete on the driver: top-k vocabulary terms
         starting with ``prefix``, by (df DESC, term) — pyarrow scan of
         the sidecar's identity rows, no Spark job. Needs vocab=True."""
-        snap = self._snapshot()
-        if not self.store.has_vocab(snap.epoch):
-            raise ValueError(
-                "suggest needs the vocabulary sidecar — build with"
-                " vocab=True / run build_vocab")
+        return self._suggest(self._snapshot(), prefix, k)
+
+    def _suggest(self, snap: Snapshot, prefix: str,
+                 k: int) -> list[tuple[str, int]]:
+        self._require_vocab(snap, "suggest")
         matches: list[tuple[str, int]] = []
         for name in sorted(os.listdir(self.store.vocab_dir_for(snap.epoch))):
             if not name.startswith("bucket="):
@@ -1122,10 +1114,7 @@ class BM25Engine:
         deletion-neighborhood depth (1 for vocab=True, 2 for vocab=2 —
         _vocab_matches raises above it)."""
         snap = self._snapshot()
-        if not self.store.has_vocab(snap.epoch):
-            raise ValueError(
-                "fuzzy_topk needs the vocabulary sidecar — build with"
-                " vocab=True / run build_vocab")
+        self._require_vocab(snap, "fuzzy_topk")
         terms = sorted(set(tokenize(query)))
         corrected = sorted({c for t in terms
                             if (c := self._correct_term(snap, t, max_dist))})
@@ -1138,10 +1127,11 @@ class BM25Engine:
         vocabulary sidecar — the ``max_expansions`` HIGHEST-df matches,
         (df DESC, term) deterministic, the same cap Lucene's
         MultiTermQuery uses so a short prefix over a web-scale vocab
-        cannot explode into millions of terms — then run the expanded
-        OR-bag through the normal BM25 path (each expansion scored with
-        its own idf, so rare expansions rank their docs higher; the
-        driver-df-budget fallback applies as for any multi-term query).
+        cannot explode into millions of terms — then score the expanded
+        OR-bag like topk (each expansion with its own idf, so rare
+        expansions rank their docs higher; the driver df budget gate
+        applies). Expansion and scoring share one snapshot, and the
+        expansions are never summary-routed: 'summ' scores 'summary'.
         Needs an index built with ``vocab=True``.
 
         Reference analog: super-rag has no sparse wildcard (dense
@@ -1149,10 +1139,10 @@ class BM25Engine:
         over the sidecar + existing scorer."""
         if not prefix:
             raise ValueError("prefix_topk needs a non-empty prefix")
-        expansions = [t for t, _ in self.suggest(prefix, k=max_expansions)]
-        if not expansions:
-            return []
-        return self.topk(" ".join(sorted(expansions)), k, method=method)
+        snap = self._snapshot()
+        expansions = [t for t, _ in self._suggest(snap, prefix,
+                                                  max_expansions)]
+        return self._topk(snap, sorted(expansions), k, method)
 
     def fuzzy_expansions(self, term: str, max_dist: int = 1,
                          max_expansions: int = 50) -> list[str]:
@@ -1162,7 +1152,12 @@ class BM25Engine:
         and capped at ``max_expansions`` like every MultiTermQuery
         rewrite here. Same lookup as _correct_term (_vocab_matches),
         bounded by the sidecar's neighborhood depth the same way."""
-        found = self._vocab_matches(self._snapshot(), term, max_dist)
+        return self._fuzzy_expansions(self._snapshot(), term, max_dist,
+                                      max_expansions)
+
+    def _fuzzy_expansions(self, snap: Snapshot, term: str, max_dist: int,
+                          max_expansions: int) -> list[str]:
+        found = self._vocab_matches(snap, term, max_dist)
         return sorted(found, key=lambda t: (-found[t][1], t))[:max_expansions]
 
     # ------------------------------------------------- query string DSL
@@ -1209,7 +1204,7 @@ class BM25Engine:
         from .wand import vectorized_topk_arrays
 
         node = qstring.parse_query_string(qtext)
-        node = qstring.expand_leaves(self, node, max_expansions)
+        node = qstring.expand_leaves(self, snap, node, max_expansions)
         if (qstring.phrase_leaves(node) and docs_df is None
                 and not self.store.has_positions(snap.epoch)):
             raise ValueError(
@@ -1221,9 +1216,7 @@ class BM25Engine:
         allt = sorted(qstring.referenced_terms(node))
         if allowed is not None and not len(allowed):
             return [], bag  # selective filter matched nothing
-        if (cand_df is not None
-                or self._uncached_df_total(snap, allt) > self.driver_df_budget):
-            self.driver_fallbacks += 1
+        if cand_df is not None or self._over_budget(snap, allt):
             cands = qstring.accepted_docs_df(self.spark, self.store, node,
                                              docs_df)
             if cand_df is not None:
@@ -1233,15 +1226,12 @@ class BM25Engine:
                 # a SELECTIVE filter must bind on the distributed path
                 # too (over-budget terms do not waive it): the small
                 # allowed set broadcasts into the semi-join
-                adf = self.spark.createDataFrame(
-                    [(int(d),) for d in allowed.tolist()], "doc_id long")
-                cands = cands.join(F.broadcast(adf), "doc_id", "left_semi")
-            res = score_query_batch(
+                cands = cands.join(self._doc_frame(allowed), "doc_id",
+                                   "left_semi")
+            return _ranked_hits(score_query_batch(
                 self.spark, self.store,
                 [{"query_id": 0, "text": " ".join(sorted(bag)),
-                  "boosts": bag}], k=k, candidates=cands)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()], bag
+                  "boosts": bag}], k=k, candidates=cands)), bag
         arrays = self._load_term_arrays(snap, allt)
         cand = self._eval_qstring_driver(snap, node, arrays, docs_df)
         if allowed is not None and len(cand):
@@ -1275,16 +1265,9 @@ class BM25Engine:
                 return np.unique(np.concatenate(
                     [docs_of(t) for t in exps] or [empty]))
             if isinstance(n, qstring.Phrase):
-                uts = sorted(set(n.terms))
-                if any(t not in arrays for t in uts):
+                cand = _conjunction(arrays, sorted(set(n.terms)))
+                if not len(cand):
                     return empty
-                by_rarity = sorted(uts, key=lambda t: len(arrays[t][1]))
-                cand = arrays[by_rarity[0]][1]
-                for t in by_rarity[1:]:
-                    cand = cand[np.isin(cand, arrays[t][1],
-                                        assume_unique=True)]
-                    if not len(cand):
-                        return empty
                 return self._phrase_verified_driver(
                     snap, n.terms, cand, n.slop, docs_df)
             if isinstance(n, qstring.And):
@@ -1310,30 +1293,33 @@ class BM25Engine:
 
     def _phrase_verified_driver(self, snap: Snapshot, terms, cand, slop,
                                 docs_df):
-        """FULL phrase verify of a conjunctive candidate array (set
-        composition needs every survivor, unlike phrase_topk's lazy
-        score-ordered verify): positions sidecar when ``docs_df`` is
-        None, else the candidate-semi-joined corpus scan with the
-        plan_barrier (phrase.py's r5 join-order rule). Returns a sorted
-        unique int64 array."""
+        """The docs of a candidate array (sorted unique int64) that hold
+        the phrase: chain-verified against the positional sidecar when
+        ``docs_df`` is None, else one Spark job over the
+        candidate-semi-joined corpus. Used by phrase_topk and the qstring
+        Phrase leaf. Returns a sorted unique int64 array."""
+        from ..index.positions import chain_match
         from .phrase import (joined_tokens_expr, phrase_pattern,
                              plan_barrier)
 
         if docs_df is None:
-            ver = self._verify_positions_driver(snap, terms, np.sort(cand),
-                                                slop)
-            return np.unique(np.asarray(ver, dtype=np.int64))
+            return np.array([d for d, lists in self._positions_of(
+                snap, terms, cand) if chain_match(lists, slop)],
+                dtype=np.int64)
         src = docs_df
         if "doc_id" not in src.columns:
             src = src.withColumn("doc_id", doc_id_expr("url"))
-        cdf = self.spark.createDataFrame(
-            [(int(d),) for d in cand.tolist()], "doc_id long")
-        jt = (src.join(F.broadcast(cdf), "doc_id")
+        # plan_barrier: without it Catalyst substitutes jt into the
+        # contains/rlike filter and pushes it BELOW the broadcast join —
+        # re-tokenizing the whole corpus (see phrase.py)
+        jt = (src.join(self._doc_frame(cand), "doc_id")
               .select("doc_id",
                       plan_barrier(joined_tokens_expr("text")).alias("jt")))
         pat = phrase_pattern(terms, slop)
         matcher = (F.col("jt").contains(pat) if slop == 0
                    else F.col("jt").rlike(pat))
+        # np.unique: a url ingested twice gives duplicate doc_id rows,
+        # and callers need a sorted-unique array
         return np.unique(np.array(
             [r["doc_id"] for r in
              jt.where(matcher).select("doc_id").collect()],
@@ -1352,13 +1338,7 @@ class BM25Engine:
         Returns a DataFrame (facet, n_docs), (n_docs DESC, facet)."""
         from .facets import facet_counts as _fc
 
-        if boolean:
-            expr = query
-        else:
-            terms = sorted(set(tokenize(query)))
-            if not terms:
-                raise ValueError("facet_counts needs at least one term")
-            expr = " OR ".join(terms)
+        expr = _match_expr(query, boolean, "facet_counts")
         return _fc(self.spark, self.store, expr, by=by, top=top,
                    granularity=granularity)
 
@@ -1371,13 +1351,7 @@ class BM25Engine:
         grammar as facet_counts."""
         from .facets import facet_stats as _fs
 
-        if boolean:
-            expr = query
-        else:
-            terms = sorted(set(tokenize(query)))
-            if not terms:
-                raise ValueError("facet_stats needs at least one term")
-            expr = " OR ".join(terms)
+        expr = _match_expr(query, boolean, "facet_stats")
         return _fs(self.spark, self.store, expr, val_col, by=by, top=top,
                    granularity=granularity)
 
@@ -1390,13 +1364,7 @@ class BM25Engine:
         window, nothing collected but the number)."""
         from .boolean import accepted_docs
 
-        if boolean:
-            expr = query
-        else:
-            terms = sorted(set(tokenize(query)))
-            if not terms:
-                raise ValueError("match_count needs at least one term")
-            expr = " OR ".join(terms)
+        expr = _match_expr(query, boolean, "match_count")
         return (accepted_docs(self.spark, self.store, [(0, expr)])
                 .select("doc_id").distinct().count())
 
@@ -1413,13 +1381,7 @@ class BM25Engine:
         sort_value)."""
         from .facets import sort_topk as _st
 
-        if boolean:
-            expr = query
-        else:
-            terms = sorted(set(tokenize(query)))
-            if not terms:
-                raise ValueError("sorted_topk needs at least one term")
-            expr = " OR ".join(terms)
+        expr = _match_expr(query, boolean, "sorted_topk")
         return _st(self.spark, self.store, expr, by, k=k,
                    ascending=ascending)
 
@@ -1521,12 +1483,14 @@ class BM25Engine:
         Over-budget queries fetch the needed (tf, dl) cells through the
         distributed plan instead of decoding driver-side: pruned
         postings -> decode -> semi-filter to the k hit doc_ids ->
-        collect k x |terms| rows (tiny)."""
+        collect k x |terms| rows (tiny). The budget is decided once,
+        by _topk's gate."""
         from ..analysis import bm25_term_score, idf
 
         engine, qtext = self._route(query)
         terms = sorted(set(tokenize(qtext)))
         snap = engine._snapshot()
+        n0 = engine.driver_fallbacks
         hits = engine._topk(snap, terms, k, "vectorized")
         if not hits:
             return []
@@ -1535,8 +1499,8 @@ class BM25Engine:
         cells: dict[str, dict[int, tuple[int, int]]] = {}
         dfs: dict[str, int] = {}
         hit_ids = {int(d) for d, _ in hits}
-        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
-            engine.driver_fallbacks += 1
+        if engine.driver_fallbacks > n0:
+            # _topk ran the distributed plan: nothing was decoded here
             rows = self._explain_cells_distributed(engine, snap, terms,
                                                    hit_ids)
             for term, df_t, doc, tf, dl in rows:
@@ -1585,9 +1549,7 @@ class BM25Engine:
                               snap.n_buckets).mapInPandas(
             decode_postings_map_in_pandas,
             schema="term_id long, doc_id long, tf int, dl int")
-        ids_df = self.spark.createDataFrame(
-            [(int(d),) for d in hit_ids], "doc_id long")
-        rows = (dec.join(F.broadcast(ids_df), "doc_id", "left_semi")
+        rows = (dec.join(self._doc_frame(hit_ids), "doc_id", "left_semi")
                 .collect())
         return [(tid[r["term_id"]], dfs[r["term_id"]], r["doc_id"],
                  r["tf"], r["dl"]) for r in rows]
@@ -1604,23 +1566,25 @@ class BM25Engine:
         inherent, exactly as in Lucene's WildcardQuery, so it runs as
         one small Spark job over the bucketed sidecar), caps to the
         ``max_expansions`` highest-df matches ((df DESC, term), the
-        MultiTermQuery rule), then scores the OR-bag through the
-        normal BM25 path. Needs an index built with ``vocab=True``."""
+        MultiTermQuery rule), then scores the OR-bag like prefix_topk,
+        under one snapshot and without summary routing. A pattern
+        without '*' is a plain term query. Needs an index built with
+        ``vocab=True``."""
         import re as _re
 
         if not pattern or pattern.strip("*") == "":
             raise ValueError("wildcard_topk needs a non-* literal")
+        snap = self._snapshot()
         if "*" not in pattern:
-            return self.topk(pattern, k, method=method)
-        regex = ("^" + ".*".join(_re.escape(p)
-                                 for p in pattern.split("*")) + "$")
-        expansions = self._expand_vocab(regex, max_expansions,
-                                        caller="wildcard_topk")
-        if not expansions:
-            return []
-        return self.topk(" ".join(sorted(expansions)), k, method=method)
+            terms = tokenize(pattern)
+        else:
+            terms = self._expand_vocab(
+                snap, "^" + ".*".join(_re.escape(p)
+                                      for p in pattern.split("*")) + "$",
+                max_expansions, caller="wildcard_topk")
+        return self._topk(snap, sorted(set(terms)), k, method)
 
-    def _expand_vocab(self, regex: str, max_expansions: int,
+    def _expand_vocab(self, snap: Snapshot, regex: str, max_expansions: int,
                       caller: str) -> list[str]:
         """Top-``max_expansions`` vocabulary terms matching an anchored
         regex, by (df DESC, term) — the Lucene MultiTermQuery rewrite
@@ -1628,12 +1592,8 @@ class BM25Engine:
         job over the bucketed vocab sidecar's identity rows (a full
         vocab scan is inherent: arbitrary regexes have no sort-order
         handle)."""
-        epoch = int(self.manifest["epoch"])
-        if not self.store.has_vocab(epoch):
-            raise ValueError(
-                f"{caller} needs the vocabulary sidecar — build "
-                "with vocab=True / run build_vocab")
-        vdf = self.spark.read.parquet(self.store.vocab_dir_for(epoch))
+        self._require_vocab(snap, caller)
+        vdf = self.spark.read.parquet(self.store.vocab_dir_for(snap.epoch))
         top = (vdf.where(F.col("variant") == F.col("term"))
                .where(F.col("term").rlike(regex))
                .orderBy(F.col("df").desc(), F.col("term").asc())
@@ -1647,7 +1607,8 @@ class BM25Engine:
         whole term must match, as in Lucene — '^'/'$' are implied and
         must not be passed) against the vocabulary sidecar, cap to the
         ``max_expansions`` highest-df matches, score the OR-bag through
-        the normal budget-gated BM25 path. The regex dialect is Spark's
+        the normal budget-gated BM25 path, like prefix_topk (one
+        snapshot, no summary routing). The regex dialect is Spark's
         rlike (Java regex) — validated on the driver before the scan so
         a bad pattern fails fast, not inside an executor."""
         import re as _re
@@ -1661,11 +1622,10 @@ class BM25Engine:
             _re.compile(regex)
         except _re.error as e:
             raise ValueError(f"invalid regex {regex!r}: {e}") from None
-        expansions = self._expand_vocab(f"^(?:{regex})$", max_expansions,
-                                        caller="regexp_topk")
-        if not expansions:
-            return []
-        return self.topk(" ".join(sorted(expansions)), k, method=method)
+        snap = self._snapshot()
+        expansions = self._expand_vocab(snap, f"^(?:{regex})$",
+                                        max_expansions, caller="regexp_topk")
+        return self._topk(snap, sorted(expansions), k, method)
 
     # -------------------------------------------------- significant terms
     def significant_terms(self, query: str, docs_df: DataFrame,
@@ -1717,24 +1677,14 @@ class BM25Engine:
         base = engine._topk(snap, terms, window, "vectorized")
         if not base:
             return []
-        runs = {t: engine._load_positions_term(snap, t) for t in terms}
+        lists = dict(engine._positions_of(
+            snap, terms, np.array([d for d, _ in base], dtype=np.int64)))
         out = []
         for doc, score in base:
-            pls = []
-            for t in terms:
-                r = runs.get(t)
-                if r is None:
-                    break
-                docs, off, flat = r
-                i = int(np.searchsorted(docs, doc))
-                if i >= len(docs) or int(docs[i]) != doc:
-                    break
-                pls.append(flat[off[i]:off[i + 1]])
             bonus = 0.0
-            if len(pls) == len(terms):
-                span = min_cover_span(pls)
-                if span is not None:
-                    bonus = float(weight) / (1.0 + span - len(terms))
+            span = min_cover_span(lists[doc]) if doc in lists else None
+            if span is not None:
+                bonus = float(weight) / (1.0 + span - len(terms))
             out.append((int(doc), float(score) + bonus))
         out.sort(key=lambda x: (-round(x[1], 9), x[0]))
         return out[:k]
@@ -1782,60 +1732,22 @@ class BM25Engine:
                 " with positions=True / run build_positions")
         # no summary routing: a proximity query legitimately starts
         # with 'summary'/'summarize' and must not lose that term
-        engine, qtext = self, query
-        terms = sorted(set(tokenize(qtext)))
+        terms = sorted(set(tokenize(query)))
         if len(terms) < 2:
             raise ValueError("span_near_topk needs >= 2 distinct terms")
-        if engine._uncached_df_total(snap, terms) > engine.driver_df_budget:
-            engine.driver_fallbacks += 1
+        if self._over_budget(snap, terms):
             from .phrase import score_phrase_batch
 
-            res = score_phrase_batch(
-                self.spark, engine.store, None,
-                [(0, " ".join(terms))], k=k, slop=slop,
-                match_fn=span_match)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
-        arrays = engine._load_term_arrays(snap, terms)
-        if len(arrays) < len(terms):
-            return []  # some term has no postings at all
-        by_rarity = sorted(terms, key=lambda t: len(arrays[t][1]))
-        cand = arrays[by_rarity[0]][1]
-        for t in by_rarity[1:]:
-            cand = cand[np.isin(cand, arrays[t][1], assume_unique=True)]
-            if not len(cand):
-                return []
-        # LAZY, score-ordered verify (phrase_topk's device): rank ALL
-        # candidates by BM25 first (scores need no verify), then
-        # span-check in descending-score batches and stop as soon as k
-        # survive — cost tracks k, not the conjunction size. A 2-term
-        # query of common terms can have 10^5 conjunctive candidates;
-        # verifying them all made the bench leg 1.5 s/query.
-        from .wand import accumulate_scores
-
-        uniqc, sc = accumulate_scores(arrays, candidates=cand, **snap.bm25)
-        order = np.lexsort((uniqc, -np.round(sc, 9)))
-        rd, rs = uniqc[order], sc[order]
-        runs = {t: engine._load_positions_term(snap, t) for t in terms}
-        if any(runs.get(t) is None for t in terms):
+            return _ranked_hits(score_phrase_batch(
+                self.spark, self.store, None, [(0, " ".join(terms))], k=k,
+                slop=slop, match_fn=span_match))
+        arrays = self._load_term_arrays(snap, terms)
+        cand = _conjunction(arrays, terms)
+        if not len(cand):
             return []
-        out: list[tuple[int, float]] = []
-        step = max(4 * k, 64)
-        for i in range(0, len(rd), step):
-            for doc, score in zip(rd[i:i + step].tolist(),
-                                  rs[i:i + step].tolist()):
-                pls = []
-                for t in terms:
-                    docs, off, flat = runs[t]
-                    j = int(np.searchsorted(docs, doc))
-                    if j >= len(docs) or int(docs[j]) != doc:
-                        break
-                    pls.append(flat[off[j]:off[j + 1]])
-                if len(pls) == len(terms) and span_match(pls, slop):
-                    out.append((int(doc), float(score)))
-            if len(out) >= k:
-                break
-        return out[:k]
+        return _lazy_verified(snap, arrays, cand, k, lambda batch: np.array(
+            [d for d, lists in self._positions_of(snap, terms, batch)
+             if span_match(lists, slop)], dtype=np.int64))
 
     # ------------------------------------------------------------ synonyms
     def synonym_topk(self, query: str, synonyms: dict[str, list[str]],
@@ -1864,13 +1776,10 @@ class BM25Engine:
         if not all_terms:
             return []
         snap = engine._snapshot()
-        if engine._uncached_df_total(snap, all_terms) > engine.driver_df_budget:
-            engine.driver_fallbacks += 1
-            res = score_synonym_batch(
+        if engine._over_budget(snap, all_terms):
+            return _ranked_hits(score_synonym_batch(
                 self.spark, engine.store,
-                [{"query_id": 0, "groups": groups}], k=k)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
+                [{"query_id": 0, "groups": groups}], k=k))
         arrays = engine._load_term_arrays(snap, all_terms)
         blended: dict[str, tuple] = {}
         for gkey, members in groups.items():

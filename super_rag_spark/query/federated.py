@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..analysis import tokenize
-from .engine import BM25Engine
+from .engine import BM25Engine, _ranked_hits
 from .scoring import (DECODED_SCHEMA, contribution_expr,
                       decode_postings_map_in_pandas, lookup_term_dfs,
                       pruned_postings, with_df_idf)
@@ -68,10 +68,10 @@ class FederatedEngine:
         """Driver fast path: per-shard decoded arrays merged per term,
         scored ONCE with global (n_docs, avgdl, summed df), all from one
         snapshot per shard. Each shard's own cache serves repeats.
-        Budget: the per-shard
-        uncached-df gate applies per shard — if ANY shard's terms
-        exceed its driver budget, the whole query routes to the
-        distributed plan."""
+        Budget: each shard's df budget gate (BM25Engine._over_budget)
+        is asked in turn; the first shard over its budget counts the
+        fallback and the whole query routes to the distributed
+        plan."""
         import numpy as np
 
         from .wand import vectorized_topk_arrays
@@ -80,13 +80,11 @@ class FederatedEngine:
         if not terms:
             return []
         snaps = [s._snapshot() for s in self.shards]
-        if any(s._uncached_df_total(snap, terms) > s.driver_df_budget
+        if any(s._over_budget(snap, terms)
                for s, snap in zip(self.shards, snaps)):
-            res = score_federated_batch(
+            return _ranked_hits(score_federated_batch(
                 self.spark, self.shards, [{"query_id": 0, "text": query}],
-                k=k)
-            return [(int(r["doc_id"]), float(r["score"]))
-                    for r in res.orderBy("rank").collect()]
+                k=k))
         merged: dict[str, list] = {}
         for s, snap in zip(self.shards, snaps):
             for t, (df_t, docs, tfs, dls) in s._load_term_arrays(

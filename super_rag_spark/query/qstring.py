@@ -333,27 +333,28 @@ def _validate(node, under_or: bool, is_root: bool = False):
 
 # -------------------------------------------------------- tree walks
 
-def expand_leaves(engine, node, max_expansions: int = 50):
-    """Resolve Prefix/Fuzzy leaves against the engine's vocabulary
-    sidecar IN PLACE (df DESC, term capped at ``max_expansions`` — the
-    Lucene MultiTermQuery rewrite). Returns ``node``. Raises if such a
-    leaf exists and the sidecar does not."""
+def expand_leaves(engine, snap, node, max_expansions: int = 50):
+    """Resolve Prefix/Wildcard/Fuzzy leaves against the engine's
+    vocabulary sidecar at the query's snapshot ``snap``, IN PLACE (df
+    DESC, term capped at ``max_expansions`` — the Lucene MultiTermQuery
+    rewrite). Returns ``node``. Raises if such a leaf exists and the
+    sidecar does not."""
     if isinstance(node, Prefix):
         node.expansions = [t for t, _ in
-                           engine.suggest(node.stem, k=max_expansions)]
+                           engine._suggest(snap, node.stem, max_expansions)]
     elif isinstance(node, Wildcard):
         regex = "^" + ".*".join(re.escape(p)
                                 for p in node.pattern.split("*")) + "$"
         node.expansions = engine._expand_vocab(
-            regex, max_expansions, caller="query_string_topk")
+            snap, regex, max_expansions, caller="query_string_topk")
     elif isinstance(node, Fuzzy):
-        node.expansions = engine.fuzzy_expansions(
-            node.text, node.dist, max_expansions)
+        node.expansions = engine._fuzzy_expansions(
+            snap, node.text, node.dist, max_expansions)
     elif isinstance(node, Not):
-        expand_leaves(engine, node.child, max_expansions)
+        expand_leaves(engine, snap, node.child, max_expansions)
     elif isinstance(node, (And, Or)):
         for c in node.children:
-            expand_leaves(engine, c, max_expansions)
+            expand_leaves(engine, snap, c, max_expansions)
     return node
 
 

@@ -20,6 +20,7 @@ doc_id asc (SURVEY.md §2.5).
 
 from __future__ import annotations
 
+import os
 from typing import Iterator
 
 import pandas as pd
@@ -70,6 +71,18 @@ def analyze_queries(queries: list[dict]) -> pd.DataFrame:
                         columns=["query_id", "term", "term_id", "weight"])
 
 
+def _bucket_dir(base: str, bucket: int) -> str:
+    """The ``bucket=<bucket>`` dir of a postings or term_stats epoch dir.
+    Build, merge and compaction write every bucket dir of both tables,
+    so a missing one is lost data: it raises instead of reading as an
+    empty bucket."""
+    p = os.path.join(base, f"bucket={bucket}")
+    if not os.path.isdir(p):
+        raise FileNotFoundError(
+            f"bucket {bucket} of {os.path.basename(base)} is missing: {p}")
+    return p
+
+
 def lookup_term_dfs(store: IndexStorage, term_ids: list[int],
                     n_buckets: int, epoch: int) -> dict[int, int]:
     """Driver-side df lookup from the term_stats table (v3 blocks are
@@ -77,8 +90,6 @@ def lookup_term_dfs(store: IndexStorage, term_ids: list[int],
     by term_id against sorted row groups — O(query terms), never a Spark
     job. This is why term_stats exists as its own table: a head term at
     10^12 docs has millions of block rows; its df is ONE row here."""
-    import os
-
     import pyarrow.dataset as pads
 
     by_bucket: dict[int, list[int]] = {}
@@ -86,9 +97,7 @@ def lookup_term_dfs(store: IndexStorage, term_ids: list[int],
         by_bucket.setdefault(bucket_of_term_id(t, n_buckets), []).append(t)
     out: dict[int, int] = {}
     for b, ts in by_bucket.items():
-        p = os.path.join(store.term_stats_dir_for(epoch), f"bucket={b}")
-        if not os.path.isdir(p):
-            continue
+        p = _bucket_dir(store.term_stats_dir_for(epoch), b)
         tbl = pads.dataset(p, format="parquet").to_table(
             filter=pads.field("term_id").isin(ts), columns=["term_id", "df"])
         out.update(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
@@ -134,10 +143,14 @@ def pruned_postings(spark: SparkSession, store: IndexStorage, term_ids: list[int
                     n_buckets: int) -> DataFrame:
     """Postings scan restricted to the buckets owning the query terms
     (directory-level partition pruning) and the term ids themselves
-    (parquet row-group min/max pruning — files are sorted by term_id)."""
+    (parquet row-group min/max pruning — files are sorted by term_id).
+    A missing bucket dir raises rather than scanning as empty."""
     buckets = sorted({bucket_of_term_id(t, n_buckets) for t in term_ids})
+    epoch = store.epoch()
+    for b in buckets:
+        _bucket_dir(store.postings_dir_for(epoch), b)
     return (
-        store.postings(spark)
+        store.postings(spark, epoch)
         .where(F.col("bucket").isin(buckets))
         .where(F.col("term_id").isin(list(term_ids)))
     )
@@ -501,8 +514,6 @@ def _read_blocks_by_tid(pdir: str, n_buckets: int,
     path (BM25Engine._load_term_blocks) without its per-epoch cache,
     shared by the direct-read WAND batch plan (driver-broadcast and
     per-partition variants)."""
-    import os
-
     import pyarrow.dataset as pads
 
     by_bucket: dict[int, list[int]] = {}
@@ -510,10 +521,8 @@ def _read_blocks_by_tid(pdir: str, n_buckets: int,
         by_bucket.setdefault(int(tid) % n_buckets, []).append(int(tid))
     out: dict[int, list[dict]] = {}
     for bkt, tids in by_bucket.items():
-        p = os.path.join(pdir, f"bucket={bkt}")
-        if not os.path.isdir(p):
-            continue
-        tbl = pads.dataset(p, format="parquet").to_table(
+        tbl = pads.dataset(_bucket_dir(pdir, bkt),
+                           format="parquet").to_table(
             filter=pads.field("term_id").isin(tids), columns=_BLK_COLS)
         cols = {c: tbl[c].to_pylist() for c in _BLK_COLS}
         for i in range(tbl.num_rows):

@@ -26,13 +26,19 @@ def _docs(spark, rs):
 
 
 def test_build_writes_every_bucket_dir(spark, tmp_path):
-    """Two docs cannot fill 8 buckets: the empty ones still get dirs, so
-    a missing dir always means lost data."""
+    """Two docs cannot fill 8 buckets: the empty ones still get dirs,
+    after the build and after a compaction, so a missing dir always
+    means lost data."""
     eng = BM25Engine(spark, str(tmp_path / "tiny")).build(
         _docs(spark, [("https://t/1", "one"), ("https://t/2", "two")]), **CFG)
-    for d in (eng.store.postings_dir_for(0), eng.store.term_stats_dir_for(0)):
-        assert {n for n in os.listdir(d) if n.startswith("bucket=")} == {
-            f"bucket={b}" for b in range(8)}
+    for compact in (False, True):
+        if compact:
+            compact_index(spark, eng.store.root)
+        epoch = eng.store.epoch()
+        for d in (eng.store.postings_dir_for(epoch),
+                  eng.store.term_stats_dir_for(epoch)):
+            assert {n for n in os.listdir(d) if n.startswith("bucket=")} == {
+                f"bucket={b}" for b in range(8)}, (compact, d)
 
 
 def test_missing_bucket_dir_fails_loudly(spark, rows, tmp_path):
@@ -51,6 +57,32 @@ def test_missing_bucket_dir_fails_loudly(spark, rows, tmp_path):
     with pytest.raises(FileNotFoundError, match="bucket 3 of epoch 0"):
         compact_index(spark, eng.store.root)
     assert eng.store.epoch() == 0
+
+
+@pytest.mark.parametrize("table", ["postings", "term_stats"])
+def test_missing_bucket_dir_fails_queries(spark, rows, tmp_path, table):
+    """A query touching a lost postings or term_stats bucket dir raises
+    on the driver and distributed paths instead of returning only the
+    other buckets' hits."""
+    import shutil
+
+    from super_rag_spark.analysis import tokenize
+    from super_rag_spark.index.storage import bucket_of_term
+
+    eng = BM25Engine(spark, str(tmp_path / table)).build(
+        _docs(spark, rows[:100]), **CFG)
+    terms = sorted(set(tokenize(rows[0][1])))
+    lost = bucket_of_term(terms[0], CFG["n_buckets"])
+    other = next(t for t in terms
+                 if bucket_of_term(t, CFG["n_buckets"]) != lost)
+    q = f"{terms[0]} {other}"
+    shutil.rmtree(os.path.join(getattr(eng.store, f"{table}_dir_for")(0),
+                               f"bucket={lost}"))
+    with pytest.raises(FileNotFoundError, match=f"bucket {lost} "):
+        eng.topk(q, 10)
+    for plan in (eng.query_batch, eng.query_batch_wand):
+        with pytest.raises(FileNotFoundError, match=f"bucket {lost} "):
+            plan([{"query_id": 0, "text": q}], k=10).collect()
 
 
 def test_corrupt_tombstones_stop_the_merge(spark, rows, tmp_path):

@@ -69,6 +69,7 @@ def test_federated_budget_fallback_matches(spark, sharded):
         s._cache.clear()
     got = fed.topk(q, k=10)
     assert [d for d, _ in got] == [d for d, _ in want]
+    assert sum(s.driver_fallbacks for s in fed.shards) == 1
 
 
 def test_federated_rejects_mismatched_shards(spark, tmp_path):

@@ -154,6 +154,34 @@ def test_prefix_topk_wildcard(spark, fuzzy_engine):
         eng.prefix_topk("", k=5)
 
 
+def test_vocab_expansions_skip_summary_routing(spark, tmp_path):
+    """Expanded terms are scored as they are: a leading 'summar' token
+    routes a topk query string to the summary index, but an expansion
+    set (or a '*'-free wildcard) is never routed, so 'summ' keeps
+    'summary'."""
+    from super_rag_spark.oracle import build_oracle
+    from super_rag_spark.query.engine import BM25Engine
+
+    rows = [(f"https://sm.example/{i}",
+             ["summary of the summer", "summer camp notes", "a summary",
+              "summit in summer"][i % 4] + f" pad{i}")
+            for i in range(16)]
+    eng = BM25Engine(spark, str(tmp_path / "summ")).build(
+        spark.createDataFrame(rows, "url string, text string"),
+        vocab=True, text_is_extracted=True)
+    oracle = build_oracle(rows)
+    want = oracle.topk("summary summer summit", k=20)
+    cases = [(eng.prefix_topk("summ", k=20), want),
+             (eng.wildcard_topk("summ*", k=20), want),
+             (eng.regexp_topk("summ[a-z]*", k=20), want),
+             (eng.wildcard_topk("summary", k=20),
+              oracle.topk("summary", k=20))]
+    for got, exp in cases:
+        assert exp and [d for d, _ in got] == [d for d, _ in exp]
+        assert [s for _, s in got] == pytest.approx([s for _, s in exp],
+                                                    rel=1e-9)
+
+
 # --------------------------------------------------------- depth-2 (r5)
 
 @pytest.fixture(scope="module")

@@ -331,7 +331,8 @@ def test_accepted_docs_plan_reads_only_index(qs_setup):
         assert marker not in plan, marker
 
     # phrase leaf, positional sidecar: still no corpus in the plan
-    node = expand_leaves(eng, parse_query_string('"alpha beta" AND common'))
+    node = expand_leaves(eng, eng._snapshot(),
+                         parse_query_string('"alpha beta" AND common'))
     cand = accepted_docs_df(eng.spark, eng.store, node)
     plan = plan_of(cand)
     assert "positions" in plan

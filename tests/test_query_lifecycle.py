@@ -53,17 +53,30 @@ def test_distributed_filter_matches_driver(built_index, docs_meta, queries100):
 
 
 def test_search_distributed_path_matches_driver(built_index, docs_meta, queries100):
-    """driver_filter_max=0 forces the semi-join plan; ranking must be
-    identical to the driver fast path (same contribution exprs)."""
+    """driver_filter_max=0 forces the semi-join plan, and a zero driver
+    df budget sends the selective filter's candidates to the
+    distributed WAND plan; ranking must be identical to the driver fast
+    path (same contribution exprs)."""
     q = queries100[3]["text"]
     drv = built_index.search(q, k=10, docs_meta=docs_meta,
                              where=F.col("lang") == "en").collect()
     dist = built_index.search(q, k=10, docs_meta=docs_meta,
                               where=F.col("lang") == "en",
                               driver_filter_max=0).collect()
+    old = built_index.driver_df_budget
+    try:
+        built_index.driver_df_budget = 0
+        built_index._cache.clear()  # cached terms cost nothing
+        n0 = built_index.driver_fallbacks
+        budget = built_index.search(q, k=10, docs_meta=docs_meta,
+                                    where=F.col("lang") == "en").collect()
+        assert built_index.driver_fallbacks == n0 + 1
+    finally:
+        built_index.driver_df_budget = old
     key = lambda rows: [(r["doc_id"], round(r["score"], 9))
                         for r in sorted(rows, key=lambda r: r["rank"])]
     assert key(dist) == key(drv)
+    assert key(budget) == key(drv)
     assert len(drv) > 0
 
 

@@ -95,6 +95,7 @@ def test_one_manifest_stat_per_query(spark, corpus, shards, monkeypatch):
         "weighted": lambda: eng.weighted_topk("semudo^2 muro gaku", 10),
         "phrase": lambda: eng.phrase_topk(phrase, k=5),
         "fuzzy": lambda: eng.fuzzy_topk("semudp muro", 10),
+        "prefix": lambda: eng.prefix_topk("semu", k=10),
         "federated": lambda: fed.topk(QUERY, 10),
     }
     paths = [os.path.join(d, "manifest.json") for d in shards]
