@@ -56,6 +56,8 @@ def _stats(index_dir: str) -> dict:
     any size."""
     import statistics
 
+    import pyarrow.parquet as pq
+
     from super_rag_spark.index.storage import IndexStorage
 
     store = IndexStorage(index_dir)
@@ -63,7 +65,10 @@ def _stats(index_dir: str) -> dict:
     pdir = store.postings_dir
 
     bucket_bytes: dict[str, int] = {}
-    n_files = 0
+    # row groups per postings file, and each row group's compressed
+    # bytes: a cold query term reads its whole row group once per epoch
+    rg_counts: list[int] = []
+    rg_bytes = [0]
     for entry in sorted(os.listdir(pdir)):
         bdir = os.path.join(pdir, entry)
         if not (entry.startswith("bucket=") and os.path.isdir(bdir)):
@@ -71,15 +76,19 @@ def _stats(index_dir: str) -> dict:
         sz = 0
         for f in os.listdir(bdir):
             if f.endswith(".parquet"):
-                sz += os.path.getsize(os.path.join(bdir, f))
-                n_files += 1
+                path = os.path.join(bdir, f)
+                sz += os.path.getsize(path)
+                md = pq.read_metadata(path)
+                rg_counts.append(md.num_row_groups)
+                rg_bytes.extend(
+                    sum(rg.column(c).total_compressed_size
+                        for c in range(rg.num_columns))
+                    for rg in map(md.row_group, range(md.num_row_groups)))
         bucket_bytes[entry.split("=", 1)[1]] = sz
 
     tombs = 0
     tdir = store.tombstones_dir
     if tdir and os.path.isdir(tdir):
-        import pyarrow.parquet as pq
-
         for root, _, files in os.walk(tdir):
             for f in files:
                 if f.endswith(".parquet"):
@@ -101,7 +110,13 @@ def _stats(index_dir: str) -> dict:
         "avgdl": m["avgdl"],
         "n_buckets": m["n_buckets"],
         "index_bytes": sum(sizes),
-        "postings_files": n_files,
+        "postings_files": len(rg_counts),
+        "row_groups_per_file": {
+            "min": min(rg_counts, default=0),
+            "max": max(rg_counts, default=0),
+            "mean": round(statistics.mean(rg_counts or [0]), 2),
+        },
+        "max_row_group_compressed_bytes": max(rg_bytes),
         "pending_tombstones": tombs,
         "lineage_records": lineage_records,
         "bucket_bytes": {

@@ -21,6 +21,8 @@ Encoding of one block (<= BLOCK_SIZE postings of one term):
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 
 LEB_MAX_BYTES = 10  # 64-bit value -> at most 10 LEB128 bytes
@@ -67,23 +69,39 @@ def encode_varint(values: np.ndarray) -> bytes:
     return encode_varint_sizes(values)[0]
 
 
-def decode_varint(buf: bytes, count: int) -> np.ndarray:
-    """Decode ``count`` LEB128 values from ``buf`` (vectorized)."""
-    if count == 0:
-        return np.empty(0, dtype=np.int64)
+# input bytes decoded per pass of decode_varint: bounds its temporaries
+# (about 40 B per input byte) and leaves a query's streams one pass
+_VARINT_PASS_BYTES = 1 << 16
+
+
+def decode_varint(buf, count: int) -> np.ndarray:
+    """Decode ``count`` LEB128 values from ``buf``, bytes or a uint8
+    array (vectorized). Each pass takes the whole values in the next
+    bytes, shifts every byte's 7 payload bits to their place in its
+    value and ORs each value's bytes together: a fixed number of NumPy
+    calls per pass, not one round per byte position."""
     raw = np.frombuffer(buf, dtype=np.uint8)
-    is_last = (raw & 0x80) == 0
-    # index of each value's terminating byte; value i spans (ends[i-1]+1 .. ends[i])
-    ends = np.flatnonzero(is_last)
-    assert ends.size == count, f"varint stream has {ends.size} values, expected {count}"
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    out = np.zeros(count, dtype=np.uint64)
-    max_len = int((ends - starts).max()) + 1
-    for k in range(max_len):
-        sel = starts + k <= ends
-        b = raw[starts[sel] + k].astype(np.uint64)
-        out[sel] |= (b & np.uint64(0x7F)) << np.uint64(7 * k)
-    return out.astype(np.int64)
+    out = np.empty(count, dtype=np.uint64)
+    n = b0 = 0
+    while b0 < len(raw):
+        chunk = raw[b0:b0 + _VARINT_PASS_BYTES]
+        ends = np.flatnonzero(chunk < 0x80)  # each value's last byte
+        if not len(ends) or n + len(ends) > count:
+            break
+        chunk = chunk[:int(ends[-1]) + 1]
+        starts = np.empty(len(ends), dtype=np.int64)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        shift = np.arange(len(chunk), dtype=np.uint64)
+        shift -= np.repeat(starts, ends + 1 - starts).astype(np.uint64)
+        shift *= np.uint64(7)
+        payload = (chunk & 0x7F).astype(np.uint64) << shift
+        out[n:n + len(ends)] = np.bitwise_or.reduceat(payload, starts)
+        n += len(ends)
+        b0 += len(chunk)
+    assert n == count and b0 == len(raw), (
+        f"varint stream of {len(raw)} bytes does not hold {count} values")
+    return out.view(np.int64)
 
 
 def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
@@ -156,7 +174,20 @@ def decode_positions_block(docs_enc: bytes, cnt_enc: bytes, pos_enc: bytes,
     return docs, counts, flat
 
 
-def decode_blocks_batch(blocks: list[dict]):
+class EncodedBlocks(NamedTuple):
+    """Blocks laid end to end: each encoded stream as one uint8 array
+    (the blocks' ``docs_enc``/``tfs_enc``/``dls_enc`` bytes in block
+    order) and each block's posting count ``n``. A run of consecutive
+    rows of a postings table is this with no copy: the byte range of
+    each binary column's value buffer that those rows span."""
+
+    docs_enc: np.ndarray
+    tfs_enc: np.ndarray
+    dls_enc: np.ndarray
+    n: np.ndarray
+
+
+def decode_blocks_batch(blocks):
     """Decode MANY blocks in one vectorized pass.
 
     LEB128 streams concatenate, so the per-call NumPy dispatch overhead
@@ -166,19 +197,24 @@ def decode_blocks_batch(blocks: list[dict]):
     where C is the global gap cumsum (each block's first gap is the
     absolute doc id), vectorized with a per-block offset repeat.
 
-    blocks: dicts with docs_enc/tfs_enc/dls_enc/n.
+    blocks: an :class:`EncodedBlocks`, or a list of dicts with
+    docs_enc/tfs_enc/dls_enc/n (joined into one first).
     Returns (doc_ids, tfs, dls, ns) int64 arrays; ns = block lengths.
     """
-    if not blocks:
-        z = np.empty(0, dtype=np.int64)
-        return z, z, z, z
-    ns = np.array([b["n"] for b in blocks], dtype=np.int64)
+    if not isinstance(blocks, EncodedBlocks):
+        blocks = EncodedBlocks(
+            b"".join(b["docs_enc"] for b in blocks),
+            b"".join(b["tfs_enc"] for b in blocks),
+            b"".join(b["dls_enc"] for b in blocks),
+            np.array([b["n"] for b in blocks], dtype=np.int64))
+    ns = np.asarray(blocks.n, dtype=np.int64)
     total = int(ns.sum())
-    gaps = decode_varint(b"".join(b["docs_enc"] for b in blocks), total)
-    tfs = decode_varint(b"".join(b["tfs_enc"] for b in blocks), total)
-    dls = decode_varint(b"".join(b["dls_enc"] for b in blocks), total)
-    c = np.cumsum(gaps)
+    gaps = decode_varint(blocks.docs_enc, total)
+    tfs = decode_varint(blocks.tfs_enc, total)
+    dls = decode_varint(blocks.dls_enc, total)
+    if not total:
+        return gaps, tfs, dls, ns
+    docs = np.cumsum(gaps, out=gaps)
     starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
-    offsets = np.where(starts > 0, c[starts - 1], 0)
-    docs = c - np.repeat(offsets, ns)
+    docs -= np.repeat(np.where(starts > 0, docs[starts - 1], 0), ns)
     return docs, tfs, dls, ns

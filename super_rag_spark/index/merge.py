@@ -214,9 +214,13 @@ def _rewrite_buckets(spark: SparkSession, store: IndexStorage, ep: _Epoch,
     if keep is not None:
         out = keep.unionByName(out)
     # dynamic partition overwrite: replaces exactly this wave's bucket
-    # dirs, leaves linked/committed buckets alone; idempotent on resume
+    # dirs, leaves linked/committed buckets alone; idempotent on resume.
+    # The sort leads with the partition column the writer orders by:
+    # sorted on (term_id, ...) alone, a rewritten bucket file came out
+    # in no term_id order, which the query engine's term directory
+    # needs (tests/test_term_directory.py)
     (out.repartition("bucket")
-     .sortWithinPartitions("term_id", "salt", "block_id")
+     .sortWithinPartitions("bucket", "term_id", "salt", "block_id")
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
      .partitionBy("bucket").parquet(new_dir))

@@ -174,27 +174,22 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     # (build.py): without it a url ingested twice would merge BOTH
     # copies' positions into one doc_id — phantom index-only phrase
     # matches the postings (which kept one copy) can never produce.
-    # r6: the fast probe is a plain row count against the manifest's
-    # (deduped) n_docs — docs_df is contractually the corpus
-    # build_index saw, so a count mismatch is exactly "duplicates
-    # present" and costs a metadata count instead of a full
-    # extract+tokenize+countDistinct pass; only a mismatch pays the
-    # full guard + dedup.
-    n_in = docs_df.count()
+    # One aggregation compares the row count with the distinct urls (a
+    # count against the manifest's n_docs misses a corpus with one url
+    # duplicated and another missing); only a duplicate pays the dedup.
+    st = docs_df.agg(F.count(F.lit(1)).alias("n"),
+                     F.countDistinct("url").alias("u")).collect()[0]
     if not text_is_extracted:
         docs_df = (extract(docs_df) if extract_mode == "html"
                    else extract_any(docs_df))
     toks = tokens_from_text(docs_df)
-    if n_in != int(manifest["n_docs"]):
-        st = toks.agg(F.count(F.lit(1)).alias("n"),
-                      F.countDistinct("doc_id").alias("u")).collect()[0]
-        if int(st["n"]) != int(st["u"]):
-            from pyspark.sql import Window
+    if int(st["n"]) != int(st["u"]):
+        from pyspark.sql import Window
 
-            w = Window.partitionBy("doc_id").orderBy(
-                F.md5(F.concat_ws(" ", "tokens")).desc(), F.desc("dl"))
-            toks = (toks.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") == 1).drop("_rn"))
+        w = Window.partitionBy("doc_id").orderBy(
+            F.md5(F.concat_ws(" ", "tokens")).desc(), F.desc("dl"))
+        toks = (toks.withColumn("_rn", F.row_number().over(w))
+                .where(F.col("_rn") == 1).drop("_rn"))
     pos_rows = (
         toks.select("doc_id", F.posexplode("tokens").alias("pos", "term"))
         .select(term_id_expr("term").alias("term_id"), "doc_id",

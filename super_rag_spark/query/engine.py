@@ -3,10 +3,10 @@
 - build()        builds the index (the reference's ingest endpoint)
 - query_batch()  distributed Spark plan for query batches (its query
                  endpoint)
-- topk()         the same query on the driver: a pyarrow read of the
-                 buckets and term_ids the query touches, then NumPy
-                 scoring over the cached decoded postings or block-max
-                 WAND over the encoded blocks (rank-identical)
+- topk()         the same query on the driver: NumPy scoring over the
+                 cached decoded postings or block-max WAND over the
+                 encoded blocks (rank-identical), both fed by the
+                 per-epoch term directory below
 - delete_urls()  tombstone append (its delete endpoint); postings are
                  cleaned at the next merge and masked at query time
 - summary routing: topk-style queries starting with "summarize" run on
@@ -17,6 +17,19 @@ budget-gated driver query asks one gate, ``_over_budget``: when the
 uncached terms' Σdf exceeds ``driver_df_budget`` it counts one
 ``driver_fallbacks`` and the query runs its rank-identical distributed
 plan instead of decoding O(df) postings on the driver.
+
+Term directory: every driver df and postings lookup goes through one
+directory per epoch, held in the cache. df is a searchsorted into the
+term's term_stats bucket, read whole once into sorted NumPy arrays. A
+term's postings are in the row groups whose term_id min/max, from the
+footers of its bucket's files (one per segment run), hold its term_id;
+each row group is read from disk at most once per epoch (sorted by
+term_id on load if a writer left it out of order), and the term's
+blocks are a searchsorted slice of it. So a cold term costs one
+row-group read per epoch, shared by every term of that row group, and
+an OOV term reads no postings. The missed terms of a query decode in
+one ``codec.decode_blocks_batch`` call, straight from the row groups'
+Arrow varint buffers.
 """
 
 from __future__ import annotations
@@ -26,7 +39,9 @@ from collections import OrderedDict
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,6 +66,83 @@ _BLOCK_COLS = ["term_id", "salt", "seg", "block_id", "n", "first_doc_id",
 # bytes charged to every cache entry on top of its payload: the key
 # tuple, the term string and the value tuple
 _ENTRY_BYTES = 200
+
+_ENC_COLS = ("docs_enc", "tfs_enc", "dls_enc")
+
+_TERM_STATS_COLS = pa.schema([("term_id", pa.int64()), ("df", pa.int64())])
+
+
+class _Directory(NamedTuple):
+    """The postings files of one bucket of an epoch, one per segment
+    run, with each file's row-group term_id minima and maxima from its
+    parquet footer."""
+
+    paths: list[str]
+    mins: list[np.ndarray]
+    maxs: list[np.ndarray]
+
+
+class _RowGroup(NamedTuple):
+    """One postings row group held by the cache: its block rows as one
+    Arrow record batch, plus NumPy views of its term_id and n columns
+    and of each encoded column's (value offsets, value bytes), so a
+    term's blocks are a searchsorted slice decoded without a copy."""
+
+    batch: pa.RecordBatch
+    tid: np.ndarray
+    n: np.ndarray
+    enc: tuple[tuple[np.ndarray, np.ndarray], ...]
+
+    def stream(self, col: int, start: int, stop: int) -> np.ndarray:
+        """The bytes rows [start, stop) hold in ``_ENC_COLS[col]``, as a
+        view of its value buffer."""
+        off, data = self.enc[col]
+        return data[off[start]:off[stop]]
+
+
+def _term_id_ranges(path: str) -> tuple[np.ndarray, np.ndarray]:
+    """Each row group's term_id (min, max) from one postings file's
+    footer. A row group without term_id statistics raises ValueError
+    naming the file: the directory finds a term's row groups by them."""
+    with pq.ParquetFile(path) as pf:
+        md = pf.metadata
+    col = md.schema.names.index("term_id")
+    lo, hi = [], []
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(col).statistics
+        if st is None or not st.has_min_max:
+            raise ValueError(f"{path}: row group {g} has no term_id"
+                             " min/max statistics")
+        lo.append(st.min)
+        hi.append(st.max)
+    return np.array(lo, dtype=np.int64), np.array(hi, dtype=np.int64)
+
+
+def _binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(value offsets, value bytes) of a binary Arrow array as NumPy
+    views: row i's bytes are ``data[off[i]:off[i + 1]]``."""
+    _, offsets, data = arr.buffers()
+    if offsets is None or data is None:  # no rows, or only empty values
+        return np.zeros(len(arr) + 1, dtype=np.int64), np.empty(0, np.uint8)
+    dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(offsets, dtype=dtype)[arr.offset:arr.offset + len(arr) + 1]
+    return off, np.frombuffer(data, dtype=np.uint8)
+
+
+def _row_group_of(tbl: pa.Table) -> _RowGroup:
+    """A read row group as a _RowGroup, sorted by term_id (stably, once,
+    when a writer left it out of order): terms are sliced out of it by
+    searchsorted."""
+    batch = pa.RecordBatch.from_arrays(
+        [tbl.column(c).combine_chunks() for c in _BLOCK_COLS],
+        names=_BLOCK_COLS)
+    tid = batch.column("term_id").to_numpy()
+    if (tid[1:] < tid[:-1]).any():
+        batch = batch.take(np.argsort(tid, kind="stable"))
+        tid = batch.column("term_id").to_numpy()
+    return _RowGroup(batch, tid, batch.column("n").to_numpy(),
+                     tuple(_binary_buffers(batch.column(c))
+                           for c in _ENC_COLS))
 
 
 def _ranked_hits(res: DataFrame) -> list[tuple[int, float]]:
@@ -137,7 +229,15 @@ class Snapshot(NamedTuple):
 class _Cache:
     """LRU over ``(epoch, kind, key)`` bounded by one byte budget. An
     insert evicts least-recently-used entries of any kind until the
-    total fits, but never the entry being inserted."""
+    total fits, but never the entry being inserted.
+
+    Kinds: ``dec`` (term -> decoded postings), ``wand`` (term -> its
+    block rows as dicts, for ``method="wand"``), ``rg`` ((bucket, file,
+    row group) -> a postings row group as Arrow columns), ``dir``
+    (bucket -> its postings files and their row-group term_id ranges),
+    ``stats`` (bucket -> its term_stats as sorted arrays), ``pos``
+    (term -> decoded positions), ``positions``/``vocab`` (bucket ->
+    sidecar dataset handle), ``vdepth`` and ``tomb``."""
 
     def __init__(self, budget: int):
         self.budget = budget
@@ -186,14 +286,15 @@ class BM25Engine:
         self._manifest_sig: tuple | None = None
         self._summary: BM25Engine | None = None  # see _route
         # Everything the driver path caches lives in one LRU keyed by
-        # epoch: decoded postings (term -> (df, docs, tfs, dls) sorted by
-        # doc_id, never masked), encoded blocks, df, decoded positions,
-        # pyarrow dataset handles, vocab depth and tombstones. Head terms
-        # repeat across real query streams, and a decoded hit skips
-        # straight to scoring. Epoch keys mean a long-lived engine never
-        # reads a GC'd epoch through a stale entry. The 512 MiB budget is
-        # the old decoded-postings (16 M x 16 B) and positions
-        # (32 M x 8 B) ceilings together.
+        # epoch (see _Cache for its kinds): decoded postings (term ->
+        # one (3, df) array of docs, tfs, dls sorted by doc_id, never
+        # masked), wand block rows, the term directory and the postings
+        # row groups it has read, decoded positions, sidecar dataset
+        # handles, vocab depth and tombstones. Head terms repeat across real query streams, and a
+        # decoded hit skips straight to scoring. Epoch keys mean a
+        # long-lived engine never reads a GC'd epoch through a stale
+        # entry. The 512 MiB budget is the old decoded-postings
+        # (16 M x 16 B) and positions (32 M x 8 B) ceilings together.
         self._cache = _Cache(512 << 20)
         # driver-path guard (r4): a single query whose UNCACHED terms'
         # Σdf exceeds this never decodes postings onto the driver — it
@@ -326,145 +427,242 @@ class BM25Engine:
         return score_phrase_batch(self.spark, self.store, docs_df,
                                   phrases, k=k, slop=slop)
 
-    def _dataset(self, snap: Snapshot, table: str, bucket: int):
-        """pyarrow dataset of one bucket of an epoch-scoped table
-        (``postings``, ``term_stats``, ``positions`` or ``vocab``), opened
-        once per epoch through the cache. A missing bucket directory
+    def _bucket_path(self, snap: Snapshot, table: str,
+                     bucket: int) -> str | None:
+        """One bucket dir of an epoch-scoped table (``postings``,
+        ``term_stats``, ``positions`` or ``vocab``). A missing dir
         raises FileNotFoundError when a merge replaced the snapshot's
         epoch mid-query, and for ``postings`` and ``term_stats``, whose
         every bucket dir build, merge and compaction write (a missing
         one is lost data). The sidecars write only the buckets that
         hold terms, so theirs read as None: an empty bucket."""
+        base = getattr(self.store, f"{table}_dir_for")(snap.epoch)
+        p = os.path.join(base, f"bucket={bucket}")
+        if os.path.isdir(p):
+            return p
+        self._check_epoch(snap, p)
+        if table in ("postings", "term_stats"):
+            raise FileNotFoundError(
+                f"{table} bucket {bucket} of epoch {snap.epoch} is"
+                f" missing: {p}")
+        return None
+
+    def _check_epoch(self, snap: Snapshot, path: str) -> None:
+        """Raise FileNotFoundError naming both epochs when the index has
+        moved past the snapshot's epoch, which held ``path``: a merge
+        GCs the old epoch's files right after its commit."""
+        live = self.store.epoch()
+        if live != snap.epoch:
+            raise FileNotFoundError(
+                f"{path}: the query's snapshot is epoch {snap.epoch},"
+                f" but the index has moved to epoch {live}")
+
+    def _dataset(self, snap: Snapshot, table: str, bucket: int):
+        """pyarrow dataset of one sidecar bucket (``positions`` or
+        ``vocab``), opened once per epoch through the cache; None for a
+        bucket the sidecar wrote no terms to (see _bucket_path)."""
         key = (snap.epoch, table, bucket)
         dataset = self._cache.get(key)
         if dataset is None:
-            base = getattr(self.store, f"{table}_dir_for")(snap.epoch)
-            p = os.path.join(base, f"bucket={bucket}")
-            if not os.path.isdir(p):
-                live = self.store.epoch()
-                if live != snap.epoch:
-                    raise FileNotFoundError(
-                        f"{p}: the query's snapshot is epoch {snap.epoch},"
-                        f" but the index has moved to epoch {live}")
-                if table in ("postings", "term_stats"):
-                    raise FileNotFoundError(
-                        f"{table} bucket {bucket} of epoch {snap.epoch} is"
-                        f" missing: {p}")
+            p = self._bucket_path(snap, table, bucket)
+            if p is None:
                 return None
             dataset = ds.dataset(p, format="parquet")
             self._cache.put(key, dataset)
         return dataset
 
-    def _load_term_blocks(self, snap: Snapshot, terms: list[str]
-                          ) -> dict[str, tuple[int, list[dict]]]:
-        """Driver-side pruned postings read: only the parquet partitions
-        (bucket=<b> dirs) owning the query terms are touched, filtered
-        on term_id. Returned dict is keyed by the term STRING so scorers
-        sum contributions in term-ascending (oracle) order."""
+    def _directory(self, snap: Snapshot, bucket: int) -> _Directory:
+        """The postings directory of one bucket of ``snap``'s epoch,
+        read from the files' parquet footers once per epoch through the
+        cache. It holds paths, not open files, so a later read under a
+        GC'd epoch still fails loudly."""
+        key = (snap.epoch, "dir", bucket)
+        hit = self._cache.get(key)
+        if hit is not None:
+            return hit
+        p = self._bucket_path(snap, "postings", bucket)
+        try:
+            paths = [os.path.join(p, f) for f in sorted(os.listdir(p))
+                     if f.endswith(".parquet") and not f.startswith((".", "_"))]
+            ranges = [_term_id_ranges(path) for path in paths]
+        except FileNotFoundError:
+            self._check_epoch(snap, p)
+            raise
+        d = _Directory(paths, [lo for lo, _ in ranges],
+                       [hi for _, hi in ranges])
+        self._cache.put(key, d, sum(2 * lo.nbytes + len(path)
+                                    for path, lo in zip(paths, d.mins)))
+        return d
+
+    def _row_groups_of(self, snap: Snapshot, tid: int) -> list[tuple]:
+        """Keys ``(bucket, file, row group)`` of the postings row groups
+        whose footer term_id range holds ``tid``, in every segment file
+        of its bucket."""
+        bucket = bucket_of_term_id(tid, snap.n_buckets)
+        d = self._directory(snap, bucket)
+        return [(bucket, f, int(g))
+                for f, (mins, maxs) in enumerate(zip(d.mins, d.maxs))
+                for g in np.flatnonzero((mins <= tid) & (maxs >= tid))]
+
+    def _row_group(self, snap: Snapshot, key: tuple) -> _RowGroup:
+        """One postings row group as Arrow columns, read from disk at
+        most once per epoch through the cache."""
+        ckey = (snap.epoch, "rg", key)
+        hit = self._cache.get(ckey)
+        if hit is not None:
+            return hit
+        bucket, f, g = key
+        path = self._directory(snap, bucket).paths[f]
+        try:
+            # one thread: column-parallel decompression holds more
+            # transient buffers, which the driver's peak RSS would show
+            with pq.ParquetFile(path) as pf:
+                tbl = pf.read_row_group(g, columns=_BLOCK_COLS,
+                                        use_threads=False)
+        except FileNotFoundError:
+            self._check_epoch(snap, path)
+            raise
+        rg = _row_group_of(tbl)
+        self._cache.put(ckey, rg, rg.batch.nbytes)
+        return rg
+
+    def _term_slices(self, snap: Snapshot, terms: list[str]
+                     ) -> dict[str, list[tuple[_RowGroup, int, int]]]:
+        """Each in-vocabulary term's block rows as ``(row group, start,
+        stop)`` slices of cached row groups, in directory (segment file)
+        order: the searchsorted range of each row group's term_id
+        column. An OOV term (df 0) reads no postings."""
+        dfs = self._term_dfs(snap, terms)
+        out: dict[str, list[tuple[_RowGroup, int, int]]] = {}
+        for t in terms:
+            if not dfs[t]:
+                continue
+            tid = term_id_for(t)
+            parts = []
+            for key in self._row_groups_of(snap, tid):
+                rg = self._row_group(snap, key)
+                s = int(rg.tid.searchsorted(tid, "left"))
+                e = int(rg.tid.searchsorted(tid, "right"))
+                if e > s:
+                    parts.append((rg, s, e))
+            if parts:
+                out[t] = parts
+        return out
+
+    def _wand_blocks(self, snap: Snapshot, terms: list[str]
+                     ) -> dict[str, tuple[int, list[dict]]]:
+        """``method="wand"``'s input, ``{term: (df, block rows)}`` with
+        the rows as dicts sorted by first_doc_id (wand_topk takes
+        dicts), converted once from the term's row-group slices and
+        cached per term (kind ``wand``). df is the sum of block n over
+        the term's blocks."""
         out: dict[str, tuple[int, list[dict]]] = {}
         missing = []
         for t in terms:
-            hit = self._cache.get((snap.epoch, "blk", t))
-            if hit is None:
-                missing.append(t)
-            elif hit[1]:  # a cached OOV term holds no blocks
+            hit = self._cache.get((snap.epoch, "wand", t))
+            if hit is not None:
                 out[t] = hit
-        if not missing:
-            return out
-        ids = {term_id_for(t): t for t in missing}
-        buckets = sorted({bucket_of_term_id(i, snap.n_buckets) for i in ids})
-        rows: list[dict] = []
-        for b in buckets:
-            tbl = self._dataset(snap, "postings", b).to_table(
-                filter=ds.field("term_id").isin(list(ids)),
-                columns=_BLOCK_COLS)
-            rows.extend(tbl.to_pylist())
-        grouped: dict[str, list[dict]] = {}
-        for row in rows:
-            grouped.setdefault(ids[row["term_id"]], []).append(row)
-        # v3 blocks are stats-free; on this path df needs no extra read:
-        # df(term) == sum of block n over the term's (fully loaded)
-        # blocks. (The distributed path uses the term_stats table
-        # instead, where a head term is one row, not 10^6 block rows.)
-        loaded: dict[str, tuple[int, list[dict]]] = {}
-        for term, blocks in grouped.items():
+            else:
+                missing.append(t)
+        for t, parts in (self._term_slices(snap, missing)
+                         if missing else {}).items():
+            blocks = [row for rg, s, e in parts
+                      for row in rg.batch.slice(s, e - s).to_pylist()]
             blocks.sort(key=lambda r: r["first_doc_id"])
-            loaded[term] = (sum(blk["n"] for blk in blocks), blocks)
-        for term in missing:  # cache misses too (empty = OOV term)
-            entry = loaded.get(term, (0, []))
-            self._cache.put((snap.epoch, "blk", term), entry, sum(
-                len(r["docs_enc"]) + len(r["tfs_enc"]) + len(r["dls_enc"])
-                for r in entry[1]))
-        out.update(loaded)
+            out[t] = (sum(r["n"] for r in blocks), blocks)
+            self._cache.put((snap.epoch, "wand", t), out[t], sum(
+                len(r[c]) for r in blocks for c in _ENC_COLS))
         return out
 
     def _load_term_arrays(self, snap: Snapshot, terms: list[str]) -> dict:
         """Decoded per-term postings {term: (df, docs, tfs, dls)}, docs
         sorted ascending, through the cache; OOV terms are absent. The
         arrays are unmasked: scorers take pending tombstones as
-        ``deleted`` (see Snapshot.bm25), so deletes keep the cache."""
-        from ..codec import decode_blocks_batch
+        ``deleted`` (see Snapshot.bm25), so deletes keep the cache. The
+        missed terms decode together, in one call, straight from the
+        byte ranges their row-group slices span."""
+        from ..codec import EncodedBlocks, decode_blocks_batch
 
         out: dict = {}
         missing = []
         for t in terms:
+            # cached as one (3, df) array: one object per term, where
+            # three arrays and a tuple cost a rarely repeated tail term
+            # more than its postings
             hit = self._cache.get((snap.epoch, "dec", t))
             if hit is not None:
-                out[t] = hit
+                out[t] = (hit.shape[1], *hit)
             else:
                 missing.append(t)
-        if missing:
-            for t, (df_t, bl) in self._load_term_blocks(snap, missing).items():
-                docs, tfs, dls, _ = decode_blocks_batch(bl)
-                if (docs[1:] < docs[:-1]).any():
-                    # segment runs of one term interleave in doc_id
-                    order = np.argsort(docs, kind="stable")
-                    docs, tfs, dls = docs[order], tfs[order], dls[order]
-                entry = (df_t, docs, tfs, dls)
-                out[t] = entry
-                self._cache.put((snap.epoch, "dec", t), entry,
-                                docs.nbytes + tfs.nbytes + dls.nbytes)
+        slices = self._term_slices(snap, missing) if missing else {}
+        if not slices:
+            return out
+        parts = [p for ps in slices.values() for p in ps]
+        docs, tfs, dls, ns = decode_blocks_batch(EncodedBlocks(
+            *(np.concatenate([rg.stream(i, s, e) for rg, s, e in parts])
+              for i in range(len(_ENC_COLS))),
+            np.concatenate([rg.n[s:e] for rg, s, e in parts])))
+        # term i's postings are [at[i], at[i + 1]) of the decoded arrays
+        at = np.concatenate(([0], np.cumsum(ns)))[np.cumsum(
+            [0] + [sum(e - s for _, s, e in ps) for ps in slices.values()])]
+        for t, p0, p1 in zip(slices, at[:-1].tolist(), at[1:].tolist()):
+            # a copy per term: a view would keep the whole call's
+            # decode alive for as long as any one of its terms is cached
+            run = np.stack((docs[p0:p1], tfs[p0:p1], dls[p0:p1]))
+            if (run[0, 1:] < run[0, :-1]).any():
+                # segment runs of one term interleave in doc_id
+                run = run[:, np.argsort(run[0], kind="stable")]
+            out[t] = (p1 - p0, *run)
+            self._cache.put((snap.epoch, "dec", t), run, run.nbytes)
         return out
 
+    def _bucket_dfs(self, snap: Snapshot,
+                    bucket: int) -> tuple[np.ndarray, np.ndarray]:
+        """(term_id, df) arrays of one term_stats bucket, sorted by
+        term_id: the whole bucket, read once per epoch through the
+        cache."""
+        key = (snap.epoch, "stats", bucket)
+        hit = self._cache.get(key)
+        if hit is not None:
+            return hit
+        p = self._bucket_path(snap, "term_stats", bucket)
+        try:
+            tbl = ds.dataset(p, format="parquet",
+                             schema=_TERM_STATS_COLS).to_table()
+        except FileNotFoundError:
+            self._check_epoch(snap, p)
+            raise
+        ids = tbl["term_id"].to_numpy()
+        dfs = tbl["df"].to_numpy()
+        if (ids[1:] < ids[:-1]).any():
+            order = np.argsort(ids, kind="stable")
+            ids, dfs = ids[order], dfs[order]
+        self._cache.put(key, (ids, dfs), ids.nbytes + dfs.nbytes)
+        return ids, dfs
+
     def _term_dfs(self, snap: Snapshot, terms: list[str]) -> dict[str, int]:
-        """df per term from the term_stats table, through the cache (OOV
-        terms cache as 0). Misses read via pyarrow — O(query terms),
-        never a Spark job, and a repeat term never re-opens a dataset."""
+        """df per term, 0 for an OOV term: a searchsorted into its
+        bucket's cached term_stats arrays. Never a Spark job, and never
+        a postings read."""
         out: dict[str, int] = {}
-        missing = []
         for t in terms:
-            v = self._cache.get((snap.epoch, "df", t))
-            if v is not None:
-                out[t] = v
-            else:
-                missing.append(t)
-        if not missing:
-            return out
-        ids = {term_id_for(t): t for t in missing}
-        by_bucket: dict[int, list[int]] = {}
-        for tid in ids:
-            by_bucket.setdefault(
-                bucket_of_term_id(tid, snap.n_buckets), []).append(tid)
-        for b, tids in by_bucket.items():
-            tbl = self._dataset(snap, "term_stats", b).to_table(
-                filter=ds.field("term_id").isin(tids),
-                columns=["term_id", "df"])
-            for tid, dfv in zip(tbl["term_id"].to_pylist(),
-                                tbl["df"].to_pylist()):
-                out[ids[tid]] = int(dfv)
-        for t in missing:
-            out.setdefault(t, 0)
-            self._cache.put((snap.epoch, "df", t), out[t])
+            tid = term_id_for(t)
+            ids, dfs = self._bucket_dfs(snap,
+                                        bucket_of_term_id(tid, snap.n_buckets))
+            i = int(ids.searchsorted(tid))
+            out[t] = int(dfs[i]) if i < len(ids) and ids[i] == tid else 0
         return out
 
     def _uncached_df_total(self, snap: Snapshot, terms: list[str]) -> int:
-        """Σdf of the terms NOT already held by the cache — the postings
-        volume a driver-side load would actually pull. Served from the
-        cached df; a miss is one pyarrow term_stats read (O(query
-        terms)), never a Spark job."""
+        """Σdf of the terms the driver does not hold yet, decoded or as
+        ``wand`` block rows — the postings volume a driver-side load
+        would actually pull. A cached row group does not count: it holds
+        every term of its bucket, and a head term among them still
+        decodes O(df) postings. df comes from the term_stats arrays; an
+        OOV term reads nothing."""
         missing = [t for t in terms
                    if (snap.epoch, "dec", t) not in self._cache
-                   and (snap.epoch, "blk", t) not in self._cache]
+                   and (snap.epoch, "wand", t) not in self._cache]
         if not missing:
             return 0
         return sum(self._term_dfs(snap, missing).values())
@@ -540,7 +738,7 @@ class BM25Engine:
                 candidates=(None if allowed is None
                             else self._doc_frame(allowed))))
         if method == "wand":
-            blocks = self._load_term_blocks(snap, terms)
+            blocks = self._wand_blocks(snap, terms)
             return _TOPK_METHODS["wand"](
                 blocks, k=k, allowed=allowed, approx=approx,
                 **snap.bm25) if blocks else []

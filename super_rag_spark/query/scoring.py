@@ -510,10 +510,10 @@ _BLK_COLS = ["term_id", "seg", "n", "first_doc_id", "last_doc_id",
 def _read_blocks_by_tid(pdir: str, n_buckets: int,
                         term_ids: list[int]) -> dict[int, list[dict]]:
     """Pruned pyarrow read of the given terms' block rows, grouped by
-    term_id — the bucket-dir pruning and term_id filter of the driver
-    path (BM25Engine._load_term_blocks) without its per-epoch cache,
-    shared by the direct-read WAND batch plan (driver-broadcast and
-    per-partition variants)."""
+    term_id: bucket-dir pruning and a term_id filter, with no cache
+    (the driver's single-query path reads through BM25Engine's term
+    directory instead). Shared by the direct-read WAND batch plan
+    (driver-broadcast and per-partition variants)."""
     import pyarrow.dataset as pads
 
     by_bucket: dict[int, list[int]] = {}

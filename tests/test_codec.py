@@ -37,6 +37,48 @@ def test_block_roundtrip_random(ids):
     assert np.array_equal(l, dls)
 
 
+def test_varint_roundtrip_many_passes():
+    """A stream several decode passes long, values of every length up to
+    2**63 - 1, so values straddle the pass boundaries; a stream with a
+    truncated or an extra value fails loudly."""
+    import pytest
+
+    rng = np.random.default_rng(3)
+    vals = (rng.integers(0, 2**63 - 1, 60_000, dtype=np.int64)
+            >> rng.integers(0, 63, 60_000))
+    vals[-1] = 2**63 - 1
+    enc = encode_varint(vals)
+    assert len(enc) > 3 * (1 << 16)
+    assert np.array_equal(decode_varint(enc, len(vals)), vals)
+    for bad, count in ((enc[:-1], len(vals)), (enc + b"\x01", len(vals))):
+        with pytest.raises(AssertionError, match="does not hold"):
+            decode_varint(bad, count)
+
+
+def test_decode_blocks_batch_from_buffers():
+    """Blocks laid end to end as EncodedBlocks decode to the same arrays
+    as the block dicts and as per-block decode_block."""
+    from super_rag_spark.codec import EncodedBlocks, decode_blocks_batch
+
+    rng = np.random.default_rng(5)
+    blocks = []
+    for n in rng.integers(1, 130, 40).tolist():
+        ids = np.sort(rng.choice(2**60, n, replace=False)).astype(np.int64)
+        enc = encode_block(ids, rng.integers(1, 50, n), rng.integers(1, 9000, n))
+        blocks.append(dict(zip(("docs_enc", "tfs_enc", "dls_enc"), enc), n=n))
+    want = [np.concatenate(a) for a in zip(*(
+        decode_block(b["docs_enc"], b["tfs_enc"], b["dls_enc"], b["n"])
+        for b in blocks))]
+    buffers = EncodedBlocks(
+        *(np.frombuffer(b"".join(b[c] for b in blocks), dtype=np.uint8)
+          for c in ("docs_enc", "tfs_enc", "dls_enc")),
+        np.array([b["n"] for b in blocks], dtype=np.int32))
+    for got in (decode_blocks_batch(blocks), decode_blocks_batch(buffers)):
+        for g, w in zip(got[:3], want):
+            assert np.array_equal(g, w)
+        assert got[3].tolist() == [b["n"] for b in blocks]
+
+
 def test_delta_is_compact():
     # dense ids compress to ~1 byte/gap
     ids = np.arange(10_000, 20_000, dtype=np.int64)

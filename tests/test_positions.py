@@ -134,3 +134,37 @@ def test_positions_absent_raises_and_merge_degrades(spark, tmp_path):
     # tests/test_sidecar_merge.py; the degradation contract (staging
     # sidecar lost -> has_positions() false, verify-path fallback) in
     # test_sidecar_merge.test_index_without_sidecars_merges_clean
+
+
+def test_sidecars_keep_one_copy_of_a_duplicate_url(spark, tmp_path):
+    """A sidecar corpus with one url duplicated and another missing has
+    as many rows as the index has docs, so a row-count probe passes it.
+    The sidecar builds still keep one copy of the duplicated doc: its
+    positions are those of its text, and a term only it holds has vocab
+    df 1."""
+    from super_rag_spark.analysis import doc_id_for_url, tokenize
+    from super_rag_spark.index.positions import build_positions
+    from super_rag_spark.index.vocab import build_vocab
+    from super_rag_spark.query.engine import BM25Engine
+
+    docs = _corpus(spark)
+    rows = [(r["url"], r["text"]) for r in docs.collect()]
+    idx = str(tmp_path / "dupidx")
+    BM25Engine(spark, idx).build(docs, text_is_extracted=True)
+    skewed = spark.createDataFrame(rows[:-1] + rows[:1],
+                                   "url string, text string")
+    assert skewed.count() == len(rows)
+    build_positions(spark, skewed, idx, text_is_extracted=True)
+    build_vocab(spark, skewed, idx, text_is_extracted=True)
+
+    eng = BM25Engine(spark, idx)
+    snap = eng._snapshot()
+    doc0, toks = doc_id_for_url(rows[0][0]), tokenize(rows[0][1])
+    for term in sorted(set(toks)):
+        got_docs, off, flat = eng._load_positions_term(snap, term)
+        i = int(np.searchsorted(got_docs, doc0))
+        assert got_docs[i] == doc0, term
+        assert flat[off[i]:off[i + 1]].tolist() == [
+            p for p, t in enumerate(toks) if t == term], term
+    assert "pad0" in toks
+    assert eng.suggest("pad0", 5) == [("pad0", 1)]

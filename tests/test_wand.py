@@ -1,6 +1,7 @@
 """WAND == brute force == vectorized on randomized corpora
 (FIXTURES.md invariant 4), without Spark — pure codec + scorer. The
-cursor WAND and the brute-force scorer are the references."""
+cursor WAND and the brute-force scorer (wand_reference.py) are the
+references."""
 
 import numpy as np
 from hypothesis import given, settings
@@ -8,9 +9,8 @@ from hypothesis import strategies as st
 
 from super_rag_spark.analysis import BLOCK_SIZE
 from super_rag_spark.codec import decode_blocks_batch, encode_block
-from super_rag_spark.query.wand import (bruteforce_topk,
-                                        vectorized_topk_arrays, wand_topk,
-                                        wand_topk_cursor)
+from super_rag_spark.query.wand import vectorized_topk_arrays, wand_topk
+from wand_reference import bruteforce_topk, wand_topk_cursor
 
 
 def _blocks_for(doc_ids, tfs, dls, n_docs, avgdl, block_size=BLOCK_SIZE):
