@@ -406,32 +406,31 @@ def bm25f_topk(spark, sf_dir):
             F.slice(tokens_expr("text"), 1, _BM25F_TITLE_N)).alias("term"))
         .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf_t"))
     )
+    # the weighted tfw and dlw are the tf and dl contribution_expr reads
     tfw = (
         tf.join(tft, ["doc_id", "term"], "left")
-        .withColumn("tfw", F.col("tf")
-                    + w_extra * F.coalesce(F.col("tf_t"), F.lit(0)))
+        .select("doc_id", "term", (F.col("tf") + w_extra * F.coalesce(
+            F.col("tf_t"), F.lit(0))).alias("tf"))
     )
     dlw = (
         toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-        .withColumn("dlw", F.col("dl")
-                    + w_extra * F.least(F.col("dl"), F.lit(_BM25F_TITLE_N)))
+        .select("doc_id", (F.col("dl") + w_extra * F.least(
+            F.col("dl"), F.lit(_BM25F_TITLE_N))).alias("dl"))
     )
     st = dlw.agg(F.count(F.lit(1)).alias("n"),
-                 F.avg("dlw").alias("avgdlw")).collect()[0]
+                 F.avg("dl").alias("avgdlw")).collect()[0]
     n_docs, avgdlw = int(st["n"]), float(st["avgdlw"])
 
     qrows = [(qid, t) for qid, qtext in BM25_QUERIES
              for t in sorted(set(analysis.tokenize(qtext)))]
     qterms = spark.createDataFrame(qrows, "query_id int, term string")
 
-    idf = F.log((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
     contribs = (
         tfw.join(F.broadcast(qterms), "term")
-        .join(dfreq, "term")
+        .join(F.broadcast(collected_idf(dfreq, qterms, n_docs)), "term")
         .join(dlw, "doc_id")
-        .withColumn("contrib", idf * (F.col("tfw") * (analysis.K1 + 1.0)) /
-                    (F.col("tfw") + analysis.K1 * (1.0 - analysis.B
-                     + analysis.B * F.col("dlw") / avgdlw)))
+        .withColumn("contrib",
+                    contribution_expr(avgdlw, analysis.K1, analysis.B))
     )
     scored = (
         contribs.groupBy("query_id", "doc_id")
@@ -2031,7 +2030,7 @@ def index_segment_topk(spark, sf_dir):
 @_q("bm25_topk_filtered_wand", _bm25_sql([BM25_QUERIES[1]], cand_where="lang = 'en'"))
 def bm25_topk_filtered_wand(spark, sf_dir):
     """The same metadata-filtered top-k through the DISTRIBUTED WAND
-    plan (r3): candidates cogroup into their own (query, salt-range)
+    plan (r3): candidates are routed to their own (query, salt-range)
     tasks, so block skipping survives the broad filter. Must be
     rank-identical to the exhaustive filtered plan (same SQL oracle as
     bm25_topk_filtered)."""

@@ -165,18 +165,6 @@ def _run_waves(spark: SparkSession, store: IndexStorage, phase: str,
                 f"injected failure after bucket {wave[-1]}")
 
 
-def _old_bucket(store: IndexStorage, ep: _Epoch, bucket: int) -> str:
-    """The live epoch's dir of ``bucket``. Every bucket has one (builds
-    and rewrites materialize empty ones), so a missing dir is lost
-    data: carrying it forward as empty would drop its postings for
-    good."""
-    path = os.path.join(store.postings_dir_for(ep.old), f"bucket={bucket}")
-    if not os.path.isdir(path):
-        raise FileNotFoundError(
-            f"postings bucket {bucket} of epoch {ep.old} is missing: {path}")
-    return path
-
-
 def _rewrite_buckets(spark: SparkSession, store: IndexStorage, ep: _Epoch,
                      wave: list[int], *, removed: DataFrame | None = None,
                      hits: DataFrame | None = None,
@@ -190,10 +178,13 @@ def _rewrite_buckets(spark: SparkSession, store: IndexStorage, ep: _Epoch,
     old_root = store.postings_dir_for(ep.old)
     new_dir = store.postings_dir_for(ep.new)
     # ONE scan over exactly these bucket dirs; basePath recovers the
-    # bucket partition column without a union-per-dir plan
+    # bucket partition column without a union-per-dir plan. A missing
+    # old bucket dir raises: carried forward as empty, its postings
+    # would be lost for good
     blocks = (spark.read.option("basePath", old_root)
               .schema(POSTINGS_SCHEMA)
-              .parquet(*[_old_bucket(store, ep, b) for b in wave]))
+              .parquet(*[store.bucket_dir("postings", ep.old, b)
+                         for b in wave]))
     keep = None
     if hits is not None:
         # Spark-side: the hit terms of this wave, never collected (can
@@ -379,7 +370,7 @@ def merge_append(spark: SparkSession, index_dir: str,
 
     def link_wave(wave: list[int]) -> None:
         for b in wave:
-            _hardlink_tree(_old_bucket(store, ep, b),
+            _hardlink_tree(store.bucket_dir("postings", ep.old, b),
                            os.path.join(new_dir, f"bucket={b}"))
         link_staging(wave)
 

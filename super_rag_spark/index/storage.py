@@ -36,7 +36,9 @@ from __future__ import annotations
 
 import json
 import os
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 # seg: Lucene-style segment id. A (term, salt, seg) run is doc-sorted
@@ -122,6 +124,34 @@ class IndexStorage:
         return int(self.read_manifest()["epoch"])
 
     # ---- per-epoch directories ------------------------------------------
+    def bucket_dir(self, table: str, epoch: int, bucket: int) -> str | None:
+        """The ``bucket=<bucket>`` dir of an epoch-scoped table
+        (``postings``, ``term_stats``, ``positions`` or ``vocab``) — the
+        one place that decides what a missing bucket dir means.
+
+        - When the index has moved past ``epoch``, a merge GC'd the
+          epoch's files after its commit: FileNotFoundError naming both
+          epochs. The manifest is read only on this failure path.
+        - Build, merge and compaction write every ``postings`` and
+          ``term_stats`` bucket dir, so a missing one is lost data:
+          FileNotFoundError.
+        - The sidecar builds write only the buckets that hold terms, so
+          a missing ``positions``/``vocab`` dir is an empty bucket: None.
+        """
+        p = os.path.join(getattr(self, f"{table}_dir_for")(epoch),
+                         f"bucket={bucket}")
+        if os.path.isdir(p):
+            return p
+        live = self.epoch()
+        if live != epoch:
+            raise FileNotFoundError(
+                f"{p}: the query's snapshot is epoch {epoch},"
+                f" but the index has moved to epoch {live}")
+        if table in ("postings", "term_stats"):
+            raise FileNotFoundError(
+                f"{table} bucket {bucket} of epoch {epoch} is missing: {p}")
+        return None
+
     def postings_dir_for(self, epoch: int) -> str:
         return os.path.join(self.root, f"postings_e{epoch}")
 
@@ -268,3 +298,30 @@ class IndexStorage:
                 shutil.rmtree(p, ignore_errors=True)
                 removed.append(p)
         return removed
+
+
+class Snapshot(NamedTuple):
+    """One query's view of an index, taken once at its start: the
+    storage it was taken from, the manifest's epoch, BM25 statistics and
+    bucket count, and the epoch's pending tombstones (``deleted``,
+    sorted int64). Every driver loader and scorer and every distributed
+    plan of the query reads these — df, postings, tombstones and
+    doc_stats of ``epoch`` — never the live manifest, so a merge that
+    lands mid-query cannot mix two epochs: the query either answers
+    from its epoch or raises (IndexStorage.bucket_dir)."""
+
+    store: IndexStorage
+    epoch: int
+    n_docs: int
+    avgdl: float
+    k1: float
+    b: float
+    n_buckets: int
+    manifest: dict
+    deleted: np.ndarray
+
+    @property
+    def bm25(self) -> dict:
+        """Keyword arguments every driver scorer in query/wand.py takes."""
+        return {"n_docs": self.n_docs, "avgdl": self.avgdl, "k1": self.k1,
+                "b": self.b, "deleted": self.deleted}

@@ -71,7 +71,7 @@ def boolean_sql_cand(steps: list[tuple[str, str]]) -> str:
     return sql
 
 
-def accepted_docs(spark: SparkSession, store,
+def accepted_docs(spark: SparkSession, snap,
                   queries: list[tuple[int, str]]) -> DataFrame:
     """The FULL accepted set of the boolean batch — (query_id, doc_id,
     parts) for every doc each query's chain admits, parts carrying the
@@ -79,11 +79,13 @@ def accepted_docs(spark: SparkSession, store,
     without the ranking tail, factored out (r5) so facet aggregation
     can consume the match set whole: facets need every matching doc,
     not a top-k. Same plan shape: one pruned-postings pass, one
-    shuffle, constant-depth accept fold."""
-    return _accepted_docs_impl(spark, store, queries)
+    shuffle, constant-depth accept fold. ``snap``: the query's
+    Snapshot (index/storage.py); the plan reads only its epoch."""
+    return _accepted_docs_impl(spark, snap, queries)
 
 
-def score_boolean_batch(spark: SparkSession, store, queries: list[tuple[int, str]],
+def score_boolean_batch(spark: SparkSession, snap,
+                        queries: list[tuple[int, str]],
                         k: int = 10) -> DataFrame:
     """Index-backed DISTRIBUTED boolean retrieval (r4 — replaces both
     the driver-side set algebra of engine.boolean_topk at scale and the
@@ -95,7 +97,7 @@ def score_boolean_batch(spark: SparkSession, store, queries: list[tuple[int, str
     whole query batch needs exactly ONE pass over the (bucket- and
     term-pruned) postings and ONE shuffle:
 
-      pruned postings scan -> mapInPandas block decode
+      scoring.decoded_postings (the snapshot's pruned, decoded postings)
         -> broadcast join with (query, term) rows carrying a STEP
            BITMASK (bit i = this term appears at chain position i)
         -> groupBy(query_id, doc_id):
@@ -118,7 +120,7 @@ def score_boolean_batch(spark: SparkSession, store, queries: list[tuple[int, str
     match boolean_topk/engine.boolean_topk exactly (tests assert).
     """
     scored = (
-        _accepted_docs_impl(spark, store, queries)
+        _accepted_docs_impl(spark, snap, queries)
         .withColumn("score", F.aggregate(
             F.filter("parts", lambda x: x["contrib"].isNotNull()),
             F.lit(0.0), lambda a, x: a + x["contrib"]))
@@ -136,19 +138,12 @@ _ACCEPTED_SCHEMA = ("query_id int, doc_id long, "
                     "parts array<struct<term:string,contrib:double>>")
 
 
-def _accepted_docs_impl(spark: SparkSession, store,
+def _accepted_docs_impl(spark: SparkSession, snap,
                         queries: list[tuple[int, str]]) -> DataFrame:
     import pandas as pd
 
     from ..analysis import term_id_for
-    from .scoring import (DECODED_SCHEMA, contribution_expr,
-                          decode_postings_map_in_pandas, lookup_term_dfs,
-                          pruned_postings, with_df_idf)
-
-    manifest = store.read_manifest()
-    n_docs, avgdl = int(manifest["n_docs"]), float(manifest["avgdl"])
-    k1, b = float(manifest["k1"]), float(manifest["b"])
-    n_buckets = int(manifest["n_buckets"])
+    from .scoring import contribution_expr, decoded_postings, in_vocabulary
 
     parsed: dict[int, list[tuple[str, str]]] = {}
     rows = []
@@ -165,29 +160,20 @@ def _accepted_docs_impl(spark: SparkSession, store,
             rows.append({"query_id": qid, "term": t,
                          "term_id": term_id_for(t),
                          "step_mask": m, "positive": pos})
-    qpdf = pd.DataFrame(rows)
-    if qpdf.empty:
-        return spark.createDataFrame([], _ACCEPTED_SCHEMA)
-    term_ids = sorted(qpdf["term_id"].unique().tolist())
-    dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
     # OOV terms drop out: their membership bit just never sets, which is
     # exactly the empty-set semantics of the set algebra
-    qpdf = with_df_idf(qpdf, dfs, n_docs)
+    qpdf = in_vocabulary(snap, pd.DataFrame(
+        rows, columns=["query_id", "term", "term_id", "step_mask",
+                       "positive"]))
     if qpdf.empty:
         return spark.createDataFrame([], _ACCEPTED_SCHEMA)
-    qterms = spark.createDataFrame(qpdf)
-    term_ids = sorted(qpdf["term_id"].unique().tolist())
-
-    decoded = pruned_postings(spark, store, term_ids, n_buckets).mapInPandas(
-        decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
-    tomb = store.tombstones(spark)
-    if tomb is not None:
-        decoded = decoded.join(F.broadcast(tomb), "doc_id", "left_anti")
 
     joined = (
-        decoded.join(F.broadcast(qterms), "term_id")
+        decoded_postings(spark, snap, qpdf["term_id"].tolist())
+        .join(F.broadcast(spark.createDataFrame(qpdf)), "term_id")
         .withColumn("contrib", F.when(
-            F.col("positive"), contribution_expr(avgdl, k1, b)))
+            F.col("positive"),
+            contribution_expr(snap.avgdl, snap.k1, snap.b)))
     )
     agg = (
         joined.groupBy("query_id", "doc_id")

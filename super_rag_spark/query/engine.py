@@ -12,11 +12,13 @@
 - summary routing: topk-style queries starting with "summarize" run on
   the "<name>summary" index when present, after stripping the keyword.
 
-Every public driver query takes one Snapshot and reads only it. Every
+Every public query takes one Snapshot (index/storage.py) and reads
+only it; a distributed plan gets the snapshot its caller took. Every
 budget-gated driver query asks one gate, ``_over_budget``: when the
 uncached terms' Σdf exceeds ``driver_df_budget`` it counts one
 ``driver_fallbacks`` and the query runs its rank-identical distributed
-plan instead of decoding O(df) postings on the driver.
+plan, under the same snapshot, instead of decoding O(df) postings on
+the driver.
 
 Term directory: every driver df and postings lookup goes through one
 directory per epoch, held in the cache. df is a searchsorted into the
@@ -47,8 +49,8 @@ from pyspark.sql import functions as F
 
 from ..analysis import term_id_for, tokenize
 from ..index.build import build_index, doc_id_expr
-from ..index.storage import IndexStorage, bucket_of_term_id
-from .scoring import score_query_batch, score_query_batch_wand
+from ..index.storage import IndexStorage, Snapshot, bucket_of_term_id
+from .scoring import doc_frame, score_query_batch, score_query_batch_wand
 from .wand import vectorized_topk_arrays, wand_topk
 
 # topk methods -> scorers. _topk resolves the vectorized one
@@ -203,29 +205,6 @@ def _match_expr(query: str, boolean: bool, caller: str) -> str:
     return " OR ".join(terms)
 
 
-class Snapshot(NamedTuple):
-    """One query's view of the index, taken once at its start: the
-    manifest's epoch, BM25 statistics and bucket count, and the epoch's
-    pending tombstones (``deleted``, sorted int64). Every loader and
-    scorer of the query reads these, never the live manifest, so a merge
-    that lands mid-query cannot mix two epochs."""
-
-    epoch: int
-    n_docs: int
-    avgdl: float
-    k1: float
-    b: float
-    n_buckets: int
-    manifest: dict
-    deleted: np.ndarray
-
-    @property
-    def bm25(self) -> dict:
-        """Keyword arguments every driver scorer in query/wand.py takes."""
-        return {"n_docs": self.n_docs, "avgdl": self.avgdl, "k1": self.k1,
-                "b": self.b, "deleted": self.deleted}
-
-
 class _Cache:
     """LRU over ``(epoch, kind, key)`` bounded by one byte budget. An
     insert evicts least-recently-used entries of any kind until the
@@ -362,9 +341,9 @@ class BM25Engine:
         one listing of the tombstones directory when it exists."""
         m = self.manifest
         epoch = int(m["epoch"])
-        return Snapshot(epoch, int(m["n_docs"]), float(m["avgdl"]),
-                        float(m["k1"]), float(m["b"]), int(m["n_buckets"]),
-                        m, self._tombstones(epoch))
+        return Snapshot(self.store, epoch, int(m["n_docs"]),
+                        float(m["avgdl"]), float(m["k1"]), float(m["b"]),
+                        int(m["n_buckets"]), m, self._tombstones(epoch))
 
     def _warm_new_epoch(self, old_epoch: int) -> None:
         """Epoch switch (out-of-band merge/compact): the old epoch's
@@ -390,18 +369,18 @@ class BM25Engine:
         """Distributed exact BM25 for a batch of queries ->
         (query_id, rank, doc_id, score). ``candidates``: optional
         (doc_id) frame restricting the scored set (P7 filter)."""
-        return score_query_batch(self.spark, self.store, queries, k=k,
+        return score_query_batch(self.spark, self._snapshot(), queries, k=k,
                                  candidates=candidates)
 
     def query_batch_wand(self, queries: list[dict], k: int = 10,
                          candidates: DataFrame | None = None) -> DataFrame:
         """Distributed block-max WAND over the query batch (one WAND
-        task per query; blocks stay encoded until the scorer needs
-        them). ``candidates``: optional (doc_id) frame (P7 filter),
-        cogrouped per salt range so block skipping survives broad
-        filters. Rank-identical to query_batch."""
-        return score_query_batch_wand(self.spark, self.store, queries, k=k,
-                                      candidates=candidates)
+        task per query and salt range; blocks stay encoded until the
+        scorer needs them). ``candidates``: optional (doc_id) frame (P7
+        filter), routed to each salt range's task so block skipping
+        survives broad filters. Rank-identical to query_batch."""
+        return score_query_batch_wand(self.spark, self._snapshot(), queries,
+                                      k=k, candidates=candidates)
 
     def boolean_batch(self, queries: list[tuple[int, str]],
                       k: int = 10) -> DataFrame:
@@ -412,7 +391,7 @@ class BM25Engine:
         score_boolean_batch). Rank-identical to boolean_topk."""
         from .boolean import score_boolean_batch
 
-        return score_boolean_batch(self.spark, self.store, queries, k=k)
+        return score_boolean_batch(self.spark, self._snapshot(), queries, k=k)
 
     def phrase_batch(self, phrases: list[tuple[int, str]],
                      docs_df: DataFrame, k: int = 10,
@@ -424,47 +403,17 @@ class BM25Engine:
         score_phrase_batch). Rank-identical to phrase_topk."""
         from .phrase import score_phrase_batch
 
-        return score_phrase_batch(self.spark, self.store, docs_df,
+        return score_phrase_batch(self.spark, self._snapshot(), docs_df,
                                   phrases, k=k, slop=slop)
-
-    def _bucket_path(self, snap: Snapshot, table: str,
-                     bucket: int) -> str | None:
-        """One bucket dir of an epoch-scoped table (``postings``,
-        ``term_stats``, ``positions`` or ``vocab``). A missing dir
-        raises FileNotFoundError when a merge replaced the snapshot's
-        epoch mid-query, and for ``postings`` and ``term_stats``, whose
-        every bucket dir build, merge and compaction write (a missing
-        one is lost data). The sidecars write only the buckets that
-        hold terms, so theirs read as None: an empty bucket."""
-        base = getattr(self.store, f"{table}_dir_for")(snap.epoch)
-        p = os.path.join(base, f"bucket={bucket}")
-        if os.path.isdir(p):
-            return p
-        self._check_epoch(snap, p)
-        if table in ("postings", "term_stats"):
-            raise FileNotFoundError(
-                f"{table} bucket {bucket} of epoch {snap.epoch} is"
-                f" missing: {p}")
-        return None
-
-    def _check_epoch(self, snap: Snapshot, path: str) -> None:
-        """Raise FileNotFoundError naming both epochs when the index has
-        moved past the snapshot's epoch, which held ``path``: a merge
-        GCs the old epoch's files right after its commit."""
-        live = self.store.epoch()
-        if live != snap.epoch:
-            raise FileNotFoundError(
-                f"{path}: the query's snapshot is epoch {snap.epoch},"
-                f" but the index has moved to epoch {live}")
 
     def _dataset(self, snap: Snapshot, table: str, bucket: int):
         """pyarrow dataset of one sidecar bucket (``positions`` or
         ``vocab``), opened once per epoch through the cache; None for a
-        bucket the sidecar wrote no terms to (see _bucket_path)."""
+        bucket the sidecar wrote no terms to (IndexStorage.bucket_dir)."""
         key = (snap.epoch, table, bucket)
         dataset = self._cache.get(key)
         if dataset is None:
-            p = self._bucket_path(snap, table, bucket)
+            p = self.store.bucket_dir(table, snap.epoch, bucket)
             if p is None:
                 return None
             dataset = ds.dataset(p, format="parquet")
@@ -480,13 +429,14 @@ class BM25Engine:
         hit = self._cache.get(key)
         if hit is not None:
             return hit
-        p = self._bucket_path(snap, "postings", bucket)
+        p = self.store.bucket_dir("postings", snap.epoch, bucket)
         try:
             paths = [os.path.join(p, f) for f in sorted(os.listdir(p))
                      if f.endswith(".parquet") and not f.startswith((".", "_"))]
             ranges = [_term_id_ranges(path) for path in paths]
         except FileNotFoundError:
-            self._check_epoch(snap, p)
+            # names both epochs when a merge GC'd the snapshot's epoch
+            self.store.bucket_dir("postings", snap.epoch, bucket)
             raise
         d = _Directory(paths, [lo for lo, _ in ranges],
                        [hi for _, hi in ranges])
@@ -520,7 +470,7 @@ class BM25Engine:
                 tbl = pf.read_row_group(g, columns=_BLOCK_COLS,
                                         use_threads=False)
         except FileNotFoundError:
-            self._check_epoch(snap, path)
+            self.store.bucket_dir("postings", snap.epoch, bucket)
             raise
         rg = _row_group_of(tbl)
         self._cache.put(ckey, rg, rg.batch.nbytes)
@@ -625,12 +575,12 @@ class BM25Engine:
         hit = self._cache.get(key)
         if hit is not None:
             return hit
-        p = self._bucket_path(snap, "term_stats", bucket)
+        p = self.store.bucket_dir("term_stats", snap.epoch, bucket)
         try:
             tbl = ds.dataset(p, format="parquet",
                              schema=_TERM_STATS_COLS).to_table()
         except FileNotFoundError:
-            self._check_epoch(snap, p)
+            self.store.bucket_dir("term_stats", snap.epoch, bucket)
             raise
         ids = tbl["term_id"].to_numpy()
         dfs = tbl["df"].to_numpy()
@@ -714,11 +664,6 @@ class BM25Engine:
         self.driver_fallbacks += 1
         return True
 
-    def _doc_frame(self, ids) -> DataFrame:
-        """A broadcast (doc_id) frame of a small doc_id array."""
-        return F.broadcast(self.spark.createDataFrame(
-            [(int(d),) for d in ids], "doc_id long"))
-
     def _topk(self, snap: Snapshot, terms: list[str], k: int, method: str,
               approx: float = 1.0, allowed=None) -> list[tuple[int, float]]:
         """Top-k of the OR-bag of sorted unique ``terms`` under ``snap``:
@@ -733,10 +678,10 @@ class BM25Engine:
         if not terms or (allowed is not None and not len(allowed)):
             return []
         if self._over_budget(snap, terms):
-            return _ranked_hits(self.query_batch_wand(
-                [{"query_id": 0, "text": " ".join(terms)}], k=k,
-                candidates=(None if allowed is None
-                            else self._doc_frame(allowed))))
+            return _ranked_hits(score_query_batch_wand(
+                self.spark, snap, [{"query_id": 0, "text": " ".join(terms)}],
+                k=k, candidates=(None if allowed is None
+                                 else doc_frame(self.spark, allowed))))
         if method == "wand":
             blocks = self._wand_blocks(snap, terms)
             return _TOPK_METHODS["wand"](
@@ -806,7 +751,7 @@ class BM25Engine:
         snap = engine._snapshot()
         if engine._over_budget(snap, terms):
             return _ranked_hits(score_query_batch(
-                self.spark, engine.store,
+                self.spark, snap,
                 [{"query_id": 0, "text": " ".join(terms),
                   "boosts": weights, "msm": msm}], k=k))
         from .wand import vectorized_topk_arrays
@@ -836,7 +781,7 @@ class BM25Engine:
         snap = engine._snapshot()
         if engine._over_budget(snap, terms):
             return _ranked_hits(score_query_batch(
-                self.spark, engine.store, [{"query_id": 0, "text": qtext}],
+                self.spark, snap, [{"query_id": 0, "text": qtext}],
                 k=k, after=after))
         from .wand import accumulate_scores, rank_topk
 
@@ -964,11 +909,17 @@ class BM25Engine:
         """
         if method not in _TOPK_METHODS:
             raise ValueError(f"unknown topk method: {method!r}")
+        # NO summary routing for the structured DSL: the 'summarize'
+        # keyword-strip would eat a legitimate leading term/prefix
+        # ('summary AND report' -> 'AND report', a parse error)
+        snap = self._snapshot()
+        engine, qtext = (self, query) if qs else self._route(query)
+        esnap = snap if engine is self else engine._snapshot()
         cand_df: DataFrame | None = None
         allowed = None  # small-set fast path: sorted int64 array
         if where is not None:
             if docs_meta is None:
-                docs_meta = self.store.doc_stats(self.spark)
+                docs_meta = self.store.doc_stats(self.spark, snap.epoch)
             from ..filters import to_column
 
             cand_df = docs_meta.where(to_column(where)).select("doc_id")
@@ -981,38 +932,30 @@ class BM25Engine:
                     [r["doc_id"] for r in probe], dtype=np.int64))
                 cand_df = None
         qs_bag: dict[str, float] = {}
+        terms, hits = [], []
         if qs:
-            # NO summary routing for the structured DSL: the 'summarize'
-            # keyword-strip would eat a legitimate leading term/prefix
-            # ('summary AND report' -> 'AND report', a parse error)
-            engine, qtext = self, query
-            hits, qs_bag = engine._query_string_hits(
-                engine._snapshot(), qtext, k, qs_max_expansions, cand_df,
-                allowed)
-            terms = []
+            hits, qs_bag = self._query_string_hits(
+                snap, qtext, k, qs_max_expansions, cand_df, allowed)
         else:
-            engine, qtext = self._route(query)
             terms = sorted(set(tokenize(qtext)))
-            hits = []
         if terms and cand_df is not None:
             # distributed path: candidate semi-join BEFORE scoring, then
             # global top-k — identical ranking to the driver path (the
             # contribution exprs mirror bm25_term_score bit-for-bit).
             # method="wand" keeps block skipping under the broad filter
-            # (per-salt-range candidate cogroup, scoring.py)
+            # (candidates routed to their salt range's task, scoring.py)
             scorer = (score_query_batch_wand if method == "wand"
                       else score_query_batch)
-            hits = _ranked_hits(scorer(self.spark, engine.store,
+            hits = _ranked_hits(scorer(self.spark, esnap,
                                        [{"query_id": 0, "text": qtext}],
                                        k=k, candidates=cand_df))
         elif terms:
-            hits = engine._topk(engine._snapshot(), terms, k, method,
-                                allowed=allowed)
+            hits = engine._topk(esnap, terms, k, method, allowed=allowed)
         out = self.spark.createDataFrame(
             [(i + 1, d, float(s)) for i, (d, s) in enumerate(hits)],
             "rank int, doc_id long, score double")
-        out = out.join(engine.store.doc_stats(self.spark).select("doc_id", "url"),
-                       "doc_id", "left")
+        out = out.join(engine.store.doc_stats(self.spark, esnap.epoch)
+                       .select("doc_id", "url"), "doc_id", "left")
         if docs_meta is not None:
             # doc_stats-backed meta (r5) carries url/dl the result
             # already has — drop the overlap so the join never forks
@@ -1081,8 +1024,7 @@ class BM25Engine:
             from .phrase import score_phrase_batch
 
             return _ranked_hits(score_phrase_batch(
-                self.spark, self.store, docs_df, [(0, phrase)], k=k,
-                slop=slop))
+                self.spark, snap, docs_df, [(0, phrase)], k=k, slop=slop))
         arrays = self._load_term_arrays(snap, uterms)
         cand = _conjunction(arrays, uterms)
         if not len(cand):
@@ -1190,7 +1132,10 @@ class BM25Engine:
         all_terms = sorted({t for _, t in steps})
         snap = self._snapshot()
         if self._over_budget(snap, all_terms):
-            return _ranked_hits(self.boolean_batch([(0, expr)], k=k))
+            from .boolean import score_boolean_batch
+
+            return _ranked_hits(score_boolean_batch(self.spark, snap,
+                                                    [(0, expr)], k=k))
         arrays = self._load_term_arrays(snap, all_terms)
 
         empty = np.empty(0, dtype=np.int64)
@@ -1415,8 +1360,7 @@ class BM25Engine:
         if allowed is not None and not len(allowed):
             return [], bag  # selective filter matched nothing
         if cand_df is not None or self._over_budget(snap, allt):
-            cands = qstring.accepted_docs_df(self.spark, self.store, node,
-                                             docs_df)
+            cands = qstring.accepted_docs_df(self.spark, snap, node, docs_df)
             if cand_df is not None:
                 cands = cands.join(cand_df.select("doc_id"), "doc_id",
                                    "left_semi")
@@ -1424,10 +1368,10 @@ class BM25Engine:
                 # a SELECTIVE filter must bind on the distributed path
                 # too (over-budget terms do not waive it): the small
                 # allowed set broadcasts into the semi-join
-                cands = cands.join(self._doc_frame(allowed), "doc_id",
+                cands = cands.join(doc_frame(self.spark, allowed), "doc_id",
                                    "left_semi")
             return _ranked_hits(score_query_batch(
-                self.spark, self.store,
+                self.spark, snap,
                 [{"query_id": 0, "text": " ".join(sorted(bag)),
                   "boosts": bag}], k=k, candidates=cands)), bag
         arrays = self._load_term_arrays(snap, allt)
@@ -1510,7 +1454,7 @@ class BM25Engine:
         # plan_barrier: without it Catalyst substitutes jt into the
         # contains/rlike filter and pushes it BELOW the broadcast join —
         # re-tokenizing the whole corpus (see phrase.py)
-        jt = (src.join(self._doc_frame(cand), "doc_id")
+        jt = (src.join(doc_frame(self.spark, cand), "doc_id")
               .select("doc_id",
                       plan_barrier(joined_tokens_expr("text")).alias("jt")))
         pat = phrase_pattern(terms, slop)
@@ -1537,7 +1481,7 @@ class BM25Engine:
         from .facets import facet_counts as _fc
 
         expr = _match_expr(query, boolean, "facet_counts")
-        return _fc(self.spark, self.store, expr, by=by, top=top,
+        return _fc(self.spark, self._snapshot(), expr, by=by, top=top,
                    granularity=granularity)
 
     def facet_stats(self, query: str, val_col: str, by: str = "host",
@@ -1550,8 +1494,8 @@ class BM25Engine:
         from .facets import facet_stats as _fs
 
         expr = _match_expr(query, boolean, "facet_stats")
-        return _fs(self.spark, self.store, expr, val_col, by=by, top=top,
-                   granularity=granularity)
+        return _fs(self.spark, self._snapshot(), expr, val_col, by=by,
+                   top=top, granularity=granularity)
 
     def match_count(self, query: str, *, boolean: bool = False) -> int:
         """The ES ``_count`` endpoint: how many docs match, no ranking
@@ -1563,7 +1507,7 @@ class BM25Engine:
         from .boolean import accepted_docs
 
         expr = _match_expr(query, boolean, "match_count")
-        return (accepted_docs(self.spark, self.store, [(0, expr)])
+        return (accepted_docs(self.spark, self._snapshot(), [(0, expr)])
                 .select("doc_id").distinct().count())
 
     def sorted_topk(self, query: str, by: str, k: int = 10, *,
@@ -1580,7 +1524,7 @@ class BM25Engine:
         from .facets import sort_topk as _st
 
         expr = _match_expr(query, boolean, "sorted_topk")
-        return _st(self.spark, self.store, expr, by, k=k,
+        return _st(self.spark, self._snapshot(), expr, by, k=k,
                    ascending=ascending)
 
     # ------------------------------------------------- collapse / recency
@@ -1611,9 +1555,9 @@ class BM25Engine:
         if per_key < 1:
             raise ValueError("per_key must be >= 1")
         engine, qtext = self._route(query)
-        sm = scored_matches(self.spark, engine.store,
-                            [{"query_id": 0, "text": qtext}])
-        ds = engine.store.doc_stats(self.spark).select(
+        snap = engine._snapshot()
+        sm = scored_matches(self.spark, snap, [{"query_id": 0, "text": qtext}])
+        ds = engine.store.doc_stats(self.spark, snap.epoch).select(
             "doc_id", "url", facet_key_expr(by).alias("key"))
         # score ties break on url — the stable EXTERNAL key (engine
         # doc_ids are url hashes, so url order is reproducible by any
@@ -1652,9 +1596,9 @@ class BM25Engine:
         from .scoring import scored_matches
 
         engine, qtext = self._route(query)
-        sm = scored_matches(self.spark, engine.store,
-                            [{"query_id": 0, "text": qtext}])
-        ds = engine.store.doc_stats(self.spark).select(
+        snap = engine._snapshot()
+        sm = scored_matches(self.spark, snap, [{"query_id": 0, "text": qtext}])
+        ds = engine.store.doc_stats(self.spark, snap.epoch).select(
             "doc_id", "url", F.col(ts_col).alias("_ts"))
         age_days = (
             (F.unix_timestamp(F.lit(now).cast("timestamp"))
@@ -1699,8 +1643,7 @@ class BM25Engine:
         hit_ids = {int(d) for d, _ in hits}
         if engine.driver_fallbacks > n0:
             # _topk ran the distributed plan: nothing was decoded here
-            rows = self._explain_cells_distributed(engine, snap, terms,
-                                                   hit_ids)
+            rows = self._explain_cells_distributed(snap, terms, hit_ids)
             for term, df_t, doc, tf, dl in rows:
                 dfs[term] = int(df_t)
                 cells.setdefault(term, {})[int(doc)] = (int(tf), int(dl))
@@ -1733,21 +1676,16 @@ class BM25Engine:
                 })
         return out
 
-    def _explain_cells_distributed(self, engine, snap: Snapshot, terms,
-                                   hit_ids):
-        """(term, df, doc_id, tf, dl) for hit docs via the pruned
-        distributed decode — the budget-safe explain path."""
-        from .scoring import (decode_postings_map_in_pandas,
-                              lookup_term_dfs, pruned_postings)
+    def _explain_cells_distributed(self, snap: Snapshot, terms, hit_ids):
+        """(term, df, doc_id, tf, dl) for hit docs via the snapshot's
+        distributed postings decode — the budget-safe explain path."""
+        from .scoring import decoded_postings, lookup_term_dfs
 
         tid = {term_id_for(t): t for t in terms}
-        dfs = lookup_term_dfs(engine.store, sorted(tid), snap.n_buckets,
-                              snap.epoch)
-        dec = pruned_postings(self.spark, engine.store, sorted(dfs),
-                              snap.n_buckets).mapInPandas(
-            decode_postings_map_in_pandas,
-            schema="term_id long, doc_id long, tf int, dl int")
-        rows = (dec.join(self._doc_frame(hit_ids), "doc_id", "left_semi")
+        dfs = lookup_term_dfs(snap, tid)
+        rows = (decoded_postings(self.spark, snap, list(dfs))
+                .join(doc_frame(self.spark, sorted(hit_ids)), "doc_id",
+                      "left_semi")
                 .collect())
         return [(tid[r["term_id"]], dfs[r["term_id"]], r["doc_id"],
                  r["tf"], r["dl"]) for r in rows]
@@ -1838,7 +1776,7 @@ class BM25Engine:
         from .sigterms import significant_terms as _st
 
         engine, qtext = self._route(query)
-        return _st(self.spark, engine.store, qtext, docs_df, top=top,
+        return _st(self.spark, engine._snapshot(), qtext, docs_df, top=top,
                    sample_size=sample_size, min_doc_count=min_doc_count)
 
     # ------------------------------------------------------------- rescore
@@ -1937,7 +1875,7 @@ class BM25Engine:
             from .phrase import score_phrase_batch
 
             return _ranked_hits(score_phrase_batch(
-                self.spark, self.store, None, [(0, " ".join(terms))], k=k,
+                self.spark, snap, None, [(0, " ".join(terms))], k=k,
                 slop=slop, match_fn=span_match))
         arrays = self._load_term_arrays(snap, terms)
         cand = _conjunction(arrays, terms)
@@ -1976,8 +1914,7 @@ class BM25Engine:
         snap = engine._snapshot()
         if engine._over_budget(snap, all_terms):
             return _ranked_hits(score_synonym_batch(
-                self.spark, engine.store,
-                [{"query_id": 0, "groups": groups}], k=k))
+                self.spark, snap, [{"query_id": 0, "groups": groups}], k=k))
         arrays = engine._load_term_arrays(snap, all_terms)
         blended: dict[str, tuple] = {}
         for gkey, members in groups.items():

@@ -12,6 +12,8 @@ no document that matches no query term ever exists in the plan). The
 facet key joins in from doc_stats on doc_id — a shuffle hash join
 whose left side is only the matching docs — and the count aggregate
 gets map-side partial aggregation. No corpus/text access at any stage.
+Every plan takes the query's Snapshot (index/storage.py): the match
+set and doc_stats both come from its epoch.
 """
 
 from __future__ import annotations
@@ -50,7 +52,7 @@ def facet_key_expr(by: str, granularity: str | None = None):
     return F.col(by)
 
 
-def facet_counts(spark: SparkSession, store, expr: str, by: str = "host",
+def facet_counts(spark: SparkSession, snap, expr: str, by: str = "host",
                  top: int = 20, granularity: str | None = None,
                  ) -> DataFrame:
     """(facet, n_docs) for the ``top`` most frequent facet values among
@@ -58,8 +60,8 @@ def facet_counts(spark: SparkSession, store, expr: str, by: str = "host",
     chain too). Deterministic (n_docs DESC, facet ASC) order —
     except with ``granularity`` (date histogram), where the natural
     order is chronological (facet ASC)."""
-    matched = accepted_docs(spark, store, [(0, expr)]).select("doc_id")
-    stats = store.doc_stats(spark)
+    matched = accepted_docs(spark, snap, [(0, expr)]).select("doc_id")
+    stats = snap.store.doc_stats(spark, snap.epoch)
     grouped = (
         matched.join(stats, "doc_id")
         .groupBy(facet_key_expr(by, granularity).alias("facet"))
@@ -72,7 +74,7 @@ def facet_counts(spark: SparkSession, store, expr: str, by: str = "host",
             .limit(top))
 
 
-def facet_stats(spark: SparkSession, store, expr: str, val_col: str,
+def facet_stats(spark: SparkSession, snap, expr: str, val_col: str,
                 by: str = "host", top: int = 20,
                 granularity: str | None = None) -> DataFrame:
     """ES metric-aggregation analog (`stats` inside a bucket agg):
@@ -86,8 +88,8 @@ def facet_stats(spark: SparkSession, store, expr: str, val_col: str,
     numeric doc_stats column ('dl' is always present; any numeric
     meta_cols column works). Deterministic (n_docs DESC, facet ASC)
     order; chronological with ``granularity``."""
-    matched = accepted_docs(spark, store, [(0, expr)]).select("doc_id")
-    stats = store.doc_stats(spark)
+    matched = accepted_docs(spark, snap, [(0, expr)]).select("doc_id")
+    stats = snap.store.doc_stats(spark, snap.epoch)
     v = F.col(val_col).cast("double")
     grouped = (
         matched.join(stats, "doc_id")
@@ -103,7 +105,7 @@ def facet_stats(spark: SparkSession, store, expr: str, val_col: str,
             .limit(top))
 
 
-def sort_topk(spark: SparkSession, store, expr: str, by: str,
+def sort_topk(spark: SparkSession, snap, expr: str, by: str,
               k: int = 10, *, ascending: bool = False) -> DataFrame:
     """ES sort-by-field: the top-``k`` docs of the FULL match set of a
     boolean ``expr`` ordered by a doc_stats key instead of relevance —
@@ -120,8 +122,8 @@ def sort_topk(spark: SparkSession, store, expr: str, by: str,
     survivors only. Returns (rank, doc_id, url, sort_value)."""
     from pyspark.sql import Window
 
-    matched = accepted_docs(spark, store, [(0, expr)]).select("doc_id")
-    stats = store.doc_stats(spark)
+    matched = accepted_docs(spark, snap, [(0, expr)]).select("doc_id")
+    stats = snap.store.doc_stats(spark, snap.epoch)
     key = facet_key_expr(by)
     order = [(key.asc_nulls_last() if ascending
               else key.desc_nulls_last()), F.col("url").asc()]

@@ -15,11 +15,12 @@ contributions twice.
 Driver path: one snapshot per shard, per-shard decoded postings (each
 shard's cache works unchanged) concatenated per term, scored once with
 the global stats.
-Distributed path (score_federated_batch): per-shard pruned postings
-scans UNION into one decode -> broadcast-join -> aggregate plan — the
-same ONE-shuffle shape as scoring.score_query_batch, with the shard
-fan-out folded into the scan union (Spark unions of parquet scans
-stay separate input stages; no extra shuffle).
+Distributed path (score_federated_batch): per-shard decoded postings
+(scoring.decoded_postings over each shard's snapshot) UNION into one
+broadcast-join -> aggregate plan — the same ONE-shuffle shape as
+scoring.score_query_batch, with the shard fan-out folded into the scan
+union (Spark unions of parquet scans stay separate input stages; no
+extra shuffle).
 """
 
 from __future__ import annotations
@@ -28,10 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..analysis import tokenize
+from ..index.storage import Snapshot
 from .engine import BM25Engine, _ranked_hits
-from .scoring import (DECODED_SCHEMA, contribution_expr,
-                      decode_postings_map_in_pandas, lookup_term_dfs,
-                      pruned_postings, with_df_idf)
+from .scoring import (analyze_queries, contribution_expr, decoded_postings,
+                      lookup_term_dfs, with_df_idf)
 
 #: manifest keys that must agree across shards for global scoring to
 #: be meaningful (analyzer and scoring constants)
@@ -83,8 +84,7 @@ class FederatedEngine:
         if any(s._over_budget(snap, terms)
                for s, snap in zip(self.shards, snaps)):
             return _ranked_hits(score_federated_batch(
-                self.spark, self.shards, [{"query_id": 0, "text": query}],
-                k=k))
+                self.spark, snaps, [{"query_id": 0, "text": query}], k=k))
         merged: dict[str, list] = {}
         for s, snap in zip(self.shards, snaps):
             for t, (df_t, docs, tfs, dls) in s._load_term_arrays(
@@ -117,52 +117,36 @@ def _global_stats(manifests: list[dict]) -> tuple[int, float]:
     return n, (tot / n if n else 0.0)
 
 
-def score_federated_batch(spark: SparkSession, shards: list[BM25Engine],
+def score_federated_batch(spark: SparkSession, snaps: list[Snapshot],
                           queries: list[dict], k: int = 10) -> DataFrame:
-    """Distributed federated scoring: shard scans union below ONE
-    decode -> broadcast qterms join -> per-(query, doc) aggregate ->
-    per-query top-k — the score_query_batch plan with the shard
-    fan-out in the scan layer and GLOBAL df on the broadcast side."""
-    from .scoring import analyze_queries
-
-    manifests = [s.manifest for s in shards]
-    k1, b = float(manifests[0]["k1"]), float(manifests[0]["b"])
-    n_docs, avgdl = _global_stats(manifests)
-
+    """Distributed federated scoring over one Snapshot per shard: shard
+    scans union below ONE broadcast qterms join -> per-(query, doc)
+    aggregate -> per-query top-k — the score_query_batch plan with the
+    shard fan-out in the scan layer and GLOBAL df on the broadcast
+    side."""
+    n_docs, avgdl = _global_stats([snap.manifest for snap in snaps])
     out_schema = "query_id int, rank int, doc_id long, score double"
     qterms_pdf = analyze_queries(queries)
-    if qterms_pdf.empty:
-        return spark.createDataFrame([], out_schema)
-    term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
+    term_ids = qterms_pdf["term_id"].tolist()
 
     # global df: per-shard term_stats metadata reads, summed
     gdf: dict[int, int] = {}
-    for s, m in zip(shards, manifests):
-        for tid, d in lookup_term_dfs(
-                s.store, term_ids, int(m["n_buckets"]),
-                int(m["epoch"])).items():
+    for snap in snaps:
+        for tid, d in lookup_term_dfs(snap, term_ids).items():
             gdf[tid] = gdf.get(tid, 0) + int(d)
     qterms_pdf = with_df_idf(qterms_pdf, gdf, n_docs)
-    if qterms_pdf.empty:
+    if qterms_pdf.empty:  # no terms, or every term OOV
         return spark.createDataFrame([], out_schema)
-    qterms = spark.createDataFrame(qterms_pdf)
-    term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
-
-    decoded = None
-    for s, m in zip(shards, manifests):
-        part = pruned_postings(
-            spark, s.store, term_ids,
-            int(m["n_buckets"])).mapInPandas(
-                decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
-        tomb = s.store.tombstones(spark)
-        if tomb is not None:
-            part = part.join(F.broadcast(tomb), "doc_id", "left_anti")
-        decoded = part if decoded is None else decoded.unionByName(part)
+    term_ids = qterms_pdf["term_id"].tolist()
+    decoded = decoded_postings(spark, snaps[0], term_ids)
+    for snap in snaps[1:]:
+        decoded = decoded.unionByName(decoded_postings(spark, snap, term_ids))
 
     contribs = (
-        decoded.join(F.broadcast(qterms), "term_id")
+        decoded.join(F.broadcast(spark.createDataFrame(qterms_pdf)), "term_id")
         .withColumn("contrib",
-                    contribution_expr(avgdl, k1, b) * F.col("weight"))
+                    contribution_expr(avgdl, snaps[0].k1, snaps[0].b)
+                    * F.col("weight"))
     )
     scored = (
         contribs.groupBy("query_id", "doc_id")

@@ -87,13 +87,13 @@ def plan_barrier(col):
     return F.when(F.spark_partition_id() >= F.lit(0), col)
 
 
-def score_phrase_batch(spark, store, docs_df: DataFrame | None,
+def score_phrase_batch(spark, snap, docs_df: DataFrame | None,
                        phrases: list[tuple[int, str]], k: int = 10,
                        slop: int = 0, match_fn=None) -> DataFrame:
     """Index-backed DISTRIBUTED phrase search (r4): candidates come from
     the INVERTED INDEX, not a corpus re-tokenize.
 
-      pruned postings scan -> mapInPandas block decode
+      scoring.decoded_postings (the snapshot's pruned, decoded postings)
         -> broadcast join with the phrases' (query, term, df) rows
         -> groupBy(query_id, doc_id): n_hit + sorted BM25 parts [1 shuffle]
         -> conjunctive gate (n_hit == n_terms)     = the candidate set
@@ -105,23 +105,19 @@ def score_phrase_batch(spark, store, docs_df: DataFrame | None,
            per (query, doc) — fully index-only
         -> score = term-ascending sum over parts, top-k window.
 
-    ``docs_df``: the source-of-truth corpus with (url|doc_id, text),
-    or None to use the positional sidecar (must exist for the current
-    epoch). Ranking matches phrase_topk / engine.phrase_topk exactly
-    (global corpus stats, phrase terms only; tests assert)."""
+    ``snap``: the query's Snapshot (index/storage.py); the plan reads
+    only its epoch. ``docs_df``: the source-of-truth corpus with
+    (url|doc_id, text), or None to use the positional sidecar (must
+    exist for the snapshot's epoch). Ranking matches phrase_topk /
+    engine.phrase_topk exactly (global corpus stats, phrase terms only;
+    tests assert)."""
     import pandas as pd
 
     from ..analysis import term_id_for
     from ..index.build import doc_id_expr
-    from .scoring import (DECODED_SCHEMA, contribution_expr,
-                          decode_postings_map_in_pandas, lookup_term_dfs,
-                          pruned_postings, with_df_idf)
+    from .scoring import contribution_expr, decoded_postings, in_vocabulary
 
     out_schema = "query_id int, rank int, doc_id long, score double"
-    manifest = store.read_manifest()
-    n_docs, avgdl = int(manifest["n_docs"]), float(manifest["avgdl"])
-    k1, b = float(manifest["k1"]), float(manifest["b"])
-    n_buckets = int(manifest["n_buckets"])
 
     qrows, prows = [], []
     for qid, phrase in phrases:
@@ -135,27 +131,17 @@ def score_phrase_batch(spark, store, docs_df: DataFrame | None,
         prows.append((qid, phrase_pattern(terms, slop), len(uts)))
     if not qrows:
         return spark.createDataFrame([], out_schema)
-    qpdf = pd.DataFrame(qrows)
-    term_ids = sorted(qpdf["term_id"].unique().tolist())
-    dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
     # an OOV phrase term can never satisfy n_hit == n_terms; dropping its
     # row keeps the conjunctive gate correct with no special case
-    qpdf = with_df_idf(qpdf, dfs, n_docs)
+    qpdf = in_vocabulary(snap, pd.DataFrame(qrows))
     if qpdf.empty:
         return spark.createDataFrame([], out_schema)
-    qterms = spark.createDataFrame(qpdf)
     pats = spark.createDataFrame(prows, "query_id int, pat string, n_terms int")
-    term_ids = sorted(qpdf["term_id"].unique().tolist())
-
-    decoded = pruned_postings(spark, store, term_ids, n_buckets).mapInPandas(
-        decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
-    tomb = store.tombstones(spark)
-    if tomb is not None:
-        decoded = decoded.join(F.broadcast(tomb), "doc_id", "left_anti")
 
     cand = (
-        decoded.join(F.broadcast(qterms), "term_id")
-        .withColumn("contrib", contribution_expr(avgdl, k1, b))
+        decoded_postings(spark, snap, qpdf["term_id"].tolist())
+        .join(F.broadcast(spark.createDataFrame(qpdf)), "term_id")
+        .withColumn("contrib", contribution_expr(snap.avgdl, snap.k1, snap.b))
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("n_hit"),
              F.sort_array(F.collect_list(
@@ -165,7 +151,7 @@ def score_phrase_batch(spark, store, docs_df: DataFrame | None,
     )
 
     if docs_df is None:
-        verified = _verified_by_positions(spark, store, phrases, cand,
+        verified = _verified_by_positions(spark, snap, phrases, cand,
                                           qpdf, slop, match_fn=match_fn)
     else:
         if match_fn is not None:
@@ -211,13 +197,13 @@ def score_phrase_batch(spark, store, docs_df: DataFrame | None,
     )
 
 
-def _verified_by_positions(spark, store, phrases, cand: DataFrame,
+def _verified_by_positions(spark, snap, phrases, cand: DataFrame,
                            qpdf, slop: int,
                            match_fn=None) -> DataFrame:
     """Distributed index-only verify (r4): the candidates' position
-    runs decode from the positional sidecar (bucket + term_id pruned),
-    group per (query, doc), and chain-match against each phrase's
-    ordered term sequence. Returns (query_id, doc_id) survivors.
+    runs decode from the positional sidecar of ``snap``'s epoch (bucket
+    + term_id pruned), group per (query, doc), and chain-match against
+    each phrase's ordered term sequence. Returns (query_id, doc_id) survivors.
 
     ``match_fn(pos_lists, slop) -> bool`` overrides the acceptance
     test (default positions.chain_match — ordered phrase); spans pass
@@ -229,17 +215,14 @@ def _verified_by_positions(spark, store, phrases, cand: DataFrame,
         match_fn = chain_match
     from ..index.storage import POSITIONS_SCHEMA, bucket_of_term_id
 
-    manifest = store.read_manifest()
-    epoch = int(manifest["epoch"])
-    n_buckets = int(manifest["n_buckets"])
-    if not store.has_positions(epoch):
+    if not snap.store.has_positions(snap.epoch):
         raise ValueError(
-            "positional sidecar absent for the current epoch — run"
+            "positional sidecar absent for the snapshot's epoch — run"
             " build_positions, or pass docs_df for match-then-verify")
     term_ids = sorted(qpdf["term_id"].unique().tolist())
-    buckets = sorted({bucket_of_term_id(t, n_buckets) for t in term_ids})
+    buckets = sorted({bucket_of_term_id(t, snap.n_buckets) for t in term_ids})
     blocks = (spark.read.schema(POSITIONS_SCHEMA)
-              .parquet(store.positions_dir_for(epoch))
+              .parquet(snap.store.positions_dir_for(snap.epoch))
               .where(F.col("bucket").isin(buckets))
               .where(F.col("term_id").isin(term_ids)))
     decoded = blocks.mapInPandas(decode_positions_map_in_pandas,

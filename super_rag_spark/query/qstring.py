@@ -442,12 +442,13 @@ def _collect_leaves(node) -> list:
 
 # ------------------------------------------------- distributed plan
 
-def accepted_docs_df(spark: SparkSession, store, node,
+def accepted_docs_df(spark: SparkSession, snap, node,
                      docs_df: DataFrame | None = None) -> DataFrame:
     """The candidate set of an (expanded) query-string tree as a
     distributed (doc_id) frame — boolean.py's step-bitmask generalized
-    to trees (see module docstring for the plan shape). ``docs_df``
-    feeds phrase verify (match-then-verify); None uses the positional
+    to trees (see module docstring for the plan shape), read from the
+    query's Snapshot ``snap`` (index/storage.py). ``docs_df`` feeds
+    phrase verify (match-then-verify); None uses the positional
     sidecar."""
     import pandas as pd
 
@@ -455,11 +456,7 @@ def accepted_docs_df(spark: SparkSession, store, node,
     from ..index.build import doc_id_expr
     from .phrase import (_verified_by_positions, joined_tokens_expr,
                          phrase_pattern, plan_barrier)
-    from .scoring import (DECODED_SCHEMA, decode_postings_map_in_pandas,
-                          pruned_postings)
-
-    manifest = store.read_manifest()
-    n_buckets = int(manifest["n_buckets"])
+    from .scoring import decoded_postings
 
     leaves = _collect_leaves(node)
     if len(leaves) > 63:
@@ -485,12 +482,8 @@ def accepted_docs_df(spark: SparkSession, store, node,
     if not all_terms:
         return spark.createDataFrame([], "doc_id long")
 
-    term_ids = sorted({term_id_for(t) for t in all_terms})
-    decoded = pruned_postings(spark, store, term_ids, n_buckets).mapInPandas(
-        decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
-    tomb = store.tombstones(spark)
-    if tomb is not None:
-        decoded = decoded.join(F.broadcast(tomb), "doc_id", "left_anti")
+    decoded = decoded_postings(spark, snap,
+                               [term_id_for(t) for t in all_terms])
 
     srcs: list[DataFrame] = []
     if mask_of_term:
@@ -519,7 +512,7 @@ def accepted_docs_df(spark: SparkSession, store, node,
                 [{"query_id": 0, "term": t, "term_id": term_id_for(t)}
                  for t in uts])
             verified = _verified_by_positions(
-                spark, store, [(0, " ".join(leaf.terms))], cand, qpdf,
+                spark, snap, [(0, " ".join(leaf.terms))], cand, qpdf,
                 leaf.slop)
             srcs.append(verified.select(
                 "doc_id", F.lit(bit).cast("long").alias("bits")))

@@ -4,13 +4,25 @@ Replaces the reference's ANN top-k + Cohere rerank
 (/root/reference/service/router.py:40-73, /root/reference/vectordbs/base.py:40-79)
 with exact sparse retrieval (SURVEY.md §2.6 T1/T2).
 
+Every plan takes the query's Snapshot (index/storage.py) and reads
+only its epoch: df through lookup_term_dfs, postings and pending
+tombstones through decoded_postings, the one postings reader. Neither
+reads the live manifest, so a merge that commits mid-plan makes the
+plan raise (the old epoch's files are gone), never mix two epochs.
+
 Plan shape (batch of queries):
-  postings scan (bucket partition-pruned + term row-group filtered)
+  decoded_postings: postings scan of the snapshot's epoch
+      (bucket partition-pruned + term row-group filtered)
     -> mapInPandas block decode (NumPy varint)      [1 -> n rows]
-    -> broadcast join with query terms              [no shuffle]
-    -> BM25 contribution column (pure Catalyst expr)
-    -> groupBy(query_id, doc_id) deterministic sum  [the ONE shuffle]
-    -> per-query top-k window                       [tiny after agg]
+    -> broadcast anti-join with the pending tombstones
+  -> broadcast join with query terms (df, idf)      [no shuffle]
+  -> BM25 contribution column (pure Catalyst expr)
+  -> groupBy(query_id, doc_id) deterministic sum    [the ONE shuffle]
+  -> per-query top-k window                         [tiny after agg]
+
+The WAND plan (score_query_batch_wand) shuffles only (query, salt
+range, term) spec rows, with any filter's candidate docs beside them;
+its tasks read encoded blocks of the same epoch directly.
 
 Determinism: contributions are collected and summed in term-ascending
 order (sort_array over struct(term, contrib)) so float addition order
@@ -20,24 +32,22 @@ doc_id asc (SURVEY.md §2.5).
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..analysis import idf, term_id_for, tokenize
 from ..codec import decode_blocks_batch
-from ..index.storage import IndexStorage, bucket_of_term_id
+from ..index.storage import Snapshot, bucket_of_term_id
 
 DECODED_SCHEMA = "term_id long, doc_id long, tf int, dl int"
 
 
 def decode_postings_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Block rows -> exploded (term, doc_id, tf, dl) posting rows."""
-    import numpy as np
-
     for pdf in batches:
         if not len(pdf):
             yield pd.DataFrame({c: np.array([], dtype="int64")
@@ -71,37 +81,67 @@ def analyze_queries(queries: list[dict]) -> pd.DataFrame:
                         columns=["query_id", "term", "term_id", "weight"])
 
 
-def _bucket_dir(base: str, bucket: int) -> str:
-    """The ``bucket=<bucket>`` dir of a postings or term_stats epoch dir.
-    Build, merge and compaction write every bucket dir of both tables,
-    so a missing one is lost data: it raises instead of reading as an
-    empty bucket."""
-    p = os.path.join(base, f"bucket={bucket}")
-    if not os.path.isdir(p):
-        raise FileNotFoundError(
-            f"bucket {bucket} of {os.path.basename(base)} is missing: {p}")
-    return p
+def doc_frame(spark: SparkSession, ids) -> DataFrame:
+    """A broadcast (doc_id) frame of a small doc_id array."""
+    return F.broadcast(spark.createDataFrame(
+        pd.DataFrame({"doc_id": np.asarray(ids, dtype=np.int64)}),
+        "doc_id long"))
 
 
-def lookup_term_dfs(store: IndexStorage, term_ids: list[int],
-                    n_buckets: int, epoch: int) -> dict[int, int]:
-    """Driver-side df lookup from the term_stats table (v3 blocks are
-    stats-free). One pyarrow read per touched bucket partition, filtered
-    by term_id against sorted row groups — O(query terms), never a Spark
-    job. This is why term_stats exists as its own table: a head term at
-    10^12 docs has millions of block rows; its df is ONE row here."""
+def _bucket_dirs(snap: Snapshot, term_ids) -> dict[int, str]:
+    """bucket -> postings dir of ``snap``'s epoch, for every bucket
+    owning one of ``term_ids`` (a missing dir raises, see
+    IndexStorage.bucket_dir)."""
+    return {b: snap.store.bucket_dir("postings", snap.epoch, b)
+            for b in sorted({bucket_of_term_id(int(t), snap.n_buckets)
+                             for t in term_ids})}
+
+
+def lookup_term_dfs(snap: Snapshot, term_ids) -> dict[int, int]:
+    """The plans' df lookup, from the term_stats of ``snap``'s epoch
+    (v3 blocks are stats-free); OOV terms are absent. One pyarrow read
+    per touched bucket
+    partition, filtered by term_id against sorted row groups —
+    O(query terms), never a Spark job. This is why term_stats exists as
+    its own table: a head term at 10^12 docs has millions of block rows;
+    its df is ONE row here."""
     import pyarrow.dataset as pads
 
     by_bucket: dict[int, list[int]] = {}
-    for t in term_ids:
-        by_bucket.setdefault(bucket_of_term_id(t, n_buckets), []).append(t)
+    for t in sorted({int(t) for t in term_ids}):
+        by_bucket.setdefault(bucket_of_term_id(t, snap.n_buckets),
+                             []).append(t)
     out: dict[int, int] = {}
     for b, ts in by_bucket.items():
-        p = _bucket_dir(store.term_stats_dir_for(epoch), b)
+        p = snap.store.bucket_dir("term_stats", snap.epoch, b)
         tbl = pads.dataset(p, format="parquet").to_table(
             filter=pads.field("term_id").isin(ts), columns=["term_id", "df"])
         out.update(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
     return out
+
+
+def decoded_postings(spark: SparkSession, snap: Snapshot,
+                     term_ids) -> DataFrame:
+    """THE postings reader of the plans: the decoded (term_id, doc_id,
+    tf, dl) rows of ``term_ids`` in ``snap``'s epoch, minus the
+    snapshot's pending tombstones. The scan is restricted to the buckets
+    owning the terms (directory-level partition pruning) and to the term
+    ids themselves (parquet row-group min/max pruning — files are sorted
+    by term_id). A missing bucket dir raises rather than scanning as
+    empty."""
+    term_ids = sorted({int(t) for t in term_ids})
+    # checked before the scan is planned, which lists the epoch's dir
+    buckets = list(_bucket_dirs(snap, term_ids))
+    decoded = (
+        snap.store.postings(spark, snap.epoch)
+        .where(F.col("bucket").isin(buckets))
+        .where(F.col("term_id").isin(term_ids))
+        .mapInPandas(decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
+    )
+    if len(snap.deleted):
+        decoded = decoded.join(doc_frame(spark, snap.deleted), "doc_id",
+                               "left_anti")
+    return decoded
 
 
 def with_df_idf(qterms_pdf: pd.DataFrame, dfs: dict[int, int],
@@ -128,6 +168,13 @@ def collected_idf(dfreq: DataFrame, qterms: DataFrame,
         "term string, idf double")
 
 
+def in_vocabulary(snap: Snapshot, qterms_pdf: pd.DataFrame) -> pd.DataFrame:
+    """with_df_idf over ``snap``'s df lookup: the in-vocabulary rows of a
+    query-term frame, empty when every term is OOV (or there is none)."""
+    dfs = lookup_term_dfs(snap, qterms_pdf["term_id"].tolist())
+    return with_df_idf(qterms_pdf, dfs, snap.n_docs)
+
+
 def contribution_expr(avgdl: float, k1: float, b: float):
     """Catalyst mirror of the NumPy kernel (wand.bm25_contrib) and of
     analysis.bm25_term_score over the ``idf``, ``tf`` and ``dl``
@@ -139,24 +186,7 @@ def contribution_expr(avgdl: float, k1: float, b: float):
     return F.col("idf") * (tf * F.lit(k1 + 1.0)) / denom
 
 
-def pruned_postings(spark: SparkSession, store: IndexStorage, term_ids: list[int],
-                    n_buckets: int) -> DataFrame:
-    """Postings scan restricted to the buckets owning the query terms
-    (directory-level partition pruning) and the term ids themselves
-    (parquet row-group min/max pruning — files are sorted by term_id).
-    A missing bucket dir raises rather than scanning as empty."""
-    buckets = sorted({bucket_of_term_id(t, n_buckets) for t in term_ids})
-    epoch = store.epoch()
-    for b in buckets:
-        _bucket_dir(store.postings_dir_for(epoch), b)
-    return (
-        store.postings(spark, epoch)
-        .where(F.col("bucket").isin(buckets))
-        .where(F.col("term_id").isin(list(term_ids)))
-    )
-
-
-def scored_matches(spark: SparkSession, store: IndexStorage,
+def scored_matches(spark: SparkSession, snap: Snapshot,
                    queries: list[dict],
                    candidates: DataFrame | None = None) -> DataFrame:
     """The FULL scored match set of a query batch — every (query_id,
@@ -170,38 +200,20 @@ def scored_matches(spark: SparkSession, store: IndexStorage,
     docs in the candidate set are scored (semi join BEFORE scoring, so
     the filter is exact, not a post-hoc re-rank).
     """
-    manifest = store.read_manifest()
-    n_docs, avgdl = int(manifest["n_docs"]), float(manifest["avgdl"])
-    k1, b = float(manifest["k1"]), float(manifest["b"])
-    n_buckets = int(manifest["n_buckets"])
-
-    qterms_pdf = analyze_queries(queries)
-    if qterms_pdf.empty:
+    qterms_pdf = in_vocabulary(snap, analyze_queries(queries))
+    if qterms_pdf.empty:  # no terms, or every term OOV
         return spark.createDataFrame([], "query_id int, doc_id long, score double")
-    term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
-    dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
-    qterms_pdf = with_df_idf(qterms_pdf, dfs, n_docs)
-    if qterms_pdf.empty:  # every term OOV
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
-    qterms = spark.createDataFrame(qterms_pdf)
-    term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
 
-    decoded = pruned_postings(spark, store, term_ids, n_buckets).mapInPandas(
-        decode_postings_map_in_pandas, schema=DECODED_SCHEMA
-    )
-
-    tomb = store.tombstones(spark)
-    if tomb is not None:
-        decoded = decoded.join(F.broadcast(tomb), "doc_id", "left_anti")
+    decoded = decoded_postings(spark, snap, qterms_pdf["term_id"].tolist())
     if candidates is not None:
         decoded = decoded.join(candidates.select("doc_id"), "doc_id", "left_semi")
 
     # r5 boosts: weight rides the broadcast query frame; w=1.0 keeps
     # the multiply a no-op bit-for-bit (x * 1.0 == x for finite x)
     contribs = (
-        decoded.join(F.broadcast(qterms), "term_id")
-        .withColumn("contrib",
-                    contribution_expr(avgdl, k1, b) * F.col("weight"))
+        decoded.join(F.broadcast(spark.createDataFrame(qterms_pdf)), "term_id")
+        .withColumn("contrib", contribution_expr(snap.avgdl, snap.k1, snap.b)
+                    * F.col("weight"))
     )
 
     scored = (
@@ -230,7 +242,7 @@ def scored_matches(spark: SparkSession, store: IndexStorage,
     return scored.drop("n_matched")
 
 
-def score_query_batch(spark: SparkSession, store: IndexStorage,
+def score_query_batch(spark: SparkSession, snap: Snapshot,
                       queries: list[dict], k: int = 10,
                       candidates: DataFrame | None = None,
                       after: tuple[int, float] | None = None) -> DataFrame:
@@ -247,7 +259,7 @@ def score_query_batch(spark: SparkSession, store: IndexStorage,
 
     Returns (query_id int, rank int, doc_id long, score double).
     """
-    scored = scored_matches(spark, store, queries, candidates=candidates)
+    scored = scored_matches(spark, snap, queries, candidates=candidates)
 
     if after is not None:
         # round the cursor with Spark's OWN round (HALF_UP) so a tied
@@ -267,26 +279,31 @@ def score_query_batch(spark: SparkSession, store: IndexStorage,
     )
 
 
-def score_query_batch_wand(spark: SparkSession, store: IndexStorage,
+def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
                            queries: list[dict], k: int = 10,
                            candidates: DataFrame | None = None) -> DataFrame:
     """Distributed block-max WAND: the query batch is the parallelism
-    axis — each query's (compressed, still-encoded) blocks are grouped
-    to one task, which runs the NumPy WAND scorer with full block-skip
-    pruning. Compared to score_query_batch this never decodes blocks
-    the threshold prunes, at the cost of shipping one query's blocks to
-    one task (bounded: <=5 terms x df/BLOCK_SIZE block rows).
+    axis — each (query, salt range) task runs the NumPy WAND scorer over
+    its terms' still-encoded blocks with full block-skip pruning.
+    Compared to score_query_batch this never decodes blocks the
+    threshold prunes.
 
-    ``candidates``: optional (doc_id) frame (P7 metadata filter). The
-    candidate set is routed to each (query, salt-range) task via a
-    cogroup — a candidate doc joins exactly its OWN range's task
-    (range_id = doc_id >> shift), so block skipping survives broad
-    filters instead of falling back to the exhaustive plan.
+    Only (query, range, term) spec rows (a few bytes each) are
+    shuffled. Each task reads its partition's distinct terms' blocks
+    once, straight from the snapshot's epoch with pyarrow (bucket +
+    row-group pruning), or, when the batch's blocks fit a broadcast
+    budget, takes the ones the driver read once and broadcast.
+
+    ``candidates``: optional (doc_id) frame (P7 metadata filter). Each
+    candidate doc rides the same shuffle as the spec rows, routed to
+    exactly the (query, range) tasks that may score it, and reaches
+    wand_topk as ``allowed``, so block skipping survives broad filters.
+    Pending tombstones reach it as ``deleted``.
 
     Returns (query_id int, rank int, doc_id long, score double) —
     rank-identical to the exhaustive plan (tests assert it).
     """
-    import numpy as np
+    from ..analysis import DOC_ID_BITS
 
     if any(q.get("boosts") or int(q.get("msm", 1)) > 1 for q in queries):
         # WAND's block upper bounds assume unweighted disjunctions;
@@ -295,206 +312,114 @@ def score_query_batch_wand(spark: SparkSession, store: IndexStorage,
         raise ValueError("boosts/msm require score_query_batch "
                          "(the WAND bounds don't carry weights)")
 
-    manifest = store.read_manifest()
-    n_docs, avgdl = int(manifest["n_docs"]), float(manifest["avgdl"])
-    k1, b = float(manifest["k1"]), float(manifest["b"])
-    n_buckets = int(manifest["n_buckets"])
-
-    qterms_pdf = analyze_queries(queries)
     out_schema = "query_id int, rank int, doc_id long, score double"
+    qterms_pdf = in_vocabulary(snap, analyze_queries(queries))
     if qterms_pdf.empty:
         return spark.createDataFrame([], out_schema)
-    term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
-    dfs = lookup_term_dfs(store, term_ids, n_buckets, int(manifest["epoch"]))
-    qterms_pdf = with_df_idf(qterms_pdf, dfs, n_docs)
-    if qterms_pdf.empty:
-        return spark.createDataFrame([], out_schema)
-    term_ids = sorted(qterms_pdf["term_id"].unique().tolist())
-
-    if store.tombstones(spark) is not None:
-        # pending lazy deletes change set membership below the WAND
-        # threshold; use the exhaustive plan until the next merge GCs them
-        return score_query_batch(spark, store, queries, k=k,
-                                 candidates=candidates)
+    term_ids = sorted(set(qterms_pdf["term_id"].tolist()))
 
     # Distribution axis: (query_id, salt range). Salt ranges partition
-    # the doc-id space into SALT_COUNT contiguous, non-overlapping
+    # the doc-id space into salt_count contiguous, non-overlapping
     # stripes (index/build.py salting), so per-range WAND top-k + a
     # global merge is rank-exact AND no single task ever owns a whole
     # head-term query (the round-1 bottleneck: groupBy(query_id) put
     # df/128 block rows of "the" on one executor). Blocks of unsalted
-    # terms span multiple ranges and are replicated to each (bounded:
-    # tail terms have few blocks); queries with NO salted term keep one
-    # task (range_id=-1, no mask) — no decode-amplification for the
-    # common case.
-    shift = _salt_shift(manifest)
-    salted_queries = set(
-        qterms_pdf.loc[qterms_pdf["df"] > int(manifest["salt_df_threshold"]),
-                       "query_id"].tolist())
-    qterms_pdf["q_salted"] = qterms_pdf["query_id"].isin(salted_queries)
-    qterms = spark.createDataFrame(qterms_pdf)
+    # terms span multiple ranges and are read by each (bounded: tail
+    # terms have few blocks); queries with NO salted term keep one
+    # task (range_id=-1, no mask).
+    salt_count = int(snap.manifest["salt_count"])
+    shift = DOC_ID_BITS - (salt_count.bit_length() - 1)
+    salted = set(qterms_pdf.loc[
+        qterms_pdf["df"] > int(snap.manifest["salt_df_threshold"]),
+        "query_id"].tolist())
+    ranges = {int(q): (range(salt_count) if q in salted else (-1,))
+              for q in qterms_pdf["query_id"].unique()}
+    # a spec row's doc_id is -1 (doc ids are >= 0); a candidate row has
+    # no term. No long column holds a null: pandas would turn it into
+    # float64, which cannot hold a 60-bit doc id or a term id
+    rows = spark.createDataFrame(
+        [(int(r.query_id), rid, r.term, int(r.term_id), int(r.df), -1)
+         for r in qterms_pdf.itertuples(index=False)
+         for rid in ranges[int(r.query_id)]],
+        "query_id long, range_id int, term string, term_id long, df long,"
+        " doc_id long")
+    if candidates is not None:
+        # each candidate doc joins its own salt range of a salted query
+        # and the -1 whole-space range of an unsalted one; the pair
+        # table is tiny (<= queries x salt_count) and broadcast, and the
+        # candidate frame is shuffled once — never collected
+        pairs = spark.createDataFrame(
+            [(q, rid) for q, rids in ranges.items() for rid in rids],
+            "query_id long, range_id int")
+        cand = candidates.select(F.col("doc_id").cast("long").alias("doc_id"))
+        rows = rows.unionByName(
+            cand.join(F.broadcast(pairs),
+                      (pairs["range_id"] == F.lit(-1))
+                      | (pairs["range_id"]
+                         == F.shiftright(cand["doc_id"], shift).cast("int")))
+            .select("query_id", "range_id",
+                    F.lit(None).cast("string").alias("term"),
+                    F.lit(0).cast("long").alias("term_id"),
+                    F.lit(0).cast("long").alias("df"), "doc_id"))
+    npart = max(1, min(sum(len(r) for r in ranges.values()),
+                       int(spark.sparkContext.defaultParallelism)))
+    dirs = _bucket_dirs(snap, term_ids)
+    n_docs, avgdl, k1, b = snap.n_docs, snap.avgdl, snap.k1, snap.b
+    n_buckets = snap.n_buckets
+    filtered = candidates is not None
+    deleted = snap.deleted if len(snap.deleted) else None
 
-    blocks = pruned_postings(spark, store, term_ids, n_buckets)
-    per_query = blocks.join(F.broadcast(qterms), "term_id")  # 1 block row per (query, term)
-    ranged = per_query.withColumn(
-        "range_id",
-        F.explode(F.when(
-            F.col("q_salted"),
-            F.sequence(F.shiftright("first_doc_id", shift).cast("int"),
-                       F.shiftright("last_doc_id", shift).cast("int")),
-        ).otherwise(F.array(F.lit(-1)))),
-    )
+    # When the batch's total block bytes fit a broadcast budget
+    # (est. ~6 B/posting), the DRIVER reads each distinct term's
+    # blocks once and broadcasts them — tasks become pure WAND
+    # compute with no per-task read duplication, which keeps the
+    # N -> 4N query-scaling ratio flat. Over-budget batches (head terms
+    # at 10^12-doc scale) read per partition instead.
+    bb = None
+    est_blk_bytes = int(qterms_pdf.drop_duplicates("term_id")["df"].sum()) * 6
+    if est_blk_bytes <= (64 << 20):
+        bb = spark.sparkContext.broadcast(
+            _read_blocks_by_tid(dirs, n_buckets, term_ids))
 
-    def run_wand(pdf: pd.DataFrame, allowed=None) -> pd.DataFrame:
+    def run_part(batches):
         from .wand import wand_topk
 
-        qid = int(pdf["query_id"].iloc[0])
-        range_id = int(pdf["range_id"].iloc[0])
-        doc_range = None
-        if range_id >= 0:
-            doc_range = (range_id << shift, (range_id + 1) << shift)
-        term_blocks: dict[str, tuple[int, list[dict]]] = {}
-        for row in pdf.itertuples(index=False):
-            term_blocks.setdefault(row.term, (int(row.df), []))[1].append({
-                "docs_enc": row.docs_enc, "tfs_enc": row.tfs_enc,
-                "dls_enc": row.dls_enc, "n": int(row.n),
-                "seg": int(row.seg),
-                "first_doc_id": int(row.first_doc_id),
-                "last_doc_id": int(row.last_doc_id),
-                "block_max_tf": int(row.block_max_tf),
-                "block_min_dl": int(row.block_min_dl),
-            })
-        # wand_topk splits blocks into (term, seg) runs and sorts them
-        hits = wand_topk(term_blocks, n_docs, avgdl, k, k1=k1, b=b,
-                         doc_range=doc_range, allowed=allowed)
-        return pd.DataFrame({
-            "query_id": qid,
-            "rank": np.arange(1, len(hits) + 1, dtype="int32"),
-            "doc_id": [d for d, _ in hits],
-            "score": [s for _, s in hits],
-        })
-
-    if candidates is None:
-        # r6 direct-read plan: the former plan shuffled every block's
-        # ENCODED PAYLOAD once per query using its term — a head term's
-        # blocks were replicated |queries| times through the
-        # scan -> broadcast-join -> groupBy exchange (~600 MB for the
-        # 600-query bench batch). Tasks now read their queries' blocks
-        # straight from the shared index with pyarrow (same bucket +
-        # row-group pruning the driver path uses), sharing one read per
-        # DISTINCT term per partition; only the (query, term) spec rows
-        # (a few bytes each) are shuffled. Rank-identical: the same
-        # per-(query, range) wand_topk runs on the same blocks
-        # (tests/test_rank_identity.py, test_segments.py).
-        spec_rows = []
-        for _, r in qterms_pdf.iterrows():
-            qid = int(r["query_id"])
-            ranges = (range(int(manifest["salt_count"]))
-                      if qid in salted_queries else (-1,))
-            for rid in ranges:
-                spec_rows.append((qid, int(rid), r["term"],
-                                  int(r["term_id"]), int(r["df"])))
-        spec = spark.createDataFrame(
-            spec_rows,
-            "query_id long, range_id int, term string, term_id long, df long")
-        npart = max(1, min(len({(q, g) for q, g, *_ in spec_rows}),
-                           int(spark.sparkContext.defaultParallelism)))
-        pdir = store.postings_dir_for(int(manifest["epoch"]))
-
-        # When the batch's total block bytes fit a broadcast budget
-        # (est. ~6 B/posting), the DRIVER reads each distinct term's
-        # blocks once and broadcasts them — tasks become pure WAND
-        # compute with no per-task read/dict-build duplication, which
-        # is what keeps the N -> 4N query-scaling ratio flat (each of
-        # 4 tasks would otherwise re-read its partition's terms).
-        # Over-budget batches (head terms at 10^12-doc scale) fall back
-        # to per-partition reads.
-        est_blk_bytes = sum(dfs[t] for t in term_ids) * 6
-        bb = None
-        if est_blk_bytes <= (64 << 20):
-            bb = spark.sparkContext.broadcast(
-                _read_blocks_by_tid(pdir, n_buckets, term_ids))
-
-        def run_part(batches):
-            from .wand import wand_topk
-
-            pdf = pd.concat(list(batches), ignore_index=True)
-            if not len(pdf):
-                return
-            if bb is not None:
-                blocks_by_tid = bb.value
-            else:
-                blocks_by_tid = _read_blocks_by_tid(
-                    pdir, n_buckets,
-                    pdf["term_id"].drop_duplicates().tolist())
-            for (qid, rid), qrows in pdf.groupby(["query_id", "range_id"]):
-                doc_range = None
-                if rid >= 0:
-                    doc_range = (int(rid) << shift, (int(rid) + 1) << shift)
-                tb: dict[str, tuple[int, list[dict]]] = {}
-                for row in qrows.itertuples(index=False):
-                    blist = blocks_by_tid.get(int(row.term_id))
-                    if not blist:
-                        continue
-                    if doc_range is not None:
-                        lo, hi = doc_range
-                        blist = [bl for bl in blist
-                                 if bl["last_doc_id"] >= lo
-                                 and bl["first_doc_id"] < hi]
-                        if not blist:
-                            continue
-                    tb[row.term] = (int(row.df), blist)
-                hits = wand_topk(tb, n_docs, avgdl, k, k1=k1, b=b,
-                                 doc_range=doc_range)
+        pdf = pd.concat(list(batches), ignore_index=True)
+        if not len(pdf):
+            return
+        is_spec = pdf["term"].notna().to_numpy()
+        doc_ids = pdf["doc_id"].to_numpy()
+        blocks_by_tid = bb.value if bb is not None else _read_blocks_by_tid(
+            dirs, n_buckets, pdf.loc[is_spec, "term_id"].unique().tolist())
+        groups = pdf.groupby(["query_id", "range_id"]).indices
+        for (qid, rid), idx in groups.items():
+            spec = idx[is_spec[idx]]
+            allowed = None
+            if filtered:
+                allowed = np.unique(doc_ids[idx[~is_spec[idx]]])
+                if not len(allowed):
+                    continue  # no candidate doc in this range
+            tb = {pdf.at[i, "term"]: (
+                int(pdf.at[i, "df"]),
+                blocks_by_tid.get(int(pdf.at[i, "term_id"]), []))
+                for i in spec.tolist()}
+            doc_range = (None if rid < 0
+                         else (int(rid) << shift, (int(rid) + 1) << shift))
+            hits = wand_topk(tb, n_docs, avgdl, k, k1=k1, b=b,
+                             doc_range=doc_range, allowed=allowed,
+                             deleted=deleted)
+            if hits:
                 yield pd.DataFrame({
-                    "query_id": int(qid),
+                    "query_id": np.full(len(hits), qid, dtype="int32"),
                     "rank": np.arange(1, len(hits) + 1, dtype="int32"),
-                    "doc_id": [d for d, _ in hits],
-                    "score": [s for _, s in hits],
+                    "doc_id": np.array([d for d, _ in hits], dtype="int64"),
+                    "score": np.array([s for _, s in hits], dtype="float64"),
                 })
 
-        per_range = (spec.repartition(npart, "query_id", "range_id")
-                     .mapInPandas(run_part, schema=out_schema))
-    else:
-        def _empty_out():
-            return pd.DataFrame({
-                "query_id": np.array([], dtype="int32"),
-                "rank": np.array([], dtype="int32"),
-                "doc_id": np.array([], dtype="int64"),
-                "score": np.array([], dtype="float64")})
-
-        def run_wand_cg(blocks_pdf: pd.DataFrame,
-                        cand_pdf: pd.DataFrame) -> pd.DataFrame:
-            if not len(blocks_pdf) or not len(cand_pdf):
-                return _empty_out()  # no blocks or no candidates here
-            allowed = np.unique(cand_pdf["doc_id"].to_numpy()
-                                .astype(np.int64))
-            return run_wand(blocks_pdf, allowed=allowed)
-
-        # route each candidate doc to exactly the (query, range) tasks
-        # that may score it: its own salt range for salted queries, the
-        # -1 whole-space range for unsalted ones. The pair table is tiny
-        # (<= queries x SALT_COUNT) and broadcast; the candidate frame
-        # is shuffled once by the cogroup — never collected.
-        salt_count = int(manifest["salt_count"])
-        pair_rows = []
-        for qid in qterms_pdf["query_id"].unique():
-            if qid in salted_queries:
-                pair_rows += [(int(qid), r) for r in range(salt_count)]
-            else:
-                pair_rows.append((int(qid), -1))
-        pairs = spark.createDataFrame(pair_rows, "query_id long, range_id int")
-        cand = candidates.select(F.col("doc_id").cast("long").alias("doc_id"))
-        cand2 = cand.join(
-            F.broadcast(pairs),
-            (pairs["range_id"] == F.lit(-1))
-            | (pairs["range_id"]
-               == F.shiftright(cand["doc_id"], shift).cast("int")))
-        per_range = (ranged.groupBy("query_id", "range_id")
-                     .cogroup(cand2.groupBy("query_id", "range_id"))
-                     .applyInPandas(run_wand_cg, schema=out_schema))
+    per_range = (rows.repartition(npart, "query_id", "range_id")
+                 .mapInPandas(run_part, schema=out_schema))
     # global merge: per-range winners are disjoint docs; re-rank is tiny
-    # (<= SALT_COUNT * k rows per query)
+    # (<= salt_count * k rows per query)
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("score"), 9).desc(), F.col("doc_id").asc())
     return (per_range.withColumn("rank", F.row_number().over(w))
@@ -507,46 +432,28 @@ _BLK_COLS = ["term_id", "seg", "n", "first_doc_id", "last_doc_id",
              "block_min_dl"]
 
 
-def _read_blocks_by_tid(pdir: str, n_buckets: int,
+def _read_blocks_by_tid(dirs: dict[int, str], n_buckets: int,
                         term_ids: list[int]) -> dict[int, list[dict]]:
-    """Pruned pyarrow read of the given terms' block rows, grouped by
-    term_id: bucket-dir pruning and a term_id filter, with no cache
-    (the driver's single-query path reads through BM25Engine's term
-    directory instead). Shared by the direct-read WAND batch plan
-    (driver-broadcast and per-partition variants)."""
+    """The given terms' block rows, as dicts grouped by term_id, read
+    from their bucket dirs ``dirs`` (bucket -> dir) with a pyarrow
+    term_id filter and no cache (the driver's single-query path reads
+    through BM25Engine's term directory instead)."""
     import pyarrow.dataset as pads
 
     by_bucket: dict[int, list[int]] = {}
     for tid in term_ids:
-        by_bucket.setdefault(int(tid) % n_buckets, []).append(int(tid))
+        by_bucket.setdefault(bucket_of_term_id(int(tid), n_buckets),
+                             []).append(int(tid))
     out: dict[int, list[dict]] = {}
     for bkt, tids in by_bucket.items():
-        tbl = pads.dataset(_bucket_dir(pdir, bkt),
-                           format="parquet").to_table(
+        tbl = pads.dataset(dirs[bkt], format="parquet").to_table(
             filter=pads.field("term_id").isin(tids), columns=_BLK_COLS)
-        cols = {c: tbl[c].to_pylist() for c in _BLK_COLS}
-        for i in range(tbl.num_rows):
-            out.setdefault(cols["term_id"][i], []).append({
-                "docs_enc": cols["docs_enc"][i],
-                "tfs_enc": cols["tfs_enc"][i],
-                "dls_enc": cols["dls_enc"][i],
-                "n": cols["n"][i], "seg": cols["seg"][i],
-                "first_doc_id": cols["first_doc_id"][i],
-                "last_doc_id": cols["last_doc_id"][i],
-                "block_max_tf": cols["block_max_tf"][i],
-                "block_min_dl": cols["block_min_dl"][i],
-            })
+        for row in tbl.to_pylist():
+            out.setdefault(row["term_id"], []).append(row)
     return out
 
 
-def _salt_shift(manifest: dict) -> int:
-    from ..analysis import DOC_ID_BITS
-
-    salt_count = int(manifest["salt_count"])
-    return DOC_ID_BITS - (salt_count.bit_length() - 1)
-
-
-def score_synonym_batch(spark: SparkSession, store: IndexStorage,
+def score_synonym_batch(spark: SparkSession, snap: Snapshot,
                         queries: list[dict], k: int = 10) -> DataFrame:
     """Distributed Lucene-SynonymQuery scoring: each query is a list of
     synonym GROUPS; within a group the member terms' tfs SUM per doc
@@ -555,19 +462,13 @@ def score_synonym_batch(spark: SparkSession, store: IndexStorage,
     groups combine like ordinary BM25 terms.
 
     ``queries``: [{"query_id": int, "groups": {gkey: [terms...]}}].
-    Plan shape: ONE pruned-postings decode over all member terms ->
+    Plan shape: ONE decoded_postings read over all member terms ->
     broadcast (term_id -> group) join -> group-blend shuffle
     (sum tf per (query, group, doc)) -> per-doc sum in group-key-
     ascending order (the sort_array fold, bit-identical to the driver
     accumulation) -> top-k window. Two shuffles per batch.
 
     Returns (query_id int, rank int, doc_id long, score double)."""
-    from ..analysis import term_id_for
-
-    manifest = store.read_manifest()
-    n_docs, avgdl = int(manifest["n_docs"]), float(manifest["avgdl"])
-    k1, b = float(manifest["k1"]), float(manifest["b"])
-    n_buckets = int(manifest["n_buckets"])
     empty = "query_id int, rank int, doc_id long, score double"
 
     rows = []
@@ -577,9 +478,7 @@ def score_synonym_batch(spark: SparkSession, store: IndexStorage,
                 rows.append((int(q["query_id"]), gkey, t, term_id_for(t)))
     if not rows:
         return spark.createDataFrame([], empty)
-    term_ids = sorted({tid for *_, tid in rows})
-    dfs = lookup_term_dfs(store, term_ids, n_buckets,
-                          int(manifest["epoch"]))
+    dfs = lookup_term_dfs(snap, [tid for *_, tid in rows])
     rows = [r for r in rows if r[3] in dfs]
     if not rows:
         return spark.createDataFrame([], empty)
@@ -588,23 +487,16 @@ def score_synonym_batch(spark: SparkSession, store: IndexStorage,
         key = (qid, gkey)
         df_g[key] = max(df_g.get(key, 0), dfs[tid])
     qg = spark.createDataFrame(
-        [(qid, gkey, tid, idf(n_docs, df_g[(qid, gkey)]))
+        [(qid, gkey, tid, idf(snap.n_docs, df_g[(qid, gkey)]))
          for qid, gkey, _, tid in rows],
         "query_id int, gkey string, term_id long, idf double")
-    term_ids = sorted({r[3] for r in rows})
-
-    decoded = pruned_postings(spark, store, term_ids, n_buckets).mapInPandas(
-        decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
-    tomb = store.tombstones(spark)
-    if tomb is not None:
-        decoded = decoded.join(F.broadcast(tomb), "doc_id", "left_anti")
-
+    decoded = decoded_postings(spark, snap, [r[3] for r in rows])
     blended = (
         decoded.join(F.broadcast(qg), "term_id")
         .groupBy("query_id", "gkey", "doc_id")
         .agg(F.sum("tf").alias("tf"), F.max("dl").alias("dl"),
              F.max("idf").alias("idf"))
-        .withColumn("contrib", contribution_expr(avgdl, k1, b))
+        .withColumn("contrib", contribution_expr(snap.avgdl, snap.k1, snap.b))
     )
     scored = (
         blended.groupBy("query_id", "doc_id")

@@ -32,22 +32,21 @@ from pyspark.sql import functions as F
 from ..index.build import doc_id_expr, term_id_expr, tokens_expr
 
 
-def significant_terms(spark, store, query_text: str, docs_df: DataFrame,
+def significant_terms(spark, snap, query_text: str, docs_df: DataFrame,
                       top: int = 20, sample_size: int = 100,
                       min_doc_count: int = 2) -> DataFrame:
     """(term, fg_count, sample_n, df, score) for the ``top`` most
     significant terms of ``query_text``'s match set, ordered by
-    (round(score, 9) DESC, term ASC)."""
+    (round(score, 9) DESC, term ASC). ``snap``: the query's Snapshot
+    (index/storage.py) — match set, doc_stats, term_stats and n_docs
+    all come from its epoch."""
     from .phrase import plan_barrier
     from .scoring import scored_matches
 
     if top < 1 or sample_size < 1:
         raise ValueError("top and sample_size must be >= 1")
-    manifest = store.read_manifest()
-    n_docs = int(manifest["n_docs"])
-
-    sm = scored_matches(spark, store, [{"query_id": 0, "text": query_text}])
-    ds = store.doc_stats(spark).select("doc_id", "url")
+    sm = scored_matches(spark, snap, [{"query_id": 0, "text": query_text}])
+    ds = snap.store.doc_stats(spark, snap.epoch).select("doc_id", "url")
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("score"), 9).desc(), F.col("url").asc())
     sample = (sm.join(ds, "doc_id")
@@ -69,12 +68,12 @@ def significant_terms(spark, store, query_text: str, docs_df: DataFrame,
           .where(F.col("fg_count") >= min_doc_count))
     sample_n = sample.agg(F.count(F.lit(1)).alias("sample_n"))
 
-    bg = (store.term_stats(spark).select("term_id", "df"))
+    bg = snap.store.term_stats(spark, snap.epoch).select("term_id", "df")
     scored = (fg.withColumn("term_id", term_id_expr("term"))
               .join(bg, "term_id")
               .crossJoin(F.broadcast(sample_n)))
     fg_pct = F.col("fg_count") / F.col("sample_n")
-    bg_pct = F.col("df") / F.lit(float(n_docs))
+    bg_pct = F.col("df") / F.lit(float(snap.n_docs))
     return (scored
             .withColumn("score", (fg_pct - bg_pct) * (fg_pct / bg_pct))
             .withColumn("_rk", F.row_number().over(

@@ -50,7 +50,8 @@ def test_federated_distributed_equals_driver(spark, sharded):
     q = "semudo muro"
     driver = fed.topk(q, k=10)
     res = score_federated_batch(
-        spark, fed.shards, [{"query_id": 0, "text": q}], k=10)
+        spark, [s._snapshot() for s in fed.shards],
+        [{"query_id": 0, "text": q}], k=10)
     dist = [(int(r["doc_id"]), float(r["score"]))
             for r in res.orderBy("rank").collect()]
     assert [d for d, _ in driver] == [d for d, _ in dist]

@@ -95,9 +95,9 @@ def test_distributed_positions_equals_verify_path(spark, pos_engine):
     docs = _corpus(spark)
     phrases = [(0, "alpha beta"), (1, "beta gamma"), (2, "beta alpha")]
     for slop in (0, 1):
-        via_pos = score_phrase_batch(spark, pos_engine.store, None,
+        via_pos = score_phrase_batch(spark, pos_engine._snapshot(), None,
                                      phrases, k=30, slop=slop)
-        via_text = score_phrase_batch(spark, pos_engine.store, docs,
+        via_text = score_phrase_batch(spark, pos_engine._snapshot(), docs,
                                       phrases, k=30, slop=slop)
         key = ["query_id", "rank", "doc_id"]
         a = sorted(tuple(r) for r in via_pos.select(*key).collect())

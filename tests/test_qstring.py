@@ -323,7 +323,7 @@ def test_accepted_docs_plan_reads_only_index(qs_setup):
         return buf.getvalue()
 
     node = parse_query_string("alpha AND (gamma OR delta) -epsilon")
-    cand = accepted_docs_df(eng.spark, eng.store, node)
+    cand = accepted_docs_df(eng.spark, eng._snapshot(), node)
     plan = plan_of(cand)
     assert "postings" in plan
     assert "qsidx" not in plan.replace(eng.store.root, "")  # paranoia
@@ -333,7 +333,7 @@ def test_accepted_docs_plan_reads_only_index(qs_setup):
     # phrase leaf, positional sidecar: still no corpus in the plan
     node = expand_leaves(eng, eng._snapshot(),
                          parse_query_string('"alpha beta" AND common'))
-    cand = accepted_docs_df(eng.spark, eng.store, node)
+    cand = accepted_docs_df(eng.spark, eng._snapshot(), node)
     plan = plan_of(cand)
     assert "positions" in plan
     for marker in ("webtext", ".fixtures"):

@@ -66,7 +66,7 @@ def test_driver_equals_distributed(built_index):
     driver = built_index.weighted_topk(
         "x", boosts=weights, k=10, msm=2)
     res = score_query_batch(
-        built_index.spark, built_index.store,
+        built_index.spark, built_index._snapshot(),
         [{"query_id": 0, "text": "semudo muro vubo",
           "boosts": weights, "msm": 2}], k=10)
     dist = [(int(r["doc_id"]), float(r["score"]))
@@ -80,11 +80,11 @@ def test_wand_batch_rejects_boosts(built_index):
 
     with pytest.raises(ValueError, match="boosts/msm"):
         score_query_batch_wand(
-            built_index.spark, built_index.store,
+            built_index.spark, built_index._snapshot(),
             [{"query_id": 0, "text": "semudo", "boosts": {"semudo": 2.0}}])
     with pytest.raises(ValueError, match="boosts/msm"):
         score_query_batch_wand(
-            built_index.spark, built_index.store,
+            built_index.spark, built_index._snapshot(),
             [{"query_id": 0, "text": "semudo muro", "msm": 2}])
 
 
