@@ -1,7 +1,10 @@
 #!/usr/bin/env bash
 # Package super_rag_spark for spark-submit --py-files (BASELINE.json
 # north_rule: "run via spark-submit --py-files on a multi-executor
-# cluster"). Produces dist/super_rag_spark.zip.
+# cluster"). Produces dist/super_rag_spark.zip from the current
+# super_rag_spark/ sources. The zip is a build output, not part of the
+# repository (dist/ is git-ignored): run this script before every
+# spark-submit, so executors run the same code as the driver.
 #
 # Cluster usage:
 #   spark-submit --py-files dist/super_rag_spark.zip \

@@ -36,10 +36,13 @@ from __future__ import annotations
 
 import json
 import os
-from typing import NamedTuple
+from typing import TYPE_CHECKING, NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    from .termdir import TermDirectory
 
 # seg: Lucene-style segment id. A (term, salt, seg) run is doc-sorted
 # and non-overlapping; different segs of the same term MAY overlap in
@@ -303,12 +306,12 @@ class IndexStorage:
 class Snapshot(NamedTuple):
     """One query's view of an index, taken once at its start: the
     storage it was taken from, the manifest's epoch, BM25 statistics and
-    bucket count, and the epoch's pending tombstones (``deleted``,
-    sorted int64). Every driver loader and scorer and every distributed
-    plan of the query reads these — df, postings, tombstones and
-    doc_stats of ``epoch`` — never the live manifest, so a merge that
-    lands mid-query cannot mix two epochs: the query either answers
-    from its epoch or raises (IndexStorage.bucket_dir)."""
+    bucket count, the epoch's pending tombstones (``deleted``, sorted
+    int64) and term directory (``terms``, which does not pickle). Every
+    driver loader and scorer and every distributed plan of the query
+    reads these — df, postings, tombstones and doc_stats of ``epoch`` —
+    never the live manifest, so a merge that lands mid-query cannot mix
+    two epochs: it answers from its epoch or raises."""
 
     store: IndexStorage
     epoch: int
@@ -319,6 +322,7 @@ class Snapshot(NamedTuple):
     n_buckets: int
     manifest: dict
     deleted: np.ndarray
+    terms: TermDirectory
 
     @property
     def bm25(self) -> dict:

@@ -31,7 +31,7 @@ def source_type_expr(url_col: str = "url"):
     ext = F.lower(F.regexp_extract(F.col(url_col), r"\.([A-Za-z0-9]+)(?:\?.*)?$", 1))
     expr = F.lit("HTML")
     mapping = F.create_map(*[F.lit(x) for kv in _EXT_MAP.items() for x in kv])
-    return F.coalesce(mapping.getItem(ext), expr).alias("source_type")
+    return F.coalesce(mapping[ext], expr).alias("source_type")
 
 
 # the reference's STRUCTURED_DATA mimetypes (xlsx/csv/json,

@@ -6,7 +6,7 @@
 - topk()         the same query on the driver: NumPy scoring over the
                  cached decoded postings or block-max WAND over the
                  encoded blocks (rank-identical), both fed by the
-                 per-epoch term directory below
+                 snapshot's term directory (index/termdir.py)
 - delete_urls()  tombstone append (its delete endpoint); postings are
                  cleaned at the next merge and masked at query time
 - summary routing: topk-style queries starting with "summarize" run on
@@ -18,38 +18,24 @@ budget-gated driver query asks one gate, ``_over_budget``: when the
 uncached terms' Σdf exceeds ``driver_df_budget`` it counts one
 ``driver_fallbacks`` and the query runs its rank-identical distributed
 plan, under the same snapshot, instead of decoding O(df) postings on
-the driver.
-
-Term directory: every driver df and postings lookup goes through one
-directory per epoch, held in the cache. df is a searchsorted into the
-term's term_stats bucket, read whole once into sorted NumPy arrays. A
-term's postings are in the row groups whose term_id min/max, from the
-footers of its bucket's files (one per segment run), hold its term_id;
-each row group is read from disk at most once per epoch (sorted by
-term_id on load if a writer left it out of order), and the term's
-blocks are a searchsorted slice of it. So a cold term costs one
-row-group read per epoch, shared by every term of that row group, and
-an OOV term reads no postings. The missed terms of a query decode in
-one ``codec.decode_blocks_batch`` call, straight from the row groups'
-Arrow varint buffers.
+the driver. The missed terms of a query decode in one
+``codec.decode_blocks_batch`` call, straight from the Arrow varint
+buffers of the row groups the term directory holds.
 """
 
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
-from typing import NamedTuple
 
 import numpy as np
-import pyarrow as pa
 import pyarrow.dataset as ds
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..analysis import term_id_for, tokenize
 from ..index.build import build_index, doc_id_expr
 from ..index.storage import IndexStorage, Snapshot, bucket_of_term_id
+from ..index.termdir import ENC_COLS, TermDirectory, _Cache
 from .scoring import doc_frame, score_query_batch, score_query_batch_wand
 from .wand import vectorized_topk_arrays, wand_topk
 
@@ -60,91 +46,6 @@ _TOPK_METHODS = {
     "vectorized": vectorized_topk_arrays,  # cached decoded arrays (lowest latency)
     "wand": wand_topk,  # encoded blocks with block-max skipping
 }
-
-_BLOCK_COLS = ["term_id", "salt", "seg", "block_id", "n", "first_doc_id",
-               "last_doc_id", "docs_enc", "tfs_enc", "dls_enc",
-               "block_max_tf", "block_min_dl"]
-
-# bytes charged to every cache entry on top of its payload: the key
-# tuple, the term string and the value tuple
-_ENTRY_BYTES = 200
-
-_ENC_COLS = ("docs_enc", "tfs_enc", "dls_enc")
-
-_TERM_STATS_COLS = pa.schema([("term_id", pa.int64()), ("df", pa.int64())])
-
-
-class _Directory(NamedTuple):
-    """The postings files of one bucket of an epoch, one per segment
-    run, with each file's row-group term_id minima and maxima from its
-    parquet footer."""
-
-    paths: list[str]
-    mins: list[np.ndarray]
-    maxs: list[np.ndarray]
-
-
-class _RowGroup(NamedTuple):
-    """One postings row group held by the cache: its block rows as one
-    Arrow record batch, plus NumPy views of its term_id and n columns
-    and of each encoded column's (value offsets, value bytes), so a
-    term's blocks are a searchsorted slice decoded without a copy."""
-
-    batch: pa.RecordBatch
-    tid: np.ndarray
-    n: np.ndarray
-    enc: tuple[tuple[np.ndarray, np.ndarray], ...]
-
-    def stream(self, col: int, start: int, stop: int) -> np.ndarray:
-        """The bytes rows [start, stop) hold in ``_ENC_COLS[col]``, as a
-        view of its value buffer."""
-        off, data = self.enc[col]
-        return data[off[start]:off[stop]]
-
-
-def _term_id_ranges(path: str) -> tuple[np.ndarray, np.ndarray]:
-    """Each row group's term_id (min, max) from one postings file's
-    footer. A row group without term_id statistics raises ValueError
-    naming the file: the directory finds a term's row groups by them."""
-    with pq.ParquetFile(path) as pf:
-        md = pf.metadata
-    col = md.schema.names.index("term_id")
-    lo, hi = [], []
-    for g in range(md.num_row_groups):
-        st = md.row_group(g).column(col).statistics
-        if st is None or not st.has_min_max:
-            raise ValueError(f"{path}: row group {g} has no term_id"
-                             " min/max statistics")
-        lo.append(st.min)
-        hi.append(st.max)
-    return np.array(lo, dtype=np.int64), np.array(hi, dtype=np.int64)
-
-
-def _binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(value offsets, value bytes) of a binary Arrow array as NumPy
-    views: row i's bytes are ``data[off[i]:off[i + 1]]``."""
-    _, offsets, data = arr.buffers()
-    if offsets is None or data is None:  # no rows, or only empty values
-        return np.zeros(len(arr) + 1, dtype=np.int64), np.empty(0, np.uint8)
-    dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    off = np.frombuffer(offsets, dtype=dtype)[arr.offset:arr.offset + len(arr) + 1]
-    return off, np.frombuffer(data, dtype=np.uint8)
-
-
-def _row_group_of(tbl: pa.Table) -> _RowGroup:
-    """A read row group as a _RowGroup, sorted by term_id (stably, once,
-    when a writer left it out of order): terms are sliced out of it by
-    searchsorted."""
-    batch = pa.RecordBatch.from_arrays(
-        [tbl.column(c).combine_chunks() for c in _BLOCK_COLS],
-        names=_BLOCK_COLS)
-    tid = batch.column("term_id").to_numpy()
-    if (tid[1:] < tid[:-1]).any():
-        batch = batch.take(np.argsort(tid, kind="stable"))
-        tid = batch.column("term_id").to_numpy()
-    return _RowGroup(batch, tid, batch.column("n").to_numpy(),
-                     tuple(_binary_buffers(batch.column(c))
-                           for c in _ENC_COLS))
 
 
 def _ranked_hits(res: DataFrame) -> list[tuple[int, float]]:
@@ -205,58 +106,6 @@ def _match_expr(query: str, boolean: bool, caller: str) -> str:
     return " OR ".join(terms)
 
 
-class _Cache:
-    """LRU over ``(epoch, kind, key)`` bounded by one byte budget. An
-    insert evicts least-recently-used entries of any kind until the
-    total fits, but never the entry being inserted.
-
-    Kinds: ``dec`` (term -> decoded postings), ``wand`` (term -> its
-    block rows as dicts, for ``method="wand"``), ``rg`` ((bucket, file,
-    row group) -> a postings row group as Arrow columns), ``dir``
-    (bucket -> its postings files and their row-group term_id ranges),
-    ``stats`` (bucket -> its term_stats as sorted arrays), ``pos``
-    (term -> decoded positions), ``positions``/``vocab`` (bucket ->
-    sidecar dataset handle), ``vdepth`` and ``tomb``."""
-
-    def __init__(self, budget: int):
-        self.budget = budget
-        self.used = 0
-        self._entries: OrderedDict = OrderedDict()  # key -> (value, bytes)
-
-    def __contains__(self, key) -> bool:
-        return key in self._entries
-
-    def __iter__(self):
-        return iter(self._entries)
-
-    def get(self, key):
-        """The cached value (marked most recently used), else None."""
-        hit = self._entries.get(key)
-        if hit is None:
-            return None
-        self._entries.move_to_end(key)
-        return hit[0]
-
-    def put(self, key, value, nbytes: int = 0) -> None:
-        old = self._entries.pop(key, None)
-        if old is not None:
-            self.used -= old[1]
-        nbytes += _ENTRY_BYTES
-        self._entries[key] = (value, nbytes)
-        self.used += nbytes
-        while self.used > self.budget and len(self._entries) > 1:
-            self.used -= self._entries.popitem(last=False)[1][1]
-
-    def keep_epoch(self, epoch: int) -> None:
-        """Drop every entry of another epoch."""
-        for key in [k for k in self._entries if k[0] != epoch]:
-            self.used -= self._entries.pop(key)[1]
-
-    def clear(self) -> None:
-        self._entries.clear()
-        self.used = 0
-
-
 class BM25Engine:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
@@ -264,17 +113,12 @@ class BM25Engine:
         self._manifest: dict | None = None
         self._manifest_sig: tuple | None = None
         self._summary: BM25Engine | None = None  # see _route
-        # Everything the driver path caches lives in one LRU keyed by
-        # epoch (see _Cache for its kinds): decoded postings (term ->
-        # one (3, df) array of docs, tfs, dls sorted by doc_id, never
-        # masked), wand block rows, the term directory and the postings
-        # row groups it has read, decoded positions, sidecar dataset
-        # handles, vocab depth and tombstones. Head terms repeat across real query streams, and a
-        # decoded hit skips straight to scoring. Epoch keys mean a
-        # long-lived engine never reads a GC'd epoch through a stale
-        # entry. The 512 MiB budget is the old decoded-postings
-        # (16 M x 16 B) and positions (32 M x 8 B) ceilings together.
-        self._cache = _Cache(512 << 20)
+        # Everything the driver path caches, the term directory's reads
+        # included, lives in one LRU keyed by epoch (see _Cache for its
+        # kinds), so a long-lived engine never reads a GC'd epoch
+        # through a stale entry. Head terms repeat across real query
+        # streams, and a decoded hit skips straight to scoring.
+        self._cache = _Cache()
         # driver-path guard (r4): a single query whose UNCACHED terms'
         # Σdf exceeds this never decodes postings onto the driver — it
         # falls back to the distributed plan instead. At 10^12 docs a
@@ -341,9 +185,12 @@ class BM25Engine:
         one listing of the tombstones directory when it exists."""
         m = self.manifest
         epoch = int(m["epoch"])
+        n_buckets = int(m["n_buckets"])
         return Snapshot(self.store, epoch, int(m["n_docs"]),
                         float(m["avgdl"]), float(m["k1"]), float(m["b"]),
-                        int(m["n_buckets"]), m, self._tombstones(epoch))
+                        n_buckets, m, self._tombstones(epoch),
+                        TermDirectory(self.store, epoch, n_buckets,
+                                      self._cache))
 
     def _warm_new_epoch(self, old_epoch: int) -> None:
         """Epoch switch (out-of-band merge/compact): the old epoch's
@@ -420,108 +267,26 @@ class BM25Engine:
             self._cache.put(key, dataset)
         return dataset
 
-    def _directory(self, snap: Snapshot, bucket: int) -> _Directory:
-        """The postings directory of one bucket of ``snap``'s epoch,
-        read from the files' parquet footers once per epoch through the
-        cache. It holds paths, not open files, so a later read under a
-        GC'd epoch still fails loudly."""
-        key = (snap.epoch, "dir", bucket)
-        hit = self._cache.get(key)
-        if hit is not None:
-            return hit
-        p = self.store.bucket_dir("postings", snap.epoch, bucket)
-        try:
-            paths = [os.path.join(p, f) for f in sorted(os.listdir(p))
-                     if f.endswith(".parquet") and not f.startswith((".", "_"))]
-            ranges = [_term_id_ranges(path) for path in paths]
-        except FileNotFoundError:
-            # names both epochs when a merge GC'd the snapshot's epoch
-            self.store.bucket_dir("postings", snap.epoch, bucket)
-            raise
-        d = _Directory(paths, [lo for lo, _ in ranges],
-                       [hi for _, hi in ranges])
-        self._cache.put(key, d, sum(2 * lo.nbytes + len(path)
-                                    for path, lo in zip(paths, d.mins)))
-        return d
-
-    def _row_groups_of(self, snap: Snapshot, tid: int) -> list[tuple]:
-        """Keys ``(bucket, file, row group)`` of the postings row groups
-        whose footer term_id range holds ``tid``, in every segment file
-        of its bucket."""
-        bucket = bucket_of_term_id(tid, snap.n_buckets)
-        d = self._directory(snap, bucket)
-        return [(bucket, f, int(g))
-                for f, (mins, maxs) in enumerate(zip(d.mins, d.maxs))
-                for g in np.flatnonzero((mins <= tid) & (maxs >= tid))]
-
-    def _row_group(self, snap: Snapshot, key: tuple) -> _RowGroup:
-        """One postings row group as Arrow columns, read from disk at
-        most once per epoch through the cache."""
-        ckey = (snap.epoch, "rg", key)
-        hit = self._cache.get(ckey)
-        if hit is not None:
-            return hit
-        bucket, f, g = key
-        path = self._directory(snap, bucket).paths[f]
-        try:
-            # one thread: column-parallel decompression holds more
-            # transient buffers, which the driver's peak RSS would show
-            with pq.ParquetFile(path) as pf:
-                tbl = pf.read_row_group(g, columns=_BLOCK_COLS,
-                                        use_threads=False)
-        except FileNotFoundError:
-            self.store.bucket_dir("postings", snap.epoch, bucket)
-            raise
-        rg = _row_group_of(tbl)
-        self._cache.put(ckey, rg, rg.batch.nbytes)
-        return rg
-
-    def _term_slices(self, snap: Snapshot, terms: list[str]
-                     ) -> dict[str, list[tuple[_RowGroup, int, int]]]:
-        """Each in-vocabulary term's block rows as ``(row group, start,
-        stop)`` slices of cached row groups, in directory (segment file)
-        order: the searchsorted range of each row group's term_id
-        column. An OOV term (df 0) reads no postings."""
-        dfs = self._term_dfs(snap, terms)
-        out: dict[str, list[tuple[_RowGroup, int, int]]] = {}
-        for t in terms:
-            if not dfs[t]:
-                continue
-            tid = term_id_for(t)
-            parts = []
-            for key in self._row_groups_of(snap, tid):
-                rg = self._row_group(snap, key)
-                s = int(rg.tid.searchsorted(tid, "left"))
-                e = int(rg.tid.searchsorted(tid, "right"))
-                if e > s:
-                    parts.append((rg, s, e))
-            if parts:
-                out[t] = parts
-        return out
-
     def _wand_blocks(self, snap: Snapshot, terms: list[str]
                      ) -> dict[str, tuple[int, list[dict]]]:
-        """``method="wand"``'s input, ``{term: (df, block rows)}`` with
-        the rows as dicts sorted by first_doc_id (wand_topk takes
-        dicts), converted once from the term's row-group slices and
-        cached per term (kind ``wand``). df is the sum of block n over
-        the term's blocks."""
+        """``method="wand"``'s input, ``{term: (df, block rows)}``: the
+        term directory's block rows, converted once and cached per term
+        (kind ``wand``). df is the sum of block n over the term's
+        blocks."""
         out: dict[str, tuple[int, list[dict]]] = {}
-        missing = []
+        missing: dict[str, int] = {}  # term -> term_id
         for t in terms:
             hit = self._cache.get((snap.epoch, "wand", t))
             if hit is not None:
                 out[t] = hit
             else:
-                missing.append(t)
-        for t, parts in (self._term_slices(snap, missing)
-                         if missing else {}).items():
-            blocks = [row for rg, s, e in parts
-                      for row in rg.batch.slice(s, e - s).to_pylist()]
-            blocks.sort(key=lambda r: r["first_doc_id"])
-            out[t] = (sum(r["n"] for r in blocks), blocks)
-            self._cache.put((snap.epoch, "wand", t), out[t], sum(
-                len(r[c]) for r in blocks for c in _ENC_COLS))
+                missing[t] = term_id_for(t)
+        rows = snap.terms.block_rows(missing.values())
+        for t, tid in missing.items():
+            if tid in rows:
+                out[t] = (sum(r["n"] for r in rows[tid]), rows[tid])
+                self._cache.put((snap.epoch, "wand", t), out[t], sum(
+                    len(r[c]) for r in rows[tid] for c in ENC_COLS))
         return out
 
     def _load_term_arrays(self, snap: Snapshot, terms: list[str]) -> dict:
@@ -534,7 +299,7 @@ class BM25Engine:
         from ..codec import EncodedBlocks, decode_blocks_batch
 
         out: dict = {}
-        missing = []
+        missing: dict[str, int] = {}  # term -> term_id
         for t in terms:
             # cached as one (3, df) array: one object per term, where
             # three arrays and a tuple cost a rarely repeated tail term
@@ -543,14 +308,15 @@ class BM25Engine:
             if hit is not None:
                 out[t] = (hit.shape[1], *hit)
             else:
-                missing.append(t)
-        slices = self._term_slices(snap, missing) if missing else {}
+                missing[t] = term_id_for(t)
+        by_tid = snap.terms.slices(missing.values())
+        slices = {t: by_tid[tid] for t, tid in missing.items() if tid in by_tid}
         if not slices:
             return out
         parts = [p for ps in slices.values() for p in ps]
         docs, tfs, dls, ns = decode_blocks_batch(EncodedBlocks(
             *(np.concatenate([rg.stream(i, s, e) for rg, s, e in parts])
-              for i in range(len(_ENC_COLS))),
+              for i in range(len(ENC_COLS))),
             np.concatenate([rg.n[s:e] for rg, s, e in parts])))
         # term i's postings are [at[i], at[i + 1]) of the decoded arrays
         at = np.concatenate(([0], np.cumsum(ns)))[np.cumsum(
@@ -566,42 +332,10 @@ class BM25Engine:
             self._cache.put((snap.epoch, "dec", t), run, run.nbytes)
         return out
 
-    def _bucket_dfs(self, snap: Snapshot,
-                    bucket: int) -> tuple[np.ndarray, np.ndarray]:
-        """(term_id, df) arrays of one term_stats bucket, sorted by
-        term_id: the whole bucket, read once per epoch through the
-        cache."""
-        key = (snap.epoch, "stats", bucket)
-        hit = self._cache.get(key)
-        if hit is not None:
-            return hit
-        p = self.store.bucket_dir("term_stats", snap.epoch, bucket)
-        try:
-            tbl = ds.dataset(p, format="parquet",
-                             schema=_TERM_STATS_COLS).to_table()
-        except FileNotFoundError:
-            self.store.bucket_dir("term_stats", snap.epoch, bucket)
-            raise
-        ids = tbl["term_id"].to_numpy()
-        dfs = tbl["df"].to_numpy()
-        if (ids[1:] < ids[:-1]).any():
-            order = np.argsort(ids, kind="stable")
-            ids, dfs = ids[order], dfs[order]
-        self._cache.put(key, (ids, dfs), ids.nbytes + dfs.nbytes)
-        return ids, dfs
-
     def _term_dfs(self, snap: Snapshot, terms: list[str]) -> dict[str, int]:
-        """df per term, 0 for an OOV term: a searchsorted into its
-        bucket's cached term_stats arrays. Never a Spark job, and never
-        a postings read."""
-        out: dict[str, int] = {}
-        for t in terms:
-            tid = term_id_for(t)
-            ids, dfs = self._bucket_dfs(snap,
-                                        bucket_of_term_id(tid, snap.n_buckets))
-            i = int(ids.searchsorted(tid))
-            out[t] = int(dfs[i]) if i < len(ids) and ids[i] == tid else 0
-        return out
+        """df per term, 0 for an OOV term."""
+        dfs = snap.terms.dfs(map(term_id_for, terms))
+        return {t: dfs.get(term_id_for(t), 0) for t in terms}
 
     def _uncached_df_total(self, snap: Snapshot, terms: list[str]) -> int:
         """Σdf of the terms the driver does not hold yet, decoded or as
@@ -613,8 +347,6 @@ class BM25Engine:
         missing = [t for t in terms
                    if (snap.epoch, "dec", t) not in self._cache
                    and (snap.epoch, "wand", t) not in self._cache]
-        if not missing:
-            return 0
         return sum(self._term_dfs(snap, missing).values())
 
     def warm(self) -> int:

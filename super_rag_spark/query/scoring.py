@@ -5,10 +5,11 @@ Replaces the reference's ANN top-k + Cohere rerank
 with exact sparse retrieval (SURVEY.md §2.6 T1/T2).
 
 Every plan takes the query's Snapshot (index/storage.py) and reads
-only its epoch: df through lookup_term_dfs, postings and pending
-tombstones through decoded_postings, the one postings reader. Neither
-reads the live manifest, so a merge that commits mid-plan makes the
-plan raise (the old epoch's files are gone), never mix two epochs.
+only its epoch: df through lookup_term_dfs from the snapshot's term
+directory (``snap.terms``, index/termdir.py), postings and pending
+tombstones through decoded_postings, the one Spark postings scan.
+Neither reads the live manifest, so a merge that commits mid-plan makes
+the plan raise (the old epoch's files are gone), never mix two epochs.
 
 Plan shape (batch of queries):
   decoded_postings: postings scan of the snapshot's epoch
@@ -22,7 +23,8 @@ Plan shape (batch of queries):
 
 The WAND plan (score_query_batch_wand) shuffles only (query, salt
 range, term) spec rows, with any filter's candidate docs beside them;
-its tasks read encoded blocks of the same epoch directly.
+its tasks take encoded blocks of the same epoch from ``snap.terms``,
+broadcast, or read them through a term directory of their own.
 
 Determinism: contributions are collected and summed in term-ascending
 order (sort_array over struct(term, contrib)) so float addition order
@@ -44,6 +46,9 @@ from ..codec import decode_blocks_batch
 from ..index.storage import Snapshot, bucket_of_term_id
 
 DECODED_SCHEMA = "term_id long, doc_id long, tf int, dl int"
+
+# the WAND plan's broadcast budget for its batch's blocks
+WAND_BROADCAST_BYTES = 64 << 20
 
 
 def decode_postings_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -98,26 +103,9 @@ def _bucket_dirs(snap: Snapshot, term_ids) -> dict[int, str]:
 
 
 def lookup_term_dfs(snap: Snapshot, term_ids) -> dict[int, int]:
-    """The plans' df lookup, from the term_stats of ``snap``'s epoch
-    (v3 blocks are stats-free); OOV terms are absent. One pyarrow read
-    per touched bucket
-    partition, filtered by term_id against sorted row groups —
-    O(query terms), never a Spark job. This is why term_stats exists as
-    its own table: a head term at 10^12 docs has millions of block rows;
-    its df is ONE row here."""
-    import pyarrow.dataset as pads
-
-    by_bucket: dict[int, list[int]] = {}
-    for t in sorted({int(t) for t in term_ids}):
-        by_bucket.setdefault(bucket_of_term_id(t, snap.n_buckets),
-                             []).append(t)
-    out: dict[int, int] = {}
-    for b, ts in by_bucket.items():
-        p = snap.store.bucket_dir("term_stats", snap.epoch, b)
-        tbl = pads.dataset(p, format="parquet").to_table(
-            filter=pads.field("term_id").isin(ts), columns=["term_id", "df"])
-        out.update(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
-    return out
+    """The plans' df lookup: df per term_id in ``snap``'s epoch, from
+    its term directory; OOV terms are absent. Never a Spark job."""
+    return snap.terms.dfs(term_ids)
 
 
 def decoded_postings(spark: SparkSession, snap: Snapshot,
@@ -289,10 +277,10 @@ def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
     threshold prunes.
 
     Only (query, range, term) spec rows (a few bytes each) are
-    shuffled. Each task reads its partition's distinct terms' blocks
-    once, straight from the snapshot's epoch with pyarrow (bucket +
-    row-group pruning), or, when the batch's blocks fit a broadcast
-    budget, takes the ones the driver read once and broadcast.
+    shuffled. When the batch's blocks fit WAND_BROADCAST_BYTES the
+    driver slices them from ``snap.terms`` and broadcasts them;
+    otherwise each task reads its partition's distinct terms' blocks
+    once, through a term directory of its own over the same epoch.
 
     ``candidates``: optional (doc_id) frame (P7 metadata filter). Each
     candidate doc rides the same shuffle as the spec rows, routed to
@@ -363,34 +351,36 @@ def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
                     F.lit(0).cast("long").alias("df"), "doc_id"))
     npart = max(1, min(sum(len(r) for r in ranges.values()),
                        int(spark.sparkContext.defaultParallelism)))
-    dirs = _bucket_dirs(snap, term_ids)
     n_docs, avgdl, k1, b = snap.n_docs, snap.avgdl, snap.k1, snap.b
-    n_buckets = snap.n_buckets
+    # the task closure takes plain values: snap.terms does not pickle
+    store, epoch, n_buckets = snap.store, snap.epoch, snap.n_buckets
     filtered = candidates is not None
     deleted = snap.deleted if len(snap.deleted) else None
 
     # When the batch's total block bytes fit a broadcast budget
-    # (est. ~6 B/posting), the DRIVER reads each distinct term's
+    # (est. ~6 B/posting), the DRIVER slices each distinct term's
     # blocks once and broadcasts them — tasks become pure WAND
     # compute with no per-task read duplication, which keeps the
     # N -> 4N query-scaling ratio flat. Over-budget batches (head terms
     # at 10^12-doc scale) read per partition instead.
     bb = None
     est_blk_bytes = int(qterms_pdf.drop_duplicates("term_id")["df"].sum()) * 6
-    if est_blk_bytes <= (64 << 20):
-        bb = spark.sparkContext.broadcast(
-            _read_blocks_by_tid(dirs, n_buckets, term_ids))
+    if est_blk_bytes <= WAND_BROADCAST_BYTES:
+        bb = spark.sparkContext.broadcast(snap.terms.block_rows(term_ids))
 
     def run_part(batches):
+        from ..index.termdir import TermDirectory, _Cache
         from .wand import wand_topk
 
-        pdf = pd.concat(list(batches), ignore_index=True)
+        # a partition the spec rows' hash left empty gets no batch
+        pdf = pd.concat(list(batches) or [pd.DataFrame()], ignore_index=True)
         if not len(pdf):
             return
         is_spec = pdf["term"].notna().to_numpy()
         doc_ids = pdf["doc_id"].to_numpy()
-        blocks_by_tid = bb.value if bb is not None else _read_blocks_by_tid(
-            dirs, n_buckets, pdf.loc[is_spec, "term_id"].unique().tolist())
+        blocks_by_tid = bb.value if bb is not None else TermDirectory(
+            store, epoch, n_buckets, _Cache()).block_rows(
+            pdf.loc[is_spec, "term_id"].unique().tolist())
         groups = pdf.groupby(["query_id", "range_id"]).indices
         for (qid, rid), idx in groups.items():
             spec = idx[is_spec[idx]]
@@ -425,32 +415,6 @@ def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
     return (per_range.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
             .select("query_id", "rank", "doc_id", "score"))
-
-
-_BLK_COLS = ["term_id", "seg", "n", "first_doc_id", "last_doc_id",
-             "docs_enc", "tfs_enc", "dls_enc", "block_max_tf",
-             "block_min_dl"]
-
-
-def _read_blocks_by_tid(dirs: dict[int, str], n_buckets: int,
-                        term_ids: list[int]) -> dict[int, list[dict]]:
-    """The given terms' block rows, as dicts grouped by term_id, read
-    from their bucket dirs ``dirs`` (bucket -> dir) with a pyarrow
-    term_id filter and no cache (the driver's single-query path reads
-    through BM25Engine's term directory instead)."""
-    import pyarrow.dataset as pads
-
-    by_bucket: dict[int, list[int]] = {}
-    for tid in term_ids:
-        by_bucket.setdefault(bucket_of_term_id(int(tid), n_buckets),
-                             []).append(int(tid))
-    out: dict[int, list[dict]] = {}
-    for bkt, tids in by_bucket.items():
-        tbl = pads.dataset(dirs[bkt], format="parquet").to_table(
-            filter=pads.field("term_id").isin(tids), columns=_BLK_COLS)
-        for row in tbl.to_pylist():
-            out.setdefault(row["term_id"], []).append(row)
-    return out
 
 
 def score_synonym_batch(spark: SparkSession, snap: Snapshot,

@@ -1,5 +1,7 @@
 """Chunk <-> point round trip (P10/F9) and source dispatch (S3/F5)."""
 
+import warnings
+
 from super_rag_spark.points import (chunks_to_points, points_to_chunks,
                                     source_type_expr)
 
@@ -10,6 +12,15 @@ def test_source_type_dispatch(spark):
     df = spark.createDataFrame(urls, "url string")
     got = [r["source_type"] for r in df.select(source_type_expr()).collect()]
     assert got == ["PDF", "CSV", "HTML", "HTML", "HTML"]
+
+
+def test_source_type_expr_uses_no_deprecated_api(spark):
+    """The extension lookup indexes the map column directly: a Column key
+    to ``getItem`` is deprecated and warns on every build of the
+    expression."""
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        source_type_expr()
 
 
 def test_chunk_point_roundtrip(spark, webtext_sf0001_path):

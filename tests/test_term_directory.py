@@ -1,11 +1,14 @@
-"""The driver's per-epoch term directory (query/engine.py): postings are
-sliced out of cached row groups found by their footer term_id ranges.
+"""The per-epoch term directory (index/termdir.py): postings are sliced
+out of cached row groups found by their footer term_id ranges, for the
+driver and for the distributed plans alike.
 
 - every writer leaves what the directory relies on: term_id min/max
   statistics on each postings row group and a sorted term_id column;
 - a hand-written bucket file whose row groups are out of term_id order
   still answers as the oracle; one without term_id statistics fails the
-  query, naming the file;
+  query, naming the file, on the driver and in the WAND plan's tasks;
+- the WAND plan's per-task feed ranks as the exhaustive plan, and a
+  plan that follows the driver's queries reads no index file;
 - a cached row group does not let a head term of its bucket past the
   driver df budget, and a cached term owns its decoded arrays;
 - the I/O and decode counts are exact: a row group is read once per
@@ -14,21 +17,27 @@ sliced out of cached row groups found by their footer term_id ranges.
 """
 
 import os
+import pickle
+import re
 import shutil
 
 import numpy as np
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from super_rag_spark import codec
-from super_rag_spark.analysis import tokenize
+from super_rag_spark.analysis import doc_id_for_url, tokenize
+from super_rag_spark.index import termdir
 from super_rag_spark.index.build import (build_postings_bucketed,
                                          term_id_expr, tokens_from_text)
 from super_rag_spark.index.merge import (compact_index, compact_tail,
                                          merge_append)
 from super_rag_spark.index.storage import bucket_of_term
 from super_rag_spark.oracle import build_oracle
+from super_rag_spark.query import scoring
 from super_rag_spark.query.engine import BM25Engine
 
 CFG = dict(n_buckets=8, salt_df_threshold=150)
@@ -48,6 +57,23 @@ def _docs(spark, rs):
 def _assert_oracle(got, want):
     assert [d for d, _ in got] == [d for d, _ in want]
     assert all(abs(g - w) <= 1e-9 for (_, g), (_, w) in zip(got, want))
+
+
+def _ranked(df):
+    return sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                  for r in df.collect())
+
+
+def _wand_plan(spark, root, q, per_task, monkeypatch):
+    """``q``'s hits from the distributed WAND plan of a fresh engine:
+    blocks broadcast from the driver, or read by each task when
+    ``per_task``."""
+    with monkeypatch.context() as m:
+        if per_task:
+            m.setattr(scoring, "WAND_BROADCAST_BYTES", -1)
+        got = _ranked(BM25Engine(spark, root).query_batch_wand(
+            [{"query_id": 0, "text": q}], 10))
+    return [(d, s) for _, _, d, s in got]
 
 
 def _ingest_stats(index_dir):
@@ -162,12 +188,13 @@ def small_index(spark, rows, tmp_path_factory):
 
 @pytest.mark.parametrize("fault", ["unsorted", "no_statistics"])
 def test_unsorted_bucket_file_fails_the_query(spark, rows, small_index,
-                                              tmp_path, fault):
+                                              tmp_path, monkeypatch, fault):
     """A bucket file written out of term_id order, within and across its
-    row groups, answers as the oracle on both driver methods: each row
-    group is sorted as it is loaded. A file without term_id statistics
-    cannot be searched: the query raises and names the file instead of
-    answering from the wrong rows."""
+    row groups, answers as the oracle on both driver methods and on the
+    distributed WAND plan with either feed: each row group is sorted as
+    it is loaded. A file without term_id statistics cannot be searched:
+    the query raises and names the file instead of answering from the
+    wrong rows, on the driver and in the plan's tasks."""
     root = str(tmp_path / "idx")
     shutil.copytree(small_index, root)
     eng = BM25Engine(spark, root)
@@ -182,6 +209,11 @@ def test_unsorted_bucket_file_fails_the_query(spark, rows, small_index,
         pq.write_table(tbl, path, write_statistics=False)
         with pytest.raises(ValueError, match=name):
             eng.topk(term, 10)
+        with pytest.raises(ValueError, match=name):
+            _wand_plan(spark, root, term, False, monkeypatch)
+        with pytest.raises(PythonException,
+                           match=f"ValueError: .*{re.escape(name)}"):
+            _wand_plan(spark, root, term, True, monkeypatch)
         return
     # reversed rows in three row groups: every group is descending, and
     # each group's term_id range overlaps the others'
@@ -195,6 +227,9 @@ def test_unsorted_bucket_file_fails_the_query(spark, rows, small_index,
         _assert_oracle(eng.topk(q, 10), oracle.topk(q, 10))
         _assert_oracle(BM25Engine(spark, root).topk(q, 10, method="wand"),
                        oracle.topk(q, 10))
+        for per_task in (False, True):
+            _assert_oracle(_wand_plan(spark, root, q, per_task, monkeypatch),
+                           oracle.topk(q, 10))
 
 
 def test_cached_row_group_keeps_the_budget(spark, rows, small_index):
@@ -220,6 +255,98 @@ def test_cached_row_group_keeps_the_budget(spark, rows, small_index):
     _assert_oracle(eng.topk(head, 10), oracle.topk(head, 10))
     assert eng.driver_fallbacks == before + 1
     assert (snap.epoch, "dec", head) not in eng._cache
+
+
+def test_wand_plan_per_task_feed(spark, rows, tmp_path, monkeypatch):
+    """With a broadcast budget no batch fits, every WAND task reads its
+    own terms' blocks through a term directory of its own, and the plan
+    ranks as the exhaustive plan: on a built index, after a segment
+    append (two files per bucket) and with pending tombstones."""
+    monkeypatch.setattr(scoring, "WAND_BROADCAST_BYTES", -1)
+    root = str(tmp_path / "idx")
+    base, delta = rows[:160], rows[160:220]
+    eng = BM25Engine(spark, root).build(_docs(spark, base), n_buckets=8,
+                                        salt_df_threshold=30)
+    vocab = sorted({t for _, text in base for t in tokenize(text)})
+    dfs = eng._term_dfs(eng._snapshot(), vocab)
+    head = max(vocab, key=lambda t: dfs[t])
+    assert dfs[head] > 30  # a salted term: per-range WAND tasks
+    batch = [{"query_id": i, "text": q} for i, q in enumerate(
+        ["semudo muro fuboname", f"{head} gaku", "zzqx123"]
+        + [" ".join(vocab[i::41][:3]) for i in range(5)])]
+    driver_reads = []
+    block_rows = termdir.TermDirectory.block_rows
+    monkeypatch.setattr(termdir.TermDirectory, "block_rows",
+                        lambda self, ids: driver_reads.append(1)
+                        or block_rows(self, ids))
+
+    def check(step):
+        want = _ranked(eng.query_batch(batch, 10))
+        got = _ranked(eng.query_batch_wand(batch, 10))
+        assert [g[:3] for g in got] == [w[:3] for w in want], step
+        assert all(abs(g[3] - w[3]) <= 1e-9 for g, w in zip(got, want)), step
+        assert {g[0] for g in got} == set(range(len(batch))) - {2}, step
+        assert driver_reads == [], step
+
+    check("build")
+    merge_append(spark, root, _docs(spark, delta))
+    pdir = eng.store.postings_dir_for(1)
+    assert all(len([f for f in os.listdir(os.path.join(pdir, b))
+                    if f.endswith(".parquet")]) == 2
+               for b in os.listdir(pdir) if b.startswith("bucket="))
+    check("append")
+    top = {r["doc_id"] for r in eng.query_batch(batch, k=1).collect()}
+    urls = [u for u, _ in base + delta if doc_id_for_url(u) in top]
+    assert eng.delete_urls(urls) == len(top) > 1
+    check("pending deletes")
+
+
+def test_plans_read_no_file_the_engine_holds(spark, rows, small_index,
+                                             monkeypatch):
+    """After the driver has answered a batch's queries, the WAND and the
+    exhaustive plan of that batch take every df and block from the
+    engine's term directory: neither opens a postings or term_stats file
+    on the driver."""
+    eng = BM25Engine(spark, small_index)
+    oracle = build_oracle(rows[:120])
+    vocab = sorted({t for _, text in rows[:120] for t in tokenize(text)})
+    texts = ["semudo muro fuboname"] + [" ".join(vocab[i::29][:3])
+                                        for i in range(6)]
+    batch = [{"query_id": i, "text": q} for i, q in enumerate(texts)]
+    for q in texts:
+        _assert_oracle(eng.topk(q, 10), oracle.topk(q, 10))
+    opened: list[str] = []
+    dataset = pads.dataset
+
+    def counting_dataset(source, *args, **kwargs):
+        opened.append(str(source))
+        return dataset(source, *args, **kwargs)
+
+    class Counting(pq.ParquetFile):
+        def __init__(self, source, *args, **kwargs):
+            opened.append(str(source))
+            super().__init__(source, *args, **kwargs)
+
+    monkeypatch.setattr(pads, "dataset", counting_dataset)
+    monkeypatch.setattr(pq, "ParquetFile", Counting)
+    index_file = re.compile(r"(postings|term_stats)_e\d+")
+    for plan in (eng.query_batch_wand, eng.query_batch):
+        opened.clear()
+        got = _ranked(plan(batch, 10))
+        assert [p for p in opened if index_file.search(p)] == [], plan
+        for i, q in enumerate(texts):
+            _assert_oracle([(d, s) for qid, _, d, s in got if qid == i],
+                           oracle.topk(q, 10))
+
+
+def test_term_directory_does_not_pickle(spark, small_index):
+    """A snapshot's term directory holds the engine's cache: pickling
+    it, alone or inside its snapshot, raises instead of shipping the
+    cache into a task."""
+    snap = BM25Engine(spark, small_index)._snapshot()
+    for obj in (snap.terms, snap):
+        with pytest.raises(TypeError, match="TermDirectory"):
+            pickle.dumps(obj)
 
 
 class _Reads:
