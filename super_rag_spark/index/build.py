@@ -22,12 +22,25 @@ Scale notes (100 TB / 10^12 docs):
   yields globally sorted, non-overlapping blocks (WAND-safe).
 - document length is stored inline in each posting block (dls_enc), so
   the query path never joins doc_stats — see codec.py.
+- input skew: Spark splits a parquet scan by row group, so a corpus
+  written as one file with one row group is read by ONE task, and the
+  extraction UDF, the persisted tokens and the postings spill all stay
+  in that one partition while the other cores idle. spread_input
+  round-robins such an input over every core before extraction (the
+  DS2 data-stealing idea: balance before the expensive operator). An
+  input with more splits than cores is left alone: the scheduler
+  already balances its tasks, so a wide input at scale pays no extra
+  exchange.
+- every Spark job build_index runs is named by its phase
+  (``build:extract``, ``build:doc_stats``, ``build:postings``, and on
+  the streaming path ``build:stats``) in the UI and the event log.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+from contextlib import contextmanager
 from typing import Iterator
 
 import numpy as np
@@ -64,6 +77,40 @@ def tokens_expr(text_col: str = "text"):
         F.split(F.lower(F.col(text_col)), "[^a-z0-9]+"),
         lambda x: x != F.lit(""),
     )
+
+
+def spread_input(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` round-robined over the session's cores when it has no more
+    partitions than cores; else ``df`` itself.
+
+    A raw input with few splits (one parquet row group is one split)
+    leaves most cores idle through extraction, tokenizing and every
+    stage that inherits its partitioning, and the one split that holds
+    most rows sets each of those stages' wall time. More splits than
+    cores are already balanced by the scheduler, so those frames take
+    no exchange. The postings and term_stats files do not depend on the
+    input's partitioning: the builders sort by (term_id, doc_id).
+
+    Counting the partitions of a frame that ends in a shuffle runs that
+    shuffle's map side (adaptive execution settles the count by running
+    it); a file scan or local data counts without a job."""
+    cores = int(spark.sparkContext.defaultParallelism)
+    if df.rdd.getNumPartitions() > cores:
+        return df
+    return df.repartition(cores)
+
+
+@contextmanager
+def job_description(spark: SparkSession, name: str):
+    """Names the Spark jobs run inside the block ``name`` (UI, event
+    log), then restores the caller's description."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def extract(webtext_df: DataFrame) -> DataFrame:
@@ -600,7 +647,14 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     caller-side corpus join at query time. Costs one doc-level join at
     build time; duplicate-url inputs fold per column via max
     (deterministic — the postings side already dedups to one
-    survivor)."""
+    survivor).
+
+    The input goes through spread_input before extraction: a corpus in
+    fewer splits than cores (one parquet row group, say) would run the
+    extraction UDF, the persisted tokens and the postings spill on as
+    many cores as it has splits. Wider inputs are read as they are.
+    Each phase's Spark jobs carry its name as their job description
+    (see the module notes); the caller's description is restored."""
     if extract_mode not in ("html", "any"):
         raise ValueError(f"unknown extract_mode: {extract_mode!r}")
     if title_weight < 1:
@@ -618,6 +672,7 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     meta_src = docs_df
     store = IndexStorage(index_dir)
 
+    docs_df = spread_input(spark, docs_df)
     if not text_is_extracted:
         if title_weight > 1:
             docs_df = extract_with_title(docs_df)
@@ -636,12 +691,14 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
         StorageLevel.MEMORY_AND_DISK)
 
     def _stats_agg(df):
-        return df.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("doc_id").alias("n_uniq"),
-            F.avg("dl").alias("avgdl"),
-            F.sum("dl").alias("total_tokens"),
-        ).collect()[0]
+        # the first action on the persisted tokens: it runs extraction
+        with job_description(spark, "build:extract"):
+            return df.agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.countDistinct("doc_id").alias("n_uniq"),
+                F.avg("dl").alias("avgdl"),
+                F.sum("dl").alias("total_tokens"),
+            ).collect()[0]
 
     # Input-uniqueness guard: duplicate urls would double-count n_docs /
     # dl and emit duplicate postings (doc scored twice, diverging from
@@ -674,12 +731,13 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
             *[F.max(c).alias(c) for c in meta_cols])
         stats_df = stats_df.join(meta_df, "url", "left").select(
             "doc_id", "url", "dl", *meta_cols)
-    store.catalog.overwrite(stats_df, store.doc_stats_dir_for(0))
-    store.catalog.overwrite(
-        spark.createDataFrame(
-            [(n_docs, avgdl, int(st["total_tokens"] or 0))],
-            "n_docs long, avgdl double, total_tokens long"),
-        store.corpus_stats_dir_for(0))
+    with job_description(spark, "build:doc_stats"):
+        store.catalog.overwrite(stats_df, store.doc_stats_dir_for(0))
+        store.catalog.overwrite(
+            spark.createDataFrame(
+                [(n_docs, avgdl, int(st["total_tokens"] or 0))],
+                "n_docs long, avgdl double, total_tokens long"),
+            store.corpus_stats_dir_for(0))
 
     # Token occurrences go STRAIGHT to the block builder (r6): the
     # former explode -> groupBy(term,doc) tf aggregation was a second
@@ -707,17 +765,19 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     if (64 << 20) <= est_raw and est_bucket_raw <= BUCKET_MEM_BUDGET:
         # columnar per-bucket build (r6): spill exchange + numpy sort;
         # also writes term_stats in the same pass (see
-        # build_postings_bucketed). Empty corpora and over-budget
-        # buckets take the streaming path below.
+        # build_postings_bucketed), so this path has no build:stats
+        # job. Empty corpora and over-budget buckets take the streaming
+        # path below.
         shutil.rmtree(postings_dir, ignore_errors=True)
         ts_dir = None if staging else store.term_stats_dir_for(0)
         if ts_dir is not None:
             shutil.rmtree(ts_dir, ignore_errors=True)
-        lineage = build_postings_bucketed(
-            spark, tf, postings_dir, ts_dir,
-            block_size=block_size, n_buckets=n_buckets,
-            salt_df_threshold=salt_df_threshold, salt_count=salt_count,
-            seg=seg)
+        with job_description(spark, "build:postings"):
+            lineage = build_postings_bucketed(
+                spark, tf, postings_dir, ts_dir,
+                block_size=block_size, n_buckets=n_buckets,
+                salt_df_threshold=salt_df_threshold, salt_count=salt_count,
+                seg=seg)
         toks.unpersist()
         if not staging:
             store.append_lineage(spark, [
@@ -736,12 +796,14 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
         # term_id (build_postings shuffles ONCE on the output
         # partitioning), so the partitionBy write emits exactly one
         # file per bucket with sorted term_id row groups
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-            postings_dir)
+        with job_description(spark, "build:postings"):
+            blocks.write.mode("overwrite").partitionBy("bucket").parquet(
+                postings_dir)
         toks.unpersist()
         if not staging:
-            write_term_stats_and_lineage(spark, store, phase="build",
-                                         epoch=0)
+            with job_description(spark, "build:stats"):
+                write_term_stats_and_lineage(spark, store, phase="build",
+                                             epoch=0)
     # every bucket gets a dir, empty ones too: merges and compactions
     # read a missing bucket dir as lost data and refuse to go on
     for d in [postings_dir] + ([] if staging else [store.term_stats_dir_for(0)]):

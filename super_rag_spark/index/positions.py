@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 
 from .. import analysis
 from ..codec import decode_positions_block, encode_varint_sizes
-from .build import extract, extract_any, term_id_expr, tokens_from_text
+from .build import (extract, extract_any, spread_input, term_id_expr,
+                    tokens_from_text)
 from .storage import POSITIONS_SCHEMA, IndexStorage
 
 
@@ -179,6 +180,7 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     # duplicated and another missing); only a duplicate pays the dedup.
     st = docs_df.agg(F.count(F.lit(1)).alias("n"),
                      F.countDistinct("url").alias("u")).collect()[0]
+    docs_df = spread_input(spark, docs_df)
     if not text_is_extracted:
         docs_df = (extract(docs_df) if extract_mode == "html"
                    else extract_any(docs_df))

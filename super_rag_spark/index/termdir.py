@@ -8,7 +8,10 @@ files (one per segment run), hold its term_id; each row group is read
 from disk at most once per epoch (sorted by term_id on load if a writer
 left it out of order), and the term's blocks are a searchsorted slice
 of it. So a cold term costs one row-group read per epoch, shared by
-every term of that row group, and an OOV term reads no postings.
+every term of that row group. ``slices`` and ``block_rows`` take term
+ids already known to be in the vocabulary (their callers resolved df),
+so they read no term_stats; a caller drops OOV terms through ``dfs``
+first, and an OOV term then reads no postings.
 
 ``Snapshot.terms`` reads through the engine's cache; a Spark task
 builds its own directory with a task-local cache.
@@ -194,13 +197,13 @@ class TermDirectory:
         return out
 
     def slices(self, term_ids) -> dict[int, list[tuple[_RowGroup, int, int]]]:
-        """Each in-vocabulary term's block rows as ``(row group, start,
-        stop)`` slices of cached row groups, in segment file order. An
-        OOV term (df 0) reads no postings."""
+        """Each term's block rows as ``(row group, start, stop)`` slices
+        of cached row groups, in segment file order. ``term_ids`` are in
+        the vocabulary (df > 0): an OOV id still reads the row groups
+        whose term_id range covers it."""
         out: dict[int, list[tuple[_RowGroup, int, int]]] = {}
-        for tid, df in self.dfs(term_ids).items():
-            if not df:
-                continue
+        for tid in term_ids:
+            tid = int(tid)
             bucket = bucket_of_term_id(tid, self.n_buckets)
             d = self._directory(bucket)
             parts = []
@@ -217,8 +220,9 @@ class TermDirectory:
         return out
 
     def block_rows(self, term_ids) -> dict[int, list[dict]]:
-        """Each in-vocabulary term's block rows as dicts sorted by
-        first_doc_id (wand_topk's input), converted on every call."""
+        """Each term's block rows as dicts sorted by first_doc_id
+        (wand_topk's input), converted on every call. ``term_ids`` are
+        in the vocabulary, as for ``slices``."""
         out: dict[int, list[dict]] = {}
         for tid, parts in self.slices(term_ids).items():
             rows = [row for rg, s, e in parts

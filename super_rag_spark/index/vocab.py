@@ -37,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import extract, extract_any, term_id_expr, tokens_from_text
+from .build import (extract, extract_any, spread_input, term_id_expr,
+                    tokens_from_text)
 from .storage import IndexStorage
 
 VOCAB_SCHEMA = "variant string, term string, df long, bucket int"
@@ -117,6 +118,7 @@ def build_vocab(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     # duplicate pays the dedup
     st = docs_df.agg(F.count(F.lit(1)).alias("n"),
                      F.countDistinct("url").alias("u")).collect()[0]
+    docs_df = spread_input(spark, docs_df)
     if not text_is_extracted:
         docs_df = (extract(docs_df) if extract_mode == "html"
                    else extract_any(docs_df))

@@ -272,7 +272,7 @@ class BM25Engine:
         """``method="wand"``'s input, ``{term: (df, block rows)}``: the
         term directory's block rows, converted once and cached per term
         (kind ``wand``). df is the sum of block n over the term's
-        blocks."""
+        blocks; OOV terms are absent."""
         out: dict[str, tuple[int, list[dict]]] = {}
         missing: dict[str, int] = {}  # term -> term_id
         for t in terms:
@@ -281,6 +281,9 @@ class BM25Engine:
                 out[t] = hit
             else:
                 missing[t] = term_id_for(t)
+        # block_rows takes in-vocabulary ids: df from the cached stats
+        dfs = snap.terms.dfs(missing.values())
+        missing = {t: tid for t, tid in missing.items() if dfs.get(tid)}
         rows = snap.terms.block_rows(missing.values())
         for t, tid in missing.items():
             if tid in rows:
@@ -309,6 +312,9 @@ class BM25Engine:
                 out[t] = (hit.shape[1], *hit)
             else:
                 missing[t] = term_id_for(t)
+        # slices takes in-vocabulary ids: df from the cached stats
+        dfs = snap.terms.dfs(missing.values())
+        missing = {t: tid for t, tid in missing.items() if dfs.get(tid)}
         by_tid = snap.terms.slices(missing.values())
         slices = {t: by_tid[tid] for t, tid in missing.items() if tid in by_tid}
         if not slices:

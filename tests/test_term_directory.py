@@ -8,7 +8,8 @@ driver and for the distributed plans alike.
   still answers as the oracle; one without term_id statistics fails the
   query, naming the file, on the driver and in the WAND plan's tasks;
 - the WAND plan's per-task feed ranks as the exhaustive plan, and a
-  plan that follows the driver's queries reads no index file;
+  plan that follows the driver's queries reads no index file; block
+  rows of in-vocabulary ids read no term_stats;
 - a cached row group does not let a head term of its bucket past the
   driver df budget, and a cached term owns its decoded arrays;
 - the I/O and decode counts are exact: a row group is read once per
@@ -29,7 +30,7 @@ from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from super_rag_spark import codec
-from super_rag_spark.analysis import doc_id_for_url, tokenize
+from super_rag_spark.analysis import doc_id_for_url, term_id_for, tokenize
 from super_rag_spark.index import termdir
 from super_rag_spark.index.build import (build_postings_bucketed,
                                          term_id_expr, tokens_from_text)
@@ -337,6 +338,29 @@ def test_plans_read_no_file_the_engine_holds(spark, rows, small_index,
         for i, q in enumerate(texts):
             _assert_oracle([(d, s) for qid, _, d, s in got if qid == i],
                            oracle.topk(q, 10))
+
+
+def test_block_rows_read_no_term_stats(spark, rows, small_index, monkeypatch):
+    """``block_rows`` over in-vocabulary ids (the WAND plan's spec rows
+    and broadcast ids) reads postings only: with the term_stats reader
+    patched to raise, a fresh directory returns the same rows as one
+    that may read it."""
+    snap = BM25Engine(spark, small_index)._snapshot()
+    vocab = sorted({t for _, text in rows[:120] for t in tokenize(text)})
+    ids = [term_id_for(t) for t in vocab[::7]]
+
+    def directory():
+        return termdir.TermDirectory(snap.store, snap.epoch, snap.n_buckets,
+                                     termdir._Cache())
+
+    want = directory().block_rows(ids)
+    assert sorted(want) == sorted(ids)
+
+    def no_stats(self, bucket):
+        raise AssertionError(f"term_stats of bucket {bucket} read")
+
+    monkeypatch.setattr(termdir.TermDirectory, "_bucket_dfs", no_stats)
+    assert directory().block_rows(ids) == want
 
 
 def test_term_directory_does_not_pickle(spark, small_index):
