@@ -7,7 +7,8 @@ from-scratch replacement required by BASELINE.json north_star:
 docID/tf blocks with block-max metadata)".
 
 Everything here is pure NumPy over arrays (no per-row Python), so it
-runs inside Arrow-batched ``applyInPandas`` groups at full speed.
+runs inside Arrow-batched Spark tasks at full speed, straight from a
+record batch's buffers (:func:`encoded_blocks`).
 
 Encoding of one block (<= BLOCK_SIZE postings of one term):
   doc_ids: sorted ascending -> delta gaps (first value absolute) -> LEB128
@@ -24,6 +25,7 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
 
 LEB_MAX_BYTES = 10  # 64-bit value -> at most 10 LEB128 bytes
 
@@ -187,7 +189,32 @@ class EncodedBlocks(NamedTuple):
     n: np.ndarray
 
 
-def decode_blocks_batch(blocks):
+ENC_COLS = ("docs_enc", "tfs_enc", "dls_enc")
+
+
+def binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(value offsets, value bytes) of a binary Arrow array, or of a
+    slice of one, as NumPy views: row i's bytes are
+    ``data[off[i]:off[i + 1]]``."""
+    _, offsets, data = arr.buffers()
+    if offsets is None or data is None:  # no rows, or only empty values
+        return np.zeros(len(arr) + 1, dtype=np.int64), np.empty(0, np.uint8)
+    dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(offsets, dtype=dtype)[arr.offset:arr.offset + len(arr) + 1]
+    return off, np.frombuffer(data, dtype=np.uint8)
+
+
+def encoded_blocks(batch: pa.RecordBatch) -> EncodedBlocks:
+    """The blocks of a batch of postings rows, or of a slice of one, as
+    views of its buffers: no copy."""
+    streams = []
+    for c in ENC_COLS:
+        off, data = binary_buffers(batch.column(c))
+        streams.append(data[off[0]:off[-1]])
+    return EncodedBlocks(*streams, batch.column("n").to_numpy())
+
+
+def decode_blocks_batch(blocks: EncodedBlocks):
     """Decode MANY blocks in one vectorized pass.
 
     LEB128 streams concatenate, so the per-call NumPy dispatch overhead
@@ -197,16 +224,8 @@ def decode_blocks_batch(blocks):
     where C is the global gap cumsum (each block's first gap is the
     absolute doc id), vectorized with a per-block offset repeat.
 
-    blocks: an :class:`EncodedBlocks`, or a list of dicts with
-    docs_enc/tfs_enc/dls_enc/n (joined into one first).
     Returns (doc_ids, tfs, dls, ns) int64 arrays; ns = block lengths.
     """
-    if not isinstance(blocks, EncodedBlocks):
-        blocks = EncodedBlocks(
-            b"".join(b["docs_enc"] for b in blocks),
-            b"".join(b["tfs_enc"] for b in blocks),
-            b"".join(b["dls_enc"] for b in blocks),
-            np.array([b["n"] for b in blocks], dtype=np.int64))
     ns = np.asarray(blocks.n, dtype=np.int64)
     total = int(ns.sum())
     gaps = decode_varint(blocks.docs_enc, total)

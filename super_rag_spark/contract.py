@@ -1950,7 +1950,7 @@ def index_wand_topk(spark, sf_dir):
     table doc_ids — must equal plain-SQL BM25 exactly."""
     eng = _indexed_engine(spark, sf_dir)
     qid, qtext = BM25_QUERIES[1]
-    hits = eng.topk(qtext, k=10, use_wand=True)
+    hits = eng.topk(qtext, k=10, method="wand")
     doc_stats = {r["doc_id"]: r["url"]
                  for r in eng.store.doc_stats(spark).collect()}
     rows = [

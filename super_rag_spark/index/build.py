@@ -261,17 +261,50 @@ def _build_blocks_arrays(terms, salts, doc_ids, tfs, dls,
     )
 
 
-def _build_blocks_np(pdf: pd.DataFrame, block_size: int, n_buckets: int,
-                     seg: int = 0) -> pd.DataFrame:
-    """pandas adapter over _build_blocks_arrays (kept for the bit-
-    identity test; production rides the mapInArrow path below)."""
-    return _build_blocks_arrays(
-        pdf["term_id"].to_numpy(), pdf["salt"].to_numpy(),
-        pdf["doc_id"].to_numpy(),
-        pdf["tf"].to_numpy().astype(np.int64),
-        pdf["dl"].to_numpy().astype(np.int64),
-        block_size, n_buckets, seg,
-    ).to_pandas()
+def _collapse_build(terms, doc_ids, tfdl, *, block_size: int,
+                    n_buckets: int, salt_df_threshold: int, salt_count: int,
+                    seg: int, first_salted: bool = False):
+    """Block build over (term_id, doc_id)-sorted rows whose term groups
+    are all complete. Returns (record_batch, term_ids, dfs): the last
+    two are the rows' term_stats (df(term) == term group size, since
+    each live doc contributes exactly one posting per term).
+
+    Input rows may be PRE-AGGREGATED postings (one row per (term, doc)
+    with its tf) or RAW token occurrences (tf=1 per row), with tf/dl
+    packed as ``tfdl`` (tf<<32 | dl): contiguous (term, doc) runs are
+    summed, which makes the two identical — so the index build can skip
+    the tf groupBy exchange entirely and merge can keep feeding decoded
+    postings. A term is salted (salt = doc_id's top bits) when its df
+    exceeds ``salt_df_threshold``; ``first_salted``: the first group
+    already overflowed upstream (its earlier salt subgroups were
+    flushed), so it is salted regardless of its remaining size here."""
+    shift = np.int64(analysis.DOC_ID_BITS - (salt_count.bit_length() - 1))
+    m = len(terms)
+    # collapse (term, doc) runs -> one posting per run, tf summed
+    new_post = np.empty(m, dtype=bool)
+    new_post[0] = True
+    np.not_equal(terms[1:], terms[:-1], out=new_post[1:])
+    new_post[1:] |= doc_ids[1:] != doc_ids[:-1]
+    pstarts = np.flatnonzero(new_post)
+    tfs = np.add.reduceat(tfdl >> np.int64(32), pstarts)
+    pterms = terms[pstarts]
+    pdocs = doc_ids[pstarts]
+    pdls = tfdl[pstarts] & np.int64(0xFFFFFFFF)
+    # term groups over postings; group size == the term's df
+    k = len(pterms)
+    new_grp = np.empty(k, dtype=bool)
+    new_grp[0] = True
+    np.not_equal(pterms[1:], pterms[:-1], out=new_grp[1:])
+    gstarts = np.flatnonzero(new_grp)
+    gsizes = np.diff(np.append(gstarts, k))
+    salted_grp = gsizes > int(salt_df_threshold)
+    if first_salted:
+        salted_grp[0] = True
+    salts = np.where(np.repeat(salted_grp, gsizes),
+                     pdocs >> shift, 0).astype(np.int32)
+    rb = _build_blocks_arrays(pterms, salts, pdocs, tfs, pdls,
+                              block_size, n_buckets, seg)
+    return rb, pterms[gstarts], gsizes
 
 
 def _make_partition_builder(block_size: int, n_buckets: int, seg: int = 0,
@@ -303,47 +336,13 @@ def _make_partition_builder(block_size: int, n_buckets: int, seg: int = 0,
     same bound the old (term,salt)-keyed carry had."""
     shift = np.int64(analysis.DOC_ID_BITS - (salt_count.bit_length() - 1))
     thr = int(salt_df_threshold)
-    mask32 = np.int64(0xFFFFFFFF)
 
     def emit(cols, first_salted: bool):
-        """Build blocks for rows whose TERM groups are all complete.
-
-        Input rows may be PRE-AGGREGATED postings (one row per
-        (term, doc) with its tf) or RAW token occurrences (tf=1 per
-        row): contiguous (term, doc) runs are summed, which makes the
-        two identical — so the index build can skip the tf groupBy
-        exchange entirely and merge can keep feeding decoded postings.
-
-        ``first_salted``: the first group already overflowed upstream
-        (its earlier salt subgroups were flushed), so it is salted
-        regardless of its remaining size here."""
-        terms, doc_ids, tfdl = cols
-        m = len(terms)
-        # collapse (term, doc) runs -> one posting per run, tf summed
-        new_post = np.empty(m, dtype=bool)
-        new_post[0] = True
-        np.not_equal(terms[1:], terms[:-1], out=new_post[1:])
-        new_post[1:] |= doc_ids[1:] != doc_ids[:-1]
-        pstarts = np.flatnonzero(new_post)
-        tfs = np.add.reduceat(tfdl >> np.int64(32), pstarts)
-        pterms = terms[pstarts]
-        pdocs = doc_ids[pstarts]
-        pdls = tfdl[pstarts] & mask32
-        # term groups over postings; group size == the term's df
-        k = len(pterms)
-        new_grp = np.empty(k, dtype=bool)
-        new_grp[0] = True
-        np.not_equal(pterms[1:], pterms[:-1], out=new_grp[1:])
-        gstarts = np.flatnonzero(new_grp)
-        gsizes = np.diff(np.append(gstarts, k))
-        salted_grp = gsizes > thr
-        if first_salted:
-            salted_grp[0] = True
-        salts = np.where(np.repeat(salted_grp, gsizes),
-                         pdocs >> shift, 0).astype(np.int32)
-        return _build_blocks_arrays(
-            pterms, salts, pdocs, tfs, pdls,
-            block_size, n_buckets, seg)
+        """Blocks of rows whose TERM groups are all complete."""
+        return _collapse_build(
+            *cols, block_size=block_size, n_buckets=n_buckets,
+            salt_df_threshold=thr, salt_count=salt_count, seg=seg,
+            first_salted=first_salted)[0]
 
     def gen(batches):
         carry = None  # list of 3 numpy arrays: incomplete TERM group
@@ -435,11 +434,9 @@ def build_postings(tf_df: DataFrame, *,
 def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
                            n_buckets: int, salt_df_threshold: int,
                            salt_count: int, seg: int):
-    """Whole-bucket block build over UNSORTED arrays: numpy lexsort,
-    (term, doc) run collapse (tf summed), in-place salting, block
-    encode. Returns (record_batch, term_ids, dfs) — the last two are
-    the bucket's term_stats rows (df(term) == term group size, since
-    each live doc contributes exactly one posting per term).
+    """Whole-bucket block build over UNSORTED arrays: one numpy
+    lexsort, then :func:`_collapse_build` (its (record_batch, term_ids,
+    dfs) are the bucket's blocks and term_stats rows).
 
     Rationale (r6, guide §1.2 'the distributed algorithm first'):
     Spark's row-based sort + the JVM row->Arrow conversion were ~70 %
@@ -449,33 +446,10 @@ def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
     parquet spill and sorting in numpy does the same work at memory
     bandwidth."""
     order = np.lexsort((docs, terms))
-    terms = terms[order]
-    docs = docs[order]
-    tfdl = tfdl[order]
-    m = len(terms)
-    mask32 = np.int64(0xFFFFFFFF)
-    shift = np.int64(analysis.DOC_ID_BITS - (salt_count.bit_length() - 1))
-    new_post = np.empty(m, dtype=bool)
-    new_post[0] = True
-    np.not_equal(terms[1:], terms[:-1], out=new_post[1:])
-    new_post[1:] |= docs[1:] != docs[:-1]
-    pstarts = np.flatnonzero(new_post)
-    tfs = np.add.reduceat(tfdl >> np.int64(32), pstarts)
-    pterms = terms[pstarts]
-    pdocs = docs[pstarts]
-    pdls = tfdl[pstarts] & mask32
-    k = len(pterms)
-    new_grp = np.empty(k, dtype=bool)
-    new_grp[0] = True
-    np.not_equal(pterms[1:], pterms[:-1], out=new_grp[1:])
-    gstarts = np.flatnonzero(new_grp)
-    gsizes = np.diff(np.append(gstarts, k))
-    salted_grp = gsizes > int(salt_df_threshold)
-    salts = np.where(np.repeat(salted_grp, gsizes),
-                     pdocs >> shift, 0).astype(np.int32)
-    rb = _build_blocks_arrays(pterms, salts, pdocs, tfs, pdls,
-                              block_size, n_buckets, seg)
-    return rb, pterms[gstarts], gsizes
+    return _collapse_build(
+        terms[order], docs[order], tfdl[order], block_size=block_size,
+        n_buckets=n_buckets, salt_df_threshold=salt_df_threshold,
+        salt_count=salt_count, seg=seg)
 
 
 # one bucket's raw (term_id, doc_id, tfdl) arrays must fit a task for

@@ -51,8 +51,9 @@ from typing import Callable, Iterable, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_pandas
-from .build import build_index, build_postings, write_term_stats_and_lineage
+from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_arrow
+from .build import (build_index, build_postings, job_description,
+                    write_term_stats_and_lineage)
 from .sidecars import _hardlink_tree, _link_files
 from .storage import POSTINGS_SCHEMA, IndexStorage
 
@@ -198,7 +199,8 @@ def _rewrite_buckets(spark: SparkSession, store: IndexStorage, ep: _Epoch,
         keep = blocks.where(F.col("seg") == keep_seg)
         blocks = blocks.where(F.col("seg") != keep_seg)
     decoded = (blocks.drop("bucket")
-               .mapInPandas(decode_postings_map_in_pandas, schema=DECODED_SCHEMA))
+               .mapInArrow(decode_postings_map_in_arrow,
+                           schema=DECODED_SCHEMA))
     if removed is not None:
         decoded = decoded.join(removed, "doc_id", "left_anti")
     out = build_postings(decoded, seg=seg, **ep.cfg)
@@ -294,130 +296,138 @@ def merge_append(spark: SparkSession, index_dir: str,
                     title_weight=int(ep.manifest.get("title_weight", 1)),
                     meta_cols=tuple(ep.manifest.get("meta_cols", [])),
                     **ep.cfg)
-    # the delta's sidecars (positions/vocab) build into staging right
-    # away — iff the live epoch carries them — so a crash-resume with
-    # new_docs_df=None finds them ready (index/sidecars.py; idempotent)
+    # each phase names its Spark jobs (the staging build's: build:*)
     from .sidecars import build_staging_sidecars, carry_sidecars_merge
 
-    build_staging_sidecars(spark, store, sstore, new_docs_df,
-                           text_is_extracted=text_is_extracted,
-                           extract_mode=extract_mode)
+    with job_description(spark, "append:sidecars"):
+        # the delta's sidecars (positions/vocab) build into staging right
+        # away — iff the live epoch carries them — so a crash-resume with
+        # new_docs_df=None finds them ready (index/sidecars.py; idempotent)
+        build_staging_sidecars(spark, store, sstore, new_docs_df,
+                               text_is_extracted=text_is_extracted,
+                               extract_mode=extract_mode)
 
-    # 2. removed = explicit tombstones + upserts (old ∩ staging doc_ids).
-    #    Applied to OLD-epoch rows only: the staging (newest) version of
-    #    an upserted doc always survives, and a delete+re-add in one
-    #    cycle resurrects the doc with its new content.
-    old_ds = store.doc_stats(spark, ep.old)
-    stg_ds = sstore.doc_stats(spark, 0)
-    tomb = store.tombstones(spark, ep.old)
-    upserts = old_ds.select("doc_id").join(
-        stg_ds.select("doc_id"), "doc_id", "left_semi")
-    removed = upserts if tomb is None else upserts.unionByName(
-        tomb.select("doc_id")).distinct()
-    # tombstones + upserts are normally delta-sized -> a driver-local
-    # frame broadcasts cleanly; a BULK delete must never be collected,
-    # so above the threshold the removed set stays a distributed frame
-    n_removed = removed.count()
-    bulk_removal = n_removed > REMOVED_DRIVER_MAX
-    removed_small = None
-    if bulk_removal:
-        removed_small = removed  # distributed; Catalyst picks the join
-    elif n_removed:
-        removed_small = F.broadcast(spark.createDataFrame(removed.toPandas()))
+    with job_description(spark, "append:probe"):
+        # 2. removed = explicit tombstones + upserts (old ∩ staging doc_ids).
+        #    Applied to OLD-epoch rows only: the staging (newest) version of
+        #    an upserted doc always survives, and a delete+re-add in one
+        #    cycle resurrects the doc with its new content.
+        old_ds = store.doc_stats(spark, ep.old)
+        stg_ds = sstore.doc_stats(spark, 0)
+        tomb = store.tombstones(spark, ep.old)
+        upserts = old_ds.select("doc_id").join(
+            stg_ds.select("doc_id"), "doc_id", "left_semi")
+        removed = upserts if tomb is None else upserts.unionByName(
+            tomb.select("doc_id")).distinct()
+        # tombstones + upserts are normally delta-sized -> a driver-local
+        # frame broadcasts cleanly; a BULK delete must never be collected,
+        # so above the threshold the removed set stays a distributed frame
+        n_removed = removed.count()
+        bulk_removal = n_removed > REMOVED_DRIVER_MAX
+        removed_small = None
+        if bulk_removal:
+            removed_small = removed  # distributed; Catalyst picks the join
+        elif n_removed:
+            removed_small = F.broadcast(
+                spark.createDataFrame(removed.toPandas()))
 
-    # 3. upfront, DETERMINISTIC change detection (identical on resume):
-    #    an old block's [first,last] window may contain a removed doc
-    #    (metadata range probe, broadcast join, no decode; false
-    #    positives only cost a no-op re-encode). The hit set stays a
-    #    DataFrame end-to-end (ADVICE r2: a sub-threshold delete can hit
-    #    millions of (bucket, term_id) groups); the driver only sees the
-    #    distinct bucket list. A bulk delete skips the probe (its
-    #    non-equi join only works broadcast) and rewrites every bucket.
-    removal_hits_df: DataFrame | None = None
-    hit_buckets: set[int] = set()
-    if bulk_removal:
-        hit_buckets = set(range(n_buckets))
-    elif removed_small is not None:
-        meta = (store.postings(spark, ep.old)
-                .select("bucket", "term_id", "first_doc_id", "last_doc_id"))
-        removal_hits_df = (
-            meta.join(removed_small,
-                      (meta["first_doc_id"] <= F.col("doc_id"))
-                      & (meta["last_doc_id"] >= F.col("doc_id")))
-            .select("bucket", "term_id").distinct()
-            .persist())  # probe scan runs once, every wave reuses it
-        hit_buckets = {int(r["bucket"]) for r in
-                       removal_hits_df.select("bucket").distinct().collect()}
-    stg_root = sstore.postings_dir_for(0)
-    staging_buckets = {
-        int(name.split("=")[1]) for name in os.listdir(stg_root)
-        if name.startswith("bucket=") and any(
-            f.endswith(".parquet")
-            for f in os.listdir(os.path.join(stg_root, name)))}
+        # 3. upfront, DETERMINISTIC change detection (identical on resume):
+        #    an old block's [first,last] window may contain a removed doc
+        #    (metadata range probe, broadcast join, no decode; false
+        #    positives only cost a no-op re-encode). The hit set stays a
+        #    DataFrame end-to-end (ADVICE r2: a sub-threshold delete can hit
+        #    millions of (bucket, term_id) groups); the driver only sees the
+        #    distinct bucket list. A bulk delete skips the probe (its
+        #    non-equi join only works broadcast) and rewrites every bucket.
+        removal_hits_df: DataFrame | None = None
+        hit_buckets: set[int] = set()
+        if bulk_removal:
+            hit_buckets = set(range(n_buckets))
+        elif removed_small is not None:
+            meta = (store.postings(spark, ep.old).select(
+                "bucket", "term_id", "first_doc_id", "last_doc_id"))
+            removal_hits_df = (
+                meta.join(removed_small,
+                          (meta["first_doc_id"] <= F.col("doc_id"))
+                          & (meta["last_doc_id"] >= F.col("doc_id")))
+                .select("bucket", "term_id").distinct()
+                .persist())  # probe scan runs once, every wave reuses it
+            hit_buckets = {
+                int(r["bucket"]) for r in
+                removal_hits_df.select("bucket").distinct().collect()}
+        stg_root = sstore.postings_dir_for(0)
+        staging_buckets = {
+            int(name.split("=")[1]) for name in os.listdir(stg_root)
+            if name.startswith("bucket=") and any(
+                f.endswith(".parquet")
+                for f in os.listdir(os.path.join(stg_root, name)))}
 
-    # 4. untouched buckets hardlink their old files outside any Spark
-    #    job (O(1) per file — THE O(delta) fast path); hit buckets
-    #    rewrite their hit groups in waves. Both then link the staging
-    #    blocks in as the new segment (after the rewrite: its partition
-    #    overwrite wipes links a crashed earlier attempt left).
-    new_dir = store.postings_dir_for(ep.new)
+    with job_description(spark, "append:rewrite"):
+        # 4. untouched buckets hardlink their old files outside any Spark
+        #    job (O(1) per file — THE O(delta) fast path); hit buckets
+        #    rewrite their hit groups in waves. Both then link the staging
+        #    blocks in as the new segment (after the rewrite: its partition
+        #    overwrite wipes links a crashed earlier attempt left).
+        new_dir = store.postings_dir_for(ep.new)
 
-    def link_staging(wave: list[int]) -> None:
-        for b in wave:
-            _link_files(os.path.join(stg_root, f"bucket={b}"),
-                        os.path.join(new_dir, f"bucket={b}"),
-                        prefix=f"seg{ep.new}-")
+        def link_staging(wave: list[int]) -> None:
+            for b in wave:
+                _link_files(os.path.join(stg_root, f"bucket={b}"),
+                            os.path.join(new_dir, f"bucket={b}"),
+                            prefix=f"seg{ep.new}-")
 
-    def link_wave(wave: list[int]) -> None:
-        for b in wave:
-            _hardlink_tree(store.bucket_dir("postings", ep.old, b),
-                           os.path.join(new_dir, f"bucket={b}"))
-        link_staging(wave)
+        def link_wave(wave: list[int]) -> None:
+            for b in wave:
+                _hardlink_tree(store.bucket_dir("postings", ep.old, b),
+                               os.path.join(new_dir, f"bucket={b}"))
+            link_staging(wave)
 
-    def rewrite_wave(wave: list[int]) -> None:
-        _rewrite_buckets(spark, store, ep, wave, removed=removed_small,
-                         hits=removal_hits_df)
-        link_staging(wave)
+        def rewrite_wave(wave: list[int]) -> None:
+            _rewrite_buckets(spark, store, ep, wave, removed=removed_small,
+                             hits=removal_hits_df)
+            link_staging(wave)
 
-    _run_waves(spark, store, "merge", ep,
-               [b for b in range(n_buckets) if b not in hit_buckets],
-               link_wave, fail_after_bucket)
-    _run_waves(spark, store, "merge", ep, sorted(hit_buckets),
-               rewrite_wave, fail_after_bucket)
+        _run_waves(spark, store, "merge", ep,
+                   [b for b in range(n_buckets) if b not in hit_buckets],
+                   link_wave, fail_after_bucket)
+        _run_waves(spark, store, "merge", ep, sorted(hit_buckets),
+                   rewrite_wave, fail_after_bucket)
 
-    # 5. epoch-scoped stats tables (everything below is idempotent, so a
-    #    crash + resume rewrites it safely)
-    ds_merged = old_ds
-    if removed_small is not None:
-        ds_merged = ds_merged.join(removed_small, "doc_id", "left_anti")
-    n_docs, avgdl = _write_doc_stats(spark, store, ep.new,
-                                     ds_merged.unionByName(stg_ds))
+    with job_description(spark, "append:stats"):
+        # 5. epoch-scoped stats tables (everything below is idempotent, so a
+        #    crash + resume rewrites it safely)
+        ds_merged = old_ds
+        if removed_small is not None:
+            ds_merged = ds_merged.join(removed_small, "doc_id", "left_anti")
+        n_docs, avgdl = _write_doc_stats(spark, store, ep.new,
+                                         ds_merged.unionByName(stg_ds))
 
-    # term_stats: untouched buckets hardlink their partitions; buckets
-    # that LOST postings recompute from the new block metadata (no
-    # decode); buckets that only GAINED postings (every bucket of a
-    # streaming micro-batch) fold the STAGING delta into the old
-    # term_stats table: df_new = df_old + df_staging — O(delta metadata
-    # + old term_stats), never O(merged block metadata).
-    ts_new = store.term_stats_dir_for(ep.new)
-    os.makedirs(ts_new, exist_ok=True)
-    ts_old = store.term_stats_dir_for(ep.old)
-    for b in range(n_buckets):
-        src = os.path.join(ts_old, f"bucket={b}")
-        if b not in staging_buckets | hit_buckets and os.path.isdir(src):
-            _hardlink_tree(src, os.path.join(ts_new, f"bucket={b}"))
-    write_term_stats_and_lineage(spark, store, phase="merge_stats",
-                                 epoch=ep.new, buckets=sorted(hit_buckets))
-    gain_only = sorted(staging_buckets - hit_buckets)
-    if gain_only:
-        _fold_term_stats_delta(spark, store, sstore, ep, gain_only)
+        # term_stats: untouched buckets hardlink their partitions; buckets
+        # that LOST postings recompute from the new block metadata (no
+        # decode); buckets that only GAINED postings (every bucket of a
+        # streaming micro-batch) fold the STAGING delta into the old
+        # term_stats table: df_new = df_old + df_staging — O(delta metadata
+        # + old term_stats), never O(merged block metadata).
+        ts_new = store.term_stats_dir_for(ep.new)
+        os.makedirs(ts_new, exist_ok=True)
+        ts_old = store.term_stats_dir_for(ep.old)
+        for b in range(n_buckets):
+            src = os.path.join(ts_old, f"bucket={b}")
+            if b not in staging_buckets | hit_buckets and os.path.isdir(src):
+                _hardlink_tree(src, os.path.join(ts_new, f"bucket={b}"))
+        write_term_stats_and_lineage(spark, store, phase="merge_stats",
+                                     epoch=ep.new, buckets=sorted(hit_buckets))
+        gain_only = sorted(staging_buckets - hit_buckets)
+        if gain_only:
+            _fold_term_stats_delta(spark, store, sstore, ep, gain_only)
 
-    # sidecars ride the same epoch switch (O(delta) carry — r5):
-    # positions segment-link + hit-group rebuild, vocab df fold
-    carry_sidecars_merge(spark, store, sstore, old_epoch=ep.old,
-                         epoch=ep.new, removed_small=removed_small,
-                         bulk_removal=bulk_removal,
-                         removal_hits_df=removal_hits_df)
+    with job_description(spark, "append:sidecars"):
+        # sidecars ride the same epoch switch (O(delta) carry — r5):
+        # positions segment-link + hit-group rebuild, vocab df fold
+        carry_sidecars_merge(spark, store, sstore, old_epoch=ep.old,
+                             epoch=ep.new, removed_small=removed_small,
+                             bulk_removal=bulk_removal,
+                             removal_hits_df=removal_hits_df)
 
     # n_segments: read-side cursor count per term grows with live
     # segments; it drives the auto-compaction policy (maybe_compact)

@@ -309,8 +309,8 @@ def _build_positions_bucketed(spark: SparkSession, pos_rows: DataFrame,
 
 def decode_positions_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Position-block rows -> (term_id, doc_id, positions array<long>)
-    rows (the distributed decode leg, mirror of
-    scoring.decode_postings_map_in_pandas)."""
+    rows (the distributed decode leg; postings decode through
+    scoring.decode_postings_map_in_arrow)."""
     for pdf in batches:
         if not len(pdf):
             yield pd.DataFrame({"term_id": np.array([], dtype="int64"),

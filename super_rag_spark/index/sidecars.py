@@ -261,7 +261,7 @@ def _fold_vocab(spark: SparkSession, store: IndexStorage, old_epoch: int,
     doc once per term by decoding ``removed_blocks`` (postings blocks
     that may hold a removed doc); ``gains_dir``: a staging vocab whose
     identity rows add their df."""
-    from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_pandas
+    from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_arrow
     from .build import term_id_expr
     from .vocab import VOCAB_SCHEMA, vocab_depth, write_vocab_table
 
@@ -276,8 +276,8 @@ def _fold_vocab(spark: SparkSession, store: IndexStorage, old_epoch: int,
         parts = parts.unionByName(identity_rows(gains_dir))
     if removed is not None:
         loss = (removed_blocks.drop("bucket")
-                .mapInPandas(decode_postings_map_in_pandas,
-                             schema=DECODED_SCHEMA)
+                .mapInArrow(decode_postings_map_in_arrow,
+                            schema=DECODED_SCHEMA)
                 .join(removed, "doc_id", "left_semi")
                 .groupBy("term_id")
                 .agg(F.count(F.lit(1)).alias("n_lost")))

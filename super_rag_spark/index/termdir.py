@@ -8,10 +8,15 @@ files (one per segment run), hold its term_id; each row group is read
 from disk at most once per epoch (sorted by term_id on load if a writer
 left it out of order), and the term's blocks are a searchsorted slice
 of it. So a cold term costs one row-group read per epoch, shared by
-every term of that row group. ``slices`` and ``block_rows`` take term
-ids already known to be in the vocabulary (their callers resolved df),
-so they read no term_stats; a caller drops OOV terms through ``dfs``
-first, and an OOV term then reads no postings.
+every term of that row group.
+
+A block has one in-memory format, the Arrow row of its postings table:
+``slices`` hands out (row group, start, stop) ranges whose encoded
+bytes the driver decodes in place, and ``block_batches`` the same rows
+as one record batch per term (WAND's input). Both take term ids already
+known to be in the vocabulary (their callers resolved df), so they read
+no term_stats; a caller drops OOV terms through ``dfs`` first, and an
+OOV term then reads no postings.
 
 ``Snapshot.terms`` reads through the engine's cache; a Spark task
 builds its own directory with a task-local cache.
@@ -28,13 +33,12 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
+from ..codec import ENC_COLS, binary_buffers
 from .storage import bucket_of_term_id
 
 _BLOCK_COLS = ["term_id", "salt", "seg", "block_id", "n", "first_doc_id",
                "last_doc_id", "docs_enc", "tfs_enc", "dls_enc",
                "block_max_tf", "block_min_dl"]
-
-ENC_COLS = ("docs_enc", "tfs_enc", "dls_enc")
 
 _TERM_STATS_COLS = pa.schema([("term_id", pa.int64()), ("df", pa.int64())])
 
@@ -48,8 +52,7 @@ class _Cache:
     insert evicts least-recently-used entries of any kind until the
     total fits, but never the entry being inserted.
 
-    Kinds: ``dec`` (term -> decoded postings), ``wand`` (term -> its
-    block rows as dicts, for ``method="wand"``), ``rg`` ((bucket, file,
+    Kinds: ``dec`` (term -> decoded postings), ``rg`` ((bucket, file,
     row group) -> a postings row group as Arrow columns), ``dir``
     (bucket -> its postings files and their row-group term_id ranges),
     ``stats`` (bucket -> its term_stats as sorted arrays), ``pos``
@@ -143,17 +146,6 @@ def _term_id_ranges(path: str) -> tuple[np.ndarray, np.ndarray]:
     return np.array(lo, dtype=np.int64), np.array(hi, dtype=np.int64)
 
 
-def _binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(value offsets, value bytes) of a binary Arrow array as NumPy
-    views: row i's bytes are ``data[off[i]:off[i + 1]]``."""
-    _, offsets, data = arr.buffers()
-    if offsets is None or data is None:  # no rows, or only empty values
-        return np.zeros(len(arr) + 1, dtype=np.int64), np.empty(0, np.uint8)
-    dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    off = np.frombuffer(offsets, dtype=dtype)[arr.offset:arr.offset + len(arr) + 1]
-    return off, np.frombuffer(data, dtype=np.uint8)
-
-
 def _row_group_of(tbl: pa.Table) -> _RowGroup:
     """A read row group as a _RowGroup, sorted by term_id (stably, once,
     when a writer left it out of order): terms are sliced out of it by
@@ -166,7 +158,7 @@ def _row_group_of(tbl: pa.Table) -> _RowGroup:
         batch = batch.take(np.argsort(tid, kind="stable"))
         tid = batch.column("term_id").to_numpy()
     return _RowGroup(batch, tid, batch.column("n").to_numpy(),
-                     tuple(_binary_buffers(batch.column(c))
+                     tuple(binary_buffers(batch.column(c))
                            for c in ENC_COLS))
 
 
@@ -219,16 +211,17 @@ class TermDirectory:
                 out[tid] = parts
         return out
 
-    def block_rows(self, term_ids) -> dict[int, list[dict]]:
-        """Each term's block rows as dicts sorted by first_doc_id
-        (wand_topk's input), converted on every call. ``term_ids`` are
-        in the vocabulary, as for ``slices``."""
-        out: dict[int, list[dict]] = {}
+    def block_batches(self, term_ids) -> dict[int, pa.RecordBatch]:
+        """Each term's block rows as one record batch, the cached
+        slices of ``slices`` joined (a slice of one row group is no
+        copy). Rows are in segment file order. ``term_ids`` are in the
+        vocabulary, as for ``slices``."""
+        out: dict[int, pa.RecordBatch] = {}
         for tid, parts in self.slices(term_ids).items():
-            rows = [row for rg, s, e in parts
-                    for row in rg.batch.slice(s, e - s).to_pylist()]
-            rows.sort(key=lambda r: r["first_doc_id"])
-            out[tid] = rows
+            batches = [rg.batch.slice(s, e - s) for rg, s, e in parts]
+            out[tid] = batches[0] if len(batches) == 1 else (
+                pa.Table.from_batches(batches).combine_chunks()
+                .to_batches()[0])
         return out
 
     def _directory(self, bucket: int) -> _Directory:

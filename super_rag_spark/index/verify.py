@@ -41,7 +41,7 @@ from .storage import IndexStorage
 
 def verify_index(spark: SparkSession, index_dir: str,
                  max_errors: int = 20) -> dict:
-    from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_pandas
+    from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_arrow
 
     store = IndexStorage(index_dir)
     report: dict = {"index": index_dir, "ok": True, "errors": []}
@@ -65,6 +65,7 @@ def verify_index(spark: SparkSession, index_dir: str,
         return report
 
     ds = store.doc_stats(spark).cache()
+    dec = None
     try:
         n_docs = ds.count()
         report["n_docs"] = n_docs
@@ -82,8 +83,8 @@ def verify_index(spark: SparkSession, index_dir: str,
         # block-level metadata checks ride the decode: the decoder
         # raises on malformed varints, so a clean pass proves payloads
         dec = (blocks.drop("bucket")
-               .mapInPandas(decode_postings_map_in_pandas,
-                            schema=DECODED_SCHEMA).cache())
+               .mapInArrow(decode_postings_map_in_arrow,
+                           schema=DECODED_SCHEMA).cache())
         report["n_postings"] = dec.count()
 
         counts = dec.groupBy("term_id").agg(F.count(F.lit(1)).alias("n"))
@@ -159,10 +160,8 @@ def verify_index(spark: SparkSession, index_dir: str,
                     f"term_stats {r['df']}")
     finally:
         ds.unpersist()
-        try:
+        if dec is not None:
             dec.unpersist()
-        except Exception:
-            pass
 
     tomb = store.tombstones(spark)
     report["pending_tombstones"] = 0 if tomb is None else tomb.count()

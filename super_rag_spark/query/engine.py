@@ -6,7 +6,8 @@
 - topk()         the same query on the driver: NumPy scoring over the
                  cached decoded postings or block-max WAND over the
                  encoded blocks (rank-identical), both fed by the
-                 snapshot's term directory (index/termdir.py)
+                 snapshot's term directory (index/termdir.py) from the
+                 Arrow row groups it caches
 - delete_urls()  tombstone append (its delete endpoint); postings are
                  cleaned at the next merge and masked at query time
 - summary routing: topk-style queries starting with "summarize" run on
@@ -20,7 +21,9 @@ uncached terms' Σdf exceeds ``driver_df_budget`` it counts one
 plan, under the same snapshot, instead of decoding O(df) postings on
 the driver. The missed terms of a query decode in one
 ``codec.decode_blocks_batch`` call, straight from the Arrow varint
-buffers of the row groups the term directory holds.
+buffers of the row groups the term directory holds; ``method="wand"``
+takes the same rows as one record batch per term, sliced from those
+row groups on each call, and decodes only the blocks it cannot skip.
 """
 
 from __future__ import annotations
@@ -35,7 +38,7 @@ from pyspark.sql import functions as F
 from ..analysis import term_id_for, tokenize
 from ..index.build import build_index, doc_id_expr
 from ..index.storage import IndexStorage, Snapshot, bucket_of_term_id
-from ..index.termdir import ENC_COLS, TermDirectory, _Cache
+from ..index.termdir import TermDirectory, _Cache
 from .scoring import doc_frame, score_query_batch, score_query_batch_wand
 from .wand import vectorized_topk_arrays, wand_topk
 
@@ -267,31 +270,6 @@ class BM25Engine:
             self._cache.put(key, dataset)
         return dataset
 
-    def _wand_blocks(self, snap: Snapshot, terms: list[str]
-                     ) -> dict[str, tuple[int, list[dict]]]:
-        """``method="wand"``'s input, ``{term: (df, block rows)}``: the
-        term directory's block rows, converted once and cached per term
-        (kind ``wand``). df is the sum of block n over the term's
-        blocks; OOV terms are absent."""
-        out: dict[str, tuple[int, list[dict]]] = {}
-        missing: dict[str, int] = {}  # term -> term_id
-        for t in terms:
-            hit = self._cache.get((snap.epoch, "wand", t))
-            if hit is not None:
-                out[t] = hit
-            else:
-                missing[t] = term_id_for(t)
-        # block_rows takes in-vocabulary ids: df from the cached stats
-        dfs = snap.terms.dfs(missing.values())
-        missing = {t: tid for t, tid in missing.items() if dfs.get(tid)}
-        rows = snap.terms.block_rows(missing.values())
-        for t, tid in missing.items():
-            if tid in rows:
-                out[t] = (sum(r["n"] for r in rows[tid]), rows[tid])
-                self._cache.put((snap.epoch, "wand", t), out[t], sum(
-                    len(r[c]) for r in rows[tid] for c in ENC_COLS))
-        return out
-
     def _load_term_arrays(self, snap: Snapshot, terms: list[str]) -> dict:
         """Decoded per-term postings {term: (df, docs, tfs, dls)}, docs
         sorted ascending, through the cache; OOV terms are absent. The
@@ -299,7 +277,7 @@ class BM25Engine:
         ``deleted`` (see Snapshot.bm25), so deletes keep the cache. The
         missed terms decode together, in one call, straight from the
         byte ranges their row-group slices span."""
-        from ..codec import EncodedBlocks, decode_blocks_batch
+        from ..codec import ENC_COLS, EncodedBlocks, decode_blocks_batch
 
         out: dict = {}
         missing: dict[str, int] = {}  # term -> term_id
@@ -344,15 +322,13 @@ class BM25Engine:
         return {t: dfs.get(term_id_for(t), 0) for t in terms}
 
     def _uncached_df_total(self, snap: Snapshot, terms: list[str]) -> int:
-        """Σdf of the terms the driver does not hold yet, decoded or as
-        ``wand`` block rows — the postings volume a driver-side load
-        would actually pull. A cached row group does not count: it holds
-        every term of its bucket, and a head term among them still
-        decodes O(df) postings. df comes from the term_stats arrays; an
-        OOV term reads nothing."""
+        """Σdf of the terms the driver does not hold decoded — the
+        postings volume a driver-side load would actually pull. A cached
+        row group does not count: it holds every term of its bucket, and
+        a head term among them still decodes O(df) postings. df comes
+        from the term_stats arrays; an OOV term reads nothing."""
         missing = [t for t in terms
-                   if (snap.epoch, "dec", t) not in self._cache
-                   and (snap.epoch, "wand", t) not in self._cache]
+                   if (snap.epoch, "dec", t) not in self._cache]
         return sum(self._term_dfs(snap, missing).values())
 
     def warm(self) -> int:
@@ -421,7 +397,10 @@ class BM25Engine:
                 k=k, candidates=(None if allowed is None
                                  else doc_frame(self.spark, allowed))))
         if method == "wand":
-            blocks = self._wand_blocks(snap, terms)
+            dfs = snap.terms.dfs(map(term_id_for, terms))
+            by_tid = snap.terms.block_batches(dfs)
+            blocks = {t: (dfs[tid], by_tid[tid]) for t in terms
+                      if (tid := term_id_for(t)) in by_tid}
             return _TOPK_METHODS["wand"](
                 blocks, k=k, allowed=allowed, approx=approx,
                 **snap.bm25) if blocks else []
@@ -431,25 +410,21 @@ class BM25Engine:
         return vectorized_topk_arrays(
             arrays, k=k, candidates=allowed, **snap.bm25) if arrays else []
 
-    def topk(self, query: str, k: int = 10, use_wand: bool | None = None,
-             method: str = "vectorized",
+    def topk(self, query: str, k: int = 10, method: str = "vectorized",
              approx: float = 1.0) -> list[tuple[int, float]]:
         """Single-query top-k on the driver (low-latency path).
         A query whose first token starts with "summar" drops that token
         and runs on the summary index when one exists (see _route).
         ``method="vectorized"`` scores the cached decoded postings,
         ``"wand"`` skips blocks on the encoded ones; both return the
-        same ranking and scores (asserted in tests). ``use_wand`` is the
-        older switch: True means "wand", False "vectorized". Pending
-        deletes are masked per query on either path.
+        same ranking and scores (asserted in tests). Pending deletes are
+        masked per query on either path.
         ``approx`` > 1.0 (wand only) enables bounded-error early
         termination: skipped docs provably score < approx * the
         returned k-th score. A query over the driver df budget
         (_over_budget) runs the EXACT distributed WAND plan instead —
         ``approx`` is ignored there (early termination is a driver-path
         device)."""
-        if use_wand is not None:  # back-compat boolean switch
-            method = "wand" if use_wand else "vectorized"
         # argument validation BEFORE the budget fallback (ADVICE r4):
         # an invalid combination must raise identically whether or not
         # the query happens to exceed the driver budget

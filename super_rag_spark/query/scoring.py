@@ -14,7 +14,8 @@ the plan raise (the old epoch's files are gone), never mix two epochs.
 Plan shape (batch of queries):
   decoded_postings: postings scan of the snapshot's epoch
       (bucket partition-pruned + term row-group filtered)
-    -> mapInPandas block decode (NumPy varint)      [1 -> n rows]
+    -> mapInArrow block decode (NumPy varint over   [1 -> n rows]
+       the Arrow batch's binary buffers)
     -> broadcast anti-join with the pending tombstones
   -> broadcast join with query terms (df, idf)      [no shuffle]
   -> BM25 contribution column (pure Catalyst expr)
@@ -23,8 +24,10 @@ Plan shape (batch of queries):
 
 The WAND plan (score_query_batch_wand) shuffles only (query, salt
 range, term) spec rows, with any filter's candidate docs beside them;
-its tasks take encoded blocks of the same epoch from ``snap.terms``,
-broadcast, or read them through a term directory of their own.
+its tasks take each term's encoded blocks of the same epoch as an Arrow
+record batch: a span of one compact batch the driver takes from
+``snap.terms`` and broadcasts, or read through a term directory of
+their own.
 
 Determinism: contributions are collected and summed in term-ascending
 order (sort_array over struct(term, contrib)) so float addition order
@@ -38,11 +41,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..analysis import idf, term_id_for, tokenize
-from ..codec import decode_blocks_batch
+from ..codec import decode_blocks_batch, encoded_blocks
 from ..index.storage import Snapshot, bucket_of_term_id
 
 DECODED_SCHEMA = "term_id long, doc_id long, tf int, dl int"
@@ -51,21 +55,16 @@ DECODED_SCHEMA = "term_id long, doc_id long, tf int, dl int"
 WAND_BROADCAST_BYTES = 64 << 20
 
 
-def decode_postings_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Block rows -> exploded (term, doc_id, tf, dl) posting rows."""
-    for pdf in batches:
-        if not len(pdf):
-            yield pd.DataFrame({c: np.array([], dtype="int64")
-                                for c in ["term_id", "doc_id", "tf", "dl"]})
-            continue
-        blocks = pdf[["docs_enc", "tfs_enc", "dls_enc", "n"]].to_dict("records")
-        docs, tfs, dls, ns = decode_blocks_batch(blocks)
-        yield pd.DataFrame({
-            "term_id": np.repeat(pdf["term_id"].to_numpy(), ns),
-            "doc_id": docs,
-            "tf": tfs.astype("int32"),
-            "dl": dls.astype("int32"),
-        })
+def decode_postings_map_in_arrow(
+        batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Block rows -> exploded (term_id, doc_id, tf, dl) posting rows
+    (DECODED_SCHEMA), decoded from each batch's binary buffers."""
+    for batch in batches:
+        docs, tfs, dls, ns = decode_blocks_batch(encoded_blocks(batch))
+        yield pa.RecordBatch.from_arrays(
+            [np.repeat(batch.column("term_id").to_numpy(), ns), docs,
+             tfs.astype(np.int32), dls.astype(np.int32)],
+            names=["term_id", "doc_id", "tf", "dl"])
 
 
 def analyze_queries(queries: list[dict]) -> pd.DataFrame:
@@ -124,7 +123,7 @@ def decoded_postings(spark: SparkSession, snap: Snapshot,
         snap.store.postings(spark, snap.epoch)
         .where(F.col("bucket").isin(buckets))
         .where(F.col("term_id").isin(term_ids))
-        .mapInPandas(decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
+        .mapInArrow(decode_postings_map_in_arrow, schema=DECODED_SCHEMA)
     )
     if len(snap.deleted):
         decoded = decoded.join(doc_frame(spark, snap.deleted), "doc_id",
@@ -278,9 +277,10 @@ def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
 
     Only (query, range, term) spec rows (a few bytes each) are
     shuffled. When the batch's blocks fit WAND_BROADCAST_BYTES the
-    driver slices them from ``snap.terms`` and broadcasts them;
-    otherwise each task reads its partition's distinct terms' blocks
-    once, through a term directory of its own over the same epoch.
+    driver takes them from ``snap.terms`` and broadcasts them as one
+    compact record batch; otherwise each task reads its partition's
+    distinct terms' blocks once, through a term directory of its own
+    over the same epoch.
 
     ``candidates``: optional (doc_id) frame (P7 metadata filter). Each
     candidate doc rides the same shuffle as the spec rows, routed to
@@ -363,10 +363,17 @@ def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
     # compute with no per-task read duplication, which keeps the
     # N -> 4N query-scaling ratio flat. Over-budget batches (head terms
     # at 10^12-doc scale) read per partition instead.
+    # One batch of every term's rows, and each term's span of it: a take
+    # (a slice of a cached row group pickles all of the row group).
     bb = None
     est_blk_bytes = int(qterms_pdf.drop_duplicates("term_id")["df"].sum()) * 6
     if est_blk_bytes <= WAND_BROADCAST_BYTES:
-        bb = spark.sparkContext.broadcast(snap.terms.block_rows(term_ids))
+        by_tid = snap.terms.block_batches(term_ids)
+        tbl = pa.Table.from_batches(list(by_tid.values()))
+        ends = np.cumsum([b.num_rows for b in by_tid.values()]).tolist()
+        bb = spark.sparkContext.broadcast((
+            tbl.take(np.arange(tbl.num_rows)).combine_chunks().to_batches()[0],
+            dict(zip(by_tid, zip([0] + ends[:-1], ends)))))
 
     def run_part(batches):
         from ..index.termdir import TermDirectory, _Cache
@@ -378,9 +385,14 @@ def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
             return
         is_spec = pdf["term"].notna().to_numpy()
         doc_ids = pdf["doc_id"].to_numpy()
-        blocks_by_tid = bb.value if bb is not None else TermDirectory(
-            store, epoch, n_buckets, _Cache()).block_rows(
-            pdf.loc[is_spec, "term_id"].unique().tolist())
+        if bb is not None:
+            rows, spans = bb.value
+            blocks_by_tid = {tid: rows.slice(a, z - a)
+                             for tid, (a, z) in spans.items()}
+        else:
+            blocks_by_tid = TermDirectory(
+                store, epoch, n_buckets, _Cache()).block_batches(
+                pdf.loc[is_spec, "term_id"].unique().tolist())
         groups = pdf.groupby(["query_id", "range_id"]).indices
         for (qid, rid), idx in groups.items():
             spec = idx[is_spec[idx]]
@@ -389,10 +401,9 @@ def score_query_batch_wand(spark: SparkSession, snap: Snapshot,
                 allowed = np.unique(doc_ids[idx[~is_spec[idx]]])
                 if not len(allowed):
                     continue  # no candidate doc in this range
-            tb = {pdf.at[i, "term"]: (
-                int(pdf.at[i, "df"]),
-                blocks_by_tid.get(int(pdf.at[i, "term_id"]), []))
-                for i in spec.tolist()}
+            tb = {pdf.at[i, "term"]: (int(pdf.at[i, "df"]),
+                                      blocks_by_tid[int(pdf.at[i, "term_id"])])
+                  for i in spec.tolist()}
             doc_range = (None if rid < 0
                          else (int(rid) << shift, (int(rid) + 1) << shift))
             hits = wand_topk(tb, n_docs, avgdl, k, k1=k1, b=b,

@@ -15,7 +15,9 @@ path over decoded arrays, and the block-max WAND top-k.
 - :func:`wand_topk` is the range-vectorized block-max WAND over ENCODED
   blocks (``method="wand"``): instead of scoring every posting it keeps a
   running threshold (theta = k-th best score) and never decodes the
-  blocks whose upper bound cannot beat it. It runs on the driver and
+  blocks whose upper bound cannot beat it. It reads each term's block
+  rows as one Arrow record batch, bounds from its metadata columns, and
+  decodes only the blocks it cannot skip. It runs on the driver and
   inside the distributed per-salt-range plan (query/scoring.py).
 - The per-posting cursor WAND and the brute-force scorer that
   tests/test_wand.py checks :func:`wand_topk` against live in
@@ -29,9 +31,10 @@ asc) therefore always get fully evaluated.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 from ..analysis import B, K1, idf
-from ..codec import decode_blocks_batch
+from ..codec import decode_blocks_batch, encoded_blocks
 
 _EPS = 1e-9
 
@@ -48,16 +51,17 @@ def bm25_contrib(idf_val: float, tfs, dls, avgdl: float, k1: float = K1,
     return idf_val * (tfs * (k1 + 1.0)) / (tfs + k1 * ((1.0 - b) + b * dls / avgdl))
 
 
-def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
-              avgdl: float, k: int, k1: float = K1, b: float = B,
+def wand_topk(term_blocks: dict[str, tuple[int, pa.RecordBatch]],
+              n_docs: int, avgdl: float, k: int, k1: float = K1, b: float = B,
               doc_range: tuple[int, int] | None = None,
               allowed: np.ndarray | None = None,
               approx: float = 1.0,
               deleted: np.ndarray | None = None) -> list[tuple[int, float]]:
     """Exact block-max top-k, RANGE-VECTORIZED (r4).
 
-    ``term_blocks``: {term: (df, [block rows])}. Blocks may span several
-    segments (``seg``); each (term, seg) run is doc-sorted, and a doc
+    ``term_blocks``: {term: (df, block rows)}, the rows a record batch
+    of the postings table in any order. Blocks may span several
+    segments (``seg``); each (term, seg) run is doc-disjoint, and a doc
     lives in exactly one segment per term. Returns [(doc_id, score)]
     ranked by (round(score, 9) desc, doc_id asc), each score summed in
     term-ascending (oracle) order. Same contract as the per-posting
@@ -88,40 +92,41 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
     """
     lo_w, hi_w = doc_range if doc_range is not None else (None, None)
 
-    # ---- per-(term, seg) runs with per-block bounds
+    # ---- per-(term, seg) runs: row indices into the term's batch,
+    # doc-sorted, with per-block bounds
     runs: list[dict] = []
-    bounds: list[np.ndarray] = []
-    for t, (df, blks) in sorted(term_blocks.items()):
-        by_seg: dict[int, list[dict]] = {}
-        for blk in blks:
-            by_seg.setdefault(int(blk.get("seg", 0)), []).append(blk)
+    for t, (df, batch) in sorted(term_blocks.items()):
+        if not batch.num_rows:
+            continue
+        col = {c: batch.column(c).to_numpy() for c in (
+            "seg", "first_doc_id", "last_doc_id", "block_max_tf",
+            "block_min_dl")}
+        rows = np.lexsort((col["first_doc_id"], col["seg"]))
+        if lo_w is not None:
+            rows = rows[(col["last_doc_id"][rows] >= lo_w)
+                        & (col["first_doc_id"][rows] < hi_w)]
+        if not len(rows):
+            continue
+        firsts = col["first_doc_id"][rows]
+        lasts = col["last_doc_id"][rows]
+        if lo_w is not None:
+            firsts = np.maximum(firsts, lo_w)
+            lasts = np.minimum(lasts, hi_w - 1)
         idf_val = idf(n_docs, df)
-        for seg in sorted(by_seg):
-            run = sorted(by_seg[seg], key=lambda r: r["first_doc_id"])
-            if lo_w is not None:
-                run = [blk for blk in run if blk["last_doc_id"] >= lo_w
-                       and blk["first_doc_id"] < hi_w]
-            if not run:
-                continue
-            firsts = np.array([blk["first_doc_id"] for blk in run],
-                              dtype=np.int64)
-            lasts = np.array([blk["last_doc_id"] for blk in run],
-                             dtype=np.int64)
-            if lo_w is not None:
-                firsts = np.maximum(firsts, lo_w)
-                lasts = np.minimum(lasts, hi_w - 1)
-            ubs = bm25_contrib(idf_val, [blk["block_max_tf"] for blk in run],
-                               [blk["block_min_dl"] for blk in run],
-                               avgdl, k1, b)
-            runs.append({"term": t, "df": df, "idf": idf_val, "blocks": run,
-                         "firsts": firsts, "lasts": lasts, "ubs": ubs})
-            bounds.append(firsts)
-            bounds.append(lasts + 1)
+        ubs = bm25_contrib(idf_val, col["block_max_tf"][rows],
+                           col["block_min_dl"][rows], avgdl, k1, b)
+        segs = col["seg"][rows]
+        cuts = np.flatnonzero(segs[1:] != segs[:-1]) + 1
+        for a, z in zip([0, *cuts.tolist()], [*cuts.tolist(), len(rows)]):
+            runs.append({"term": t, "idf": idf_val, "batch": batch,
+                         "rows": rows[a:z], "firsts": firsts[a:z],
+                         "lasts": lasts[a:z], "ubs": ubs[a:z]})
     if not runs:
         return []
 
     # ---- elementary ranges [edges[i], edges[i+1]) + per-range bounds
-    edges = np.unique(np.concatenate(bounds))
+    edges = np.unique(np.concatenate(
+        [r["firsts"] for r in runs] + [r["lasts"] + 1 for r in runs]))
     n_ranges = len(edges) - 1
     if n_ranges <= 0:  # single doc id across all blocks
         edges = np.array([edges[0], edges[0] + 1], dtype=np.int64)
@@ -132,13 +137,20 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
         term_runs.setdefault(r["term"], []).append(r)
     terms = sorted(term_runs)
     for term in terms:
+        # each block's bound over the ranges it spans, (range, bound)
+        # pairs expanded by repeat: a run's blocks are disjoint, so a
+        # term yields at most one pair per range and run
+        tr = term_runs[term]
+        a_idx = np.searchsorted(
+            edges, np.concatenate([r["firsts"] for r in tr]), "right") - 1
+        b_idx = np.searchsorted(
+            edges, np.concatenate([r["lasts"] for r in tr]), "right") - 1
+        span = b_idx - a_idx + 1
+        idx = np.repeat(a_idx - np.cumsum(span) + span, span) + np.arange(
+            int(span.sum()))
         tarr = np.zeros(n_ranges, dtype=np.float64)
-        for run in term_runs[term]:
-            a_idx = np.searchsorted(edges, run["firsts"], side="right") - 1
-            b_idx = np.searchsorted(edges, run["lasts"], side="right") - 1
-            for i in range(len(run["blocks"])):
-                s = slice(a_idx[i], b_idx[i] + 1)
-                np.maximum(tarr[s], run["ubs"][i], out=tarr[s])
+        np.maximum.at(tarr, idx, np.repeat(
+            np.concatenate([r["ubs"] for r in tr]), span))
         range_ub += tarr  # a doc gets ONE seg's posting per term -> max
 
     # ---- two passes. Pass 1 seeds theta by fully evaluating the top-S
@@ -192,12 +204,13 @@ def wand_topk(term_blocks: dict[str, tuple[int, list[dict]]], n_docs: int,
             hits = np.flatnonzero(i1s > i0s)
             if not len(hits):
                 continue
-            mask = np.zeros(len(run["blocks"]), dtype=bool)
-            for j in hits.tolist():
-                mask[i0s[j]:i1s[j]] = True
-            sel = np.flatnonzero(mask).tolist()
+            # the blocks any hit interval overlaps: a +1/-1 per span
+            cover = np.zeros(len(run["rows"]) + 1, dtype=np.int64)
+            np.add.at(cover, i0s[hits], 1)
+            np.add.at(cover, i1s[hits], -1)
+            sel = run["rows"][np.cumsum(cover[:-1]) > 0]
             docs, tfs, dls, _ns = decode_blocks_batch(
-                [run["blocks"][i] for i in sel])
+                encoded_blocks(run["batch"].take(sel)))
             s0s = np.searchsorted(docs, los_a[hits], side="left")
             s1s = np.searchsorted(docs, his_a[hits], side="left")
             for s0, s1 in zip(s0s.tolist(), s1s.tolist()):

@@ -308,7 +308,7 @@ def test_facet_counts_plan_reads_only_index(spark, tmp_path):
     # postings leg: the block decoder; doc_stats leg: a parquet scan
     # projecting (doc_id, url) — path names truncate under long tmp
     # dirs, so assert on plan features, not directory names
-    assert "decode_postings_map_in_pandas" in plan
+    assert "decode_postings_map_in_arrow" in plan
     assert "struct<doc_id:bigint,url:string>" in plan
 
 

@@ -4,8 +4,9 @@ reference's content-addressed upsert). An input in fewer splits than
 cores is spread over every core before extraction, and the files the
 build writes do not depend on it: postings and term_stats bytes are the
 same per bucket on both postings paths, and an append of a one-row-group
-delta answers as the oracle. build_index names its Spark jobs by phase
-and leaves the caller's job description as it found it."""
+delta answers as the oracle. build_index and merge_append name their
+Spark jobs by phase and leave the caller's job description as they
+found it."""
 
 import os
 
@@ -17,6 +18,7 @@ from super_rag_spark.index.build import (build_index, build_postings_bucketed,
                                          spread_input, term_id_expr,
                                          tokens_from_text)
 from super_rag_spark.index.merge import merge_append
+from super_rag_spark.index.storage import IndexStorage
 from super_rag_spark.oracle import build_oracle
 from super_rag_spark.query.engine import BM25Engine
 
@@ -241,3 +243,28 @@ def test_build_names_its_jobs_and_restores_the_description(
         assert sc.getLocalProperty("spark.job.description") == caller
         assert names == ["build:extract", "build:doc_stats",
                          "build:postings", "build:stats"]
+
+
+def test_append_names_its_jobs_and_restores_the_description(
+        spark, split_inputs, tmp_path, monkeypatch):
+    """merge_append names its phases' jobs in order, after the staging
+    build's own, and leaves the caller's job description exactly as it
+    found it, set or unset. The delta re-ingests two indexed docs:
+    upserts, which the probe finds and a bucket rewrite removes."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.read.parquet(split_inputs["many"]), root, **CFG)
+    names = []
+    set_description = sc.setJobDescription
+    monkeypatch.setattr(sc, "setJobDescription",
+                        lambda v: names.append(v) or set_description(v))
+    for epoch, caller in enumerate(("caller's phase", None), start=1):
+        sc.setLocalProperty("spark.job.description", caller)
+        names.clear()
+        merge_append(spark, root, spark.read.parquet(split_inputs["two"]))
+        manifest = IndexStorage(root).read_manifest()
+        assert (manifest["epoch"], manifest["n_docs"]) == (epoch, 240)
+        assert sc.getLocalProperty("spark.job.description") == caller
+        assert names == ["build:extract", "build:doc_stats",
+                         "build:postings", "append:sidecars", "append:probe",
+                         "append:rewrite", "append:stats", "append:sidecars"]

@@ -55,28 +55,73 @@ def test_varint_roundtrip_many_passes():
             decode_varint(bad, count)
 
 
-def test_decode_blocks_batch_from_buffers():
-    """Blocks laid end to end as EncodedBlocks decode to the same arrays
-    as the block dicts and as per-block decode_block."""
-    from super_rag_spark.codec import EncodedBlocks, decode_blocks_batch
-
-    rng = np.random.default_rng(5)
+def _random_blocks(seed: int, count: int) -> list[dict]:
+    rng = np.random.default_rng(seed)
     blocks = []
-    for n in rng.integers(1, 130, 40).tolist():
+    for n in rng.integers(1, 130, count).tolist():
         ids = np.sort(rng.choice(2**60, n, replace=False)).astype(np.int64)
         enc = encode_block(ids, rng.integers(1, 50, n), rng.integers(1, 9000, n))
         blocks.append(dict(zip(("docs_enc", "tfs_enc", "dls_enc"), enc), n=n))
-    want = [np.concatenate(a) for a in zip(*(
+    return blocks
+
+
+def _decoded_one_by_one(blocks: list[dict]) -> list[np.ndarray]:
+    return [np.concatenate(a) for a in zip(*(
         decode_block(b["docs_enc"], b["tfs_enc"], b["dls_enc"], b["n"])
         for b in blocks))]
+
+
+def test_decode_blocks_batch_from_buffers():
+    """Blocks laid end to end as EncodedBlocks, and the same blocks as
+    an Arrow record batch, decode to the same arrays as per-block
+    decode_block."""
+    import pyarrow as pa
+
+    from super_rag_spark.codec import (EncodedBlocks, decode_blocks_batch,
+                                       encoded_blocks)
+
+    blocks = _random_blocks(5, 40)
+    want = _decoded_one_by_one(blocks)
     buffers = EncodedBlocks(
         *(np.frombuffer(b"".join(b[c] for b in blocks), dtype=np.uint8)
           for c in ("docs_enc", "tfs_enc", "dls_enc")),
         np.array([b["n"] for b in blocks], dtype=np.int32))
-    for got in (decode_blocks_batch(blocks), decode_blocks_batch(buffers)):
+    batch = encoded_blocks(pa.RecordBatch.from_pylist(blocks))
+    for got in (decode_blocks_batch(buffers), decode_blocks_batch(batch)):
         for g, w in zip(got[:3], want):
             assert np.array_equal(g, w)
         assert got[3].tolist() == [b["n"] for b in blocks]
+
+
+def test_encoded_blocks_of_a_slice():
+    """A slice of a record batch, at a nonzero offset and of binary and
+    large_binary columns, decodes as per-block decode_block over exactly
+    its own rows, and its streams are views of the parent's buffers."""
+    import pyarrow as pa
+
+    from super_rag_spark.codec import decode_blocks_batch, encoded_blocks
+
+    blocks = _random_blocks(11, 30)
+    batch = pa.RecordBatch.from_pylist(blocks)
+    large = batch.cast(pa.schema([
+        pa.field(f.name, pa.large_binary() if f.type == pa.binary()
+                 else f.type) for f in batch.schema]))
+    for parent in (batch, large):
+        for start, length in ((7, 12), (29, 1), (0, 30), (13, 0)):
+            part = parent.slice(start, length)
+            assert part.column("docs_enc").offset == start
+            enc = encoded_blocks(part)
+            want = (_decoded_one_by_one(blocks[start:start + length])
+                    if length else [np.empty(0, np.int64)] * 3)
+            got = decode_blocks_batch(enc)
+            for g, w in zip(got[:3], want):
+                assert np.array_equal(g, w)
+            assert got[3].tolist() == [
+                b["n"] for b in blocks[start:start + length]]
+            if length:
+                data = parent.column("docs_enc").buffers()[2]
+                assert np.shares_memory(
+                    enc.docs_enc, np.frombuffer(data, dtype=np.uint8))
 
 
 def test_delta_is_compact():
@@ -88,15 +133,15 @@ def test_delta_is_compact():
 
 
 def test_vectorized_block_builder_bit_identity():
-    """r3 perf: _build_blocks_np batch-encodes the whole Arrow chunk in
-    one vectorized pass and carves per-block buffers out of the single
-    LEB128 stream. Every carved buffer, boundary, and stat must be
+    """r3 perf: _build_blocks_arrays batch-encodes the whole Arrow chunk
+    in one vectorized pass and carves per-block buffers out of the
+    single LEB128 stream. Every carved buffer, boundary, and stat must be
     bit-identical to per-block encode_block over the same groups."""
     import numpy as np
     import pandas as pd
 
     from super_rag_spark.codec import encode_block
-    from super_rag_spark.index.build import _build_blocks_np
+    from super_rag_spark.index.build import _build_blocks_arrays
 
     rng = np.random.default_rng(7)
     rows = []
@@ -112,7 +157,10 @@ def test_vectorized_block_builder_bit_identity():
     pdf = pdf.sort_values(["term_id", "salt", "doc_id"], ignore_index=True)
 
     block_size, n_buckets, seg = 128, 8, 2
-    got = _build_blocks_np(pdf, block_size, n_buckets, seg=seg)
+    got = _build_blocks_arrays(
+        pdf["term_id"].to_numpy(), pdf["salt"].to_numpy(),
+        pdf["doc_id"].to_numpy(), pdf["tf"].to_numpy(), pdf["dl"].to_numpy(),
+        block_size, n_buckets, seg).to_pandas()
 
     # reference: the pre-vectorization per-group/per-block loop
     exp_rows = []

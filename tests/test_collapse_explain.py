@@ -45,7 +45,7 @@ def rich_engine(spark, tmp_path_factory):
 def _all_matches(eng, qtext):
     """Full exact match set as {doc_id: score} via the scorer itself
     (validated elsewhere) with k >= corpus size."""
-    return dict(eng.topk(qtext, k=10_000, use_wand=False))
+    return dict(eng.topk(qtext, k=10_000, method="vectorized"))
 
 
 def _url_of(spark, eng):
@@ -250,7 +250,7 @@ def test_rescore_topk_formula(spark, rich_engine):
     res = rich_engine.rescore_topk("common storm", k=24, window=24,
                                    weight=0.7)
     assert res
-    base = dict(rich_engine.topk("common storm", k=24, use_wand=False))
+    base = dict(rich_engine.topk("common storm", k=24, method="vectorized"))
     corpus = {doc_id_for_url(r["url"]): tokenize(r["text"])
               for r in _corpus(spark).collect()}
     bonuses = set()

@@ -24,10 +24,10 @@ def test_tf_totals_match_corpus(built_index, oracle_index, spark):
     from pyspark.sql import functions as F
 
     from super_rag_spark.query.scoring import (DECODED_SCHEMA,
-                                               decode_postings_map_in_pandas)
+                                               decode_postings_map_in_arrow)
 
-    decoded = built_index.store.postings(spark).mapInPandas(
-        decode_postings_map_in_pandas, schema=DECODED_SCHEMA)
+    decoded = built_index.store.postings(spark).mapInArrow(
+        decode_postings_map_in_arrow, schema=DECODED_SCHEMA)
     total = decoded.agg(F.sum("tf")).collect()[0][0]
     oracle_total = sum(sum(pl.values()) for pl in oracle_index.postings.values())
     assert total == oracle_total
@@ -35,7 +35,7 @@ def test_tf_totals_match_corpus(built_index, oracle_index, spark):
 
 def test_driver_wand_rank_identity_all_queries(built_index, oracle_index, queries100):
     for q in queries100:
-        got = built_index.topk(q["text"], q["k"], use_wand=True)
+        got = built_index.topk(q["text"], q["k"], method="wand")
         # route analog: oracle has no summary index, compare on stripped text
         qtext = q["text"]
         if qtext.split() and qtext.split()[0].lower().startswith("summar"):
@@ -45,11 +45,11 @@ def test_driver_wand_rank_identity_all_queries(built_index, oracle_index, querie
 
 
 def test_driver_bruteforce_equals_wand(built_index, queries100):
-    """use_wand=False selects method="vectorized": the cached-array
-    scorer and block-max WAND agree exactly, scores included."""
+    """method="vectorized", the cached-array scorer, and
+    method="wand", block-max WAND, agree exactly, scores included."""
     for q in queries100[:40]:
-        w = built_index.topk(q["text"], q["k"], use_wand=True)
-        b = built_index.topk(q["text"], q["k"], use_wand=False)
+        w = built_index.topk(q["text"], q["k"], method="wand")
+        b = built_index.topk(q["text"], q["k"], method="vectorized")
         assert w == b, q["text"]
 
 

@@ -235,27 +235,30 @@ def test_unsorted_bucket_file_fails_the_query(spark, rows, small_index,
 
 def test_cached_row_group_keeps_the_budget(spark, rows, small_index):
     """The driver df budget still fires for a head term whose row group
-    a cold tail term of its bucket has already brought into the cache:
-    the row group holds the head term's blocks, not its decoded
-    postings."""
-    eng = BM25Engine(spark, small_index)
+    a cold tail term of its bucket has already brought into the cache,
+    on both driver methods: the row group holds the head term's blocks,
+    not its decoded postings."""
     oracle = build_oracle(rows[:120])
-    snap = eng._snapshot()
     vocab = sorted({t for _, text in rows[:120] for t in tokenize(text)})
-    dfs = eng._term_dfs(snap, vocab)
-    head = max(vocab, key=lambda t: dfs[t])
-    bucket = bucket_of_term(head, CFG["n_buckets"])
-    tail = next(t for t in vocab if dfs[t] == 1
-                and bucket_of_term(t, CFG["n_buckets"]) == bucket)
-    eng.driver_df_budget = dfs[head] - 1
-    before = eng.driver_fallbacks
-    _assert_oracle(eng.topk(tail, 10), oracle.topk(tail, 10))
-    assert eng.driver_fallbacks == before
-    assert any(kind == "rg" and key[0] == bucket
-               for _, kind, key in eng._cache)
-    _assert_oracle(eng.topk(head, 10), oracle.topk(head, 10))
-    assert eng.driver_fallbacks == before + 1
-    assert (snap.epoch, "dec", head) not in eng._cache
+    for method in ("vectorized", "wand"):
+        eng = BM25Engine(spark, small_index)
+        snap = eng._snapshot()
+        dfs = eng._term_dfs(snap, vocab)
+        head = max(vocab, key=lambda t: dfs[t])
+        bucket = bucket_of_term(head, CFG["n_buckets"])
+        tail = next(t for t in vocab if dfs[t] == 1
+                    and bucket_of_term(t, CFG["n_buckets"]) == bucket)
+        eng.driver_df_budget = dfs[head] - 1
+        before = eng.driver_fallbacks
+        _assert_oracle(eng.topk(tail, 10, method=method),
+                       oracle.topk(tail, 10))
+        assert eng.driver_fallbacks == before, method
+        assert any(kind == "rg" and key[0] == bucket
+                   for _, kind, key in eng._cache), method
+        _assert_oracle(eng.topk(head, 10, method=method),
+                       oracle.topk(head, 10))
+        assert eng.driver_fallbacks == before + 1, method
+        assert (snap.epoch, "dec", head) not in eng._cache, method
 
 
 def test_wand_plan_per_task_feed(spark, rows, tmp_path, monkeypatch):
@@ -276,10 +279,10 @@ def test_wand_plan_per_task_feed(spark, rows, tmp_path, monkeypatch):
         ["semudo muro fuboname", f"{head} gaku", "zzqx123"]
         + [" ".join(vocab[i::41][:3]) for i in range(5)])]
     driver_reads = []
-    block_rows = termdir.TermDirectory.block_rows
-    monkeypatch.setattr(termdir.TermDirectory, "block_rows",
+    block_batches = termdir.TermDirectory.block_batches
+    monkeypatch.setattr(termdir.TermDirectory, "block_batches",
                         lambda self, ids: driver_reads.append(1)
-                        or block_rows(self, ids))
+                        or block_batches(self, ids))
 
     def check(step):
         want = _ranked(eng.query_batch(batch, 10))
@@ -340,11 +343,12 @@ def test_plans_read_no_file_the_engine_holds(spark, rows, small_index,
                            oracle.topk(q, 10))
 
 
-def test_block_rows_read_no_term_stats(spark, rows, small_index, monkeypatch):
-    """``block_rows`` over in-vocabulary ids (the WAND plan's spec rows
-    and broadcast ids) reads postings only: with the term_stats reader
-    patched to raise, a fresh directory returns the same rows as one
-    that may read it."""
+def test_block_batches_read_no_term_stats(spark, rows, small_index,
+                                          monkeypatch):
+    """``block_batches`` over in-vocabulary ids (the WAND plan's spec
+    rows and broadcast ids) reads postings only: with the term_stats
+    reader patched to raise, a fresh directory returns the same rows as
+    one that may read it."""
     snap = BM25Engine(spark, small_index)._snapshot()
     vocab = sorted({t for _, text in rows[:120] for t in tokenize(text)})
     ids = [term_id_for(t) for t in vocab[::7]]
@@ -353,14 +357,52 @@ def test_block_rows_read_no_term_stats(spark, rows, small_index, monkeypatch):
         return termdir.TermDirectory(snap.store, snap.epoch, snap.n_buckets,
                                      termdir._Cache())
 
-    want = directory().block_rows(ids)
+    want = directory().block_batches(ids)
     assert sorted(want) == sorted(ids)
 
     def no_stats(self, bucket):
         raise AssertionError(f"term_stats of bucket {bucket} read")
 
     monkeypatch.setattr(termdir.TermDirectory, "_bucket_dfs", no_stats)
-    assert directory().block_rows(ids) == want
+    assert directory().block_batches(ids) == want
+
+
+def test_wand_broadcast_holds_compact_batches(spark, rows, small_index,
+                                              monkeypatch):
+    """The WAND plan broadcasts its terms' blocks as one compact batch
+    and each term's row span of it: pickled, it is at most twice the
+    terms' block bytes beyond what a zero-row batch pickles, although
+    each term's row group holds many other terms (a slice of one would
+    pickle the whole row group). Checked for a batch of the head term
+    alone and for a batch of many terms."""
+    eng = BM25Engine(spark, small_index)
+    vocab = sorted({t for _, text in rows[:120] for t in tokenize(text)})
+    sc = spark.sparkContext
+    sent = []
+    broadcast = sc.broadcast
+    monkeypatch.setattr(sc, "broadcast",
+                        lambda value: sent.append(value) or broadcast(value))
+    snap = eng._snapshot()
+    terms = snap.terms
+    dfs = eng._term_dfs(snap, vocab)
+    for texts in ([max(vocab, key=dfs.get)],
+                  [" ".join(vocab[i::31][:3]) for i in range(5)]):
+        sent.clear()
+        batch = [{"query_id": i, "text": q} for i, q in enumerate(texts)]
+        got = _ranked(eng.query_batch_wand(batch, 10))
+        want = _ranked(eng.query_batch(batch, 10))
+        assert got and [g[:3] for g in got] == [w[:3] for w in want]
+        assert all(abs(g[3] - w[3]) <= 1e-9 for g, w in zip(got, want))
+        [(blocks, spans)] = sent
+        assert len(spans) == len({t for q in texts for t in tokenize(q)})
+        block_bytes = 0
+        for tid, (a, z) in spans.items():
+            [(rg, s, e)] = terms.slices([tid])[tid]
+            assert rg.batch.num_rows >= 10 * (e - s)  # many terms' blocks
+            assert blocks.slice(a, z - a) == rg.batch.slice(s, e - s)
+            block_bytes += rg.batch.slice(s, e - s).nbytes
+        empty = pickle.dumps(blocks.take(np.arange(0)))
+        assert len(pickle.dumps(sent[0])) - len(empty) <= 2 * block_bytes
 
 
 def test_term_directory_does_not_pickle(spark, small_index):

@@ -1,14 +1,17 @@
 """WAND == brute force == vectorized on randomized corpora
 (FIXTURES.md invariant 4), without Spark — pure codec + scorer. The
 cursor WAND and the brute-force scorer (wand_reference.py) are the
-references."""
+references; they take block dicts, and wand_topk takes the same blocks
+as one Arrow record batch per term."""
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from super_rag_spark.analysis import BLOCK_SIZE
-from super_rag_spark.codec import decode_blocks_batch, encode_block
+from super_rag_spark.codec import (decode_blocks_batch, encode_block,
+                                   encoded_blocks)
 from super_rag_spark.query.wand import vectorized_topk_arrays, wand_topk
 from wand_reference import bruteforce_topk, wand_topk_cursor
 
@@ -27,12 +30,18 @@ def _blocks_for(doc_ids, tfs, dls, n_docs, avgdl, block_size=BLOCK_SIZE):
         d_enc, t_enc, l_enc = encode_block(doc_ids[s:e], tfs[s:e], dls[s:e])
         out.append({
             "docs_enc": d_enc, "tfs_enc": t_enc, "dls_enc": l_enc,
-            "n": e - s, "first_doc_id": int(doc_ids[s]),
+            "n": e - s, "seg": 0, "first_doc_id": int(doc_ids[s]),
             "last_doc_id": int(doc_ids[e - 1]),
             "block_max_tf": int(tfs[s:e].max()),
             "block_min_dl": int(dls[s:e].min()),
         })
     return df, out
+
+
+def _batches(term_blocks):
+    """{term: (df, block dicts)} -> wand_topk's {term: (df, batch)}."""
+    return {t: (df, pa.RecordBatch.from_pylist(bl))
+            for t, (df, bl) in term_blocks.items()}
 
 
 @settings(max_examples=40, deadline=None)
@@ -56,11 +65,11 @@ def test_wand_equals_bruteforce_random(data):
                                            block_size=32)
 
     k = data.draw(st.integers(1, 20))
-    w = wand_topk(term_blocks, n_docs, avgdl, k)
+    w = wand_topk(_batches(term_blocks), n_docs, avgdl, k)
     c = wand_topk_cursor(term_blocks, n_docs, avgdl, k)
     b = bruteforce_topk(term_blocks, n_docs, avgdl, k)
-    arrays = {t: (df, *decode_blocks_batch(bl)[:3])
-              for t, (df, bl) in term_blocks.items()}
+    arrays = {t: (df, *decode_blocks_batch(encoded_blocks(bl))[:3])
+              for t, (df, bl) in _batches(term_blocks).items()}
     v = vectorized_topk_arrays(arrays, n_docs, avgdl, k)
     assert [(d, round(s, 9)) for d, s in w] == [(d, round(s, 9)) for d, s in b]
     assert [(d, round(s, 9)) for d, s in c] == [(d, round(s, 9)) for d, s in b]
@@ -94,8 +103,8 @@ def test_wand_vec_equals_cursor_with_range_and_allowed(data):
         allowed = np.unique(rng.choice(
             all_docs, size=max(1, n_docs // 3), replace=False
         ).astype(np.int64))
-    w = wand_topk(term_blocks, n_docs, 120.0, k, doc_range=(lo, hi),
-                  allowed=allowed)
+    w = wand_topk(_batches(term_blocks), n_docs, 120.0, k,
+                  doc_range=(lo, hi), allowed=allowed)
     c = wand_topk_cursor(term_blocks, n_docs, 120.0, k, doc_range=(lo, hi),
                          allowed=allowed)
     assert [(d, round(s, 9)) for d, s in w] == [(d, round(s, 9)) for d, s in c]
@@ -108,7 +117,7 @@ def test_wand_ties_broken_by_doc_id():
     tfs = np.full(n, 3)
     dls = np.full(n, 100)
     df, blocks = _blocks_for(docs, tfs, dls, n_docs=n, avgdl=100.0, block_size=64)
-    res = wand_topk({"t": (df, blocks)}, n, 100.0, 10)
+    res = wand_topk(_batches({"t": (df, blocks)}), n, 100.0, 10)
     assert [d for d, _ in res] == list(range(1000, 1010))
     assert len({round(s, 9) for _, s in res}) == 1
 
@@ -131,12 +140,12 @@ def test_wand_skips_blocks():
 
     def probe(blks):
         nonlocal decoded_blocks
-        decoded_blocks += len(blks)
+        decoded_blocks += len(blks.n)
         return orig(blks)
 
     wand_mod.decode_blocks_batch = probe
     try:
-        res = wand_topk({"t": (df, blocks)}, n, 100.0, 5)
+        res = wand_topk(_batches({"t": (df, blocks)}), n, 100.0, 5)
     finally:
         wand_mod.decode_blocks_batch = orig
     assert [d for d, _ in res] == list(range(n - 64, n - 59))
