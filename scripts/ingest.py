@@ -50,8 +50,8 @@ def _session(master: str | None):
 
 def _stats(index_dir: str) -> dict:
     """Metadata-only index snapshot (north-rule 'metrics'): manifest,
-    per-bucket size distribution (the skew signal), pending tombstones,
-    lineage record count. Reads parquet FOOTERS at most — no Spark
+    per-bucket size distribution (the skew signal), term_stats file and
+    term counts, pending tombstones, lineage record count. Reads parquet FOOTERS at most — no Spark
     session, no postings decode; safe to run against a live index of
     any size."""
     import statistics
@@ -86,6 +86,11 @@ def _stats(index_dir: str) -> dict:
                     for rg in map(md.row_group, range(md.num_row_groups)))
         bucket_bytes[entry.split("=", 1)[1]] = sz
 
+    # term_stats: one file per bucket, one row per term (footers only)
+    ts_rows = [pq.read_metadata(os.path.join(root, f)).num_rows
+               for root, _, files in os.walk(store.term_stats_dir_for(m["epoch"]))
+               for f in files if f.endswith(".parquet")]
+
     tombs = 0
     tdir = store.tombstones_dir
     if tdir and os.path.isdir(tdir):
@@ -117,6 +122,8 @@ def _stats(index_dir: str) -> dict:
             "mean": round(statistics.mean(rg_counts or [0]), 2),
         },
         "max_row_group_compressed_bytes": max(rg_bytes),
+        "term_stats_files": len(ts_rows),
+        "n_terms": sum(ts_rows),
         "pending_tombstones": tombs,
         "lineage_records": lineage_records,
         "bucket_bytes": {

@@ -5,16 +5,16 @@ embed -> vector-DB upsert, /root/reference/api/ingest.py:15-62 and
 /root/reference/service/embedding.py:153-296) with:
 
   scan -> extract (mapInPandas) -> tokenize (JVM expr) -> explode ->
-  tf agg -> df agg + join -> head-term salting -> per-(term,salt)
-  posting-block build (applyInPandas, NumPy codec) -> partitioned write
-  + doc_stats + corpus_stats + per-bucket lineage
+  one shuffle by term-hash bucket -> per-bucket posting-block build
+  with in-partition head-term salting (NumPy codec) -> partitioned
+  write + term_stats + doc_stats + corpus_stats + per-bucket lineage
 
 Scale notes (100 TB / 10^12 docs):
 - tokenization is a pure Catalyst expression (lower + split + filter):
   whole-stage codegen, no Python on the hot path.
-- tf agg gets automatic map-side partial aggregation; the only big
-  shuffles are (term,doc_id) for tf and term for the df join — both
-  hash-partitioned by Catalyst, AQE coalesces.
+- the only big shuffle is the one by term-hash bucket: the block
+  builder sums tf over (term, doc) runs and sees each term's df as its
+  group size, so there is no tf aggregation and no df join.
 - head-term skew (Zipf: "the" at 10^12 docs has ~10^11 postings) is
   handled by *contiguous-range* salting: salt = top bits of doc_id for
   terms with df > threshold, so one reducer never sees more than
@@ -31,6 +31,12 @@ Scale notes (100 TB / 10^12 docs):
   input with more splits than cores is left alone: the scheduler
   already balances its tasks, so a wide input at scale pays no extra
   exchange.
+- df has one definition and one writer: a bucket's term_stats is the
+  sum of block ``n`` per term_id over the bucket's blocks, written by
+  _write_term_stats_bucket inside one task per bucket — the bucketed
+  build's own task, or write_term_stats_and_lineage's after the
+  streaming build, an append and a compaction. No Spark aggregate over
+  block metadata; the rows cross the JVM/Python boundary once.
 - every Spark job build_index runs is named by its phase
   (``build:extract``, ``build:doc_stats``, ``build:postings``, and on
   the streaming path ``build:stats``) in the UI and the event log.
@@ -41,10 +47,9 @@ from __future__ import annotations
 import os
 import shutil
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Callable, Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -265,9 +270,7 @@ def _collapse_build(terms, doc_ids, tfdl, *, block_size: int,
                     n_buckets: int, salt_df_threshold: int, salt_count: int,
                     seg: int, first_salted: bool = False):
     """Block build over (term_id, doc_id)-sorted rows whose term groups
-    are all complete. Returns (record_batch, term_ids, dfs): the last
-    two are the rows' term_stats (df(term) == term group size, since
-    each live doc contributes exactly one posting per term).
+    are all complete; returns the blocks as one record batch.
 
     Input rows may be PRE-AGGREGATED postings (one row per (term, doc)
     with its tf) or RAW token occurrences (tf=1 per row), with tf/dl
@@ -302,9 +305,8 @@ def _collapse_build(terms, doc_ids, tfdl, *, block_size: int,
         salted_grp[0] = True
     salts = np.where(np.repeat(salted_grp, gsizes),
                      pdocs >> shift, 0).astype(np.int32)
-    rb = _build_blocks_arrays(pterms, salts, pdocs, tfs, pdls,
-                              block_size, n_buckets, seg)
-    return rb, pterms[gstarts], gsizes
+    return _build_blocks_arrays(pterms, salts, pdocs, tfs, pdls,
+                                block_size, n_buckets, seg)
 
 
 def _make_partition_builder(block_size: int, n_buckets: int, seg: int = 0,
@@ -342,7 +344,7 @@ def _make_partition_builder(block_size: int, n_buckets: int, seg: int = 0,
         return _collapse_build(
             *cols, block_size=block_size, n_buckets=n_buckets,
             salt_df_threshold=thr, salt_count=salt_count, seg=seg,
-            first_salted=first_salted)[0]
+            first_salted=first_salted)
 
     def gen(batches):
         carry = None  # list of 3 numpy arrays: incomplete TERM group
@@ -435,8 +437,7 @@ def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
                            n_buckets: int, salt_df_threshold: int,
                            salt_count: int, seg: int):
     """Whole-bucket block build over UNSORTED arrays: one numpy
-    lexsort, then :func:`_collapse_build` (its (record_batch, term_ids,
-    dfs) are the bucket's blocks and term_stats rows).
+    lexsort, then :func:`_collapse_build`.
 
     Rationale (r6, guide §1.2 'the distributed algorithm first'):
     Spark's row-based sort + the JVM row->Arrow conversion were ~70 %
@@ -459,6 +460,52 @@ def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
 BUCKET_MEM_BUDGET = 2 << 30
 
 
+def _write_term_stats_bucket(ts_dir: str, bucket: int, term_ids: np.ndarray,
+                             ns: np.ndarray) -> dict:
+    """THE definition of df: a bucket's term_stats is the sum of block
+    ``n`` per ``term_id`` over the bucket's block rows (``term_ids``,
+    ``ns``), since each live doc has exactly one posting per term.
+    Writes it sorted by term_id as ``bucket=<bucket>/part-00000.parquet``
+    and returns the bucket's lineage counts.
+
+    The file goes through a hidden temp file and ``os.replace``: an
+    existing file may be a hardlink shared with the live epoch, so it is
+    never opened for writing. Whatever else the dir holds (a crashed
+    attempt's files) is removed after, so the dir holds exactly this
+    one file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    order = np.argsort(term_ids, kind="stable")
+    ids, starts = np.unique(term_ids[order], return_index=True)
+    dfs = np.add.reduceat(ns[order].astype(np.int64), starts)
+    d = os.path.join(ts_dir, f"bucket={bucket}")
+    os.makedirs(d, exist_ok=True)
+    name = "part-00000.parquet"
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(pa.table({"term_id": pa.array(ids, type=pa.int64()),
+                             "df": pa.array(dfs, type=pa.int64())}), tmp)
+    os.replace(tmp, os.path.join(d, name))
+    for other in os.listdir(d):
+        if other != name:
+            os.remove(os.path.join(d, other))
+    return {"n_terms": int(len(ids)), "n_blocks": int(len(term_ids)),
+            "n_postings": int(dfs.sum())}
+
+
+def _per_bucket(spark: SparkSession, buckets: list[int],
+                task: Callable[[int], dict | None]) -> list[dict]:
+    """``task(b)`` for each bucket ``b``, one Spark task per bucket in
+    ONE job with no exchange; returns the tasks' non-None results. A
+    shuffled launcher would let adaptive execution coalesce buckets
+    into fewer tasks."""
+    if not buckets:
+        return []
+    rows = (spark.sparkContext.parallelize(buckets, len(buckets))
+            .map(task).collect())
+    return [r for r in rows if r is not None]
+
+
 def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
                             postings_dir: str, term_stats_dir: str | None, *,
                             block_size: int = analysis.BLOCK_SIZE,
@@ -471,10 +518,11 @@ def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
     (term_id, doc_id, tfdl) rows as a parquet SPILL partitioned by
     bucket; one task per bucket then reads its partition back columnar
     (pyarrow, no JVM row->Arrow transposition), numpy-lexsorts it,
-    builds the blocks, and writes the bucket's postings file AND its
-    term_stats file directly — so the former separate
-    write_term_stats_and_lineage pass over the finished postings is
-    folded in for free. Returns the per-bucket lineage rows.
+    builds the blocks and writes the bucket's postings file. Unless
+    ``term_stats_dir`` is None, the same task writes the bucket's
+    term_stats from the blocks it just built, through the one
+    term_stats writer (:func:`_write_term_stats_bucket`) and returns
+    the lineage row of each bucket that holds postings.
 
     Scale shape: the spill write/read is sequential columnar I/O (the
     bytes Spark's sort-based shuffle would move anyway); what it
@@ -483,8 +531,6 @@ def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
     adaptive_n_buckets so one bucket's arrays fit task memory; callers
     with over-budget buckets use the streaming build_postings instead
     (build_index picks automatically)."""
-    import shutil as _shutil
-
     if spill_dir is None:
         spill_dir = postings_dir.rstrip("/") + "._tfspill"
     packed = (
@@ -507,7 +553,7 @@ def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
     n_map = packed.rdd.getNumPartitions()
     writer = (packed if n_map * n_buckets <= 16384
               else packed.repartition(n_buckets, "bucket_p"))
-    _shutil.rmtree(spill_dir, ignore_errors=True)
+    shutil.rmtree(spill_dir, ignore_errors=True)
     try:
         (writer.write.mode("overwrite").partitionBy("bucket_p")
          .option("compression", "snappy")
@@ -518,58 +564,39 @@ def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
                                int(seg))
         p_dir, ts_dir, sp_dir = postings_dir, term_stats_dir, spill_dir
 
-        def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import os
-
+        def run(b: int) -> dict | None:
             import pyarrow as pa
             import pyarrow.dataset as pads
             import pyarrow.parquet as pq
 
-            for pdf in pdfs:
-                for b in pdf["bucket"].tolist():
-                    part = os.path.join(sp_dir, f"bucket_p={b}")
-                    if not os.path.isdir(part):
-                        continue
-                    tbl = pads.dataset(part, format="parquet").to_table()
-                    if tbl.num_rows == 0:
-                        continue
-                    rb, t_ids, t_dfs = _collapse_build_bucket(
-                        tbl["term_id"].to_numpy(zero_copy_only=False),
-                        tbl["doc_id"].to_numpy(zero_copy_only=False),
-                        tbl["tfdl"].to_numpy(zero_copy_only=False),
-                        block_size=bs, n_buckets=nb,
-                        salt_df_threshold=thr, salt_count=sc, seg=sg)
-                    del tbl
-                    out = os.path.join(p_dir, f"bucket={b}")
-                    os.makedirs(out, exist_ok=True)
-                    pq.write_table(
-                        pa.Table.from_batches([rb]).drop_columns(["bucket"]),
-                        os.path.join(out, "part-00000.parquet"))
-                    if ts_dir is not None:
-                        tsd = os.path.join(ts_dir, f"bucket={b}")
-                        os.makedirs(tsd, exist_ok=True)
-                        pq.write_table(
-                            pa.table({"term_id": t_ids,
-                                      "df": t_dfs.astype("int64")}),
-                            os.path.join(tsd, "part-00000.parquet"))
-                    yield pd.DataFrame([{
-                        "bucket": b, "n_terms": int(len(t_ids)),
-                        "n_blocks": int(rb.num_rows),
-                        "n_postings": int(t_dfs.sum()),
-                    }])
+            part = os.path.join(sp_dir, f"bucket_p={b}")
+            if not os.path.isdir(part):
+                return None
+            tbl = pads.dataset(part, format="parquet").to_table()
+            if tbl.num_rows == 0:
+                return None
+            rb = _collapse_build_bucket(
+                tbl["term_id"].to_numpy(zero_copy_only=False),
+                tbl["doc_id"].to_numpy(zero_copy_only=False),
+                tbl["tfdl"].to_numpy(zero_copy_only=False),
+                block_size=bs, n_buckets=nb,
+                salt_df_threshold=thr, salt_count=sc, seg=sg)
+            del tbl
+            out = os.path.join(p_dir, f"bucket={b}")
+            os.makedirs(out, exist_ok=True)
+            pq.write_table(
+                pa.Table.from_batches([rb]).drop_columns(["bucket"]),
+                os.path.join(out, "part-00000.parquet"))
+            if ts_dir is None:
+                return None
+            return {"bucket": b, **_write_term_stats_bucket(
+                ts_dir, b, rb.column("term_id").to_numpy(),
+                rb.column("n").to_numpy())}
 
-        buckets_df = spark.createDataFrame(
-            [(b,) for b in range(n_buckets)], "bucket int"
-        ).repartition(n_buckets)
         os.makedirs(postings_dir, exist_ok=True)
-        rows = buckets_df.mapInPandas(
-            run, schema="bucket int, n_terms long, n_blocks long, "
-                        "n_postings long").collect()
+        return _per_bucket(spark, list(range(n_buckets)), run)
     finally:
-        _shutil.rmtree(spill_dir, ignore_errors=True)
-    return [{"bucket": int(r["bucket"]), "n_terms": int(r["n_terms"]),
-             "n_blocks": int(r["n_blocks"]),
-             "n_postings": int(r["n_postings"])} for r in rows]
+        shutil.rmtree(spill_dir, ignore_errors=True)
 
 
 def adaptive_n_buckets(spark: SparkSession, total_tokens: int) -> int:
@@ -604,9 +631,9 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     ``extract_mode="html"`` treats every payload as HTML (the webtext
     default), ``extract_mode="any"`` dispatches on the url extension
     across all 11 reference formats (extraction.extract_elements_any).
-    ``staging=True`` skips term_stats + lineage (a merge delta's stats
-    are recomputed from the MERGED blocks anyway; saves two jobs on the
-    micro-batch append path). ``seg``: segment id stamped on every block
+    ``staging=True`` writes no term_stats and no lineage: the merge
+    recomputes each bucket's df from its merged blocks, so a delta's
+    own df would never be read. ``seg``: segment id stamped on every block
     (segment-mode merges build the delta directly as its target segment,
     index/merge.py). ``title_weight`` > 1 builds a BM25F
     field-weighted index (title tokens counted ``title_weight`` times,
@@ -730,36 +757,31 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
                 F.lit(1).alias("tf"), "dl")
     )
     postings_dir = store.postings_dir_for(0)
+    ts_dir = None if staging else store.term_stats_dir_for(0)
+    if ts_dir is not None:
+        shutil.rmtree(ts_dir, ignore_errors=True)
     est_raw = int(st["total_tokens"] or 0) * 24
     est_bucket_raw = est_raw // max(1, n_buckets)
     # small inputs (micro-batch append deltas, tiny corpora) keep the
     # streaming path: the spill's two extra jobs + per-bucket tasks are
     # pure overhead when the whole input is a few MB (the r6 mid-round
     # bench regressed append_delta_4x on a 4k-doc delta staging build)
-    if (64 << 20) <= est_raw and est_bucket_raw <= BUCKET_MEM_BUDGET:
+    bucketed = (64 << 20) <= est_raw and est_bucket_raw <= BUCKET_MEM_BUDGET
+    if bucketed:
         # columnar per-bucket build (r6): spill exchange + numpy sort;
-        # also writes term_stats in the same pass (see
+        # each bucket's task also writes its term_stats (see
         # build_postings_bucketed), so this path has no build:stats
         # job. Empty corpora and over-budget buckets take the streaming
         # path below.
         shutil.rmtree(postings_dir, ignore_errors=True)
-        ts_dir = None if staging else store.term_stats_dir_for(0)
-        if ts_dir is not None:
-            shutil.rmtree(ts_dir, ignore_errors=True)
         with job_description(spark, "build:postings"):
             lineage = build_postings_bucketed(
                 spark, tf, postings_dir, ts_dir,
                 block_size=block_size, n_buckets=n_buckets,
                 salt_df_threshold=salt_df_threshold, salt_count=salt_count,
                 seg=seg)
-        toks.unpersist()
-        if not staging:
-            store.append_lineage(spark, [
-                {"bucket": r["bucket"], "phase": "build", "epoch": 0,
-                 "n_terms": r["n_terms"], "n_blocks": r["n_blocks"],
-                 "n_postings": r["n_postings"], "status": "committed"}
-                for r in lineage
-            ])
+        if ts_dir is not None:
+            _append_lineage(spark, store, lineage, phase="build", epoch=0)
     else:
         blocks = build_postings(
             tf, block_size=block_size, n_buckets=n_buckets,
@@ -773,16 +795,16 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
         with job_description(spark, "build:postings"):
             blocks.write.mode("overwrite").partitionBy("bucket").parquet(
                 postings_dir)
-        toks.unpersist()
-        if not staging:
-            with job_description(spark, "build:stats"):
-                write_term_stats_and_lineage(spark, store, phase="build",
-                                             epoch=0)
+    toks.unpersist()
     # every bucket gets a dir, empty ones too: merges and compactions
     # read a missing bucket dir as lost data and refuse to go on
-    for d in [postings_dir] + ([] if staging else [store.term_stats_dir_for(0)]):
+    for d in [postings_dir] + ([] if ts_dir is None else [ts_dir]):
         for bkt in range(n_buckets):
             os.makedirs(os.path.join(d, f"bucket={bkt}"), exist_ok=True)
+    if ts_dir is not None and not bucketed:
+        with job_description(spark, "build:stats"):
+            write_term_stats_and_lineage(spark, store, phase="build",
+                                         epoch=0, buckets=range(n_buckets))
 
     store.write_manifest({
         "engine": "super_rag_spark", "version": 5,  # 4 = +seg column; 5 = xxhash64 term ids
@@ -799,45 +821,35 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
 
 def write_term_stats_and_lineage(spark: SparkSession, store: IndexStorage, *,
                                  phase: str, epoch: int,
-                                 buckets: list[int] | None = None) -> None:
-    """Derive term_stats (term_id -> df) + per-bucket lineage records
-    from posting-block METADATA alone: df(term) = sum of block n over
-    the term's blocks (each live doc appears exactly once per term), so
-    no decode pass is needed. ``buckets``: restrict to these buckets
-    (merge touches a subset; untouched buckets hardlink their stats),
-    each of which gets a dir, empty or not (queries read a missing
-    term_stats bucket dir as lost data)."""
-    pdir = store.postings_dir_for(epoch)
-    meta = spark.read.schema(POSTINGS_SCHEMA).parquet(pdir).select(
-        "bucket", "term_id", "n")
-    if buckets is not None:
-        if not buckets:
-            return
-        meta = meta.where(F.col("bucket").isin(list(buckets)))
-    meta = meta.persist()
-    try:
-        # dynamic partition overwrite -> idempotent on merge resume
-        # (re-running replaces exactly the touched bucket partitions)
-        (meta.groupBy("bucket", "term_id").agg(F.sum("n").alias("df"))
-         .repartition("bucket").sortWithinPartitions("term_id")
-         .select("term_id", "df", "bucket")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(store.term_stats_dir_for(epoch)))
-        lineage_rows = (
-            meta.groupBy("bucket")
-            .agg(F.countDistinct("term_id").alias("n_terms"),
-                 F.count(F.lit(1)).alias("n_blocks"),
-                 F.sum("n").alias("n_postings"))
-            .collect())
-        store.append_lineage(spark, [
-            {"bucket": int(r["bucket"]), "phase": phase, "epoch": epoch,
-             "n_terms": int(r["n_terms"]), "n_blocks": int(r["n_blocks"]),
-             "n_postings": int(r["n_postings"]), "status": "committed"}
-            for r in lineage_rows
-        ])
-    finally:
-        meta.unpersist()
-    for b in buckets or ():
-        os.makedirs(os.path.join(store.term_stats_dir_for(epoch),
-                                 f"bucket={b}"), exist_ok=True)
+                                 buckets: Iterable[int]) -> None:
+    """term_stats + lineage of ``buckets`` of ``epoch``, from the
+    buckets' postings files: ONE Spark job, one task per bucket, each
+    reading only its blocks' ``term_id`` and ``n`` columns and writing
+    the bucket's term_stats through the one writer,
+    :func:`_write_term_stats_bucket`. A re-run replaces what an earlier
+    attempt left. Each bucket that holds postings then gets a lineage
+    record of ``phase``. A missing postings bucket dir is lost data:
+    FileNotFoundError naming the bucket, before any task runs."""
+    pdirs = {b: store.bucket_dir("postings", epoch, b) for b in buckets}
+    ts_dir = store.term_stats_dir_for(epoch)
+
+    def run(b: int) -> dict:
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        cols = pa.schema([("term_id", pa.int64()), ("n", pa.int32())])
+        tbl = pads.dataset(pdirs[b], format="parquet",
+                           schema=cols).to_table()
+        return {"bucket": b, **_write_term_stats_bucket(
+            ts_dir, b, tbl["term_id"].to_numpy(), tbl["n"].to_numpy())}
+
+    _append_lineage(spark, store, _per_bucket(spark, list(pdirs), run),
+                    phase=phase, epoch=epoch)
+
+
+def _append_lineage(spark: SparkSession, store: IndexStorage,
+                    rows: list[dict], *, phase: str, epoch: int) -> None:
+    """One committed lineage record per bucket row that holds blocks."""
+    store.append_lineage(spark, [
+        dict(r, phase=phase, epoch=epoch, status="committed")
+        for r in rows if r["n_blocks"]])

@@ -36,6 +36,12 @@ What each protocol rewrites:
   seg=0 — bit-identical to a from-scratch build of the live corpus.
 - ``compact_tail``: re-encode every segment but the largest as one.
 
+term_stats follow one rule in every protocol: a bucket whose postings
+did not change hardlinks its old term_stats file; every other bucket's
+df is recomputed from its new blocks by build.write_term_stats_and_lineage
+(one task per bucket), never folded from the old table. A tail fold
+changes no postings set, so all of its term_stats hardlink.
+
 Exactly-once streaming: ``stream_batch_id`` is recorded in the manifest
 at the switch; a replayed micro-batch (same or older id) is a no-op, so
 the Spark streaming checkpoint and the index can never double-apply a
@@ -402,24 +408,17 @@ def merge_append(spark: SparkSession, index_dir: str,
         n_docs, avgdl = _write_doc_stats(spark, store, ep.new,
                                          ds_merged.unionByName(stg_ds))
 
-        # term_stats: untouched buckets hardlink their partitions; buckets
-        # that LOST postings recompute from the new block metadata (no
-        # decode); buckets that only GAINED postings (every bucket of a
-        # streaming micro-batch) fold the STAGING delta into the old
-        # term_stats table: df_new = df_old + df_staging — O(delta metadata
-        # + old term_stats), never O(merged block metadata).
+        # term_stats: a bucket that neither lost nor gained postings
+        # hardlinks its old file; every other bucket's df is recomputed
+        # from its new blocks, one task per bucket
+        rewritten = staging_buckets | hit_buckets
         ts_new = store.term_stats_dir_for(ep.new)
-        os.makedirs(ts_new, exist_ok=True)
-        ts_old = store.term_stats_dir_for(ep.old)
         for b in range(n_buckets):
-            src = os.path.join(ts_old, f"bucket={b}")
-            if b not in staging_buckets | hit_buckets and os.path.isdir(src):
-                _hardlink_tree(src, os.path.join(ts_new, f"bucket={b}"))
+            if b not in rewritten:
+                _hardlink_tree(store.bucket_dir("term_stats", ep.old, b),
+                               os.path.join(ts_new, f"bucket={b}"))
         write_term_stats_and_lineage(spark, store, phase="merge_stats",
-                                     epoch=ep.new, buckets=sorted(hit_buckets))
-        gain_only = sorted(staging_buckets - hit_buckets)
-        if gain_only:
-            _fold_term_stats_delta(spark, store, sstore, ep, gain_only)
+                                     epoch=ep.new, buckets=sorted(rewritten))
 
     with job_description(spark, "append:sidecars"):
         # sidecars ride the same epoch switch (O(delta) carry — r5):
@@ -439,29 +438,6 @@ def merge_append(spark: SparkSession, index_dir: str,
     if removal_hits_df is not None:
         removal_hits_df.unpersist()
     return store
-
-
-def _fold_term_stats_delta(spark: SparkSession, store: IndexStorage,
-                           sstore: IndexStorage, ep: _Epoch,
-                           buckets: list[int]) -> None:
-    """term_stats for buckets that only GAINED postings in a segment
-    merge: df_new = df_old (+) df_staging, an outer sum of the old
-    term_stats table with the STAGING block metadata — the merged
-    index's (much larger) block-metadata table is never scanned."""
-    delta = (sstore.postings(spark, 0)
-             .where(F.col("bucket").isin(buckets))
-             .groupBy("bucket", "term_id").agg(F.sum("n").alias("df")))
-    old_ts = (store.term_stats(spark, ep.old)
-              .where(F.col("bucket").isin(buckets))
-              .select("bucket", "term_id", "df"))
-    merged = (old_ts.unionByName(delta)
-              .groupBy("bucket", "term_id").agg(F.sum("df").alias("df")))
-    (merged.repartition("bucket").sortWithinPartitions("term_id")
-     .select("term_id", "df", "bucket")
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("bucket").parquet(store.term_stats_dir_for(ep.new)))
-    _commit_lineage(spark, store, "merge_stats", ep.new, buckets)
 
 
 def compact_index(spark: SparkSession, index_dir: str, *,
@@ -484,30 +460,33 @@ def compact_index(spark: SparkSession, index_dir: str, *,
     """
     store = IndexStorage(index_dir)
     ep = _begin_epoch(store, "compact")
-    # tombstones stay a DataFrame (a bulk delete can dwarf the driver);
-    # AQE broadcasts the (usual) tiny case at runtime
-    tomb = store.tombstones(spark, ep.old)
-    if tomb is not None:
-        tomb = tomb.select("doc_id").distinct()
-    _run_waves(spark, store, "compact", ep, list(range(ep.cfg["n_buckets"])),
-               lambda wave: _rewrite_buckets(spark, store, ep, wave,
-                                             removed=tomb),
-               fail_after_bucket)
+    buckets = list(range(ep.cfg["n_buckets"]))
+    with job_description(spark, "compact:rewrite"):
+        # tombstones stay a DataFrame (a bulk delete can dwarf the
+        # driver); AQE broadcasts the (usual) tiny case at runtime
+        tomb = store.tombstones(spark, ep.old)
+        if tomb is not None:
+            tomb = tomb.select("doc_id").distinct()
+        _run_waves(spark, store, "compact", ep, buckets,
+                   lambda wave: _rewrite_buckets(spark, store, ep, wave,
+                                                 removed=tomb),
+                   fail_after_bucket)
 
-    ds = store.doc_stats(spark, ep.old)
-    if tomb is not None:
-        ds = ds.join(tomb, "doc_id", "left_anti")
-    n_docs, avgdl = _write_doc_stats(spark, store, ep.new, ds)
-    write_term_stats_and_lineage(spark, store, phase="compact_stats",
-                                 epoch=ep.new,
-                                 buckets=list(range(ep.cfg["n_buckets"])))
+    with job_description(spark, "compact:stats"):
+        ds = store.doc_stats(spark, ep.old)
+        if tomb is not None:
+            ds = ds.join(tomb, "doc_id", "left_anti")
+        n_docs, avgdl = _write_doc_stats(spark, store, ep.new, ds)
+        write_term_stats_and_lineage(spark, store, phase="compact_stats",
+                                     epoch=ep.new, buckets=buckets)
 
     # positions fold to canonical blocking (consuming tombstones);
     # vocab hardlinks or folds losses (index/sidecars.py, r5)
     from .sidecars import carry_sidecars_compact
 
-    carry_sidecars_compact(spark, store, old_epoch=ep.old, epoch=ep.new,
-                           tomb=tomb)
+    with job_description(spark, "compact:sidecars"):
+        carry_sidecars_compact(spark, store, old_epoch=ep.old, epoch=ep.new,
+                               tomb=tomb)
     _commit_epoch(store, ep.manifest, epoch=ep.new, n_docs=n_docs,
                   avgdl=avgdl, n_segments=1)
     return store
@@ -534,18 +513,20 @@ def compact_tail(spark: SparkSession, index_dir: str, *,
     """
     store = IndexStorage(index_dir)
     ep = _begin_epoch(store, "compact_tail")
-    seg_sizes = (store.postings(spark, ep.old)
-                 .groupBy("seg").agg(F.sum("n").alias("n")).collect())
+    with job_description(spark, "compact:plan"):
+        seg_sizes = (store.postings(spark, ep.old)
+                     .groupBy("seg").agg(F.sum("n").alias("n")).collect())
     if len(seg_sizes) <= 1:
         return store  # nothing to fold
     largest = int(max(seg_sizes, key=lambda r: (int(r["n"]), -int(r["seg"])))["seg"])
     # the folded segment's id is the new epoch: unique, never collides
     # with a live seg id
-    _run_waves(spark, store, "compact_tail", ep,
-               list(range(ep.cfg["n_buckets"])),
-               lambda wave: _rewrite_buckets(spark, store, ep, wave,
-                                             keep_seg=largest, seg=ep.new),
-               fail_after_bucket)
+    with job_description(spark, "compact:rewrite"):
+        _run_waves(spark, store, "compact_tail", ep,
+                   list(range(ep.cfg["n_buckets"])),
+                   lambda wave: _rewrite_buckets(spark, store, ep, wave,
+                                                 keep_seg=largest, seg=ep.new),
+                   fail_after_bucket)
 
     # stats + tombstones are segment-invariant: hardlink, don't rewrite
     for dir_for in (store.doc_stats_dir_for, store.corpus_stats_dir_for,

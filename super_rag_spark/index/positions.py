@@ -206,14 +206,9 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     # partitioned by bucket, then a per-bucket numpy lexsort + run
     # collapse; positions within a (term, doc) run come out sorted by
     # the lexsort exactly as sort_array ordered them.
-    est_bytes = None
-    try:
-        est_bytes = int(store.corpus_stats(spark, epoch).get(
-            "total_tokens", 0)) * 20
-    except Exception:
-        est_bytes = None
+    est_bytes = int(store.corpus_stats(spark, epoch)["total_tokens"]) * 20
     from .build import BUCKET_MEM_BUDGET
-    if (est_bytes and (64 << 20) <= est_bytes
+    if ((64 << 20) <= est_bytes
             and est_bytes // max(1, n_buckets) <= BUCKET_MEM_BUDGET):
         _build_positions_bucketed(spark, pos_rows, out_dir,
                                   block_size=block_size,

@@ -25,7 +25,10 @@ block_min_dl) + manifest stats + the term_stats df.
 Layout:
   <root>/manifest.json          analyzer + index config + epoch + stats
   <root>/postings_e<N>/bucket=<b>/   posting blocks by term-hash bucket
-  <root>/term_stats_e<N>/bucket=<b>/ (term_id, df) per bucket
+  <root>/term_stats_e<N>/bucket=<b>/ (term_id, df) per bucket: one
+                                     file sorted by term_id, df = sum of
+                                     the bucket's block n per term
+                                     (build._write_term_stats_bucket)
   <root>/doc_stats_e<N>/             (doc_id, url, dl)
   <root>/corpus_stats_e<N>/          single row (n_docs, avgdl, total_tokens)
   <root>/lineage/                    per-bucket build/merge commit records
@@ -134,7 +137,8 @@ class IndexStorage:
 
         - When the index has moved past ``epoch``, a merge GC'd the
           epoch's files after its commit: FileNotFoundError naming both
-          epochs. The manifest is read only on this failure path.
+          epochs. The manifest is read only on this failure path. An
+          epoch past the live one is being written by a merge.
         - Build, merge and compaction write every ``postings`` and
           ``term_stats`` bucket dir, so a missing one is lost data:
           FileNotFoundError.
@@ -146,7 +150,7 @@ class IndexStorage:
         if os.path.isdir(p):
             return p
         live = self.epoch()
-        if live != epoch:
+        if live > epoch:
             raise FileNotFoundError(
                 f"{p}: the query's snapshot is epoch {epoch},"
                 f" but the index has moved to epoch {live}")

@@ -59,8 +59,8 @@ def assert_same_index(spark):
     """Check an index written by merge_append against a fresh build of
     the same live corpus: the layout-free facts right after the segment
     append (n_docs, avgdl, term_stats, exact top-k scores), then
-    block-for-block identity once compact_index has folded the segments
-    back to seg=0."""
+    block-for-block and term_stats identity once compact_index has
+    folded the segments back to seg=0."""
     from super_rag_spark.index.merge import compact_index
     from super_rag_spark.query.engine import BM25Engine
 
@@ -77,6 +77,7 @@ def assert_same_index(spark):
             assert got.topk(q, 10) == want.topk(q, 10), q
         compact_index(spark, got.store.root)
         assert rows(got.store.postings(spark)) == rows(want.store.postings(spark))
+        assert rows(got.store.term_stats(spark)) == rows(want.store.term_stats(spark))
 
     return check
 

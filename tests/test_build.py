@@ -4,9 +4,9 @@ reference's content-addressed upsert). An input in fewer splits than
 cores is spread over every core before extraction, and the files the
 build writes do not depend on it: postings and term_stats bytes are the
 same per bucket on both postings paths, and an append of a one-row-group
-delta answers as the oracle. build_index and merge_append name their
-Spark jobs by phase and leave the caller's job description as they
-found it."""
+delta answers as the oracle. build_index, merge_append, compact_index
+and compact_tail name their Spark jobs by phase and leave the caller's
+job description as they found it."""
 
 import os
 
@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 from super_rag_spark.index.build import (build_index, build_postings_bucketed,
                                          spread_input, term_id_expr,
                                          tokens_from_text)
-from super_rag_spark.index.merge import merge_append
+from super_rag_spark.index.merge import (compact_index, compact_tail,
+                                         merge_append)
 from super_rag_spark.index.storage import IndexStorage
 from super_rag_spark.oracle import build_oracle
 from super_rag_spark.query.engine import BM25Engine
@@ -268,3 +269,32 @@ def test_append_names_its_jobs_and_restores_the_description(
         assert names == ["build:extract", "build:doc_stats",
                          "build:postings", "append:sidecars", "append:probe",
                          "append:rewrite", "append:stats", "append:sidecars"]
+
+
+def test_compaction_names_its_jobs_and_restores_the_description(
+        spark, split_inputs, tmp_path, monkeypatch):
+    """compact_tail and compact_index name their phases' jobs in order
+    and leave the caller's job description exactly as they found it,
+    set or unset. Each round first appends a second segment, so the
+    tail fold has a segment to fold."""
+    sc = spark.sparkContext
+    root = str(tmp_path / "idx")
+    build_index(spark, spark.read.parquet(split_inputs["many"]), root, **CFG)
+    names = []
+    set_description = sc.setJobDescription
+    monkeypatch.setattr(sc, "setJobDescription",
+                        lambda v: names.append(v) or set_description(v))
+    for caller in ("caller's phase", None):
+        sc.setLocalProperty("spark.job.description", caller)
+        merge_append(spark, root, spark.read.parquet(split_inputs["two"]))
+        for compact, want in (
+                (compact_tail, ["compact:plan", "compact:rewrite"]),
+                (compact_index, ["compact:rewrite", "compact:stats",
+                                 "compact:sidecars"])):
+            names.clear()
+            epoch = IndexStorage(root).epoch()
+            compact(spark, root)
+            manifest = IndexStorage(root).read_manifest()
+            assert (manifest["epoch"], manifest["n_docs"]) == (epoch + 1, 240)
+            assert sc.getLocalProperty("spark.job.description") == caller
+            assert names == want, compact.__name__

@@ -59,6 +59,32 @@ def test_missing_bucket_dir_fails_loudly(spark, rows, tmp_path):
     assert eng.store.epoch() == 0
 
 
+def test_stats_pass_names_a_lost_postings_bucket(spark, rows, tmp_path,
+                                                 monkeypatch):
+    """A postings bucket dir of the target epoch lost before the
+    term_stats pass stops the append, naming the bucket: summing the
+    other buckets' blocks would commit a term_stats table without it."""
+    import shutil
+
+    from super_rag_spark.index import merge
+
+    eng = BM25Engine(spark, str(tmp_path / "ls")).build(
+        _docs(spark, rows[:100]), **CFG)
+    stats_pass, lost = merge.write_term_stats_and_lineage, []
+
+    def lose_a_bucket(spark, store, *, phase, epoch, buckets):
+        lost.append(buckets[0])
+        shutil.rmtree(os.path.join(store.postings_dir_for(epoch),
+                                   f"bucket={lost[0]}"))
+        stats_pass(spark, store, phase=phase, epoch=epoch, buckets=buckets)
+
+    monkeypatch.setattr(merge, "write_term_stats_and_lineage", lose_a_bucket)
+    with pytest.raises(FileNotFoundError) as err:
+        merge_append(spark, eng.store.root, _docs(spark, rows[100:120]))
+    assert f"postings bucket {lost[0]} of epoch 1 is missing" in str(err.value)
+    assert eng.store.epoch() == 0
+
+
 @pytest.mark.parametrize("table", ["postings", "term_stats"])
 def test_missing_bucket_dir_fails_queries(spark, rows, tmp_path, table):
     """A query touching a lost postings or term_stats bucket dir raises

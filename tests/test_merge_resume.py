@@ -3,11 +3,18 @@
   after the segment append, identical posting blocks after compaction
 - resume after a mid-merge crash yields the identical index
 - delete + merge == build over the corpus minus deleted docs
+- a resumed merge's term_stats replace what a crashed attempt left
 """
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from super_rag_spark.analysis import term_id_for
 from super_rag_spark.index.merge import SimulatedMergeFailure, merge_append
+from super_rag_spark.index.storage import bucket_of_term
 from super_rag_spark.query.engine import BM25Engine
 
 CFG = dict(n_buckets=8, salt_df_threshold=150)  # force salting on head terms
@@ -61,3 +68,44 @@ def test_delete_then_merge_compacts(spark, corpus, tmp_path, assert_same_index):
 
     assert d.store.tombstones(spark) is None  # GC'd by the merge
     assert_same_index(d, want, ["semudo muro", "fuboname"])
+
+
+def test_resume_replaces_stale_term_stats(spark, tmp_path, assert_same_index):
+    """A stale parquet file in the target epoch's term_stats dir of a
+    bucket that lost postings (hit) and of one that only gained them
+    (gain-only) is gone after a crashed merge resumes: each dir holds
+    one file, and the index equals a fresh build. Every term occurs in
+    one doc, so each block spans one doc and the upsert's range probe
+    hits exactly the buckets of the upserted doc's old terms."""
+    mk = lambda rs: spark.createDataFrame(rs, "url string, text string")
+    base = [(f"https://t/{i}", f"w{i}a w{i}b w{i}c") for i in range(40)]
+    delta = [(base[0][0], "w0a")] + [(f"https://n/{j}", f"n{j}x")
+                                     for j in range(12)]
+    nb = CFG["n_buckets"]
+    hit = {bucket_of_term(t, nb) for t in base[0][1].split()}
+    gain = {bucket_of_term(t, nb) for _, text in delta
+            for t in text.split()} - hit
+    assert hit and gain
+    eng = BM25Engine(spark, str(tmp_path / "s")).build(mk(base), **CFG)
+    with pytest.raises(SimulatedMergeFailure):
+        merge_append(spark, eng.store.root, mk(delta), fail_after_bucket=0)
+
+    ts_new = eng.store.term_stats_dir_for(1)
+    stale = pa.table({"term_id": pa.array([term_id_for("w0a")], pa.int64()),
+                      "df": pa.array([7], pa.int64())})
+    planted = [min(hit), min(gain)]
+    for b in planted:
+        os.makedirs(os.path.join(ts_new, f"bucket={b}"), exist_ok=True)
+        pq.write_table(stale, os.path.join(ts_new, f"bucket={b}",
+                                           "part-99999-stale.parquet"))
+    merge_append(spark, eng.store.root, None)
+    for b in planted:
+        files = [f for f in os.listdir(os.path.join(ts_new, f"bucket={b}"))
+                 if not f.startswith((".", "_"))]
+        assert len(files) == 1 and "stale" not in files[0], (b, files)
+    live = dict(base)
+    live.update(delta)
+    want = BM25Engine(spark, str(tmp_path / "w")).build(
+        mk(list(live.items())), **CFG)
+    assert_same_index(BM25Engine(spark, eng.store.root), want,
+                      ["w0a n3x", "w0b w5c", "n11x w39a"])

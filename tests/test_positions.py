@@ -168,3 +168,23 @@ def test_sidecars_keep_one_copy_of_a_duplicate_url(spark, tmp_path):
             p for p, t in enumerate(toks) if t == term], term
     assert "pad0" in toks
     assert eng.suggest("pad0", 5) == [("pad0", 1)]
+
+
+def test_positions_build_needs_corpus_stats(spark, tmp_path):
+    """build_positions sizes its build from the epoch's corpus_stats; a
+    lost corpus_stats table raises instead of quietly taking the
+    streaming path."""
+    import shutil
+
+    from pyspark.errors import AnalysisException
+
+    from super_rag_spark.index.positions import build_positions
+    from super_rag_spark.query.engine import BM25Engine
+
+    docs = _corpus(spark)
+    eng = BM25Engine(spark, str(tmp_path / "nocs")).build(
+        docs, text_is_extracted=True)
+    shutil.rmtree(eng.store.corpus_stats_dir_for(0))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        build_positions(spark, docs, eng.store.root)
+    assert not eng.store.has_positions()

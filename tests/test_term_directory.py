@@ -125,6 +125,37 @@ def _assert_sorted_row_groups(store, step):
     assert stats["max_row_group_compressed_bytes"] == largest, step
 
 
+def _assert_term_stats_from_blocks(store, step):
+    """Every term_stats bucket dir of the live epoch holds at most one
+    parquet file, whose term_ids strictly increase and whose rows are
+    the sum of block n per term over the bucket's postings files;
+    ``ingest.py stats`` counts the same files and rows."""
+    import pandas as pd
+
+    epoch = store.epoch()
+    n_files = n_terms = 0
+    for b in range(CFG["n_buckets"]):
+        tsd = store.bucket_dir("term_stats", epoch, b)
+        parts = [f for f in os.listdir(tsd) if f.endswith(".parquet")]
+        assert len(parts) <= 1, (step, b, parts)
+        got = (pq.read_table(os.path.join(tsd, parts[0])).to_pandas()
+               if parts else pd.DataFrame({"term_id": [], "df": []}))
+        assert (np.diff(got["term_id"].to_numpy()) > 0).all(), (step, b)
+        pdir = store.bucket_dir("postings", epoch, b)
+        blocks = [pq.read_table(os.path.join(pdir, f),
+                                columns=["term_id", "n"]).to_pandas()
+                  for f in os.listdir(pdir) if f.endswith(".parquet")]
+        want = (pd.concat(blocks).groupby("term_id")["n"].sum()
+                if blocks else pd.Series(dtype="int64"))
+        assert got["term_id"].tolist() == want.index.tolist(), (step, b)
+        assert got["df"].tolist() == want.tolist(), (step, b)
+        n_files += len(parts)
+        n_terms += len(got)
+    stats = _ingest_stats(store.root)
+    assert (stats["term_stats_files"], stats["n_terms"]) == (
+        n_files, n_terms), step
+
+
 def _rebuild_bucketed(spark, store, docs):
     """Replace epoch 0's postings and term_stats with the output of the
     bucketed (spill + NumPy sort) writer over the same corpus; build_index
@@ -145,14 +176,16 @@ def _rebuild_bucketed(spark, store, docs):
 def test_every_writer_keeps_row_groups_sorted(spark, rows, tmp_path):
     """The streaming build, the bucketed build, an upserting append, a
     pure append, a tail compaction and a full compaction each leave
-    sorted row groups with term_id statistics, and the driver answers
-    as the oracle after every step."""
+    sorted row groups with term_id statistics and one term_stats file
+    per bucket whose df is the bucket's own block sum, and the driver
+    answers as the oracle after every step."""
     base, d1, d2 = rows[:160], rows[160:200], rows[200:240]
     upsert = [(base[0][0], base[0][1] + " semudo muro")]
     queries = ["semudo muro fuboname", "gaku", "zibapevi semudo"]
 
     def check(eng, corpus, step):
         _assert_sorted_row_groups(eng.store, step)
+        _assert_term_stats_from_blocks(eng.store, step)
         fresh = BM25Engine(spark, eng.store.root)
         oracle = build_oracle(corpus)
         for q in queries:
