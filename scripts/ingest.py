@@ -50,10 +50,11 @@ def _session(master: str | None):
 
 def _stats(index_dir: str) -> dict:
     """Metadata-only index snapshot (north-rule 'metrics'): manifest,
-    per-bucket size distribution (the skew signal), term_stats file and
-    term counts, pending tombstones, lineage record count. Reads parquet FOOTERS at most — no Spark
-    session, no postings decode; safe to run against a live index of
-    any size."""
+    per-bucket size distribution (the skew signal), the parquet writers
+    (``created_by``) of the postings files, term_stats file and term
+    counts, pending tombstones, lineage record count. Reads parquet
+    FOOTERS at most — no Spark session, no postings decode; safe to run
+    against a live index of any size."""
     import statistics
 
     import pyarrow.parquet as pq
@@ -69,6 +70,7 @@ def _stats(index_dir: str) -> dict:
     # bytes: a cold query term reads its whole row group once per epoch
     rg_counts: list[int] = []
     rg_bytes = [0]
+    writers: set[str] = set()  # each file's parquet created_by
     for entry in sorted(os.listdir(pdir)):
         bdir = os.path.join(pdir, entry)
         if not (entry.startswith("bucket=") and os.path.isdir(bdir)):
@@ -79,6 +81,7 @@ def _stats(index_dir: str) -> dict:
                 path = os.path.join(bdir, f)
                 sz += os.path.getsize(path)
                 md = pq.read_metadata(path)
+                writers.add(md.created_by)
                 rg_counts.append(md.num_row_groups)
                 rg_bytes.extend(
                     sum(rg.column(c).total_compressed_size
@@ -122,6 +125,7 @@ def _stats(index_dir: str) -> dict:
             "mean": round(statistics.mean(rg_counts or [0]), 2),
         },
         "max_row_group_compressed_bytes": max(rg_bytes),
+        "postings_writers": sorted(writers),
         "term_stats_files": len(ts_rows),
         "n_terms": sum(ts_rows),
         "pending_tombstones": tombs,

@@ -6,8 +6,9 @@ embed -> vector-DB upsert, /root/reference/api/ingest.py:15-62 and
 
   scan -> extract (mapInPandas) -> tokenize (JVM expr) -> explode ->
   one shuffle by term-hash bucket -> per-bucket posting-block build
-  with in-partition head-term salting (NumPy codec) -> partitioned
-  write + term_stats + doc_stats + corpus_stats + per-bucket lineage
+  with in-partition head-term salting (NumPy codec) -> per-bucket
+  postings + term_stats files written by that same task + doc_stats +
+  corpus_stats + per-bucket lineage
 
 Scale notes (100 TB / 10^12 docs):
 - tokenization is a pure Catalyst expression (lower + split + filter):
@@ -31,15 +32,18 @@ Scale notes (100 TB / 10^12 docs):
   input with more splits than cores is left alone: the scheduler
   already balances its tasks, so a wide input at scale pays no extra
   exchange.
-- df has one definition and one writer: a bucket's term_stats is the
-  sum of block ``n`` per term_id over the bucket's blocks, written by
-  _write_term_stats_bucket inside one task per bucket — the bucketed
-  build's own task, or write_term_stats_and_lineage's after the
-  streaming build, an append and a compaction. No Spark aggregate over
-  block metadata; the rows cross the JVM/Python boundary once.
+- blocks have one writer, _write_buckets, run inside the task that
+  built them: the spill's per-bucket task, the streaming builder's
+  mapInArrow and a merge's rewrite. It writes each bucket's postings
+  file in one fixed layout and, when given a term_stats dir, the
+  bucket's term_stats from the same blocks (df = the sum of block
+  ``n`` per term_id, _write_term_stats_bucket), and returns the
+  bucket's lineage row. A build's blocks never return to the JVM and
+  are never read back. An append's staged buckets hold two files, so
+  write_term_stats_and_lineage recomputes their df from the files.
 - every Spark job build_index runs is named by its phase
-  (``build:extract``, ``build:doc_stats``, ``build:postings``, and on
-  the streaming path ``build:stats``) in the UI and the event log.
+  (``build:extract``, ``build:doc_stats``, ``build:postings``) in the
+  UI and the event log.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ from __future__ import annotations
 import os
 import shutil
 from contextlib import contextmanager
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -312,30 +316,22 @@ def _collapse_build(terms, doc_ids, tfdl, *, block_size: int,
 def _make_partition_builder(block_size: int, n_buckets: int, seg: int = 0,
                             salt_df_threshold: int = analysis.SALT_DF_THRESHOLD,
                             salt_count: int = analysis.SALT_COUNT):
-    """mapInArrow body over a partition hash-clustered by term and
-    sorted by (term_id, doc_id). Input batches carry (term_id, doc_id,
-    tfdl) with tf/dl PACKED into one int64 (tf<<32 | dl) — fewer
-    columns through the shuffle and the Arrow pipe, which is the
-    build's true bottleneck (the NumPy encode itself measures ~0.2 s of
-    a ~38 s stage at sf0.3; the rest is data movement). mapInArrow (not
-    mapInPandas) skips the Arrow->pandas->Arrow conversions entirely.
+    """mapInArrow body over a partition clustered by bucket and sorted
+    by (bucket, term_id, doc_id); yields the blocks as record batches.
+    Input batches carry (term_id, doc_id, tfdl), tf and dl packed in one
+    int64: data movement, not the NumPy encode, is the build's cost
+    (the encode measured ~0.2 s of a ~38 s stage at sf0.3).
 
-    r6: head-term SALTING happens HERE, not upstream. Every posting of
-    a term lands in this one partition (clustered by term_id % B), so
-    the builder sees each term's complete df as its contiguous group
-    size — the former global df aggregation + join over the whole tf
-    table existed only to compute `df > threshold`, and salt itself is
-    doc_id's top bits (monotone in doc_id), so sorting by (term_id,
-    doc_id) already equals the old (term_id, salt, doc_id) order. Net:
-    one aggregation + one join + one shuffled column removed from the
-    hot path (guide §2.3/§2.4), output blocks bit-identical.
+    Head-term salting happens here (r6): every posting of a term lands
+    in this partition, so the builder sees the term's complete df as its
+    contiguous group size, and salt = doc_id's top bits is monotone in
+    doc_id, so (term_id, doc_id) order is (term_id, salt, doc_id) order.
+    No global df aggregation or join (guide §2.3/§2.4).
 
-    Memory bound (unchanged class): an incomplete TERM group is carried
-    across Arrow batches, but once the carried rows exceed the salt
-    threshold the term is provably salted, and every COMPLETE salt
-    subgroup (doc_id-top-bits boundary) is flushed eagerly — so the
-    carry never holds more than max(threshold, one salt subgroup), the
-    same bound the old (term,salt)-keyed carry had."""
+    Memory bound: an incomplete term group is carried across batches;
+    once it exceeds the salt threshold the term is provably salted and
+    every complete salt subgroup is flushed eagerly, so the carry never
+    holds more than max(threshold, one salt subgroup)."""
     shift = np.int64(analysis.DOC_ID_BITS - (salt_count.bit_length() - 1))
     thr = int(salt_df_threshold)
 
@@ -397,55 +393,49 @@ def build_postings(tf_df: DataFrame, *,
                    salt_count: int = analysis.SALT_COUNT,
                    seg: int = 0,
                    k1: float = None, b: float = None) -> DataFrame:
-    """tf rows (term, doc_id, tf, dl) -> posting-block rows.
-
-    Head-term salting is decided INSIDE the per-partition builder (r6):
-    each term's postings all land in one partition, so the builder sees
-    the term's complete df as its contiguous group size — no global df
-    aggregation or join is needed, and because salt = doc_id's top bits
-    is monotone in doc_id, sorting by (term_id, doc_id) already yields
-    the old (term_id, salt, doc_id) order. Output blocks are
-    bit-identical to the former two-pass plan (asserted by
-    tests/test_build.py salting tests). ``k1``/``b`` are accepted and
-    ignored so manifest-config dicts can be splatted through.
-    """
+    """tf rows (term, doc_id, tf, dl) -> posting-block rows, from the
+    streaming builder (:func:`_make_partition_builder`, which also
+    salts head terms). A merge's rewrite takes them as a frame;
+    build_index runs the builder inside :func:`write_blocks` instead.
+    ``k1``/``b`` are accepted and ignored so manifest-config dicts can
+    be splatted through."""
     builder = _make_partition_builder(
         block_size, n_buckets, seg,
         salt_df_threshold=salt_df_threshold, salt_count=salt_count)
-    # ONE shuffle: cluster by the OUTPUT partitioning (bucket =
-    # term_id % B), sort within partitions by (term_id, doc_id), and
-    # stream whole partitions through the NumPy builder — each task
-    # then owns exactly one bucket directory at write time, so no second
-    # shuffle is needed to lay the index out. The builder streams Arrow
-    # batches, so a bucket-sized partition never materializes in Python.
+    return _clustered(tf_df, n_buckets).mapInArrow(builder,
+                                                   schema=POSTINGS_SCHEMA)
+
+
+def _packed(tf_df: DataFrame, n_buckets: int) -> DataFrame:
+    """(term_id, doc_id, tfdl, bucket_p) of tf rows; tf < 2^31 and
+    dl < 2^32, so tfdl = tf<<32 | dl round-trips exactly with one
+    column fewer to exchange."""
     return (
         tf_df
         .withColumn("bucket_p", F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int"))
-        # pack (tf, dl) into one int64 BEFORE the shuffle: tf < 2^31 and
-        # dl < 2^32 by construction, so tf<<32 | dl round-trips exactly —
-        # 20% less shuffle volume and one fewer Arrow column to Python
         .withColumn("tfdl", F.expr(
             "shiftleft(CAST(tf AS BIGINT), 32) + CAST(dl AS BIGINT)"))
-        .repartition(n_buckets, "bucket_p")
-        .sortWithinPartitions("term_id", "doc_id")
-        .select("term_id", "doc_id", "tfdl")
-        .mapInArrow(builder, schema=POSTINGS_SCHEMA)
+        .select("term_id", "doc_id", "tfdl", "bucket_p")
     )
+
+
+def _clustered(tf_df: DataFrame, n_buckets: int) -> DataFrame:
+    """The streaming builder's input: ONE shuffle by the output bucket,
+    each partition sorted by (bucket, term_id, doc_id), so a task's
+    blocks come out in the order :func:`_write_buckets` takes."""
+    return (_packed(tf_df, n_buckets)
+            .repartition(n_buckets, "bucket_p")
+            .sortWithinPartitions("bucket_p", "term_id", "doc_id")
+            .select("term_id", "doc_id", "tfdl"))
 
 
 def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
                            n_buckets: int, salt_df_threshold: int,
                            salt_count: int, seg: int):
     """Whole-bucket block build over UNSORTED arrays: one numpy
-    lexsort, then :func:`_collapse_build`.
-
-    Rationale (r6, guide §1.2 'the distributed algorithm first'):
-    Spark's row-based sort + the JVM row->Arrow conversion were ~70 %
-    of the postings stage at 1 core (measured sf0.1: 48 s sort +
-    ~25 s pipe for 34 M rows, vs 7.5 s for the same sort as one numpy
-    lexsort on columnar input). Reading the bucket COLUMNAR from a
-    parquet spill and sorting in numpy does the same work at memory
-    bandwidth."""
+    lexsort, then :func:`_collapse_build`. (r6, measured sf0.1 at 1
+    core: Spark's row sort and row->Arrow pipe took 48 s + ~25 s for
+    34 M rows, the same sort as one lexsort 7.5 s.)"""
     order = np.lexsort((docs, terms))
     return _collapse_build(
         terms[order], docs[order], tfdl[order], block_size=block_size,
@@ -460,37 +450,144 @@ def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
 BUCKET_MEM_BUDGET = 2 << 30
 
 
-def _write_term_stats_bucket(ts_dir: str, bucket: int, term_ids: np.ndarray,
-                             ns: np.ndarray) -> dict:
-    """THE definition of df: a bucket's term_stats is the sum of block
-    ``n`` per ``term_id`` over the bucket's block rows (``term_ids``,
-    ``ns``), since each live doc has exactly one posting per term.
-    Writes it sorted by term_id as ``bucket=<bucket>/part-00000.parquet``
-    and returns the bucket's lineage counts.
+def _fits_a_task(total_bytes: int, n_buckets: int) -> bool:
+    """Whether a bucket's share of a build's raw rows fits a task: the
+    postings and positions builds take the spill if so, else their
+    streaming builder."""
+    return total_bytes // max(1, n_buckets) <= BUCKET_MEM_BUDGET
 
-    The file goes through a hidden temp file and ``os.replace``: an
-    existing file may be a hardlink shared with the live epoch, so it is
-    never opened for writing. Whatever else the dir holds (a crashed
-    attempt's files) is removed after, so the dir holds exactly this
-    one file."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
+_PART = "part-00000.parquet"
+
+# The one postings file layout: dictionary pages only on the columns
+# parquet-mr also keeps dictionary-encoded here (term_id, docs_enc and
+# dls_enc are nearly all distinct; pages on them made the index larger
+# and the queries slower), and row groups cut at a fixed row count, so
+# a file's bytes do not depend on the batches its blocks came in.
+_DICT_COLUMNS = ["salt", "seg", "block_id", "n", "first_doc_id",
+                 "last_doc_id", "tfs_enc", "block_max_tf", "block_min_dl"]
+_ROW_GROUP_ROWS = 1 << 20
+
+
+def _tmp_part(bucket_dir: str) -> str:
+    return os.path.join(bucket_dir, f".{_PART}.tmp")
+
+
+def _publish(bucket_dir: str) -> None:
+    """The dir's temp file replaces its part file, and everything else
+    in the dir (a crashed attempt's files, a merge's links) goes. The
+    old part file may be a hardlink shared with the live epoch, so it is
+    never opened for writing."""
+    os.replace(_tmp_part(bucket_dir), os.path.join(bucket_dir, _PART))
+    for other in os.listdir(bucket_dir):
+        if other != _PART:
+            os.remove(os.path.join(bucket_dir, other))
+
+
+def _term_dfs(term_ids: np.ndarray, ns: np.ndarray):
+    """THE definition of df: the sum of block ``n`` per ``term_id`` over
+    a bucket's block rows, since each live doc has exactly one posting
+    per term. Returns (sorted term_ids, dfs, lineage counts)."""
     order = np.argsort(term_ids, kind="stable")
     ids, starts = np.unique(term_ids[order], return_index=True)
     dfs = np.add.reduceat(ns[order].astype(np.int64), starts)
+    return ids, dfs, {"n_terms": int(len(ids)), "n_blocks": int(len(term_ids)),
+                      "n_postings": int(dfs.sum())}
+
+
+def _write_term_stats_bucket(ts_dir: str, bucket: int, term_ids: np.ndarray,
+                             ns: np.ndarray) -> dict:
+    """A bucket's term_stats (:func:`_term_dfs` of its block rows),
+    sorted by term_id, as the only file of its dir (:func:`_publish`);
+    returns the bucket's lineage counts."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids, dfs, counts = _term_dfs(term_ids, ns)
     d = os.path.join(ts_dir, f"bucket={bucket}")
     os.makedirs(d, exist_ok=True)
-    name = "part-00000.parquet"
-    tmp = os.path.join(d, f".{name}.tmp")
     pq.write_table(pa.table({"term_id": pa.array(ids, type=pa.int64()),
-                             "df": pa.array(dfs, type=pa.int64())}), tmp)
-    os.replace(tmp, os.path.join(d, name))
-    for other in os.listdir(d):
-        if other != name:
-            os.remove(os.path.join(d, other))
-    return {"n_terms": int(len(ids)), "n_blocks": int(len(term_ids)),
-            "n_postings": int(dfs.sum())}
+                             "df": pa.array(dfs, type=pa.int64())}),
+                   _tmp_part(d))
+    _publish(d)
+    return counts
+
+
+def _row_groups(batches: Iterable) -> Iterator:
+    """``batches`` as one-chunk tables of ``_ROW_GROUP_ROWS`` rows, the
+    last one shorter."""
+    import pyarrow as pa
+
+    pending, n = [], 0
+    for rb in batches:
+        pending.append(rb)
+        n += rb.num_rows
+        while n >= _ROW_GROUP_ROWS:
+            tbl = pa.Table.from_batches(pending).combine_chunks()
+            yield tbl.slice(0, _ROW_GROUP_ROWS)
+            pending = tbl.slice(_ROW_GROUP_ROWS).to_batches()
+            n -= _ROW_GROUP_ROWS
+    if n:
+        yield pa.Table.from_batches(pending).combine_chunks()
+
+
+def _write_buckets(blocks: Iterable, postings_dir: str,
+                   ts_dir: str | None) -> Iterator[dict]:
+    """THE postings writer. ``blocks``: record batches of
+    POSTINGS_SCHEMA rows, of one or more buckets, sorted by bucket and
+    in term order within one. Each bucket's rows become the only file
+    of its dir under ``postings_dir``, in the one layout, through a
+    temp file (:func:`_publish`); with ``ts_dir`` its term_stats are
+    written from the same blocks. Yields each bucket's lineage row once
+    its files are in place."""
+    import itertools
+
+    import pyarrow.parquet as pq
+
+    def runs():
+        for rb in blocks:
+            col = rb.column("bucket").to_numpy()
+            starts = np.flatnonzero(np.diff(col, prepend=-1))
+            for lo, hi in zip(starts, [*starts[1:], len(col)]):
+                yield int(col[lo]), rb.slice(lo, hi - lo).drop_columns(["bucket"])
+
+    done = set()
+    for b, run in itertools.groupby(runs(), key=lambda r: r[0]):
+        if b in done:
+            raise ValueError(f"the blocks of bucket {b} are not contiguous")
+        done.add(b)
+        d = os.path.join(postings_dir, f"bucket={b}")
+        os.makedirs(d, exist_ok=True)
+        ids, ns = [], []
+        tables = _row_groups(rb for _, rb in run)
+        first = next(tables)
+        with pq.ParquetWriter(_tmp_part(d), first.schema,
+                              use_dictionary=_DICT_COLUMNS) as out:
+            for tbl in itertools.chain([first], tables):
+                out.write_table(tbl, row_group_size=_ROW_GROUP_ROWS)
+                ids.append(tbl["term_id"].to_numpy())
+                ns.append(tbl["n"].to_numpy())
+        _publish(d)
+        ids, ns = np.concatenate(ids), np.concatenate(ns)
+        yield {"bucket": b, **(_term_dfs(ids, ns)[2] if ts_dir is None else
+                               _write_term_stats_bucket(ts_dir, b, ids, ns))}
+
+
+def write_blocks(frame: DataFrame, postings_dir: str, ts_dir: str | None,
+                 build: Callable = iter) -> list[dict]:
+    """One Spark job whose tasks write their partition's blocks through
+    :func:`_write_buckets`: ``frame``'s rows, or what ``build`` (the
+    streaming builder) makes of them, so the blocks never return to the
+    JVM. Returns the lineage rows of the buckets written."""
+    def run(batches):
+        import pyarrow as pa
+
+        for row in _write_buckets(build(batches), postings_dir, ts_dir):
+            yield pa.RecordBatch.from_pylist([row])
+
+    return [r.asDict() for r in frame.mapInArrow(
+        run, "bucket long, n_terms long, n_blocks long, n_postings long"
+    ).collect()]
 
 
 def _per_bucket(spark: SparkSession, buckets: list[int],
@@ -506,6 +603,48 @@ def _per_bucket(spark: SparkSession, buckets: list[int],
     return [r for r in rows if r is not None]
 
 
+def _spilled(spark: SparkSession, rows: DataFrame, spill_dir: str,
+             n_buckets: int, task: Callable[[int, dict], dict | None]
+             ) -> list[dict]:
+    """THE spill (r6): ONE exchange writes ``rows`` as parquet
+    partitioned by their ``bucket_p`` column, then ``task(b, cols)``
+    runs once per bucket that holds rows, one task each
+    (:func:`_per_bucket`), on the bucket's columns read back columnar
+    as numpy arrays. Returns the tasks' non-None results.
+
+    Without a repartition every map task writes into every bucket dir:
+    n_map x B files, fine up to a few thousand (guide §6). The spill is
+    read once and deleted: no dictionary (it cost ~2x on read-back of
+    ids); snappy keeps it ~4.5x smaller than raw (uncompressed, its
+    writeback competed with every concurrent task)."""
+    n_map = rows.rdd.getNumPartitions()
+    writer = (rows if n_map * n_buckets <= 16384
+              else rows.repartition(n_buckets, "bucket_p"))
+    shutil.rmtree(spill_dir, ignore_errors=True)
+    try:
+        (writer.write.mode("overwrite").partitionBy("bucket_p")
+         .option("compression", "snappy")
+         .option("parquet.enable.dictionary", "false").parquet(spill_dir))
+
+        def run(b: int) -> dict | None:
+            import pyarrow.dataset as pads
+
+            part = os.path.join(spill_dir, f"bucket_p={b}")
+            if not os.path.isdir(part):
+                return None
+            tbl = pads.dataset(part, format="parquet").to_table()
+            if tbl.num_rows == 0:
+                return None
+            cols = {c: tbl[c].to_numpy(zero_copy_only=False)
+                    for c in tbl.column_names}
+            del tbl
+            return task(b, cols)
+
+        return _per_bucket(spark, list(range(n_buckets)), run)
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
+
+
 def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
                             postings_dir: str, term_stats_dir: str | None, *,
                             block_size: int = analysis.BLOCK_SIZE,
@@ -514,89 +653,27 @@ def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
                             salt_count: int = analysis.SALT_COUNT,
                             seg: int = 0,
                             spill_dir: str | None = None) -> list[dict]:
-    """Columnar postings build (r6): ONE exchange writes the raw
-    (term_id, doc_id, tfdl) rows as a parquet SPILL partitioned by
-    bucket; one task per bucket then reads its partition back columnar
-    (pyarrow, no JVM row->Arrow transposition), numpy-lexsorts it,
-    builds the blocks and writes the bucket's postings file. Unless
-    ``term_stats_dir`` is None, the same task writes the bucket's
-    term_stats from the blocks it just built, through the one
-    term_stats writer (:func:`_write_term_stats_bucket`) and returns
-    the lineage row of each bucket that holds postings.
+    """The spill build: the raw (term_id, doc_id, tfdl) rows go through
+    :func:`_spilled`; each bucket's task numpy-lexsorts them, builds the
+    blocks and writes them with :func:`_write_buckets`, term_stats too
+    unless ``term_stats_dir`` is None. Returns the lineage row of each
+    bucket that holds postings. It moves the bytes a shuffle would, but
+    skips Spark's row sort and the row->Arrow transpose of every
+    posting; a bucket's arrays must fit a task (:func:`_fits_a_task`)."""
+    bs, nb, thr, sc, sg = (int(block_size), int(n_buckets),
+                           int(salt_df_threshold), int(salt_count), int(seg))
 
-    Scale shape: the spill write/read is sequential columnar I/O (the
-    bytes Spark's sort-based shuffle would move anyway); what it
-    removes is the O(n) row-at-a-time sort insertion and the row->Arrow
-    transpose of every posting (guide §4.1/§2.1). Buckets are sized by
-    adaptive_n_buckets so one bucket's arrays fit task memory; callers
-    with over-budget buckets use the streaming build_postings instead
-    (build_index picks automatically)."""
-    if spill_dir is None:
-        spill_dir = postings_dir.rstrip("/") + "._tfspill"
-    packed = (
-        tf_df
-        .withColumn("bucket_p", F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int"))
-        .withColumn("tfdl", F.expr(
-            "shiftleft(CAST(tf AS BIGINT), 32) + CAST(dl AS BIGINT)"))
-        .select("term_id", "doc_id", "tfdl", "bucket_p")
-    )
-    # Exchange decision by FILE-COUNT math (guide §6): without a
-    # repartition every map task writes into every bucket dir, giving
-    # n_map x B spill files — fine up to a few thousand (pyarrow reads
-    # a bucket dir as one dataset), a small-files cliff beyond. The
-    # spill is temp data read exactly once and deleted: dictionary
-    # encoding off (it cost ~2x on read-back of high-cardinality ids);
-    # snappy keeps the spill ~4.5x smaller than raw for ~5 s more write
-    # at 1 core — the uncompressed variant measured faster solo but its
-    # writeback competed with every concurrent task at higher core
-    # counts (the r6 mid-round bench regressed build_scale4 on it).
-    n_map = packed.rdd.getNumPartitions()
-    writer = (packed if n_map * n_buckets <= 16384
-              else packed.repartition(n_buckets, "bucket_p"))
-    shutil.rmtree(spill_dir, ignore_errors=True)
-    try:
-        (writer.write.mode("overwrite").partitionBy("bucket_p")
-         .option("compression", "snappy")
-         .option("parquet.enable.dictionary", "false").parquet(spill_dir))
+    def build(b: int, cols: dict) -> dict:
+        rb = _collapse_build_bucket(
+            cols.pop("term_id"), cols.pop("doc_id"), cols.pop("tfdl"),
+            block_size=bs, n_buckets=nb, salt_df_threshold=thr,
+            salt_count=sc, seg=sg)
+        return next(_write_buckets([rb], postings_dir, term_stats_dir))
 
-        bs, nb, thr, sc, sg = (int(block_size), int(n_buckets),
-                               int(salt_df_threshold), int(salt_count),
-                               int(seg))
-        p_dir, ts_dir, sp_dir = postings_dir, term_stats_dir, spill_dir
-
-        def run(b: int) -> dict | None:
-            import pyarrow as pa
-            import pyarrow.dataset as pads
-            import pyarrow.parquet as pq
-
-            part = os.path.join(sp_dir, f"bucket_p={b}")
-            if not os.path.isdir(part):
-                return None
-            tbl = pads.dataset(part, format="parquet").to_table()
-            if tbl.num_rows == 0:
-                return None
-            rb = _collapse_build_bucket(
-                tbl["term_id"].to_numpy(zero_copy_only=False),
-                tbl["doc_id"].to_numpy(zero_copy_only=False),
-                tbl["tfdl"].to_numpy(zero_copy_only=False),
-                block_size=bs, n_buckets=nb,
-                salt_df_threshold=thr, salt_count=sc, seg=sg)
-            del tbl
-            out = os.path.join(p_dir, f"bucket={b}")
-            os.makedirs(out, exist_ok=True)
-            pq.write_table(
-                pa.Table.from_batches([rb]).drop_columns(["bucket"]),
-                os.path.join(out, "part-00000.parquet"))
-            if ts_dir is None:
-                return None
-            return {"bucket": b, **_write_term_stats_bucket(
-                ts_dir, b, rb.column("term_id").to_numpy(),
-                rb.column("n").to_numpy())}
-
-        os.makedirs(postings_dir, exist_ok=True)
-        return _per_bucket(spark, list(range(n_buckets)), run)
-    finally:
-        shutil.rmtree(spill_dir, ignore_errors=True)
+    os.makedirs(postings_dir, exist_ok=True)
+    return _spilled(spark, _packed(tf_df, n_buckets),
+                    spill_dir or postings_dir.rstrip("/") + "._tfspill",
+                    n_buckets, build)
 
 
 def adaptive_n_buckets(spark: SparkSession, total_tokens: int) -> int:
@@ -654,8 +731,13 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     fewer splits than cores (one parquet row group, say) would run the
     extraction UDF, the persisted tokens and the postings spill on as
     many cores as it has splits. Wider inputs are read as they are.
-    Each phase's Spark jobs carry its name as their job description
-    (see the module notes); the caller's description is restored."""
+    Postings come from the spill (build_postings_bucketed) whenever one
+    bucket's raw rows fit a task (:func:`_fits_a_task`), tiny deltas
+    included, and from the streaming builder otherwise. Both write
+    through the one postings writer (:func:`_write_buckets`), so the
+    two give byte-identical postings and term_stats files. Each phase's
+    Spark jobs carry its name as their job description (see the module
+    notes); the caller's description is restored."""
     if extract_mode not in ("html", "any"):
         raise ValueError(f"unknown extract_mode: {extract_mode!r}")
     if title_weight < 1:
@@ -758,53 +840,34 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     )
     postings_dir = store.postings_dir_for(0)
     ts_dir = None if staging else store.term_stats_dir_for(0)
-    if ts_dir is not None:
-        shutil.rmtree(ts_dir, ignore_errors=True)
-    est_raw = int(st["total_tokens"] or 0) * 24
-    est_bucket_raw = est_raw // max(1, n_buckets)
-    # small inputs (micro-batch append deltas, tiny corpora) keep the
-    # streaming path: the spill's two extra jobs + per-bucket tasks are
-    # pure overhead when the whole input is a few MB (the r6 mid-round
-    # bench regressed append_delta_4x on a 4k-doc delta staging build)
-    bucketed = (64 << 20) <= est_raw and est_bucket_raw <= BUCKET_MEM_BUDGET
-    if bucketed:
-        # columnar per-bucket build (r6): spill exchange + numpy sort;
-        # each bucket's task also writes its term_stats (see
-        # build_postings_bucketed), so this path has no build:stats
-        # job. Empty corpora and over-budget buckets take the streaming
-        # path below.
-        shutil.rmtree(postings_dir, ignore_errors=True)
-        with job_description(spark, "build:postings"):
+    for d in filter(None, (postings_dir, ts_dir)):
+        shutil.rmtree(d, ignore_errors=True)
+    with job_description(spark, "build:postings"):
+        if _fits_a_task(int(st["total_tokens"] or 0) * 24, n_buckets):
+            # the spill: columnar per-bucket build (r6), one exchange +
+            # a numpy sort per bucket (see build_postings_bucketed)
             lineage = build_postings_bucketed(
                 spark, tf, postings_dir, ts_dir,
                 block_size=block_size, n_buckets=n_buckets,
                 salt_df_threshold=salt_df_threshold, salt_count=salt_count,
                 seg=seg)
-        if ts_dir is not None:
-            _append_lineage(spark, store, lineage, phase="build", epoch=0)
-    else:
-        blocks = build_postings(
-            tf, block_size=block_size, n_buckets=n_buckets,
-            salt_df_threshold=salt_df_threshold, salt_count=salt_count,
-            seg=seg,
-        )
-        # blocks arrive pre-clustered by bucket and pre-sorted by
-        # term_id (build_postings shuffles ONCE on the output
-        # partitioning), so the partitionBy write emits exactly one
-        # file per bucket with sorted term_id row groups
-        with job_description(spark, "build:postings"):
-            blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-                postings_dir)
+        else:
+            # over-budget buckets: the streaming builder, whose carry
+            # bounds a task's memory, writes its blocks in its own task
+            lineage = write_blocks(
+                _clustered(tf, n_buckets), postings_dir, ts_dir,
+                build=_make_partition_builder(
+                    block_size, n_buckets, seg,
+                    salt_df_threshold=salt_df_threshold,
+                    salt_count=salt_count))
     toks.unpersist()
+    if ts_dir is not None:
+        _append_lineage(spark, store, lineage, phase="build", epoch=0)
     # every bucket gets a dir, empty ones too: merges and compactions
     # read a missing bucket dir as lost data and refuse to go on
-    for d in [postings_dir] + ([] if ts_dir is None else [ts_dir]):
+    for d in filter(None, (postings_dir, ts_dir)):
         for bkt in range(n_buckets):
             os.makedirs(os.path.join(d, f"bucket={bkt}"), exist_ok=True)
-    if ts_dir is not None and not bucketed:
-        with job_description(spark, "build:stats"):
-            write_term_stats_and_lineage(spark, store, phase="build",
-                                         epoch=0, buckets=range(n_buckets))
 
     store.write_manifest({
         "engine": "super_rag_spark", "version": 5,  # 4 = +seg column; 5 = xxhash64 term ids
@@ -823,10 +886,12 @@ def write_term_stats_and_lineage(spark: SparkSession, store: IndexStorage, *,
                                  phase: str, epoch: int,
                                  buckets: Iterable[int]) -> None:
     """term_stats + lineage of ``buckets`` of ``epoch``, from the
-    buckets' postings files: ONE Spark job, one task per bucket, each
-    reading only its blocks' ``term_id`` and ``n`` columns and writing
-    the bucket's term_stats through the one writer,
-    :func:`_write_term_stats_bucket`. A re-run replaces what an earlier
+    buckets' postings files — for an append's hit and staged buckets,
+    whose dirs hold the old blocks' file next to the staging file; every
+    other writer writes term_stats with the blocks (:func:`_write_buckets`).
+    ONE Spark job, one task per bucket, each reading only its blocks'
+    ``term_id`` and ``n`` columns and writing the bucket's term_stats
+    through :func:`_write_term_stats_bucket`. A re-run replaces what an earlier
     attempt left. Each bucket that holds postings then gets a lineage
     record of ``phase``. A missing postings bucket dir is lost data:
     FileNotFoundError naming the bucket, before any task runs."""

@@ -36,10 +36,13 @@ What each protocol rewrites:
   seg=0 — bit-identical to a from-scratch build of the live corpus.
 - ``compact_tail``: re-encode every segment but the largest as one.
 
-term_stats follow one rule in every protocol: a bucket whose postings
-did not change hardlinks its old term_stats file; every other bucket's
-df is recomputed from its new blocks by build.write_term_stats_and_lineage
-(one task per bucket), never folded from the old table. A tail fold
+A rewritten bucket is written by the task that rebuilt its blocks,
+through build's one postings writer. term_stats follow one rule: a
+bucket whose postings did not change hardlinks its old term_stats file;
+every other bucket's df is recomputed from its new blocks, never folded
+from the old table — in compact_index's rewrite task itself, and for an
+append, whose staged buckets hold two files, by
+build.write_term_stats_and_lineage (one task per bucket). A tail fold
 changes no postings set, so all of its term_stats hardlink.
 
 Exactly-once streaming: ``stream_batch_id`` is recorded in the manifest
@@ -58,7 +61,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_arrow
-from .build import (build_index, build_postings, job_description,
+from .build import (_append_lineage, build_index, build_postings,
+                    job_description, write_blocks,
                     write_term_stats_and_lineage)
 from .sidecars import _hardlink_tree, _link_files
 from .storage import POSTINGS_SCHEMA, IndexStorage
@@ -101,8 +105,8 @@ def _wipe_foreign_epoch(store: IndexStorage, epoch: int, phase: str,
                         new_docs_df: DataFrame | None) -> None:
     """A crashed run of a DIFFERENT protocol may have left partial
     epoch dirs + lineage at this target epoch; resuming over them would
-    interleave two protocols' outputs (hardlink-keeps vs dynamic
-    overwrites). Wipe the target epoch and ALL its lineage so this run
+    interleave two protocols' outputs (hardlink-keeps vs
+    rewrites). Wipe the target epoch and ALL its lineage so this run
     starts clean. Same-protocol resume (only ``phase`` commits present)
     is untouched — that's the supported crash-resume path."""
     commits = {ph: store.committed_buckets(ph, epoch) for ph in _EPOCH_PHASES}
@@ -175,15 +179,19 @@ def _run_waves(spark: SparkSession, store: IndexStorage, phase: str,
 def _rewrite_buckets(spark: SparkSession, store: IndexStorage, ep: _Epoch,
                      wave: list[int], *, removed: DataFrame | None = None,
                      hits: DataFrame | None = None,
-                     keep_seg: int | None = None, seg: int = 0) -> None:
+                     keep_seg: int | None = None, seg: int = 0,
+                     stats_phase: str | None = None) -> None:
     """THE wave body: read the wave's old buckets once, carry rows
     verbatim or decode them, drop ``removed`` doc_ids from the decoded
     postings, re-encode as segment ``seg`` and replace exactly these
     bucket dirs. Rows carried verbatim: blocks of terms NOT in ``hits``
     (bucket, term_id) when given; blocks of segment ``keep_seg`` when
-    given; none otherwise (decode everything)."""
+    given; none otherwise (decode everything). With ``stats_phase``,
+    each bucket's term_stats are written from the same blocks, with
+    lineage records of that phase."""
     old_root = store.postings_dir_for(ep.old)
     new_dir = store.postings_dir_for(ep.new)
+    ts_dir = store.term_stats_dir_for(ep.new) if stats_phase else None
     # ONE scan over exactly these bucket dirs; basePath recovers the
     # bucket partition column without a union-per-dir plan. A missing
     # old bucket dir raises: carried forward as empty, its postings
@@ -212,20 +220,22 @@ def _rewrite_buckets(spark: SparkSession, store: IndexStorage, ep: _Epoch,
     out = build_postings(decoded, seg=seg, **ep.cfg)
     if keep is not None:
         out = keep.unionByName(out)
-    # dynamic partition overwrite: replaces exactly this wave's bucket
-    # dirs, leaves linked/committed buckets alone; idempotent on resume.
-    # The sort leads with the partition column the writer orders by:
-    # sorted on (term_id, ...) alone, a rewritten bucket file came out
-    # in no term_id order, which the query engine's term directory
-    # needs (tests/test_term_directory.py)
-    (out.repartition("bucket")
-     .sortWithinPartitions("bucket", "term_id", "salt", "block_id")
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("bucket").parquet(new_dir))
-    # buckets rewritten fully empty get no dir from the writer
-    for b in wave:
-        os.makedirs(os.path.join(new_dir, f"bucket={b}"), exist_ok=True)
+    # each task writes whole buckets in the order the writer takes:
+    # bucket, then term_id (the term directory needs sorted term_ids);
+    # seg orders a carried and a rebuilt run of one (term, salt) block
+    lineage = write_blocks(
+        out.repartition("bucket")
+        .sortWithinPartitions("bucket", "term_id", "salt", "block_id", "seg"),
+        new_dir, ts_dir)
+    # a bucket rewritten fully empty gets no file from the writer: it
+    # ends as an empty dir, clear of what an earlier attempt left
+    for b in set(wave) - {r["bucket"] for r in lineage}:
+        for d in filter(None, (new_dir, ts_dir)):
+            shutil.rmtree(os.path.join(d, f"bucket={b}"), ignore_errors=True)
+            os.makedirs(os.path.join(d, f"bucket={b}"))
+    if stats_phase:
+        _append_lineage(spark, store, lineage, phase=stats_phase,
+                        epoch=ep.new)
 
 
 def _write_doc_stats(spark: SparkSession, store: IndexStorage, epoch: int,
@@ -372,8 +382,8 @@ def merge_append(spark: SparkSession, index_dir: str,
         # 4. untouched buckets hardlink their old files outside any Spark
         #    job (O(1) per file — THE O(delta) fast path); hit buckets
         #    rewrite their hit groups in waves. Both then link the staging
-        #    blocks in as the new segment (after the rewrite: its partition
-        #    overwrite wipes links a crashed earlier attempt left).
+        #    blocks in as the new segment (after the rewrite: its writer
+        #    removes links a crashed earlier attempt left).
         new_dir = store.postings_dir_for(ep.new)
 
         def link_staging(wave: list[int]) -> None:
@@ -467,9 +477,11 @@ def compact_index(spark: SparkSession, index_dir: str, *,
         tomb = store.tombstones(spark, ep.old)
         if tomb is not None:
             tomb = tomb.select("doc_id").distinct()
+        # the rewrite writes each bucket's term_stats with its blocks
         _run_waves(spark, store, "compact", ep, buckets,
-                   lambda wave: _rewrite_buckets(spark, store, ep, wave,
-                                                 removed=tomb),
+                   lambda wave: _rewrite_buckets(
+                       spark, store, ep, wave, removed=tomb,
+                       stats_phase="compact_stats"),
                    fail_after_bucket)
 
     with job_description(spark, "compact:stats"):
@@ -477,8 +489,6 @@ def compact_index(spark: SparkSession, index_dir: str, *,
         if tomb is not None:
             ds = ds.join(tomb, "doc_id", "left_anti")
         n_docs, avgdl = _write_doc_stats(spark, store, ep.new, ds)
-        write_term_stats_and_lineage(spark, store, phase="compact_stats",
-                                     epoch=ep.new, buckets=buckets)
 
     # positions fold to canonical blocking (consuming tombstones);
     # vocab hardlinks or folds losses (index/sidecars.py, r5)

@@ -13,7 +13,9 @@ Plan shape (build): tokenize -> posexplode -> groupBy(term, doc)
 sorted positions [the ONE shuffle] -> repartition on the output bucket
 -> sortWithinPartitions(term_id, doc_id) -> mapInPandas vectorized
 block encode (whole-batch varint + byte carving, the same device as
-index/build._build_blocks_arrays) -> partitionBy(bucket) write.
+index/build._build_blocks_arrays) -> partitionBy(bucket) write. A
+build whose buckets fit a task (index/build._fits_a_task, the postings
+build's rule) takes the postings build's spill instead.
 
 Lifecycle: positions are built per EPOCH (build_positions after
 build_index) and CARRIED through merges at O(delta) cost (r5,
@@ -44,8 +46,8 @@ from pyspark.sql import functions as F
 
 from .. import analysis
 from ..codec import decode_positions_block, encode_varint_sizes
-from .build import (extract, extract_any, spread_input, term_id_expr,
-                    tokens_from_text)
+from .build import (_fits_a_task, _spilled, extract, extract_any,
+                    spread_input, term_id_expr, tokens_from_text)
 from .storage import POSITIONS_SCHEMA, IndexStorage
 
 
@@ -206,10 +208,9 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     # partitioned by bucket, then a per-bucket numpy lexsort + run
     # collapse; positions within a (term, doc) run come out sorted by
     # the lexsort exactly as sort_array ordered them.
-    est_bytes = int(store.corpus_stats(spark, epoch)["total_tokens"]) * 20
-    from .build import BUCKET_MEM_BUDGET
-    if ((64 << 20) <= est_bytes
-            and est_bytes // max(1, n_buckets) <= BUCKET_MEM_BUDGET):
+    if _fits_a_task(
+            int(store.corpus_stats(spark, epoch)["total_tokens"]) * 20,
+            n_buckets):
         _build_positions_bucketed(spark, pos_rows, out_dir,
                                   block_size=block_size,
                                   n_buckets=n_buckets)
@@ -233,73 +234,46 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
 def _build_positions_bucketed(spark: SparkSession, pos_rows: DataFrame,
                               out_dir: str, *, block_size: int,
                               n_buckets: int) -> None:
-    """Columnar per-bucket positions build (mirror of
-    index/build.build_postings_bucketed; see there for the spill
-    rationale and the exchange/file-count rule)."""
+    """Columnar per-bucket positions build through the postings build's
+    spill (index/build._spilled): each bucket's task lexsorts its
+    (term_id, doc_id, pos) rows and writes its position blocks."""
     import os
     import shutil
 
-    spill_dir = out_dir.rstrip("/") + "._posspill"
-    packed = pos_rows.withColumn(
-        "bucket_p", F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int"))
-    n_map = packed.rdd.getNumPartitions()
-    writer = (packed if n_map * n_buckets <= 16384
-              else packed.repartition(n_buckets, "bucket_p"))
-    shutil.rmtree(spill_dir, ignore_errors=True)
-    shutil.rmtree(out_dir, ignore_errors=True)
     bs, nb = int(block_size), int(n_buckets)
-    try:
-        (writer.write.mode("overwrite").partitionBy("bucket_p")
-         .option("compression", "snappy")
-         .option("parquet.enable.dictionary", "false").parquet(spill_dir))
 
-        def run(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import pyarrow as pa
-            import pyarrow.dataset as pads
-            import pyarrow.parquet as pq
+    def build(b: int, cols: dict) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-            for pdf in pdfs:
-                for b in pdf["bucket"].tolist():
-                    part = os.path.join(spill_dir, f"bucket_p={b}")
-                    if not os.path.isdir(part):
-                        continue
-                    tbl = pads.dataset(part, format="parquet").to_table()
-                    if tbl.num_rows == 0:
-                        continue
-                    terms = tbl["term_id"].to_numpy(zero_copy_only=False)
-                    docs = tbl["doc_id"].to_numpy(zero_copy_only=False)
-                    poss = tbl["pos"].to_numpy(
-                        zero_copy_only=False).astype(np.int64)
-                    del tbl
-                    order = np.lexsort((poss, docs, terms))
-                    terms, docs, poss = terms[order], docs[order], poss[order]
-                    m = len(terms)
-                    new_run = np.empty(m, dtype=bool)
-                    new_run[0] = True
-                    np.not_equal(terms[1:], terms[:-1], out=new_run[1:])
-                    new_run[1:] |= docs[1:] != docs[:-1]
-                    rstarts = np.flatnonzero(new_run)
-                    row_off = np.concatenate((rstarts, [m])).astype(np.int64)
-                    out_pdf = _build_position_blocks(
-                        terms[rstarts], docs[rstarts], poss, row_off, bs, nb)
-                    dest = os.path.join(out_dir, f"bucket={b}")
-                    os.makedirs(dest, exist_ok=True)
-                    pq.write_table(
-                        pa.Table.from_pandas(
-                            out_pdf.drop(columns=["bucket"]),
-                            preserve_index=False),
-                        os.path.join(dest, "part-00000.parquet"))
-                    yield pd.DataFrame([{"bucket": b}])
+        terms, docs = cols.pop("term_id"), cols.pop("doc_id")
+        poss = cols.pop("pos").astype(np.int64)
+        order = np.lexsort((poss, docs, terms))
+        terms, docs, poss = terms[order], docs[order], poss[order]
+        rstarts = np.flatnonzero(np.r_[True, (terms[1:] != terms[:-1])
+                                       | (docs[1:] != docs[:-1])])
+        row_off = np.r_[rstarts, len(terms)].astype(np.int64)
+        out_pdf = _build_position_blocks(
+            terms[rstarts], docs[rstarts], poss, row_off, bs, nb)
+        dest = os.path.join(out_dir, f"bucket={b}")
+        os.makedirs(dest, exist_ok=True)
+        # the streaming path's (parquet-mr's) layout: no dictionary on
+        # the nearly distinct term_id, docs_enc and pos_enc
+        pq.write_table(
+            pa.Table.from_pandas(out_pdf.drop(columns=["bucket"]),
+                                 preserve_index=False),
+            os.path.join(dest, "part-00000.parquet"),
+            use_dictionary=["block_id", "n", "first_doc_id", "last_doc_id",
+                            "cnt_enc"])
 
-        buckets_df = spark.createDataFrame(
-            [(b,) for b in range(nb)], "bucket int").repartition(nb)
-        os.makedirs(out_dir, exist_ok=True)
-        buckets_df.mapInPandas(run, schema="bucket int").count()
-        # has_positions() keys on the _SUCCESS marker Spark's own
-        # committer would have written
-        open(os.path.join(out_dir, "_SUCCESS"), "w").close()
-    finally:
-        shutil.rmtree(spill_dir, ignore_errors=True)
+    shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)
+    _spilled(spark, pos_rows.withColumn(
+        "bucket_p", F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int")),
+        out_dir.rstrip("/") + "._posspill", n_buckets, build)
+    # has_positions() keys on the _SUCCESS marker Spark's own
+    # committer would have written
+    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
 
 
 def decode_positions_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

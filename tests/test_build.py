@@ -3,10 +3,10 @@ corpus stats or postings (upsert-by-doc_id semantics, matching the
 reference's content-addressed upsert). An input in fewer splits than
 cores is spread over every core before extraction, and the files the
 build writes do not depend on it: postings and term_stats bytes are the
-same per bucket on both postings paths, and an append of a one-row-group
-delta answers as the oracle. build_index, merge_append, compact_index
-and compact_tail name their Spark jobs by phase and leave the caller's
-job description as they found it."""
+same per bucket, on the spill and on the streaming builder, and an
+append of a one-row-group delta answers as the oracle. build_index,
+merge_append, compact_index and compact_tail name their Spark jobs by
+phase and leave the caller's job description as they found it."""
 
 import os
 
@@ -14,9 +14,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from super_rag_spark.index.build import (build_index, build_postings_bucketed,
-                                         spread_input, term_id_expr,
-                                         tokens_from_text)
+from super_rag_spark.index import build
+from super_rag_spark.index.build import build_index, spread_input
 from super_rag_spark.index.merge import (compact_index, compact_tail,
                                          merge_append)
 from super_rag_spark.index.storage import IndexStorage
@@ -153,41 +152,38 @@ def test_spread_input_leaves_a_wide_input(spark, split_inputs,
 
 
 def test_spread_leaves_the_index_unchanged(spark, split_inputs, tmp_path,
-                                           split_per_file):
+                                           split_per_file, monkeypatch):
     """The same docs from one row group (spread) and from eight files
     (read as they are) give byte-identical postings and term_stats per
-    bucket on the streaming path (build_index) and on the bucketed path
-    (build_postings_bucketed), and the same doc_stats rows."""
+    bucket, and the same doc_stats rows. The spill and the streaming
+    builder (forced by a zero bucket budget) write the same bytes too:
+    both go through the one postings writer."""
     frames = {name: spark.read.parquet(split_inputs[name])
               for name in ("one", "many")}
     assert spread_input(spark, frames["one"]) is not frames["one"]
     assert spread_input(spark, frames["many"]) is frames["many"]
 
+    def files(store):
+        return tuple(_bucket_bytes(getattr(store, d)(0))
+                     for d in ("postings_dir_for", "term_stats_dir_for"))
+
     stores = {name: build_index(spark, df, str(tmp_path / name), **CFG)
               for name, df in frames.items()}
     one, many = stores["one"], stores["many"]
-    for d in ("postings_dir_for", "term_stats_dir_for"):
-        got = _bucket_bytes(getattr(one, d)(0))
-        assert len(got) == CFG["n_buckets"]
-        assert got == _bucket_bytes(getattr(many, d)(0)), d
+    spill = files(one)
+    assert len(spill[0]) == len(spill[1]) == CFG["n_buckets"]
+    assert all(spill[0].values())
+    assert files(many) == spill
 
     def rows(store):
         return sorted(tuple(r) for r in store.doc_stats(spark, 0).collect())
 
     assert rows(one) == rows(many)
 
-    bucketed = {}
+    monkeypatch.setattr(build, "BUCKET_MEM_BUDGET", 0)
     for name, df in frames.items():
-        tf = (tokens_from_text(spread_input(spark, df))
-              .selectExpr("doc_id", "dl", "explode(tokens) AS term")
-              .select(term_id_expr("term").alias("term_id"), "doc_id",
-                      F.lit(1).alias("tf"), "dl"))
-        pdir, tsdir = (str(tmp_path / f"b-{name}" / t)
-                       for t in ("postings", "term_stats"))
-        build_postings_bucketed(spark, tf, pdir, tsdir, **CFG)
-        bucketed[name] = (_bucket_bytes(pdir), _bucket_bytes(tsdir))
-    assert bucketed["one"][0]
-    assert bucketed["one"] == bucketed["many"]
+        streamed = build_index(spark, df, str(tmp_path / f"s-{name}"), **CFG)
+        assert files(streamed) == spill, name
 
 
 def test_append_of_one_row_group_delta(spark, webtext_sf0001_path, tmp_path,
@@ -243,7 +239,7 @@ def test_build_names_its_jobs_and_restores_the_description(
         build_index(spark, df, str(tmp_path / str(caller)), **CFG)
         assert sc.getLocalProperty("spark.job.description") == caller
         assert names == ["build:extract", "build:doc_stats",
-                         "build:postings", "build:stats"]
+                         "build:postings"]
 
 
 def test_append_names_its_jobs_and_restores_the_description(

@@ -73,8 +73,10 @@ def test_delete_then_merge_compacts(spark, corpus, tmp_path, assert_same_index):
 def test_resume_replaces_stale_term_stats(spark, tmp_path, assert_same_index):
     """A stale parquet file in the target epoch's term_stats dir of a
     bucket that lost postings (hit) and of one that only gained them
-    (gain-only) is gone after a crashed merge resumes: each dir holds
-    one file, and the index equals a fresh build. Every term occurs in
+    (gain-only), and one in the hit bucket's postings dir, are gone
+    after a crashed merge resumes: each term_stats dir holds one file,
+    the postings dir holds the rewritten file and the staging links,
+    and the index equals a fresh build. Every term occurs in
     one doc, so each block spans one doc and the upsert's range probe
     hits exactly the buckets of the upserted doc's old terms."""
     mk = lambda rs: spark.createDataFrame(rs, "url string, text string")
@@ -98,7 +100,16 @@ def test_resume_replaces_stale_term_stats(spark, tmp_path, assert_same_index):
         os.makedirs(os.path.join(ts_new, f"bucket={b}"), exist_ok=True)
         pq.write_table(stale, os.path.join(ts_new, f"bucket={b}",
                                            "part-99999-stale.parquet"))
+    pdir = os.path.join(eng.store.postings_dir_for(1), f"bucket={min(hit)}")
+    os.makedirs(pdir, exist_ok=True)
+    pq.write_table(pq.read_table(os.path.join(
+        eng.store.postings_dir_for(0), f"bucket={min(hit)}",
+        "part-00000.parquet")), os.path.join(pdir, "part-99999-stale.parquet"))
+    staged = os.listdir(os.path.join(eng.store.root, "staging_e1",
+                                     "postings_e0", f"bucket={min(hit)}"))
     merge_append(spark, eng.store.root, None)
+    assert sorted(os.listdir(pdir)) == sorted(
+        ["part-00000.parquet"] + [f"seg1-{f}" for f in staged])
     for b in planted:
         files = [f for f in os.listdir(os.path.join(ts_new, f"bucket={b}"))
                  if not f.startswith((".", "_"))]

@@ -27,13 +27,10 @@ import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import PythonException
-from pyspark.sql import functions as F
 
 from super_rag_spark import codec
 from super_rag_spark.analysis import doc_id_for_url, term_id_for, tokenize
-from super_rag_spark.index import termdir
-from super_rag_spark.index.build import (build_postings_bucketed,
-                                         term_id_expr, tokens_from_text)
+from super_rag_spark.index import build, termdir
 from super_rag_spark.index.merge import (compact_index, compact_tail,
                                          merge_append)
 from super_rag_spark.index.storage import bucket_of_term
@@ -125,6 +122,24 @@ def _assert_sorted_row_groups(store, step):
     assert stats["max_row_group_compressed_bytes"] == largest, step
 
 
+def _assert_one_layout(store, step):
+    """Every postings file of the live epoch has no dictionary page on
+    term_id, docs_enc or dls_enc, its bucket dir holds no temp file, and
+    ``ingest.py stats`` names one parquet writer."""
+    pdir = store.postings_dir_for(store.epoch())
+    for b in os.listdir(pdir):
+        names = os.listdir(os.path.join(pdir, b))
+        assert not [f for f in names if f.endswith(".tmp")], (step, b, names)
+        for f in names:
+            md = pq.read_metadata(os.path.join(pdir, b, f))
+            cols = md.schema.names
+            for c in ("term_id", "docs_enc", "dls_enc"):
+                for g in range(md.num_row_groups):
+                    meta = md.row_group(g).column(cols.index(c))
+                    assert not meta.has_dictionary_page, (step, b, f, c)
+    assert len(_ingest_stats(store.root)["postings_writers"]) == 1, step
+
+
 def _assert_term_stats_from_blocks(store, step):
     """Every term_stats bucket dir of the live epoch holds at most one
     parquet file, whose term_ids strictly increase and whose rows are
@@ -156,49 +171,36 @@ def _assert_term_stats_from_blocks(store, step):
         n_files, n_terms), step
 
 
-def _rebuild_bucketed(spark, store, docs):
-    """Replace epoch 0's postings and term_stats with the output of the
-    bucketed (spill + NumPy sort) writer over the same corpus; build_index
-    takes that path only for corpora of millions of tokens."""
-    tf = (tokens_from_text(docs)
-          .selectExpr("doc_id", "dl", "explode(tokens) AS term")
-          .select(term_id_expr("term").alias("term_id"), "doc_id",
-                  F.lit(1).alias("tf"), "dl"))
-    pdir, tsdir = store.postings_dir_for(0), store.term_stats_dir_for(0)
-    shutil.rmtree(pdir)
-    shutil.rmtree(tsdir)
-    build_postings_bucketed(spark, tf, pdir, tsdir, **CFG)
-    for d in (pdir, tsdir):
-        for b in range(CFG["n_buckets"]):
-            os.makedirs(os.path.join(d, f"bucket={b}"), exist_ok=True)
-
-
-def test_every_writer_keeps_row_groups_sorted(spark, rows, tmp_path):
-    """The streaming build, the bucketed build, an upserting append, a
-    pure append, a tail compaction and a full compaction each leave
-    sorted row groups with term_id statistics and one term_stats file
-    per bucket whose df is the bucket's own block sum, and the driver
-    answers as the oracle after every step."""
+def test_every_writer_keeps_row_groups_sorted(spark, rows, tmp_path,
+                                              monkeypatch):
+    """The streaming build (forced by a zero bucket budget), the spill
+    build, an upserting append, a pure append, a tail compaction and a
+    full compaction each leave sorted row groups with term_id
+    statistics, in the one postings layout with no temp file left, and
+    one term_stats file per bucket whose df is the bucket's own block
+    sum; the driver answers as the oracle after every step."""
     base, d1, d2 = rows[:160], rows[160:200], rows[200:240]
     upsert = [(base[0][0], base[0][1] + " semudo muro")]
     queries = ["semudo muro fuboname", "gaku", "zibapevi semudo"]
 
     def check(eng, corpus, step):
         _assert_sorted_row_groups(eng.store, step)
+        _assert_one_layout(eng.store, step)
         _assert_term_stats_from_blocks(eng.store, step)
         fresh = BM25Engine(spark, eng.store.root)
         oracle = build_oracle(corpus)
         for q in queries:
             _assert_oracle(fresh.topk(q, 10), oracle.topk(q, 10))
 
-    streaming = BM25Engine(spark, str(tmp_path / "s")).build(
-        _docs(spark, base), **CFG)
+    with monkeypatch.context() as m:
+        m.setattr(build, "BUCKET_MEM_BUDGET", 0)
+        streaming = BM25Engine(spark, str(tmp_path / "s")).build(
+            _docs(spark, base), **CFG)
     check(streaming, base, "streaming build")
 
     eng = BM25Engine(spark, str(tmp_path / "b")).build(
         _docs(spark, base), **CFG)
-    _rebuild_bucketed(spark, eng.store, _docs(spark, base))
-    check(eng, base, "bucketed build")
+    check(eng, base, "spill build")
 
     live = dict(base)
     merge_append(spark, eng.store.root, _docs(spark, upsert + d1))
