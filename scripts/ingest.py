@@ -51,10 +51,10 @@ def _session(master: str | None):
 def _stats(index_dir: str) -> dict:
     """Metadata-only index snapshot (north-rule 'metrics'): manifest,
     per-bucket size distribution (the skew signal), the parquet writers
-    (``created_by``) of the postings files, term_stats file and term
-    counts, pending tombstones, lineage record count. Reads parquet
-    FOOTERS at most — no Spark session, no postings decode; safe to run
-    against a live index of any size."""
+    (``created_by``) of the postings and positions files, term_stats
+    file and term counts, pending tombstones, lineage record count.
+    Reads parquet FOOTERS at most — no Spark session, no postings
+    decode; safe to run against a live index of any size."""
     import statistics
 
     import pyarrow.parquet as pq
@@ -88,6 +88,12 @@ def _stats(index_dir: str) -> dict:
                         for c in range(rg.num_columns))
                     for rg in map(md.row_group, range(md.num_row_groups)))
         bucket_bytes[entry.split("=", 1)[1]] = sz
+
+    # the positions sidecar's parquet writers (empty without one)
+    pos_writers = {pq.read_metadata(os.path.join(root, f)).created_by
+                   for root, _, files in os.walk(
+                       store.positions_dir_for(m["epoch"]))
+                   for f in files if f.endswith(".parquet")}
 
     # term_stats: one file per bucket, one row per term (footers only)
     ts_rows = [pq.read_metadata(os.path.join(root, f)).num_rows
@@ -126,6 +132,7 @@ def _stats(index_dir: str) -> dict:
         },
         "max_row_group_compressed_bytes": max(rg_bytes),
         "postings_writers": sorted(writers),
+        "positions_writers": sorted(pos_writers),
         "term_stats_files": len(ts_rows),
         "n_terms": sum(ts_rows),
         "pending_tombstones": tombs,

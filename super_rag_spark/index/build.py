@@ -34,10 +34,11 @@ Scale notes (100 TB / 10^12 docs):
   exchange.
 - blocks have one writer, _write_buckets, run inside the task that
   built them: the spill's per-bucket task, the streaming builder's
-  mapInArrow and a merge's rewrite. It writes each bucket's postings
-  file in one fixed layout and, when given a term_stats dir, the
-  bucket's term_stats from the same blocks (df = the sum of block
-  ``n`` per term_id, _write_term_stats_bucket), and returns the
+  mapInArrow and a merge's rewrite, for postings and for the positions
+  sidecar (index/positions.py, index/sidecars.py) alike. It writes
+  each bucket's file in one fixed layout and, when given a term_stats
+  dir, the bucket's term_stats from the same blocks (df = the sum of
+  block ``n`` per term_id, _write_term_stats_bucket), and returns the
   bucket's lineage row. A build's blocks never return to the JVM and
   are never read back. An append's staged buckets hold two files, so
   write_term_stats_and_lineage recomputes their df from the files.
@@ -185,6 +186,49 @@ def tokens_from_text(df: DataFrame, url_col: str = "url", text_col: str = "text"
 
 # ---------------------------------------------------------------- block build
 
+def _new_runs(*keys: np.ndarray) -> np.ndarray:
+    """True at each row where a run of equal ``keys`` starts."""
+    new = np.zeros(len(keys[0]), dtype=bool)
+    new[:1] = True
+    for k in keys:
+        new[1:] |= k[1:] != k[:-1]
+    return new
+
+
+def _blocks_of(new_group: np.ndarray, block_size: int):
+    """Rows cut into blocks of at most ``block_size`` rows, never across
+    a group (a group starts where ``new_group`` is set): the blocks'
+    start rows, end rows and block_id within their group."""
+    n = len(new_group)
+    group_starts = np.flatnonzero(new_group)
+    group_id = np.cumsum(new_group) - 1          # per row
+    off_in_group = np.arange(n) - group_starts[group_id]
+    is_block_start = new_group | (off_in_group % block_size == 0)
+    starts = np.flatnonzero(is_block_start)
+    block_of_row = np.cumsum(is_block_start) - 1
+    ids = np.arange(len(starts)) - block_of_row[group_starts][group_id[starts]]
+    return starts, np.concatenate((starts[1:], [n])), ids
+
+
+def _gaps(values: np.ndarray, restarts: np.ndarray) -> np.ndarray:
+    """Delta gaps of ``values``, absolute at the ``restarts`` rows, so a
+    block (or a doc's position run) decodes standalone."""
+    gaps = np.empty(len(values), dtype=np.int64)
+    gaps[:1] = values[:1]
+    np.subtract(values[1:], values[:-1], out=gaps[1:])
+    gaps[restarts] = values[restarts]
+    return gaps
+
+
+def _carve(buf: bytes, nbytes: np.ndarray, lo: np.ndarray,
+           hi: np.ndarray) -> list[bytes]:
+    """Slices of a whole-batch varint buffer, the i-th holding values
+    lo[i]..hi[i]-1 (LEB128 is per-value independent, so each slice is
+    bit-identical to an encode of its own values)."""
+    ends = np.concatenate(([0], np.cumsum(nbytes)))
+    return [buf[a:b] for a, b in zip(ends[lo].tolist(), ends[hi].tolist())]
+
+
 def _build_blocks_arrays(terms, salts, doc_ids, tfs, dls,
                          block_size: int, n_buckets: int, seg: int = 0):
     """Vectorized block build over CONTIGUOUS, doc_id-sorted (term,
@@ -202,72 +246,34 @@ def _build_blocks_arrays(terms, salts, doc_ids, tfs, dls,
     block_min_dl) corner, computed at query time."""
     import pyarrow as pa
 
-    n = len(terms)
-
     # Fully vectorized (r3): the former per-block loop paid
     # ~30 small-array NumPy dispatches per block — at 172 k blocks /
     # sf0.1 that loop WAS the build bottleneck once extraction got
     # fast. Instead: derive every block boundary index-side, varint-
     # encode each stream ONCE for the whole batch, and carve per-block
-    # buffers at cumulative byte offsets (LEB128 is per-value
-    # independent, so the slices are bit-identical to per-block
-    # encodes — asserted by test_vectorized_block_builder_bit_identity).
-    new_group = np.empty(n, dtype=bool)
-    new_group[0] = True
-    np.not_equal(terms[1:], terms[:-1], out=new_group[1:])
-    new_group[1:] |= salts[1:] != salts[:-1]
-    group_starts = np.flatnonzero(new_group)
-    group_id = np.cumsum(new_group) - 1          # per posting row
-    off_in_group = np.arange(n) - group_starts[group_id]
-    is_block_start = new_group | (off_in_group % block_size == 0)
-    block_starts = np.flatnonzero(is_block_start)
-    block_ends = np.concatenate((block_starts[1:], [n]))
-    block_of_row = np.cumsum(is_block_start) - 1
-    block_group = group_id[block_starts]
-    block_ids = (np.arange(len(block_starts))
-                 - block_of_row[group_starts][block_group])
+    # buffers at cumulative byte offsets (asserted bit-identical to
+    # per-block encodes by test_vectorized_block_builder_bit_identity).
+    starts, ends, block_ids = _blocks_of(_new_runs(terms, salts), block_size)
 
-    # delta-gap doc ids: absolute at each BLOCK start (a block decodes
-    # standalone), gaps elsewhere — same rule encode_block applied
-    gaps = np.empty(n, dtype=np.int64)
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:])
-    gaps[block_starts] = doc_ids[block_starts]
+    def carve(values) -> list[bytes]:
+        return _carve(*encode_varint_sizes(values), starts, ends)
 
-    docs_buf, docs_nb = encode_varint_sizes(gaps)
-    tfs_buf, tfs_nb = encode_varint_sizes(tfs)
-    dls_buf, dls_nb = encode_varint_sizes(dls)
-
-    def carve(buf: bytes, nbytes: np.ndarray) -> list[bytes]:
-        ends = np.cumsum(nbytes)
-        lo = ends[block_starts] - nbytes[block_starts]
-        hi = ends[block_ends - 1]
-        return [buf[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
-
-    bterms = terms[block_starts]
-    nb = len(block_starts)
-    i32 = pa.int32()
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(bterms, type=pa.int64()),
-            pa.array(salts[block_starts].astype(np.int32), type=i32),
-            pa.array(np.full(nb, seg, dtype=np.int32), type=i32),
-            pa.array(block_ids.astype(np.int32), type=i32),
-            pa.array((block_ends - block_starts).astype(np.int32), type=i32),
-            pa.array(doc_ids[block_starts], type=pa.int64()),
-            pa.array(doc_ids[block_ends - 1], type=pa.int64()),
-            pa.array(carve(docs_buf, docs_nb), type=pa.binary()),
-            pa.array(carve(tfs_buf, tfs_nb), type=pa.binary()),
-            pa.array(carve(dls_buf, dls_nb), type=pa.binary()),
-            pa.array(np.maximum.reduceat(tfs, block_starts).astype(np.int32),
-                     type=i32),
-            pa.array(np.minimum.reduceat(dls, block_starts).astype(np.int32),
-                     type=i32),
-            pa.array((bterms % n_buckets).astype(np.int32), type=i32),
-        ],
-        names=["term_id", "salt", "seg", "block_id", "n", "first_doc_id",
-               "last_doc_id", "docs_enc", "tfs_enc", "dls_enc",
-               "block_max_tf", "block_min_dl", "bucket"],
-    )
+    bterms = terms[starts]
+    return pa.record_batch({
+        "term_id": bterms,
+        "salt": salts[starts].astype(np.int32),
+        "seg": np.full(len(starts), seg, dtype=np.int32),
+        "block_id": block_ids.astype(np.int32),
+        "n": (ends - starts).astype(np.int32),
+        "first_doc_id": doc_ids[starts],
+        "last_doc_id": doc_ids[ends - 1],
+        "docs_enc": carve(_gaps(doc_ids, starts)),
+        "tfs_enc": carve(tfs),
+        "dls_enc": carve(dls),
+        "block_max_tf": np.maximum.reduceat(tfs, starts).astype(np.int32),
+        "block_min_dl": np.minimum.reduceat(dls, starts).astype(np.int32),
+        "bucket": (bterms % n_buckets).astype(np.int32),
+    })
 
 
 def _collapse_build(terms, doc_ids, tfdl, *, block_size: int,
@@ -286,24 +292,15 @@ def _collapse_build(terms, doc_ids, tfdl, *, block_size: int,
     already overflowed upstream (its earlier salt subgroups were
     flushed), so it is salted regardless of its remaining size here."""
     shift = np.int64(analysis.DOC_ID_BITS - (salt_count.bit_length() - 1))
-    m = len(terms)
     # collapse (term, doc) runs -> one posting per run, tf summed
-    new_post = np.empty(m, dtype=bool)
-    new_post[0] = True
-    np.not_equal(terms[1:], terms[:-1], out=new_post[1:])
-    new_post[1:] |= doc_ids[1:] != doc_ids[:-1]
-    pstarts = np.flatnonzero(new_post)
+    pstarts = np.flatnonzero(_new_runs(terms, doc_ids))
     tfs = np.add.reduceat(tfdl >> np.int64(32), pstarts)
     pterms = terms[pstarts]
     pdocs = doc_ids[pstarts]
     pdls = tfdl[pstarts] & np.int64(0xFFFFFFFF)
     # term groups over postings; group size == the term's df
-    k = len(pterms)
-    new_grp = np.empty(k, dtype=bool)
-    new_grp[0] = True
-    np.not_equal(pterms[1:], pterms[:-1], out=new_grp[1:])
-    gstarts = np.flatnonzero(new_grp)
-    gsizes = np.diff(np.append(gstarts, k))
+    gstarts = np.flatnonzero(_new_runs(pterms))
+    gsizes = np.diff(np.append(gstarts, len(pterms)))
     salted_grp = gsizes > int(salt_df_threshold)
     if first_salted:
         salted_grp[0] = True
@@ -459,13 +456,13 @@ def _fits_a_task(total_bytes: int, n_buckets: int) -> bool:
 
 _PART = "part-00000.parquet"
 
-# The one postings file layout: dictionary pages only on the columns
-# parquet-mr also keeps dictionary-encoded here (term_id, docs_enc and
-# dls_enc are nearly all distinct; pages on them made the index larger
-# and the queries slower), and row groups cut at a fixed row count, so
-# a file's bytes do not depend on the batches its blocks came in.
-_DICT_COLUMNS = ["salt", "seg", "block_id", "n", "first_doc_id",
-                 "last_doc_id", "tfs_enc", "block_max_tf", "block_min_dl"]
+# The one block file layout: dictionary pages on every column but the
+# nearly distinct ones (term_id and the doc and position streams;
+# pages on them made the index larger and the queries slower, and
+# parquet-mr leaves them plain too), and row groups cut at a fixed row
+# count, so a file's bytes do not depend on the batches its blocks
+# came in.
+_PLAIN_COLUMNS = {"term_id", "docs_enc", "dls_enc", "pos_enc"}
 _ROW_GROUP_ROWS = 1 << 20
 
 
@@ -531,15 +528,16 @@ def _row_groups(batches: Iterable) -> Iterator:
         yield pa.Table.from_batches(pending).combine_chunks()
 
 
-def _write_buckets(blocks: Iterable, postings_dir: str,
+def _write_buckets(blocks: Iterable, blocks_dir: str,
                    ts_dir: str | None) -> Iterator[dict]:
-    """THE postings writer. ``blocks``: record batches of
-    POSTINGS_SCHEMA rows, of one or more buckets, sorted by bucket and
-    in term order within one. Each bucket's rows become the only file
-    of its dir under ``postings_dir``, in the one layout, through a
-    temp file (:func:`_publish`); with ``ts_dir`` its term_stats are
-    written from the same blocks. Yields each bucket's lineage row once
-    its files are in place."""
+    """THE block writer, of postings and positions alike. ``blocks``:
+    record batches of POSTINGS_SCHEMA or POSITIONS_SCHEMA rows, of one
+    or more buckets, sorted by bucket and in term order within one.
+    Each bucket's rows become the only file of its dir under
+    ``blocks_dir``, in the one layout, through a temp file
+    (:func:`_publish`); with ``ts_dir`` its term_stats are written from
+    the same blocks. Yields each bucket's lineage row once its files
+    are in place."""
     import itertools
 
     import pyarrow.parquet as pq
@@ -556,13 +554,14 @@ def _write_buckets(blocks: Iterable, postings_dir: str,
         if b in done:
             raise ValueError(f"the blocks of bucket {b} are not contiguous")
         done.add(b)
-        d = os.path.join(postings_dir, f"bucket={b}")
+        d = os.path.join(blocks_dir, f"bucket={b}")
         os.makedirs(d, exist_ok=True)
         ids, ns = [], []
         tables = _row_groups(rb for _, rb in run)
         first = next(tables)
-        with pq.ParquetWriter(_tmp_part(d), first.schema,
-                              use_dictionary=_DICT_COLUMNS) as out:
+        with pq.ParquetWriter(_tmp_part(d), first.schema, use_dictionary=[
+                c for c in first.column_names
+                if c not in _PLAIN_COLUMNS]) as out:
             for tbl in itertools.chain([first], tables):
                 out.write_table(tbl, row_group_size=_ROW_GROUP_ROWS)
                 ids.append(tbl["term_id"].to_numpy())
@@ -573,16 +572,17 @@ def _write_buckets(blocks: Iterable, postings_dir: str,
                                _write_term_stats_bucket(ts_dir, b, ids, ns))}
 
 
-def write_blocks(frame: DataFrame, postings_dir: str, ts_dir: str | None,
+def write_blocks(frame: DataFrame, blocks_dir: str, ts_dir: str | None,
                  build: Callable = iter) -> list[dict]:
     """One Spark job whose tasks write their partition's blocks through
-    :func:`_write_buckets`: ``frame``'s rows, or what ``build`` (the
-    streaming builder) makes of them, so the blocks never return to the
-    JVM. Returns the lineage rows of the buckets written."""
+    :func:`_write_buckets`: ``frame``'s rows, or what ``build`` (a
+    streaming builder of postings or positions) makes of them, so the
+    blocks never return to the JVM. Returns the lineage rows of the
+    buckets written."""
     def run(batches):
         import pyarrow as pa
 
-        for row in _write_buckets(build(batches), postings_dir, ts_dir):
+        for row in _write_buckets(build(batches), blocks_dir, ts_dir):
             yield pa.RecordBatch.from_pylist([row])
 
     return [r.asDict() for r in frame.mapInArrow(

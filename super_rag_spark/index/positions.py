@@ -9,13 +9,16 @@ blocks, bucket = term_id % B dirs, term_id-sorted files for row-group
 pruning), so a phrase query reads candidates' position runs with the
 same bucket + term pruning the scorer uses and never opens the corpus.
 
-Plan shape (build): tokenize -> posexplode -> groupBy(term, doc)
-sorted positions [the ONE shuffle] -> repartition on the output bucket
--> sortWithinPartitions(term_id, doc_id) -> mapInPandas vectorized
-block encode (whole-batch varint + byte carving, the same device as
-index/build._build_blocks_arrays) -> partitionBy(bucket) write. A
-build whose buckets fit a task (index/build._fits_a_task, the postings
-build's rule) takes the postings build's spill instead.
+Plan shape (build): tokenize -> posexplode -> when a bucket fits a
+task (index/build._fits_a_task, the postings build's rule), the
+postings build's spill: one exchange partitioned by bucket, then per
+bucket a numpy lexsort + vectorized block encode. Over-budget buckets
+stream: groupBy(term, doc) sorted positions -> repartition on the
+output bucket -> sortWithinPartitions(bucket, term_id, doc_id) -> one
+mapInArrow that encodes and writes. Either way the task that built a
+bucket's blocks writes its file through the one block writer
+(index/build._write_buckets), so both paths give the same bytes; every
+bucket gets a dir, empty ones too, and _SUCCESS comes last.
 
 Lifecycle: positions are built per EPOCH (build_positions after
 build_index) and CARRIED through merges at O(delta) cost (r5,
@@ -37,6 +40,8 @@ Spark build.
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Iterator
 
 import numpy as np
@@ -44,97 +49,67 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import analysis
 from ..codec import decode_positions_block, encode_varint_sizes
-from .build import (_fits_a_task, _spilled, extract, extract_any,
-                    spread_input, term_id_expr, tokens_from_text)
-from .storage import POSITIONS_SCHEMA, IndexStorage
+from .build import (_blocks_of, _carve, _fits_a_task, _gaps, _new_runs,
+                    _spilled, _write_buckets, extract, extract_any,
+                    spread_input, term_id_expr, tokens_from_text,
+                    write_blocks)
+from .storage import IndexStorage
 
 
 def _build_position_blocks(term_ids: np.ndarray, doc_ids: np.ndarray,
                            flat_pos: np.ndarray, row_off: np.ndarray,
-                           block_size: int, n_buckets: int) -> pd.DataFrame:
+                           block_size: int, n_buckets: int):
     """Vectorized positions-block build over a (term_id, doc_id)-sorted
-    run of rows. ``row_off``: int64 array of len(rows)+1 — row i's
+    run of rows; returns a pyarrow.RecordBatch matching
+    POSITIONS_SCHEMA. ``row_off``: int64 array of len(rows)+1 — row i's
     positions are flat_pos[row_off[i]:row_off[i+1]]. Whole-batch varint
-    encode + per-block byte carving (LEB128 values are independent, so
-    slices are bit-identical to per-block encodes)."""
-    n = len(term_ids)
+    encode + per-block byte carving, as the postings build does."""
+    import pyarrow as pa
+
     counts = (row_off[1:] - row_off[:-1]).astype(np.int64)
+    starts, ends, block_ids = _blocks_of(_new_runs(term_ids), block_size)
+    # positions restart absolute at each doc
+    pos_gaps = _gaps(flat_pos, row_off[:-1][counts > 0])
 
-    new_group = np.empty(n, dtype=bool)
-    new_group[0] = True
-    np.not_equal(term_ids[1:], term_ids[:-1], out=new_group[1:])
-    group_starts = np.flatnonzero(new_group)
-    group_id = np.cumsum(new_group) - 1
-    off_in_group = np.arange(n) - group_starts[group_id]
-    is_block_start = new_group | (off_in_group % block_size == 0)
-    block_starts = np.flatnonzero(is_block_start)
-    block_ends = np.concatenate((block_starts[1:], [n]))
-    block_of_row = np.cumsum(is_block_start) - 1
-    block_group = group_id[block_starts]
-    block_ids = (np.arange(len(block_starts))
-                 - block_of_row[group_starts][block_group])
+    def carve(values, lo=starts, hi=ends) -> list[bytes]:
+        return _carve(*encode_varint_sizes(values), lo, hi)
 
-    doc_gaps = np.empty(n, dtype=np.int64)
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=doc_gaps[1:])
-    doc_gaps[block_starts] = doc_ids[block_starts]
-
-    pos_gaps = np.empty(len(flat_pos), dtype=np.int64)
-    if len(flat_pos):
-        pos_gaps[0] = flat_pos[0]
-        np.subtract(flat_pos[1:], flat_pos[:-1], out=pos_gaps[1:])
-        row_first = row_off[:-1][counts > 0]
-        pos_gaps[row_first] = flat_pos[row_first]  # absolute per doc
-
-    docs_buf, docs_nb = encode_varint_sizes(doc_gaps)
-    cnt_buf, cnt_nb = encode_varint_sizes(counts)
-    pos_buf, pos_nb = encode_varint_sizes(pos_gaps)
-
-    def carve_rows(buf: bytes, nbytes: np.ndarray) -> list[bytes]:
-        ends = np.cumsum(nbytes)
-        lo = ends[block_starts] - nbytes[block_starts]
-        hi = ends[block_ends - 1]
-        return [buf[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
-
-    def carve_pos(buf: bytes, nbytes: np.ndarray) -> list[bytes]:
-        ends = np.concatenate(([0], np.cumsum(nbytes)))
-        lo = ends[row_off[block_starts]]
-        hi = ends[row_off[block_ends]]
-        return [buf[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
-
-    bterms = term_ids[block_starts]
-    return pd.DataFrame({
+    bterms = term_ids[starts]
+    return pa.record_batch({
         "term_id": bterms,
         "block_id": block_ids.astype(np.int32),
-        "n": (block_ends - block_starts).astype(np.int32),
-        "first_doc_id": doc_ids[block_starts],
-        "last_doc_id": doc_ids[block_ends - 1],
-        "docs_enc": carve_rows(docs_buf, docs_nb),
-        "cnt_enc": carve_rows(cnt_buf, cnt_nb),
-        "pos_enc": carve_pos(pos_buf, pos_nb),
+        "n": (ends - starts).astype(np.int32),
+        "first_doc_id": doc_ids[starts],
+        "last_doc_id": doc_ids[ends - 1],
+        "docs_enc": carve(_gaps(doc_ids, starts)),
+        "cnt_enc": carve(counts),
+        "pos_enc": carve(pos_gaps, row_off[starts], row_off[ends]),
         "bucket": (bterms % n_buckets).astype(np.int32),
     })
 
 
 def _make_positions_builder(block_size: int, n_buckets: int):
-    """mapInPandas body over a partition sorted by (term_id, doc_id):
-    rows (term_id, doc_id, positions array<int>). Batches may split a
-    term run; the trailing partial run carries into the next batch."""
+    """mapInArrow body over a partition sorted by (bucket, term_id,
+    doc_id) (:func:`clustered_positions`): rows (term_id, doc_id,
+    positions array); yields the blocks as record batches. A list
+    column is read as its offsets and flattened values. Batches may
+    split a term run; the trailing partial run carries into the next
+    batch."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches):
         carry = None  # (terms, docs, flat, row_off)
-        for pdf in batches:
-            if not len(pdf):
+        for rb in batches:
+            if not rb.num_rows:
                 continue
-            terms = pdf["term_id"].to_numpy()
-            docs = pdf["doc_id"].to_numpy()
-            lists = [np.asarray(p, dtype=np.int64)
-                     for p in pdf["positions"]]
-            flat = (np.concatenate(lists) if lists
-                    else np.empty(0, dtype=np.int64))
-            row_off = np.concatenate(
-                ([0], np.cumsum([len(p) for p in lists]))).astype(np.int64)
+            terms = rb.column("term_id").to_numpy(zero_copy_only=False)
+            docs = rb.column("doc_id").to_numpy(zero_copy_only=False)
+            lists = rb.column("positions")
+            offs = lists.offsets.to_numpy().astype(np.int64)
+            # values ignore a slice's offset; offsets honour it
+            flat = lists.values.to_numpy(zero_copy_only=False)[
+                offs[0]:offs[-1]].astype(np.int64)
+            row_off = offs - offs[0]
             if carry is not None:
                 cterms, cdocs, cflat, coff = carry
                 terms = np.concatenate((cterms, terms))
@@ -157,6 +132,40 @@ def _make_positions_builder(block_size: int, n_buckets: int):
             yield _build_position_blocks(*carry, block_size, n_buckets)
 
     return gen
+
+
+def clustered_positions(rows: DataFrame, n_buckets: int) -> DataFrame:
+    """(term_id, doc_id, positions) rows as the positions builder takes
+    them: ONE shuffle by the output bucket, each partition sorted by
+    (bucket, term_id, doc_id), so a task's blocks come out in the order
+    build._write_buckets takes (two buckets of one partition would
+    otherwise interleave)."""
+    return (rows
+            .withColumn("bucket_p",
+                        F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int"))
+            .repartition(n_buckets, "bucket_p")
+            .sortWithinPartitions("bucket_p", "term_id", "doc_id")
+            .select("term_id", "doc_id", "positions"))
+
+
+def write_positions(clustered: DataFrame, out_dir: str, *, block_size: int,
+                    n_buckets: int) -> None:
+    """The streaming positions build into a cleared ``out_dir``: each
+    task builds and writes the blocks of its :func:`clustered_positions`
+    partition (build.write_blocks)."""
+    shutil.rmtree(out_dir, ignore_errors=True)
+    write_blocks(clustered, out_dir, None,
+                 build=_make_positions_builder(block_size, n_buckets))
+    _complete(out_dir, n_buckets)
+
+
+def _complete(out_dir: str, n_buckets: int) -> None:
+    """Every bucket of a positions epoch gets a dir, empty ones too, so
+    a missing one reads as lost data (IndexStorage.bucket_dir); the
+    _SUCCESS marker has_positions() keys on goes last."""
+    for b in range(n_buckets):
+        os.makedirs(os.path.join(out_dir, f"bucket={b}"), exist_ok=True)
+    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
 
 
 def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
@@ -200,14 +209,8 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
                 F.col("pos").cast("int").alias("pos"))
     )
     out_dir = store.positions_dir_for(epoch)
-    # r6: same columnar spill device as the postings build
-    # (index/build.build_postings_bucketed) — the former plan paid a
-    # groupBy collect_list shuffle of every token position, a second
-    # repartition of the same data as arrays, a Spark row sort, and a
-    # per-row np.asarray in the Python builder. Now one spill write
-    # partitioned by bucket, then a per-bucket numpy lexsort + run
-    # collapse; positions within a (term, doc) run come out sorted by
-    # the lexsort exactly as sort_array ordered them.
+    # the spill's lexsort orders a (term, doc) run's positions exactly
+    # as the streaming path's sort_array does
     if _fits_a_task(
             int(store.corpus_stats(spark, epoch)["total_tokens"]) * 20,
             n_buckets):
@@ -215,19 +218,10 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
                                   block_size=block_size,
                                   n_buckets=n_buckets)
     else:
-        blocks = (
-            pos_rows
-            .groupBy("term_id", "doc_id")
-            .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-            .withColumn("bucket_p",
-                        F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int"))
-            .repartition(n_buckets, "bucket_p")
-            .sortWithinPartitions("term_id", "doc_id")
-            .select("term_id", "doc_id", "positions")
-            .mapInPandas(_make_positions_builder(block_size, n_buckets),
-                         schema=POSITIONS_SCHEMA)
-        )
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(out_dir)
+        write_positions(clustered_positions(
+            pos_rows.groupBy("term_id", "doc_id")
+            .agg(F.sort_array(F.collect_list("pos")).alias("positions")),
+            n_buckets), out_dir, block_size=block_size, n_buckets=n_buckets)
     return store
 
 
@@ -236,44 +230,26 @@ def _build_positions_bucketed(spark: SparkSession, pos_rows: DataFrame,
                               n_buckets: int) -> None:
     """Columnar per-bucket positions build through the postings build's
     spill (index/build._spilled): each bucket's task lexsorts its
-    (term_id, doc_id, pos) rows and writes its position blocks."""
-    import os
-    import shutil
-
+    (term_id, doc_id, pos) rows, builds its position blocks and writes
+    them (build._write_buckets)."""
     bs, nb = int(block_size), int(n_buckets)
 
-    def build(b: int, cols: dict) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
+    def build(b: int, cols: dict) -> dict:
         terms, docs = cols.pop("term_id"), cols.pop("doc_id")
         poss = cols.pop("pos").astype(np.int64)
         order = np.lexsort((poss, docs, terms))
         terms, docs, poss = terms[order], docs[order], poss[order]
-        rstarts = np.flatnonzero(np.r_[True, (terms[1:] != terms[:-1])
-                                       | (docs[1:] != docs[:-1])])
+        rstarts = np.flatnonzero(_new_runs(terms, docs))
         row_off = np.r_[rstarts, len(terms)].astype(np.int64)
-        out_pdf = _build_position_blocks(
+        rb = _build_position_blocks(
             terms[rstarts], docs[rstarts], poss, row_off, bs, nb)
-        dest = os.path.join(out_dir, f"bucket={b}")
-        os.makedirs(dest, exist_ok=True)
-        # the streaming path's (parquet-mr's) layout: no dictionary on
-        # the nearly distinct term_id, docs_enc and pos_enc
-        pq.write_table(
-            pa.Table.from_pandas(out_pdf.drop(columns=["bucket"]),
-                                 preserve_index=False),
-            os.path.join(dest, "part-00000.parquet"),
-            use_dictionary=["block_id", "n", "first_doc_id", "last_doc_id",
-                            "cnt_enc"])
+        return next(_write_buckets([rb], out_dir, None))
 
     shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
     _spilled(spark, pos_rows.withColumn(
         "bucket_p", F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int")),
         out_dir.rstrip("/") + "._posspill", n_buckets, build)
-    # has_positions() keys on the _SUCCESS marker Spark's own
-    # committer would have written
-    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
+    _complete(out_dir, n_buckets)
 
 
 def decode_positions_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

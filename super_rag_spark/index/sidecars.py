@@ -17,8 +17,11 @@ POSITIONS — mirrors the postings segment device exactly:
     prefixed "segment" files — zero decode for a pure append;
   * (bucket, term) groups that LOSE docs (deletes/upserts, found by
     the same conservative block [first,last] range probe the postings
-    merge uses) are decoded, filtered, and re-encoded in ONE job;
-    untouched buckets hardlink file-by-file.
+    merge uses) are decoded, filtered, and re-encoded in ONE job,
+    whose tasks write each hit bucket's kept and rebuilt blocks
+    through the one block writer (build._write_buckets);
+    untouched buckets hardlink file-by-file. compact_index clears its
+    target dir and writes every bucket through the same writer.
   Position blocks carry no seg column: "segments" are just extra
   parquet files whose doc ranges may overlap other files of the same
   term. The distributed verify path is unordered (collect_list), and
@@ -40,9 +43,10 @@ the staging sidecars were never built (crash landed between the
 staging index build and the staging sidecar build), the new epoch
 simply omits that sidecar — has_positions()/has_vocab() turn false and
 readers degrade exactly as they did pre-r5. Everything here is
-idempotent (dynamic partition overwrite + FileExistsError-tolerant
-hardlinks), so a resumed merge re-runs it safely; the manifest switch
-in merge.py stays the single visibility point.
+idempotent (the block writer leaves a rewritten bucket dir holding
+its one file and nothing else, and hardlinks tolerate
+FileExistsError), so a resumed merge re-runs it safely; the manifest
+switch in merge.py stays the single visibility point.
 
 No reference analog: super-rag's indexes are upserted as a unit by the
 vector DB (/root/reference/vectordbs/qdrant.py:55-71); this is the
@@ -57,16 +61,21 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .build import write_blocks
+from .positions import (DECODED_POSITIONS_SCHEMA, _complete,
+                        _make_positions_builder, build_positions,
+                        clustered_positions, decode_positions_map_in_pandas,
+                        write_positions)
 from .storage import POSITIONS_SCHEMA, IndexStorage
 
 
 def _link_files(src_dir: str, dst_dir: str, prefix: str = "") -> None:
     """Hardlink every parquet file of one bucket dir into another
-    (copy across filesystems). Idempotent: existing targets are kept."""
-    if not os.path.isdir(src_dir):
-        return
+    (copy across filesystems). Idempotent: existing targets are kept.
+    A missing ``src_dir`` is lost data and raises."""
+    names = os.listdir(src_dir)
     os.makedirs(dst_dir, exist_ok=True)
-    for fn in os.listdir(src_dir):
+    for fn in names:
         if not fn.endswith(".parquet"):
             continue
         target = os.path.join(dst_dir, prefix + fn)
@@ -107,8 +116,6 @@ def build_staging_sidecars(spark: SparkSession, store: IndexStorage,
         return
     live = store.epoch()
     if store.has_positions(live) and not sstore.has_positions(0):
-        from .positions import build_positions
-
         build_positions(spark, new_docs_df, sstore.root,
                         text_is_extracted=text_is_extracted,
                         extract_mode=extract_mode)
@@ -146,10 +153,10 @@ def _carry_positions(spark: SparkSession, store: IndexStorage,
         return
     if not sstore.has_positions(0):
         return  # degradation contract (module docstring)
-    n_buckets = int(store.read_manifest()["n_buckets"])
+    m = store.read_manifest()
+    n_buckets, block_size = int(m["n_buckets"]), int(m["block_size"])
     old_dir = store.positions_dir_for(old_epoch)
     new_dir = store.positions_dir_for(epoch)
-    os.makedirs(new_dir, exist_ok=True)
 
     # 1. groups that LOSE docs — the same conservative [first,last]
     #    range probe the postings merge runs, against the POSITIONS
@@ -170,7 +177,9 @@ def _carry_positions(spark: SparkSession, store: IndexStorage,
                        hits.select("bucket").distinct().collect()}
 
     # 2. rebuild the hit buckets' changed groups in ONE job; non-hit
-    #    groups of the same bucket are carried as rows (no decode)
+    #    groups of the same bucket are carried as rows (no decode). Each
+    #    task writes whole buckets, in the order the block writer takes
+    #    (block_id restarts in each segment file a carried term spans)
     if hit_buckets:
         old_pos = (spark.read.schema(POSITIONS_SCHEMA).parquet(old_dir)
                    .where(F.col("bucket").isin(sorted(hit_buckets))))
@@ -179,56 +188,49 @@ def _carry_positions(spark: SparkSession, store: IndexStorage,
             ht = hits.select("term_id").distinct()
             keep = old_pos.join(ht, "term_id", "left_anti")
             old_pos = old_pos.join(ht, "term_id", "left_semi")
-        out = _rebuild_positions(store, old_pos, removed_small)
+        out = (_rebuilt_positions(old_pos, removed_small, n_buckets)
+               .mapInArrow(_make_positions_builder(block_size, n_buckets),
+                           schema=POSITIONS_SCHEMA))
         if keep is not None:
             out = keep.unionByName(out)
-        (out.repartition("bucket")
-         .sortWithinPartitions("term_id", "block_id")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(new_dir))
+        written = write_blocks(
+            out.repartition("bucket").sortWithinPartitions(
+                "bucket", "term_id", "block_id", "first_doc_id"),
+            new_dir, None)
+        # a hit bucket rewritten fully empty ends as an empty dir, clear
+        # of what an earlier attempt left
+        for b in hit_buckets - {r["bucket"] for r in written}:
+            shutil.rmtree(os.path.join(new_dir, f"bucket={b}"),
+                          ignore_errors=True)
+            os.makedirs(os.path.join(new_dir, f"bucket={b}"))
 
     # 3. hardlink untouched buckets, then 4. link the staging delta's
-    #    blocks in as prefixed "segment" files (AFTER the rebuild write:
-    #    a resume re-run's dynamic overwrite would wipe earlier links)
-    for name in os.listdir(old_dir):
-        if name.startswith("bucket="):
-            if int(name.split("=")[1]) not in hit_buckets:
-                _link_files(os.path.join(old_dir, name),
-                            os.path.join(new_dir, name))
-    sdir = sstore.positions_dir_for(0)
-    for name in os.listdir(sdir):
-        if name.startswith("bucket="):
-            _link_files(os.path.join(sdir, name),
-                        os.path.join(new_dir, name),
-                        prefix=f"seg{epoch}-")
-    open(os.path.join(new_dir, "_SUCCESS"), "w").close()
+    #    blocks in as prefixed "segment" files (AFTER the rewrite: its
+    #    writer removes every other file of a rewritten bucket dir, such
+    #    as links a crashed earlier attempt left)
+    for b in range(n_buckets):
+        dst = os.path.join(new_dir, f"bucket={b}")
+        if b not in hit_buckets:
+            _link_files(store.bucket_dir("positions", old_epoch, b), dst)
+        _link_files(sstore.bucket_dir("positions", 0, b), dst,
+                    prefix=f"seg{epoch}-")
+    _complete(new_dir, n_buckets)
     if hits is not None:
         hits.unpersist()
 
 
-def _rebuild_positions(store: IndexStorage, blocks: DataFrame,
-                       removed: DataFrame | None) -> DataFrame:
-    """Decode position ``blocks``, drop ``removed`` doc_ids and re-block
-    the rest canonically (the build's bucketing, sort and blocking)."""
-    from .positions import (DECODED_POSITIONS_SCHEMA, _make_positions_builder,
-                            decode_positions_map_in_pandas)
-
-    manifest = store.read_manifest()
-    n_buckets = int(manifest["n_buckets"])
+def _rebuilt_positions(blocks: DataFrame, removed: DataFrame | None,
+                       n_buckets: int) -> DataFrame:
+    """Decode position ``blocks`` and drop ``removed`` doc_ids: the rest
+    as (term_id, doc_id, positions) rows clustered for the positions
+    builder, which re-blocks them canonically (the build's bucketing,
+    sort and blocking)."""
     dec = (blocks.drop("bucket")
            .mapInPandas(decode_positions_map_in_pandas,
                         schema=DECODED_POSITIONS_SCHEMA))
     if removed is not None:
         dec = dec.join(removed, "doc_id", "left_anti")
-    return (dec.withColumn("bucket_p", F.pmod(
-                F.col("term_id"), F.lit(n_buckets)).cast("int"))
-            .repartition(n_buckets, "bucket_p")
-            .sortWithinPartitions("term_id", "doc_id")
-            .select("term_id", "doc_id", "positions")
-            .mapInPandas(_make_positions_builder(int(manifest["block_size"]),
-                                                 n_buckets),
-                         schema=POSITIONS_SCHEMA))
+    return clustered_positions(dec, n_buckets)
 
 
 def _carry_vocab(spark: SparkSession, store: IndexStorage,
@@ -306,9 +308,11 @@ def carry_sidecars_compact(spark: SparkSession, store: IndexStorage, *,
     if store.has_positions(old_epoch):
         old_pos = (spark.read.schema(POSITIONS_SCHEMA)
                    .parquet(store.positions_dir_for(old_epoch)))
-        (_rebuild_positions(store, old_pos, tomb)
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(store.positions_dir_for(epoch)))
+        m = store.read_manifest()
+        n_buckets = int(m["n_buckets"])
+        write_positions(_rebuilt_positions(old_pos, tomb, n_buckets),
+                        store.positions_dir_for(epoch),
+                        block_size=int(m["block_size"]), n_buckets=n_buckets)
 
     if not store.has_vocab(old_epoch):
         return

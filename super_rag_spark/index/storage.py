@@ -139,11 +139,11 @@ class IndexStorage:
           epoch's files after its commit: FileNotFoundError naming both
           epochs. The manifest is read only on this failure path. An
           epoch past the live one is being written by a merge.
-        - Build, merge and compaction write every ``postings`` and
-          ``term_stats`` bucket dir, so a missing one is lost data:
-          FileNotFoundError.
-        - The sidecar builds write only the buckets that hold terms, so
-          a missing ``positions``/``vocab`` dir is an empty bucket: None.
+        - Build, merge and compaction write every ``postings``,
+          ``term_stats`` and ``positions`` bucket dir, so a missing one
+          is lost data: FileNotFoundError.
+        - The vocab build writes only the buckets that hold terms, so a
+          missing ``vocab`` dir is an empty bucket: None.
         """
         p = os.path.join(getattr(self, f"{table}_dir_for")(epoch),
                          f"bucket={bucket}")
@@ -154,7 +154,7 @@ class IndexStorage:
             raise FileNotFoundError(
                 f"{p}: the query's snapshot is epoch {epoch},"
                 f" but the index has moved to epoch {live}")
-        if table in ("postings", "term_stats"):
+        if table != "vocab":
             raise FileNotFoundError(
                 f"{table} bucket {bucket} of epoch {epoch} is missing: {p}")
         return None

@@ -259,7 +259,8 @@ class BM25Engine:
     def _dataset(self, snap: Snapshot, table: str, bucket: int):
         """pyarrow dataset of one sidecar bucket (``positions`` or
         ``vocab``), opened once per epoch through the cache; None for a
-        bucket the sidecar wrote no terms to (IndexStorage.bucket_dir)."""
+        vocab bucket its build wrote no terms to, and a missing
+        positions bucket raises (IndexStorage.bucket_dir)."""
         key = (snap.epoch, table, bucket)
         dataset = self._cache.get(key)
         if dataset is None:
@@ -772,7 +773,7 @@ class BM25Engine:
         tid = term_id_for(term)
         dataset = self._dataset(snap, "positions",
                                 bucket_of_term_id(tid, snap.n_buckets))
-        rows = [] if dataset is None else sorted(dataset.to_table(
+        rows = sorted(dataset.to_table(
             filter=ds.field("term_id") == tid,
             columns=["block_id", "n", "first_doc_id",
                      "docs_enc", "cnt_enc", "pos_enc"]).to_pylist(),

@@ -221,6 +221,8 @@ def _verified_by_positions(spark, snap, phrases, cand: DataFrame,
             " build_positions, or pass docs_df for match-then-verify")
     term_ids = sorted(qpdf["term_id"].unique().tolist())
     buckets = sorted({bucket_of_term_id(t, snap.n_buckets) for t in term_ids})
+    for b in buckets:  # a missing bucket dir raises, before the scan
+        snap.store.bucket_dir("positions", snap.epoch, b)
     blocks = (spark.read.schema(POSITIONS_SCHEMA)
               .parquet(snap.store.positions_dir_for(snap.epoch))
               .where(F.col("bucket").isin(buckets))

@@ -83,6 +83,22 @@ def assert_same_index(spark):
 
 
 @pytest.fixture(scope="session")
+def bucket_bytes():
+    """{bucket dir name: sorted file bytes} of a bucket-partitioned
+    table dir, to compare two writers' files byte for byte."""
+    def read(table_dir):
+        out = {}
+        for b in sorted(os.listdir(table_dir)):
+            if b.startswith("bucket="):
+                d = os.path.join(table_dir, b)
+                out[b] = sorted(open(os.path.join(d, f), "rb").read()
+                                for f in os.listdir(d) if f.endswith(".parquet"))
+        return out
+
+    return read
+
+
+@pytest.fixture(scope="session")
 def built_index(spark, webtext_sf0001_path, tmp_path_factory):
     """Index over sf0.001 built from the html column (full pipeline),
     with a low salt threshold so the head-term salting path is exercised."""

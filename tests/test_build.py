@@ -116,18 +116,6 @@ def split_per_file(spark):
     spark.conf.unset(key)
 
 
-def _bucket_bytes(table_dir):
-    """{bucket dir name: sorted file bytes} of a bucket-partitioned
-    table."""
-    out = {}
-    for b in sorted(os.listdir(table_dir)):
-        if b.startswith("bucket="):
-            d = os.path.join(table_dir, b)
-            out[b] = sorted(open(os.path.join(d, f), "rb").read()
-                            for f in os.listdir(d) if f.endswith(".parquet"))
-    return out
-
-
 def test_spread_input_uses_every_core(spark, split_inputs):
     """A one-row-group file is one split; spread_input puts its rows in
     min(cores, rows) partitions."""
@@ -152,7 +140,8 @@ def test_spread_input_leaves_a_wide_input(spark, split_inputs,
 
 
 def test_spread_leaves_the_index_unchanged(spark, split_inputs, tmp_path,
-                                           split_per_file, monkeypatch):
+                                           split_per_file, monkeypatch,
+                                           bucket_bytes):
     """The same docs from one row group (spread) and from eight files
     (read as they are) give byte-identical postings and term_stats per
     bucket, and the same doc_stats rows. The spill and the streaming
@@ -164,7 +153,7 @@ def test_spread_leaves_the_index_unchanged(spark, split_inputs, tmp_path,
     assert spread_input(spark, frames["many"]) is frames["many"]
 
     def files(store):
-        return tuple(_bucket_bytes(getattr(store, d)(0))
+        return tuple(bucket_bytes(getattr(store, d)(0))
                      for d in ("postings_dir_for", "term_stats_dir_for"))
 
     stores = {name: build_index(spark, df, str(tmp_path / name), **CFG)

@@ -27,18 +27,23 @@ def _docs(spark, rs):
 
 def test_build_writes_every_bucket_dir(spark, tmp_path):
     """Two docs cannot fill 8 buckets: the empty ones still get dirs,
-    after the build and after a compaction, so a missing dir always
-    means lost data."""
+    postings, term_stats and positions alike, after the build, an
+    append and a compaction, so a missing dir always means lost data."""
     eng = BM25Engine(spark, str(tmp_path / "tiny")).build(
-        _docs(spark, [("https://t/1", "one"), ("https://t/2", "two")]), **CFG)
-    for compact in (False, True):
-        if compact:
+        _docs(spark, [("https://t/1", "one"), ("https://t/2", "two")]),
+        positions=True, **CFG)
+    for step in ("build", "append", "compact"):
+        if step == "append":
+            merge_append(spark, eng.store.root,
+                         _docs(spark, [("https://t/3", "three")]))
+        if step == "compact":
             compact_index(spark, eng.store.root)
         epoch = eng.store.epoch()
         for d in (eng.store.postings_dir_for(epoch),
-                  eng.store.term_stats_dir_for(epoch)):
+                  eng.store.term_stats_dir_for(epoch),
+                  eng.store.positions_dir_for(epoch)):
             assert {n for n in os.listdir(d) if n.startswith("bucket=")} == {
-                f"bucket={b}" for b in range(8)}, (compact, d)
+                f"bucket={b}" for b in range(8)}, (step, d)
 
 
 def test_missing_bucket_dir_fails_loudly(spark, rows, tmp_path):
@@ -85,18 +90,19 @@ def test_stats_pass_names_a_lost_postings_bucket(spark, rows, tmp_path,
     assert eng.store.epoch() == 0
 
 
-@pytest.mark.parametrize("table", ["postings", "term_stats"])
+@pytest.mark.parametrize("table", ["postings", "term_stats", "positions"])
 def test_missing_bucket_dir_fails_queries(spark, rows, tmp_path, table):
-    """A query touching a lost postings or term_stats bucket dir raises
-    on the driver and distributed paths instead of returning only the
-    other buckets' hits."""
+    """A query touching a lost postings, term_stats or positions bucket
+    dir raises on the driver and distributed paths instead of returning
+    only the other buckets' hits (an index-only phrase query for
+    positions)."""
     import shutil
 
     from super_rag_spark.analysis import tokenize
     from super_rag_spark.index.storage import bucket_of_term
 
     eng = BM25Engine(spark, str(tmp_path / table)).build(
-        _docs(spark, rows[:100]), **CFG)
+        _docs(spark, rows[:100]), positions=table == "positions", **CFG)
     terms = sorted(set(tokenize(rows[0][1])))
     lost = bucket_of_term(terms[0], CFG["n_buckets"])
     other = next(t for t in terms
@@ -104,6 +110,12 @@ def test_missing_bucket_dir_fails_queries(spark, rows, tmp_path, table):
     q = f"{terms[0]} {other}"
     shutil.rmtree(os.path.join(getattr(eng.store, f"{table}_dir_for")(0),
                                f"bucket={lost}"))
+    if table == "positions":
+        with pytest.raises(FileNotFoundError, match=f"bucket {lost} "):
+            eng.phrase_topk(q, None, k=10)
+        with pytest.raises(FileNotFoundError, match=f"bucket {lost} "):
+            eng.phrase_batch([(0, q)], None, k=10).collect()
+        return
     with pytest.raises(FileNotFoundError, match=f"bucket {lost} "):
         eng.topk(q, 10)
     for plan in (eng.query_batch, eng.query_batch_wand):

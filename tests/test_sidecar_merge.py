@@ -127,10 +127,12 @@ def test_merged_sidecar_queries_match_fresh(spark, merged_setup):
     assert eng.suggest("z", k=5) == ref.suggest("z", k=5)
 
 
-def test_sidecars_through_compact_and_tail(spark, merged_setup, tmp_path):
+def test_sidecars_through_compact_and_tail(spark, merged_setup, tmp_path,
+                                           bucket_bytes):
     """compact_index consumes tombstones (positions fold to canonical
-    blocking, vocab df drops the deleted docs' terms); compact_tail
-    hardlinks both through. Each stage must equal a fresh build."""
+    blocking, byte for byte a fresh build's files; vocab df drops the
+    deleted docs' terms); compact_tail hardlinks both through. Each
+    stage must equal a fresh build."""
     eng, merged_rows, _ = merged_setup
     idx = eng.store.root
     # another delete, then full compact
@@ -144,6 +146,8 @@ def test_sidecars_through_compact_and_tail(spark, merged_setup, tmp_path):
             == _vocab_rows(spark, ref.store, 0))
     assert (_decoded_positions(spark, eng.store, eng.store.epoch())
             == _decoded_positions(spark, ref.store, 0))
+    assert (bucket_bytes(eng.store.positions_dir_for(eng.store.epoch()))
+            == bucket_bytes(ref.store.positions_dir_for(0)))
 
     # two segment appends then a tail fold: sidecars hardlink through
     extra = [(f"https://sc.example/t{i}", _text(200 + i))
@@ -162,6 +166,47 @@ def test_sidecars_through_compact_and_tail(spark, merged_setup, tmp_path):
     for phrase in ["alpha beta", "kappa sigma"]:
         assert (eng.phrase_topk(phrase, None, k=20)
                 == ref2.phrase_topk(phrase, None, k=20)), phrase
+
+
+def test_resume_replaces_stale_positions(spark, tmp_path):
+    """A stale parquet file planted in a hit bucket's positions dir of
+    the target epoch, after a crashed append, is gone once the append
+    resumes: the dir holds the rewritten file and the staging links, and
+    the positions decode as a fresh build's. Every term occurs in one
+    doc, so the upsert's range probe hits exactly the buckets of the
+    upserted doc's old terms."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from super_rag_spark.index.merge import SimulatedMergeFailure
+    from super_rag_spark.index.storage import bucket_of_term
+
+    mk = lambda rs: spark.createDataFrame(rs, "url string, text string")
+    base = [(f"https://t/{i}", f"w{i}a w{i}b w{i}c") for i in range(40)]
+    delta = [(base[0][0], "w0a")] + [(f"https://n/{j}", f"n{j}x")
+                                     for j in range(12)]
+    hit = min(bucket_of_term(t, 8) for t in base[0][1].split())
+    eng = BM25Engine(spark, str(tmp_path / "s")).build(
+        mk(base), positions=True, n_buckets=8)
+    with pytest.raises(SimulatedMergeFailure):
+        merge_append(spark, eng.store.root, mk(delta), fail_after_bucket=0)
+
+    pdir = os.path.join(eng.store.positions_dir_for(1), f"bucket={hit}")
+    os.makedirs(pdir, exist_ok=True)
+    pq.write_table(pq.read_table(os.path.join(
+        eng.store.positions_dir_for(0), f"bucket={hit}",
+        "part-00000.parquet")), os.path.join(pdir, "part-99999-stale.parquet"))
+    staged = os.listdir(os.path.join(eng.store.root, "staging_e1",
+                                     "positions_e0", f"bucket={hit}"))
+    merge_append(spark, eng.store.root, None)
+    assert sorted(os.listdir(pdir)) == sorted(
+        ["part-00000.parquet"] + [f"seg1-{f}" for f in staged])
+    live = dict(base)
+    live.update(delta)
+    ref = _fresh_reference(spark, list(live.items()), tmp_path, "ref")
+    assert (_decoded_positions(spark, eng.store, 1)
+            == _decoded_positions(spark, ref.store, 0))
 
 
 def test_index_without_sidecars_merges_clean(spark, tmp_path):

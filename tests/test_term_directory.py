@@ -86,58 +86,58 @@ def _ingest_stats(index_dir):
     return mod._stats(index_dir)
 
 
-def _assert_sorted_row_groups(store, step):
-    """Every postings row group of the live epoch has term_id min/max
-    statistics that match a non-decreasing term_id column; ``ingest.py
-    stats`` reports the files' row-group counts and the largest row
-    group's compressed bytes."""
-    pdir = store.postings_dir_for(store.epoch())
-    n_groups = 0
+def _assert_one_layout(store, table, plain, step):
+    """Every ``table`` bucket dir of the live epoch exists and holds no
+    temp file, and each of its files has term_id min/max statistics on
+    every row group that match a non-decreasing term_id column and no
+    dictionary page on the ``plain`` columns; ``ingest.py stats`` names
+    one parquet writer of the table. Returns the files' row-group
+    counts and the largest row group's compressed bytes."""
+    epoch = store.epoch()
     per_file, largest = [], 0
-    for root, _, files in os.walk(pdir):
-        for f in sorted(files):
-            if not f.endswith(".parquet"):
-                continue
-            path = os.path.join(root, f)
+    for b in range(CFG["n_buckets"]):
+        d = store.bucket_dir(table, epoch, b)
+        names = sorted(os.listdir(d))
+        assert not [f for f in names if f.endswith(".tmp")], (step, b, names)
+        for f in names:
+            path = os.path.join(d, f)
             pf = pq.ParquetFile(path)
-            col = pf.metadata.schema.names.index("term_id")
-            per_file.append(pf.metadata.num_row_groups)
-            for g in range(pf.metadata.num_row_groups):
-                rg = pf.metadata.row_group(g)
+            md = pf.metadata
+            cols = md.schema.names
+            per_file.append(md.num_row_groups)
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
                 largest = max(largest, sum(
                     rg.column(c).total_compressed_size
                     for c in range(rg.num_columns)))
-                st = rg.column(col).statistics
+                for c in plain:
+                    assert not rg.column(cols.index(c)).has_dictionary_page, (
+                        step, path, g, c)
+                st = rg.column(cols.index("term_id")).statistics
                 assert st is not None and st.has_min_max, (step, path, g)
                 tid = pf.read_row_group(g, columns=["term_id"])[
                     "term_id"].to_numpy()
                 assert (tid[1:] >= tid[:-1]).all(), (step, path, g)
                 assert (st.min, st.max) == (tid[0], tid[-1]), (step, path, g)
-                n_groups += 1
-    assert n_groups, step
+    assert per_file, (step, table)
+    assert len(_ingest_stats(store.root)[f"{table}_writers"]) == 1, (
+        step, table)
+    return per_file, largest
+
+
+def _assert_block_layouts(store, step):
+    """The one layout on postings and positions files alike;
+    ``ingest.py stats`` reports the postings files' row-group counts and
+    the largest row group's compressed bytes."""
+    _assert_one_layout(store, "positions", ("term_id", "docs_enc", "pos_enc"),
+                       step)
+    per_file, largest = _assert_one_layout(
+        store, "postings", ("term_id", "docs_enc", "dls_enc"), step)
     stats = _ingest_stats(store.root)
     assert stats["postings_files"] == len(per_file), step
     assert stats["row_groups_per_file"]["max"] == max(per_file), step
     assert stats["row_groups_per_file"]["min"] == min(per_file), step
     assert stats["max_row_group_compressed_bytes"] == largest, step
-
-
-def _assert_one_layout(store, step):
-    """Every postings file of the live epoch has no dictionary page on
-    term_id, docs_enc or dls_enc, its bucket dir holds no temp file, and
-    ``ingest.py stats`` names one parquet writer."""
-    pdir = store.postings_dir_for(store.epoch())
-    for b in os.listdir(pdir):
-        names = os.listdir(os.path.join(pdir, b))
-        assert not [f for f in names if f.endswith(".tmp")], (step, b, names)
-        for f in names:
-            md = pq.read_metadata(os.path.join(pdir, b, f))
-            cols = md.schema.names
-            for c in ("term_id", "docs_enc", "dls_enc"):
-                for g in range(md.num_row_groups):
-                    meta = md.row_group(g).column(cols.index(c))
-                    assert not meta.has_dictionary_page, (step, b, f, c)
-    assert len(_ingest_stats(store.root)["postings_writers"]) == 1, step
 
 
 def _assert_term_stats_from_blocks(store, step):
@@ -172,20 +172,21 @@ def _assert_term_stats_from_blocks(store, step):
 
 
 def test_every_writer_keeps_row_groups_sorted(spark, rows, tmp_path,
-                                              monkeypatch):
+                                              monkeypatch, bucket_bytes):
     """The streaming build (forced by a zero bucket budget), the spill
     build, an upserting append, a pure append, a tail compaction and a
-    full compaction each leave sorted row groups with term_id
-    statistics, in the one postings layout with no temp file left, and
-    one term_stats file per bucket whose df is the bucket's own block
-    sum; the driver answers as the oracle after every step."""
+    full compaction each leave every postings and positions bucket dir,
+    sorted row groups with term_id statistics, in the one block layout
+    with no temp file left, and one term_stats file per bucket whose df
+    is the bucket's own block sum; the driver answers as the oracle
+    after every step. The two builds write byte-identical positions
+    files."""
     base, d1, d2 = rows[:160], rows[160:200], rows[200:240]
     upsert = [(base[0][0], base[0][1] + " semudo muro")]
     queries = ["semudo muro fuboname", "gaku", "zibapevi semudo"]
 
     def check(eng, corpus, step):
-        _assert_sorted_row_groups(eng.store, step)
-        _assert_one_layout(eng.store, step)
+        _assert_block_layouts(eng.store, step)
         _assert_term_stats_from_blocks(eng.store, step)
         fresh = BM25Engine(spark, eng.store.root)
         oracle = build_oracle(corpus)
@@ -195,12 +196,14 @@ def test_every_writer_keeps_row_groups_sorted(spark, rows, tmp_path,
     with monkeypatch.context() as m:
         m.setattr(build, "BUCKET_MEM_BUDGET", 0)
         streaming = BM25Engine(spark, str(tmp_path / "s")).build(
-            _docs(spark, base), **CFG)
+            _docs(spark, base), positions=True, **CFG)
     check(streaming, base, "streaming build")
 
     eng = BM25Engine(spark, str(tmp_path / "b")).build(
-        _docs(spark, base), **CFG)
+        _docs(spark, base), positions=True, **CFG)
     check(eng, base, "spill build")
+    assert (bucket_bytes(eng.store.positions_dir_for(0))
+            == bucket_bytes(streaming.store.positions_dir_for(0)))
 
     live = dict(base)
     merge_append(spark, eng.store.root, _docs(spark, upsert + d1))
