@@ -854,27 +854,28 @@ def extract_title(html: bytes | str) -> str:
     return "\n".join(out)
 
 
+def extract_text_title(html: bytes | str) -> tuple[str, str]:
+    """(text, title) of a page from one parse: ``text`` byte-identical
+    to extract_text, ``title`` to extract_title."""
+    t_out: list[str] = []
+    ti_out: list[str] = []
+    prev_title: str | None = None
+    for el in extract_elements(html):
+        if el["type"] == "Title":
+            if el["text"] == prev_title:
+                continue
+            prev_title = el["text"]
+            ti_out.append(el["text"])
+        t_out.append(el["text"])
+    return "\n".join(t_out), "\n".join(ti_out)
+
+
 def extract_text_title_map_in_pandas(
         batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas body: (url, html:binary) -> (url, text, title) —
     one parse per doc feeding both projections."""
     for pdf in batches:
-        texts, titles = [], []
-        for h in pdf["html"]:
-            if isinstance(h, (bytes, bytearray)):
-                h = h.decode("utf-8", errors="replace")
-            elements = extract_elements(h)
-            t_out: list[str] = []
-            ti_out: list[str] = []
-            prev_title: str | None = None
-            for el in elements:
-                if el["type"] == "Title":
-                    if el["text"] == prev_title:
-                        continue
-                    prev_title = el["text"]
-                    ti_out.append(el["text"])
-                t_out.append(el["text"])
-            texts.append("\n".join(t_out))
-            titles.append("\n".join(ti_out))
-        yield pd.DataFrame({"url": pdf["url"], "text": texts,
-                            "title": titles})
+        pairs = [extract_text_title(h) for h in pdf["html"]]
+        yield pd.DataFrame({"url": pdf["url"],
+                            "text": [t for t, _ in pairs],
+                            "title": [ti for _, ti in pairs]})

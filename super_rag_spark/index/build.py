@@ -4,18 +4,35 @@ Replaces the reference ingest pipeline (HTTP fetch -> unstructured.io ->
 embed -> vector-DB upsert, /root/reference/api/ingest.py:15-62 and
 /root/reference/service/embedding.py:153-296) with:
 
-  scan -> extract (mapInPandas) -> tokenize (JVM expr) -> explode ->
-  one shuffle by term-hash bucket -> per-bucket posting-block build
-  with in-partition head-term salting (NumPy codec) -> per-bucket
-  postings + term_stats files written by that same task + doc_stats +
-  corpus_stats + per-bucket lineage
+  scan -> spread_input -> ONE Python pass per input partition
+  (mapInArrow: extract, analysis.tokenize, collapse to one posting per
+  (term, doc), spill the postings to one file per task grouped by
+  term-hash bucket) -> persisted (doc_id, url, dl) rows -> corpus stats
+  + duplicate-url check + doc_stats + corpus_stats -> per-bucket task:
+  its row groups of every spill file -> numpy lexsort -> posting-block
+  build with in-bucket head-term salting (NumPy codec) -> postings +
+  term_stats files written by that same task + per-bucket lineage
 
 Scale notes (100 TB / 10^12 docs):
-- tokenization is a pure Catalyst expression (lower + split + filter):
-  whole-stage codegen, no Python on the hot path.
-- the only big shuffle is the one by term-hash bucket: the block
-  builder sums tf over (term, doc) runs and sees each term's df as its
-  group size, so there is no tf aggregation and no df join.
+- the doc pass crosses the JVM/Python boundary once per doc: the text
+  is extracted, tokenized, hashed (analysis.term_ids, per-task term
+  dict) and collapsed to postings in the task that extracted it, and
+  only (doc_id, url, dl) goes back to the JVM. Nothing token-sized is
+  persisted, exploded or shuffled; tokens never exist as JVM arrays.
+  Positions and vocab sidecars still tokenize in the JVM
+  (tokens_expr); tests/test_analysis.py holds the two tokenizers to
+  the same output.
+- the postings' only exchange is the spill: each doc-pass task writes
+  ONE parquet file whose row groups are its postings per bucket, so a
+  build writes n_tasks files, not n_tasks x n_buckets, and a bucket
+  holds collapsed postings, not raw token occurrences: a head term
+  weighs its df, not its total count. The bucket count of the spill is
+  the pinned n_buckets, else the session's parallelism
+  (adaptive_n_buckets' floor); a build whose final count differs, or
+  whose biggest bucket is over BUCKET_MEM_BUDGET, feeds the spill files
+  to the streaming builder instead (_postings_from_spill).
+- the block builder sums tf over (term, doc) runs and sees each term's
+  df as its group size, so there is no df aggregation and no df join.
 - head-term skew (Zipf: "the" at 10^12 docs has ~10^11 postings) is
   handled by *contiguous-range* salting: salt = top bits of doc_id for
   terms with df > threshold, so one reducer never sees more than
@@ -25,11 +42,10 @@ Scale notes (100 TB / 10^12 docs):
   the query path never joins doc_stats — see codec.py.
 - input skew: Spark splits a parquet scan by row group, so a corpus
   written as one file with one row group is read by ONE task, and the
-  extraction UDF, the persisted tokens and the postings spill all stay
-  in that one partition while the other cores idle. spread_input
-  round-robins such an input over every core before extraction (the
-  DS2 data-stealing idea: balance before the expensive operator). An
-  input with more splits than cores is left alone: the scheduler
+  doc pass would run in that one partition while the other cores
+  idle. spread_input round-robins such an input over every core first
+  (the DS2 data-stealing idea: balance before the expensive operator).
+  An input with more splits than cores is left alone: the scheduler
   already balances its tasks, so a wide input at scale pays no extra
   exchange.
 - blocks have one writer, _write_buckets, run inside the task that
@@ -285,9 +301,8 @@ def _collapse_build(terms, doc_ids, tfdl, *, block_size: int,
     Input rows may be PRE-AGGREGATED postings (one row per (term, doc)
     with its tf) or RAW token occurrences (tf=1 per row), with tf/dl
     packed as ``tfdl`` (tf<<32 | dl): contiguous (term, doc) runs are
-    summed, which makes the two identical — so the index build can skip
-    the tf groupBy exchange entirely and merge can keep feeding decoded
-    postings. A term is salted (salt = doc_id's top bits) when its df
+    summed, which makes the two identical (the doc pass's spill and a
+    merge's decoded blocks are postings). A term is salted (salt = doc_id's top bits) when its df
     exceeds ``salt_df_threshold``; ``first_salted``: the first group
     already overflowed upstream (its earlier salt subgroups were
     flushed), so it is salted regardless of its remaining size here."""
@@ -399,28 +414,25 @@ def build_postings(tf_df: DataFrame, *,
     builder = _make_partition_builder(
         block_size, n_buckets, seg,
         salt_df_threshold=salt_df_threshold, salt_count=salt_count)
-    return _clustered(tf_df, n_buckets).mapInArrow(builder,
-                                                   schema=POSTINGS_SCHEMA)
+    return _clustered(_packed(tf_df), n_buckets).mapInArrow(
+        builder, schema=POSTINGS_SCHEMA)
 
 
-def _packed(tf_df: DataFrame, n_buckets: int) -> DataFrame:
-    """(term_id, doc_id, tfdl, bucket_p) of tf rows; tf < 2^31 and
-    dl < 2^32, so tfdl = tf<<32 | dl round-trips exactly with one
-    column fewer to exchange."""
-    return (
-        tf_df
-        .withColumn("bucket_p", F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int"))
-        .withColumn("tfdl", F.expr(
-            "shiftleft(CAST(tf AS BIGINT), 32) + CAST(dl AS BIGINT)"))
-        .select("term_id", "doc_id", "tfdl", "bucket_p")
-    )
+def _packed(tf_df: DataFrame) -> DataFrame:
+    """(term_id, doc_id, tfdl) of tf rows; tf < 2^31 and dl < 2^32, so
+    tfdl = tf<<32 | dl round-trips exactly with one column fewer to
+    exchange."""
+    return tf_df.select("term_id", "doc_id", F.expr(
+        "shiftleft(CAST(tf AS BIGINT), 32) + CAST(dl AS BIGINT)").alias("tfdl"))
 
 
-def _clustered(tf_df: DataFrame, n_buckets: int) -> DataFrame:
-    """The streaming builder's input: ONE shuffle by the output bucket,
-    each partition sorted by (bucket, term_id, doc_id), so a task's
-    blocks come out in the order :func:`_write_buckets` takes."""
-    return (_packed(tf_df, n_buckets)
+def _clustered(rows: DataFrame, n_buckets: int) -> DataFrame:
+    """The streaming builder's input from (term_id, doc_id, tfdl) rows:
+    ONE shuffle by the output bucket, each partition sorted by (bucket,
+    term_id, doc_id), so a task's blocks come out in the order
+    :func:`_write_buckets` takes."""
+    bucket = F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int")
+    return (rows.select("term_id", "doc_id", "tfdl", bucket.alias("bucket_p"))
             .repartition(n_buckets, "bucket_p")
             .sortWithinPartitions("bucket_p", "term_id", "doc_id")
             .select("term_id", "doc_id", "tfdl"))
@@ -440,17 +452,18 @@ def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
         salt_count=salt_count, seg=seg)
 
 
-# one bucket's raw (term_id, doc_id, tfdl) arrays must fit a task for
-# the columnar path; adaptive_n_buckets sizes buckets ~6x smaller than
-# this, so the fallback only triggers when a caller pins a small
-# n_buckets on a huge corpus
+# one bucket's (term_id, doc_id, tfdl) postings arrays (or the
+# positions build's raw rows) must fit a task for the columnar path;
+# adaptive_n_buckets sizes buckets ~6x smaller than this, so the
+# fallback only triggers when a caller pins a small n_buckets on a huge
+# corpus
 BUCKET_MEM_BUDGET = 2 << 30
 
 
 def _fits_a_task(total_bytes: int, n_buckets: int) -> bool:
     """Whether a bucket's share of a build's raw rows fits a task: the
-    postings and positions builds take the spill if so, else their
-    streaming builder."""
+    positions build takes the spill if so, else its streaming
+    builder."""
     return total_bytes // max(1, n_buckets) <= BUCKET_MEM_BUDGET
 
 
@@ -590,12 +603,12 @@ def write_blocks(frame: DataFrame, blocks_dir: str, ts_dir: str | None,
     ).collect()]
 
 
-def _per_bucket(spark: SparkSession, buckets: list[int],
-                task: Callable[[int], dict | None]) -> list[dict]:
-    """``task(b)`` for each bucket ``b``, one Spark task per bucket in
-    ONE job with no exchange; returns the tasks' non-None results. A
-    shuffled launcher would let adaptive execution coalesce buckets
-    into fewer tasks."""
+def _per_bucket(spark: SparkSession, buckets: list,
+                task: Callable[..., dict | None]) -> list[dict]:
+    """``task(b)`` for each ``b`` of ``buckets`` (a bucket, or a bucket
+    with what its task reads), one Spark task each in ONE job with no
+    exchange; returns the tasks' non-None results. A shuffled launcher
+    would let adaptive execution coalesce buckets into fewer tasks."""
     if not buckets:
         return []
     rows = (spark.sparkContext.parallelize(buckets, len(buckets))
@@ -606,9 +619,9 @@ def _per_bucket(spark: SparkSession, buckets: list[int],
 def _spilled(spark: SparkSession, rows: DataFrame, spill_dir: str,
              n_buckets: int, task: Callable[[int, dict], dict | None]
              ) -> list[dict]:
-    """THE spill (r6): ONE exchange writes ``rows`` as parquet
-    partitioned by their ``bucket_p`` column, then ``task(b, cols)``
-    runs once per bucket that holds rows, one task each
+    """The positions build's spill (r6): ONE exchange writes ``rows``
+    as parquet partitioned by their ``bucket_p`` column, then
+    ``task(b, cols)`` runs once per bucket that holds rows, one task each
     (:func:`_per_bucket`), on the bucket's columns read back columnar
     as numpy arrays. Returns the tasks' non-None results.
 
@@ -645,37 +658,6 @@ def _spilled(spark: SparkSession, rows: DataFrame, spill_dir: str,
         shutil.rmtree(spill_dir, ignore_errors=True)
 
 
-def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
-                            postings_dir: str, term_stats_dir: str | None, *,
-                            block_size: int = analysis.BLOCK_SIZE,
-                            n_buckets: int = analysis.N_BUCKETS,
-                            salt_df_threshold: int = analysis.SALT_DF_THRESHOLD,
-                            salt_count: int = analysis.SALT_COUNT,
-                            seg: int = 0,
-                            spill_dir: str | None = None) -> list[dict]:
-    """The spill build: the raw (term_id, doc_id, tfdl) rows go through
-    :func:`_spilled`; each bucket's task numpy-lexsorts them, builds the
-    blocks and writes them with :func:`_write_buckets`, term_stats too
-    unless ``term_stats_dir`` is None. Returns the lineage row of each
-    bucket that holds postings. It moves the bytes a shuffle would, but
-    skips Spark's row sort and the row->Arrow transpose of every
-    posting; a bucket's arrays must fit a task (:func:`_fits_a_task`)."""
-    bs, nb, thr, sc, sg = (int(block_size), int(n_buckets),
-                           int(salt_df_threshold), int(salt_count), int(seg))
-
-    def build(b: int, cols: dict) -> dict:
-        rb = _collapse_build_bucket(
-            cols.pop("term_id"), cols.pop("doc_id"), cols.pop("tfdl"),
-            block_size=bs, n_buckets=nb, salt_df_threshold=thr,
-            salt_count=sc, seg=sg)
-        return next(_write_buckets([rb], postings_dir, term_stats_dir))
-
-    os.makedirs(postings_dir, exist_ok=True)
-    return _spilled(spark, _packed(tf_df, n_buckets),
-                    spill_dir or postings_dir.rstrip("/") + "._tfspill",
-                    n_buckets, build)
-
-
 def adaptive_n_buckets(spark: SparkSession, total_tokens: int) -> int:
     """Derive the postings bucket count from DATA SIZE with a floor at
     the session's parallelism (guide §2.2/§6): one bucket = one output
@@ -692,6 +674,279 @@ def adaptive_n_buckets(spark: SparkSession, total_tokens: int) -> int:
     return max(1, min(4096, max(par, size_b)))
 
 
+# ---------------------------------------------------------------- doc pass
+
+DOC_ROWS_SCHEMA = "doc_id long, url string, dl int"
+
+# A doc pass task spills its postings whenever it holds this many (and
+# at its end): ~100 MB of arrays.
+_SPILL_FLUSH_ROWS = 1 << 22
+
+
+def _doc_input(docs_df: DataFrame, text_is_extracted: bool,
+               extract_mode: str, title_weight: int):
+    """The doc pass's input columns and its extract mode: (url, text[,
+    title]) and None for pre-extracted text, else (url, html[,
+    source_type]) and ``extract_mode``."""
+    if text_is_extracted:
+        return docs_df.select(
+            "url", "text", *(["title"] if title_weight > 1 else [])), None
+    if extract_mode == "html":
+        return docs_df.select("url", "html"), "html"
+    from ..points import source_type_expr
+
+    return docs_df.select("url", "html", source_type_expr("url")), "any"
+
+
+def _doc_texts(rb, extract_mode: str | None, title_weight: int):
+    """(urls, texts, titles) of one input batch of the doc pass,
+    extracted here unless ``extract_mode`` is None. ``titles`` holds
+    Nones when ``title_weight`` is 1."""
+    from .. import extraction
+
+    urls = rb.column("url").to_pylist()
+    titles = [None] * len(urls)
+    if extract_mode is None:
+        texts = rb.column("text").to_pylist()
+        if title_weight > 1:
+            titles = rb.column("title").to_pylist()
+    elif title_weight > 1:
+        pairs = list(map(extraction.extract_text_title,
+                         rb.column("html").to_pylist()))
+        texts, titles = [t for t, _ in pairs], [ti for _, ti in pairs]
+    elif extract_mode == "html":
+        texts = list(map(extraction.extract_text, rb.column("html").to_pylist()))
+    else:
+        texts = list(map(extraction.extract_text_any,
+                         rb.column("html").to_pylist(),
+                         rb.column("source_type").to_pylist()))
+    return urls, texts, titles
+
+
+def _doc_tokens(text: str | None, title: str | None,
+                title_weight: int) -> list[str]:
+    """A doc's tokens (analysis.tokenize): its text's, then its title's
+    ``title_weight - 1`` more times — BM25F field weighting in its
+    field-concatenation form (Robertson & Zaragoza 2009 §3.3: an integer
+    field weight is the field's tokens repeated, sharing one length
+    normalization), so tf and dl carry the weight and df does not. A
+    missing text or title has no tokens."""
+    toks = analysis.tokenize(text or "")
+    if title_weight > 1:
+        toks += analysis.tokenize(title or "") * (title_weight - 1)
+    return toks
+
+
+def _postings_of(doc_ids: list[int], tokens: list[list[str]], ids: dict):
+    """(term_id, doc_id, tfdl) arrays of docs' postings: one per
+    distinct term of a doc, tf and dl packed as tf<<32 | dl. ``ids``
+    maps terms to term ids for one task; the terms it lacks are hashed
+    together (analysis.term_ids) and added. A process-wide cache would
+    outlive the task and let a rebuild of the same corpus skip the
+    hashing that a first build pays."""
+    from collections import Counter
+    from itertools import chain
+
+    counts = [Counter(t) for t in tokens]
+    new = list(set().union(*counts).difference(ids))
+    if new:
+        ids.update(zip(new, analysis.term_ids(new).tolist()))
+    per_doc = np.fromiter(map(len, counts), np.int64, len(counts))
+    n = int(per_doc.sum())
+    terms = np.fromiter(map(ids.__getitem__, chain.from_iterable(counts)),
+                        np.int64, n)
+    tfs = np.fromiter(chain.from_iterable(c.values() for c in counts),
+                      np.int64, n)
+    dls = np.fromiter(map(len, tokens), np.int64, len(tokens))
+    docs = np.repeat(np.array(doc_ids, dtype=np.int64), per_doc)
+    return terms, docs, (tfs << np.int64(32)) | np.repeat(dls, per_doc)
+
+
+def _spill(out, path: str, pending: list, n_buckets: int):
+    """Appends ``pending`` (term_id, doc_id, tfdl) arrays to a task's
+    spill file, opening ``out``, its writer, on first use: one row
+    group per bucket (``term_id`` pmod ``n_buckets``, also stored as
+    the ``bucket`` column, whose row-group statistics name it). Returns
+    the writer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    terms, docs, tfdl = (np.concatenate(c) for c in zip(*pending))
+    bucket = (terms % n_buckets).astype(np.int32)
+    order = np.argsort(bucket)
+    bucket = bucket[order]
+    tbl = pa.table({"term_id": terms[order], "doc_id": docs[order],
+                    "tfdl": tfdl[order], "bucket": bucket})
+    if out is None:
+        # read once and deleted: snappy, and no dictionary but on the
+        # one-value-per-row-group bucket column
+        out = pq.ParquetWriter(path, tbl.schema, compression="snappy",
+                               use_dictionary=["bucket"])
+    starts = np.flatnonzero(np.diff(bucket, prepend=-1)).tolist()
+    for lo, hi in zip(starts, starts[1:] + [len(bucket)]):
+        out.write_table(tbl.slice(lo, hi - lo), row_group_size=hi - lo)
+    return out
+
+
+def _doc_pass(src: DataFrame, extract_mode: str | None, title_weight: int,
+              spill_dir: str, n_buckets: int) -> DataFrame:
+    """THE doc pass: one mapInArrow from the input's (url, text|html)
+    to postings. Per doc it extracts (unless ``extract_mode`` is None),
+    tokenizes (:func:`_doc_tokens`) and collapses the tokens to one
+    posting per distinct term (:func:`_postings_of`). Each task writes
+    its postings, grouped by bucket of ``n_buckets``, as ONE parquet
+    file under ``spill_dir`` (none when it has no postings), through a
+    temp file, so a retried task replaces its file whole. The frame's
+    rows are the docs' (doc_id, url, dl): nothing token-sized returns
+    to the JVM."""
+    tw, nb = int(title_weight), int(n_buckets)
+
+    def run(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        part = os.path.join(spill_dir, f"part-{ctx.partitionId():05d}.parquet")
+        tmp = os.path.join(spill_dir, f".{ctx.partitionId()}-"
+                           f"{ctx.attemptNumber()}.tmp")
+        ids: dict[str, int] = {}
+        pending, held, out = [], 0, None
+        try:
+            for rb in batches:
+                urls, texts, titles = _doc_texts(rb, extract_mode, tw)
+                toks = [_doc_tokens(t, ti, tw) for t, ti in zip(texts, titles)]
+                doc_ids = [analysis.doc_id_for_url(u) for u in urls]
+                cols = _postings_of(doc_ids, toks, ids)
+                pending.append(cols)
+                held += len(cols[0])
+                if held >= _SPILL_FLUSH_ROWS:
+                    out, pending, held = _spill(out, tmp, pending, nb), [], 0
+                yield pa.record_batch({
+                    "doc_id": pa.array(doc_ids, pa.int64()),
+                    "url": pa.array(urls, pa.string()),
+                    "dl": pa.array(list(map(len, toks)), pa.int32())})
+            if held:
+                out = _spill(out, tmp, pending, nb)
+            if out is not None:
+                out.close()
+                out = None
+                os.replace(tmp, part)
+        except BaseException:
+            if out is not None:
+                out.close()
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+
+    return src.mapInArrow(run, DOC_ROWS_SCHEMA)
+
+
+def _survivors(src: DataFrame, extract_mode: str | None,
+               title_weight: int) -> DataFrame:
+    """(url, text[, title]) of the doc pass input ``src`` with one row
+    per doc_id: the one whose tokens have the highest
+    md5(" ".join(tokens)), then the highest dl. The choice is by
+    content, not by partition order, so a re-run builds the same index
+    even when one url arrives with two texts (the merge's upsert
+    semantics). The text is extracted here, once."""
+    import pyarrow as pa
+    from pyspark.sql import Window
+
+    keep = ["url", "text"] + (["title"] if title_weight > 1 else [])
+    schema = pa.schema([(c, pa.string()) for c in keep]
+                       + [("key", pa.string()), ("dl", pa.int32())])
+
+    def run(batches):
+        import hashlib
+
+        for rb in batches:
+            urls, texts, titles = _doc_texts(rb, extract_mode, title_weight)
+            toks = [_doc_tokens(t, ti, title_weight)
+                    for t, ti in zip(texts, titles)]
+            keys = [hashlib.md5(" ".join(t).encode()).hexdigest() for t in toks]
+            yield pa.RecordBatch.from_arrays(
+                [urls, texts, titles][:len(keep)] + [keys, list(map(len, toks))],
+                schema=schema)
+
+    w = Window.partitionBy(doc_id_expr("url")).orderBy(F.desc("key"),
+                                                       F.desc("dl"))
+    ddl = ", ".join(f"{c} string" for c in keep) + ", key string, dl int"
+    return (src.mapInArrow(run, ddl)
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).select(*keep))
+
+
+def _spill_parts(spill_dir: str) -> dict[int, list]:
+    """bucket -> [(file, row groups, rows)] of a doc pass's spill files,
+    read from their footers."""
+    import pyarrow.parquet as pq
+
+    parts: dict[int, list] = {}
+    for name in sorted(os.listdir(spill_dir)):
+        if not name.startswith("part-"):
+            continue
+        path = os.path.join(spill_dir, name)
+        md = pq.read_metadata(path)
+        col = md.schema.names.index("bucket")
+        per: dict[int, list] = {}
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            per.setdefault(rg.column(col).statistics.min, []).append(
+                (i, rg.num_rows))
+        for b, rgs in per.items():
+            parts.setdefault(b, []).append(
+                (path, [i for i, _ in rgs], sum(n for _, n in rgs)))
+    return parts
+
+
+def _postings_from_spill(spark: SparkSession, spill_dir: str,
+                         spill_buckets: int, postings_dir: str,
+                         ts_dir: str | None, *, block_size: int,
+                         n_buckets: int, salt_df_threshold: int,
+                         salt_count: int, seg: int) -> list[dict]:
+    """Postings (and term_stats unless ``ts_dir`` is None) of the doc
+    pass's spill, grouped by ``spill_buckets`` buckets; returns each
+    written bucket's lineage row. When the index has as many buckets
+    and each bucket's postings fit a task (24 B each, within
+    ``BUCKET_MEM_BUDGET``), one task per bucket reads its row groups of
+    every spill file, numpy-lexsorts them, builds the blocks and writes
+    them (:func:`_collapse_build_bucket`, :func:`_write_buckets`). Else
+    the streaming builder, whose carry bounds a task's memory, takes
+    the spill files as a Spark frame (:func:`_clustered`,
+    :func:`write_blocks`). Both give the same files."""
+    bs, nb, thr, sc, sg = (int(block_size), int(n_buckets),
+                           int(salt_df_threshold), int(salt_count), int(seg))
+    parts = _spill_parts(spill_dir)
+    biggest = max((sum(p[2] for p in v) for v in parts.values()), default=0)
+    if nb != spill_buckets or biggest * 24 > BUCKET_MEM_BUDGET:
+        if not parts:
+            return []
+        rows = spark.read.schema(
+            "term_id long, doc_id long, tfdl long").parquet(spill_dir)
+        return write_blocks(
+            _clustered(rows, nb), postings_dir, ts_dir,
+            build=_make_partition_builder(
+                bs, nb, sg, salt_df_threshold=thr, salt_count=sc))
+
+    def build(item) -> dict:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        b, files = item
+        tbl = pa.concat_tables(
+            pq.ParquetFile(path).read_row_groups(
+                rgs, columns=["term_id", "doc_id", "tfdl"])
+            for path, rgs, _ in files)
+        cols = [tbl[c].to_numpy() for c in ("term_id", "doc_id", "tfdl")]
+        del tbl
+        rb = _collapse_build_bucket(
+            *cols, block_size=bs, n_buckets=nb, salt_df_threshold=thr,
+            salt_count=sc, seg=sg)
+        return next(_write_buckets([rb], postings_dir, ts_dir))
+
+    return _per_bucket(spark, sorted(parts.items()), build)
+
+
 def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
                 text_is_extracted: bool = True,
                 extract_mode: str = "html",
@@ -704,7 +959,7 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
                 title_weight: int = 1,
                 meta_cols: tuple = ()) -> IndexStorage:
     """End-to-end build. ``docs_df`` needs (url, text) — or (url, html)
-    with ``text_is_extracted=False`` to run the extraction UDF first:
+    with ``text_is_extracted=False`` to extract the text first:
     ``extract_mode="html"`` treats every payload as HTML (the webtext
     default), ``extract_mode="any"`` dispatches on the url extension
     across all 11 reference formats (extraction.extract_elements_any).
@@ -714,7 +969,7 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     (segment-mode merges build the delta directly as its target segment,
     index/merge.py). ``title_weight`` > 1 builds a BM25F
     field-weighted index (title tokens counted ``title_weight`` times,
-    shared length normalization — see tokens_from_text): with
+    shared length normalization — see _doc_tokens): with
     ``text_is_extracted=False`` the title field comes out of the HTML
     parse (Title elements); with pre-extracted text the input must
     carry a ``title`` column.
@@ -727,17 +982,16 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     (deterministic — the postings side already dedups to one
     survivor).
 
-    The input goes through spread_input before extraction: a corpus in
-    fewer splits than cores (one parquet row group, say) would run the
-    extraction UDF, the persisted tokens and the postings spill on as
-    many cores as it has splits. Wider inputs are read as they are.
-    Postings come from the spill (build_postings_bucketed) whenever one
-    bucket's raw rows fit a task (:func:`_fits_a_task`), tiny deltas
-    included, and from the streaming builder otherwise. Both write
-    through the one postings writer (:func:`_write_buckets`), so the
-    two give byte-identical postings and term_stats files. Each phase's
-    Spark jobs carry its name as their job description (see the module
-    notes); the caller's description is restored."""
+    The input goes through spread_input, then the doc pass
+    (:func:`_doc_pass`), which spills each task's postings to one file
+    grouped by bucket: the pinned ``n_buckets``, else the session's
+    parallelism, adaptive_n_buckets' floor. Its (doc_id, url, dl) rows
+    are persisted (a few bytes per doc) and feed the corpus stats, the
+    duplicate-url check and doc_stats. Postings and term_stats come
+    from the spill (:func:`_postings_from_spill`) and are written
+    through the one postings writer (:func:`_write_buckets`). Each
+    phase's Spark jobs carry its name as their job description (see
+    the module notes); the caller's description is restored."""
     if extract_mode not in ("html", "any"):
         raise ValueError(f"unknown extract_mode: {extract_mode!r}")
     if title_weight < 1:
@@ -752,115 +1006,72 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     missing = [c for c in meta_cols if c not in docs_df.columns]
     if missing:
         raise ValueError(f"meta_cols not in the input frame: {missing}")
-    meta_src = docs_df
-    store = IndexStorage(index_dir)
-
-    docs_df = spread_input(spark, docs_df)
-    if not text_is_extracted:
-        if title_weight > 1:
-            docs_df = extract_with_title(docs_df)
-        else:
-            docs_df = extract(docs_df) if extract_mode == "html" else extract_any(docs_df)
-    # The extraction + tokenize scan feeds doc_stats, corpus stats AND
-    # the postings spill; persist it so the (expensive) extraction UDF
-    # runs once. (r6 note: a no-persist variant re-running extraction
-    # per consumer pass was A/B-measured WORSE at 1 core / sf0.1 —
-    # min 120 s vs 97 s — the second extraction+tokenize pass costs
-    # more than materializing this cache. On a cluster this would be a
-    # checkpoint table — locally MEMORY_AND_DISK is the same idea.)
     from pyspark import StorageLevel
+    from pyspark.sql import Observation
 
-    toks = tokens_from_text(docs_df, title_weight=title_weight).persist(
-        StorageLevel.MEMORY_AND_DISK)
-
-    def _stats_agg(df):
-        # the first action on the persisted tokens: it runs extraction
-        with job_description(spark, "build:extract"):
-            return df.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.countDistinct("doc_id").alias("n_uniq"),
-                F.avg("dl").alias("avgdl"),
-                F.sum("dl").alias("total_tokens"),
-            ).collect()[0]
-
-    # Input-uniqueness guard: duplicate urls would double-count n_docs /
-    # dl and emit duplicate postings (doc scored twice, diverging from
-    # the oracle's upsert-by-doc_id semantics). The dedup shuffle runs
-    # ONLY when a duplicate is actually present.
-    st = _stats_agg(toks)
-    if int(st["n_docs"]) != int(st["n_uniq"]):
-        # deterministic survivor (dropDuplicates keeps a partition-order-
-        # dependent row): max content hash per doc_id, so re-runs build
-        # bit-identical indexes even when one url arrives with two texts —
-        # matching the merge path's defined upsert semantics
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("doc_id").orderBy(
-            F.md5(F.concat_ws(" ", "tokens")).desc(), F.desc("dl"))
-        deduped = (toks.withColumn("_rn", F.row_number().over(w))
-                   .where(F.col("_rn") == 1).drop("_rn")
-                   .persist(StorageLevel.MEMORY_AND_DISK))
-        toks.unpersist()
-        toks = deduped
-        st = _stats_agg(toks)
-    n_docs = int(st["n_docs"])
-    avgdl = float(st["avgdl"]) if st["avgdl"] is not None else 0.0
-    if n_buckets is None:  # scale-adaptive layout (see adaptive_n_buckets)
-        n_buckets = adaptive_n_buckets(spark, int(st["total_tokens"] or 0))
-
-    stats_df = toks.select("doc_id", "url", "dl")
-    if meta_cols:
-        meta_df = meta_src.groupBy("url").agg(
-            *[F.max(c).alias(c) for c in meta_cols])
-        stats_df = stats_df.join(meta_df, "url", "left").select(
-            "doc_id", "url", "dl", *meta_cols)
-    with job_description(spark, "build:doc_stats"):
-        store.catalog.overwrite(stats_df, store.doc_stats_dir_for(0))
-        store.catalog.overwrite(
-            spark.createDataFrame(
-                [(n_docs, avgdl, int(st["total_tokens"] or 0))],
-                "n_docs long, avgdl double, total_tokens long"),
-            store.corpus_stats_dir_for(0))
-
-    # Token occurrences go STRAIGHT to the block builder (r6): the
-    # former explode -> groupBy(term,doc) tf aggregation was a second
-    # full exchange over postings-sized data, and its output had exactly
-    # one consumer once the df/salt join moved into the builder — the
-    # builder now sums tf over contiguous (term, doc) runs itself, so
-    # the whole postings path is ONE shuffle (by bucket) end to end and
-    # nothing postings-sized is ever persisted (guide §2.4; the old tf
-    # cache was also a 100 TB liability). An in-row run-length
-    # alternative (sort_array + higher-order fns) was measured WORSE:
-    # Catalyst re-inlines lambda sub-expressions (no CSE inside HOFs),
-    # going O(dl^2) per doc.
-    tf = (
-        toks.select("doc_id", "dl", F.explode("tokens").alias("term"))
-        .select(term_id_expr("term").alias("term_id"), "doc_id",
-                F.lit(1).alias("tf"), "dl")
-    )
+    store = IndexStorage(index_dir)
+    src, mode = _doc_input(spread_input(spark, docs_df), text_is_extracted,
+                           extract_mode, title_weight)
+    spill_buckets = int(n_buckets or spark.sparkContext.defaultParallelism)
     postings_dir = store.postings_dir_for(0)
     ts_dir = None if staging else store.term_stats_dir_for(0)
-    for d in filter(None, (postings_dir, ts_dir)):
-        shutil.rmtree(d, ignore_errors=True)
-    with job_description(spark, "build:postings"):
-        if _fits_a_task(int(st["total_tokens"] or 0) * 24, n_buckets):
-            # the spill: columnar per-bucket build (r6), one exchange +
-            # a numpy sort per bucket (see build_postings_bucketed)
-            lineage = build_postings_bucketed(
-                spark, tf, postings_dir, ts_dir,
+    spill_dir = postings_dir.rstrip("/") + "._tfspill"
+
+    def _stats_agg(src, mode):
+        # the first action on the doc rows: it runs the doc pass
+        shutil.rmtree(spill_dir, ignore_errors=True)
+        os.makedirs(spill_dir)
+        rows = _doc_pass(src, mode, title_weight, spill_dir,
+                         spill_buckets).persist(StorageLevel.MEMORY_AND_DISK)
+        # one exchange, by doc_id: the counts are observed metrics of
+        # an action that returns no rows (countDistinct takes two)
+        obs = Observation()
+        with job_description(spark, "build:extract"):
+            (rows.groupBy("doc_id")
+             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl"))
+             .observe(obs, F.sum("n").alias("n_docs"),
+                      F.count(F.lit(1)).alias("n_uniq"),
+                      F.sum("dl").alias("total_tokens"))
+             .where(F.col("n") < 0).collect())
+        return rows, [int(obs.get[k] or 0)
+                      for k in ("n_docs", "n_uniq", "total_tokens")]
+
+    try:
+        doc_rows, (n_docs, n_uniq, total_tokens) = _stats_agg(src, mode)
+        # Input-uniqueness guard: duplicate urls would double-count
+        # n_docs / dl and emit duplicate postings (doc scored twice,
+        # diverging from the oracle's upsert-by-doc_id semantics). Only
+        # a duplicate pays the second pass, over the survivors' text.
+        if n_docs != n_uniq:
+            doc_rows.unpersist()
+            doc_rows, (n_docs, _, total_tokens) = _stats_agg(
+                _survivors(src, mode, title_weight), None)
+        # Spark's avg: a double sum (exact below 2^53) over the count
+        avgdl = total_tokens / n_docs if n_docs else 0.0
+        if n_buckets is None:  # scale-adaptive layout (see adaptive_n_buckets)
+            n_buckets = adaptive_n_buckets(spark, total_tokens)
+
+        stats_df = doc_rows
+        if meta_cols:
+            meta_df = docs_df.groupBy("url").agg(
+                *[F.max(c).alias(c) for c in meta_cols])
+            stats_df = stats_df.join(meta_df, "url", "left").select(
+                "doc_id", "url", "dl", *meta_cols)
+        with job_description(spark, "build:doc_stats"):
+            store.catalog.overwrite(stats_df, store.doc_stats_dir_for(0))
+            store.write_corpus_stats(spark, 0, n_docs, avgdl, total_tokens)
+        doc_rows.unpersist()
+
+        for d in filter(None, (postings_dir, ts_dir)):
+            shutil.rmtree(d, ignore_errors=True)
+        with job_description(spark, "build:postings"):
+            lineage = _postings_from_spill(
+                spark, spill_dir, spill_buckets, postings_dir, ts_dir,
                 block_size=block_size, n_buckets=n_buckets,
                 salt_df_threshold=salt_df_threshold, salt_count=salt_count,
                 seg=seg)
-        else:
-            # over-budget buckets: the streaming builder, whose carry
-            # bounds a task's memory, writes its blocks in its own task
-            lineage = write_blocks(
-                _clustered(tf, n_buckets), postings_dir, ts_dir,
-                build=_make_partition_builder(
-                    block_size, n_buckets, seg,
-                    salt_df_threshold=salt_df_threshold,
-                    salt_count=salt_count))
-    toks.unpersist()
+    finally:
+        shutil.rmtree(spill_dir, ignore_errors=True)
     if ts_dir is not None:
         _append_lineage(spark, store, lineage, phase="build", epoch=0)
     # every bucket gets a dir, empty ones too: merges and compactions

@@ -245,10 +245,7 @@ def _write_doc_stats(spark: SparkSession, store: IndexStorage, epoch: int,
                 F.sum("dl").alias("tot")).collect()[0]
     n_docs, avgdl = int(st["n"]), float(st["avgdl"] or 0.0)
     store.catalog.overwrite(ds, store.doc_stats_dir_for(epoch))
-    store.catalog.overwrite(
-        spark.createDataFrame([(n_docs, avgdl, int(st["tot"] or 0))],
-                              "n_docs long, avgdl double, total_tokens long"),
-        store.corpus_stats_dir_for(epoch))
+    store.write_corpus_stats(spark, epoch, n_docs, avgdl, int(st["tot"] or 0))
     return n_docs, avgdl
 
 

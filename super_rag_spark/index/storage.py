@@ -231,6 +231,25 @@ class IndexStorage:
         row = self.catalog.read(spark, d).collect()[0]
         return row.asDict()
 
+    def write_corpus_stats(self, spark: SparkSession, epoch: int, n_docs: int,
+                           avgdl: float, total_tokens: int) -> None:
+        """The epoch's one corpus_stats row, from a JVM-only frame: a
+        local Python list would start a Python worker to write one row.
+        Each value sits in a ``when`` with no else branch, so the
+        columns stay nullable, as the table's always were."""
+        from pyspark.sql import functions as F
+
+        def col(name: str, value, dtype: str):
+            return F.when(F.col("id") == 0,
+                          F.lit(value).cast(dtype)).alias(name)
+
+        self.catalog.overwrite(
+            spark.range(1, numPartitions=1).select(
+                col("n_docs", int(n_docs), "long"),
+                col("avgdl", float(avgdl), "double"),
+                col("total_tokens", int(total_tokens), "long")),
+            self.corpus_stats_dir_for(epoch))
+
     def lineage(self, spark: SparkSession) -> DataFrame:
         return spark.read.schema(LINEAGE_SCHEMA).json(self.lineage_dir)
 

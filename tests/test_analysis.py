@@ -44,13 +44,80 @@ def test_spark_doc_id_expr_matches_python(spark):
         assert got[u] == doc_id_for_url(u)
 
 
+# Characters whose case mapping or class could split the two
+# tokenizers: dotted capital I (lowercases to i + a combining dot), the
+# Kelvin sign (lowercases to ASCII k), sharp s in both cases, final and
+# capital sigma, combining marks, fullwidth digits and letters, NBSP,
+# emoji (a surrogate pair in the JVM) and a zero-width joiner.
+_TRICKY = ("İ", "\u212a", "ß", "ẞ", "ς", "Σ", "\u0301", "\u0307", "０", "９",
+           "Ａ", "\u00a0", "😀", "\u200d")
+
+
+def _tricky_texts():
+    from hypothesis import strategies as st
+
+    chunk = st.one_of(
+        st.sampled_from(_TRICKY),
+        st.text(alphabet="abcXYZ019 -_.,\n\t", max_size=6),
+        st.text(alphabet="aZ9", min_size=33, max_size=80),  # > 32 bytes
+        st.text(max_size=4))
+    return st.lists(chunk, max_size=12).map("".join)
+
+
+def _tricky_corpus(n: int, seed: int) -> list[str]:
+    import random
+
+    rng = random.Random(seed)
+    parts = list(_TRICKY) + ["Straße", "KELVIN", "Σίσυφος", "word", "x" * 40,
+                             "İstanbul", "café", "12", " ", "\n", "-"]
+    return [" ".join(rng.choice(parts) + rng.choice(["", "a", "Q7"])
+                     for _ in range(rng.randint(0, 30))) for _ in range(n)]
+
+
 def test_spark_tokens_expr_matches_python(spark):
+    """The JVM tokenizer (positions, vocab, snippets, sigterms) and
+    analysis.tokenize (the postings' doc pass and the oracle) split
+    every text alike: fixed cases, then generated strings mixing
+    characters whose lowercasing or class is easy to get wrong."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
     from super_rag_spark.index.build import tokens_expr
 
-    texts = ["Hello, World! x2", "", "  a--b  ", "Ümlaut straße 42", "a\nb\tc"]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = [r["toks"] for r in df.select(tokens_expr().alias("toks")).collect()]
-    assert got == [tokenize(t) for t in texts]
+    def same(texts):
+        df = spark.createDataFrame([(t,) for t in texts], "text string")
+        got = [r["toks"] for r in df.select(tokens_expr().alias("toks")).collect()]
+        assert got == [tokenize(t) for t in texts]
+
+    same(["Hello, World! x2", "", "  a--b  ", "Ümlaut straße 42", "a\nb\tc",
+          "İi \u212a ß ẞ ΟΔΟΣ ς e\u0301 ０９ A\u00a0B 😀z " + "q" * 40])
+    same(_tricky_corpus(200, 7))
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(_tricky_texts(), min_size=1, max_size=40))
+    def generated(texts):
+        same(texts)
+
+    generated()
+
+
+def test_tricky_text_positions_match_postings(spark, tmp_path):
+    """A positions build of text full of such characters verifies
+    clean: the JVM-tokenized positions sidecar holds exactly the
+    postings' (term, doc) pairs, with one position per unit of tf."""
+    from super_rag_spark.index.verify import verify_index
+    from super_rag_spark.query.engine import BM25Engine
+
+    texts = _tricky_corpus(120, 11)
+    docs = spark.createDataFrame(
+        [(f"https://t.example/{i}", t) for i, t in enumerate(texts)],
+        "url string, text string")
+    root = str(tmp_path / "idx")
+    BM25Engine(spark, root).build(docs, positions=True, n_buckets=4)
+    rep = verify_index(spark, root)
+    assert not [e for e in rep["errors"] if "positions/postings" in e]
+    assert rep["ok"], rep["errors"]
+    assert rep["n_docs"] == len(texts)
 
 
 def test_bm25_kernels_agree_bit_for_bit(spark):
@@ -89,12 +156,12 @@ def test_bm25_kernels_agree_bit_for_bit(spark):
 
 
 def test_term_id_matches_spark_xxhash64(spark):
-    """analysis.xxh64 / term_id_for against the JVM's xxhash64 over
-    every XXH64 length class (0, 1-3, 4-7, 8-31, 32, >32 bytes) and
-    multi-byte UTF-8."""
+    """analysis.xxh64 / term_id_for and the vectorized term_ids against
+    the JVM's xxhash64 over every XXH64 length class (0, 1-3, 4-7,
+    8-31, 32, >32 bytes) and multi-byte UTF-8."""
     from pyspark.sql import functions as F
 
-    from super_rag_spark.analysis import term_id_for
+    from super_rag_spark.analysis import term_id_for, term_ids
 
     terms = ["", "a", "ab", "abc", "abcd", "abcdefg", "abcdefgh",
              "semudo", "x" * 31, "y" * 32, "z" * 33, "w" * 63, "v" * 64,
@@ -109,3 +176,5 @@ def test_term_id_matches_spark_xxhash64(spark):
     ).collect()[0]
     for i, t in enumerate(terms):
         assert row[f"h{i}"] == term_id_for(t), t
+    assert term_ids(terms).tolist() == [row[f"h{i}"] for i in range(len(terms))]
+    assert term_ids([]).tolist() == []

@@ -283,3 +283,217 @@ def test_compaction_names_its_jobs_and_restores_the_description(
             assert (manifest["epoch"], manifest["n_docs"]) == (epoch + 1, 240)
             assert sc.getLocalProperty("spark.job.description") == caller
             assert names == want, compact.__name__
+
+
+# ------------------------------------------------ postings against the oracle
+
+def _decoded(store: IndexStorage, epoch: int) -> dict:
+    """{(term_id, doc_id): (tf, dl)} of every posting in every bucket
+    file of ``epoch``, each checked to sit in its term's bucket and to
+    be the only posting of its (term, doc)."""
+    from super_rag_spark.query.scoring import decode_postings_map_in_arrow
+
+    n_buckets = int(store.read_manifest()["n_buckets"])
+    out = {}
+    for b in range(n_buckets):
+        d = os.path.join(store.postings_dir_for(epoch), f"bucket={b}")
+        for f in sorted(os.listdir(d)):
+            batches = pq.read_table(os.path.join(d, f)).to_batches()
+            for rb in decode_postings_map_in_arrow(batches):
+                for t, doc, tf, dl in zip(*(c.to_pylist() for c in rb.columns)):
+                    assert t % n_buckets == b
+                    assert (t, doc) not in out
+                    out[(t, doc)] = (tf, dl)
+    return out
+
+
+def _matches_oracle(spark, store: IndexStorage, pairs) -> None:
+    """The index's postings, doc_stats and manifest stats are the
+    oracle's over ``pairs``, its (url, text) rows."""
+    from super_rag_spark.analysis import term_id_for
+
+    oracle = build_oracle(pairs)
+    epoch = store.epoch()
+    assert _decoded(store, epoch) == {
+        (term_id_for(t), d): (tf, oracle.doclen[d])
+        for t, plist in oracle.postings.items() for d, tf in plist.items()}
+    assert {r["doc_id"]: r["dl"] for r in store.doc_stats(spark, epoch)
+            .collect()} == oracle.doclen
+    manifest = store.read_manifest()
+    assert (manifest["n_docs"], manifest["avgdl"]) == (oracle.n_docs,
+                                                       oracle.avgdl)
+
+
+@pytest.fixture(scope="module")
+def oracle_rows(webtext_sf0001_path):
+    """40 fixture docs: url, html, text and lang."""
+    tbl = pq.read_table(webtext_sf0001_path,
+                        columns=["url", "html", "text", "lang"])
+    return tbl.slice(0, 40).to_pylist()
+
+
+def _html_case(spark, rows, root):
+    from super_rag_spark.extraction import extract_text
+
+    df = spark.createDataFrame([(r["url"], r["html"]) for r in rows],
+                               "url string, html binary")
+    return (build_index(spark, df, root, text_is_extracted=False, **CFG),
+            [(r["url"], extract_text(r["html"])) for r in rows])
+
+
+def _any_case(spark, rows, root):
+    from super_rag_spark.extraction import extract_text_any
+    from super_rag_spark.points import _EXT_MAP
+
+    lake = [("https://x/a.html", b"<h1>alpha doc</h1><p>text about tables</p>"),
+            ("https://x/b.txt", b"bravo doc\n\nplain text about scans"),
+            ("https://x/c.md", b"# charlie doc\n\nmarkdown text about joins"),
+            ("https://x/d.csv", b"col,val\ndelta,42"),
+            ("https://x/e.json", b'{"name": "echo doc", "topic": "queries"}')]
+    lake += [(r["url"], r["html"]) for r in rows[:10]]  # no extension: HTML
+    df = spark.createDataFrame(lake, "url string, html binary")
+    ext = {u: _EXT_MAP.get(u.rsplit(".", 1)[-1], "HTML") for u, _ in lake}
+    return (build_index(spark, df, root, text_is_extracted=False,
+                        extract_mode="any", **CFG),
+            [(u, extract_text_any(h, ext[u])) for u, h in lake])
+
+
+def _text_case(spark, rows, root):
+    pairs = [(r["url"], r["text"]) for r in rows]
+    df = spark.createDataFrame(pairs, "url string, text string")
+    return build_index(spark, df, root, **CFG), pairs
+
+
+def _title_html_case(spark, rows, root):
+    """title_weight=2 from HTML: the title's tokens count twice, which
+    the oracle sees as the title appended to the text once more."""
+    from super_rag_spark.extraction import extract_text_title
+
+    df = spark.createDataFrame([(r["url"], r["html"]) for r in rows],
+                               "url string, html binary")
+    pairs = [(r["url"], "\n".join(extract_text_title(r["html"])))
+             for r in rows]
+    return (build_index(spark, df, root, text_is_extracted=False,
+                        title_weight=2, **CFG), pairs)
+
+
+def _title_text_case(spark, rows, root):
+    docs = [(r["url"], r["text"], r["text"].split("\n")[0]) for r in rows]
+    df = spark.createDataFrame(docs, "url string, text string, title string")
+    return (build_index(spark, df, root, title_weight=3, **CFG),
+            [(u, "\n".join([t, ti, ti])) for u, t, ti in docs])
+
+
+def _meta_case(spark, rows, root):
+    df = spark.createDataFrame([(r["url"], r["text"], r["lang"]) for r in rows],
+                               "url string, text string, lang string")
+    store = build_index(spark, df, root, meta_cols=("lang",), **CFG)
+    assert {r["url"]: r["lang"] for r in store.doc_stats(spark, 0).collect()} \
+        == {r["url"]: r["lang"] for r in rows}
+    return store, [(r["url"], r["text"]) for r in rows]
+
+
+def _duplicates_case(spark, rows, root):
+    """One url with two texts, another ingested twice as it is: the
+    survivor is the text whose tokens have the highest md5 of their
+    space-joined string, then the highest dl."""
+    import hashlib
+
+    from super_rag_spark.analysis import tokenize
+
+    pairs = [(r["url"], r["text"]) for r in rows]
+    texts = ["alpha variant of the page", "beta variant of the page common"]
+    dup = pairs + [pairs[3], ("https://ex.com/dup", texts[0]),
+                   ("https://ex.com/dup", texts[1])]
+    df = spark.createDataFrame(dup, "url string, text string").repartition(3)
+
+    def key(text):
+        toks = tokenize(text)
+        return hashlib.md5(" ".join(toks).encode()).hexdigest(), len(toks)
+
+    return (build_index(spark, df, root, **CFG),
+            pairs + [("https://ex.com/dup", max(texts, key=key))])
+
+
+def _empty_doc_case(spark, rows, root):
+    pairs = [(r["url"], r["text"]) for r in rows[:10]]
+    pairs += [("https://e.example/empty", ""),
+              ("https://e.example/punct", " -- !! ... ")]
+    df = spark.createDataFrame(pairs, "url string, text string")
+    return build_index(spark, df, root, **CFG), pairs
+
+
+def _append_case(spark, rows, root):
+    """A staging append from HTML: new docs plus an upsert of an
+    indexed url, over a text-built base."""
+    from super_rag_spark.extraction import extract_text
+
+    base = [(r["url"], r["text"]) for r in rows[:30]]
+    build_index(spark, spark.createDataFrame(base, "url string, text string"),
+                root, **CFG)
+    upsert = dict(rows[0], html=b"<p>replacement body for the upsert</p>")
+    delta = [upsert] + rows[30:]
+    merge_append(spark, root, spark.createDataFrame(
+        [(r["url"], r["html"]) for r in delta], "url string, html binary"),
+        text_is_extracted=False)
+    store = IndexStorage(root)
+    assert store.epoch() == 1
+    return store, base[1:] + [(r["url"], extract_text(r["html"])) for r in delta]
+
+
+@pytest.mark.parametrize("case", [
+    _html_case, _any_case, _text_case, _title_html_case, _title_text_case,
+    _meta_case, _duplicates_case, _empty_doc_case, _append_case],
+    ids=lambda f: f.__name__.strip("_").removesuffix("_case"))
+def test_postings_match_the_oracle(spark, oracle_rows, tmp_path, case):
+    """Every build_index option writes exactly the oracle's postings:
+    each bucket decodes to (term_id_for(term), doc_id, tf, dl) of
+    OracleIndex.postings and doclen, and doc_stats and the manifest
+    carry the oracle's dl, n_docs and avgdl."""
+    store, pairs = case(spark, oracle_rows, str(tmp_path / "idx"))
+    _matches_oracle(spark, store, pairs)
+
+
+def test_streaming_fallbacks_write_the_spill_files(
+        spark, split_inputs, tmp_path, monkeypatch, bucket_bytes):
+    """The two builds the spill does not serve go to the streaming
+    builder and write the same bytes: a bucket over BUCKET_MEM_BUDGET,
+    and an adaptive bucket count other than the spill's (the session's
+    parallelism)."""
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.read.parquet(split_inputs["one"])
+    cfg = dict(salt_df_threshold=150)
+    streamed = []
+    write_blocks = build.write_blocks
+    monkeypatch.setattr(build, "write_blocks",
+                        lambda *a, **k: streamed.append(1) or write_blocks(*a, **k))
+
+    def files(store):
+        return tuple(bucket_bytes(getattr(store, d)(0))
+                     for d in ("postings_dir_for", "term_stats_dir_for"))
+
+    spill = files(build_index(spark, df, str(tmp_path / "spill"),
+                              n_buckets=cores + 1, **cfg))
+    assert not streamed and len(spill[0]) == cores + 1
+    with monkeypatch.context() as m:
+        m.setattr(build, "BUCKET_MEM_BUDGET", 0)
+        over = build_index(spark, df, str(tmp_path / "over"),
+                           n_buckets=cores + 1, **cfg)
+    assert streamed == [1] and files(over) == spill
+    monkeypatch.setattr(build, "adaptive_n_buckets", lambda s, t: cores + 1)
+    adaptive = build_index(spark, df, str(tmp_path / "adaptive"), **cfg)
+    assert streamed == [1, 1] and files(adaptive) == spill
+    assert adaptive.read_manifest()["n_buckets"] == cores + 1
+
+
+def test_failed_doc_pass_leaves_no_spill(spark, tmp_path):
+    """A doc pass that raises (a .docx url whose payload is not a zip)
+    fails the build and leaves no spill dir behind."""
+    df = spark.createDataFrame(
+        [("https://x/a.html", b"<p>fine</p>"), ("https://x/b.docx", b"not a zip")],
+        "url string, html binary")
+    root = str(tmp_path / "idx")
+    with pytest.raises(Exception, match="BadZipFile|not a zip"):
+        build_index(spark, df, root, text_is_extracted=False,
+                    extract_mode="any", n_buckets=2)
+    assert not os.path.exists(IndexStorage(root).postings_dir_for(0) + "._tfspill")
