@@ -169,56 +169,6 @@ def term_id_for(term: str) -> int:
     return h - (1 << 64) if h >= (1 << 63) else h
 
 
-def term_ids(terms: list[str]):
-    """:func:`term_id_for` of each of ``terms`` as an int64 NumPy array,
-    uncached. Terms under 32 UTF-8 bytes (nearly all) hash in NumPy
-    uint64 lanes, all at once: XXH64's short-input path is 8-byte,
-    4-byte and 1-byte steps over the zero-padded bytes, each applied
-    only where the term still has that many bytes left. Longer terms
-    take :func:`xxh64`."""
-    import numpy as np
-
-    u = np.uint64
-    data = [t.encode("utf-8") for t in terms]
-    lens = np.fromiter(map(len, data), dtype=np.int64, count=len(data))
-    out = np.empty(len(data), dtype=np.uint64)
-    for i in np.flatnonzero(lens >= 32).tolist():
-        out[i] = xxh64(data[i], 42)
-    short = np.flatnonzero(lens < 32)
-    if len(short):
-        raw = np.frombuffer(b"".join(data[i].ljust(32, b"\0")
-                                     for i in short.tolist()), dtype=np.uint8)
-        raw = raw.reshape(-1, 32)
-        rows = np.arange(len(short))
-        n = lens[short]
-
-        def rotl(x, r):
-            return (x << u(r)) | (x >> u(64 - r))
-
-        with np.errstate(over="ignore"):
-            h = u(42 + _P5) + n.astype(np.uint64)
-            lane8 = raw.view("<u8")
-            for k in range(3):
-                kk = rotl(lane8[:, k] * u(_P2), 31) * u(_P1)
-                h = np.where(n >= 8 * (k + 1),
-                             rotl(h ^ kk, 27) * u(_P1) + u(_P4), h)
-            i = n & ~7
-            lane4 = raw.view("<u4")[rows, i >> 2].astype(np.uint64)
-            four = n - i >= 4
-            h = np.where(four, rotl(h ^ (lane4 * u(_P1)), 23) * u(_P2) + u(_P3), h)
-            i = i + 4 * four
-            for j in range(3):
-                byte = raw[rows, np.minimum(i + j, 31)].astype(np.uint64)
-                h = np.where(i + j < n, rotl(h ^ (byte * u(_P5)), 11) * u(_P1), h)
-            h ^= h >> u(33)
-            h *= u(_P2)
-            h ^= h >> u(29)
-            h *= u(_P3)
-            h ^= h >> u(32)
-        out[short] = h
-    return out.view(np.int64)
-
-
 def salt_for_doc_id(doc_id: int, salt_count: int = SALT_COUNT) -> int:
     """Contiguous-range salt = top log2(salt_count) bits of doc_id."""
     shift = DOC_ID_BITS - (salt_count.bit_length() - 1)

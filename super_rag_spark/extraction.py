@@ -833,30 +833,13 @@ def extract_text_map_in_pandas(batches: Iterator[pd.DataFrame]) -> Iterator[pd.D
 
 # -------------------------------------------------- BM25F title extraction
 
-EXTRACT_TITLE_SCHEMA = "url string, text string, title string"
-
-
-def extract_title(html: bytes | str) -> str:
-    """The TITLE FIELD of a page: the Title-typed elements
-    (<title>/<h1>-<h3>) with the same consecutive-duplicate collapse
-    extract_text applies, newline-joined. The flat ``text`` stays
-    byte-identical to extract_text — this is a SEPARATE projection of
-    the same element stream, so BM25F field weighting never perturbs
-    the per-url extraction invariant."""
-    out: list[str] = []
-    prev_title: str | None = None
-    for el in extract_elements(html):
-        if el["type"] == "Title":
-            if el["text"] == prev_title:
-                continue
-            prev_title = el["text"]
-            out.append(el["text"])
-    return "\n".join(out)
-
-
 def extract_text_title(html: bytes | str) -> tuple[str, str]:
-    """(text, title) of a page from one parse: ``text`` byte-identical
-    to extract_text, ``title`` to extract_title."""
+    """(text, title) of a page from one parse. ``text`` is
+    byte-identical to extract_text; ``title`` is the TITLE FIELD for
+    BM25F weighting: the Title-typed elements (<title>/<h1>-<h3>), with
+    consecutive duplicates collapsed, newline-joined. The title is a
+    separate projection of the same element stream, so field weighting
+    never perturbs the per-url extraction invariant."""
     t_out: list[str] = []
     ti_out: list[str] = []
     prev_title: str | None = None
@@ -868,14 +851,3 @@ def extract_text_title(html: bytes | str) -> tuple[str, str]:
             ti_out.append(el["text"])
         t_out.append(el["text"])
     return "\n".join(t_out), "\n".join(ti_out)
-
-
-def extract_text_title_map_in_pandas(
-        batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (url, html:binary) -> (url, text, title) —
-    one parse per doc feeding both projections."""
-    for pdf in batches:
-        pairs = [extract_text_title(h) for h in pdf["html"]]
-        yield pd.DataFrame({"url": pdf["url"],
-                            "text": [t for t, _ in pairs],
-                            "title": [ti for _, ti in pairs]})

@@ -15,10 +15,11 @@ embed -> vector-DB upsert, /root/reference/api/ingest.py:15-62 and
 
 Scale notes (100 TB / 10^12 docs):
 - the doc pass crosses the JVM/Python boundary once per doc: the text
-  is extracted, tokenized, hashed (analysis.term_ids, per-task term
-  dict) and collapsed to postings in the task that extracted it, and
-  only (doc_id, url, dl) goes back to the JVM. Nothing token-sized is
-  persisted, exploded or shuffled; tokens never exist as JVM arrays.
+  is extracted, tokenized, hashed (analysis.term_id_for through a
+  per-task dict) and collapsed to postings in the task that extracted
+  it, and only (doc_id, url, dl) goes back to the JVM. Nothing
+  token-sized is persisted, exploded or shuffled; tokens never exist
+  as JVM arrays.
   Positions and vocab sidecars still tokenize in the JVM
   (tokens_expr); tests/test_analysis.py holds the two tokenizers to
   the same output.
@@ -27,10 +28,13 @@ Scale notes (100 TB / 10^12 docs):
   build writes n_tasks files, not n_tasks x n_buckets, and a bucket
   holds collapsed postings, not raw token occurrences: a head term
   weighs its df, not its total count. The bucket count of the spill is
-  the pinned n_buckets, else the session's parallelism
-  (adaptive_n_buckets' floor); a build whose final count differs, or
-  whose biggest bucket is over BUCKET_MEM_BUDGET, feeds the spill files
-  to the streaming builder instead (_postings_from_spill).
+  the pinned n_buckets, else the session's parallelism, of which
+  adaptive_n_buckets' count is a multiple: each index bucket lies
+  inside one spill bucket, and a task reads a spill bucket's row
+  groups and builds its index buckets (a share of them, when the spill
+  bucket is over BUCKET_MEM_BUDGET). A build whose index buckets are
+  over the budget feeds the spill files to the streaming builder
+  instead (_postings_from_spill).
 - the block builder sums tf over (term, doc) runs and sees each term's
   df as its group size, so there is no df aggregation and no df join.
 - head-term skew (Zipf: "the" at 10^12 docs has ~10^11 postings) is
@@ -159,42 +163,15 @@ def extract_any(df: DataFrame) -> DataFrame:
     )
 
 
-def extract_with_title(webtext_df: DataFrame) -> DataFrame:
-    """(url, html, ...) -> (url, text, title): one parse feeding both
-    the flat text (byte-identical to extract()) and the title field
-    (Title-typed elements) for BM25F weighting."""
-    from ..extraction import (EXTRACT_TITLE_SCHEMA,
-                              extract_text_title_map_in_pandas)
-
-    return webtext_df.select("url", "html").mapInPandas(
-        extract_text_title_map_in_pandas, schema=EXTRACT_TITLE_SCHEMA
-    )
-
-
-def tokens_from_text(df: DataFrame, url_col: str = "url", text_col: str = "text",
-                     title_weight: int = 1) -> DataFrame:
-    """(url, text[, title]) -> (doc_id, url, tokens, dl).
-
-    ``title_weight`` > 1 applies BM25F field weighting in its
-    field-concatenation form (Robertson & Zaragoza 2009 §3.3: integer
-    field weights == repeating the field's tokens, sharing one length
-    normalization): the title's tokens are appended ``title_weight-1``
-    extra times, so tf and dl both carry the weight and EVERYTHING
-    downstream — postings, WAND bounds, merges, sidecars — works
-    unchanged. df is untouched (repetition never changes membership).
-    Pure Catalyst (flatten(array_repeat(...))), no UDF."""
-    toks = tokens_expr(text_col)
-    if title_weight > 1:
-        toks = F.concat(
-            toks,
-            F.flatten(F.array_repeat(tokens_expr("title"),
-                                     title_weight - 1)),
-        )
+def tokens_from_text(df: DataFrame, url_col: str = "url",
+                     text_col: str = "text") -> DataFrame:
+    """(url, text) -> (doc_id, url, tokens, dl), tokenized in the JVM
+    (:func:`tokens_expr`); the positions and vocab sidecars' input."""
     return (
         df.select(
             doc_id_expr(url_col).alias("doc_id"),
             F.col(url_col).alias("url"),
-            toks.alias("tokens"),
+            tokens_expr(text_col).alias("tokens"),
         )
         .withColumn("dl", F.size("tokens"))
     )
@@ -441,11 +418,16 @@ def _clustered(rows: DataFrame, n_buckets: int) -> DataFrame:
 def _collapse_build_bucket(terms, docs, tfdl, *, block_size: int,
                            n_buckets: int, salt_df_threshold: int,
                            salt_count: int, seg: int):
-    """Whole-bucket block build over UNSORTED arrays: one numpy
-    lexsort, then :func:`_collapse_build`. (r6, measured sf0.1 at 1
-    core: Spark's row sort and row->Arrow pipe took 48 s + ~25 s for
-    34 M rows, the same sort as one lexsort 7.5 s.)"""
-    order = np.lexsort((docs, terms))
+    """Whole-bucket block build over UNSORTED arrays of one or more
+    buckets: one numpy lexsort by (bucket, term_id, doc_id), then
+    :func:`_collapse_build`. (r6, measured sf0.1 at 1 core: Spark's row
+    sort and row->Arrow pipe took 48 s + ~25 s for 34 M rows, the same
+    sort as one lexsort 7.5 s.)"""
+    keys = (docs, terms)
+    bucket = terms % n_buckets
+    if len(bucket) and (bucket != bucket[0]).any():
+        keys += (bucket,)
+    order = np.lexsort(keys)
     return _collapse_build(
         terms[order], docs[order], tfdl[order], block_size=block_size,
         n_buckets=n_buckets, salt_df_threshold=salt_df_threshold,
@@ -668,10 +650,16 @@ def adaptive_n_buckets(spark: SparkSession, total_tokens: int) -> int:
     1-core scaling leg ~0.4 s/task of pure task overhead (measured:
     the identical build_postings stage at 1 core, 32 -> 4 buckets,
     16.8 s -> 5.9 s); at 100 TB the size term dominates and yields
-    thousands of buckets, capped at 4096."""
+    thousands of buckets, capped at 4096.
+
+    The count is a multiple of the session's parallelism, which is the
+    doc pass's spill bucket count when none is pinned: each bucket then
+    lies inside one spill bucket (a term id's residue mod the count
+    fixes its residue mod the parallelism), so the bucket tasks read
+    the spill columnar (:func:`_postings_from_spill`)."""
     par = int(spark.sparkContext.defaultParallelism)
     size_b = max(1, (int(total_tokens) * 6) >> 27)  # / 128 MiB
-    return max(1, min(4096, max(par, size_b)))
+    return max(1, min(-(-size_b // par) * par, 4096 // par * par or 4096))
 
 
 # ---------------------------------------------------------------- doc pass
@@ -741,16 +729,16 @@ def _postings_of(doc_ids: list[int], tokens: list[list[str]], ids: dict):
     """(term_id, doc_id, tfdl) arrays of docs' postings: one per
     distinct term of a doc, tf and dl packed as tf<<32 | dl. ``ids``
     maps terms to term ids for one task; the terms it lacks are hashed
-    together (analysis.term_ids) and added. A process-wide cache would
-    outlive the task and let a rebuild of the same corpus skip the
-    hashing that a first build pays."""
+    (analysis.term_id_for, uncached) and added. A process-wide cache
+    would outlive the task and let a rebuild of the same corpus skip
+    the hashing that a first build pays."""
     from collections import Counter
     from itertools import chain
 
     counts = [Counter(t) for t in tokens]
     new = list(set().union(*counts).difference(ids))
     if new:
-        ids.update(zip(new, analysis.term_ids(new).tolist()))
+        ids.update((t, analysis.term_id_for.__wrapped__(t)) for t in new)
     per_doc = np.fromiter(map(len, counts), np.int64, len(counts))
     n = int(per_doc.sum())
     terms = np.fromiter(map(ids.__getitem__, chain.from_iterable(counts)),
@@ -906,19 +894,28 @@ def _postings_from_spill(spark: SparkSession, spill_dir: str,
                          salt_count: int, seg: int) -> list[dict]:
     """Postings (and term_stats unless ``ts_dir`` is None) of the doc
     pass's spill, grouped by ``spill_buckets`` buckets; returns each
-    written bucket's lineage row. When the index has as many buckets
-    and each bucket's postings fit a task (24 B each, within
-    ``BUCKET_MEM_BUDGET``), one task per bucket reads its row groups of
-    every spill file, numpy-lexsorts them, builds the blocks and writes
-    them (:func:`_collapse_build_bucket`, :func:`_write_buckets`). Else
-    the streaming builder, whose carry bounds a task's memory, takes
-    the spill files as a Spark frame (:func:`_clustered`,
-    :func:`write_blocks`). Both give the same files."""
-    bs, nb, thr, sc, sg = (int(block_size), int(n_buckets),
-                           int(salt_df_threshold), int(salt_count), int(seg))
+    written bucket's lineage row.
+
+    When ``n_buckets`` is a multiple k of ``spill_buckets``, each index
+    bucket lies inside one spill bucket, and tasks read the spill
+    columnar: a spill bucket's row groups of every spill file go to one
+    task, or to g tasks when its postings (24 B each) are over
+    ``BUCKET_MEM_BUDGET``, each keeping every g-th of the bucket's k
+    index buckets. A task numpy-lexsorts its rows, builds their blocks
+    and writes them (:func:`_collapse_build_bucket`,
+    :func:`_write_buckets`). Else (another count, or an index bucket
+    over the budget) the streaming builder, whose carry bounds a task's
+    memory, takes the spill files as a Spark frame (:func:`_clustered`,
+    :func:`write_blocks`). All give the same files."""
+    bs, nb, sb, thr, sc, sg = (int(block_size), int(n_buckets),
+                               int(spill_buckets), int(salt_df_threshold),
+                               int(salt_count), int(seg))
     parts = _spill_parts(spill_dir)
     biggest = max((sum(p[2] for p in v) for v in parts.values()), default=0)
-    if nb != spill_buckets or biggest * 24 > BUCKET_MEM_BUDGET:
+    k, rem = divmod(nb, sb)
+    groups = next((g for g in range(1, k + 1)
+                   if biggest * 24 <= BUCKET_MEM_BUDGET * g), None)
+    if rem or groups is None:
         if not parts:
             return []
         rows = spark.read.schema(
@@ -928,23 +925,34 @@ def _postings_from_spill(spark: SparkSession, spill_dir: str,
             build=_make_partition_builder(
                 bs, nb, sg, salt_df_threshold=thr, salt_count=sc))
 
-    def build(item) -> dict:
+    def build(item) -> list[dict]:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        b, files = item
-        tbl = pa.concat_tables(
-            pq.ParquetFile(path).read_row_groups(
-                rgs, columns=["term_id", "doc_id", "tfdl"])
-            for path, rgs, _ in files)
+        j, files = item
+        tables = []
+        for path, rgs, _ in files:
+            f = pq.ParquetFile(path)
+            for i in rgs:
+                tbl = f.read_row_group(i, columns=["term_id", "doc_id", "tfdl"])
+                if groups > 1:
+                    tbl = tbl.filter(
+                        tbl["term_id"].to_numpy() % nb // sb % groups == j)
+                tables.append(tbl)
+        tbl = pa.concat_tables(tables)
+        del tables
+        if tbl.num_rows == 0:
+            return []
         cols = [tbl[c].to_numpy() for c in ("term_id", "doc_id", "tfdl")]
         del tbl
         rb = _collapse_build_bucket(
             *cols, block_size=bs, n_buckets=nb, salt_df_threshold=thr,
             salt_count=sc, seg=sg)
-        return next(_write_buckets([rb], postings_dir, ts_dir))
+        return list(_write_buckets([rb], postings_dir, ts_dir))
 
-    return _per_bucket(spark, sorted(parts.items()), build)
+    items = [(j, files) for _, files in sorted(parts.items())
+             for j in range(groups)]
+    return [r for rows in _per_bucket(spark, items, build) for r in rows]
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,

@@ -156,12 +156,12 @@ def test_bm25_kernels_agree_bit_for_bit(spark):
 
 
 def test_term_id_matches_spark_xxhash64(spark):
-    """analysis.xxh64 / term_id_for and the vectorized term_ids against
-    the JVM's xxhash64 over every XXH64 length class (0, 1-3, 4-7,
-    8-31, 32, >32 bytes) and multi-byte UTF-8."""
+    """analysis.xxh64 / term_id_for against the JVM's xxhash64 over
+    every XXH64 length class (0, 1-3, 4-7, 8-31, 32, >32 bytes) and
+    multi-byte UTF-8."""
     from pyspark.sql import functions as F
 
-    from super_rag_spark.analysis import term_id_for, term_ids
+    from super_rag_spark.analysis import term_id_for
 
     terms = ["", "a", "ab", "abc", "abcd", "abcdefg", "abcdefgh",
              "semudo", "x" * 31, "y" * 32, "z" * 33, "w" * 63, "v" * 64,
@@ -176,5 +176,3 @@ def test_term_id_matches_spark_xxhash64(spark):
     ).collect()[0]
     for i, t in enumerate(terms):
         assert row[f"h{i}"] == term_id_for(t), t
-    assert term_ids(terms).tolist() == [row[f"h{i}"] for i in range(len(terms))]
-    assert term_ids([]).tolist() == []

@@ -11,7 +11,7 @@ the explicitly repeated text.
 import pytest
 from pyspark.sql import functions as F
 
-from super_rag_spark.index.build import extract, extract_with_title
+from super_rag_spark.extraction import extract_text, extract_text_title
 
 
 def _topk_all(eng, queries, k=10):
@@ -93,11 +93,9 @@ def test_title_weight_html_path_and_extraction_invariant(spark, tmp_path):
     ]
     docs = spark.createDataFrame(html_rows, "url string, html binary")
 
-    with_title = {r["url"]: (r["text"], r["title"])
-                  for r in extract_with_title(docs).collect()}
-    plain = {r["url"]: r["text"] for r in extract(docs).collect()}
-    for u in plain:
-        assert with_title[u][0] == plain[u]       # byte-identical text
+    with_title = {u: extract_text_title(h) for u, h in html_rows}
+    for u, h in html_rows:
+        assert with_title[u][0] == extract_text(h)  # byte-identical text
     assert with_title["https://h.example/1"][1] == "quarks"
 
     eng = BM25Engine(spark, str(tmp_path / "hidx")).build(

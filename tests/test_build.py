@@ -486,6 +486,74 @@ def test_streaming_fallbacks_write_the_spill_files(
     assert adaptive.read_manifest()["n_buckets"] == cores + 1
 
 
+def test_adaptive_multiple_reads_the_spill(
+        spark, split_inputs, tmp_path, monkeypatch, bucket_bytes):
+    """An adaptive bucket count that is a multiple of the spill's (the
+    session's parallelism) keeps the columnar spill path: one task per
+    spill bucket builds its index buckets, or two tasks each half of
+    them when the spill bucket is over BUCKET_MEM_BUDGET; the files are
+    those of a build pinned to that count, each written once. When half
+    a spill bucket is still over the budget the streaming builder
+    writes the same files."""
+    cores = spark.sparkContext.defaultParallelism
+    nb = 2 * cores
+    df = spark.read.parquet(split_inputs["one"])
+    cfg = dict(salt_df_threshold=150)
+    streamed, tasks = [], []
+    write_blocks, per_bucket = build.write_blocks, build._per_bucket
+    monkeypatch.setattr(build, "write_blocks",
+                        lambda *a, **k: streamed.append(1) or write_blocks(*a, **k))
+
+    def counted(s, items, task):
+        # (tasks, bucket files the tasks wrote)
+        rows = per_bucket(s, items, task)
+        tasks.append((len(items), sum(map(len, rows))))
+        return rows
+
+    monkeypatch.setattr(build, "_per_bucket", counted)
+
+    def files(store):
+        return tuple(bucket_bytes(getattr(store, d)(0))
+                     for d in ("postings_dir_for", "term_stats_dir_for"))
+
+    pinned = build_index(spark, df, str(tmp_path / "pinned"), n_buckets=nb, **cfg)
+    want = files(pinned)
+    # the biggest spill bucket's postings: index buckets b and b + cores
+    n = [pq.read_table(os.path.join(pinned.postings_dir_for(0), f"bucket={b}"),
+                       columns=["n"])["n"].to_numpy().sum() for b in range(nb)]
+    biggest = max(n[b] + n[b + cores] for b in range(cores))
+    monkeypatch.setattr(build, "adaptive_n_buckets", lambda s, t: nb)
+    tasks.clear()
+    for budget, n_tasks in ((build.BUCKET_MEM_BUDGET, cores),
+                            (biggest * 24 - 1, 2 * cores)):
+        with monkeypatch.context() as m:
+            m.setattr(build, "BUCKET_MEM_BUDGET", budget)
+            store = build_index(spark, df, str(tmp_path / f"b{budget}"), **cfg)
+        assert store.read_manifest()["n_buckets"] == nb
+        assert files(store) == want and tasks[0] == (n_tasks, nb)
+        tasks.clear()
+    assert not streamed
+    with monkeypatch.context() as m:
+        m.setattr(build, "BUCKET_MEM_BUDGET", biggest * 12 - 1)
+        store = build_index(spark, df, str(tmp_path / "streamed"), **cfg)
+    assert streamed == [1] and files(store) == want
+
+
+def test_adaptive_n_buckets_is_a_multiple_of_the_parallelism():
+    """adaptive_n_buckets: at least the parallelism, one bucket per
+    ~128 MiB of postings (6 B per token), rounded up to a multiple of
+    the parallelism, and at most 4096 (the biggest multiple below it)."""
+    class Session:
+        def __init__(self, par):
+            self.sparkContext = type("SC", (), {"defaultParallelism": par})
+
+    mib128 = (1 << 27) // 6 + 1  # tokens of one 128 MiB bucket
+    for par, tokens, want in ((4, 0, 4), (4, 4 * mib128, 4), (4, 5 * mib128, 8),
+                              (3, 10 ** 13, 4095), (4, 10 ** 13, 4096),
+                              (5000, 10 ** 13, 4096), (1, 3 * mib128, 3)):
+        assert build.adaptive_n_buckets(Session(par), tokens) == want
+
+
 def test_failed_doc_pass_leaves_no_spill(spark, tmp_path):
     """A doc pass that raises (a .docx url whose payload is not a zip)
     fails the build and leaves no spill dir behind."""
