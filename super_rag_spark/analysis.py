@@ -55,6 +55,58 @@ def tokenize(text: str) -> list[str]:
     return _TOKEN_RE.findall(text.lower())
 
 
+# byte -> its lowercase form when it is ASCII [A-Za-z0-9], else 0 (a
+# separator): tokenize's lowercasing and split for ASCII text
+_ALNUM_LOWER = bytes(c | 0x20 if chr(c).isascii() and chr(c).isalnum() else 0
+                     for c in range(256))
+
+
+def term_counts(texts: list):
+    """:func:`tokenize` of every text of a batch, counted per doc in
+    batch kernels: no Python object per token. Returns int64 arrays
+    (doc, term_id, tf), one row per distinct term of a doc (``doc`` is
+    the text's index, ascending), and each text's token count ``dl``.
+    None counts as the empty text.
+
+    A text with a non-ASCII character is first rewritten as
+    ``" ".join(tokenize(text))``, so Unicode lowercasing has its one
+    definition here. The batch's texts are then joined by ``"\\n"`` (a
+    separator, so no token crosses a doc), lowercased and split with a
+    256-entry byte table (``_ALNUM_LOWER``), the tokens
+    dictionary-encoded by pyarrow, each distinct term hashed once
+    (:func:`term_ids`), and the (doc, term) pairs counted by one
+    ``np.unique``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    docs = [" ".join(tokenize(t)) if t and not t.isascii() else t or ""
+            for t in texts]
+    n_docs = len(docs)
+    low = np.frombuffer("\n".join(docs).encode("ascii").translate(_ALNUM_LOWER),
+                        dtype=np.uint8)
+    alnum = low != 0
+    edge = np.diff(alnum.view(np.int8), prepend=0, append=0)
+    starts, ends = np.flatnonzero(edge == 1), np.flatnonzero(edge == -1)
+    lens = np.fromiter(map(len, docs), np.int64, n_docs)
+    doc_starts = np.cumsum(lens + 1) - lens - 1
+    doc = np.searchsorted(doc_starts, starts, side="right") - 1
+    dl = np.bincount(doc, minlength=n_docs).astype(np.int64)
+    if not len(starts):
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, empty, dl
+    offsets = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(ends - starts, out=offsets[1:])
+    tokens = pa.Array.from_buffers(pa.large_string(), len(starts), [
+        None, pa.py_buffer(offsets), pa.py_buffer(low[alnum])])
+    enc = pc.dictionary_encode(tokens)
+    ids = term_ids(enc.dictionary)
+    n_terms = np.int64(len(ids))
+    keys, tfs = np.unique(doc * n_terms + enc.indices.to_numpy(),
+                          return_counts=True)
+    return keys // n_terms, ids[keys % n_terms], tfs.astype(np.int64), dl
+
+
 _BOOST_RE = re.compile(r"\^(\d+(?:\.\d+)?)$")
 
 
@@ -167,6 +219,64 @@ def term_id_for(term: str) -> int:
     """
     h = xxh64(term.encode("utf-8"), 42)
     return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def term_ids(terms):
+    """:func:`term_id_for` of each of ``terms`` (a list of str or a
+    pyarrow string array) as an int64 NumPy array, uncached. Terms
+    under 32 UTF-8 bytes (nearly all) hash in NumPy uint64 lanes, all
+    at once: XXH64's short-input path is 8-byte, 4-byte and 1-byte
+    steps over the zero-padded bytes, each applied only where the term
+    still has that many bytes left. Longer terms take :func:`xxh64`."""
+    import numpy as np
+    import pyarrow as pa
+
+    from .codec import binary_buffers
+
+    u = np.uint64
+    if not isinstance(terms, pa.Array):
+        terms = pa.array(terms, pa.string())
+    off, data = binary_buffers(terms)
+    off = off.astype(np.int64)
+    lens = np.diff(off)
+    out = np.empty(len(lens), dtype=np.uint64)
+    for i in np.flatnonzero(lens >= 32).tolist():
+        out[i] = xxh64(data[off[i]:off[i + 1]].tobytes(), 42)
+    short = np.flatnonzero(lens < 32)
+    if len(short):
+        # each short term's bytes, zero-padded to one 32-byte row
+        n = lens[short]
+        row = np.repeat(np.arange(len(short)), n)
+        col = np.arange(int(n.sum())) - np.repeat(np.cumsum(n) - n, n)
+        raw = np.zeros((len(short), 32), dtype=np.uint8)
+        raw[row, col] = data[np.repeat(off[short], n) + col]
+        rows = np.arange(len(short))
+
+        def rotl(x, r):
+            return (x << u(r)) | (x >> u(64 - r))
+
+        with np.errstate(over="ignore"):
+            h = u(42 + _P5) + n.astype(np.uint64)
+            lane8 = raw.view("<u8")
+            for k in range(3):
+                kk = rotl(lane8[:, k] * u(_P2), 31) * u(_P1)
+                h = np.where(n >= 8 * (k + 1),
+                             rotl(h ^ kk, 27) * u(_P1) + u(_P4), h)
+            i = n & ~7
+            lane4 = raw.view("<u4")[rows, i >> 2].astype(np.uint64)
+            four = n - i >= 4
+            h = np.where(four, rotl(h ^ (lane4 * u(_P1)), 23) * u(_P2) + u(_P3), h)
+            i = i + 4 * four
+            for j in range(3):
+                byte = raw[rows, np.minimum(i + j, 31)].astype(np.uint64)
+                h = np.where(i + j < n, rotl(h ^ (byte * u(_P5)), 11) * u(_P1), h)
+            h ^= h >> u(33)
+            h *= u(_P2)
+            h ^= h >> u(29)
+            h *= u(_P3)
+            h ^= h >> u(32)
+        out[short] = h
+    return out.view(np.int64)
 
 
 def salt_for_doc_id(doc_id: int, salt_count: int = SALT_COUNT) -> int:

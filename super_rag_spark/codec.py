@@ -193,13 +193,14 @@ ENC_COLS = ("docs_enc", "tfs_enc", "dls_enc")
 
 
 def binary_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """(value offsets, value bytes) of a binary Arrow array, or of a
-    slice of one, as NumPy views: row i's bytes are
+    """(value offsets, value bytes) of a binary or string Arrow array,
+    or of a slice of one, as NumPy views: row i's bytes are
     ``data[off[i]:off[i + 1]]``."""
     _, offsets, data = arr.buffers()
     if offsets is None or data is None:  # no rows, or only empty values
         return np.zeros(len(arr) + 1, dtype=np.int64), np.empty(0, np.uint8)
-    dtype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    dtype = (np.int64 if pa.types.is_large_binary(arr.type)
+             or pa.types.is_large_string(arr.type) else np.int32)
     off = np.frombuffer(offsets, dtype=dtype)[arr.offset:arr.offset + len(arr) + 1]
     return off, np.frombuffer(data, dtype=np.uint8)
 
@@ -219,18 +220,26 @@ def decode_blocks_batch(blocks: EncodedBlocks):
 
     LEB128 streams concatenate, so the per-call NumPy dispatch overhead
     (the dominant cost when a head-term query touches thousands of
-    blocks) is paid once instead of per block. Delta decode across
-    block boundaries: within block b, doc[i] = C[i] - C[start_b - 1]
-    where C is the global gap cumsum (each block's first gap is the
+    blocks) is paid once instead of per block, and once for all three
+    streams when they fit one decode pass. Delta decode across block
+    boundaries: within block b, doc[i] = C[i] - C[start_b - 1] where C
+    is the global gap cumsum (each block's first gap is the
     absolute doc id), vectorized with a per-block offset repeat.
 
     Returns (doc_ids, tfs, dls, ns) int64 arrays; ns = block lengths.
     """
     ns = np.asarray(blocks.n, dtype=np.int64)
     total = int(ns.sum())
-    gaps = decode_varint(blocks.docs_enc, total)
-    tfs = decode_varint(blocks.tfs_enc, total)
-    dls = decode_varint(blocks.dls_enc, total)
+    streams = (blocks.docs_enc, blocks.tfs_enc, blocks.dls_enc)
+    if sum(map(len, streams)) <= _VARINT_PASS_BYTES:
+        # end to end the streams are one LEB128 stream of 3 x total
+        # values (the format is self-delimiting): one decode pass
+        gaps, tfs, dls = np.split(decode_varint(np.concatenate(
+            [np.frombuffer(s, dtype=np.uint8) for s in streams]),
+            3 * total), 3)
+    else:
+        # a pass or more each: joining them would only copy the input
+        gaps, tfs, dls = (decode_varint(s, total) for s in streams)
     if not total:
         return gaps, tfs, dls, ns
     docs = np.cumsum(gaps, out=gaps)

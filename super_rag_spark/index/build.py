@@ -5,9 +5,10 @@ embed -> vector-DB upsert, /root/reference/api/ingest.py:15-62 and
 /root/reference/service/embedding.py:153-296) with:
 
   scan -> spread_input -> ONE Python pass per input partition
-  (mapInArrow: extract, analysis.tokenize, collapse to one posting per
-  (term, doc), spill the postings to one file per task grouped by
-  term-hash bucket) -> persisted (doc_id, url, dl) rows -> corpus stats
+  (mapInArrow: extract, then per Arrow batch tokenize, hash and count
+  in NumPy kernels to one posting per (term, doc), spill the postings
+  to one file per task grouped by term-hash bucket) -> persisted
+  (doc_id, url, dl) rows -> corpus stats
   + duplicate-url check + doc_stats + corpus_stats -> per-bucket task:
   its row groups of every spill file -> numpy lexsort -> posting-block
   build with in-bucket head-term salting (NumPy codec) -> postings +
@@ -15,11 +16,15 @@ embed -> vector-DB upsert, /root/reference/api/ingest.py:15-62 and
 
 Scale notes (100 TB / 10^12 docs):
 - the doc pass crosses the JVM/Python boundary once per doc: the text
-  is extracted, tokenized, hashed (analysis.term_id_for through a
-  per-task dict) and collapsed to postings in the task that extracted
-  it, and only (doc_id, url, dl) goes back to the JVM. Nothing
-  token-sized is persisted, exploded or shuffled; tokens never exist
-  as JVM arrays.
+  is extracted, tokenized and collapsed to postings in the task that
+  extracted it, and only (doc_id, url, dl) goes back to the JVM.
+  Nothing token-sized is persisted, exploded or shuffled; tokens never
+  exist as JVM arrays, nor as Python objects: analysis.term_counts
+  splits a whole Arrow batch with a byte table, dictionary-encodes its
+  tokens, hashes each distinct term once (analysis.term_ids, XXH64 in
+  NumPy lanes) and counts (doc, term) pairs with one np.unique. Only a
+  non-ASCII doc is tokenized per doc first (analysis.tokenize), so
+  Unicode lowercasing has one definition.
   Positions and vocab sidecars still tokenize in the JVM
   (tokens_expr); tests/test_analysis.py holds the two tokenizers to
   the same output.
@@ -65,6 +70,13 @@ Scale notes (100 TB / 10^12 docs):
 - every Spark job build_index runs is named by its phase
   (``build:extract``, ``build:doc_stats``, ``build:postings``) in the
   UI and the event log.
+- every Python task of a build, an append or a positions build runs in
+  a DataFrame Arrow job: the per-bucket tasks launch from
+  ``spark.range`` (_per_bucket), not from an RDD, whose tasks would
+  start a second Python daemon and worker pool in every new JVM. Each
+  Python task still pays a fixed 0.1-0.2 s of CPU in pyspark's set-up
+  (its importlib.invalidate_caches() re-reads every zip on the worker
+  path), so a design that adds Python tasks adds that cost.
 """
 
 from __future__ import annotations
@@ -567,6 +579,10 @@ def _write_buckets(blocks: Iterable, blocks_dir: str,
                                _write_term_stats_bucket(ts_dir, b, ids, ns))}
 
 
+# a written bucket's lineage row: every block writer's task returns these
+LINEAGE_SCHEMA = "bucket long, n_terms long, n_blocks long, n_postings long"
+
+
 def write_blocks(frame: DataFrame, blocks_dir: str, ts_dir: str | None,
                  build: Callable = iter) -> list[dict]:
     """One Spark job whose tasks write their partition's blocks through
@@ -580,32 +596,44 @@ def write_blocks(frame: DataFrame, blocks_dir: str, ts_dir: str | None,
         for row in _write_buckets(build(batches), blocks_dir, ts_dir):
             yield pa.RecordBatch.from_pylist([row])
 
-    return [r.asDict() for r in frame.mapInArrow(
-        run, "bucket long, n_terms long, n_blocks long, n_postings long"
-    ).collect()]
+    return [r.asDict() for r in frame.mapInArrow(run, LINEAGE_SCHEMA).collect()]
 
 
-def _per_bucket(spark: SparkSession, buckets: list,
-                task: Callable[..., dict | None]) -> list[dict]:
-    """``task(b)`` for each ``b`` of ``buckets`` (a bucket, or a bucket
-    with what its task reads), one Spark task each in ONE job with no
-    exchange; returns the tasks' non-None results. A shuffled launcher
-    would let adaptive execution coalesce buckets into fewer tasks."""
-    if not buckets:
+def _per_bucket(spark: SparkSession, items: list,
+                task: Callable[..., Iterable[dict]]) -> list[dict]:
+    """``task(item)`` for each of ``items`` (a bucket, or a bucket with
+    what its task reads), one Spark task each in ONE job with no
+    exchange; returns the lineage rows the tasks yield, in item order.
+    The job is a ``mapInArrow`` over ``spark.range`` with one row per
+    partition, so its tasks run in the Python workers the session's
+    other Arrow jobs use (an RDD launcher would start a second worker
+    pool), and no shuffle lets adaptive execution coalesce items into
+    fewer tasks."""
+    if not items:
         return []
-    rows = (spark.sparkContext.parallelize(buckets, len(buckets))
-            .map(task).collect())
-    return [r for r in rows if r is not None]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for rb in batches:
+            for i in rb.column("id").to_pylist():
+                rows = list(task(items[i]))
+                if rows:
+                    yield pa.RecordBatch.from_pylist(rows)
+
+    n = len(items)
+    return [r.asDict() for r in spark.range(0, n, 1, n)
+            .mapInArrow(run, LINEAGE_SCHEMA).collect()]
 
 
 def _spilled(spark: SparkSession, rows: DataFrame, spill_dir: str,
-             n_buckets: int, task: Callable[[int, dict], dict | None]
+             n_buckets: int, task: Callable[[int, dict], Iterable[dict]]
              ) -> list[dict]:
     """The positions build's spill (r6): ONE exchange writes ``rows``
     as parquet partitioned by their ``bucket_p`` column, then
     ``task(b, cols)`` runs once per bucket that holds rows, one task each
     (:func:`_per_bucket`), on the bucket's columns read back columnar
-    as numpy arrays. Returns the tasks' non-None results.
+    as numpy arrays. Returns the lineage rows the tasks yield.
 
     Without a repartition every map task writes into every bucket dir:
     n_map x B files, fine up to a few thousand (guide §6). The spill is
@@ -621,15 +649,15 @@ def _spilled(spark: SparkSession, rows: DataFrame, spill_dir: str,
          .option("compression", "snappy")
          .option("parquet.enable.dictionary", "false").parquet(spill_dir))
 
-        def run(b: int) -> dict | None:
+        def run(b: int) -> Iterable[dict]:
             import pyarrow.dataset as pads
 
             part = os.path.join(spill_dir, f"bucket_p={b}")
             if not os.path.isdir(part):
-                return None
+                return []
             tbl = pads.dataset(part, format="parquet").to_table()
             if tbl.num_rows == 0:
-                return None
+                return []
             cols = {c: tbl[c].to_numpy(zero_copy_only=False)
                     for c in tbl.column_names}
             del tbl
@@ -725,29 +753,14 @@ def _doc_tokens(text: str | None, title: str | None,
     return toks
 
 
-def _postings_of(doc_ids: list[int], tokens: list[list[str]], ids: dict):
-    """(term_id, doc_id, tfdl) arrays of docs' postings: one per
-    distinct term of a doc, tf and dl packed as tf<<32 | dl. ``ids``
-    maps terms to term ids for one task; the terms it lacks are hashed
-    (analysis.term_id_for, uncached) and added. A process-wide cache
-    would outlive the task and let a rebuild of the same corpus skip
-    the hashing that a first build pays."""
-    from collections import Counter
-    from itertools import chain
-
-    counts = [Counter(t) for t in tokens]
-    new = list(set().union(*counts).difference(ids))
-    if new:
-        ids.update((t, analysis.term_id_for.__wrapped__(t)) for t in new)
-    per_doc = np.fromiter(map(len, counts), np.int64, len(counts))
-    n = int(per_doc.sum())
-    terms = np.fromiter(map(ids.__getitem__, chain.from_iterable(counts)),
-                        np.int64, n)
-    tfs = np.fromiter(chain.from_iterable(c.values() for c in counts),
-                      np.int64, n)
-    dls = np.fromiter(map(len, tokens), np.int64, len(tokens))
-    docs = np.repeat(np.array(doc_ids, dtype=np.int64), per_doc)
-    return terms, docs, (tfs << np.int64(32)) | np.repeat(dls, per_doc)
+def _doc_counts(texts: list, titles: list, title_weight: int):
+    """analysis.term_counts of a batch's docs, whose tokens are
+    :func:`_doc_tokens`': a doc's title is appended to its text, after
+    a separator, ``title_weight - 1`` times."""
+    if title_weight > 1:
+        texts = [(t or "") + ("\n" + (ti or "")) * (title_weight - 1)
+                 for t, ti in zip(texts, titles)]
+    return analysis.term_counts(texts)
 
 
 def _spill(out, path: str, pending: list, n_buckets: int):
@@ -779,9 +792,11 @@ def _spill(out, path: str, pending: list, n_buckets: int):
 def _doc_pass(src: DataFrame, extract_mode: str | None, title_weight: int,
               spill_dir: str, n_buckets: int) -> DataFrame:
     """THE doc pass: one mapInArrow from the input's (url, text|html)
-    to postings. Per doc it extracts (unless ``extract_mode`` is None),
-    tokenizes (:func:`_doc_tokens`) and collapses the tokens to one
-    posting per distinct term (:func:`_postings_of`). Each task writes
+    to postings. Per doc it extracts (unless ``extract_mode`` is None);
+    per input batch one set of NumPy kernels tokenizes, hashes and
+    counts every doc's terms (:func:`_doc_counts`,
+    analysis.term_counts) to one posting per distinct term of a doc,
+    with no Python object per token. Each task writes
     its postings, grouped by bucket of ``n_buckets``, as ONE parquet
     file under ``spill_dir`` (none when it has no postings), through a
     temp file, so a retried task replaces its file whole. The frame's
@@ -797,22 +812,21 @@ def _doc_pass(src: DataFrame, extract_mode: str | None, title_weight: int,
         part = os.path.join(spill_dir, f"part-{ctx.partitionId():05d}.parquet")
         tmp = os.path.join(spill_dir, f".{ctx.partitionId()}-"
                            f"{ctx.attemptNumber()}.tmp")
-        ids: dict[str, int] = {}
         pending, held, out = [], 0, None
         try:
             for rb in batches:
                 urls, texts, titles = _doc_texts(rb, extract_mode, tw)
-                toks = [_doc_tokens(t, ti, tw) for t, ti in zip(texts, titles)]
-                doc_ids = [analysis.doc_id_for_url(u) for u in urls]
-                cols = _postings_of(doc_ids, toks, ids)
-                pending.append(cols)
-                held += len(cols[0])
+                docs, terms, tfs, dls = _doc_counts(texts, titles, tw)
+                doc_ids = np.fromiter(map(analysis.doc_id_for_url, urls),
+                                      np.int64, len(urls))
+                pending.append((terms, doc_ids[docs],
+                                (tfs << np.int64(32)) | dls[docs]))
+                held += len(terms)
                 if held >= _SPILL_FLUSH_ROWS:
                     out, pending, held = _spill(out, tmp, pending, nb), [], 0
                 yield pa.record_batch({
-                    "doc_id": pa.array(doc_ids, pa.int64()),
-                    "url": pa.array(urls, pa.string()),
-                    "dl": pa.array(list(map(len, toks)), pa.int32())})
+                    "doc_id": doc_ids, "url": pa.array(urls, pa.string()),
+                    "dl": dls.astype(np.int32)})
             if held:
                 out = _spill(out, tmp, pending, nb)
             if out is not None:
@@ -952,7 +966,7 @@ def _postings_from_spill(spark: SparkSession, spill_dir: str,
 
     items = [(j, files) for _, files in sorted(parts.items())
              for j in range(groups)]
-    return [r for rows in _per_bucket(spark, items, build) for r in rows]
+    return _per_bucket(spark, items, build)
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
@@ -1117,15 +1131,15 @@ def write_term_stats_and_lineage(spark: SparkSession, store: IndexStorage, *,
     pdirs = {b: store.bucket_dir("postings", epoch, b) for b in buckets}
     ts_dir = store.term_stats_dir_for(epoch)
 
-    def run(b: int) -> dict:
+    def run(b: int) -> list[dict]:
         import pyarrow as pa
         import pyarrow.dataset as pads
 
         cols = pa.schema([("term_id", pa.int64()), ("n", pa.int32())])
         tbl = pads.dataset(pdirs[b], format="parquet",
                            schema=cols).to_table()
-        return {"bucket": b, **_write_term_stats_bucket(
-            ts_dir, b, tbl["term_id"].to_numpy(), tbl["n"].to_numpy())}
+        return [{"bucket": b, **_write_term_stats_bucket(
+            ts_dir, b, tbl["term_id"].to_numpy(), tbl["n"].to_numpy())}]
 
     _append_lineage(spark, store, _per_bucket(spark, list(pdirs), run),
                     phase=phase, epoch=epoch)

@@ -234,7 +234,7 @@ def _build_positions_bucketed(spark: SparkSession, pos_rows: DataFrame,
     them (build._write_buckets)."""
     bs, nb = int(block_size), int(n_buckets)
 
-    def build(b: int, cols: dict) -> dict:
+    def build(b: int, cols: dict) -> Iterator[dict]:
         terms, docs = cols.pop("term_id"), cols.pop("doc_id")
         poss = cols.pop("pos").astype(np.int64)
         order = np.lexsort((poss, docs, terms))
@@ -243,7 +243,7 @@ def _build_positions_bucketed(spark: SparkSession, pos_rows: DataFrame,
         row_off = np.r_[rstarts, len(terms)].astype(np.int64)
         rb = _build_position_blocks(
             terms[rstarts], docs[rstarts], poss, row_off, bs, nb)
-        return next(_write_buckets([rb], out_dir, None))
+        return _write_buckets([rb], out_dir, None)
 
     shutil.rmtree(out_dir, ignore_errors=True)
     _spilled(spark, pos_rows.withColumn(

@@ -1,7 +1,8 @@
 import math
 
 from super_rag_spark.analysis import (K1, B, bm25_term_score, doc_id_for_url,
-                                      idf, salt_for_doc_id, tokenize)
+                                      idf, salt_for_doc_id, term_id_for,
+                                      term_ids, tokenize)
 
 
 def test_tokenize():
@@ -156,12 +157,10 @@ def test_bm25_kernels_agree_bit_for_bit(spark):
 
 
 def test_term_id_matches_spark_xxhash64(spark):
-    """analysis.xxh64 / term_id_for against the JVM's xxhash64 over
-    every XXH64 length class (0, 1-3, 4-7, 8-31, 32, >32 bytes) and
+    """analysis.xxh64 / term_id_for and the vectorized term_ids against
+    the JVM's xxhash64 over every XXH64 length class (0, 1-3, 4-7, 8-31, 32, >32 bytes) and
     multi-byte UTF-8."""
     from pyspark.sql import functions as F
-
-    from super_rag_spark.analysis import term_id_for
 
     terms = ["", "a", "ab", "abc", "abcd", "abcdefg", "abcdefgh",
              "semudo", "x" * 31, "y" * 32, "z" * 33, "w" * 63, "v" * 64,
@@ -176,3 +175,88 @@ def test_term_id_matches_spark_xxhash64(spark):
     ).collect()[0]
     for i, t in enumerate(terms):
         assert row[f"h{i}"] == term_id_for(t), t
+    assert term_ids(terms).tolist() == [row[f"h{i}"] for i in range(len(terms))]
+    assert term_ids([]).tolist() == []
+
+
+def test_term_ids_match_term_id_for(webtext_rows):
+    """The vectorized term_ids equals term_id_for on strings of 0-40
+    bytes (every 8-, 4- and 1-byte tail and the switch to the 32-byte
+    path), on multi-byte UTF-8, and on one batch dictionary of the
+    corpus fixture's tokens, whole and sliced."""
+    import pyarrow as pa
+
+    alnum = "abcdefghijklmnopqrstuvwxyz0123456789ABCDEFGHIJ"
+    terms = [alnum[:n] for n in range(41)] + ["é" * n for n in range(21)]
+    assert term_ids(terms).tolist() == [term_id_for(t) for t in terms]
+    toks = [w for r in webtext_rows[:200] for w in tokenize(r["text"])]
+    vocab = pa.array(toks, pa.string()).dictionary_encode().dictionary
+    assert len(vocab) > 1000
+    for arr in (vocab, vocab.slice(17, 500), vocab.cast(pa.large_string())):
+        assert term_ids(arr).tolist() == [term_id_for(t) for t in arr.to_pylist()]
+
+
+def _counted_by_tokenize(token_lists):
+    """(doc, term_id, tf) rows and dl per doc of per-doc token lists."""
+    from collections import Counter
+
+    rows = sorted((i, term_id_for(t), c) for i, toks in enumerate(token_lists)
+                  for t, c in Counter(toks).items())
+    return rows, [len(t) for t in token_lists]
+
+
+def _kernel_rows(docs, terms, tfs, dls):
+    """A kernel's int64 arrays as _counted_by_tokenize's rows; its rows
+    come in doc order."""
+    for a in (docs, terms, tfs, dls):
+        assert a.dtype.name == "int64"
+    assert (docs[1:] >= docs[:-1]).all()
+    return sorted(zip(docs.tolist(), terms.tolist(), tfs.tolist())), dls.tolist()
+
+
+def _batch_docs():
+    """Docs of one batch: None, empty, mixed ASCII and non-ASCII text,
+    and alphanumeric edges so neighbouring docs could run together."""
+    from hypothesis import strategies as st
+
+    return st.one_of(st.none(), st.just(""), _tricky_texts(),
+                     st.text(alphabet="aZ9", min_size=1, max_size=40))
+
+
+def test_term_counts_match_tokenize():
+    """analysis.term_counts (the doc pass's batch kernel) gives each doc
+    the (term_id, tf) rows and the dl of analysis.tokenize, in doc
+    order; with title weights 1 and 3, build._doc_counts gives
+    the counts of build._doc_tokens."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from super_rag_spark.analysis import term_counts
+    from super_rag_spark.index.build import _doc_counts, _doc_tokens
+
+    def same(texts):
+        got = _kernel_rows(*term_counts(texts))
+        assert got == _counted_by_tokenize([tokenize(t or "") for t in texts])
+
+    same([])
+    same([None, "", "  "])
+    same(["abc", "def", "9", "x" * 40, "Y", "İz", "\u212aa", "ßẞς", "１２ab",
+          "a\u00a0b", "😀q", "end" + "é", "é" + "start"])
+    same(_tricky_corpus(300, 5))
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(_batch_docs(), max_size=30))
+    def generated(texts):
+        same(texts)
+
+    @settings(max_examples=100, deadline=None)
+    @given(st.lists(st.tuples(_batch_docs(), _batch_docs()), max_size=20),
+           st.sampled_from([1, 3]))
+    def titled(pairs, tw):
+        texts, titles = [t for t, _ in pairs], [ti for _, ti in pairs]
+        got = _kernel_rows(*_doc_counts(texts, titles, tw))
+        assert got == _counted_by_tokenize(
+            [_doc_tokens(t, ti, tw) for t, ti in pairs])
+
+    generated()
+    titled()

@@ -507,7 +507,7 @@ def test_adaptive_multiple_reads_the_spill(
     def counted(s, items, task):
         # (tasks, bucket files the tasks wrote)
         rows = per_bucket(s, items, task)
-        tasks.append((len(items), sum(map(len, rows))))
+        tasks.append((len(items), len(rows)))
         return rows
 
     monkeypatch.setattr(build, "_per_bucket", counted)
@@ -565,3 +565,59 @@ def test_failed_doc_pass_leaves_no_spill(spark, tmp_path):
         build_index(spark, df, root, text_is_extracted=False,
                     extract_mode="any", n_buckets=2)
     assert not os.path.exists(IndexStorage(root).postings_dir_for(0) + "._tfspill")
+
+
+def test_per_bucket_runs_one_task_per_item_in_item_order(spark):
+    """_per_bucket runs ``task(item)`` once per item, each in its own
+    task of ONE job of one stage (no exchange), and returns the lineage
+    rows the tasks yield in item order; a task may yield none or
+    several."""
+    from pyspark import TaskContext
+
+    sc = spark.sparkContext
+    items = [7, 3, 9, 0, 5, 1, 8, 2, 6, 4]  # more items than cores
+
+    def task(item):
+        pid = TaskContext.get().partitionId()
+        return [{"bucket": item, "n_terms": pid, "n_blocks": k,
+                 "n_postings": 0} for k in range(item % 3)]
+
+    sc.setJobGroup("per_bucket", "per_bucket")
+    try:
+        rows = build._per_bucket(spark, items, task)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [tuple(r.values()) for r in rows] == [
+        (b, i, k, 0) for i, b in enumerate(items) for k in range(b % 3)]
+    tracker = sc.statusTracker()
+    [job] = tracker.getJobIdsForGroup("per_bucket")
+    [stage] = tracker.getJobInfo(job).stageIds
+    assert tracker.getStageInfo(stage).numTasks == len(items)
+    assert build._per_bucket(spark, [], task) == []
+
+
+def test_builds_start_no_rdd_job(spark, split_inputs, tmp_path, monkeypatch):
+    """build_index, build_positions and merge_append (an upsert, so a
+    bucket is rewritten and the positions sidecar carried) complete with
+    SparkContext.parallelize raising: every Python task they run is in
+    a DataFrame Arrow job, so a session keeps one Python worker pool."""
+    from pyspark import SparkContext
+
+    from super_rag_spark.index.positions import build_positions
+
+    root = str(tmp_path / "idx")
+    docs = spark.read.parquet(split_inputs["one"])
+    delta = spark.read.parquet(split_inputs["two"])
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("SparkContext.parallelize called")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    build_index(spark, docs, root, **CFG)
+    build_positions(spark, docs, root)
+    merge_append(spark, root, delta)
+    store = IndexStorage(root)
+    manifest = store.read_manifest()
+    assert (manifest["epoch"], manifest["n_docs"]) == (1, 240)
+    assert store.committed_buckets("build", 0)
+    assert os.listdir(store.positions_dir_for(1))
