@@ -68,27 +68,28 @@ def term_counts(texts: list):
     the text's index, ascending), and each text's token count ``dl``.
     None counts as the empty text.
 
-    A text with a non-ASCII character is first rewritten as
-    ``" ".join(tokenize(text))``, so Unicode lowercasing has its one
-    definition here. The batch's texts are then joined by ``"\\n"`` (a
-    separator, so no token crosses a doc), lowercased and split with a
-    256-entry byte table (``_ALNUM_LOWER``), the tokens
-    dictionary-encoded by pyarrow, each distinct term hashed once
-    (:func:`term_ids`), and the (doc, term) pairs counted by one
-    ``np.unique``."""
+    A text with a non-ASCII character is lowercased by ``str.lower``,
+    as :func:`tokenize` does, so Unicode lowercasing has one definition;
+    in its UTF-8 bytes every non-ASCII character is bytes >= 0x80, which
+    the byte table splits on like tokenize's regex. The batch's texts'
+    bytes are then joined by ``"\\n"`` (a separator, so no token crosses a
+    doc), lowercased and split with a 256-entry byte table
+    (``_ALNUM_LOWER``), the tokens dictionary-encoded by pyarrow, each
+    distinct term hashed once (:func:`term_ids`), and the (doc, term)
+    pairs counted by one ``np.unique``."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    docs = [" ".join(tokenize(t)) if t and not t.isascii() else t or ""
-            for t in texts]
-    n_docs = len(docs)
-    low = np.frombuffer("\n".join(docs).encode("ascii").translate(_ALNUM_LOWER),
-                        dtype=np.uint8)
+    raw = [t.lower().encode("utf-8", "surrogatepass")
+           if t and not t.isascii() else (t or "").encode("ascii")
+           for t in texts]
+    n_docs = len(raw)
+    low = np.frombuffer(b"\n".join(raw).translate(_ALNUM_LOWER), dtype=np.uint8)
     alnum = low != 0
     edge = np.diff(alnum.view(np.int8), prepend=0, append=0)
     starts, ends = np.flatnonzero(edge == 1), np.flatnonzero(edge == -1)
-    lens = np.fromiter(map(len, docs), np.int64, n_docs)
+    lens = np.fromiter(map(len, raw), np.int64, n_docs)
     doc_starts = np.cumsum(lens + 1) - lens - 1
     doc = np.searchsorted(doc_starts, starts, side="right") - 1
     dl = np.bincount(doc, minlength=n_docs).astype(np.int64)

@@ -220,26 +220,18 @@ def decode_blocks_batch(blocks: EncodedBlocks):
 
     LEB128 streams concatenate, so the per-call NumPy dispatch overhead
     (the dominant cost when a head-term query touches thousands of
-    blocks) is paid once instead of per block, and once for all three
-    streams when they fit one decode pass. Delta decode across block
-    boundaries: within block b, doc[i] = C[i] - C[start_b - 1] where C
-    is the global gap cumsum (each block's first gap is the
+    blocks) is paid once instead of per block. Delta decode across
+    block boundaries: within block b, doc[i] = C[i] - C[start_b - 1]
+    where C is the global gap cumsum (each block's first gap is the
     absolute doc id), vectorized with a per-block offset repeat.
 
     Returns (doc_ids, tfs, dls, ns) int64 arrays; ns = block lengths.
     """
     ns = np.asarray(blocks.n, dtype=np.int64)
     total = int(ns.sum())
-    streams = (blocks.docs_enc, blocks.tfs_enc, blocks.dls_enc)
-    if sum(map(len, streams)) <= _VARINT_PASS_BYTES:
-        # end to end the streams are one LEB128 stream of 3 x total
-        # values (the format is self-delimiting): one decode pass
-        gaps, tfs, dls = np.split(decode_varint(np.concatenate(
-            [np.frombuffer(s, dtype=np.uint8) for s in streams]),
-            3 * total), 3)
-    else:
-        # a pass or more each: joining them would only copy the input
-        gaps, tfs, dls = (decode_varint(s, total) for s in streams)
+    gaps = decode_varint(blocks.docs_enc, total)
+    tfs = decode_varint(blocks.tfs_enc, total)
+    dls = decode_varint(blocks.dls_enc, total)
     if not total:
         return gaps, tfs, dls, ns
     docs = np.cumsum(gaps, out=gaps)

@@ -22,9 +22,9 @@ Scale notes (100 TB / 10^12 docs):
   exist as JVM arrays, nor as Python objects: analysis.term_counts
   splits a whole Arrow batch with a byte table, dictionary-encodes its
   tokens, hashes each distinct term once (analysis.term_ids, XXH64 in
-  NumPy lanes) and counts (doc, term) pairs with one np.unique. Only a
-  non-ASCII doc is tokenized per doc first (analysis.tokenize), so
-  Unicode lowercasing has one definition.
+  NumPy lanes) and counts (doc, term) pairs with one np.unique. A
+  non-ASCII doc is lowercased per doc first, by str.lower as
+  analysis.tokenize does, so Unicode lowercasing has one definition.
   Positions and vocab sidecars still tokenize in the JVM
   (tokens_expr); tests/test_analysis.py holds the two tokenizers to
   the same output.
@@ -39,7 +39,11 @@ Scale notes (100 TB / 10^12 docs):
   groups and builds its index buckets (a share of them, when the spill
   bucket is over BUCKET_MEM_BUDGET). A build whose index buckets are
   over the budget feeds the spill files to the streaming builder
-  instead (_postings_from_spill).
+  instead (_postings_from_spill). A spill bucket's list of row groups
+  has one entry per doc-pass task, so each bucket task reads its own
+  list from a file in the spill dir (_stage): in the function shipped
+  to every task, the lists of all buckets would cost each task
+  n_buckets x n_doc_pass_tasks entries.
 - the block builder sums tf over (term, doc) runs and sees each term's
   df as its group size, so there is no df aggregation and no df join.
 - head-term skew (Zipf: "the" at 10^12 docs has ~10^11 postings) is
@@ -599,17 +603,18 @@ def write_blocks(frame: DataFrame, blocks_dir: str, ts_dir: str | None,
     return [r.asDict() for r in frame.mapInArrow(run, LINEAGE_SCHEMA).collect()]
 
 
-def _per_bucket(spark: SparkSession, items: list,
-                task: Callable[..., Iterable[dict]]) -> list[dict]:
-    """``task(item)`` for each of ``items`` (a bucket, or a bucket with
+def _per_bucket(spark: SparkSession, n: int,
+                task: Callable[[int], Iterable[dict]]) -> list[dict]:
+    """``task(i)`` for each i of ``range(n)`` (a bucket, or the index of
     what its task reads), one Spark task each in ONE job with no
-    exchange; returns the lineage rows the tasks yield, in item order.
+    exchange; returns the lineage rows the tasks yield, in order of i.
     The job is a ``mapInArrow`` over ``spark.range`` with one row per
     partition, so its tasks run in the Python workers the session's
     other Arrow jobs use (an RDD launcher would start a second worker
-    pool), and no shuffle lets adaptive execution coalesce items into
-    fewer tasks."""
-    if not items:
+    pool), and no shuffle lets adaptive execution coalesce them into
+    fewer tasks. Every task unpickles the same function: what a task
+    alone reads must not ride in ``task``'s closure (:func:`_stage`)."""
+    if not n:
         return []
 
     def run(batches):
@@ -617,13 +622,37 @@ def _per_bucket(spark: SparkSession, items: list,
 
         for rb in batches:
             for i in rb.column("id").to_pylist():
-                rows = list(task(items[i]))
+                rows = list(task(i))
                 if rows:
                     yield pa.RecordBatch.from_pylist(rows)
 
-    n = len(items)
     return [r.asDict() for r in spark.range(0, n, 1, n)
             .mapInArrow(run, LINEAGE_SCHEMA).collect()]
+
+
+def _stage(path: str, items: list) -> Callable[[int], object]:
+    """Writes ``items`` to ONE file at ``path`` (n + 1 int64 offsets,
+    then each item pickled) and returns a reader of item i that reads
+    only its offsets and bytes, so n tasks read n items in all, where a
+    closure holding ``items`` ships all n to each task."""
+    import pickle
+
+    blobs = [pickle.dumps(it, protocol=pickle.HIGHEST_PROTOCOL) for it in items]
+    offsets = np.zeros(len(blobs) + 1, dtype="<i8")
+    np.cumsum([len(b) for b in blobs], out=offsets[1:])
+    with open(path, "wb") as f:
+        f.write(offsets.tobytes())
+        f.writelines(blobs)
+    data = offsets.nbytes
+
+    def read(i: int):
+        with open(path, "rb") as f:
+            f.seek(8 * i)
+            lo, hi = np.frombuffer(f.read(16), dtype="<i8").tolist()
+            f.seek(data + lo)
+            return pickle.loads(f.read(hi - lo))
+
+    return read
 
 
 def _spilled(spark: SparkSession, rows: DataFrame, spill_dir: str,
@@ -663,7 +692,7 @@ def _spilled(spark: SparkSession, rows: DataFrame, spill_dir: str,
             del tbl
             return task(b, cols)
 
-        return _per_bucket(spark, list(range(n_buckets)), run)
+        return _per_bucket(spark, n_buckets, run)
     finally:
         shutil.rmtree(spill_dir, ignore_errors=True)
 
@@ -964,9 +993,12 @@ def _postings_from_spill(spark: SparkSession, spill_dir: str,
             salt_count=sc, seg=sg)
         return list(_write_buckets([rb], postings_dir, ts_dir))
 
-    items = [(j, files) for _, files in sorted(parts.items())
-             for j in range(groups)]
-    return _per_bucket(spark, items, build)
+    # a spill bucket's files are one entry per doc-pass task: each task
+    # reads its own item from the spill dir
+    item = _stage(os.path.join(spill_dir, "_items"), [
+        (j, files) for _, files in sorted(parts.items())
+        for j in range(groups)])
+    return _per_bucket(spark, len(parts) * groups, lambda i: build(item(i)))
 
 
 def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
@@ -1128,20 +1160,20 @@ def write_term_stats_and_lineage(spark: SparkSession, store: IndexStorage, *,
     attempt left. Each bucket that holds postings then gets a lineage
     record of ``phase``. A missing postings bucket dir is lost data:
     FileNotFoundError naming the bucket, before any task runs."""
-    pdirs = {b: store.bucket_dir("postings", epoch, b) for b in buckets}
+    pdirs = [(b, store.bucket_dir("postings", epoch, b)) for b in buckets]
     ts_dir = store.term_stats_dir_for(epoch)
 
-    def run(b: int) -> list[dict]:
+    def run(i: int) -> list[dict]:
         import pyarrow as pa
         import pyarrow.dataset as pads
 
+        b, pdir = pdirs[i]
         cols = pa.schema([("term_id", pa.int64()), ("n", pa.int32())])
-        tbl = pads.dataset(pdirs[b], format="parquet",
-                           schema=cols).to_table()
+        tbl = pads.dataset(pdir, format="parquet", schema=cols).to_table()
         return [{"bucket": b, **_write_term_stats_bucket(
             ts_dir, b, tbl["term_id"].to_numpy(), tbl["n"].to_numpy())}]
 
-    _append_lineage(spark, store, _per_bucket(spark, list(pdirs), run),
+    _append_lineage(spark, store, _per_bucket(spark, len(pdirs), run),
                     phase=phase, epoch=epoch)
 
 

@@ -241,7 +241,8 @@ def test_term_counts_match_tokenize():
     same([])
     same([None, "", "  "])
     same(["abc", "def", "9", "x" * 40, "Y", "İz", "\u212aa", "ßẞς", "１２ab",
-          "a\u00a0b", "😀q", "end" + "é", "é" + "start"])
+          "a\u00a0b", "😀q", "end" + "é", "é" + "start", "ΟΔΟΣ\nΣa",
+          "lone\ud800Surrogate"])
     same(_tricky_corpus(300, 5))
 
     @settings(max_examples=200, deadline=None)

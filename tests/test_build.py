@@ -10,6 +10,7 @@ phase and leave the caller's job description as they found it."""
 
 import os
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -504,10 +505,10 @@ def test_adaptive_multiple_reads_the_spill(
     monkeypatch.setattr(build, "write_blocks",
                         lambda *a, **k: streamed.append(1) or write_blocks(*a, **k))
 
-    def counted(s, items, task):
+    def counted(s, n, task):
         # (tasks, bucket files the tasks wrote)
-        rows = per_bucket(s, items, task)
-        tasks.append((len(items), len(rows)))
+        rows = per_bucket(s, n, task)
+        tasks.append((n, len(rows)))
         return rows
 
     monkeypatch.setattr(build, "_per_bucket", counted)
@@ -568,23 +569,23 @@ def test_failed_doc_pass_leaves_no_spill(spark, tmp_path):
 
 
 def test_per_bucket_runs_one_task_per_item_in_item_order(spark):
-    """_per_bucket runs ``task(item)`` once per item, each in its own
-    task of ONE job of one stage (no exchange), and returns the lineage
-    rows the tasks yield in item order; a task may yield none or
+    """_per_bucket runs ``task(i)`` once per i of range(n), each in its
+    own task of ONE job of one stage (no exchange), and returns the
+    lineage rows the tasks yield in order of i; a task may yield none or
     several."""
     from pyspark import TaskContext
 
     sc = spark.sparkContext
     items = [7, 3, 9, 0, 5, 1, 8, 2, 6, 4]  # more items than cores
 
-    def task(item):
+    def task(i):
         pid = TaskContext.get().partitionId()
-        return [{"bucket": item, "n_terms": pid, "n_blocks": k,
-                 "n_postings": 0} for k in range(item % 3)]
+        return [{"bucket": items[i], "n_terms": pid, "n_blocks": k,
+                 "n_postings": 0} for k in range(items[i] % 3)]
 
     sc.setJobGroup("per_bucket", "per_bucket")
     try:
-        rows = build._per_bucket(spark, items, task)
+        rows = build._per_bucket(spark, len(items), task)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert [tuple(r.values()) for r in rows] == [
@@ -593,7 +594,44 @@ def test_per_bucket_runs_one_task_per_item_in_item_order(spark):
     [job] = tracker.getJobIdsForGroup("per_bucket")
     [stage] = tracker.getJobInfo(job).stageIds
     assert tracker.getStageInfo(stage).numTasks == len(items)
-    assert build._per_bucket(spark, [], task) == []
+    assert build._per_bucket(spark, 0, task) == []
+
+
+def test_spill_tasks_ship_no_other_tasks_files(spark, tmp_path, monkeypatch):
+    """The postings tasks of a doc pass's spill each read their spill
+    bucket's list of files from the spill dir: the function the job
+    ships to every task is the same size for 2 spill files as for 40,
+    and both spills build the same postings."""
+    from pyspark import cloudpickle
+
+    shipped = []
+    frame = type(spark.range(1))
+    map_in_arrow = frame.mapInArrow
+    monkeypatch.setattr(frame, "mapInArrow", lambda self, f, schema, *a, **k:
+                        shipped.append(len(cloudpickle.dumps(f)))
+                        or map_in_arrow(self, f, schema, *a, **k))
+    rng = np.random.default_rng(3)
+    terms = rng.integers(-(1 << 62), 1 << 62, 300)
+    rows = (np.repeat(terms, 5), rng.integers(0, 1 << 60, 1500),
+            (rng.integers(1, 4, 1500) << 32) | 50)
+    files = {}
+    for n_files in (2, 40):
+        spill = tmp_path / f"s{n_files:02d}" / "spill"
+        spill.mkdir(parents=True)
+        for f, part in enumerate(np.array_split(np.arange(1500), n_files)):
+            tmp = str(spill / f".{f}.tmp")
+            build._spill(None, tmp, [tuple(c[part] for c in rows)], 4).close()
+            os.replace(tmp, str(spill / f"part-{f:05d}.parquet"))
+        out = tmp_path / f"s{n_files:02d}"
+        got = build._postings_from_spill(
+            spark, str(spill), 4, str(out / "postings"), str(out / "ts"),
+            block_size=16, n_buckets=4, salt_df_threshold=100, salt_count=16,
+            seg=0)
+        assert sorted(r["bucket"] for r in got) == [0, 1, 2, 3]
+        files[n_files] = [pq.read_table(str(out / "postings" / f"bucket={b}"))
+                          for b in range(4)]
+    assert len(shipped) == 2 and shipped[0] == shipped[1]
+    assert all(a.equals(b) for a, b in zip(files[2], files[40]))
 
 
 def test_builds_start_no_rdd_job(spark, split_inputs, tmp_path, monkeypatch):

@@ -190,38 +190,3 @@ def test_vectorized_block_builder_bit_identity():
     for col in exp.columns:
         g, x = got[col].tolist(), exp[col].tolist()
         assert g == x, f"column {col} diverges: {g[:3]} vs {x[:3]}"
-
-
-def test_decode_blocks_batch_equals_per_stream_decoding():
-    """decode_blocks_batch decodes its three streams with one
-    decode_varint call over their concatenation when they fit one
-    decode pass, else one call each; the arrays equal decoding each
-    stream on its own, then each block's gaps: on random blocks, on no
-    blocks, and on streams longer than one decode pass."""
-    from super_rag_spark.codec import (_VARINT_PASS_BYTES, EncodedBlocks,
-                                       decode_blocks_batch)
-
-    def laid_out(blocks):
-        return EncodedBlocks(
-            *(np.frombuffer(b"".join(b[c] for b in blocks), dtype=np.uint8)
-              for c in ("docs_enc", "tfs_enc", "dls_enc")),
-            np.array([b["n"] for b in blocks], dtype=np.int32))
-
-    def per_stream(blks):
-        ns = blks.n.astype(np.int64)
-        total = int(ns.sum())
-        gaps, tfs, dls = (decode_varint(s, total)
-                          for s in (blks.docs_enc, blks.tfs_enc, blks.dls_enc))
-        starts = np.cumsum(ns) - ns
-        docs = np.concatenate([delta_decode(gaps[a:a + n])
-                               for a, n in zip(starts, ns)] or [gaps])
-        return docs, tfs, dls, ns
-
-    short_blocks, long_blocks = _random_blocks(9, 40), _random_blocks(11, 1500)
-    assert sum(map(len, laid_out(short_blocks)[:3])) <= _VARINT_PASS_BYTES
-    for blocks in (short_blocks, [], long_blocks):
-        blks = laid_out(blocks)
-        got, want = decode_blocks_batch(blks), per_stream(blks)
-        for g, w in zip(got, want):
-            assert g.dtype == np.int64 and np.array_equal(g, w)
-    assert min(map(len, laid_out(long_blocks)[:3])) > _VARINT_PASS_BYTES
